@@ -138,6 +138,31 @@ def global_row_number(
     return out
 
 
+_MID_OFFSET_BITS = 33  # low bits of monotonically_increasing_id: row offset
+
+
+def _partition_offsets(
+    counts: dict[int, int], n: int
+) -> tuple[list[tuple[int, int]], int]:
+    """``[(pid, rows before pid)]`` for range partitions ``0..n-1`` plus
+    the total row count. Raises when a partition reaches 2^33 rows: its
+    row offsets would overflow into the partition bits of
+    ``monotonically_increasing_id`` and alias the next partition's ids."""
+    over = {p: c for p, c in counts.items() if c >= 1 << _MID_OFFSET_BITS}
+    if over:
+        raise ValueError(
+            f"global row number: range partition(s) {sorted(over)} hold "
+            f">= 2^{_MID_OFFSET_BITS} rows ({max(over.values())} max), past "
+            "the monotonically_increasing_id row-offset width — pass a "
+            "larger num_partitions"
+        )
+    offsets, acc = [], 0
+    for pid in range(n):
+        offsets.append((pid, acc))
+        acc += counts.get(pid, 0)
+    return offsets, acc
+
+
 def _global_row_number_with_total(
     df: DataFrame,
     order_by: Sequence[Column],
@@ -173,6 +198,7 @@ def _global_row_number_with_total(
     # Bounds: ids are (pid << 33) | offset, so this holds to 2^33 rows
     # per range partition — STRICTLY WIDER than the window form it
     # replaces (row_number is a 32-bit int, 2^31 rows per partition).
+    # ``_partition_offsets`` enforces it on the collected counts.
     part = (
         df.repartitionByRange(n, *order_by)
         .sortWithinPartitions(*order_by)
@@ -181,11 +207,13 @@ def _global_row_number_with_total(
     local = (
         part.withColumn("__mid", F.monotonically_increasing_id())
         .withColumn(
-            "__pid", F.shiftrightunsigned(F.col("__mid"), 33).cast("int")
+            "__pid",
+            F.shiftrightunsigned(F.col("__mid"), _MID_OFFSET_BITS).cast("int"),
         )
         .withColumn(
             "__lrn",
-            F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)) + F.lit(1),
+            F.col("__mid").bitwiseAND(F.lit((1 << _MID_OFFSET_BITS) - 1))
+            + F.lit(1),
         )
         .drop("__mid")
     )
@@ -194,10 +222,7 @@ def _global_row_number_with_total(
         .agg(F.count("*").alias("c"))
         .collect()
     )  # bounded: one row per range partition
-    offsets, acc = [], 0
-    for pid in range(n):
-        offsets.append((pid, acc))
-        acc += counts.get(pid, 0)
+    offsets, acc = _partition_offsets(counts, n)
     off = F.broadcast(
         spark.createDataFrame(offsets, schema="__pid int, __off long")
     )

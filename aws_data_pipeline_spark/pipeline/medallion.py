@@ -188,7 +188,12 @@ def bronze_to_silver(
     persisted = None
     if zone_exists(spark, cfg.silver_path):
         # persist: the transformed batch is consumed twice (touched-key
-        # collect + the write) — without this the bronze scan re-runs
+        # collect + the write) — without this the bronze scan re-runs.
+        # The cached body runs under AQE (session.DEFAULT_CONF), so the
+        # dedup window's shuffle is coalesced to the batch's real size:
+        # the collect, the anti-join and the append see a few partitions,
+        # not shuffle.partitions of them (a small batch appends one file
+        # per touched day)
         persisted = silver.persist()
         silver = dedup_against_silver(persisted, cfg.silver_path)
 

@@ -6,6 +6,19 @@ Every config below is a 100 TB-posture decision:
 
 - AQE on: runtime shuffle-partition coalescing + skew-join splitting, so the
   same plans survive 1000x data growth without retuning.
+- AQE resizes persisted plans too
+  (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``). Spark's
+  default keeps AQE's final-stage shuffle optimizations (partition
+  coalescing, skew splitting) out of every ``persist()``/``cache()`` body,
+  so the cached frame keeps the full static ``spark.sql.shuffle.partitions``
+  fan-out of its last exchange whatever its size. A ~1k-row ingest batch
+  that passed the dedup window shuffle then fed 32 tasks to every later
+  step, and each partitioned-append task opened its own file per touched
+  day. With it on, cached bodies are sized at run time like every other
+  plan. Trade-off: the cached frame now reports whatever partitioning AQE
+  chose, so a consumer that needs it hash-partitioned at exactly
+  ``shuffle.partitions`` (e.g. to line up with another shuffled join side)
+  may pay a re-shuffle on read. Results are unaffected either way.
 - ``spark.sql.session.timeZone=UTC``: deterministic date-part extraction
   regardless of host TZ (and parity with the DuckDB oracle's naive timestamps).
 - dynamic partition overwrite: gold re-runs replace only touched partitions
@@ -25,6 +38,8 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # AQE for persist()/cache() bodies too (module docstring)
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.compression.codec": "snappy",

@@ -190,7 +190,10 @@ def ingest_sink(
     persisted = None
     if need_guard and zone_exists(sess, silver_path):
         # persist: the transformed micro-batch is consumed twice
-        # (touched-key collect + write) — avoid re-running the transform
+        # (touched-key collect + write) — avoid re-running the transform.
+        # The cached body runs under AQE (session.DEFAULT_CONF), so the
+        # micro-batch keeps its coalesced size downstream (a small batch
+        # appends one file per touched day, not one per shuffle partition)
         persisted = silver.persist()
         silver = dedup_against_silver(persisted, silver_path)
     try:

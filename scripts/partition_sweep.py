@@ -2,8 +2,10 @@
 DuckDB twin under a hostile layout (3 shuffle partitions + 256 KiB input
 splits) — direct evidence for the engine's order/partitioning-independence
 claims (decimal-routed double aggregates, seeded hashes, deterministic
-tiebreaks). Run ad hoc; the normal pytest parity suite uses the standard
-test session config.
+tiebreaks). The session is ``session.DEFAULT_CONF`` plus those two
+overrides, so the sweep covers the plan shapes the engine really runs
+(AQE, cached-plan AQE, broadcast ceiling). Run ad hoc; the normal pytest
+parity suite uses the standard test session config.
 
 Usage: python scripts/partition_sweep.py [sf_dir] [--json OUT.json]
 (default sf0.001). Exits non-zero if any query diverges. ``--json``
@@ -20,7 +22,13 @@ import time
 
 sys.path.insert(0, ".")
 
-from pyspark.sql import SparkSession  # noqa: E402
+from aws_data_pipeline_spark.session import DEFAULT_CONF, get_spark  # noqa: E402
+
+MASTER = "local[8]"
+HOSTILE_CONF = {
+    "spark.sql.shuffle.partitions": "3",
+    "spark.sql.files.maxPartitionBytes": str(256 * 1024),
+}
 
 
 def main() -> int:
@@ -31,13 +39,7 @@ def main() -> int:
         out_json = argv[i + 1]
         argv = argv[:i] + argv[i + 2 :]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.001"
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "3")
-        .config("spark.sql.files.maxPartitionBytes", "262144")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark("partition-sweep", master=MASTER, extra_conf=HOSTILE_CONF)
     spark.sparkContext.setLogLevel("ERROR")
     from aws_data_pipeline_spark.plans import DEMOTED, load_registry
     from tests.oracle import run_compare
@@ -72,11 +74,7 @@ def main() -> int:
             {
                 "sweep": "hostile-partitioning oracle parity",
                 "sf_dir": sf_dir,
-                "config": {
-                    "master": "local[8]",
-                    "spark.sql.shuffle.partitions": 3,
-                    "spark.sql.files.maxPartitionBytes": 262144,
-                },
+                "config": {"master": MASTER, **DEFAULT_CONF, **HOSTILE_CONF},
                 "checked": checked,
                 "failed": len(failed),
                 "queries": per_query,

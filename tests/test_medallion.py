@@ -5,6 +5,7 @@ values asserted against DuckDB recomputation; idempotency on re-run."""
 from __future__ import annotations
 
 import json
+import pathlib
 
 import duckdb
 import pytest
@@ -330,3 +331,89 @@ def test_schema_evolution_widen_type_conflict_fails_at_ingest(
     )
     with pytest.raises(ValueError, match="loyalty_tier"):
         bronze_to_silver(spark, c2, clock=clock, schema_policy="widen")
+
+
+def _silver_files(silver_path):
+    """{(year, month, day): {parquet file names}} under a hive-partitioned
+    silver zone."""
+    out: dict[tuple[int, int, int], set[str]] = {}
+    for f in pathlib.Path(silver_path).rglob("*.parquet"):
+        parts = dict(p.split("=", 1) for p in f.parent.parts if "=" in p)
+        key = (int(parts["year"]), int(parts["month"]), int(parts["day"]))
+        out.setdefault(key, set()).add(f.name)
+    return out
+
+
+def _new_files_per_day(before, after):
+    added = {k: v - before.get(k, set()) for k, v in after.items()}
+    return {k: len(v) for k, v in added.items() if v}
+
+
+def _append_batch_rows(fixture_rows):
+    """A follow-up delivery: every 10th fixture row re-delivered, plus 24
+    new rows on each of two days (2024-03-05 and 2024-03-06) — enough
+    rows per day that an 8-way hash split of the batch would scatter them
+    over several append tasks."""
+    redelivered = fixture_rows[:200:10]
+    new = [
+        {
+            **fixture_rows[0],
+            "transaction_id": f"txn_new_{d}_{i:03d}",
+            "customer_id": f"cust_{i % 20:06d}",
+            "amount": 20.0 + i,
+            "transaction_date": f"2024-03-{d:02d} 12:{i:02d}:00",
+        }
+        for d in (5, 6)
+        for i in range(24)
+    ]
+    return redelivered, new
+
+
+def test_batch_append_writes_one_file_per_touched_partition(spark, cfg):
+    """A small follow-up batch appends at most one parquet file to each
+    (year, month, day) it touches: the persisted batch is sized by AQE,
+    not fanned out over spark.sql.shuffle.partitions append tasks."""
+    bronze = pathlib.Path(cfg.bronze_path)
+    rows = make_fixture(bronze)  # rewrites the fixture's files unchanged
+    clock = F.lit(CLOCK).cast("timestamp")
+    run_pipeline(spark, cfg, clock=clock)
+    before = _silver_files(cfg.silver_path)
+
+    redelivered, new = _append_batch_rows(rows)
+    (bronze / "batch_3.json").write_text(
+        "\n".join(json.dumps(r) for r in redelivered + new)
+    )
+    res = run_pipeline(spark, cfg, clock=clock)
+    assert res["bronze_to_silver"]["rows_written"] == len(new)
+
+    added = _new_files_per_day(before, _silver_files(cfg.silver_path))
+    assert set(added) == {(2024, 3, 5), (2024, 3, 6)}
+    assert all(n == 1 for n in added.values()), added
+
+
+def test_streaming_sink_writes_one_file_per_touched_partition(spark, tmp_path):
+    """The foreachBatch body (``ingest_sink``) appends with the same layout
+    as the batch path: one file per touched day over an existing zone."""
+    from aws_data_pipeline_spark.catalog import TXN_SCHEMA
+    from aws_data_pipeline_spark.streaming.ingest import ingest_sink
+
+    bronze = tmp_path / "bronze"
+    bronze.mkdir()
+    rows = make_fixture(bronze)
+    silver_path = str(tmp_path / "silver")
+    clock = F.lit(CLOCK).cast("timestamp")
+    first = spark.read.schema(TXN_SCHEMA).json(str(bronze))
+    ingest_sink(first, 0, silver_path, clock, "anti_join")
+    before = _silver_files(silver_path)
+
+    redelivered, new = _append_batch_rows(rows)
+    batch = spark.createDataFrame(
+        [tuple(r[f.name] for f in TXN_SCHEMA.fields) for r in redelivered + new],
+        TXN_SCHEMA,
+    )
+    ingest_sink(batch, 1, silver_path, clock, "anti_join")
+
+    added = _new_files_per_day(before, _silver_files(silver_path))
+    assert set(added) == {(2024, 3, 5), (2024, 3, 6)}
+    assert all(n == 1 for n in added.values()), added
+    assert spark.read.parquet(silver_path).count() == 203 + len(new)
