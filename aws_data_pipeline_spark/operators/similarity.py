@@ -12,9 +12,11 @@
 from __future__ import annotations
 
 import math
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from dataclasses import dataclass
+from typing import Any
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -764,6 +766,13 @@ def ivf_topk(
     return _topk_by_sim(scored, k)
 
 
+# sub-table layouts of the two families outside the shared codec lifecycle
+# (see _Codec): the cell-partitioned IVF index and the derived IVF-PQ/SQ8
+# cell-codes layout
+_IVF_SUBS = ("corpus", "centroids", "build_stats")
+_CELL_CODES_SUBS = ("codes", "meta")
+
+
 def build_ivf_index(
     corpus: DataFrame,
     path: str,
@@ -825,9 +834,7 @@ def build_ivf_index(
         .write.mode("overwrite")
         .parquet(f"{root}/build_stats")
     )
-    _finish_index_build(
-        spark, path, new_v, old_root, ("corpus", "centroids", "build_stats")
-    )
+    _finish_index_build(spark, path, new_v, old_root, _IVF_SUBS)
 
 
 def ivf_topk_indexed(
@@ -964,19 +971,10 @@ def build_embedding_lsh_index(
     Rebuilds over an active index write a fresh version and flip the
     pointer last (see _resolve_build_root) — probes never see a
     half-written state."""
-    spark = df.sparkSession
-    root, new_v, old_root = _resolve_build_root(spark, path, force_new_version)
-    v = df.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
-    v.write.mode("overwrite").parquet(f"{root}/vectors")
-    stored = read_pinned(spark, f"{root}/vectors")
-    _band_codes(stored, bands, rows_per_band, dim, seed).write.mode(
-        "overwrite"
-    ).parquet(f"{root}/bands")
-    spark.createDataFrame(
-        [(bands, rows_per_band, dim, seed)],
-        "bands int, rows_per_band int, dim int, seed int",
-    ).write.mode("overwrite").parquet(f"{root}/meta")
-    _finish_index_build(spark, path, new_v, old_root, ("vectors", "bands", "meta"))
+    _build_index(
+        _LSH, df, path, id_col, vec_col, force_new_version, (),
+        bands=bands, rows_per_band=rows_per_band, dim=dim, seed=seed,
+    )
 
 
 def embedding_neardup_against_index(
@@ -1035,36 +1033,11 @@ def append_to_embedding_lsh_index(
     maintenance asymmetry where a growing corpus forced periodic full
     rebuilds of the embedding index while the text indexes appended.
 
-    Each sub-table derives its own append set by anti-joining the batch's
-    ids against what THAT sub-table already holds (ids only —
-    column-pruned scans), so a crash between the ``vectors`` and
-    ``bands`` writes is backfilled by the re-run: already-indexed vectors
-    are skipped, vectors whose exact-verify row landed but whose band
-    codes did not get their codes recomputed from the MATERIALIZED
-    vectors (the seeded hyperplanes make re-derived codes bit-identical
-    by construction). Per-batch cost is O(batch × bands) plus the two
-    id anti-joins; corpus vectors are never re-banded."""
-    spark = df.sparkSession
-    path = index_root(spark, path)
-    meta = read_pinned(spark, f"{path}/meta").collect()[0]
-    nv = df.select(
-        F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v")
-    )
-    missing_vecs = nv.join(
-        read_pinned(spark, f"{path}/vectors").select("id"), "id", "left_anti"
-    ).localCheckpoint(eager=True)  # write target is also an anti-join input
-    if not missing_vecs.isEmpty():
-        missing_vecs.write.mode("append").parquet(f"{path}/vectors")
-    pending = (
-        read_pinned(spark, f"{path}/vectors")
-        .join(nv.select("id"), "id", "left_semi")
-        .join(read_pinned(spark, f"{path}/bands").select("id"), "id", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    if not pending.isEmpty():
-        _band_codes(
-            pending, meta.bands, meta.rows_per_band, meta.dim, meta.seed
-        ).write.mode("append").parquet(f"{path}/bands")
+    Crash backfill and idempotency: :func:`_append_to_index` (the seeded
+    hyperplanes make re-derived codes bit-identical by construction).
+    Per-batch cost is O(batch × bands) plus the two id anti-joins;
+    corpus vectors are never re-banded."""
+    _append_to_index(_LSH, df, path, id_col, vec_col)
 
 
 def append_to_ivf_index(
@@ -1236,14 +1209,16 @@ def compact_embedding_indexes(
         )
         return counts
 
-    if lsh_index_path is not None:
+    def _swap_codec(codec: _Codec, path: str) -> None:
         c = _swap(
-            lsh_index_path,
-            {"vectors": {"sort_by": ("id",)}, "bands": {"sort_by": ("band", "code")}},
-            ("meta",),
+            path,
+            {sub: {"sort_by": key} for sub, key in codec.cluster.items()},
+            (*codec.artifact_subs, "meta"),
         )
-        written["vectors"] = c["vectors"]
-        written["bands"] = c["bands"]
+        written.update({f"{codec.report}{sub}": n for sub, n in c.items()})
+
+    if lsh_index_path is not None:
+        _swap_codec(_LSH, lsh_index_path)
     if ivf_index_path is not None:
         c = _swap(
             ivf_index_path,
@@ -1252,25 +1227,9 @@ def compact_embedding_indexes(
         )
         written["ivf_corpus"] = c["corpus"]
     if pq_index_path is not None:
-        # codes cluster on id (the ADC scan is a full sweep, but re-rank
-        # and append anti-joins probe by id); vectors likewise
-        c = _swap(
-            pq_index_path,
-            {"codes": {"sort_by": ("id",)}, "vectors": {"sort_by": ("id",)}},
-            ("codebooks", "meta"),
-        )
-        written["pq_codes"] = c["codes"]
-        written["pq_vectors"] = c["vectors"]
+        _swap_codec(_PQ, pq_index_path)
     if sq8_index_path is not None:
-        # same clustering rationale as PQ: the scan is a full sweep, but
-        # re-rank and append anti-joins probe by id
-        c = _swap(
-            sq8_index_path,
-            {"codes": {"sort_by": ("id",)}, "vectors": {"sort_by": ("id",)}},
-            ("stats", "meta"),
-        )
-        written["sq8_codes"] = c["codes"]
-        written["sq8_vectors"] = c["vectors"]
+        _swap_codec(_SQ8, sq8_index_path)
     return written
 
 
@@ -1731,54 +1690,19 @@ def build_pq_index(
     build-time corpus count for retrain-due accounting). Unlike the LSH
     hyperplanes (seeded, re-derivable from meta alone), PQ codebooks are
     DATA-FITTED — they must be stored, and append-time encoding must use
-    the stored books or codes would be incomparable across batches. Meta
-    is written LAST, so a crash mid-FRESH-build reads as missing-meta and
-    the re-run rebuilds; a build over an already-active index (or a
-    retrain, via ``force_new_version``) instead writes a fresh version
-    directory and flips the pointer last — probes and appends keep
-    reading one internally-consistent (codes, codebooks) pair throughout,
-    and a crash mid-rebuild leaves the old version active (no
-    new-codes-under-old-codebooks state is ever visible).
+    the stored books or codes would be incomparable across batches.
+    Crash and rebuild contract: :func:`_build_index` (meta LAST;
+    rebuilds flip a fresh version, so no new-codes-under-old-codebooks
+    state is ever visible).
 
     ``payload_cols`` stores filter attributes beside both sub-tables
-    (build_sq8_index's payload pattern — the encoder's (id, codes)
-    output joins the payload back by id, keeping the Arrow UDF schema
-    untouched), so the composed filtered searches can prune PQ-coded
-    scans the same way they prune SQ8 ones; appends and retrains carry
-    the payload through, unfiltered probes never read it."""
-    spark = corpus.sparkSession
-    root, new_v, old_root = _resolve_build_root(spark, path, force_new_version)
-    v = corpus.select(
-        F.col(id_col).alias("id"),
-        as_double(F.col(vec_col)).alias("v"),
-        *payload_cols,
-    )
-    v.write.mode("overwrite").parquet(f"{root}/vectors")
-    stored = read_pinned(spark, f"{root}/vectors")
-    books = train_pq_codebooks(
-        stored, vec_col="v", m=m, ks=ks, seed=seed, max_train=max_train
-    )
-    codes = pq_encode(stored, books, id_col="id", vec_col="v")
-    if payload_cols:
-        codes = codes.join(stored.select("id", *payload_cols), "id")
-    codes.write.mode("overwrite").parquet(f"{root}/codes")
-    spark.createDataFrame(
-        [
-            (j, c, books[j][c])
-            for j in range(m)
-            for c in range(ks)
-        ],
-        "j int, c int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{root}/codebooks")
-    # growth baseline = the CODES population (what pq_retrain_due counts);
-    # the vectors count includes zero-norm/ragged rows the encoder drops,
-    # and a vectors-based baseline would make the 2x trigger fire late
-    n_built = read_pinned(spark, f"{root}/codes").count()
-    spark.createDataFrame(
-        [(m, ks, seed, n_built)], "m int, ks int, seed int, n_built long"
-    ).write.mode("overwrite").parquet(f"{root}/meta")
-    _finish_index_build(
-        spark, path, new_v, old_root, ("vectors", "codes", "codebooks", "meta")
+    (build_sq8_index's payload pattern), so the composed filtered
+    searches can prune PQ-coded scans the same way they prune SQ8 ones;
+    appends and retrains carry the payload through, unfiltered probes
+    never read it."""
+    _build_index(
+        _PQ, corpus, path, id_col, vec_col, force_new_version, payload_cols,
+        m=m, ks=ks, seed=seed, max_train=max_train,
     )
 
 
@@ -1823,44 +1747,14 @@ def append_to_pq_index(
 ) -> None:
     """Idempotently append vectors to a persisted PQ index under its
     STORED codebooks (fixed on append, like IVF centroids — drift is
-    retrained away, not absorbed): each sub-table anti-joins the batch's
-    ids against what it already holds, so a crash between the two writes
-    is backfilled on re-run and re-appends are no-ops. Per-batch cost is
-    one encode of the missing rows + two id anti-joins. Zero-norm /
+    retrained away, not absorbed); crash backfill and idempotency:
+    :func:`_append_to_index`. Per-batch cost is one encode of the
+    missing rows + two id anti-joins. Zero-norm /
     degenerate vectors land in ``vectors`` (the exactness side tolerates
     them — NULL cosine) but are dropped by the encoder, so they read as
     "pending" on a re-delivery of the SAME batch and are re-dropped — a
     bounded no-op, not accumulation: the pending set is batch-scoped."""
-    spark = df.sparkSession
-    path = index_root(spark, path)  # ONE resolution for artifacts + writes
-    books = _pq_codebooks_at(spark, path)
-    stored_vecs = read_pinned(spark, f"{path}/vectors")
-    payload = [c for c in stored_vecs.columns if c not in ("id", "v")]
-    missing_payload = [c for c in payload if c not in df.columns]
-    if missing_payload:
-        raise ValueError(
-            f"append_to_pq_index: the index stores payload columns "
-            f"{payload} but the appended frame lacks {missing_payload}"
-        )
-    nv = df.select(
-        F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"), *payload
-    )
-    missing_vecs = nv.join(
-        stored_vecs.select("id"), "id", "left_anti"
-    ).localCheckpoint(eager=True)  # write target is also an anti-join input
-    if not missing_vecs.isEmpty():
-        missing_vecs.write.mode("append").parquet(f"{path}/vectors")
-    pending = (
-        read_pinned(spark, f"{path}/vectors")
-        .join(nv.select("id"), "id", "left_semi")
-        .join(read_pinned(spark, f"{path}/codes").select("id"), "id", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    if not pending.isEmpty():
-        codes = pq_encode(pending, books, id_col="id", vec_col="v")
-        if payload:
-            codes = codes.join(pending.select("id", *payload), "id")
-        codes.write.mode("append").parquet(f"{path}/codes")
+    _append_to_index(_PQ, df, path, id_col, vec_col)
 
 
 def pq_retrain_due(spark, path: str, growth_factor: float = 2.0) -> bool:
@@ -1869,10 +1763,7 @@ def pq_retrain_due(spark, path: str, growth_factor: float = 2.0) -> bool:
     the grown corpus increasingly badly (the PQ analogue of IVF cell
     drift; PQ has no per-cell counts, so realized growth is the signal).
     Cost: one footer-metadata count + the meta row."""
-    path = index_root(spark, path)
-    meta = read_pinned(spark, f"{path}/meta").collect()[0]
-    current = read_pinned(spark, f"{path}/codes").count()
-    return meta.n_built > 0 and current >= growth_factor * meta.n_built
+    return _grown(_PQ, spark, index_root(spark, path), growth_factor)
 
 
 def retrain_pq_index(spark, path: str, max_train: int = 16384) -> dict[str, int]:
@@ -1883,33 +1774,10 @@ def retrain_pq_index(spark, path: str, max_train: int = 16384) -> dict[str, int]
     that is the point); exact re-rank results are unchanged since
     ``vectors`` carries the same rows forward.
 
-    Concurrency-safe: the rebuild lands in a fresh version directory and
-    commits with one marker-file create (``force_new_version`` through
-    ``build_pq_index``), so probes mid-retrain serve the OLD
-    (codes, codebooks) pair and the new pair only after the flip — a
-    crash mid-retrain can never leave new codes visible under old stored
-    codebooks."""
-    root = index_root(spark, path)
-    meta = read_pinned(spark, f"{root}/meta").collect()[0]
-    stored = read_pinned(spark, f"{root}/vectors")
-    payload = [c for c in stored.columns if c not in ("id", "v")]
-    vecs = (
-        stored.select(
-            F.col("id").alias("vec_id"), F.col("v").alias("embedding"), *payload
-        )
-        .localCheckpoint(eager=True)  # post-commit cleanup deletes these files
-    )
-    build_pq_index(
-        vecs,
-        path,
-        m=meta.m,
-        ks=meta.ks,
-        seed=meta.seed,
-        max_train=max_train,
-        force_new_version=True,
-        payload_cols=payload,
-    )
-    return {"n_vectors": vecs.count(), "m": meta.m, "ks": meta.ks}
+    Concurrency-safe: see :func:`_retrain_index` — a crash mid-retrain
+    can never leave new codes visible under old stored codebooks."""
+    n, meta = _retrain_index(_PQ, spark, path, max_train=max_train)
+    return {"n_vectors": n, "m": meta.m, "ks": meta.ks}
 
 
 def pq_topk_indexed(
@@ -1927,20 +1795,7 @@ def pq_topk_indexed(
     resident :func:`pq_topk` under the same codebooks by construction.
     The active root resolves ONCE, so every sub-table read belongs to one
     committed build even while a retrain/compaction runs."""
-    path = index_root(spark, path)
-    books = _pq_codebooks_at(spark, path)
-    codes = read_pinned(spark, f"{path}/codes")
-    corpus = read_pinned(spark, f"{path}/vectors").select(
-        F.col("id").alias("vec_id"), F.col("v").alias("embedding")
-    )
-    return pq_topk(
-        queries.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")),
-        corpus,
-        books,
-        k=k,
-        corpus_codes=codes,
-        rerank=rerank,
-    )
+    return _topk_indexed(_PQ, spark, queries, path, id_col, vec_col, k, rerank)
 
 
 # --------------------------------------------------------------------------
@@ -2159,34 +2014,9 @@ def build_sq8_index(
     payload through (schema discovered from the stored vectors), and the
     unfiltered probes are unaffected — they select (id, codes) / (id, v)
     explicitly, so parquet column pruning never reads the payload.
-
-    Crash contract is build_pq_index's verbatim: meta LAST on a fresh
-    build; a rebuild (or ``force_new_version``) lands in a new version
-    directory and flips the pointer in one marker create, so probes
-    mid-rebuild serve the old (codes, stats) pair."""
-    spark = corpus.sparkSession
-    root, new_v, old_root = _resolve_build_root(spark, path, force_new_version)
-    v = corpus.select(
-        F.col(id_col).alias("id"),
-        as_double(F.col(vec_col)).alias("v"),
-        *payload_cols,
-    )
-    v.write.mode("overwrite").parquet(f"{root}/vectors")
-    stored = read_pinned(spark, f"{root}/vectors")
-    mins, scales = sq8_train_stats(stored, vec_col="v")
-    sq8_encode(
-        stored, mins, scales, id_col="id", vec_col="v", extra_cols=payload_cols
-    ).write.mode("overwrite").parquet(f"{root}/codes")
-    spark.createDataFrame(
-        [(i, mins[i], scales[i]) for i in range(len(mins))],
-        "pos int, mn double, sc double",
-    ).write.mode("overwrite").parquet(f"{root}/stats")
-    n_built = read_pinned(spark, f"{root}/codes").count()
-    spark.createDataFrame(
-        [(n_built,)], "n_built long"
-    ).write.mode("overwrite").parquet(f"{root}/meta")
-    _finish_index_build(
-        spark, path, new_v, old_root, ("vectors", "codes", "stats", "meta")
+    Crash and rebuild contract: :func:`_build_index`."""
+    _build_index(
+        _SQ8, corpus, path, id_col, vec_col, force_new_version, payload_cols
     )
 
 
@@ -2222,39 +2052,9 @@ def append_to_sq8_index(
     the range drift and the owner retrains. A payload-carrying index
     (built with ``payload_cols``) requires the same columns on the
     appended frame — discovered from the stored vectors schema, so the
-    caller never restates them. Anti-join crash-backfill shape is
-    append_to_pq_index's verbatim: each sub-table derives its own append
-    set, so a crash between the two writes backfills on re-run and
-    re-appends are no-ops."""
-    spark = df.sparkSession
-    path = index_root(spark, path)  # ONE resolution for artifacts + writes
-    mins, scales = _sq8_stats_at(spark, path)
-    stored_vecs = read_pinned(spark, f"{path}/vectors")
-    payload = [c for c in stored_vecs.columns if c not in ("id", "v")]
-    missing_payload = [c for c in payload if c not in df.columns]
-    if missing_payload:
-        raise ValueError(
-            f"append_to_sq8_index: the index stores payload columns "
-            f"{payload} but the appended frame lacks {missing_payload}"
-        )
-    nv = df.select(
-        F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"), *payload
-    )
-    missing_vecs = nv.join(
-        stored_vecs.select("id"), "id", "left_anti"
-    ).localCheckpoint(eager=True)  # write target is also an anti-join input
-    if not missing_vecs.isEmpty():
-        missing_vecs.write.mode("append").parquet(f"{path}/vectors")
-    pending = (
-        read_pinned(spark, f"{path}/vectors")
-        .join(nv.select("id"), "id", "left_semi")
-        .join(read_pinned(spark, f"{path}/codes").select("id"), "id", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    if not pending.isEmpty():
-        sq8_encode(
-            pending, mins, scales, id_col="id", vec_col="v", extra_cols=payload
-        ).write.mode("append").parquet(f"{path}/codes")
+    caller never restates them. Crash backfill and idempotency:
+    :func:`_append_to_index`."""
+    _append_to_index(_SQ8, df, path, id_col, vec_col)
 
 
 def sq8_range_drift(spark, path: str) -> DataFrame:
@@ -2308,10 +2108,7 @@ def sq8_retrain_due(
     max overshoot on the synthetic corpus — new extremes of an unshifted
     tail, not a shift; genuine range breaks (the lifecycle test's planted
     outlier sits at ~0.78) clear 0.25 with margin."""
-    root = index_root(spark, path)
-    meta = read_pinned(spark, f"{root}/meta").collect()[0]
-    current = read_pinned(spark, f"{root}/codes").count()
-    if meta.n_built > 0 and current >= growth_factor * meta.n_built:
+    if _grown(_SQ8, spark, index_root(spark, path), growth_factor):
         return True
     worst = sq8_range_drift(spark, path).agg(F.max("drift")).collect()[0][0]
     return worst is not None and worst > max_range_drift
@@ -2324,7 +2121,150 @@ def retrain_sq8_index(spark, path: str) -> dict[str, int]:
     vectors table through the rebuild. Versioned atomic swap via
     ``force_new_version`` (probes mid-retrain serve the old pair; crash
     leaves it active)."""
+    return {"n_vectors": _retrain_index(_SQ8, spark, path)[0]}
+
+
+# --------------------------------------------------------------------------
+# One lifecycle for the hyperplane-LSH, PQ and SQ8 indexes. The three
+# families store one on-disk shape — ``vectors`` (id, v, payload...), a
+# per-id code table, the codec's fixed artifact tables and ``meta`` — and
+# differ only in the codec that fits artifacts and encodes vectors into
+# codes (the FAISS index-factory idea: each quantizer is a codec plugged
+# into one index shape). Build, the crash-safe append, the growth
+# trigger, retrain, delete, compaction and the indexed top-k probe are
+# written once below; the public per-family functions bind a codec. IVF
+# keeps its own lifecycle: its corpus is cell-partitioned, its append is
+# partition-pruned and counts, and its delete rewrites cells in place.
+# --------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class _Codec:
+    name: str  # public-name stem: build_<name>_index, append_to_<name>_index
+    code_sub: str  # the per-id code table
+    artifact_subs: tuple[str, ...]  # data-fitted tables, fixed on append
+    meta_cols: tuple[str, ...]  # int build parameters recorded in meta
+    cluster: dict[str, tuple[str, ...]]  # compaction sort key per id table
+    report: str  # key prefix in compact_embedding_indexes' result
+    fit: Callable[..., Any]  # (stored vectors, **params) -> artifact
+    write_artifacts: Callable[[Any, str, Any], None]  # (spark, root, artifact)
+    load: Callable[[Any, str], Any]  # (spark, resolved root) -> artifact
+    encode: Callable[[DataFrame, Any, Sequence[str]], DataFrame]
+    # (queries, corpus, artifact, code rows, k, rerank) -> resident top-k
+    search: Callable[..., DataFrame] | None = None
+
+    @property
+    def subs(self) -> tuple[str, ...]:
+        """Every sub-table, in build-write order (meta last)."""
+        return ("vectors", self.code_sub, *self.artifact_subs, "meta")
+
+
+def _build_index(
+    codec: _Codec,
+    df: DataFrame,
+    path: str,
+    id_col: str,
+    vec_col: str,
+    force_new_version: bool,
+    payload_cols: Sequence[str],
+    **params,
+) -> None:
+    """Write ``vectors``, then the code table, then the artifacts, and
+    ``meta`` LAST, so a crash mid-FRESH-build reads as missing-meta and
+    the re-run rebuilds. A build over an already-active index (or
+    ``force_new_version``, the retrain path) writes a fresh version
+    directory and flips the pointer last (see _resolve_build_root):
+    probes and appends keep reading one internally-consistent (codes,
+    artifacts) pair, and a crash mid-rebuild leaves the old version
+    active. Data-fitted codecs record ``n_built``, the growth baseline of
+    :func:`_grown`: the CODES population, because the vectors count
+    includes the zero-norm/ragged rows an encoder drops and would make
+    the growth trigger fire late."""
+    spark = df.sparkSession
+    root, new_v, old_root = _resolve_build_root(spark, path, force_new_version)
+    df.select(
+        F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"), *payload_cols
+    ).write.mode("overwrite").parquet(f"{root}/vectors")
+    stored = read_pinned(spark, f"{root}/vectors")
+    art = codec.fit(stored, **params)
+    codec.encode(stored, art, payload_cols).write.mode("overwrite").parquet(
+        f"{root}/{codec.code_sub}"
+    )
+    codec.write_artifacts(spark, root, art)
+    meta = [params[c] for c in codec.meta_cols]
+    schema = [f"{c} int" for c in codec.meta_cols]
+    if codec.artifact_subs:
+        meta.append(read_pinned(spark, f"{root}/{codec.code_sub}").count())
+        schema.append("n_built long")
+    spark.createDataFrame([tuple(meta)], ", ".join(schema)).write.mode(
+        "overwrite"
+    ).parquet(f"{root}/meta")
+    _finish_index_build(spark, path, new_v, old_root, codec.subs)
+
+
+def _append_to_index(
+    codec: _Codec, df: DataFrame, path: str, id_col: str, vec_col: str
+) -> None:
+    """Idempotent, crash-safe append under the index's STORED artifacts.
+    Each sub-table derives its own append set by anti-joining the batch's
+    ids against what THAT table already holds (ids only — column-pruned
+    scans), so a crash between the ``vectors`` and code-table writes is
+    backfilled by the re-run: vectors whose row landed but whose codes
+    did not are encoded from the MATERIALIZED vectors, and re-appends are
+    no-ops. Artifacts and writes share ONE root resolution, so a retrain
+    committing mid-append can never pair old artifacts with the new
+    version's tables. A payload-carrying index requires the same columns
+    on the appended frame, discovered from the stored vectors schema."""
+    spark = df.sparkSession
+    path = index_root(spark, path)
+    art = codec.load(spark, path)
+    stored_vecs = read_pinned(spark, f"{path}/vectors")
+    payload = [c for c in stored_vecs.columns if c not in ("id", "v")]
+    missing_payload = [c for c in payload if c not in df.columns]
+    if missing_payload:
+        raise ValueError(
+            f"append_to_{codec.name}_index: the index stores payload columns "
+            f"{payload} but the appended frame lacks {missing_payload}"
+        )
+    nv = df.select(
+        F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"), *payload
+    )
+    missing_vecs = nv.join(
+        stored_vecs.select("id"), "id", "left_anti"
+    ).localCheckpoint(eager=True)  # write target is also an anti-join input
+    if not missing_vecs.isEmpty():
+        missing_vecs.write.mode("append").parquet(f"{path}/vectors")
+    codes_path = f"{path}/{codec.code_sub}"
+    pending = (
+        read_pinned(spark, f"{path}/vectors")
+        .join(nv.select("id"), "id", "left_semi")
+        .join(read_pinned(spark, codes_path).select("id"), "id", "left_anti")
+        .localCheckpoint(eager=True)
+    )
+    if not pending.isEmpty():
+        codec.encode(pending, art, payload).write.mode("append").parquet(codes_path)
+
+
+def _grown(codec: _Codec, spark, root: str, growth_factor: float) -> bool:
+    """The growth trigger of a data-fitted codec: the code table holds at
+    least ``growth_factor`` × its build-time population. Cost: one
+    footer-metadata count + the meta row."""
+    meta = read_pinned(spark, f"{root}/meta").collect()[0]
+    current = read_pinned(spark, f"{root}/{codec.code_sub}").count()
+    return meta.n_built > 0 and current >= growth_factor * meta.n_built
+
+
+def _retrain_index(codec: _Codec, spark, path: str, **fit_params):
+    """Refit a data-fitted codec on the index's OWN vectors and re-encode,
+    never rescanning the source corpus; payload columns ride the vectors
+    table through, and the build parameters come from the stored meta.
+    The rebuild is a ``force_new_version`` build, so probes mid-retrain
+    serve the OLD (codes, artifacts) pair and a crash leaves it active.
+    Returns (vectors re-encoded, the pre-retrain meta row or None)."""
     root = index_root(spark, path)
+    meta = (
+        read_pinned(spark, f"{root}/meta").collect()[0] if codec.meta_cols else None
+    )
     stored = read_pinned(spark, f"{root}/vectors")
     payload = [c for c in stored.columns if c not in ("id", "v")]
     vecs = (
@@ -2333,8 +2273,140 @@ def retrain_sq8_index(spark, path: str) -> dict[str, int]:
         )
         .localCheckpoint(eager=True)  # post-commit cleanup deletes these files
     )
-    build_sq8_index(vecs, path, force_new_version=True, payload_cols=payload)
-    return {"n_vectors": vecs.count()}
+    params = {c: meta[c] for c in codec.meta_cols}
+    _build_index(
+        codec, vecs, path, "vec_id", "embedding", True, payload, **params, **fit_params
+    )
+    return vecs.count(), meta
+
+
+def _delete_from_index(
+    codec: _Codec, spark, path: str, ids: DataFrame, id_col: str
+) -> int:
+    """Anti-join the ids out of ``vectors`` and the code table into a new
+    version; artifacts and meta are carried verbatim, so survivor codes
+    and every probe ranking are unchanged."""
+    return _delete_ids_versioned(
+        spark, path, ids, id_col,
+        data_subs={"vectors": "id", codec.code_sub: "id"},
+        copy_subs=(*codec.artifact_subs, "meta"),
+        primary="vectors",
+    )
+
+
+def _topk_indexed(
+    codec: _Codec,
+    spark,
+    queries: DataFrame,
+    path: str,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    rerank: int | None,
+    where: Column | str | None = None,
+) -> DataFrame:
+    """Top-k through a persisted index: the scan reads ONLY the code
+    table, ``vectors`` only for the re-rank candidates, and the rows equal
+    the resident search's under the same artifacts by construction. The
+    active root resolves ONCE, so every sub-table read belongs to one
+    committed build even while a retrain/compaction runs. ``where``
+    pre-filters the code rows on their payload columns (parquet-pushed)
+    BEFORE ranking, so the result is the exact top-k of the matching
+    subset; it needs a ``payload_cols`` build."""
+    root = index_root(spark, path)
+    art = codec.load(spark, root)
+    codes = read_pinned(spark, f"{root}/{codec.code_sub}")
+    if where is not None:
+        pred = F.expr(where) if isinstance(where, str) else where
+        if not [c for c in codes.columns if c not in ("id", "codes")]:
+            raise ValueError(
+                f"{codec.name}_topk_filtered: the index at {path!r} stores no "
+                f"payload columns — build it with build_{codec.name}_index(..., "
+                "payload_cols=[...]) so the filter can prune the codes scan"
+            )
+        codes = codes.filter(pred).select("id", "codes")
+    corpus = read_pinned(spark, f"{root}/vectors").select(
+        F.col("id").alias("vec_id"), F.col("v").alias("embedding")
+    )
+    return codec.search(
+        queries.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")),
+        corpus, art, codes, k, rerank,
+    )
+
+
+def _pq_encode_rows(v: DataFrame, books, payload: Sequence[str]) -> DataFrame:
+    codes = pq_encode(v, books, id_col="id", vec_col="v")
+    # the payload joins back by id, keeping the Arrow UDF schema untouched
+    return codes.join(v.select("id", *payload), "id") if payload else codes
+
+
+def _write_pq_codebooks(spark, root: str, books) -> None:
+    spark.createDataFrame(
+        [(j, c, cent) for j, book in enumerate(books) for c, cent in enumerate(book)],
+        "j int, c int, centroid array<double>",
+    ).write.mode("overwrite").parquet(f"{root}/codebooks")
+
+
+def _write_sq8_stats(spark, root: str, stats) -> None:
+    mins, scales = stats
+    spark.createDataFrame(
+        list(zip(range(len(mins)), mins, scales)), "pos int, mn double, sc double"
+    ).write.mode("overwrite").parquet(f"{root}/stats")
+
+
+# the probes' clustering: ``bands`` on (band, code), the candidate
+# equi-join; PQ/SQ8 codes on id — their scan is a full sweep, but re-rank
+# and append anti-joins probe by id; ``vectors`` on id, the re-rank lookup
+_LSH = _Codec(
+    name="embedding_lsh",
+    code_sub="bands",
+    artifact_subs=(),
+    meta_cols=("bands", "rows_per_band", "dim", "seed"),
+    cluster={"vectors": ("id",), "bands": ("band", "code")},
+    report="",
+    # seeded hyperplanes: the codes re-derive from the meta alone
+    fit=lambda stored, **params: Row(**params),
+    write_artifacts=lambda spark, root, art: None,
+    load=lambda spark, root: read_pinned(spark, f"{root}/meta").collect()[0],
+    encode=lambda v, m, payload: _band_codes(
+        v, m.bands, m.rows_per_band, m.dim, m.seed
+    ),
+)
+_PQ = _Codec(
+    name="pq",
+    code_sub="codes",
+    artifact_subs=("codebooks",),
+    meta_cols=("m", "ks", "seed"),
+    cluster={"codes": ("id",), "vectors": ("id",)},
+    report="pq_",
+    fit=lambda stored, m, ks, seed, max_train: train_pq_codebooks(
+        stored, vec_col="v", m=m, ks=ks, seed=seed, max_train=max_train
+    ),
+    write_artifacts=_write_pq_codebooks,
+    load=_pq_codebooks_at,
+    encode=_pq_encode_rows,
+    search=lambda q, corpus, books, codes, k, rerank: pq_topk(
+        q, corpus, books, k=k, corpus_codes=codes, rerank=rerank
+    ),
+)
+_SQ8 = _Codec(
+    name="sq8",
+    code_sub="codes",
+    artifact_subs=("stats",),
+    meta_cols=(),
+    cluster={"codes": ("id",), "vectors": ("id",)},
+    report="sq8_",
+    fit=lambda stored: sq8_train_stats(stored, vec_col="v"),
+    write_artifacts=_write_sq8_stats,
+    load=_sq8_stats_at,
+    encode=lambda v, stats, payload: sq8_encode(
+        v, *stats, id_col="id", vec_col="v", extra_cols=payload
+    ),
+    search=lambda q, corpus, stats, codes, k, rerank: sq8_topk(
+        q, corpus, k=k, mins=stats[0], scales=stats[1], corpus_codes=codes,
+        rerank=rerank,
+    ),
+)
 
 
 def sq8_topk_indexed(
@@ -2352,21 +2424,7 @@ def sq8_topk_indexed(
     :func:`sq8_topk` under the same stats by construction. The active
     root resolves ONCE, so every sub-table read belongs to one committed
     build even while a retrain/compaction runs."""
-    path = index_root(spark, path)
-    mins, scales = _sq8_stats_at(spark, path)
-    codes = read_pinned(spark, f"{path}/codes")
-    corpus = read_pinned(spark, f"{path}/vectors").select(
-        F.col("id").alias("vec_id"), F.col("v").alias("embedding")
-    )
-    return sq8_topk(
-        queries.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")),
-        corpus,
-        k=k,
-        mins=mins,
-        scales=scales,
-        corpus_codes=codes,
-        rerank=rerank,
-    )
+    return _topk_indexed(_SQ8, spark, queries, path, id_col, vec_col, k, rerank)
 
 
 def sq8_topk_filtered(
@@ -2400,31 +2458,8 @@ def sq8_topk_filtered(
     corpus under the STORED stats, ties by neighbor id; optional exact
     re-rank of the top ``rerank`` from the vectors table — the re-rank
     join touches full vectors for the candidate sliver only)."""
-    root = index_root(spark, path)
-    mins, scales = _sq8_stats_at(spark, root)
-    codes = read_pinned(spark, f"{root}/codes")
-    pred = F.expr(where) if isinstance(where, str) else where
-    payload = [c for c in codes.columns if c not in ("id", "codes")]
-    if not payload:
-        raise ValueError(
-            "sq8_topk_filtered: the index at {!r} stores no payload columns "
-            "— build it with build_sq8_index(..., payload_cols=[...]) so "
-            "the filter can prune the codes scan".format(path)
-        )
-    filtered = codes.filter(pred).select("id", "codes")
-    corpus = read_pinned(spark, f"{root}/vectors").select(
-        F.col("id").alias("vec_id"), F.col("v").alias("embedding")
-    )
-    return sq8_topk(
-        queries.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-        ),
-        corpus,
-        k=k,
-        mins=mins,
-        scales=scales,
-        corpus_codes=filtered,
-        rerank=rerank,
+    return _topk_indexed(
+        _SQ8, spark, queries, path, id_col, vec_col, k, rerank, where
     )
 
 
@@ -2444,30 +2479,8 @@ def pq_topk_filtered(
     BEFORE ADC ranking, so the result is the exact top-k of the matching
     subset; the optional exact re-rank reads full vectors for the
     candidate sliver only. Requires a ``payload_cols`` build."""
-    root = index_root(spark, path)
-    books = _pq_codebooks_at(spark, root)
-    codes = read_pinned(spark, f"{root}/codes")
-    pred = F.expr(where) if isinstance(where, str) else where
-    payload = [c for c in codes.columns if c not in ("id", "codes")]
-    if not payload:
-        raise ValueError(
-            "pq_topk_filtered: the index at {!r} stores no payload columns "
-            "— build it with build_pq_index(..., payload_cols=[...]) so "
-            "the filter can prune the codes scan".format(path)
-        )
-    filtered = codes.filter(pred).select("id", "codes")
-    corpus = read_pinned(spark, f"{root}/vectors").select(
-        F.col("id").alias("vec_id"), F.col("v").alias("embedding")
-    )
-    return pq_topk(
-        queries.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-        ),
-        corpus,
-        books,
-        k=k,
-        corpus_codes=filtered,
-        rerank=rerank,
+    return _topk_indexed(
+        _PQ, spark, queries, path, id_col, vec_col, k, rerank, where
     )
 
 
@@ -2784,7 +2797,7 @@ def build_ivfpq_cell_codes(
         ],
         "ivf_root string, pq_root string, n_ivf long, n_pq long",
     ).write.mode("overwrite").parquet(f"{root}/meta")
-    _finish_index_build(spark, path, new_v, old_root, ("codes", "meta"))
+    _finish_index_build(spark, path, new_v, old_root, _CELL_CODES_SUBS)
     return {"n_codes": n}
 
 
@@ -3237,12 +3250,7 @@ def delete_from_sq8_index(
     stats/meta carried — the stored quantizer is FIXED on delete exactly
     as it is on append, so survivor codes and every probe ranking are
     unchanged). Versioned atomic swap; idempotent; returns rows removed."""
-    return _delete_ids_versioned(
-        spark, path, ids, id_col,
-        data_subs={"vectors": "id", "codes": "id"},
-        copy_subs=("stats", "meta"),
-        primary="vectors",
-    )
+    return _delete_from_index(_SQ8, spark, path, ids, id_col)
 
 
 def delete_from_pq_index(
@@ -3251,12 +3259,7 @@ def delete_from_pq_index(
     """Erase vectors from a persisted PQ index (vectors + codes; stored
     codebooks/meta carried — survivor codes unchanged). Versioned swap;
     idempotent; returns rows removed."""
-    return _delete_ids_versioned(
-        spark, path, ids, id_col,
-        data_subs={"vectors": "id", "codes": "id"},
-        copy_subs=("codebooks", "meta"),
-        primary="vectors",
-    )
+    return _delete_from_index(_PQ, spark, path, ids, id_col)
 
 
 def delete_from_embedding_lsh_index(
@@ -3265,12 +3268,7 @@ def delete_from_embedding_lsh_index(
     """Erase vectors from a persisted hyperplane-LSH index (vectors + all
     band rows; meta carried — the seeded hyperplanes are id-independent).
     Versioned swap; idempotent; returns vector rows removed."""
-    return _delete_ids_versioned(
-        spark, path, ids, id_col,
-        data_subs={"vectors": "id", "bands": "id"},
-        copy_subs=("meta",),
-        primary="vectors",
-    )
+    return _delete_from_index(_LSH, spark, path, ids, id_col)
 
 
 def delete_from_ivf_index(

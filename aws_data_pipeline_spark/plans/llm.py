@@ -10,6 +10,9 @@ tests/ (recall vs exact baselines).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -452,10 +455,6 @@ def _warehouse_index_path(sf_dir: str, name: str) -> str:
     return str(root / f"{name}_{pathlib.Path(sf_dir).name}_{tag}")
 
 
-def _kgram_index_path(sf_dir: str) -> str:
-    return _warehouse_index_path(sf_dir, "kgram_index_k8")
-
-
 _SRC_COUNT_MEMO: dict = {}
 
 
@@ -473,10 +472,18 @@ def _src_state(
     files, bytes, max mtime): footer-cheap or not, it is still a 2-job
     Spark action, and r13 job attribution measured it as the largest
     remaining fixed overhead on every warm ANN probe (the state probe
-    runs on EACH registry call). The listing triple makes the memo
-    sound — any content change that could change the count lands new
-    mtimes/sizes, flipping the key and re-counting; the state returned
-    (and the on-disk marker schema) are unchanged."""
+    runs on EACH registry call, and keys :func:`_ensure_index`). The
+    state returned (and the on-disk marker schema) are unchanged.
+
+    Granularity: the count memo's freshness rests on the listing alone —
+    file count, total bytes and the MILLISECOND max mtime (Hadoop
+    ``FileStatus`` precision). A rewrite that keeps the file count and
+    total bytes and lands within the same mtime tick as the newest file
+    it replaces goes unseen: the memoized count is served. The returned
+    state (what the index marker and :func:`_ensure_memo` key on) omits
+    the mtime, so a regeneration that keeps row count, file count and
+    total bytes goes unseen by the index marker. Appends and resized
+    regenerations change the state."""
     from aws_data_pipeline_spark.sources.parquet import zone_listing_state
 
     n_files, n_bytes, max_mtime = zone_listing_state(
@@ -538,7 +545,7 @@ _ENSURE_MEMO: dict = {}
 
 
 def _ensure_memo(spark: SparkSession, sf_dir: str, tag: str, state, ensure):
-    """Application-lifetime memo for the build-once _ensure_* helpers —
+    """Application-lifetime memo for the build-once :func:`_ensure_index` —
     the _composed_roots rule one layer down: once an index's disk state
     has been ensured fresh for a given corpus state, later calls in the
     same application skip the marker read and zone listings entirely
@@ -573,25 +580,107 @@ def _ensure_memo(spark: SparkSession, sf_dir: str, tag: str, state, ensure):
     return _ENSURE_MEMO[key]
 
 
-def _ensure_kgram_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once persisted corpus k-gram hash index over the simulated
-    existing corpus (doc_id % 10 != 7). Staleness via the footer-cheap
-    full-table marker (:func:`_src_marker_fresh`): a regenerated corpus
-    under the same sf_dir rebuilds instead of silently serving the old
-    corpus's hashes."""
-    idx = _kgram_index_path(sf_dir)
-    state = _src_state(spark, sf_dir, "documents")
+class _IndexSpec(NamedTuple):
+    """A build-once registry index over a slice of one source table."""
+
+    name: str  # warehouse directory name; every build parameter goes in it
+    table: str  # source table; its _src_state keys freshness and the memo
+    id_col: str  # ids % 10 == 7 are the simulated new batch
+    build: Callable[[DataFrame, str], object]  # (existing corpus, path)
+    append: Callable[[DataFrame, str], object] | None = None  # (new batch, path)
+    subs: tuple[str, ...] = ()  # sub-tables a finished build holds
+
+
+_KGRAM_INDEX = _IndexSpec(
+    "kgram_index_k8", "documents", "doc_id",
+    lambda corpus, idx: dedup.build_kgram_index(corpus, idx, k=8),
+)
+# md5-portable params matching incremental_neardup_pairs
+_TEXT_LSH_INDEX = _IndexSpec(
+    "text_lsh_index_k5_p16_b4_md5", "documents", "doc_id",
+    lambda corpus, idx: dedup.build_lsh_text_index(
+        corpus, idx, k=5, num_perm=16, bands=4, hash_fn="md5"
+    ),
+)
+
+
+def _ivf_index_spec(n_cells: int, seed: int = 42) -> _IndexSpec:
+    # the quantizer trains on a 10% sample of the build slice: centroid
+    # quality needs only a representative sample, and at 100 TB
+    # full-corpus KMeans is prohibitive — the sample IS the scale recipe
+    return _IndexSpec(
+        f"ivf_index_c{n_cells}_s{seed}", "embeddings", "vec_id",
+        lambda corpus, idx: similarity.build_ivf_index(
+            corpus, idx, n_cells=n_cells, seed=seed, train_fraction=0.1
+        ),
+        lambda batch, idx: similarity.append_to_ivf_index(
+            batch.sparkSession, batch, idx
+        ),
+        ("corpus", "centroids"),
+    )
+
+
+def _pq_index_spec(m: int, ks: int) -> _IndexSpec:
+    return _IndexSpec(
+        f"pq_index_m{m}_k{ks}", "embeddings", "vec_id",
+        lambda corpus, idx: similarity.build_pq_index(
+            corpus, idx, m=m, ks=ks, seed=42
+        ),
+        similarity.append_to_pq_index,
+        ("codes", "meta"),
+    )
+
+
+_SQ8_INDEX = _IndexSpec(
+    "sq8_index", "embeddings", "vec_id",
+    similarity.build_sq8_index, similarity.append_to_sq8_index, ("codes", "meta"),
+)
+# payload-carrying SQ8 (label stored beside vectors AND codes) for the
+# filtered-search entry; the append discovers the payload from the index
+_SQ8F_INDEX = _IndexSpec(
+    "sq8f_index", "embeddings", "vec_id",
+    lambda corpus, idx: similarity.build_sq8_index(
+        corpus, idx, payload_cols=["label"]
+    ),
+    similarity.append_to_sq8_index,
+    ("codes", "meta"),
+)
+
+
+def _ensure_index(spark: SparkSession, sf_dir: str, spec: _IndexSpec) -> str:
+    """Materialize a build-once index under the gitignored warehouse dir
+    the way a 100 TB corpus reaches steady state: BUILD from the
+    simulated existing corpus (id % 10 != 7), then APPEND the simulated
+    new batch (id % 10 = 7) when the family has an append, so every
+    probe exercises the append-maintained shape, not a fresh full build.
+
+    Staleness: the shared source-state marker (:func:`_src_marker_fresh`
+    — row count from footer metadata PLUS file-count/byte fingerprint
+    from one FS listing) and the presence of the finished build's
+    sub-tables; a regenerated corpus under the same path — even at
+    identical row count — triggers a rebuild instead of silently serving
+    the old data. Params are part of the index path, so
+    differently-parameterized indexes coexist. Build and append complete
+    before the marker write, so a crash mid-way reads as stale and the
+    re-run redoes both (builds overwrite, appends are idempotent)."""
+    from aws_data_pipeline_spark.sources.parquet import index_has
+
+    idx = _warehouse_index_path(sf_dir, spec.name)
+    state = _src_state(spark, sf_dir, spec.table)
 
     def _do() -> str:
-        if not _src_marker_fresh(spark, idx, state):
-            corpus = T(spark, sf_dir, "documents").filter(
-                F.col("doc_id") % 10 != 7
-            )
-            dedup.build_kgram_index(corpus, idx, k=8)
+        fresh = all(
+            index_has(spark, idx, sub) for sub in spec.subs
+        ) and _src_marker_fresh(spark, idx, state)
+        if not fresh:
+            src = T(spark, sf_dir, spec.table)
+            spec.build(src.filter(F.col(spec.id_col) % 10 != 7), idx)
+            if spec.append is not None:
+                spec.append(src.filter(F.col(spec.id_col) % 10 == 7), idx)
             _write_src_marker(spark, idx, state)
         return idx
 
-    return _ensure_memo(spark, sf_dir, "kgram_k8", state, _do)
+    return _ensure_memo(spark, sf_dir, spec.name, state, _do)
 
 
 @register("incremental_duplicate_spans", sql=None)
@@ -604,35 +693,9 @@ def incremental_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_llm.py). Per-batch cost is O(batch tokens + matched
     hashes); corpus text is never re-read. Rows-only: the SQL-expressible
     twin is the full recompute, already oracled via duplicate_span_stats."""
-    idx = _ensure_kgram_index(spark, sf_dir)
+    idx = _ensure_index(spark, sf_dir, _KGRAM_INDEX)
     new = T(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 7)
     return dedup.duplicate_spans_against_index(spark, new, idx)
-
-
-def _text_lsh_index_path(sf_dir: str) -> str:
-    return _warehouse_index_path(sf_dir, "text_lsh_index_k5_p16_b4_md5")
-
-
-def _ensure_text_lsh_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once persisted corpus MinHash-LSH index over the simulated
-    existing corpus (doc_id % 10 != 7), md5-portable params matching
-    incremental_neardup_pairs. Staleness via the footer-cheap full-table
-    marker (:func:`_src_marker_fresh`); params live in the path."""
-    idx = _text_lsh_index_path(sf_dir)
-    state = _src_state(spark, sf_dir, "documents")
-
-    def _do() -> str:
-        if not _src_marker_fresh(spark, idx, state):
-            corpus = T(spark, sf_dir, "documents").filter(
-                F.col("doc_id") % 10 != 7
-            )
-            dedup.build_lsh_text_index(
-                corpus, idx, k=5, num_perm=16, bands=4, hash_fn="md5"
-            )
-            _write_src_marker(spark, idx, state)
-        return idx
-
-    return _ensure_memo(spark, sf_dir, "text_lsh_k5_p16_b4_md5", state, _do)
 
 
 @register("text_neardup_index_probe", sql=None)
@@ -644,7 +707,7 @@ def text_neardup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-identity with the oracled resident twin is asserted in
     tests/test_llm.py, and bench.py times this probe with the build
     excluded (build-once is the contract)."""
-    idx = _ensure_text_lsh_index(spark, sf_dir)
+    idx = _ensure_index(spark, sf_dir, _TEXT_LSH_INDEX)
     d = T(spark, sf_dir, "documents")
     new = d.filter(F.col("doc_id") % 10 == 7)
     return dedup.neardup_against_index(spark, new, idx, threshold=0.8)
@@ -867,66 +930,12 @@ def embedding_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVF_INDEX: dict[tuple, tuple[list[list[float]], DataFrame]] = {}
 
 
-def _ivf_index_path(sf_dir: str, n_cells: int, seed: int) -> str:
-    return _warehouse_index_path(sf_dir, f"ivf_index_c{n_cells}_s{seed}")
-
-
-def _ensure_ivf_index(
-    spark: SparkSession, sf_dir: str, n_cells: int = 8, seed: int = 42
-) -> str:
-    """Materialize the on-disk IVF index the way a 100 TB corpus actually
-    reaches steady state: BUILD (train + cell-partitioned write) from the
-    simulated existing corpus (vec_id % 10 != 7), then APPEND the
-    simulated new batch (vec_id % 10 = 7) to the existing centroids via
-    :func:`similarity.append_to_ivf_index` — so every probe of this index
-    exercises the append-maintained shape, not a fresh full build.
-    Quantizer trained on a 10% sample of the build slice (centroid
-    quality needs only a representative sample; at 100 TB full-corpus
-    KMeans is prohibitive — the sample IS the scale recipe).
-
-    Staleness: the shared source-state marker (:func:`_src_marker_fresh`
-    — row count from footer metadata PLUS file-count/byte fingerprint
-    from one FS listing); a regenerated corpus under the same path —
-    even at identical row count — triggers a rebuild instead of silently
-    serving neighbors from the old data. Params are part of the index
-    path, so differently-parameterized indexes coexist. Build and append
-    complete before the marker write, so a crash mid-way reads as stale
-    and the re-run redoes both (the append itself is idempotent)."""
-    from aws_data_pipeline_spark.sources.parquet import index_has
-
-    idx = _ivf_index_path(sf_dir, n_cells, seed)
-    e = T(spark, sf_dir, "embeddings")
-    state = _src_state(spark, sf_dir, "embeddings")
-
-    def _do() -> str:
-        fresh = (
-            index_has(spark, idx, "corpus")
-            and index_has(spark, idx, "centroids")
-            and _src_marker_fresh(spark, idx, state)
-        )
-        if not fresh:
-            similarity.build_ivf_index(
-                e.filter(F.col("vec_id") % 10 != 7),
-                idx,
-                n_cells=n_cells,
-                seed=seed,
-                train_fraction=0.1,
-            )
-            similarity.append_to_ivf_index(
-                spark, e.filter(F.col("vec_id") % 10 == 7), idx
-            )
-            _write_src_marker(spark, idx, state)
-        return idx
-
-    return _ensure_memo(spark, sf_dir, f"ivf_{n_cells}_{seed}", state, _do)
-
-
 def _ivf_index(spark: SparkSession, sf_dir: str, n_cells: int, seed: int = 42):
     # the source STATE (row count + file fingerprint, same probe the disk
     # marker uses) is part of the cache KEY: a regenerated corpus under
     # the same sf_dir must invalidate the resident copy too, or the
     # resident and persisted paths would diverge within one application
-    # after _ensure_ivf_index rebuilds the disk index
+    # after _ensure_index rebuilds the disk index
     state = _src_state(spark, sf_dir, "embeddings")
     key = (spark.sparkContext.applicationId, sf_dir, n_cells, seed, state)
     if key not in _IVF_INDEX:
@@ -937,7 +946,9 @@ def _ivf_index(spark: SparkSession, sf_dir: str, n_cells: int, seed: int = 42):
             _IVF_INDEX.pop(old)[1].unpersist()
         from aws_data_pipeline_spark.sources.parquet import index_root
 
-        idx = index_root(spark, _ensure_ivf_index(spark, sf_dir, n_cells, seed))
+        idx = index_root(
+            spark, _ensure_index(spark, sf_dir, _ivf_index_spec(n_cells, seed))
+        )
         cents = [
             [float(x) for x in r.centroid]
             for r in sorted(
@@ -989,7 +1000,7 @@ def embedding_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is written partitioned by ``cell=`` (first call per corpus
     BUILDS from the simulated existing corpus then APPENDS the new batch
     to the fixed centroids — the probe exercises the append-maintained
-    index, see _ensure_ivf_index), and every search reads ONLY the probed
+    index, see _ensure_index), and every search reads ONLY the probed
     cell directories via partition pruning. Shares the trained quantizer
     with embedding_ann_ivf (the disk index is the single source of truth
     — see _ivf_index), so the resident and persisted paths return
@@ -999,12 +1010,12 @@ def embedding_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     slot — the rows-only cap holds at 12): the persisted-IVF driver
     signal is carried by embedding_ann_ivfpq (rows-ran r9) and
     embedding_ann_ivfsq8 (seated r10) — both ensure and probe the SAME
-    persisted IVF index through _ensure_ivf_index with partition-pruned
+    persisted IVF index through _ensure_index with partition-pruned
     cell reads, exercising strictly more of its lifecycle (build, append,
     staleness gate, cell-codes composition). What is unique here — exact
     full-vector in-cell scoring and resident/persisted row identity — is
     pinned in tests/test_llm.py and replayed every pytest run."""
-    idx = _ensure_ivf_index(spark, sf_dir, n_cells=8)
+    idx = _ensure_index(spark, sf_dir, _ivf_index_spec(n_cells=8))
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
     return similarity.ivf_topk_indexed(spark, queries, idx, k=5, nprobe=4)
@@ -1034,7 +1045,7 @@ def _pq_corpus(spark: SparkSession, sf_dir: str, m: int = 8, ks: int = 16):
     """Resident PQ artifacts per (app, sf_dir, params, source state),
     READ from the persisted index (single source of truth for codebooks
     AND codes — the _ivf_index rule): the disk index is built/appended
-    once per corpus by _ensure_pq_index, the resident copy just loads its
+    once per corpus by _ensure_index, the resident copy just loads its
     codebooks and persists its code rows, so the resident and indexed
     search paths return identical rows by construction. Source state in
     the key invalidates on corpus regeneration."""
@@ -1049,7 +1060,7 @@ def _pq_corpus(spark: SparkSession, sf_dir: str, m: int = 8, ks: int = 16):
             _PQ_CACHE.pop(old)[1].unpersist()
         from aws_data_pipeline_spark.sources.parquet import index_root
 
-        idx = index_root(spark, _ensure_pq_index(spark, sf_dir, m=m, ks=ks))
+        idx = index_root(spark, _ensure_index(spark, sf_dir, _pq_index_spec(m, ks)))
         books = similarity.read_pq_codebooks(spark, idx)
         codes = read_pinned(spark, f"{idx}/codes").persist()
         codes.count()  # materialize eagerly
@@ -1077,51 +1088,6 @@ def embedding_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.pq_topk(queries, e, books, k=5, corpus_codes=codes, rerank=40)
 
 
-def _pq_index_path(sf_dir: str, m: int, ks: int) -> str:
-    return _warehouse_index_path(sf_dir, f"pq_index_m{m}_k{ks}")
-
-
-def _ensure_pq_index(
-    spark: SparkSession, sf_dir: str, m: int = 8, ks: int = 16
-) -> str:
-    """Materialize the on-disk PQ index the way a 100 TB corpus reaches
-    steady state (the _ensure_ivf_index recipe): BUILD (train codebooks +
-    encode + write codes/vectors/meta) from the simulated existing corpus
-    (vec_id % 10 != 7), then APPEND the simulated new batch
-    (vec_id % 10 = 7) under the STORED codebooks via
-    :func:`similarity.append_to_pq_index` — so every probe of this index
-    exercises the append-maintained shape, not a fresh full build.
-
-    Staleness: the shared source-state marker (row count + file
-    fingerprint); a regenerated corpus under the same path triggers a
-    rebuild. Params are part of the index path. Build and append complete
-    before the marker write, so a crash mid-way reads as stale and the
-    re-run redoes both (build overwrites, append is idempotent)."""
-    from aws_data_pipeline_spark.sources.parquet import index_has
-
-    idx = _pq_index_path(sf_dir, m, ks)
-    e = T(spark, sf_dir, "embeddings")
-    state = _src_state(spark, sf_dir, "embeddings")
-
-    def _do() -> str:
-        fresh = (
-            index_has(spark, idx, "codes")
-            and index_has(spark, idx, "meta")
-            and _src_marker_fresh(spark, idx, state)
-        )
-        if not fresh:
-            similarity.build_pq_index(
-                e.filter(F.col("vec_id") % 10 != 7), idx, m=m, ks=ks, seed=42
-            )
-            similarity.append_to_pq_index(
-                e.filter(F.col("vec_id") % 10 == 7), idx
-            )
-            _write_src_marker(spark, idx, state)
-        return idx
-
-    return _ensure_memo(spark, sf_dir, f"pq_{m}_{ks}", state, _do)
-
-
 @register("embedding_ann_pq_indexed", sql=None, demoted=True)
 def embedding_ann_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 via the PERSISTED product-quantization index — the on-disk
@@ -1129,7 +1095,7 @@ def embedding_ann_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     32x scan-payload cut measured in tests/test_scale.py); full vectors
     are touched just for the exact re-rank candidates. First call per
     corpus BUILDS from the simulated existing corpus then APPENDS the new
-    batch under the stored codebooks (see _ensure_pq_index), so the probe
+    batch under the stored codebooks (see _ensure_index), so the probe
     exercises the append-maintained index — the IVF-indexed pattern
     (embedding_ann_ivf_indexed) applied to the PQ family. Identical rows
     to the resident embedding_ann_pq under the same codebooks
@@ -1141,7 +1107,7 @@ def embedding_ann_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME stored codebooks and ADC chain), mirroring the r10
     embedding_ann_ivf_indexed→embedding_ann_ivfsq8 precedent; the
     resident/persisted row-identity stays pytest-pinned."""
-    idx = _ensure_pq_index(spark, sf_dir, m=8, ks=16)
+    idx = _ensure_index(spark, sf_dir, _pq_index_spec(m=8, ks=16))
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
     return similarity.pq_topk_indexed(spark, queries, idx, k=5, rerank=40)
@@ -1237,8 +1203,8 @@ def embedding_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed ensure/currency overhead, honestly-cold every call."""
 
     def _ensure():
-        ivf = _ensure_ivf_index(spark, sf_dir, n_cells=8)
-        pq = _ensure_pq_index(spark, sf_dir, m=8, ks=16)
+        ivf = _ensure_index(spark, sf_dir, _ivf_index_spec(n_cells=8))
+        pq = _ensure_index(spark, sf_dir, _pq_index_spec(m=8, ks=16))
         return ivf, pq, _ensure_ivfpq_cell_codes(spark, sf_dir, ivf, pq)
 
     (ivf, pq, cc), books = _composed_roots(
@@ -1268,78 +1234,6 @@ def embedding_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         cell_codes_verified=True,
         codebooks=books,
     )
-
-
-def _sq8_index_path(sf_dir: str) -> str:
-    return _warehouse_index_path(sf_dir, "sq8_index")
-
-
-def _ensure_sq8_index(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the on-disk SQ8 index the way a 100 TB corpus reaches
-    steady state (the _ensure_pq_index recipe): BUILD (train per-dim
-    ranges + encode + write vectors/codes/stats/meta) from the simulated
-    existing corpus (vec_id % 10 != 7), then APPEND the simulated new
-    batch under the STORED ranges via similarity.append_to_sq8_index —
-    so every probe exercises the append-maintained shape. Same
-    source-state staleness marker; build+append complete before the
-    marker write (crash re-runs both; append is idempotent)."""
-    from aws_data_pipeline_spark.sources.parquet import index_has
-
-    idx = _sq8_index_path(sf_dir)
-    e = T(spark, sf_dir, "embeddings")
-    state = _src_state(spark, sf_dir, "embeddings")
-
-    def _do() -> str:
-        fresh = (
-            index_has(spark, idx, "codes")
-            and index_has(spark, idx, "meta")
-            and _src_marker_fresh(spark, idx, state)
-        )
-        if not fresh:
-            similarity.build_sq8_index(
-                e.filter(F.col("vec_id") % 10 != 7), idx
-            )
-            similarity.append_to_sq8_index(
-                e.filter(F.col("vec_id") % 10 == 7), idx
-            )
-            _write_src_marker(spark, idx, state)
-        return idx
-
-    return _ensure_memo(spark, sf_dir, "sq8", state, _do)
-
-
-def _ensure_sq8f_index(spark: SparkSession, sf_dir: str) -> str:
-    """Payload-carrying SQ8 index (label stored beside vectors AND codes —
-    build_sq8_index(payload_cols=["label"])) for the filtered-search
-    entry. Same steady-state recipe as _ensure_sq8_index: BUILD from the
-    simulated existing corpus (vec_id % 10 != 7) so the stored quantizer
-    is the build slice's, then APPEND the new batch under the stored
-    ranges (payload schema discovered from the index); same source-state
-    staleness marker and memo."""
-    from aws_data_pipeline_spark.sources.parquet import index_has
-
-    idx = _warehouse_index_path(sf_dir, "sq8f_index")
-    e = T(spark, sf_dir, "embeddings")
-    state = _src_state(spark, sf_dir, "embeddings")
-
-    def _do() -> str:
-        fresh = (
-            index_has(spark, idx, "codes")
-            and index_has(spark, idx, "meta")
-            and _src_marker_fresh(spark, idx, state)
-        )
-        if not fresh:
-            similarity.build_sq8_index(
-                e.filter(F.col("vec_id") % 10 != 7), idx,
-                payload_cols=["label"],
-            )
-            similarity.append_to_sq8_index(
-                e.filter(F.col("vec_id") % 10 == 7), idx
-            )
-            _write_src_marker(spark, idx, state)
-        return idx
-
-    return _ensure_memo(spark, sf_dir, "sq8f", state, _do)
 
 
 @register(
@@ -1400,7 +1294,7 @@ def embedding_ann_sq8_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     search capability no registered entry exercised; together with
     ann_recall_sq8 this keeps the SQ8 value chain driver-oracled after
     embedding_ann_sq8's demotion; cap held at 100."""
-    idx = _ensure_sq8f_index(spark, sf_dir)
+    idx = _ensure_index(spark, sf_dir, _SQ8F_INDEX)
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
     return similarity.sq8_topk_filtered(
@@ -1415,13 +1309,13 @@ def embedding_ann_sq8_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the STORED per-dim ranges, exact-re-ranks from the index's vectors
     table. First call per corpus BUILDS from the simulated existing
     corpus then APPENDS the new batch under the stored ranges
-    (_ensure_sq8_index), so the probe exercises the append-maintained
+    (_ensure_index), so the probe exercises the append-maintained
     index — completing the per-family indexed-probe parity
     (ivf_indexed / pq_indexed / sq8_indexed). Rows-only: the index probe
     differs from the oracled resident embedding_ann_sq8 (train corpus
     excludes the appended tranche by design), and its lifecycle is
     pinned in test_embedding_maintenance::test_sq8_*."""
-    idx = _ensure_sq8_index(spark, sf_dir)
+    idx = _ensure_index(spark, sf_dir, _SQ8_INDEX)
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
     return similarity.sq8_topk_indexed(spark, queries, idx, k=5, rerank=40)
@@ -3270,8 +3164,8 @@ def _ivfsq8_roots(spark: SparkSession, sf_dir: str):
     state-keyed _composed_roots seat."""
 
     def _ensure():
-        ivf = _ensure_ivf_index(spark, sf_dir, n_cells=8)
-        sq8 = _ensure_sq8_index(spark, sf_dir)
+        ivf = _ensure_index(spark, sf_dir, _ivf_index_spec(n_cells=8))
+        sq8 = _ensure_index(spark, sf_dir, _SQ8_INDEX)
         cc = _warehouse_index_path(sf_dir, "ivfsq8_cell_codes_c8")
         if not similarity.ivfpq_cell_codes_current(spark, cc, ivf, sq8):
             similarity.build_ivfpq_cell_codes(spark, ivf, sq8, cc)
@@ -3507,7 +3401,7 @@ def hard_negative_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     head) by demoting embedding_ann_pq_indexed, whose persisted-PQ-index
     probe signal embedding_ann_ivfpq carries (same stored codebooks and
     ADC chain through the composed probe); rows-only cap held at 12."""
-    idx = _ensure_sq8_index(spark, sf_dir)
+    idx = _ensure_index(spark, sf_dir, _SQ8_INDEX)
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
     return similarity.hard_negative_topk_indexed(

@@ -302,11 +302,11 @@ def incremental_embedding_ingest(
         from aws_data_pipeline_spark.sources.parquet import gc_index_versions
 
         gc_targets = {
-            index_path: ("vectors", "bands", "meta"),
-            ivf_index_path: ("corpus", "centroids", "build_stats"),
-            pq_index_path: ("vectors", "codes", "codebooks", "meta"),
-            sq8_index_path: ("vectors", "codes", "stats", "meta"),
-            ivfpq_cell_codes_path: ("codes", "meta"),
+            index_path: similarity._LSH.subs,
+            ivf_index_path: similarity._IVF_SUBS,
+            pq_index_path: similarity._PQ.subs,
+            sq8_index_path: similarity._SQ8.subs,
+            ivfpq_cell_codes_path: similarity._CELL_CODES_SUBS,
         }
         for p, subs in gc_targets.items():
             if p is not None:
@@ -476,11 +476,11 @@ def forget_vectors(
     if gc_superseded:
         # the kept pre-delete generations still hold the doomed rows
         for p, subs in (
-            (index_path, ("vectors", "bands", "meta")),
-            (pq_index_path, ("vectors", "codes", "codebooks", "meta")),
-            (sq8_index_path, ("vectors", "codes", "stats", "meta")),
+            (index_path, similarity._LSH.subs),
+            (pq_index_path, similarity._PQ.subs),
+            (sq8_index_path, similarity._SQ8.subs),
             # the rebuilt layout's kept generation holds erased codes too
-            (ivfpq_cell_codes_path, ("codes", "meta")),
+            (ivfpq_cell_codes_path, similarity._CELL_CODES_SUBS),
         ):
             if p is not None and zone_exists(spark, p):
                 gc_index_versions(spark, p, subs)

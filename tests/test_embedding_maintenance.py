@@ -73,42 +73,6 @@ def test_embedding_lsh_append_equals_fresh_build(spark, sf_dir, tmp_path):
     assert spark.read.parquet(f"{appended}/bands").count() == nband
 
 
-def test_embedding_lsh_append_backfills_crash_between_writes(
-    spark, sf_dir, tmp_path
-):
-    """A crash AFTER the vectors append but BEFORE the bands append leaves
-    vectors without band codes; the recovery re-append computes exactly the
-    missing codes from the materialized vectors and duplicates nothing."""
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    corpus0 = e.filter(F.col("vec_id") % 10 != 6)
-    batch = e.filter(F.col("vec_id") % 10 == 6)
-    idx = str(tmp_path / "lsh_crash")
-    build_embedding_lsh_index(corpus0, idx)
-    meta = spark.read.parquet(f"{idx}/meta").collect()[0]
-
-    # simulate the crash: land the batch's vectors rows only
-    batch.select(
-        F.col("vec_id").alias("id"), as_double(F.col("embedding")).alias("v")
-    ).write.mode("append").parquet(f"{idx}/vectors")
-
-    append_to_embedding_lsh_index(batch, idx)
-    vecs = spark.read.parquet(f"{idx}/vectors")
-    bands = spark.read.parquet(f"{idx}/bands")
-    n_batch = batch.count()
-    # no duplicate vectors, and every batch id carries a full band set
-    assert vecs.count() == vecs.select("id").distinct().count()
-    got = (
-        bands.join(
-            batch.select(F.col("vec_id").alias("id")), "id", "left_semi"
-        )
-        .groupBy("id")
-        .count()
-        .collect()
-    )
-    assert len(got) == n_batch
-    assert all(r["count"] == meta.bands for r in got)
-
-
 def test_ivf_append_assignment_identity_idempotency_and_drift(
     spark, sf_dir, tmp_path
 ):
@@ -546,36 +510,6 @@ def test_pq_index_build_probe_append_retrain(spark, sf_dir, tmp_path):
     assert meta.n_built == e.count()
 
 
-def test_pq_append_backfills_crash_between_writes(spark, sf_dir, tmp_path):
-    """Simulated crash after the vectors write but before codes: the
-    re-run re-encodes the stranded rows from the materialized vectors
-    under the STORED codebooks — codes equal a clean append's."""
-    import shutil
-
-    from aws_data_pipeline_spark.operators import similarity as S
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    base = e.filter(F.col("vec_id") >= 100)
-    batch = e.filter(F.col("vec_id") < 100)
-    idx = str(tmp_path / "pq_crash")
-    S.build_pq_index(base, idx, m=8, ks=16, seed=42)
-
-    # clean append on a twin index for the expected end state
-    idx2 = str(tmp_path / "pq_clean")
-    shutil.copytree(idx, idx2)
-    S.append_to_pq_index(batch, idx2)
-
-    # crash simulation: write ONLY the vectors side, then re-run append
-    batch.selectExpr("vec_id as id", "cast(embedding as array<double>) as v").write.mode(
-        "append"
-    ).parquet(f"{idx}/vectors")
-    S.append_to_pq_index(batch, idx)
-
-    codes = {tuple([r.id] + list(r.codes)) for r in spark.read.parquet(f"{idx}/codes").collect()}
-    clean = {tuple([r.id] + list(r.codes)) for r in spark.read.parquet(f"{idx2}/codes").collect()}
-    assert codes == clean
-
-
 def test_pq_train_tolerates_ragged_vectors(spark):
     """A wrong-length vector in the training corpus must not crash the
     codebook fit (it would otherwise collect as an object ndarray): train
@@ -873,40 +807,6 @@ def test_sq8_index_build_probe_append_retrain_growth_and_drift(
     assert (m2, s2) != (mins, scales)  # ranges absorbed the wild vector
     meta = spark.read.parquet(_sub(spark, idx, "meta")).collect()[0]
     assert meta.n_built == e.count() + 1
-
-
-def test_sq8_append_backfills_crash_between_writes(spark, sf_dir, tmp_path):
-    """Simulated crash after the vectors write but before codes: the
-    re-run re-encodes the stranded rows from the materialized vectors
-    under the STORED stats — codes equal a clean append's."""
-    import shutil
-
-    from aws_data_pipeline_spark.operators import similarity as S
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    base = e.filter(F.col("vec_id") >= 100)
-    batch = e.filter(F.col("vec_id") < 100)
-    idx = str(tmp_path / "sq8_crash")
-    S.build_sq8_index(base, idx)
-
-    idx2 = str(tmp_path / "sq8_clean")
-    shutil.copytree(idx, idx2)
-    S.append_to_sq8_index(batch, idx2)
-
-    batch.selectExpr(
-        "vec_id as id", "cast(embedding as array<double>) as v"
-    ).write.mode("append").parquet(f"{idx}/vectors")
-    S.append_to_sq8_index(batch, idx)
-
-    codes = {
-        tuple([r.id] + list(r.codes))
-        for r in spark.read.parquet(f"{idx}/codes").collect()
-    }
-    clean = {
-        tuple([r.id] + list(r.codes))
-        for r in spark.read.parquet(f"{idx2}/codes").collect()
-    }
-    assert codes == clean
 
 
 def test_incremental_embedding_ingest_maintains_sq8(spark, tmp_path):

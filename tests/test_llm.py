@@ -1928,10 +1928,10 @@ def test_ensure_memo_out_of_band_deletion_reensures(spark, sf_dir):
 
     from aws_data_pipeline_spark.plans import llm as L
 
-    idx = L._ensure_kgram_index(spark, sf_dir)
+    idx = L._ensure_index(spark, sf_dir, L._KGRAM_INDEX)
     assert any(isinstance(v, str) and v == idx for v in L._ENSURE_MEMO.values())
     shutil.rmtree(idx)
-    again = L._ensure_kgram_index(spark, sf_dir)
+    again = L._ensure_index(spark, sf_dir, L._KGRAM_INDEX)
     assert again == idx
     from aws_data_pipeline_spark.sources.parquet import zone_exists
 
