@@ -71,20 +71,93 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
-def _topk_by_sim(scored: DataFrame, k: int) -> DataFrame:
+def _topk_by_sim(scored: DataFrame, k: int, keep: Sequence[str] = ()) -> DataFrame:
     """Per-query top-k cut over a (query_id, neighbor_id, sim) frame:
     row_number over (sim desc, neighbor_id asc — the deterministic
     tie-break every search path must share, or their recall comparisons
-    in tests would diverge on ties). ONE definition for all four search
-    paths (brute force, IVF resident, IVF persisted, hyperplane LSH)."""
+    in tests would diverge on ties). ONE definition for every search
+    here: the exact, IVF and LSH searches cut with it directly, and the
+    quantized and IVF-composed searches cut both their candidate sliver
+    and their final top-k with it (:func:`_refine`). ``keep`` carries
+    extra columns through the cut."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
+        .select("query_id", "neighbor_id", "rank", *keep)
     )
+
+
+def _id_vec(
+    df: DataFrame, id_col: str, vec_col: str, ids: str = "query_id", vecs: str = "qv"
+) -> DataFrame:
+    """The (id, vector as array<double>) projection every search starts
+    from: ``(query_id, qv)`` for the query side by default, ``("neighbor_id",
+    "cv")`` for the exact corpus side."""
+    return df.select(F.col(id_col).alias(ids), as_double(F.col(vec_col)).alias(vecs))
+
+
+def _pairs(q: DataFrame, cand: DataFrame) -> DataFrame:
+    """The broadcast query side joined to its candidates: every corpus row
+    but the query itself for a full scan, or an equi-join on ``query_id``
+    when ``cand`` already carries it (the per-query candidates of an
+    IVF-composed probe, :func:`_cell_candidates`)."""
+    if "query_id" in cand.columns:
+        return cand.join(F.broadcast(q), "query_id")
+    return (
+        F.broadcast(q)
+        .crossJoin(cand)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+    )
+
+
+def _in_band(sim: Column, lo: float, hi: float, slack: Column | None = None) -> Column:
+    """``lo <= sim < hi``. Exact (no ``slack``): compared on ``round(sim,
+    9)`` — raw doubles differ in final ulps across engines, so a sim within
+    an ulp of an edge would flip band membership between Spark and a
+    replaying oracle (:func:`hard_negative_topk`'s rule). With ``slack``
+    (a per-row Column, :func:`_band_slack_col`): both edges widened on the
+    raw approximate sim, so quantization never drops a true band member
+    before the exact re-check."""
+    if slack is None:
+        sim = F.round(sim, 9)
+        return (sim >= lo) & (sim < hi)
+    return (sim >= F.lit(lo) - slack) & (sim < F.lit(hi) + slack)
+
+
+def _refine(
+    scored: DataFrame,
+    vectors: DataFrame | str,
+    k: int,
+    rerank: int | None,
+    band: tuple | None = None,
+) -> DataFrame:
+    """The FAISS ``Refine`` step shared by the quantized and IVF-composed
+    searches and the hard-negative miners: cut each query's top ``rerank``
+    candidates by their approximate ``sim`` (None: the approximate ranking
+    is final), join their full vectors, re-score them by exact cosine
+    against the candidates' ``qv`` and take the top ``k``. ADC keeps
+    recall's floor; exact cosine on the candidate sliver restores its
+    ceiling. ``vectors`` is the exact side: a (neighbor_id, cv) frame, or
+    a resolved index root whose ``vectors`` table is read only when the
+    refine runs. ``band`` = (lo, hi, ...) keeps only exact sims in
+    ``[lo, hi)`` (:func:`_in_band`) before the final cut."""
+    if rerank is None:
+        return _topk_by_sim(scored, k)
+    if isinstance(vectors, str):
+        vectors = read_pinned(scored.sparkSession, f"{vectors}/vectors").select(
+            F.col("id").alias("neighbor_id"), F.col("v").alias("cv")
+        )
+    exact = (
+        _topk_by_sim(scored, rerank, keep=("qv",))
+        .join(vectors, "neighbor_id")
+        .withColumn("sim", cosine(F.col("qv"), F.col("cv")))
+    )
+    if band is not None:
+        exact = exact.filter(_in_band(F.col("sim"), band[0], band[1]))
+    return _topk_by_sim(exact, k)
 
 
 def brute_force_topk(
@@ -100,14 +173,8 @@ def brute_force_topk(
     row_number (AQE coalesces the tiny shuffle). Ties broken by neighbor id
     for determinism. Self-matches excluded.
     """
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-        )
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-    )
+    q = F.broadcast(_id_vec(queries, id_col, vec_col))
+    c = _id_vec(corpus, id_col, vec_col, "neighbor_id", "cv")
     scored = (
         q.crossJoin(c)
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -731,9 +798,7 @@ def ivf_topk(
             corpus, id_col, vec_col, n_cells, seed, train_fraction
         )
     if assigned is None:
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-        )
+        c = _id_vec(corpus, id_col, vec_col, "neighbor_id", "cv")
         assigned = c.withColumn("cell", nearest_cell(F.col("cv"), centroids))
 
     # broadcast the centroid table; each query ranks centroids by cosine and
@@ -744,9 +809,7 @@ def ivf_topk(
             list(enumerate(centroids)), "cell int, centroid array<double>"
         )
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
+    q = _id_vec(queries, id_col, vec_col)
     wq = Window.partitionBy("query_id").orderBy(
         F.col("cent_sim").desc(), F.col("cell").asc()
     )
@@ -862,9 +925,7 @@ def ivf_topk_indexed(
     state (the centroids and corpus seen here always belong to one
     committed build)."""
     index_path = index_root(spark, index_path)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
+    q = _id_vec(queries, id_col, vec_col)
     # shared probe (r14): one collect yields the probed (query, qv, cell)
     # frame AND the distinct-cell list. The previous inline form paid a
     # separate AQE distinct+collect for the cells (4 driver jobs) and
@@ -1492,8 +1553,8 @@ def _pq_query_luts(
     query vector and its m×ks LUT of subspace inner products, built as
     ONE numpy matmul per Arrow batch (a literal-expression LUT costs
     seconds of Catalyst analysis — measured in round 7 and rejected).
-    Zero-norm / ragged queries are dropped. Shared by pq_topk and the
-    IVF-PQ composition."""
+    Zero-norm / ragged queries are dropped. The frame-side query LUT of
+    :func:`_pq_scored`."""
     import numpy as np
 
     m = len(codebooks)
@@ -1607,6 +1668,24 @@ def _pq_adc_sim(m: int, ks: int):
     )
 
 
+def _pq_scored(
+    q: DataFrame, cand: DataFrame, books: list[list[list[float]]], q_rows=None
+) -> DataFrame:
+    """ADC ``sim`` of each query against its candidate (neighbor_id,
+    codes) rows. The query's LUT and normalized ``qv`` (the re-rank side)
+    come from one Arrow batch per partition of the (query_id, qv) frame
+    ``q``, or, for a composed probe that already collected ``q_rows``,
+    from the same numpy ops on the driver (:func:`_pq_query_luts_local`)."""
+    id_type = q.schema["query_id"].dataType.simpleString()
+    if q_rows is None:
+        qlut = _pq_query_luts(q, books, id_type)
+    else:
+        qlut = _pq_query_luts_local(q.sparkSession, q_rows, books, id_type)
+    return _pairs(qlut, cand).withColumn(
+        "sim", _pq_adc_sim(len(books), len(books[0]))
+    )
+
+
 def pq_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -1630,46 +1709,18 @@ def pq_topk(
     literal-expression LUT — m·ks nested HOF columns — costs seconds of
     Catalyst analysis per execution; measured 5.1 s → sub-second after
     moving it to Arrow). The optional re-rank joins full vectors for
-    the top-``rerank`` candidates only — the FAISS refine step: ADC keeps
-    recall's floor, exact cosine on a candidate sliver restores its
-    ceiling. Compose with IVF by passing cell-probed codes as
-    ``corpus_codes``. Approximate by design: recall vs brute_force_topk
-    is pinned in pytest, not a value oracle.
+    the top-``rerank`` candidates only (:func:`_refine`, the FAISS refine
+    step). IVF composition is :func:`ivfpq_topk_indexed`. Approximate by
+    design: recall vs brute_force_topk is pinned in pytest, not a value
+    oracle.
     """
-    m = len(codebooks)
-    ks = len(codebooks[0])
     if corpus_codes is None:
         corpus_codes = pq_encode(corpus, codebooks, id_col, vec_col)
-    id_type = queries.schema[id_col].dataType.simpleString()
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
+    cand = corpus_codes.select(F.col("id").alias("neighbor_id"), "codes")
+    scored = _pq_scored(_id_vec(queries, id_col, vec_col), cand, codebooks)
+    return _refine(
+        scored, _id_vec(corpus, id_col, vec_col, "neighbor_id", "cv"), k, rerank
     )
-    qlut = _pq_query_luts(q, codebooks, id_type)
-    scored = (
-        F.broadcast(qlut)
-        .crossJoin(corpus_codes.withColumnRenamed("id", "neighbor_id"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", _pq_adc_sim(m, ks))
-    )
-    if rerank is None:
-        return _topk_by_sim(scored.drop("qv", "lut", "codes"), k)
-    # candidate cut inline (not _topk_by_sim — it projects qv away, and the
-    # exact re-rank needs the normalized query vector back)
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        scored.withColumn("__r", F.row_number().over(wc))
-        .filter(F.col("__r") <= rerank)
-        .select("query_id", "neighbor_id", "qv")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-    )
-    exact = cand.join(cv, "neighbor_id").withColumn(
-        "sim", cosine(F.col("qv"), F.col("cv"))
-    )
-    return _topk_by_sim(exact.drop("qv", "cv"), k)
 
 
 def build_pq_index(
@@ -1926,6 +1977,37 @@ def _band_slack_col(band_slack: float | None, scales: list[float]) -> Column:
     )
 
 
+def _sq8_scored(
+    q: DataFrame,
+    cand: DataFrame,
+    stats: tuple[list[float], list[float]],
+    q_rows=None,
+    band: tuple | None = None,
+) -> DataFrame:
+    """SQ8's asymmetric cosine ``sim``: the exact query ``qv`` (norm
+    ``qn``) against each candidate's DEQUANTIZED codes (``rv``, norm
+    ``rn``) under ``stats`` = (mins, scales), computed on the candidate
+    side before the join; try_divide turns a zero norm into a NULL sim.
+    ``q_rows`` re-creates the query frame locally from a composed probe's
+    collected rows, so the broadcast build does not re-run the query scan.
+    ``band`` = (lo, hi, band_slack) keeps only sims inside the
+    slack-widened band (:func:`_band_slack_col`): the miners' approximate
+    stage."""
+    mins, scales = stats
+    if q_rows is not None:
+        q = q.sparkSession.createDataFrame(q_rows, q.schema)
+    rv = cand.withColumn(
+        "rv", sq8_reconstruct(F.col("codes"), mins, scales)
+    ).withColumn("rn", norm(F.col("rv")))
+    scored = _pairs(q.withColumn("qn", norm(F.col("qv"))), rv).withColumn(
+        "sim", F.try_divide(dot(F.col("qv"), F.col("rv")), F.col("qn") * F.col("rn"))
+    )
+    if band is None:
+        return scored
+    slack = _band_slack_col(band[2], scales)
+    return scored.filter(_in_band(F.col("sim"), band[0], band[1], slack))
+
+
 def sq8_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -1954,41 +2036,11 @@ def sq8_topk(
         mins, scales = sq8_train_stats(corpus, vec_col)
     if corpus_codes is None:
         corpus_codes = sq8_encode(corpus, mins, scales, id_col, vec_col)
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            as_double(F.col(vec_col)).alias("qv"),
-        ).withColumn("qn", norm(F.col("qv")))
+    cand = corpus_codes.select(F.col("id").alias("neighbor_id"), "codes")
+    scored = _sq8_scored(_id_vec(queries, id_col, vec_col), cand, (mins, scales))
+    return _refine(
+        scored, _id_vec(corpus, id_col, vec_col, "neighbor_id", "cv"), k, rerank
     )
-    c = corpus_codes.select(
-        F.col("id").alias("neighbor_id"),
-        sq8_reconstruct(F.col("codes"), mins, scales).alias("rv"),
-    ).withColumn("rn", norm(F.col("rv")))
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "sim",
-            F.try_divide(dot(F.col("qv"), F.col("rv")), F.col("qn") * F.col("rn")),
-        )
-    )
-    if rerank is None:
-        return _topk_by_sim(scored.drop("qv", "qn", "rv", "rn"), k)
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        scored.withColumn("__r", F.row_number().over(wc))
-        .filter(F.col("__r") <= rerank)
-        .select("query_id", "neighbor_id", "qv")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-    )
-    exact = cand.join(cv, "neighbor_id").withColumn(
-        "sim", cosine(F.col("qv"), F.col("cv"))
-    )
-    return _topk_by_sim(exact.drop("qv", "cv"), k)
 
 
 def build_sq8_index(
@@ -2620,6 +2672,62 @@ def _cell_candidates(
     )
 
 
+def _composed_candidates(
+    codec: _Codec,
+    spark,
+    queries: DataFrame,
+    ivf_index_path: str,
+    codes_index_path: str,
+    id_col: str,
+    vec_col: str,
+    nprobe: int,
+    cell_codes_path: str | None,
+    cell_codes_verified: bool = False,
+    artifact=None,
+    where: Column | str | None = None,
+):
+    """The coarse stage every IVF-composed search shares (IVF-PQ, IVF-SQ8
+    and the IVF-SQ8 hard-negative miner), written once so their
+    inverted-list semantics cannot drift:
+
+    - both roots resolve ONCE, so the probe serves one committed build of
+      each index;
+    - the cell-codes staleness gate (:func:`_cell_codes_stale`, the
+      qualified-root + source-count contract) runs BEFORE the eager probe
+      pays compute and raises loudly on a superseded layout;
+      ``cell_codes_verified`` skips it, for a caller that has already
+      verified the layout against these same resolved roots in this
+      application and keys that verification on corpus state (the
+      registry's _composed_roots cache);
+    - the codec artifact (PQ codebooks / SQ8 stats) is ``artifact`` when
+      the caller passes it pre-read from the same resolved root, else
+      loaded;
+    - :func:`_probe_cells` ranks the cells and :func:`_cell_candidates`
+      restricts candidates PER QUERY to them, ``where`` pre-filtering on
+      the codes' payload columns.
+
+    Returns (codes root, artifact, (query_id, qv) frame, its collected
+    rows, (query_id, neighbor_id, codes) candidates)."""
+    ivf_root = index_root(spark, ivf_index_path)
+    root = index_root(spark, codes_index_path)
+    cc_root = None
+    if cell_codes_path is not None:
+        cc_root = index_root(spark, cell_codes_path)
+        if not cell_codes_verified:
+            reason = _cell_codes_stale(spark, cc_root, ivf_root, root)
+            if reason is not None:
+                raise ValueError(
+                    f"ivf{codec.name} cell-codes layout is STALE ({reason}) — "
+                    f"rebuild with build_ivfpq_cell_codes(ivf, {codec.name}, path)"
+                )
+    if artifact is None:
+        artifact = codec.load(spark, root)
+    q = _id_vec(queries, id_col, vec_col)
+    probed, cells, q_rows = _probe_cells(spark, q, ivf_root, nprobe)
+    cand = _cell_candidates(spark, probed, cells, ivf_root, root, cc_root, where)
+    return root, artifact, q, q_rows, cand
+
+
 def ivfpq_topk_indexed(
     spark,
     queries: DataFrame,
@@ -2669,73 +2777,17 @@ def ivfpq_topk_indexed(
     results are row-identical to the two-index path either way.
 
     Warm-path escape hatches (both default OFF — the cold probe stays
-    the honest, self-contained serving call): ``cell_codes_verified=True``
-    skips the per-call staleness re-check, for a caller that has ALREADY
-    verified the layout's currency against these same resolved roots in
-    this application and keys that verification on corpus state (the
-    registry's _composed_roots cache); ``codebooks`` passes pre-read PQ
-    codebooks (must be :func:`read_pq_codebooks` of ``pq_index_path``'s
-    resolved root — tiny, cacheable driver-side) so repeated probes skip
-    the codebook collect.
-
-    ``where`` composes attribute PRE-FILTERING with the cell pruning
-    (see :func:`_cell_candidates`): the predicate evaluates over payload
-    columns the codes index stores (``payload_cols`` build) and prunes
-    candidates BEFORE ADC ranking — PartitionFilters on ``cell=`` ×
-    parquet-pushed payload predicate, the full 100 TB filtered-search
-    shape."""
-    ivf_root = index_root(spark, ivf_index_path)
-    pq_root = index_root(spark, pq_index_path)
-    # staleness gate FIRST: the designed loud failure must fire before the
-    # eager probe (_probe_cells localCheckpoints + collects) pays compute
-    cc_root = None
-    if cell_codes_path is not None:
-        cc_root = index_root(spark, cell_codes_path)
-        if not cell_codes_verified:
-            reason = _cell_codes_stale(spark, cc_root, ivf_root, pq_root)
-            if reason is not None:
-                raise ValueError(
-                    f"ivfpq cell-codes layout is STALE ({reason}) — "
-                    "rebuild with build_ivfpq_cell_codes"
-                )
-    books = codebooks if codebooks is not None else _pq_codebooks_at(spark, pq_root)
-    m, ks = len(books), len(books[0])
-    id_type = queries.schema[id_col].dataType.simpleString()
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
+    the honest, self-contained serving call): ``cell_codes_verified``
+    (see :func:`_composed_candidates`) and ``codebooks``, pre-read PQ
+    codebooks (:func:`read_pq_codebooks` of ``pq_index_path``'s resolved
+    root) so repeated probes skip the codebook collect. ``where``
+    pre-filters candidates on the codes' payload columns BEFORE ADC
+    ranking (:func:`_cell_candidates`)."""
+    root, books, q, q_rows, cand = _composed_candidates(
+        _PQ, spark, queries, ivf_index_path, pq_index_path, id_col, vec_col,
+        nprobe, cell_codes_path, cell_codes_verified, codebooks, where,
     )
-    probed, cells, q_rows = _probe_cells(spark, q, ivf_root, nprobe)
-    # LUT from the rows the probe already collected — same numpy ops as
-    # the mapInPandas path, re-created locally: the qlut broadcast build
-    # was a full query-scan + single-task Python-worker job per probe
-    # (~0.5 s in r14 job attribution), now a driver matmul over the
-    # bounded batch (guide §4 — eliminate the boundary, not tune it)
-    qlut = _pq_query_luts_local(spark, q_rows, books, id_type)
-    cand_codes = _cell_candidates(
-        spark, probed, cells, ivf_root, pq_root, cc_root, where=where
-    )
-    # shared ADC tail — one place for the LUT join + scoring expression, so
-    # the two candidate paths cannot drift (the row-identity test's claim)
-    scored = cand_codes.join(F.broadcast(qlut), "query_id").withColumn(
-        "sim", _pq_adc_sim(m, ks)
-    )
-    if rerank is None:
-        return _topk_by_sim(scored.drop("qv", "lut", "codes"), k)
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    cand2 = (
-        scored.withColumn("__r", F.row_number().over(wc))
-        .filter(F.col("__r") <= rerank)
-        .select("query_id", "neighbor_id", "qv")
-    )
-    cv = read_pinned(spark, f"{pq_root}/vectors").select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv")
-    )
-    exact = cand2.join(cv, "neighbor_id").withColumn(
-        "sim", cosine(F.col("qv"), F.col("cv"))
-    )
-    return _topk_by_sim(exact.drop("qv", "cv"), k)
+    return _refine(_pq_scored(q, cand, books, q_rows), root, k, rerank)
 
 
 def build_ivfpq_cell_codes(
@@ -2882,76 +2934,17 @@ def ivfsq8_topk_indexed(
     error ≤ scale/2 keeps ranking near-exact WITHIN the probed cells, so
     recall tracks the IVF probe itself with a ~4× smaller byte sweep than
     raw vectors — where IVF-PQ trades more recall for a deeper (25×)
-    payload cut. Same shape as :func:`ivfpq_topk_indexed`: shared
-    :func:`_probe_cells` inverted-list semantics, optional
-    :func:`build_ivfpq_cell_codes` layout over the SQ8 index (the builder
-    is codes-generic — both PQ and SQ8 store ``codes`` as (id, codes))
-    with the same qualified-root + source-count staleness contract, exact
-    re-rank from the SQ8 vectors table. Warm-path escape hatches
-    (``cell_codes_verified``, pre-read ``stats`` = (mins, scales) from
-    :func:`_sq8_stats_at` of the resolved root): same contract as
-    :func:`ivfpq_topk_indexed` — only for callers whose verification is
-    keyed on corpus state. ``where`` composes attribute pre-filtering
-    with the cell pruning, as in :func:`ivfpq_topk_indexed`."""
-    ivf_root = index_root(spark, ivf_index_path)
-    sq8_root = index_root(spark, sq8_index_path)
-    # staleness gate FIRST, before the eager probe pays compute (same
-    # ordering contract as ivfpq_topk_indexed)
-    cc_root = None
-    if cell_codes_path is not None:
-        cc_root = index_root(spark, cell_codes_path)
-        if not cell_codes_verified:
-            reason = _cell_codes_stale(spark, cc_root, ivf_root, sq8_root)
-            if reason is not None:
-                raise ValueError(
-                    f"ivfsq8 cell-codes layout is STALE ({reason}) — "
-                    "rebuild with build_ivfpq_cell_codes(ivf, sq8, path)"
-                )
-    mins, scales = stats if stats is not None else _sq8_stats_at(spark, sq8_root)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
+    payload cut. The coarse stage, the staleness gate, the warm-path
+    escape hatches and ``where`` are :func:`_composed_candidates`' (the
+    :func:`build_ivfpq_cell_codes` layout is codes-generic: both PQ and
+    SQ8 store ``codes`` as (id, codes)); ``stats`` = (mins, scales) is the
+    pre-read :func:`_sq8_stats_at` of the resolved root; the re-rank reads
+    the SQ8 vectors table."""
+    root, stats, q, q_rows, cand = _composed_candidates(
+        _SQ8, spark, queries, ivf_index_path, sq8_index_path, id_col, vec_col,
+        nprobe, cell_codes_path, cell_codes_verified, stats, where,
     )
-    probed, cells, q_rows = _probe_cells(spark, q, ivf_root, nprobe)
-    # query side re-created LOCALLY from the probe's collected rows (r14):
-    # the scored join's broadcast build no longer re-executes the query
-    # scan — one fewer job per probe; qn is the same JVM norm() over the
-    # same doubles, so scores are bit-identical
-    q = F.broadcast(
-        spark.createDataFrame(
-            q_rows, T.StructType([q.schema["query_id"], q.schema["qv"]])
-        ).withColumn("qn", norm(F.col("qv")))
-    )
-    cand_codes = _cell_candidates(
-        spark, probed, cells, ivf_root, sq8_root, cc_root, where=where
-    )
-    scored = (
-        cand_codes.withColumn(
-            "rv", sq8_reconstruct(F.col("codes"), mins, scales)
-        )
-        .withColumn("rn", norm(F.col("rv")))
-        .join(q, "query_id")
-        .withColumn(
-            "sim",
-            F.try_divide(dot(F.col("qv"), F.col("rv")), F.col("qn") * F.col("rn")),
-        )
-    )
-    if rerank is None:
-        return _topk_by_sim(scored.drop("qv", "qn", "rv", "rn", "codes"), k)
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    cand2 = (
-        scored.withColumn("__r", F.row_number().over(wc))
-        .filter(F.col("__r") <= rerank)
-        .select("query_id", "neighbor_id", "qv")
-    )
-    cv = read_pinned(spark, f"{sq8_root}/vectors").select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv")
-    )
-    exact = cand2.join(cv, "neighbor_id").withColumn(
-        "sim", cosine(F.col("qv"), F.col("cv"))
-    )
-    return _topk_by_sim(exact.drop("qv", "cv"), k)
+    return _refine(_sq8_scored(q, cand, stats, q_rows), root, k, rerank)
 
 
 def hard_negative_topk(
@@ -2985,21 +2978,11 @@ def hard_negative_topk(
     membership — and therefore ranks — between Spark and a replaying
     oracle. Rounding moves the decision to a grid independent of the
     band constants; oracles must apply the same ``round(sim, 9)``."""
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-        )
+    c = _id_vec(corpus, id_col, vec_col, "neighbor_id", "cv")
+    scored = _pairs(_id_vec(queries, id_col, vec_col), c).withColumn(
+        "sim", cosine(F.col("qv"), F.col("cv"))
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-    )
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", cosine(F.col("qv"), F.col("cv")))
-        .filter((F.round("sim", 9) >= lo) & (F.round("sim", 9) < hi))
-    )
-    return _topk_by_sim(scored, k)
+    return _topk_by_sim(scored.filter(_in_band(F.col("sim"), lo, hi)), k)
 
 
 def hard_negative_topk_indexed(
@@ -3041,48 +3024,13 @@ def hard_negative_topk_indexed(
     compose the approximate stage with IVF cell pruning exactly as
     :func:`ivfsq8_topk_indexed` does for top-k search."""
     root = index_root(spark, sq8_index_path)
-    mins, scales = _sq8_stats_at(spark, root)
-    codes = read_pinned(spark, f"{root}/codes")
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            as_double(F.col(vec_col)).alias("qv"),
-        ).withColumn("qn", norm(F.col("qv")))
+    stats = _sq8_stats_at(spark, root)
+    cand = read_pinned(spark, f"{root}/codes").select(
+        F.col("id").alias("neighbor_id"), "codes"
     )
-    c = codes.select(
-        F.col("id").alias("neighbor_id"),
-        sq8_reconstruct(F.col("codes"), mins, scales).alias("rv"),
-    ).withColumn("rn", norm(F.col("rv")))
-    slack = _band_slack_col(band_slack, scales)
-    approx = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "asim",
-            F.try_divide(dot(F.col("qv"), F.col("rv")), F.col("qn") * F.col("rn")),
-        )
-        .filter(
-            (F.col("asim") >= F.lit(lo) - slack)
-            & (F.col("asim") < F.lit(hi) + slack)
-        )
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("asim").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        approx.withColumn("__r", F.row_number().over(wc))
-        .filter(F.col("__r") <= scan_k)
-        .select("query_id", "neighbor_id", "qv")
-    )
-    cv = read_pinned(spark, f"{root}/vectors").select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv")
-    )
-    exact = (
-        cand.join(cv, "neighbor_id")
-        .withColumn("sim", cosine(F.col("qv"), F.col("cv")))
-        .filter((F.round("sim", 9) >= lo) & (F.round("sim", 9) < hi))
-    )
-    return _topk_by_sim(exact.drop("qv", "cv"), k)
+    band = (lo, hi, band_slack)
+    scored = _sq8_scored(_id_vec(queries, id_col, vec_col), cand, stats, band=band)
+    return _refine(scored, root, k, scan_k, band)
 
 
 def hard_negative_topk_ivfsq8(
@@ -3115,65 +3063,12 @@ def hard_negative_topk_ivfsq8(
     :func:`hard_negative_topk` and the full-scan
     :func:`hard_negative_topk_indexed` are the recall ceilings, pinned
     relative to this in tests/test_llm.py)."""
-    ivf_root = index_root(spark, ivf_index_path)
-    sq8_root = index_root(spark, sq8_index_path)
-    cc_root = None
-    if cell_codes_path is not None:
-        cc_root = index_root(spark, cell_codes_path)
-        reason = _cell_codes_stale(spark, cc_root, ivf_root, sq8_root)
-        if reason is not None:
-            raise ValueError(
-                f"ivfsq8 cell-codes layout is STALE ({reason}) — "
-                "rebuild with build_ivfpq_cell_codes(ivf, sq8, path)"
-            )
-    mins, scales = _sq8_stats_at(spark, sq8_root)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
+    root, stats, q, q_rows, cand = _composed_candidates(
+        _SQ8, spark, queries, ivf_index_path, sq8_index_path, id_col, vec_col,
+        nprobe, cell_codes_path,
     )
-    probed, cells, q_rows = _probe_cells(spark, q, ivf_root, nprobe)
-    cand_codes = _cell_candidates(
-        spark, probed, cells, ivf_root, sq8_root, cc_root
-    )
-    # local re-creation of the collected query rows (see ivfsq8) — the
-    # band-scoring broadcast build skips the query-scan re-execution
-    qn = F.broadcast(
-        spark.createDataFrame(
-            q_rows, T.StructType([q.schema["query_id"], q.schema["qv"]])
-        ).withColumn("qn", norm(F.col("qv")))
-    )
-    slack = _band_slack_col(band_slack, scales)
-    approx = (
-        cand_codes.withColumn(
-            "rv", sq8_reconstruct(F.col("codes"), mins, scales)
-        )
-        .withColumn("rn", norm(F.col("rv")))
-        .join(qn, "query_id")
-        .withColumn(
-            "asim",
-            F.try_divide(dot(F.col("qv"), F.col("rv")), F.col("qn") * F.col("rn")),
-        )
-        .filter(
-            (F.col("asim") >= F.lit(lo) - slack)
-            & (F.col("asim") < F.lit(hi) + slack)
-        )
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("asim").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        approx.withColumn("__r", F.row_number().over(wc))
-        .filter(F.col("__r") <= scan_k)
-        .select("query_id", "neighbor_id", "qv")
-    )
-    cv = read_pinned(spark, f"{sq8_root}/vectors").select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv")
-    )
-    exact = (
-        cand.join(cv, "neighbor_id")
-        .withColumn("sim", cosine(F.col("qv"), F.col("cv")))
-        .filter((F.round("sim", 9) >= lo) & (F.round("sim", 9) < hi))
-    )
-    return _topk_by_sim(exact.drop("qv", "cv"), k)
+    band = (lo, hi, band_slack)
+    return _refine(_sq8_scored(q, cand, stats, q_rows, band), root, k, scan_k, band)
 
 
 # --------------------------------------------------------------------------
@@ -3350,14 +3245,8 @@ def mmr_rerank(
     import numpy as np
     import pandas as pd
 
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-        )
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-    )
+    q = F.broadcast(_id_vec(queries, id_col, vec_col))
+    cv = _id_vec(corpus, id_col, vec_col, "neighbor_id", "cv")
     cand = (
         candidates.select("query_id", "neighbor_id")
         .join(cv, "neighbor_id")  # candidate sliver only

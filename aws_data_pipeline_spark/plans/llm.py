@@ -455,7 +455,42 @@ def _warehouse_index_path(sf_dir: str, name: str) -> str:
     return str(root / f"{name}_{pathlib.Path(sf_dir).name}_{tag}")
 
 
-_SRC_COUNT_MEMO: dict = {}
+_APP_MEMO: dict = {}
+
+
+def _app_memo(
+    spark: SparkSession, scope: tuple, state, build, alive=None, release=None
+):
+    """The registry's ONE application-lifetime cache: source-table counts,
+    ensured index paths, resolved composed roots, the resident IVF/PQ
+    frames, SQ8 stats and BPE models all live here under one key and one
+    eviction rule. The key is (application id, ``scope``, ``state``):
+    ``scope`` names the cache and its parameters (differently
+    parameterized entries coexist), ``state`` what the value was built
+    from (a source table's :func:`_src_state`, so a regenerated corpus
+    misses instead of serving the old corpus's artifact).
+
+    - A warm hit is served only if ``alive(value)`` passes (a one-leaf
+      zone_exists probe on a memoized index path: an out-of-band deletion
+      flips no source state); otherwise it is rebuilt.
+    - A miss first evicts every entry of the same scope in this
+      application (superseded states, and a hit that failed ``alive``),
+      calling ``release(value)`` on each (unpersist: a superseded resident
+      frame would pin executor storage for the rest of the application),
+      and drops every other application's entries WITHOUT ``release``:
+      their storage died with their application, and a long-lived
+      multi-session driver process must not grow the memo without
+      bound."""
+    app = spark.sparkContext.applicationId
+    key = (app, scope, state)
+    if key in _APP_MEMO and (alive is None or alive(_APP_MEMO[key])):
+        return _APP_MEMO[key]
+    for old in [k for k in _APP_MEMO if k[0] != app or k[1] == scope]:
+        value = _APP_MEMO.pop(old)
+        if old[0] == app and release is not None:
+            release(value)
+    _APP_MEMO[key] = value = build()
+    return value
 
 
 def _src_state(
@@ -480,7 +515,7 @@ def _src_state(
     ``FileStatus`` precision). A rewrite that keeps the file count and
     total bytes and lands within the same mtime tick as the newest file
     it replaces goes unseen: the memoized count is served. The returned
-    state (what the index marker and :func:`_ensure_memo` key on) omits
+    state (what the index marker and :func:`_ensure_index`'s memo key on) omits
     the mtime, so a regeneration that keeps row count, file count and
     total bytes goes unseen by the index marker. Appends and resized
     regenerations change the state."""
@@ -489,22 +524,12 @@ def _src_state(
     n_files, n_bytes, max_mtime = zone_listing_state(
         spark, f"{sf_dir}/{table}.parquet"
     )
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table,
-        n_files,
-        n_bytes,
-        max_mtime,
+    total = _app_memo(
+        spark,
+        ("src_count", sf_dir, table),
+        (n_files, n_bytes, max_mtime),
+        lambda: T(spark, sf_dir, table).count(),  # footer metadata
     )
-    total = _SRC_COUNT_MEMO.get(key)
-    if total is None:
-        for old in [
-            k for k in _SRC_COUNT_MEMO if k[:3] == key[:3] or k[0] != key[0]
-        ]:
-            _SRC_COUNT_MEMO.pop(old)
-        total = T(spark, sf_dir, table).count()  # footer metadata
-        _SRC_COUNT_MEMO[key] = total
     return (total, n_files, n_bytes)
 
 
@@ -539,45 +564,6 @@ def _write_src_marker(
     spark.createDataFrame(
         [state], "src_total long, src_files long, src_bytes long"
     ).write.mode("overwrite").parquet(f"{idx}/src_meta")
-
-
-_ENSURE_MEMO: dict = {}
-
-
-def _ensure_memo(spark: SparkSession, sf_dir: str, tag: str, state, ensure):
-    """Application-lifetime memo for the build-once :func:`_ensure_index` —
-    the _composed_roots rule one layer down: once an index's disk state
-    has been ensured fresh for a given corpus state, later calls in the
-    same application skip the marker read and zone listings entirely
-    (each is 1-2 driver-side Spark jobs — pure fixed overhead on every
-    warm indexed probe). ``state`` must be the caller's
-    :func:`_src_state` of the index's source table, the same probe the
-    DISK marker records, so the memo can never outlive what the marker
-    would detect: a corpus change flips the key, evicts the superseded
-    entry (params in ``tag``, the coexistence rule), and re-runs
-    ``ensure`` — which re-reads the disk marker and rebuilds if stale.
-
-    Two freshness holes _src_state alone can't close (r9 advisory): an
-    OUT-OF-BAND index deletion (anything not flipping the source corpus)
-    would leave a warm hit serving a path that no longer exists, so a
-    warm hit is served only after a one-leaf :func:`zone_exists` probe on
-    the memoized path — a miss falls back to re-``ensure``; and entries
-    keyed by DEAD applications (a long-lived multi-session driver
-    process) would accumulate forever, so every insert first evicts all
-    other-application keys."""
-    from aws_data_pipeline_spark.sources.parquet import zone_exists
-
-    key = (spark.sparkContext.applicationId, sf_dir, tag, state)
-    hit = _ENSURE_MEMO.get(key)
-    if hit is not None and isinstance(hit, str) and not zone_exists(spark, hit):
-        _ENSURE_MEMO.pop(key)
-    if key not in _ENSURE_MEMO:
-        for old in [
-            k for k in _ENSURE_MEMO if k[:3] == key[:3] or k[0] != key[0]
-        ]:
-            _ENSURE_MEMO.pop(old)
-        _ENSURE_MEMO[key] = ensure()
-    return _ENSURE_MEMO[key]
 
 
 class _IndexSpec(NamedTuple):
@@ -663,7 +649,7 @@ def _ensure_index(spark: SparkSession, sf_dir: str, spec: _IndexSpec) -> str:
     differently-parameterized indexes coexist. Build and append complete
     before the marker write, so a crash mid-way reads as stale and the
     re-run redoes both (builds overwrite, appends are idempotent)."""
-    from aws_data_pipeline_spark.sources.parquet import index_has
+    from aws_data_pipeline_spark.sources.parquet import index_has, zone_exists
 
     idx = _warehouse_index_path(sf_dir, spec.name)
     state = _src_state(spark, sf_dir, spec.table)
@@ -680,7 +666,10 @@ def _ensure_index(spark: SparkSession, sf_dir: str, spec: _IndexSpec) -> str:
             _write_src_marker(spark, idx, state)
         return idx
 
-    return _ensure_memo(spark, sf_dir, spec.name, state, _do)
+    return _app_memo(
+        spark, ("ensure", sf_dir, spec.name), state, _do,
+        alive=lambda path: zone_exists(spark, path),
+    )
 
 
 @register("incremental_duplicate_spans", sql=None)
@@ -927,25 +916,15 @@ def embedding_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # accumulation order vary run to run), so the resident path loads the
 # trained centroids from disk rather than retraining — that is what makes
 # the resident and persisted search paths row-for-row comparable.
-_IVF_INDEX: dict[tuple, tuple[list[list[float]], DataFrame]] = {}
-
-
 def _ivf_index(spark: SparkSession, sf_dir: str, n_cells: int, seed: int = 42):
     # the source STATE (row count + file fingerprint, same probe the disk
-    # marker uses) is part of the cache KEY: a regenerated corpus under
-    # the same sf_dir must invalidate the resident copy too, or the
-    # resident and persisted paths would diverge within one application
-    # after _ensure_index rebuilds the disk index
-    state = _src_state(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, n_cells, seed, state)
-    if key not in _IVF_INDEX:
-        # evict superseded entries for the same corpus+params (the
-        # _pq_corpus rule): a regenerated corpus changes `state`, and the
-        # stale resident inverted file would otherwise stay persisted
-        for old in [k for k in _IVF_INDEX if k[:4] == key[:4]]:
-            _IVF_INDEX.pop(old)[1].unpersist()
-        from aws_data_pipeline_spark.sources.parquet import index_root
+    # marker uses) keys the memo: a regenerated corpus under the same
+    # sf_dir must invalidate the resident copy too (and unpersist the
+    # superseded one), or the resident and persisted paths would diverge
+    # within one application after _ensure_index rebuilds the disk index
+    from aws_data_pipeline_spark.sources.parquet import index_root
 
+    def build():
         idx = index_root(
             spark, _ensure_index(spark, sf_dir, _ivf_index_spec(n_cells, seed))
         )
@@ -963,8 +942,13 @@ def _ivf_index(spark: SparkSession, sf_dir: str, n_cells: int, seed: int = 42):
         # the resident path identical to the indexed one by construction
         assigned = read_pinned(spark, f"{idx}/corpus").persist()
         assigned.count()  # materialize the resident copy eagerly
-        _IVF_INDEX[key] = (cents, assigned)
-    return _IVF_INDEX[key]
+        return cents, assigned
+
+    return _app_memo(
+        spark, ("ivf_resident", sf_dir, n_cells, seed),
+        _src_state(spark, sf_dir, "embeddings"), build,
+        release=lambda hit: hit[1].unpersist(),
+    )
 
 
 @register("embedding_ann_ivf", sql=None, demoted=True)
@@ -1038,34 +1022,28 @@ def embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ann_topk_lsh(queries, e, k=5, n_planes=4)
 
 
-_PQ_CACHE: dict = {}
-
-
 def _pq_corpus(spark: SparkSession, sf_dir: str, m: int = 8, ks: int = 16):
-    """Resident PQ artifacts per (app, sf_dir, params, source state),
-    READ from the persisted index (single source of truth for codebooks
-    AND codes — the _ivf_index rule): the disk index is built/appended
-    once per corpus by _ensure_index, the resident copy just loads its
-    codebooks and persists its code rows, so the resident and indexed
-    search paths return identical rows by construction. Source state in
-    the key invalidates on corpus regeneration."""
-    state = _src_state(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, m, ks, state)
-    if key not in _PQ_CACHE:
-        # evict superseded entries for the same corpus+params first: a
-        # regenerated corpus changes `state`, and the stale entry's
-        # persisted codes would otherwise pin executor storage for the
-        # rest of the application
-        for old in [k for k in _PQ_CACHE if k[:4] == key[:4]]:
-            _PQ_CACHE.pop(old)[1].unpersist()
-        from aws_data_pipeline_spark.sources.parquet import index_root
+    """Resident PQ artifacts per (sf_dir, params, source state), READ from
+    the persisted index (single source of truth for codebooks AND codes —
+    the _ivf_index rule): the disk index is built/appended once per
+    corpus by _ensure_index, the resident copy just loads its codebooks
+    and persists its code rows, so the resident and indexed search paths
+    return identical rows by construction. A superseded entry's codes are
+    unpersisted on eviction."""
+    from aws_data_pipeline_spark.sources.parquet import index_root
 
+    def build():
         idx = index_root(spark, _ensure_index(spark, sf_dir, _pq_index_spec(m, ks)))
         books = similarity.read_pq_codebooks(spark, idx)
         codes = read_pinned(spark, f"{idx}/codes").persist()
         codes.count()  # materialize eagerly
-        _PQ_CACHE[key] = (books, codes)
-    return _PQ_CACHE[key]
+        return books, codes
+
+    return _app_memo(
+        spark, ("pq_resident", sf_dir, m, ks),
+        _src_state(spark, sf_dir, "embeddings"), build,
+        release=lambda hit: hit[1].unpersist(),
+    )
 
 
 @register("embedding_ann_pq", sql=None, demoted=True)
@@ -1129,56 +1107,44 @@ def _ensure_ivfpq_cell_codes(
     return cc
 
 
-_CC_ROOTS: dict = {}
-
-
-def _composed_roots(spark: SparkSession, sf_dir: str, tag: str, ensure,
-                    artifacts=None):
+def _composed_roots(spark: SparkSession, sf_dir: str, tag: str, ensure, artifacts):
     """Resolved (coarse_root, codes_root, cell_codes_root) triple per
-    (application, sf_dir, params-tag, source state) — the _PQ_CACHE rule
-    applied to the composed probes' fixed per-call overhead (r8 verdict
-    item 4): a repeated probe against an unchanged corpus skips both
-    ensure chains (src_meta marker reads) and the cell-codes currency
-    check (meta read + two footer counts), paying only the footer-count +
-    FS-listing state probe that keys the cache. Roots are stored RESOLVED
-    (committed version dirs, index_root is identity on them), so warm
-    probes serve exactly the builds the currency check verified; the
-    probe's own staleness gate still runs — it compares the layout meta
-    against these same resolved roots, so it stays green by construction
-    and keeps the loud-failure contract for callers outside this cache.
-    A corpus change flips the state key, evicts the superseded entry, and
-    re-runs ``ensure`` (which rebuilds whatever the markers say is stale).
-    ``ensure`` must return the three UNRESOLVED index paths.
+    (sf_dir, params-tag, source state) in the application memo
+    (:func:`_app_memo`), applied to the composed probes' fixed per-call
+    overhead (r8 verdict item 4): a repeated probe against an unchanged
+    corpus skips both ensure chains (src_meta marker reads) and the
+    cell-codes currency check (meta read + two footer counts), paying
+    only the footer-count + FS-listing state probe that keys the memo.
+    Roots are stored RESOLVED (committed version dirs, index_root is
+    identity on them), so warm probes serve exactly the builds the
+    currency check verified; the probe's own staleness gate still runs —
+    it compares the layout meta against these same resolved roots, so it
+    stays green by construction and keeps the loud-failure contract for
+    callers outside this memo. A corpus change flips the state key and
+    re-runs ``ensure`` (which rebuilds whatever the markers say is
+    stale). ``ensure`` must return the three UNRESOLVED index paths.
 
     Warm hits are served only after a one-leaf :func:`zone_exists` probe
     on each cached resolved root (r9 advisory): an out-of-band index
     deletion or rebuild doesn't flip ``_src_state``, and without the
     probe a warm probe would sail past the loud staleness gate
     (``cell_codes_verified=True``) into raw parquet path errors — a probe
-    miss evicts and re-``ensure``s instead. Inserts also evict every
-    other-application key, so a long-lived multi-corpus driver process
-    can't grow the memo without bound.
+    miss re-``ensure``s instead.
 
-    ``artifacts`` (optional): callback over the resolved roots returning
-    small driver-side index artifacts (PQ codebooks, SQ8 stats — a few KB)
-    to cache alongside, so warm probes also skip those collects. Returns
+    ``artifacts``: callback over the resolved roots returning small
+    driver-side index artifacts (PQ codebooks, SQ8 stats — a few KB) to
+    memoize alongside, so warm probes also skip those collects. Returns
     (roots, artifacts_value)."""
     from aws_data_pipeline_spark.sources.parquet import index_root, zone_exists
 
-    state = _src_state(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, tag, state)
-    hit = _CC_ROOTS.get(key)
-    if hit is not None and not all(zone_exists(spark, r) for r in hit[0]):
-        _CC_ROOTS.pop(key)  # out-of-band deletion/rebuild: re-ensure
-    if key not in _CC_ROOTS:
-        # evict superseded entries for the same corpus+params (the
-        # _PQ_CACHE rule, `state` flips on corpus regeneration) AND every
-        # dead application's keys (unbounded growth otherwise)
-        for old in [k for k in _CC_ROOTS if k[:3] == key[:3] or k[0] != key[0]]:
-            _CC_ROOTS.pop(old)
+    def build():
         roots = tuple(index_root(spark, p) for p in ensure())
-        _CC_ROOTS[key] = (roots, artifacts(roots) if artifacts else None)
-    return _CC_ROOTS[key]
+        return roots, artifacts(roots)
+
+    return _app_memo(
+        spark, ("composed", sf_dir, tag), _src_state(spark, sf_dir, "embeddings"),
+        build, alive=lambda hit: all(zone_exists(spark, r) for r in hit[0]),
+    )
 
 
 @register("embedding_ann_ivfpq", sql=None)
@@ -1321,7 +1287,14 @@ def embedding_ann_sq8_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.sq8_topk_indexed(spark, queries, idx, k=5, rerank=40)
 
 
-_SQ8_STATS: dict = {}
+def _sq8_stats(spark: SparkSession, sf_dir: str, e: DataFrame):
+    """Train-once SQ8 stats of the full corpus ``e`` (the _pq_corpus
+    discipline): 2 doubles per dimension, keyed on source state so corpus
+    regeneration invalidates; repeated probes skip the min/max pass."""
+    return _app_memo(
+        spark, ("sq8_stats", sf_dir), _src_state(spark, sf_dir, "embeddings"),
+        lambda: similarity.sq8_train_stats(e),
+    )
 
 
 @register(
@@ -1370,23 +1343,12 @@ def embedding_ann_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     Demoted r11 (hash-green r8/r10; full oracle stays in the pytest
     replica) to seat ann_recall_sq8 under the cap: the promoted
     evaluation entry runs THIS resident sq8_topk chain verbatim (same
-    _SQ8_STATS cache, same ranking) plus the exact baseline — a strict
+    _sq8_stats memo, same ranking) plus the exact baseline — a strict
     superset of this entry's driver signal; embedding_ann_sq8_filtered
     (also promoted r11) keeps the persisted-SQ8 probe oracled."""
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
-    # train-once cache (the _pq_corpus discipline): stats are 2 doubles
-    # per dimension, keyed by source state so corpus regeneration
-    # invalidates; repeated probes skip the min/max pass
-    state = _src_state(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, state)
-    if key not in _SQ8_STATS:
-        # evict superseded entries for the same corpus only (the _PQ_CACHE
-        # rule): a session alternating sf dirs keeps each one's stats
-        for old in [k for k in _SQ8_STATS if k[:2] == key[:2]]:
-            _SQ8_STATS.pop(old)
-        _SQ8_STATS[key] = similarity.sq8_train_stats(e)
-    mins, scales = _SQ8_STATS[key]
+    mins, scales = _sq8_stats(spark, sf_dir, e)
     return similarity.sq8_topk(queries, e, k=5, mins=mins, scales=scales)
 
 
@@ -2723,22 +2685,22 @@ def _bpe_round_ctes(n_merges: int) -> str:
 
 _BPE_N_MERGES = 16
 
-# trained-model cache, same pattern as _IVF_INDEX: BPE training is the
-# build-once artifact (16 sequential rounds); both registered queries and
-# bench reps share one fit per (app, sf_dir, n_merges). The vocab frame
-# inside the model is already persisted by learn_bpe.
-_BPE_MODELS: dict[tuple, object] = {}
-
 
 def _bpe_model(spark: SparkSession, sf_dir: str, n_merges: int):
+    """The trained BPE model per (sf_dir, n_merges, documents state):
+    training is the build-once artifact (``n_merges`` sequential rounds),
+    shared by the three BPE registry queries and every bench rep. The
+    source state in the key makes a regenerated ``documents`` table
+    retrain instead of serving the old merges, and the superseded model's
+    persisted vocab is unpersisted."""
     from aws_data_pipeline_spark.operators import bpe
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_merges)
-    if key not in _BPE_MODELS:
-        _BPE_MODELS[key] = bpe.learn_bpe(
-            T(spark, sf_dir, "documents"), n_merges=n_merges
-        )
-    return _BPE_MODELS[key]
+    return _app_memo(
+        spark, ("bpe", sf_dir, n_merges), _src_state(spark, sf_dir, "documents"),
+        lambda: bpe.learn_bpe(T(spark, sf_dir, "documents"), n_merges=n_merges),
+        release=lambda model: model.vocab.unpersist(),
+    )
+
 
 _BPE_MERGES_SQL = (
     "WITH "
@@ -3571,13 +3533,7 @@ def ann_recall_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     evidence/ANN_COMPARISON.md; cap held at 100."""
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
-    state = _src_state(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, state)
-    if key not in _SQ8_STATS:
-        for old in [kk for kk in _SQ8_STATS if kk[:2] == key[:2]]:
-            _SQ8_STATS.pop(old)
-        _SQ8_STATS[key] = similarity.sq8_train_stats(e)
-    mins, scales = _SQ8_STATS[key]
+    mins, scales = _sq8_stats(spark, sf_dir, e)
     truth = similarity.brute_force_topk(queries, e, k=5)
     res = similarity.sq8_topk(queries, e, k=5, mins=mins, scales=scales)
     return similarity.retrieval_metrics(res, truth, k=5)

@@ -352,14 +352,15 @@ def test_bigram_logprob_ranks_formulaic_below_rare(spark):
 def test_bpe_model_trains_once_across_registry_queries(spark, sf_dir, monkeypatch):
     """The three BPE-family registry queries (bpe_merges, bpe_token_counts,
     bpe_fertility_by_lang) must share ONE trained model per (corpus, params)
-    — the _BPE_MODELS cache contract. A refactor that silently retrains the
+    — the _bpe_model memo contract. A refactor that silently retrains the
     16-round sequential fold per query would triple the dominant cost, so
     pin it: learn_bpe may be invoked at most once across all three."""
     from aws_data_pipeline_spark.operators import bpe
     from aws_data_pipeline_spark.plans import llm, load_registry
 
     reg = load_registry()
-    llm._BPE_MODELS.clear()
+    for key in [k for k in llm._APP_MEMO if k[1][0] == "bpe"]:
+        del llm._APP_MEMO[key]
     calls = {"n": 0}
     real = bpe.learn_bpe
 

@@ -4,6 +4,8 @@ SimHash determinism, multimodal stub determinism."""
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from aws_data_pipeline_spark.catalog import load
@@ -1836,24 +1838,34 @@ def test_strip_accents_semantics(spark):
     assert got[4] is None
 
 
+def _composed_memo(L) -> dict:
+    """The _composed_roots entries of the registry's application memo."""
+    return {k: v for k, v in L._APP_MEMO.items() if k[1][0] == "composed"}
+
+
+def _drop_memo_scope(L, kind: str) -> None:
+    for k in [k for k in L._APP_MEMO if k[1][0] == kind]:
+        del L._APP_MEMO[k]
+
+
 def test_composed_roots_warm_path_identity(spark, sf_dir):
-    """The _composed_roots cache (r8 verdict item 4): a second probe
-    against an unchanged corpus hits the resolved-roots cache — no
+    """The _composed_roots memo (r8 verdict item 4): a second probe
+    against an unchanged corpus hits the resolved-roots entry — no
     re-ensure, no currency re-check — and returns rows identical to the
-    cold probe. The cache stores RESOLVED version dirs and keys on source
-    state, so a state flip would evict (the _PQ_CACHE rule)."""
+    cold probe. The entry stores RESOLVED version dirs and keys on source
+    state, so a state flip would evict (the _app_memo rule)."""
     from aws_data_pipeline_spark.plans import llm as L
     from aws_data_pipeline_spark.plans import load_registry
 
     reg = load_registry()
-    L._CC_ROOTS.clear()
+    _drop_memo_scope(L, "composed")
     cold = {
         tuple(r)
         for r in reg["embedding_ann_ivfpq"].spark_fn(spark, sf_dir).collect()
     }
-    assert len(L._CC_ROOTS) == 1
-    (key, (roots, books)) = next(iter(L._CC_ROOTS.items()))
-    assert key[1] == sf_dir and key[2] == "ivfpq_c8_m8_ks16"
+    assert len(_composed_memo(L)) == 1
+    (key, (roots, books)) = next(iter(_composed_memo(L).items()))
+    assert key[1] == ("composed", sf_dir, "ivfpq_c8_m8_ks16")
     # roots are stored resolved: index_root is identity on each; the
     # cached artifact is the PQ codebooks (m lists of ks centroids)
     from aws_data_pipeline_spark.sources.parquet import index_root
@@ -1862,27 +1874,27 @@ def test_composed_roots_warm_path_identity(spark, sf_dir):
     assert len(books) == 8 and all(len(b) == 16 for b in books)
 
     # poison the ensure path: a warm probe must not call it
-    sentinel = L._CC_ROOTS.copy()
+    sentinel = _composed_memo(L)
     warm = {
         tuple(r)
         for r in reg["embedding_ann_ivfpq"].spark_fn(spark, sf_dir).collect()
     }
     assert warm == cold and len(cold) > 0
-    assert L._CC_ROOTS == sentinel  # same entry, no rebuild/eviction
+    assert _composed_memo(L) == sentinel  # same entry, no rebuild/eviction
 
     # simulate a corpus state flip: the live key is gone (state changed),
     # a superseded entry for the same corpus+tag remains — the next probe
     # misses, evicts the superseded entry, and re-ensures under the new
-    # state (the _PQ_CACHE eviction rule; eviction runs on miss)
-    stale_key = (key[0], key[1], key[2], ("superseded",))
-    L._CC_ROOTS.clear()
-    L._CC_ROOTS[stale_key] = (roots, books)
+    # state (the _app_memo eviction rule; eviction runs on miss)
+    stale_key = (key[0], key[1], ("superseded",))
+    _drop_memo_scope(L, "composed")
+    L._APP_MEMO[stale_key] = (roots, books)
     refreshed = {
         tuple(r)
         for r in reg["embedding_ann_ivfpq"].spark_fn(spark, sf_dir).collect()
     }
-    assert stale_key not in L._CC_ROOTS
-    assert L._CC_ROOTS[key][0] == roots  # re-ensure found the same builds
+    assert stale_key not in L._APP_MEMO
+    assert L._APP_MEMO[key][0] == roots  # re-ensure found the same builds
     assert refreshed == cold
 
 
@@ -1900,28 +1912,28 @@ def test_composed_roots_out_of_band_deletion_reensures(spark, sf_dir):
     from aws_data_pipeline_spark.plans import load_registry
 
     reg = {**load_registry(), **DEMOTED}  # tier-agnostic (rotations move it)
-    L._CC_ROOTS.clear()
+    _drop_memo_scope(L, "composed")
     cold = {
         tuple(r)
         for r in reg["embedding_ann_ivfsq8"].spark_fn(spark, sf_dir).collect()
     }
-    (key, (roots, stats)) = next(iter(L._CC_ROOTS.items()))
+    (key, (roots, stats)) = next(iter(_composed_memo(L).items()))
     # out-of-band deletion of the cell-codes index (markers included)
     shutil.rmtree(re.sub(r"/v\d+$", "", roots[2]))
     # and a fake dead-application entry that must not survive the insert
-    dead = ("application_dead_0000", key[1], key[2], key[3])
-    L._CC_ROOTS[dead] = (("gone",), None)
+    dead = ("application_dead_0000", key[1], key[2])
+    L._APP_MEMO[dead] = (("gone",), None)
     warm = {
         tuple(r)
         for r in reg["embedding_ann_ivfsq8"].spark_fn(spark, sf_dir).collect()
     }
     assert warm == cold  # re-ensured and rebuilt, not a path error
-    assert dead not in L._CC_ROOTS
-    assert key in L._CC_ROOTS
+    assert dead not in L._APP_MEMO
+    assert key in L._APP_MEMO
 
 
 def test_ensure_memo_out_of_band_deletion_reensures(spark, sf_dir):
-    """_ensure_memo's warm hit carries the same zone_exists freshness
+    """_ensure_index's memo hit carries the same zone_exists freshness
     probe: out-of-band deletion of a memoized build-once index triggers
     re-ensure (rebuild) on the next call instead of a missing-path read."""
     import shutil
@@ -1929,13 +1941,129 @@ def test_ensure_memo_out_of_band_deletion_reensures(spark, sf_dir):
     from aws_data_pipeline_spark.plans import llm as L
 
     idx = L._ensure_index(spark, sf_dir, L._KGRAM_INDEX)
-    assert any(isinstance(v, str) and v == idx for v in L._ENSURE_MEMO.values())
+    scope = ("ensure", sf_dir, L._KGRAM_INDEX.name)
+    assert any(k[1] == scope and v == idx for k, v in L._APP_MEMO.items())
     shutil.rmtree(idx)
     again = L._ensure_index(spark, sf_dir, L._KGRAM_INDEX)
     assert again == idx
     from aws_data_pipeline_spark.sources.parquet import zone_exists
 
     assert zone_exists(spark, f"{idx}/src_meta")  # rebuilt, marker restored
+
+
+def test_app_memo_eviction_rule():
+    """_app_memo's one rule over every registry cache: a dead
+    application's entry is dropped WITHOUT release (its storage died with
+    it), a superseded same-scope entry of the live application is
+    released exactly once, other scopes coexist, and a warm hit whose
+    ``alive`` check fails is rebuilt."""
+    from types import SimpleNamespace
+
+    from aws_data_pipeline_spark.plans import llm as L
+
+    def app(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    saved = dict(L._APP_MEMO)
+    L._APP_MEMO.clear()
+    released = []
+    try:
+        live, dead = app("app-live"), app("app-dead")
+        L._app_memo(dead, ("t", 1), "s0", lambda: "dead-v", release=released.append)
+        assert L._app_memo(live, ("t", 1), "s1", lambda: "v1") == "v1"
+        assert L._app_memo(live, ("u",), "s1", lambda: "other") == "other"
+        got = L._app_memo(
+            live, ("t", 1), "s2", lambda: "v2", release=released.append
+        )
+        assert got == "v2"
+        assert released == ["v1"]  # superseded: released once; dead: never
+        assert set(L._APP_MEMO) == {
+            ("app-live", ("t", 1), "s2"), ("app-live", ("u",), "s1")
+        }
+        # warm hit served while alive, rebuilt (and released) once not
+        assert L._app_memo(live, ("t", 1), "s2", lambda: "x", alive=bool) == "v2"
+        got = L._app_memo(
+            live, ("t", 1), "s2", lambda: "v3", alive=lambda v: False,
+            release=released.append,
+        )
+        assert got == "v3" and released == ["v1", "v2"]
+        assert L._APP_MEMO[("app-live", ("t", 1), "s2")] == "v3"
+    finally:
+        L._APP_MEMO.clear()
+        L._APP_MEMO.update(saved)
+
+
+@pytest.fixture(scope="module")
+def _refine_case_paths(spark, sf_dir):
+    """The registry's ensured sf0.001 indexes (8 IVF cells) plus both
+    cell-codes layouts, and the exact top-5 they must reproduce."""
+    from aws_data_pipeline_spark.plans import llm as L
+
+    ivf = L._ensure_index(spark, sf_dir, L._ivf_index_spec(n_cells=8))
+    pq = L._ensure_index(spark, sf_dir, L._pq_index_spec(m=8, ks=16))
+    (_, sq8, sq8_cc), _ = L._ivfsq8_roots(spark, sf_dir)
+    e = load(spark, sf_dir, "embeddings")
+    q = e.filter(F.col("vec_id") < 10)
+    truth = sorted(
+        tuple(r) for r in similarity.brute_force_topk(q, e, k=5).collect()
+    )
+    return {
+        "q": q, "n": e.count(), "truth": truth, "ivf": ivf, "pq": pq,
+        "sq8": sq8, "pq_cc": L._ensure_ivfpq_cell_codes(spark, sf_dir, ivf, pq),
+        "sq8_cc": sq8_cc,
+    }
+
+
+@pytest.mark.parametrize(
+    "case", ["pq", "sq8", "ivfpq", "ivfpq_cc", "ivfsq8", "ivfsq8_cc"]
+)
+def test_shared_refine_path_full_rerank_equals_brute_force(
+    spark, _refine_case_paths, case
+):
+    """Every quantized and IVF-composed search ends in the one shared
+    refine step. With every cell probed (nprobe = n_cells = 8) and
+    ``rerank`` >= the corpus size, each candidate is re-scored by exact
+    cosine, so each search, through the two-index path and through the
+    cell-codes layout alike, returns brute_force_topk's rows."""
+    p = _refine_case_paths
+    S = similarity
+    rerank = p["n"]
+    family, _, cc = case.partition("_")
+    if family in ("pq", "sq8"):
+        probe = S.pq_topk_indexed if family == "pq" else S.sq8_topk_indexed
+        got = probe(spark, p["q"], p[family], k=5, rerank=rerank)
+    else:
+        codes = family[3:]
+        probe = S.ivfpq_topk_indexed if codes == "pq" else S.ivfsq8_topk_indexed
+        got = probe(
+            spark, p["q"], p["ivf"], p[codes], k=5, nprobe=8, rerank=rerank,
+            cell_codes_path=p[f"{codes}_cc"] if cc else None,
+        )
+    assert sorted(tuple(r) for r in got.collect()) == p["truth"]
+
+
+def test_bpe_model_retrains_on_regenerated_documents(spark, tmp_path):
+    """_bpe_model keys on the documents table's source state: a
+    regenerated table in the same application trains a new model instead
+    of serving the old merges, and the superseded model's persisted vocab
+    is released."""
+    from aws_data_pipeline_spark.plans import llm as L
+
+    sf = str(tmp_path)
+
+    def write(texts):
+        spark.createDataFrame(
+            list(enumerate(texts)), "doc_id long, text string"
+        ).coalesce(1).write.mode("overwrite").parquet(f"{sf}/documents.parquet")
+
+    write(["aa aa aa ab", "aa ab ab", "aa aa"])
+    first = L._bpe_model(spark, sf, 2)
+    assert L._bpe_model(spark, sf, 2) is first  # warm hit, no retrain
+    assert first.vocab.is_cached
+    write(["xyz xyz xyz qq xyz", "xyz qq qq qq", "xyz xyz xyz xyz", "qq"])
+    second = L._bpe_model(spark, sf, 2)
+    assert second.merges != first.merges
+    assert not first.vocab.is_cached
 
 
 def test_choose_ivfpq_params_rules():
@@ -2927,7 +3055,7 @@ def test_src_state_memo_recounts_on_content_change(spark, tmp_path):
     without a Spark action; any append/rewrite flips the key and
     re-counts — so the memo can never outlive what the staleness marker
     records."""
-    from aws_data_pipeline_spark.plans.llm import _SRC_COUNT_MEMO, _src_state
+    from aws_data_pipeline_spark.plans.llm import _APP_MEMO, _src_state
 
     sf = str(tmp_path)
     spark.range(5).select(F.col("id").alias("doc_id")).write.parquet(
@@ -2935,8 +3063,8 @@ def test_src_state_memo_recounts_on_content_change(spark, tmp_path):
     )
     s1 = _src_state(spark, sf, "documents")
     assert s1[0] == 5
-    hits = [k for k in _SRC_COUNT_MEMO if k[1] == sf]
-    assert len(hits) == 1 and _SRC_COUNT_MEMO[hits[0]] == 5
+    hits = [k for k in _APP_MEMO if k[1] == ("src_count", sf, "documents")]
+    assert len(hits) == 1 and _APP_MEMO[hits[0]] == 5
     assert _src_state(spark, sf, "documents") == s1  # memo hit, same value
     spark.range(5).select(F.col("id").alias("doc_id")).write.mode(
         "append"
