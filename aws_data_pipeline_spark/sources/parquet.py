@@ -154,6 +154,17 @@ def artifact_memo(spark: SparkSession, path: str, build):
     return _ARTIFACT_MEMO[key]
 
 
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(jvm, Hadoop ``Path``, its ``FileSystem``) for ``path`` — the one
+    place the storage layer acquires a filesystem. ``Path`` parsing (not
+    ``URI.create``) accepts spaces and other characters a raw URI
+    rejects, and resolves the scheme the same way Spark's own readers
+    and writers do."""
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    return jvm, jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
 def qualified_path(spark: SparkSession, path: str) -> str:
     """Fully-qualified URI string for ``path`` (scheme + authority +
     absolute form) — the canonical spelling for STORING or COMPARING path
@@ -161,9 +172,37 @@ def qualified_path(spark: SparkSession, path: str) -> str:
     spellings of one location must compare equal, or a consumer checking
     "was this derived from THAT index?" spuriously mismatches (the same
     reason :func:`zone_exists` qualifies before prefix-slicing)."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    _, jpath, fs = _hadoop_fs(spark, path)
     return fs.makeQualified(jpath).toString()
+
+
+def _walk_files(spark: SparkSession, path: str, committed: bool = True):
+    """Yield (path-relative name, ``FileStatus``) for the files under
+    ``path`` from ONE recursive listing; nothing when ``path`` is absent.
+    With ``committed`` (the default) only committed data files are
+    yielded: a file under any ``_``/``.``-prefixed component is
+    uncommitted (``_temporary``), a commit marker (``_SUCCESS``), a
+    checksum (``.crc``) or a metadata tree, and never counts as data.
+
+    The base is qualified BEFORE the prefix slice: listFiles statuses
+    come back fully qualified, so for a relative ``path`` an unqualified
+    base would slice mid-path and a directory holding only
+    ``_temporary`` droppings could pass as data — the wedge
+    :func:`zone_exists` exists to prevent. Lazy, so a caller can stop at
+    the first file."""
+    _, jpath, fs = _hadoop_fs(spark, path)
+    if not fs.exists(jpath):
+        return
+    qpath = fs.makeQualified(jpath)
+    base = qpath.toUri().getPath().rstrip("/")
+    it = fs.listFiles(qpath, True)
+    while it.hasNext():
+        st = it.next()
+        rel = st.getPath().toUri().getPath()[len(base) :].lstrip("/")
+        if not committed or not any(
+            part.startswith(("_", ".")) for part in rel.split("/")
+        ):
+            yield rel, st
 
 
 def zone_exists(spark: SparkSession, path: str) -> bool:
@@ -185,25 +224,7 @@ def zone_exists(spark: SparkSession, path: str) -> bool:
     failures, silently disabling cross-run dedup and appending duplicates.
     Only genuine absence short-circuits; every other read error propagates.
     """
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return False
-    # Qualify BEFORE computing the prefix base: listFiles statuses come
-    # back fully qualified, so for a relative zone path an unqualified
-    # base would slice mid-path and a directory holding only _temporary
-    # droppings could probe true — the exact wedge this probe prevents.
-    qpath = fs.makeQualified(jpath)
-    base = qpath.toUri().getPath().rstrip("/")
-    it = fs.listFiles(qpath, True)
-    while it.hasNext():
-        rel = it.next().getPath().toUri().getPath()[len(base):]
-        if not any(
-            part.startswith(("_", ".")) for part in rel.split("/") if part
-        ):
-            return True
-    return False
+    return next(_walk_files(spark, path), None) is not None
 
 
 def zone_fingerprint(spark: SparkSession, path: str) -> tuple[int, int]:
@@ -229,28 +250,11 @@ def zone_listing_state(spark: SparkSession, path: str) -> tuple[int, int, int]:
     memo keyed on this triple can never serve a value the underlying
     files no longer have. Returns (0, 0, 0) for a missing/data-free
     zone."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return (0, 0, 0)
-    qpath = fs.makeQualified(jpath)
-    base = qpath.toUri().getPath().rstrip("/")
-    n_files = 0
-    n_bytes = 0
-    max_mtime = 0
-    it = fs.listFiles(qpath, True)
-    while it.hasNext():
-        st = it.next()
-        rel = st.getPath().toUri().getPath()[len(base):]
-        if not any(
-            part.startswith(("_", ".")) for part in rel.split("/") if part
-        ):
-            n_files += 1
-            n_bytes += st.getLen()
-            mt = st.getModificationTime()
-            if mt > max_mtime:
-                max_mtime = mt
+    n_files = n_bytes = max_mtime = 0
+    for _, st in _walk_files(spark, path):
+        n_files += 1
+        n_bytes += st.getLen()
+        max_mtime = max(max_mtime, st.getModificationTime())
     return (n_files, n_bytes, max_mtime)
 
 
@@ -265,36 +269,40 @@ def zone_listing_state(spark: SparkSession, path: str) -> tuple[int, int, int]:
 # wins; no marker at all means the unversioned layout (fresh builds write
 # sub-tables directly under ``path``). A crash mid-rebuild leaves the old
 # version fully intact and still being served; re-running the rebuild
-# writes a new candidate directory. ``_ptr`` and ``v<N>`` internals are
-# ``_``-invisible to :func:`zone_exists` probes of ``path`` itself only
-# via the marker dir; version DATA dirs are plain names, so existence
-# checks must go through :func:`index_has`, not raw sub-paths.
+# writes a new candidate directory. Only the ``_ptr`` marker directory is
+# hidden from a :func:`zone_exists` probe of ``path``; the ``v<N>``
+# version directories are plain names whose data files such a probe
+# counts. Probe a sub-table through :func:`index_has`, which resolves the
+# active root, never through a raw sub-path.
 
 _PTR_DIR = "_ptr"
 _BUCKETS_DIR = "_buckets"
 
 
+def _numeric_markers(spark: SparkSession, marker_dir: str) -> dict:
+    """{value: Hadoop ``Path``} of every numeric-named marker under
+    ``marker_dir`` (empty when the directory is absent) — the one
+    listing behind the single-file-create commit idiom's read side."""
+    _, jpath, fs = _hadoop_fs(spark, marker_dir)
+    if not fs.exists(jpath):
+        return {}
+    out = {}
+    for st in fs.listStatus(jpath):
+        marker = st.getPath()
+        name = marker.getName()
+        if name.isdigit():
+            out[int(name)] = marker
+    return out
+
+
 def _max_numeric_marker(spark: SparkSession, marker_dir: str) -> int | None:
     """Max numeric empty-marker filename under ``marker_dir`` (None when
-    the directory is absent or holds no numeric names) — the shared read
-    side of the single-file-create commit idiom."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(marker_dir)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return None
-    best: int | None = None
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if name.isdigit():
-            best = int(name) if best is None else max(best, int(name))
-    return best
+    the directory is absent or holds no numeric names)."""
+    return max(_numeric_markers(spark, marker_dir), default=None)
 
 
 def _create_marker(spark: SparkSession, marker_dir: str, value: int) -> None:
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{marker_dir}/{value}")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    _, jpath, fs = _hadoop_fs(spark, f"{marker_dir}/{value}")
     fs.create(jpath, True).close()
 
 
@@ -385,9 +393,7 @@ def delete_zone(spark: SparkSession, path: str) -> None:
     Also evicts :func:`read_pinned` memo entries under ``path``: a later
     same-path rebuild (legal after an explicit delete) may carry different
     columns, and a pinned pre-delete schema would silently misread it."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    _, jpath, fs = _hadoop_fs(spark, path)
     if fs.exists(jpath):
         fs.delete(jpath, True)
     prefix = path.rstrip("/")
@@ -404,14 +410,8 @@ _COMPACT_TMP_DIR = "_compacting"
 _SWAP_READY_MARKER = "_SWAP_READY"
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
 def _write_text_file(spark: SparkSession, path: str, text: str) -> None:
-    jvm, jpath, fs = _hadoop_fs(spark, path)
+    _, jpath, fs = _hadoop_fs(spark, path)
     out = fs.create(jpath, True)
     out.write(bytearray(text.encode("utf-8")))
     out.close()
@@ -430,7 +430,7 @@ def _top_level_data_entries(spark: SparkSession, path: str) -> list[str]:
     everything a flat rewrite replaces; ``_``/``.``-prefixed metadata
     trees (``_snapshots``, ``_retired``, ``_expired``, ``_compacting``,
     ``_SUCCESS``) are never data."""
-    jvm, jpath, fs = _hadoop_fs(spark, path)
+    _, jpath, fs = _hadoop_fs(spark, path)
     if not fs.exists(jpath):
         return []
     return sorted(
@@ -447,7 +447,7 @@ def _finish_compaction_swap(spark: SparkSession, path: str) -> None:
     missing olds, overwrite at the destination), so a crash anywhere is
     healed by re-running — which :func:`complete_pending_compaction`
     does from the marker alone."""
-    jvm, root, fs = _hadoop_fs(spark, path)
+    jvm, _, fs = _hadoop_fs(spark, path)
     tmp = f"{path}/{_COMPACT_TMP_DIR}"
     olds = _read_text_file(spark, f"{tmp}/{_SWAP_READY_MARKER}").splitlines()
     for rel in olds:
@@ -478,8 +478,7 @@ def complete_pending_compaction(spark: SparkSession, path: str) -> bool:
     (idempotent: already-deleted olds are skipped, already-moved files
     are not in the temp dir anymore). ``compact_zone`` calls this at
     entry, so "re-run the compaction" IS the recovery procedure."""
-    jvm, root, fs = _hadoop_fs(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}/{_COMPACT_TMP_DIR}")
+    jvm, tmp, fs = _hadoop_fs(spark, f"{path}/{_COMPACT_TMP_DIR}")
     if not fs.exists(tmp):
         return False
     marker = jvm.org.apache.hadoop.fs.Path(
@@ -786,31 +785,16 @@ def delete_from_zone(
             mode="overwrite",
             partition_overwrite="dynamic",  # replace ONLY touched partitions
         )
-    jvm = spark._jvm
-    # Spark's own partition-path escaping: string values with ':', '%',
-    # spaces etc. are written Hive-escaped, so the delete must target the
-    # escaped directory name or the "emptied" partition's files survive
-    esc = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    for part in touched:
-        if part in surv_parts:
-            continue
-        segs = "/".join(
-            f"{c}={esc.escapePathName(str(v))}"
-            for c, v in zip(partition_cols, part)
-        )
-        jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{segs}")
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
+    # the delete must target the ESCAPED directory name, or an "emptied"
+    # partition with ':', '%', spaces etc. in a value keeps its files
+    rels = [_partition_rel(spark, partition_cols, part) for part in touched]
+    jvm, _, fs = _hadoop_fs(spark, path)
+    for part, rel in zip(touched, rels):
+        if part not in surv_parts:
+            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{rel}"), True)
     if retire_snapshots:
         from aws_data_pipeline_spark.sources import snapshots as _snaps
 
-        rels = [
-            "/".join(
-                f"{c}={esc.escapePathName(str(v))}"
-                for c, v in zip(partition_cols, part)
-            )
-            for part in touched
-        ]
         _snaps.retire_pinning_snapshots(spark, path, under=rels)
     return len(touched)
 
@@ -851,9 +835,7 @@ def gc_index_versions(
     rebuild is in flight and no in-flight probe still holds pre-flip
     scans, since an uncommitted candidate directory is indistinguishable
     from an abandoned one."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    _, jpath, fs = _hadoop_fs(spark, path)
     if not fs.exists(jpath):
         return []
     active = index_active_version(spark, path)
@@ -937,6 +919,43 @@ def copy_zone(spark, src: str, dst: str) -> None:
     spark.read.parquet(src).write.mode("overwrite").parquet(dst)
 
 
+def _partition_rel(
+    spark: SparkSession, partition_cols: Sequence[str], values: Sequence
+) -> str:
+    """Relative hive partition path ``c1=v1/c2=v2`` with each value
+    escaped by Spark's own rule (the one its writers apply to ':', '%',
+    spaces etc.), so it names the directory a write actually created."""
+    esc = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    return "/".join(
+        f"{c}={esc.escapePathName(str(v))}"
+        for c, v in zip(partition_cols, values)
+    )
+
+
+def _partition_dirs(
+    spark: SparkSession, root: str, partition_cols: Sequence[str]
+) -> list[tuple]:
+    """(Hadoop ``Path``, unescaped string values) of every hive partition
+    directory ``root/c1=…/c2=…`` — one directory listing per level, no
+    data file touched; empty when ``root`` is absent. Values are
+    UNESCAPED by Spark's own rule, so they are the logical values a scan
+    would see."""
+    jvm, jroot, fs = _hadoop_fs(spark, root)
+    if not fs.exists(jroot):
+        return []
+    esc = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    dirs = [(jroot, ())]
+    for c in partition_cols:
+        dirs = [
+            (st.getPath(), vals + (esc.unescapePathName(name[len(c) + 1 :]),))
+            for d, vals in dirs
+            for st in fs.listStatus(d)
+            if st.isDirectory()
+            and (name := st.getPath().getName()).startswith(f"{c}=")
+        ]
+    return dirs
+
+
 def expire_zone_partitions(
     spark: SparkSession,
     path: str,
@@ -973,33 +992,9 @@ def expire_zone_partitions(
     in-flight expiry degrades to a partial read instead of an abort;
     the quiet-window scheduling discipline still applies, the tombstone
     makes violations diagnosable instead of mysterious."""
-    jvm = spark._jvm
-    esc = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return []
-
-    def level(dirs: list, col: str) -> list:
-        out = []
-        for d, vals in dirs:
-            for st in fs.listStatus(d):
-                if not st.isDirectory():
-                    continue
-                name = st.getPath().getName()
-                if not name.startswith(f"{col}="):
-                    continue
-                raw = name[len(col) + 1 :]
-                out.append(
-                    (st.getPath(), vals + (esc.unescapePathName(raw),))
-                )
-        return out
-
-    dirs = [(root, ())]
-    for c in partition_cols:
-        dirs = level(dirs, c)
+    jvm, _, fs = _hadoop_fs(spark, path)
     dropped = []
-    for d, vals in dirs:
+    for d, vals in _partition_dirs(spark, path, partition_cols):
         if not keep(vals):
             # tombstone FIRST: from this point until the delete commits,
             # and forever after, readers can attribute missing files to
@@ -1007,14 +1002,11 @@ def expire_zone_partitions(
             # relative partition path is rebuilt from the escaped values
             # (escape∘unescape is identity on hive dir names), so the
             # tombstone key round-trips exactly.
-            rel = "/".join(
-                f"{c}={esc.escapePathName(v)}"
-                for c, v in zip(partition_cols, vals)
-            )
-            marker = jvm.org.apache.hadoop.fs.Path(
-                f"{path}/_expired/{rel}/_expiring"
-            )
-            fs.create(marker, True).close()
+            rel = _partition_rel(spark, partition_cols, vals)
+            fs.create(
+                jvm.org.apache.hadoop.fs.Path(f"{path}/_expired/{rel}/_expiring"),
+                True,
+            ).close()
             fs.delete(d, True)
             dropped.append(vals)
     return sorted(dropped)
@@ -1029,29 +1021,9 @@ def expired_tombstones(
     scan that hit missing files checks membership here to distinguish
     deliberate expiry from corruption. One directory listing, no data
     file reads."""
-    jvm = spark._jvm
-    esc = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    root = jvm.org.apache.hadoop.fs.Path(f"{path}/_expired")
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return []
-    dirs = [(root, ())]
-    for c in partition_cols:
-        out = []
-        for d, vals in dirs:
-            for st in fs.listStatus(d):
-                if not st.isDirectory():
-                    continue
-                name = st.getPath().getName()
-                if not name.startswith(f"{c}="):
-                    continue
-                raw = name[len(c) + 1 :]
-                out.append(
-                    (st.getPath(), vals + (esc.unescapePathName(raw),))
-                )
-        dirs = out
+    jvm, _, fs = _hadoop_fs(spark, path)
     return sorted(
         vals
-        for d, vals in dirs
+        for d, vals in _partition_dirs(spark, f"{path}/_expired", partition_cols)
         if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{d.toString()}/_expiring"))
     )

@@ -14,10 +14,12 @@ catalog mechanic re-expressed over the repo's own idioms:
   snapshot_zone`` — cheap O(files) metadata passes), writes a
   publication manifest mapping table name → (zone path, snapshot id),
   and commits it with ONE marker-file create
-  (``root/_publications/_ptr/<N>``). Readers either resolve the old
-  publication or the new one — never a mix; a crash anywhere before
-  the marker leaves invisible orphans (committed zone snapshots nobody
-  references — harmless, reclaimed by each zone's own retention).
+  (``root/_publications/_ptr/<N>``) — the same id-catalog protocol as
+  the zone snapshots (``snapshots._catalog_*``). Readers either resolve
+  the old publication or the new one — never a mix; a crash anywhere
+  before the marker leaves invisible orphans (committed zone snapshots
+  nobody references — harmless, reclaimed by each zone's own
+  retention).
 - :func:`read_published` resolves a table through a publication to its
   pinned zone snapshot (``snapshots.read_zone_snapshot`` — length+mtime
   verified, retired-file fallback, attribution on breakage), so the
@@ -59,10 +61,15 @@ from collections.abc import Mapping
 from pyspark.sql import DataFrame, SparkSession
 
 from aws_data_pipeline_spark.sources.parquet import (
-    _create_marker,
-    _max_numeric_marker,
+    _hadoop_fs,
+    _read_text_file,
+    _write_text_file,
 )
 from aws_data_pipeline_spark.sources.snapshots import (
+    _catalog_commit,
+    _catalog_drop,
+    _catalog_ids,
+    _catalog_resolve,
     expire_snapshots,
     gc_retired_files,
     read_zone_snapshot,
@@ -93,35 +100,16 @@ def publish_tables(
         (table, path, snapshot_zone(spark, path))
         for table, path in zones.items()
     )
-    latest = _max_numeric_marker(spark, f"{root}/{_PUB_DIR}/_ptr")
-    pub_id = (latest or 0) + 1
-    spark.createDataFrame(
-        rows, "table string, zone string, snapshot_id int"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{root}/{_PUB_DIR}/p{pub_id}/manifest"
+    return _catalog_commit(
+        spark, f"{root}/{_PUB_DIR}", "p", rows,
+        "table string, zone string, snapshot_id int",
     )
-    _create_marker(spark, f"{root}/{_PUB_DIR}/_ptr", pub_id)
-    return pub_id
 
 
 def publication_ids(spark: SparkSession, root: str) -> list[int]:
     """Committed publication ids, oldest first (markers whose manifest
-    still exists — :func:`expire_publications` removes both)."""
-    jvm = spark._jvm
-    ptr = jvm.org.apache.hadoop.fs.Path(f"{root}/{_PUB_DIR}/_ptr")
-    fs = ptr.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(ptr):
-        return []
-    ids = []
-    for st in fs.listStatus(ptr):
-        name = st.getPath().getName()
-        if name.isdigit() and fs.exists(
-            jvm.org.apache.hadoop.fs.Path(
-                f"{root}/{_PUB_DIR}/p{name}/manifest"
-            )
-        ):
-            ids.append(int(name))
-    return sorted(ids)
+    still exists — :func:`expire_publications` removes the manifest)."""
+    return _catalog_ids(spark, f"{root}/{_PUB_DIR}", "p")
 
 
 def _pub_manifest(
@@ -145,15 +133,9 @@ def read_published(
     publication id see one coherent build, regardless of appends,
     compactions, or newer publications in between. Verification and
     breakage attribution are the zone snapshot's own."""
-    ids = publication_ids(spark, root)
-    if publication_id is None:
-        if not ids:
-            raise ValueError(f"no publications committed under {root}")
-        publication_id = ids[-1]
-    elif publication_id not in ids:
-        raise ValueError(
-            f"unknown publication id {publication_id} for {root} (have {ids})"
-        )
+    publication_id = _catalog_resolve(
+        publication_ids(spark, root), publication_id, root, "publication"
+    )
     manifest = _pub_manifest(spark, root, publication_id)
     if table not in manifest:
         raise ValueError(
@@ -184,26 +166,17 @@ def expire_publications(
 ) -> list[int]:
     """Retention for publications: drop all but the newest ``keep_last``
     (manifest directory first, marker last — a crash mid-expiry leaves a
-    dataless id that :func:`publication_ids` already filters). Returns
-    the dropped ids. The zones' own snapshot retention then reclaims
-    snapshots no surviving publication references (consult
+    dataless id that :func:`publication_ids` already filters; the newest
+    dropped id's marker stays dataless on purpose, so the next
+    :func:`publish_tables` never reuses an id). Returns the dropped ids.
+    The zones' own snapshot retention then reclaims snapshots no
+    surviving publication references (consult
     :func:`publication_pinned_snapshots`)."""
     if keep_last < 0:
         raise ValueError("keep_last must be >= 0")
     ids = publication_ids(spark, root)
     doomed = ids[: max(0, len(ids) - keep_last)]
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(root).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    for pid in doomed:
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(f"{root}/{_PUB_DIR}/p{pid}"), True
-        )
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(f"{root}/{_PUB_DIR}/_ptr/{pid}"),
-            False,
-        )
+    _catalog_drop(spark, f"{root}/{_PUB_DIR}", "p", ids, doomed)
     return doomed
 
 
@@ -240,14 +213,8 @@ def gc_published_estate(
     referencing publications were dropped by the interrupted run (their
     snapshots would otherwise leak unpinned until some later publication
     touched the same zone)."""
-    from aws_data_pipeline_spark.sources.parquet import (
-        _hadoop_fs,
-        _read_text_file,
-        _write_text_file,
-    )
-
     pending = f"{root}/{_PUB_DIR}/_gc_pending"
-    jvm, jpending, fs = _hadoop_fs(spark, pending)
+    _, jpending, fs = _hadoop_fs(spark, pending)
     zones_ever: set[str] = set()
     if fs.exists(jpending):
         zones_ever.update(

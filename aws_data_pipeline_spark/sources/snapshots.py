@@ -13,16 +13,21 @@ mechanic re-expressed over the repo's own commit idioms, with zero new
 dependencies:
 
 - :func:`snapshot_zone` lists the zone's COMMITTED data files once (the
-  ``zone_fingerprint`` walk: ``_``/``.``-prefixed components excluded)
-  and writes the (file, length, mtime) manifest as parquet under
-  ``path/_snapshots/s<N>/``, committing it with the single-file-create
-  marker idiom (``path/_snapshots/_ptr/<N>`` — atomic on HDFS/local,
-  one PUT on object stores). Verification is (name, length, mtime):
-  length catches truncation and most rewrites, the recorded
-  modification time catches the same-length in-place rewrite that
-  length alone would serve silently. (Not a content checksum — an
-  adversarial writer that also forges mtimes defeats it; the threat
-  model is the engine's own verbs and operational accidents.)
+  committed-file walk ``parquet._walk_files`` that ``zone_exists`` and
+  ``zone_listing_state`` share: ``_``/``.``-prefixed components
+  excluded) and writes the (file, length, mtime) manifest as parquet
+  under ``path/_snapshots/s<N>/``, committing it with the
+  single-file-create marker idiom (``path/_snapshots/_ptr/<N>`` —
+  atomic on HDFS/local, one PUT on object stores). Snapshot ids and
+  ``publish``'s publication ids are one id-catalog (``_catalog_*``
+  below): next id, manifest write, marker commit, listing, retention
+  drop and id resolution are written once for both. Verification is
+  (name, length, mtime): length catches truncation and most rewrites,
+  the recorded modification time catches the same-length in-place
+  rewrite that length alone would serve silently. (Not a content
+  checksum — an adversarial writer that also forges mtimes defeats it;
+  the threat model is the engine's own verbs and operational
+  accidents.)
 - :func:`read_zone_snapshot` reads EXACTLY the manifest's files
   (``spark.read.option("basePath", zone)`` so hive partition columns
   survive the explicit file list) after verifying every pinned file
@@ -84,8 +89,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_data_pipeline_spark.sources.parquet import (
+    _PTR_DIR,
     _create_marker,
+    _hadoop_fs,
     _max_numeric_marker,
+    _numeric_markers,
+    _walk_files,
     qualified_path,
 )
 
@@ -117,31 +126,95 @@ class SnapshotBrokenError(RuntimeError):
         )
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+# -- Id-catalog ------------------------------------------------------------
+# Snapshots (``zone/_snapshots``, prefix ``s``) and publications
+# (``root/_publications``, prefix ``p``) share one layout: a committed id
+# N is a ``<catalog>/_ptr/<N>`` marker whose ``<catalog>/<prefix><N>/
+# manifest`` parquet exists. The manifest is written first and the marker
+# commits it, so a crash leaves an invisible orphan, never a torn entry.
+
+
+def _catalog_commit(
+    spark: SparkSession, catalog: str, prefix: str, rows: list, schema: str
+) -> int:
+    """Write ``rows`` as the next id's manifest, then commit it with the
+    single marker create; returns the id. The next id is one past EVERY
+    marker, the dataless high-water marker :func:`_catalog_drop` keeps
+    included, so ids stay monotonic across retention."""
+    new_id = (_max_numeric_marker(spark, f"{catalog}/{_PTR_DIR}") or 0) + 1
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{catalog}/{prefix}{new_id}/manifest")
+    _create_marker(spark, f"{catalog}/{_PTR_DIR}", new_id)
+    return new_id
+
+
+def _catalog_ids(spark: SparkSession, catalog: str, prefix: str) -> list[int]:
+    """Committed ids, oldest first: markers whose manifest still exists
+    (a dataless marker — expiry's high-water mark, or a crash mid-drop —
+    is not an id)."""
+    jvm, _, fs = _hadoop_fs(spark, catalog)
+    return sorted(
+        n
+        for n in _numeric_markers(spark, f"{catalog}/{_PTR_DIR}")
+        if fs.exists(
+            jvm.org.apache.hadoop.fs.Path(f"{catalog}/{prefix}{n}/manifest")
+        )
+    )
+
+
+def _catalog_resolve(
+    ids: list[int], wanted: int | None, owner: str, kind: str
+) -> int:
+    """``wanted`` if committed, the latest id when ``wanted`` is None;
+    ValueError otherwise."""
+    if wanted is None:
+        if not ids:
+            raise ValueError(f"no {kind}s committed under {owner}")
+        return ids[-1]
+    if wanted not in ids:
+        raise ValueError(f"unknown {kind} id {wanted} for {owner} (have {ids})")
+    return wanted
+
+
+def _catalog_drop(
+    spark: SparkSession,
+    catalog: str,
+    prefix: str,
+    ids: Sequence[int],
+    doomed: Sequence[int],
+) -> None:
+    """Drop ``doomed`` of the committed ``ids``: manifest directory first,
+    marker last, so a crash leaves a dataless marker the listing already
+    filters. When the newest committed id is dropped its marker stays as
+    a dataless HIGH-WATER mark, so the next commit does not reuse the id
+    (consumers key replay guards on ids; reuse would alias two different
+    manifests). Dataless markers below it (an earlier high-water mark,
+    crash leftovers) are then never needed again and go too."""
+    jvm, _, fs = _hadoop_fs(spark, catalog)
+    high_water = ids[-1] if ids and ids[-1] in doomed else None
+    for n in doomed:
+        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{catalog}/{prefix}{n}"), True)
+        if n != high_water:
+            fs.delete(
+                jvm.org.apache.hadoop.fs.Path(f"{catalog}/{_PTR_DIR}/{n}"), False
+            )
+    if high_water is not None:
+        for n, marker in _numeric_markers(spark, f"{catalog}/{_PTR_DIR}").items():
+            if n < high_water and n not in ids:
+                fs.delete(marker, False)
 
 
 def _committed_files(
     spark: SparkSession, path: str
 ) -> dict[str, tuple[int, int]]:
     """{zone-relative path: (length, mtime_ms)} of every committed data
-    file — the zone_fingerprint walk, keeping identities instead of
+    file — the shared committed-file walk, keeping identities instead of
     totals."""
-    jvm, jpath, fs = _fs(spark, path)
-    if not fs.exists(jpath):
-        return {}
-    qpath = fs.makeQualified(jpath)
-    base = qpath.toUri().getPath().rstrip("/")
-    out: dict[str, tuple[int, int]] = {}
-    it = fs.listFiles(qpath, True)
-    while it.hasNext():
-        st = it.next()
-        rel = st.getPath().toUri().getPath()[len(base) :].lstrip("/")
-        if not any(p.startswith(("_", ".")) for p in rel.split("/") if p):
-            out[rel] = (int(st.getLen()), int(st.getModificationTime()))
-    return out
+    return {
+        rel: (int(st.getLen()), int(st.getModificationTime()))
+        for rel, st in _walk_files(spark, path)
+    }
 
 
 def snapshot_zone(spark: SparkSession, path: str) -> int:
@@ -152,40 +225,29 @@ def snapshot_zone(spark: SparkSession, path: str) -> int:
     is written BEFORE the ptr marker commits it, so a crash between the
     two leaves an invisible orphan (never a half-snapshot); re-running
     takes the next id."""
-    files = _committed_files(spark, path)
-    latest = _max_numeric_marker(spark, f"{path}/{_SNAP_DIR}/_ptr")
-    snap_id = (latest or 0) + 1
-    rows = sorted((f, ln, mt) for f, (ln, mt) in files.items())
-    spark.createDataFrame(
-        rows or [], "file string, length long, mtime long"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/{_SNAP_DIR}/s{snap_id}/manifest"
+    rows = sorted(
+        (f, ln, mt) for f, (ln, mt) in _committed_files(spark, path).items()
     )
-    _create_marker(spark, f"{path}/{_SNAP_DIR}/_ptr", snap_id)
-    return snap_id
+    return _catalog_commit(
+        spark, f"{path}/{_SNAP_DIR}", "s", rows,
+        "file string, length long, mtime long",
+    )
 
 
 def snapshot_ids(spark: SparkSession, path: str) -> list[int]:
     """Committed snapshot ids, oldest first (ptr markers whose manifest
-    directory still exists — :func:`expire_snapshots` removes both)."""
-    jvm, root, fs = _fs(spark, f"{path}/{_SNAP_DIR}/_ptr")
-    if not fs.exists(root):
-        return []
-    ids = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.isdigit() and fs.exists(
-            jvm.org.apache.hadoop.fs.Path(f"{path}/{_SNAP_DIR}/s{name}/manifest")
-        ):
-            ids.append(int(name))
-    return sorted(ids)
+    directory still exists — :func:`expire_snapshots` removes the
+    manifest)."""
+    return _catalog_ids(spark, f"{path}/{_SNAP_DIR}", "s")
 
 
 def _snapshot_commit_ms(spark: SparkSession, path: str, snap_id: int) -> int:
     """Commit time of a snapshot = its ptr marker's modification time —
     FS metadata, recorded atomically with the commit itself, available
     for every snapshot ever committed (no manifest-schema dependency)."""
-    jvm, marker, fs = _fs(spark, f"{path}/{_SNAP_DIR}/_ptr/{snap_id}")
+    _, marker, fs = _hadoop_fs(
+        spark, f"{path}/{_SNAP_DIR}/{_PTR_DIR}/{snap_id}"
+    )
     return int(fs.getFileStatus(marker).getModificationTime())
 
 
@@ -216,20 +278,11 @@ def _tombstoned_relpaths(spark: SparkSession, path: str) -> dict[str, int]:
     marker, refreshing it) — the timestamp attribution compares against
     the snapshot's commit time, so a STALE tombstone (expiry, then
     re-ingest, then snapshot) cannot launder later real damage."""
-    jvm, root, fs = _fs(spark, f"{path}/_expired")
-    if not fs.exists(root):
-        return {}
-    qroot = fs.makeQualified(root)
-    base = qroot.toUri().getPath().rstrip("/")
-    out: dict[str, int] = {}
-    it = fs.listFiles(qroot, True)
-    while it.hasNext():
-        st = it.next()
-        if st.getPath().getName() != "_expiring":
-            continue
-        rel = st.getPath().getParent().toUri().getPath()[len(base) :]
-        out[rel.lstrip("/")] = int(st.getModificationTime())
-    return out
+    return {
+        rel.rpartition("/")[0]: int(st.getModificationTime())
+        for rel, st in _walk_files(spark, f"{path}/_expired", committed=False)
+        if st.getPath().getName() == "_expiring"
+    }
 
 
 def _attribute(
@@ -409,15 +462,9 @@ def read_zone_snapshot(
     per-file, tombstone-timestamp-aware attribution) rather than
     returning a silently partial or mixed-generation result; raises
     ``ValueError`` for an unknown id."""
-    ids = snapshot_ids(spark, path)
-    if snapshot_id is None:
-        if not ids:
-            raise ValueError(f"no snapshots committed under {path}")
-        snapshot_id = ids[-1]
-    elif snapshot_id not in ids:
-        raise ValueError(
-            f"unknown snapshot id {snapshot_id} for {path} (have {ids})"
-        )
+    snapshot_id = _catalog_resolve(
+        snapshot_ids(spark, path), snapshot_id, path, "snapshot"
+    )
     live, retired = _verify_and_split(
         spark, path, snapshot_id, spark_verify_threshold=spark_verify_threshold
     )
@@ -453,7 +500,7 @@ def retire_originals(
     snapshot manifests. Returns the number copied."""
     if not rels:
         return 0
-    jvm, root, fs = _fs(spark, path)
+    jvm, _, fs = _hadoop_fs(spark, path)
     conf = spark._jsc.hadoopConfiguration()
     futil = jvm.org.apache.hadoop.fs.FileUtil
     n = 0
@@ -478,7 +525,7 @@ def gc_retired_files(spark: SparkSession, path: str) -> list[str]:
         return []
     pinned = snapshot_pinned_files(spark, path)
     doomed = sorted(set(retired) - pinned)
-    jvm, _, fs = _fs(spark, path)
+    jvm, _, fs = _hadoop_fs(spark, path)
     for rel in doomed:
         fs.delete(
             jvm.org.apache.hadoop.fs.Path(f"{path}/{_RETIRED_DIR}/{rel}"), False
@@ -493,9 +540,11 @@ def expire_snapshots(
     keep_ids: Sequence[int] = (),
 ) -> list[int]:
     """Retention for the manifests themselves: drop all but the newest
-    ``keep_last`` snapshots (manifest directory AND ptr marker — the
-    marker last, so a crash mid-expiry leaves a listable-but-dataless id
-    that :func:`snapshot_ids` already filters out). Returns the dropped
+    ``keep_last`` snapshots (manifest directory, then ptr marker — a
+    crash mid-expiry leaves a listable-but-dataless id that
+    :func:`snapshot_ids` already filters out; the newest dropped id's
+    marker stays as that same dataless state on purpose, so the next
+    :func:`snapshot_zone` never reuses an id). Returns the dropped
     ids. Follow with :func:`gc_retired_files` to reclaim retired copies
     only the dropped manifests pinned. This is also the erasure-run
     companion: after forgetting rows, expire the snapshots that pinned
@@ -517,21 +566,8 @@ def expire_snapshots(
         sid for sid in ids[: max(0, len(ids) - keep_last)]
         if sid not in floor
     ]
-    _drop_snapshots(spark, path, doomed)
+    _catalog_drop(spark, f"{path}/{_SNAP_DIR}", "s", ids, doomed)
     return doomed
-
-
-def _drop_snapshots(
-    spark: SparkSession, path: str, ids: Sequence[int]
-) -> None:
-    jvm, _, fs = _fs(spark, path)
-    for sid in ids:
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(f"{path}/{_SNAP_DIR}/s{sid}"), True
-        )
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(f"{path}/{_SNAP_DIR}/_ptr/{sid}"), False
-        )
 
 
 def retire_pinning_snapshots(
@@ -552,13 +588,12 @@ def retire_pinning_snapshots(
     def hit(rel: str) -> bool:
         return prefixes is None or rel.startswith(prefixes)
 
+    ids = snapshot_ids(spark, path)
     doomed = [
-        sid
-        for sid in snapshot_ids(spark, path)
-        if any(hit(rel) for rel in _manifest(spark, path, sid))
+        sid for sid in ids if any(hit(rel) for rel in _manifest(spark, path, sid))
     ]
-    _drop_snapshots(spark, path, doomed)
-    jvm, _, fs = _fs(spark, path)
+    _catalog_drop(spark, f"{path}/{_SNAP_DIR}", "s", ids, doomed)
+    jvm, _, fs = _hadoop_fs(spark, path)
     for rel in sorted(_committed_files(spark, f"{path}/{_RETIRED_DIR}")):
         if hit(rel):
             fs.delete(
@@ -579,23 +614,7 @@ def snapshot_diff_files(
     immutable only until someone overwrites the path), so the diff must
     surface it rather than skip it. Mtimes compare only when both
     manifests record them (pre-mtime manifests fall back to length)."""
-    ids = snapshot_ids(spark, path)
-    for sid in (from_id, to_id):
-        if sid not in ids:
-            raise ValueError(f"unknown snapshot id {sid} for {path} (have {ids})")
-    before = _manifest(spark, path, from_id)
-    after = _manifest(spark, path, to_id)
-
-    def changed(rel: str, length: int, mtime: int | None) -> bool:
-        b = before.get(rel)
-        if b is None or b[0] != length:
-            return True
-        return b[1] is not None and mtime is not None and b[1] != mtime
-
-    return sorted(
-        rel for rel, (length, mtime) in after.items()
-        if changed(rel, length, mtime)
-    )
+    return _unmatched_pins(spark, path, from_id, to_id, lost=False)
 
 
 def snapshot_lost_files(
@@ -607,22 +626,33 @@ def snapshot_lost_files(
     a (from, to] diff may re-serve rewritten rows. The strict diff mode
     refuses on this; probe it directly to decide between the strict and
     at-least-once consumption modes."""
+    return _unmatched_pins(spark, path, from_id, to_id, lost=True)
+
+
+def _unmatched_pins(
+    spark: SparkSession, path: str, from_id: int, to_id: int, lost: bool
+) -> list[str]:
+    """The mirrored manifest comparison behind both diff probes: files one
+    side pins that the other does not pin at the same length (and mtime,
+    when both manifests record it) — ``to_id``'s side for the delta,
+    ``from_id``'s side when ``lost``."""
     ids = snapshot_ids(spark, path)
-    for sid in (from_id, to_id):
-        if sid not in ids:
-            raise ValueError(f"unknown snapshot id {sid} for {path} (have {ids})")
+    from_id, to_id = (
+        _catalog_resolve(ids, sid, path, "snapshot") for sid in (from_id, to_id)
+    )
     before = _manifest(spark, path, from_id)
     after = _manifest(spark, path, to_id)
+    side, other = (before, after) if lost else (after, before)
 
-    def lost(rel: str, length: int, mtime: int | None) -> bool:
-        a = after.get(rel)
-        if a is None or a[0] != length:
+    def unmatched(rel: str, length: int, mtime: int | None) -> bool:
+        o = other.get(rel)
+        if o is None or o[0] != length:
             return True
-        return a[1] is not None and mtime is not None and a[1] != mtime
+        return o[1] is not None and mtime is not None and o[1] != mtime
 
     return sorted(
-        rel for rel, (length, mtime) in before.items()
-        if lost(rel, length, mtime)
+        rel for rel, (length, mtime) in side.items()
+        if unmatched(rel, length, mtime)
     )
 
 

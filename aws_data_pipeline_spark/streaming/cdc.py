@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_data_pipeline_spark.sources.parquet import (
+    _hadoop_fs,
+    _top_level_data_entries,
     commit_index_version,
     delete_from_zone,
     gc_index_versions,
@@ -286,14 +288,8 @@ def expire_cdc_tombstones(
     # legacy partition dirs left at the store root by the first flip
     gc_index_versions(spark, store)
     if active == store:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(store)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        for st in fs.listStatus(jpath):
-            name = st.getPath().getName()
-            if name.startswith("_") or (
-                name.startswith("v") and name[1:].isdigit()
-            ):
-                continue
-            fs.delete(st.getPath(), True)
+        jvm, _, fs = _hadoop_fs(spark, store)
+        for name in _top_level_data_entries(spark, store):
+            if not (name.startswith("v") and name[1:].isdigit()):
+                fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store}/{name}"), True)
     return n

@@ -33,7 +33,12 @@ from aws_data_pipeline_spark.pipeline.medallion import (
     dedup_against_silver,
     transform_bronze,
 )
-from aws_data_pipeline_spark.sources.parquet import write_zone, zone_exists
+from aws_data_pipeline_spark.sources.parquet import (
+    _hadoop_fs,
+    _numeric_markers,
+    write_zone,
+    zone_exists,
+)
 
 
 def read_bronze_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -135,13 +140,6 @@ def incremental_bronze_to_silver(
     )
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    return jvm.org.apache.hadoop.fs.FileSystem.get(
-        jvm.java.net.URI.create(path), spark._jsc.hadoopConfiguration()
-    )
-
-
 def _intents_dir(silver_path: str) -> str:
     # a SIBLING of the zone, not inside it: a marker inside silver_path
     # would make zone_exists() true before any data lands, sending the
@@ -155,16 +153,12 @@ def _mark_intent(spark: SparkSession, silver_path: str, batch_id: int) -> bool:
     have appended before crashing short of the checkpoint commit). Markers
     for older batches are checkpoint-committed by definition (Spark never
     replays a committed batch id) and are swept here."""
-    jvm = spark._jvm
-    fs = _hadoop_fs(spark, silver_path)
-    d = jvm.org.apache.hadoop.fs.Path(_intents_dir(silver_path))
-    mine = jvm.org.apache.hadoop.fs.Path(f"{_intents_dir(silver_path)}/{batch_id}")
+    d = _intents_dir(silver_path)
+    _, mine, fs = _hadoop_fs(spark, f"{d}/{batch_id}")
     replay = fs.exists(mine)
-    if fs.exists(d):
-        for st in fs.listStatus(d):
-            name = st.getPath().getName()
-            if name.isdigit() and int(name) < batch_id:
-                fs.delete(st.getPath(), False)
+    for n, marker in _numeric_markers(spark, d).items():
+        if n < batch_id:
+            fs.delete(marker, False)
     if not replay:
         fs.create(mine, True).close()
     return replay

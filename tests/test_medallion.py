@@ -391,16 +391,22 @@ def test_batch_append_writes_one_file_per_touched_partition(spark, cfg):
     assert all(n == 1 for n in added.values()), added
 
 
-def test_streaming_sink_writes_one_file_per_touched_partition(spark, tmp_path):
+@pytest.mark.parametrize("zone_dir", ["silver", "silver zone"])
+def test_streaming_sink_writes_one_file_per_touched_partition(
+    spark, tmp_path, zone_dir
+):
     """The foreachBatch body (``ingest_sink``) appends with the same layout
-    as the batch path: one file per touched day over an existing zone."""
+    as the batch path: one file per touched day over an existing zone.
+    The spaced zone name covers the sink's intent-marker filesystem
+    handle, which must parse paths the way Spark's own writer does (a
+    raw ``URI.create`` rejects the space and fails the batch)."""
     from aws_data_pipeline_spark.catalog import TXN_SCHEMA
     from aws_data_pipeline_spark.streaming.ingest import ingest_sink
 
     bronze = tmp_path / "bronze"
     bronze.mkdir()
     rows = make_fixture(bronze)
-    silver_path = str(tmp_path / "silver")
+    silver_path = str(tmp_path / zone_dir)
     clock = F.lit(CLOCK).cast("timestamp")
     first = spark.read.schema(TXN_SCHEMA).json(str(bronze))
     ingest_sink(first, 0, silver_path, clock, "anti_join")

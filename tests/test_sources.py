@@ -180,20 +180,57 @@ def test_zone_exists_ignores_uncommitted_droppings(spark, tmp_path):
     only _temporary/_SUCCESS-style droppings; the probe must report NO
     zone (a bare path check would wedge every later run's idempotency
     anti-join into an unreadable parquet scan), then flip true once a
-    committed data file exists."""
-    import os
-
-    from aws_data_pipeline_spark.sources.parquet import write_zone, zone_exists
+    committed data file exists. Every consumer of the committed-file
+    rule gives the same verdict — zone_exists, zone_listing_state and
+    snapshot_zone's manifest — on _temporary, _SUCCESS, .crc and nested
+    year=…/_temporary droppings, before and after real data lands."""
+    from aws_data_pipeline_spark.sources import snapshots as S
+    from aws_data_pipeline_spark.sources.parquet import (
+        write_zone,
+        zone_exists,
+        zone_listing_state,
+    )
 
     zone = tmp_path / "silver"
+    droppings = [
+        "_temporary/attempt_x/part-000",
+        "_SUCCESS",
+        ".part-000.crc",
+        "year=2024/_temporary/attempt_y/part-001.parquet",
+        "year=2024/.part-002.parquet.crc",
+    ]
+
+    def drop():
+        for rel in droppings:
+            (zone / rel).parent.mkdir(parents=True, exist_ok=True)
+            (zone / rel).write_text("junk")
+
+    def verdicts():
+        sid = S.snapshot_zone(spark, str(zone))
+        manifest = {
+            rel: ln for rel, (ln, _) in S._manifest(spark, str(zone), sid).items()
+        }
+        state = zone_listing_state(spark, str(zone))
+        return zone_exists(spark, str(zone)), state[:2], manifest
+
     assert not zone_exists(spark, str(zone))  # absent
-    os.makedirs(zone / "_temporary" / "attempt_x")
-    (zone / "_temporary" / "attempt_x" / "part-000").write_text("junk")
-    (zone / "_SUCCESS").write_text("")
-    assert not zone_exists(spark, str(zone))  # exists, but no data
-    df = spark.range(3).select(F.col("id").alias("x"))
-    write_zone(df, str(zone))
-    assert zone_exists(spark, str(zone))
+    drop()
+    assert verdicts() == (False, (0, 0), {})  # exists, but no data
+
+    df = spark.createDataFrame([(2024, i) for i in range(3)], "year int, x long")
+    write_zone(df, str(zone), partition_by=["year"])
+    drop()  # fresh droppings beside the committed files
+    committed = {
+        str(f.relative_to(zone)): f.stat().st_size
+        for f in zone.rglob("*.parquet")
+        if not any(p.startswith(("_", ".")) for p in f.relative_to(zone).parts)
+    }
+    assert committed
+    assert verdicts() == (
+        True,
+        (len(committed), sum(committed.values())),
+        committed,
+    )
 
 
 def test_zone_exists_relative_path_droppings(spark, tmp_path):
@@ -1214,6 +1251,81 @@ def test_expire_snapshots_keep_ids_floor(spark, tmp_path):
     assert S.expire_snapshots(spark, zone, keep_last=1, keep_ids=[s1]) == [s2]
     assert S.snapshot_ids(spark, zone) == [s1, s3]
     assert S.read_zone_snapshot(spark, zone, s1).count() == 3
+
+
+def test_catalog_ids_stay_monotonic_across_retention(spark, tmp_path):
+    """Snapshot and publication ids never repeat, even after retention
+    dropped every committed id: the newest dropped id's marker stays as
+    a dataless high-water mark (invisible to the id listings; an older
+    mark is cleared by the next draining drop), so a consumer keyed on
+    ids never sees one id name two different manifests."""
+    import os
+
+    from aws_data_pipeline_spark.sources import publish as P
+    from aws_data_pipeline_spark.sources import snapshots as S
+
+    def markers(catalog):
+        return sorted(n for n in os.listdir(f"{catalog}/_ptr") if n.isdigit())
+
+    zone = str(tmp_path / "zone")
+    spark.range(3).write.parquet(zone)
+    assert [S.snapshot_zone(spark, zone) for _ in range(2)] == [1, 2]
+    assert S.expire_snapshots(spark, zone, keep_last=0) == [1, 2]
+    assert S.snapshot_ids(spark, zone) == []
+    assert markers(f"{zone}/_snapshots") == ["2"]
+    assert S.snapshot_zone(spark, zone) == 3
+    assert S.snapshot_ids(spark, zone) == [3]
+    # the erasure drop shares the rule, and clears the older mark
+    assert S.retire_pinning_snapshots(spark, zone) == [3]
+    assert markers(f"{zone}/_snapshots") == ["3"]
+    assert S.snapshot_zone(spark, zone) == 4
+    assert S.read_zone_snapshot(spark, zone).count() == 3
+
+    root = str(tmp_path / "estate")
+    pubs = [P.publish_tables(spark, root, {"t": zone}) for _ in range(2)]
+    assert pubs == [1, 2]
+    assert P.expire_publications(spark, root, 0) == [1, 2]
+    assert P.publication_ids(spark, root) == []
+    assert markers(f"{root}/_publications") == ["2"]
+    with pytest.raises(ValueError, match="no publications committed"):
+        P.read_published(spark, root, "t")
+    assert P.publish_tables(spark, root, {"t": zone}) == 3
+    assert P.read_published(spark, root, "t").count() == 3
+
+
+def test_one_filesystem_acquisition_site():
+    """The package acquires a Hadoop FileSystem in exactly one place,
+    ``sources.parquet._hadoop_fs``; every other site routes through it,
+    so path parsing and scheme resolution cannot fork again."""
+    import ast
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "aws_data_pipeline_spark"
+    pattern = re.compile(r"getFileSystem\(|FileSystem\.get\(")
+    allowed: list[tuple[str, int, int]] = []
+    hits: list[tuple[str, int]] = []
+    for f in sorted(pkg.rglob("*.py")):
+        rel = f.relative_to(pkg).as_posix()
+        src = f.read_text()
+        if rel == "sources/parquet.py":
+            allowed += [
+                (rel, n.lineno, n.end_lineno)
+                for n in ast.walk(ast.parse(src))
+                if isinstance(n, ast.FunctionDef) and n.name == "_hadoop_fs"
+            ]
+        hits += [
+            (rel, i)
+            for i, line in enumerate(src.splitlines(), 1)
+            if pattern.search(line)
+        ]
+    assert len(allowed) == 1
+    outside = [
+        h for h in hits
+        if not any(h[0] == r and a <= h[1] <= b for r, a, b in allowed)
+    ]
+    assert outside == [], f"FileSystem acquired outside _hadoop_fs: {outside}"
+    assert len(hits) == 1
 
 
 def test_gc_published_estate_safe_order(spark, tmp_path):
