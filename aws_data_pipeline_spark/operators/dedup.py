@@ -585,6 +585,16 @@ def neardup_against_corpus(
     return _verify_pairs(cand, new_sets, corpus_sets, "new_id", "corpus_id", threshold)
 
 
+# the two persisted text indexes: their compaction clustering (``sets`` on
+# doc, ``bands`` on the candidate equi-join key, ``hashes`` on the hash)
+# and their sub-table layouts, as operators/similarity.py's ``_Codec``
+# declares its families'
+_TEXT_LSH_CLUSTER = {"sets": ("doc",), "bands": ("band", "key")}
+_TEXT_LSH_SUBS = (*_TEXT_LSH_CLUSTER, "meta")
+_KGRAM_CLUSTER = {"hashes": ("h",)}
+_KGRAM_SUBS = (*_KGRAM_CLUSTER, "meta")
+
+
 def build_lsh_text_index(
     df: DataFrame,
     path: str,
@@ -627,7 +637,7 @@ def build_lsh_text_index(
     spark.createDataFrame(
         [(k, num_perm, bands, hash_fn)], "k int, num_perm int, bands int, hash_fn string"
     ).write.mode("overwrite").parquet(f"{root}/meta")
-    _finish_index_build(spark, path, new_v, old_root, ("sets", "bands", "meta"))
+    _finish_index_build(spark, path, new_v, old_root, _TEXT_LSH_SUBS)
 
 
 def neardup_against_index(
@@ -1355,7 +1365,7 @@ def build_kgram_index(
     spark.createDataFrame(
         [(k, n_docs)], "k int, built_n_docs long"
     ).write.mode("overwrite").parquet(f"{root}/meta")
-    _finish_index_build(spark, path, new_v, old_root, ("hashes", "meta"))
+    _finish_index_build(spark, path, new_v, old_root, _KGRAM_SUBS)
 
 
 def append_to_kgram_index(

@@ -26,7 +26,6 @@ from aws_data_pipeline_spark.sources.parquet import (
     read_pinned,
     delete_zone,
     index_active_version,
-    index_next_root,
     index_root,
     qualified_path,
     zone_exists,
@@ -37,7 +36,6 @@ from aws_data_pipeline_spark.sources.parquet import (
 # storage mechanics shared by the text indexes too); these aliases keep the
 # historical private names importable.
 from aws_data_pipeline_spark.sources.parquet import (  # noqa: E402
-    copy_zone as _copy_zone,
     finish_index_build as _finish_index_build,
     resolve_build_root as _resolve_build_root,
 )
@@ -1247,46 +1245,24 @@ def compact_embedding_indexes(
     share one owner (the ingest loop runs appends in-batch and
     retrain/compaction only after the availableNow run drains); never
     schedule this concurrently with an ingest into the same index."""
-    from aws_data_pipeline_spark.sources.parquet import compact_zone
+    from aws_data_pipeline_spark.sources.parquet import compact_index
 
     written: dict[str, int] = {}
 
-    def _swap(path: str, big: dict[str, dict], small: tuple[str, ...]) -> dict:
-        old_root = index_root(spark, path)
-        new_root, new_v = index_next_root(spark, path)
-        counts = {}
-        for sub, kw in big.items():
-            counts[sub] = compact_zone(
-                spark,
-                f"{old_root}/{sub}",
-                target_file_bytes=target_file_bytes,
-                dest=f"{new_root}/{sub}",
-                **kw,
-            )
-        for sub in small:
-            _copy_zone(spark, f"{old_root}/{sub}", f"{new_root}/{sub}")
-        _finish_index_build(
-            spark, path, new_v, old_root, tuple(big) + small
-        )
-        return counts
-
     def _swap_codec(codec: _Codec, path: str) -> None:
-        c = _swap(
-            path,
-            {sub: {"sort_by": key} for sub, key in codec.cluster.items()},
-            (*codec.artifact_subs, "meta"),
+        rewrite = {sub: {"sort_by": key} for sub, key in codec.cluster.items()}
+        c = compact_index(
+            spark, path, rewrite, (*codec.artifact_subs, "meta"), target_file_bytes
         )
         written.update({f"{codec.report}{sub}": n for sub, n in c.items()})
 
     if lsh_index_path is not None:
         _swap_codec(_LSH, lsh_index_path)
     if ivf_index_path is not None:
-        c = _swap(
-            ivf_index_path,
-            {"corpus": {"partition_by": ("cell",)}},
-            ("centroids", "build_stats"),
-        )
-        written["ivf_corpus"] = c["corpus"]
+        written["ivf_corpus"] = compact_index(
+            spark, ivf_index_path, {"corpus": {"partition_by": ("cell",)}},
+            ("centroids", "build_stats"), target_file_bytes,
+        )["corpus"]
     if pq_index_path is not None:
         _swap_codec(_PQ, pq_index_path)
     if sq8_index_path is not None:

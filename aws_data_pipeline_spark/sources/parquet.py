@@ -919,6 +919,32 @@ def copy_zone(spark, src: str, dst: str) -> None:
     spark.read.parquet(src).write.mode("overwrite").parquet(dst)
 
 
+def compact_index(
+    spark, path: str, rewrite: dict, copy: tuple, target_file_bytes: int
+) -> dict[str, int]:
+    """Compact a maintained index into its next version: each ``rewrite``
+    sub-table through :func:`compact_zone` (its dict holds the clustering
+    keyword, ``sort_by`` or ``partition_by``), each ``copy`` sub-table
+    carried as is, then one marker commit (:func:`finish_index_build`).
+    Probe-safe, not append-safe: readers keep the old root until the
+    flip and the superseded generation is kept one more flip, but an
+    append that resolved the old root mid-compaction strands its rows.
+    Returns files written per rewritten sub-table."""
+    old_root = index_root(spark, path)
+    new_root, new_v = index_next_root(spark, path)
+    written = {
+        sub: compact_zone(
+            spark, f"{old_root}/{sub}", target_file_bytes=target_file_bytes,
+            dest=f"{new_root}/{sub}", **kw,
+        )
+        for sub, kw in rewrite.items()
+    }
+    for sub in copy:
+        copy_zone(spark, f"{old_root}/{sub}", f"{new_root}/{sub}")
+    finish_index_build(spark, path, new_v, old_root, (*rewrite, *copy))
+    return written
+
+
 def _partition_rel(
     spark: SparkSession, partition_cols: Sequence[str], values: Sequence
 ) -> str:

@@ -1,31 +1,78 @@
-"""Incremental corpus curation: streaming document ingest with cross-batch
-near-dup rejection against the persisted corpus LSH index.
+"""Incremental corpus maintenance: one availableNow loop that keeps a
+corpus zone and every index over it current, plus the erasure and the
+compaction that go with it. :func:`incremental_corpus_ingest` binds the
+loop to documents (MinHash-LSH primary index, k-gram span index);
+:mod:`aws_data_pipeline_spark.streaming.embeddings` binds it to vectors
+(hyperplane-LSH primary index; IVF, SQ8 and PQ indexes). The checkpoint
+is the bookmark (same contract as streaming/ingest.py): a crashed run
+re-processes only uncommitted files.
 
-This composes the incremental-dedup pieces into the maintenance loop a
-production training corpus actually runs: documents arrive in files, each
-micro-batch is deduplicated WITHIN itself, then probed against the index of
-everything already accepted; only novel documents append to the corpus zone
-AND to the index — LSM-style maintenance where per-batch cost is O(batch +
-matched buckets) and the accepted corpus is never re-read, let alone
-re-clustered. The checkpoint is the bookmark (same contract as
-streaming/ingest.py): a crashed run re-processes only uncommitted files.
+Per micro-batch, in this order:
 
-Crash-consistency note, explicit because the sink performs THREE writes
-(corpus, index sets, index bands) that parquet cannot commit atomically
-together: each write derives its append set INDEPENDENTLY, by anti-joining
-the batch's deterministic survivors against what THAT target already holds
-(ids only — cheap column-pruned scans). A crash between any two of the
-three writes therefore cannot desynchronize them permanently: the recovery
-run (the checkpoint re-delivers the uncommitted batch) recomputes the same
-survivors and each write backfills exactly its missing rows — docs that
-reached the corpus but not the index get their index entries on recovery,
-and vice versa; nothing is ever double-appended. The only window of weakness is
-DURING recovery itself (an index missing entries admits a near-duplicate
-arriving in that same window — conservative direction: possible duplicate
-admission, never data loss).
+1. optional row-local prep, then ONE materialization of the batch;
+2. the corpus zone's bucket fan-out: its ``_buckets`` marker, or — for a
+   brand-new zone — the caller's ``corpus_buckets``, recorded BEFORE the
+   first data file (the marker, not the parameter, governs an existing
+   zone: a modulus mismatch would silently break the pruned anti-join;
+   legacy unbucketed zones stay unbucketed and use full id scans);
+3. in-batch dedup: candidate pairs, then the deterministic min-id
+   survivor of each ``cluster_assignments`` cluster — re-runs pick the
+   same survivors;
+4. the survivors probe the primary index of everything accepted so far;
+   a verified match at ``threshold`` drops the row;
+5. the novel rows append to the corpus zone, hive-partitioned by
+   ``bucket = pmod(id, N)``, after an id anti-join restricted to the
+   batch's buckets (PartitionFilters via
+   :func:`sources.parquet.pruned_zone_ids`) — per-batch corpus reads stay
+   O(batch), not O(corpus);
+6. the primary index appends the survivors, or bootstraps;
+7. the batch ∩ corpus "accepted" set feeds every secondary index: an
+   append, or a bootstrap.
+
+LSM-style: per-batch cost is O(batch + matched buckets), and the accepted
+corpus is never re-read, let alone re-clustered. Every bootstrap reads the
+FULL corpus zone, never the batch: an index enabled on an
+already-populated corpus must index history too, or it silently
+under-reports while claiming to be the corpus index.
+
+Crash contract. The sink's writes (corpus, then each index's sub-tables)
+cannot commit atomically together, so each write derives its append set
+INDEPENDENTLY, by anti-joining against what THAT target already holds
+(ids only — column-pruned scans). A crash between any two writes cannot
+desynchronize them permanently: the re-delivered batch recomputes the
+same survivors and each write backfills exactly its missing rows, never
+double-appending. The secondary indexes read batch ∩ corpus, not the
+survivors, because on re-delivery the primary probe self-matches rows
+that already reached it and the survivors go empty. The only window of
+weakness is DURING recovery (an index missing entries admits a
+near-duplicate arriving in that window — a possible duplicate admission,
+never data loss).
+
+GC cadence. ``gc_superseded_versions=True`` collects the generations
+superseded in PREVIOUS runs at run START, never right after this run's
+own rebuilds: ``finish_index_build`` keeps the immediately superseded
+generation for readers that resolved their root before the flip, and
+anything superseded before this run opened has had a full run-cycle to
+drain. Steady-state storage per index stays ≤ 2×.
+
+Erasure order. Indexes first, then (by default) their superseded
+generations, which still hold the doomed rows, and the corpus zone LAST:
+it is the loop's idempotency authority, so erasing it first and crashing
+would let a re-delivered row re-enter while stale index rows still
+advertise the old one. Every step is idempotent, so a crash anywhere
+re-runs to completion. A bucketed zone's doomed ids name their partitions
+arithmetically, so the count and the rewrite touch O(buckets hit); a
+legacy unbucketed zone is rewritten whole.
+
+Compaction (:func:`compact_corpus_indexes`, and
+``similarity.compact_embedding_indexes``) is probe-safe but not
+append-safe (:func:`sources.parquet.compact_index`): run it from the
+index's single owner, between ingest runs.
 """
 
 from __future__ import annotations
+
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +80,11 @@ from pyspark.sql import types as T
 
 from aws_data_pipeline_spark.operators import dedup, text
 from aws_data_pipeline_spark.sources.parquet import (
+    compact_index,
+    delete_from_zone,
+    gc_index_versions,
     index_has,
+    index_root,
     pruned_zone_ids,
     record_zone_bucket_count,
     zone_bucket_count,
@@ -48,6 +99,167 @@ DOC_SCHEMA = T.StructType(
         T.StructField("source", T.StringType()),
     ]
 )
+
+
+class _Index(NamedTuple):
+    """A secondary index the loop keeps current from the batch ∩ corpus
+    set. It counts as built once ``present`` exists at its active root;
+    then ``append(accepted, path)``, else
+    ``bootstrap(full corpus, corpus rows, path)``."""
+
+    path: str | None
+    present: str
+    append: Callable
+    bootstrap: Callable
+
+
+def _gc(spark: SparkSession, estate: dict) -> None:
+    """Collect the superseded generations of every configured index of an
+    estate, given as ``{path or None: sub-tables}``."""
+    for path, subs in estate.items():
+        if path is not None:
+            gc_index_versions(spark, path, subs)
+
+
+def _ingest(
+    spark: SparkSession, source: tuple, checkpoint_path: str, *,
+    corpus_path: str, corpus_buckets: int, id_col: str, prep, in_batch_pairs,
+    probe, threshold: float, index_path: str, append_index, build_index,
+    secondaries: list[_Index], estate: dict, gc_superseded_versions: bool,
+) -> None:
+    """One availableNow run of the maintenance loop over ``source``
+    (format, path, schema); the steps are the module docstring's.
+    ``prep`` (or None) is the row-local step; ``in_batch_pairs(batch)``
+    returns the in-batch unique rows and their ``(doc1, doc2)`` near-dup
+    pairs; ``probe(spark, rows, path, threshold=)`` probes the primary
+    index, which ``append_index(survivors, path)`` appends to and
+    ``build_index(full corpus, path)`` bootstraps."""
+    secondaries = [ix for ix in secondaries if ix.path is not None]
+
+    def sink(batch: DataFrame, batch_id: int) -> None:
+        sess = batch.sparkSession
+        # materialized AFTER the prep, so the prep runs once and the
+        # emptiness check reads the checkpoint
+        batch = (prep(batch) if prep else batch).localCheckpoint()
+        if batch.isEmpty():
+            return
+        nb = zone_bucket_count(sess, corpus_path)
+        if nb is None and not zone_exists(sess, corpus_path):
+            record_zone_bucket_count(sess, corpus_path, corpus_buckets)
+            nb = corpus_buckets
+        uniq, pairs = in_batch_pairs(batch)
+        assign = dedup.cluster_assignments(uniq, pairs, id_col)
+        survivors = uniq.join(
+            assign.filter(~F.col("is_duplicate")).select(id_col),
+            id_col,
+            "left_semi",
+        ).localCheckpoint()
+        if index_has(sess, index_path, "meta"):
+            matched = (
+                probe(sess, survivors, index_path, threshold=threshold)
+                .select(F.col("new_id").alias(id_col))
+                .distinct()
+            )
+            survivors = survivors.join(matched, id_col, "left_anti")
+        survivors = survivors.localCheckpoint()  # one plan, several probes
+        if not survivors.isEmpty():
+            novel = survivors
+            if zone_exists(sess, corpus_path):
+                existing = pruned_zone_ids(
+                    sess, corpus_path, survivors, nb, id_col
+                )
+                novel = survivors.join(existing, id_col, "left_anti")
+            if not novel.isEmpty():
+                if nb is not None:
+                    novel = novel.withColumn("bucket", F.pmod(F.col(id_col), F.lit(nb)))
+                parts = [] if nb is None else ["bucket"]
+                novel.write.mode("append").partitionBy(*parts).parquet(corpus_path)
+            if index_has(sess, index_path, "meta"):
+                append_index(survivors, index_path)
+            else:
+                build_index(sess.read.parquet(corpus_path), index_path)
+        if not secondaries or not zone_exists(sess, corpus_path):
+            return
+        accepted = full = None  # each built at most once, on first use
+        for ix in secondaries:
+            if index_has(sess, ix.path, ix.present):
+                if accepted is None:
+                    # materialized lazily, by the append that reads it
+                    # first: no extra job, and later appends reuse it
+                    accepted = uniq.join(
+                        pruned_zone_ids(sess, corpus_path, uniq, nb, id_col),
+                        id_col,
+                        "left_semi",
+                    ).localCheckpoint(eager=False)
+                ix.append(accepted, ix.path)
+                continue
+            if full is None:
+                full = sess.read.parquet(corpus_path)
+                n_full = full.count()
+            if n_full:
+                ix.bootstrap(full, n_full, ix.path)
+
+    if gc_superseded_versions:
+        _gc(spark, estate)
+    fmt, path, schema = source
+    (
+        spark.readStream.format(fmt)
+        .schema(schema)
+        .option("recursiveFileLookup", "true")
+        .option("maxFilesPerTrigger", "64")
+        .load(path)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _erase_corpus(
+    spark: SparkSession, corpus_path: str, doomed: DataFrame, key: str
+) -> int:
+    """Remove the ``doomed`` ids from a corpus zone; returns rows removed.
+    On a bucketed zone the count and the rewrite read only the buckets
+    the doomed ids land in; a legacy unbucketed zone is rewritten whole."""
+    nb = zone_bucket_count(spark, corpus_path)
+    if nb is None:
+        cur = spark.read.parquet(corpus_path)
+        surv = cur.join(doomed, key, "left_anti").localCheckpoint(eager=True)
+        n = cur.count() - surv.count()
+        if n > 0:
+            surv.write.mode("overwrite").parquet(corpus_path)
+        return n
+    n = (
+        pruned_zone_ids(spark, corpus_path, doomed, nb, key)
+        .join(doomed, key, "left_semi")
+        .count()
+    )
+    keyed = doomed.withColumn("bucket", F.pmod(F.col(key), F.lit(nb)).cast("int"))
+    delete_from_zone(
+        spark, corpus_path, keyed, key_cols=[key], partition_cols=["bucket"]
+    )
+    return n
+
+
+def _forget(
+    spark: SparkSession, ids: DataFrame, id_col: str, key: str,
+    corpus_path: str | None, estate: dict, gc_superseded: bool, erase_indexes,
+) -> dict[str, int]:
+    """The erasure shared by both estates, in the module docstring's order:
+    ``erase_indexes(doomed)`` (per-surface counts), the superseded
+    generations, then the corpus zone."""
+    doomed = ids.select(F.col(id_col).alias(key)).distinct()
+    out = erase_indexes(doomed)
+    if gc_superseded:
+        _gc(spark, estate)
+    if corpus_path is not None and zone_exists(spark, corpus_path):
+        out["corpus"] = _erase_corpus(spark, corpus_path, doomed, key)
+    return out
+
+
+def _text_estate(index_path: str | None, kgram_index_path: str | None) -> dict:
+    return {index_path: dedup._TEXT_LSH_SUBS, kgram_index_path: dedup._KGRAM_SUBS}
 
 
 def append_to_lsh_text_index(
@@ -67,8 +279,6 @@ def append_to_lsh_text_index(
     docs are skipped, docs whose sets landed but whose bands did not get
     their bands computed from the materialized sets.
     """
-    from aws_data_pipeline_spark.sources.parquet import index_root
-
     spark = df.sparkSession
     path = index_root(spark, path)
     meta = spark.read.parquet(f"{path}/meta").collect()[0]
@@ -113,56 +323,26 @@ def compact_corpus_indexes(
     ranges turn selective probes into row-group skips. Returns files
     written per sub-table.
 
-    Concurrency contract (the embedding compaction's,
-    ``similarity.compact_embedding_indexes``, verbatim): PROBE-safe — the
-    compacted sub-tables land in a fresh version directory committed by
-    ONE marker-file create, the superseded generation is kept one more
-    flip for in-flight readers, and a crash mid-compaction leaves the old
-    version active — but NOT concurrent-APPEND-safe: an append resolving
-    the old root mid-compaction would strand its rows in a superseded
-    generation. Run it from the index's single owner, between ingest
-    runs. Cadence: ``sources.parquet.index_compaction_due``, or whenever
-    the small-file count passes a few hundred."""
-    from aws_data_pipeline_spark.sources.parquet import (
-        copy_zone as _copy_zone,
-        finish_index_build as _finish_index_build,
-    )
-    from aws_data_pipeline_spark.sources.parquet import (
-        compact_zone,
-        index_has,
-        index_next_root,
-        index_root,
-    )
+    Concurrency contract (:func:`sources.parquet.compact_index`):
+    PROBE-safe — the compacted sub-tables land in a fresh version
+    directory committed by ONE marker-file create, the superseded
+    generation is kept one more flip for in-flight readers, and a crash
+    mid-compaction leaves the old version active — but NOT
+    concurrent-APPEND-safe: an append resolving the old root
+    mid-compaction would strand its rows in a superseded generation. Run
+    it from the index's single owner, between ingest runs. Cadence:
+    ``sources.parquet.index_compaction_due``, or whenever the small-file
+    count passes a few hundred."""
 
-    written: dict[str, int] = {}
-    old_root = index_root(spark, index_path)
-    new_root, new_v = index_next_root(spark, index_path)
-    written["sets"] = compact_zone(
-        spark, f"{old_root}/sets", target_file_bytes=target_file_bytes,
-        sort_by=("doc",), dest=f"{new_root}/sets",
-    )
-    written["bands"] = compact_zone(
-        spark, f"{old_root}/bands", target_file_bytes=target_file_bytes,
-        sort_by=("band", "key"), dest=f"{new_root}/bands",
-    )
-    _copy_zone(spark, f"{old_root}/meta", f"{new_root}/meta")
-    _finish_index_build(
-        spark, index_path, new_v, old_root, ("sets", "bands", "meta")
-    )
+    def swap(path: str, cluster: dict) -> dict[str, int]:
+        rewrite = {sub: {"sort_by": key} for sub, key in cluster.items()}
+        return compact_index(spark, path, rewrite, ("meta",), target_file_bytes)
+
+    written = swap(index_path, dedup._TEXT_LSH_CLUSTER)
     if kgram_index_path is not None and index_has(
         spark, kgram_index_path, "hashes"
     ):
-        k_old = index_root(spark, kgram_index_path)
-        k_new, k_v = index_next_root(spark, kgram_index_path)
-        written["hashes"] = compact_zone(
-            spark, f"{k_old}/hashes",
-            target_file_bytes=target_file_bytes, sort_by=("h",),
-            dest=f"{k_new}/hashes",
-        )
-        _copy_zone(spark, f"{k_old}/meta", f"{k_new}/meta")
-        _finish_index_build(
-            spark, kgram_index_path, k_v, k_old, ("hashes", "meta")
-        )
+        written.update(swap(kgram_index_path, dedup._KGRAM_CLUSTER))
     return written
 
 
@@ -183,18 +363,15 @@ def incremental_corpus_ingest(
     min_quality: float | None = None,
     gc_superseded_versions: bool = False,
 ) -> None:
-    """One availableNow run: new document files -> in-batch dedup -> index
-    probe -> idempotent append of novel docs to corpus + index.
+    """One availableNow run of the maintenance loop (module docstring)
+    over new document files: in-batch dedup → index probe → idempotent
+    append of novel docs to the corpus zone and the indexes.
 
-    Per micro-batch:
-    1. exact + MinHash-LSH dedup WITHIN the batch (deterministic min-id
-       survivor per cluster — re-runs pick the same survivors);
-    2. survivors probe the corpus index (``neardup_against_index``): any
-       new doc with a verified match >= ``threshold`` is a cross-batch
-       duplicate and is dropped;
-    3. novel docs append to the corpus zone (id anti-join guard makes
-       re-delivery idempotent) and to the index (see module docstring for
-       the write-order contract). First batch bootstraps both.
+    In-batch dedup is an exact digest first (cheap), then MinHash-LSH
+    pairs at ``threshold``; the primary index is the MinHash-LSH index
+    at ``index_path`` (``neardup_against_index`` probes it), built with
+    ``k``/``num_perm``/``bands`` and appended under its own stored
+    parameters (:func:`append_to_lsh_text_index`).
 
     ``kgram_index_path`` (optional) additionally maintains the corpus's
     duplicate-SPAN fingerprint index (``dedup.build_kgram_index``):
@@ -202,48 +379,29 @@ def incremental_corpus_ingest(
     corpus write, anti-joined against the hash set so replays are
     idempotent by construction — downstream span audits
     (``duplicate_spans_against_index``) then see every accepted doc
-    without re-reading corpus text. One ingest loop keeps ALL corpus
-    indexes current.
+    without re-reading corpus text.
 
     doc_ids must be globally unique across batches (upstream contract,
     same as any append-only ingest).
 
-    ``corpus_buckets``: new corpus zones are written hive-partitioned by
-    ``bucket = pmod(doc_id, corpus_buckets)`` with the fan-out recorded
-    in a ``_buckets`` marker BEFORE the first data file — the embedding
-    loop's layout (:func:`streaming.embeddings.incremental_embedding_ingest`),
-    verbatim. Every later run's idempotency anti-join and batch ∩ corpus
-    semi-join then prune to the batch's buckets (PartitionFilters via
-    :func:`sources.parquet.pruned_zone_ids`), keeping per-batch corpus
-    reads O(batch) instead of O(corpus) at 100 TB. The recorded marker,
-    not this parameter, governs existing zones; legacy unbucketed zones
-    keep working with full column-pruned id scans.
+    ``corpus_buckets``: the fan-out a NEW corpus zone is written with
+    (``bucket = pmod(doc_id, corpus_buckets)``); the zone's recorded
+    marker governs existing zones.
 
     ``strip_markup`` / ``min_quality`` (optional, off by default): the
     curate() chain's row-local stage 0/1 applied per micro-batch BEFORE
-    dedup — raw-crawl loops gate and strip in-ingest so the corpus, the
-    indexes, and every downstream signal only ever see content that
-    passed. Deterministic column expressions: crash-recovery re-delivery
-    recomputes the identical survivors, so the idempotency contract is
-    unchanged.
+    dedup, in curate()'s order (strip before anything scores or hashes
+    the text; the quality gate before the pairwise stages) — raw-crawl
+    loops gate and strip in-ingest so the corpus, the indexes, and every
+    downstream signal only ever see content that passed. Deterministic
+    column expressions: crash-recovery re-delivery recomputes the
+    identical survivors, so the idempotency contract is unchanged.
 
     ``gc_superseded_versions=True``: collect index generations superseded
-    in PREVIOUS runs at run START — the embedding loop's cadence rule
-    (see :func:`streaming.embeddings.incremental_embedding_ingest`):
-    never right after this run's own rebuilds, whose kept generation must
-    stay readable for in-flight probes.
+    in PREVIOUS runs at run START (the module docstring's cadence).
     """
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sess = batch.sparkSession
-        # 0. optional row-local curation gates, MIRRORING curate()'s stage
-        # order (strip before anything scores or hashes the text; quality
-        # gate before the expensive pairwise stages). Pure deterministic
-        # column expressions, so a crash-recovery re-delivery recomputes
-        # the identical survivor set — the idempotency contract is
-        # untouched.
+    def prep(batch: DataFrame) -> DataFrame:
         if strip_markup:
             batch = (
                 text.strip_markup(batch, text_col="text", out_col="__clean")
@@ -251,140 +409,41 @@ def incremental_corpus_ingest(
                 .drop("__clean")
             )
         if min_quality is not None:
-            cols = batch.columns
             batch = (
                 text.quality_score(batch)
                 .filter(F.col("quality_score") >= min_quality)
-                .select(*cols)
+                .select(*batch.columns)
             )
-        batch = batch.localCheckpoint()  # consumed by several jobs below
-        # gate-emptied batch: checked AFTER the checkpoint so the strip +
-        # score chain evaluates exactly once (an isEmpty on the lazy frame
-        # would compute it a second time just to answer the guard)
-        if min_quality is not None and batch.isEmpty():
-            return
-        # bucket fan-out: the zone's own recorded marker is the source of
-        # truth (a modulus mismatch would silently break the pruned
-        # anti-join); a brand-new zone records the caller's fan-out
-        # BEFORE any data lands, legacy unbucketed zones stay unbucketed
-        nb = zone_bucket_count(sess, corpus_path)
-        if nb is None and not zone_exists(sess, corpus_path):
-            record_zone_bucket_count(sess, corpus_path, corpus_buckets)
-            nb = corpus_buckets
-        # 1. in-batch dedup: exact digest first (cheap), then fuzzy
-        exact = dedup.exact_dedup(batch, "doc_id")
-        uniq = exact.filter(~F.col("is_duplicate")).drop(
-            "text_hash", "canonical_doc_id", "is_duplicate"
+        return batch
+
+    def in_batch_pairs(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
+        uniq = (
+            dedup.exact_dedup(batch, "doc_id")
+            .filter(~F.col("is_duplicate"))
+            .drop("text_hash", "canonical_doc_id", "is_duplicate")
         )
         pairs = dedup.minhash_lsh_pairs(
             uniq, "doc_id", k=k, num_perm=num_perm, bands=bands, threshold=threshold
         )
-        assign = dedup.cluster_assignments(uniq, pairs, "doc_id")
-        survivors = uniq.join(
-            assign.filter(~F.col("is_duplicate")).select("doc_id"),
-            "doc_id",
-            "left_semi",
-        ).localCheckpoint()
-        # 2. cross-batch: probe the index of everything accepted so far
-        if index_has(sess, index_path, "meta"):
-            matched = dedup.neardup_against_index(
-                sess, survivors, index_path, threshold=threshold
-            ).select(F.col("new_id").alias("doc_id")).distinct()
-            survivors = survivors.join(matched, "doc_id", "left_anti")
-        # 3. idempotent append: corpus and index append sets are derived
-        #    INDEPENDENTLY (each anti-joined against its OWN target), so a
-        #    crash between any of the three writes is backfilled by the
-        #    recovery run instead of permanently desynchronizing them
-        #    (module docstring).
-        survivors = survivors.localCheckpoint()  # one plan, several probes
-        if not survivors.isEmpty():
-            corpus_new = survivors
-            if zone_exists(sess, corpus_path):
-                # partition-pruned idempotency: only the batch's buckets
-                # are listed/scanned, never the whole corpus id column
-                existing = pruned_zone_ids(
-                    sess, corpus_path, survivors, nb, "doc_id"
-                )
-                corpus_new = survivors.join(existing, "doc_id", "left_anti")
-            if not corpus_new.isEmpty():
-                if nb is not None:
-                    corpus_new.withColumn(
-                        "bucket", F.pmod(F.col("doc_id"), F.lit(nb))
-                    ).write.mode("append").partitionBy("bucket").parquet(
-                        corpus_path
-                    )
-                else:
-                    corpus_new.write.mode("append").parquet(corpus_path)
-            if index_has(sess, index_path, "meta"):
-                append_to_lsh_text_index(survivors, index_path)
-            else:
-                # Bootstrap from the FULL corpus zone, not `survivors`:
-                # enabling the index on an already-populated corpus must
-                # index history too (the k-gram bootstrap's rule, for the
-                # same silent-under-reporting reason; on a fresh corpus
-                # the two are identical anyway).
-                dedup.build_lsh_text_index(
-                    sess.read.parquet(corpus_path).select("doc_id", "text"),
-                    index_path,
-                    k=k,
-                    num_perm=num_perm,
-                    bands=bands,
-                )
-        # k-gram span index: append set = this batch's docs that are IN
-        # the corpus zone — NOT `survivors`: on crash recovery the LSH
-        # probe drops re-delivered docs as self-matches (survivors goes
-        # empty), but their span hashes may still be missing here. The
-        # batch-ids x corpus-ids semi-join re-derives them; the
-        # hash-level anti-join inside append_to_kgram_index makes
-        # re-appends no-ops, so this is both crash-backfilling and
-        # idempotent. Runs OUTSIDE the survivors guard for that reason.
-        if kgram_index_path is not None and zone_exists(sess, corpus_path):
-            accepted = uniq.join(
-                # same bucket pruning as the corpus anti-join: the
-                # semi-join's corpus side reads only the batch's buckets
-                pruned_zone_ids(sess, corpus_path, uniq, nb, "doc_id"),
-                "doc_id",
-                "left_semi",
+        return uniq, pairs
+
+    _ingest(
+        spark, ("json", docs_path, DOC_SCHEMA), checkpoint_path,
+        corpus_path=corpus_path, corpus_buckets=corpus_buckets, id_col="doc_id",
+        prep=prep, in_batch_pairs=in_batch_pairs,
+        probe=dedup.neardup_against_index, threshold=threshold,
+        index_path=index_path, append_index=append_to_lsh_text_index,
+        build_index=lambda full, path: dedup.build_lsh_text_index(
+            full.select("doc_id", "text"), path, k=k, num_perm=num_perm, bands=bands
+        ),
+        secondaries=[
+            _Index(
+                kgram_index_path, "meta", dedup.append_to_kgram_index,
+                lambda full, n, path: dedup.build_kgram_index(full, path, k=kgram_k),
             )
-            if index_has(sess, kgram_index_path, "meta"):
-                dedup.append_to_kgram_index(accepted, kgram_index_path)
-            else:
-                # Bootstrap from the FULL corpus zone, not `accepted`:
-                # when the k-gram option is first enabled on an
-                # already-populated corpus, `accepted` is only batch ∩
-                # corpus — an index built from it would silently miss
-                # every previously ingested doc's span hashes and
-                # under-report duplicated spans while claiming to be the
-                # corpus index. The corpus zone is the source of truth;
-                # on a fresh corpus the two are identical anyway.
-                full = sess.read.parquet(corpus_path)
-                if not full.isEmpty():
-                    dedup.build_kgram_index(full, kgram_index_path, k=kgram_k)
-
-    # run-START version GC (the embedding loop's cadence rule — see its
-    # comment for why collecting right after a rebuild would be wrong)
-    if gc_superseded_versions:
-        from aws_data_pipeline_spark.sources.parquet import gc_index_versions
-
-        gc_targets = {
-            index_path: ("sets", "bands", "meta"),
-            kgram_index_path: ("hashes", "meta"),
-        }
-        for p, subs in gc_targets.items():
-            if p is not None:
-                gc_index_versions(spark, p, subs=subs)
-
-    (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("multiLine", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "64")
-        .json(docs_path)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        ],
+        estate=_text_estate(index_path, kgram_index_path),
+        gc_superseded_versions=gc_superseded_versions,
     )
 
 
@@ -398,11 +457,10 @@ def forget_documents(
     gc_superseded: bool = True,
 ) -> dict[str, int]:
     """GDPR-style erasure across the text estate the ingest loop
-    maintains — the document twin of
-    :func:`streaming.embeddings.forget_vectors`: remove ``ids`` from the
+    maintains, in the module docstring's order: remove ``ids`` from the
     MinHash-LSH index, rebuild the k-gram span index from the SURVIVING
-    corpus, erase the bucketed corpus zone last, and collect the
-    superseded index generations (they still hold the doomed rows).
+    corpus, collect the superseded index generations (they still hold
+    the doomed rows), and erase the bucketed corpus zone last.
 
     The k-gram index stores DISTINCT hashes with no per-document
     provenance (that anonymity is its size story — see
@@ -413,78 +471,42 @@ def forget_documents(
     cost of erasing from a provenance-free fingerprint set), through the
     same versioned swap as any rebuild. The surviving corpus is computed
     by anti-join BEFORE the zone is touched, so the ordering contract
-    (corpus zone LAST — it is the ingest loop's idempotency authority)
-    still holds and a crash anywhere re-runs to completion.
+    (corpus zone LAST) still holds and a crash anywhere re-runs to
+    completion.
 
     Returns per-surface removed-row counts (``kgram_rebuilt`` reports the
     surviving-document count fed to the rebuild) for the erasure audit."""
-    from aws_data_pipeline_spark.sources.parquet import (
-        delete_from_zone,
-        gc_index_versions,
-        index_has,
-        index_root,
-        zone_bucket_count,
-        zone_exists,
-    )
 
-    out: dict[str, int] = {}
-    doomed = ids.select(F.col(id_col).alias("doc_id")).distinct()
-    if index_path is not None and index_has(spark, index_path, "sets"):
-        out["lsh"] = dedup.delete_from_lsh_text_index(
-            spark, index_path, doomed
-        )
-    if (
-        kgram_index_path is not None
-        and corpus_path is not None
-        and index_has(spark, kgram_index_path, "hashes")
-        and zone_exists(spark, corpus_path)
-    ):
-        meta_k = (
-            spark.read.parquet(
-                f"{index_root(spark, kgram_index_path)}/meta"
+    def erase_indexes(doomed: DataFrame) -> dict[str, int]:
+        out: dict[str, int] = {}
+        if index_path is not None and index_has(spark, index_path, "sets"):
+            out["lsh"] = dedup.delete_from_lsh_text_index(
+                spark, index_path, doomed
             )
-            .collect()[0]
-            .k
-        )
-        survivors = (
-            spark.read.parquet(corpus_path)
-            .join(doomed, "doc_id", "left_anti")
-            .localCheckpoint(eager=True)  # rebuild target feeds on the zone
-        )
-        dedup.build_kgram_index(
-            survivors, kgram_index_path, k=meta_k, force_new_version=True
-        )
-        out["kgram_rebuilt"] = survivors.count()
-    if corpus_path is not None and zone_exists(spark, corpus_path):
-        nb = zone_bucket_count(spark, corpus_path)
-        if nb is not None:
-            keyed = doomed.withColumn(
-                "bucket", F.pmod(F.col("doc_id"), F.lit(nb)).cast("int")
-            )
-            n = (
-                spark.read.parquet(corpus_path)
-                .select("doc_id")
-                .join(doomed, "doc_id", "left_semi")
-                .count()
-            )
-            delete_from_zone(
-                spark, corpus_path, keyed,
-                key_cols=["doc_id"], partition_cols=["bucket"],
-            )
-            out["corpus"] = n
-        else:  # legacy unbucketed zone: one-partition COW rewrite
-            cur = spark.read.parquet(corpus_path)
-            surv = cur.join(doomed, "doc_id", "left_anti").localCheckpoint(
-                eager=True
-            )
-            out["corpus"] = cur.count() - surv.count()
-            if out["corpus"] > 0:
-                surv.write.mode("overwrite").parquet(corpus_path)
-    if gc_superseded:
-        for p, subs in (
-            (index_path, ("sets", "bands", "meta")),
-            (kgram_index_path, ("hashes", "meta")),
+        if (
+            kgram_index_path is not None
+            and corpus_path is not None
+            and index_has(spark, kgram_index_path, "hashes")
+            and zone_exists(spark, corpus_path)
         ):
-            if p is not None and zone_exists(spark, p):
-                gc_index_versions(spark, p, subs)
-    return out
+            k = (
+                spark.read.parquet(f"{index_root(spark, kgram_index_path)}/meta")
+                .collect()[0]
+                .k
+            )
+            survivors = (
+                spark.read.parquet(corpus_path)
+                .join(doomed, "doc_id", "left_anti")
+                .localCheckpoint(eager=True)  # rebuild target feeds on the zone
+            )
+            dedup.build_kgram_index(
+                survivors, kgram_index_path, k=k, force_new_version=True
+            )
+            out["kgram_rebuilt"] = survivors.count()
+        return out
+
+    estate = _text_estate(index_path, kgram_index_path)
+    return _forget(
+        spark, ids, id_col, "doc_id", corpus_path, estate, gc_superseded,
+        erase_indexes,
+    )

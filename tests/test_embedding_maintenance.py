@@ -1462,7 +1462,9 @@ def test_forget_vectors_erases_every_surface(spark, sf_dir, tmp_path):
     vectors/codes, and the rebuilt cell-codes layout; survivors stay
     fully reachable (an exhaustive probe returns exactly them); stored
     quantizers are untouched so survivor rankings never change; a second
-    forget of the same ids is a complete no-op."""
+    forget of the same ids is a complete no-op. The IVF index is
+    compacted first, so its superseded generation (the legacy root
+    tables) holds the doomed ids too and must be collected."""
     import glob
     import os
 
@@ -1487,6 +1489,7 @@ def test_forget_vectors_erases_every_surface(spark, sf_dir, tmp_path):
     ).partitionBy("bucket").parquet(corpus)
     S.build_embedding_lsh_index(e, lsh)
     S.build_ivf_index(e, ivf, n_cells=8)
+    S.compact_embedding_indexes(spark, ivf_index_path=ivf)  # keeps root gen
     S.build_pq_index(e, pq)
     S.build_sq8_index(e, sq8)
     S.build_ivfpq_cell_codes(spark, ivf, sq8, cc)
@@ -1557,9 +1560,17 @@ def test_forget_vectors_erases_every_surface(spark, sf_dir, tmp_path):
     # superseded generation for in-flight readers, but that generation
     # still holds the doomed rows — the default gc collects it, so no
     # non-active version directory survives anywhere in the estate
-    for idx in (lsh, pq, sq8, cc):
+    for idx in (lsh, ivf, pq, sq8, cc):
         vdirs = [d for d in glob.glob(f"{idx}/v*") if os.path.isdir(d)]
         assert len(vdirs) <= 1, f"{idx}: superseded generation kept {vdirs}"
+    # no IVF generation on disk, active or kept, holds a doomed vector
+    ivf_gens = [
+        d for d in (f"{ivf}/corpus", *glob.glob(f"{ivf}/v*/corpus"))
+        if os.path.isdir(d)
+    ]
+    assert ivf_gens
+    for d in ivf_gens:
+        assert not ids_at(d, "neighbor_id") & set(doomed_ids), d
     # idempotent: a second forget removes nothing anywhere
     again = forget_vectors(
         spark, doomed, corpus_path=corpus, index_path=lsh,

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from aws_data_pipeline_spark.catalog import load
@@ -477,9 +478,11 @@ def test_embedding_ingest_corpus_antijoin_is_partition_pruned(spark, tmp_path):
     re-delivery stays idempotent under the bucketed layout."""
     from pyspark.sql import functions as F
 
-    from aws_data_pipeline_spark.sources.parquet import zone_bucket_count
+    from aws_data_pipeline_spark.sources.parquet import (
+        pruned_zone_ids,
+        zone_bucket_count,
+    )
     from aws_data_pipeline_spark.streaming.embeddings import (
-        _pruned_corpus_ids,
         incremental_embedding_ingest,
     )
 
@@ -508,7 +511,7 @@ def test_embedding_ingest_corpus_antijoin_is_partition_pruned(spark, tmp_path):
 
     # a batch touching ONE bucket prunes the corpus read to it
     batch = spark.createDataFrame([(3, vec(3)), (11, vec(11))], schema)
-    pruned = _pruned_corpus_ids(spark, corpus, batch, 8)
+    pruned = pruned_zone_ids(spark, corpus, batch, 8, "vec_id")
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
     seg = plan.split("PartitionFilters", 1)[1][:300]
@@ -583,6 +586,55 @@ def test_text_ingest_corpus_antijoin_is_partition_pruned(spark, tmp_path):
         corpus_buckets=8,
     )
     assert spark.read.parquet(corpus).count() == 16
+
+
+@pytest.mark.parametrize("estate", ["text", "vector"])
+def test_forget_corpus_count_is_partition_pruned(
+    spark, tmp_path, monkeypatch, estate
+):
+    """The erasure's removed-row count on a bucketed corpus zone reads
+    only the buckets the doomed ids land in (PartitionFilters on
+    ``bucket=``), like the rewrite beside it — never the whole id
+    column. Every DataFrame count the erasure runs over the corpus zone
+    is captured and its plan checked; the count itself stays exact."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from aws_data_pipeline_spark.sources.parquet import (
+        record_zone_bucket_count,
+    )
+    from aws_data_pipeline_spark.streaming.corpus import forget_documents
+    from aws_data_pipeline_spark.streaming.embeddings import forget_vectors
+
+    key, forget = {
+        "text": ("doc_id", forget_documents),
+        "vector": ("vec_id", forget_vectors),
+    }[estate]
+    corpus = str(tmp_path / "corpus")
+    record_zone_bucket_count(spark, corpus, 8)
+    spark.range(32).select(F.col("id").alias(key)).withColumn(
+        "bucket", F.pmod(F.col(key), F.lit(8)).cast("int")
+    ).write.mode("append").partitionBy("bucket").parquet(corpus)
+
+    plans = []
+    count = ClassicDataFrame.count
+
+    def spy(self):  # the zone is the only parquet this erasure reads
+        plan = self._jdf.queryExecution().executedPlan().toString()
+        plans.extend(plan.split("FileScan parquet")[1:])
+        return count(self)
+
+    monkeypatch.setattr(ClassicDataFrame, "count", spy)
+    doomed = spark.createDataFrame([(3,), (11,), (99,)], f"{key} long")
+    out = forget(spark, doomed, corpus_path=corpus)
+    monkeypatch.undo()
+
+    assert out == {"corpus": 2}  # 99 is not in the zone
+    assert plans, "no count over the corpus zone was captured"
+    for scan in plans:
+        filters = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+        assert "bucket" in filters, scan
+    left = {r[0] for r in spark.read.parquet(corpus).select(key).collect()}
+    assert left == set(range(32)) - {3, 11}
 
 
 def test_text_lsh_bootstrap_indexes_preexisting_corpus(spark, tmp_path):
