@@ -9,7 +9,33 @@ UDFs in the explicitly-marked north-star operators.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Sequence
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def arrow_frame(
+    spark: SparkSession, rows: Sequence[tuple], schema: StructType
+) -> DataFrame:
+    """A small driver-built frame through the Arrow path: ``rows`` become
+    one Arrow table of ``schema`` that the driver ships straight to the
+    JVM, whatever the session's ``arrow.pyspark.enabled``.
+    ``createDataFrame`` over a Python list is instead unpickled by a
+    Python worker each time the plan scans it (``scripts/plan_lint.py``'s
+    Python-built local frame family)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+            schema=arrow,
+        ),
+        schema,
+    )
 
 
 def widen_narrow_input(df: DataFrame) -> DataFrame:

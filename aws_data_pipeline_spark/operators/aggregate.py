@@ -484,8 +484,9 @@ def rfm_scores(
 
     Scores are EXACT SQL ntile semantics over total orders (metric,
     key tie-break), computed by the distributed global-rank machinery
-    (operators/windows.py::global_ntile — range repartition + broadcast
-    offsets), never an unpartitioned ``Window.orderBy``: three ntiles
+    (operators/windows.py::global_ntile — AQE-sized range repartition +
+    literal per-partition offsets), never an unpartitioned
+    ``Window.orderBy``: three ntiles
     over a billion-customer frame would otherwise plan three
     ``Exchange SinglePartition`` scans, the canonical WindowExec
     scale-killer. One grouped aggregate over the raw frame is the only
@@ -686,8 +687,8 @@ def conversion_latency(
     stream-stream interval join's batch shape (equi-join on user + time
     range residual — never a cartesian); first-conversion is a per-from
     min; the GLOBAL quantiles ride the distributed global-rank
-    machinery (range repartition + broadcast offsets,
-    operators/windows.py) — a single-group ``grouped_quantiles`` would
+    machinery (AQE-sized range repartition + literal per-partition
+    offsets, operators/windows.py) — a single-group ``grouped_quantiles`` would
     sort the whole converting set in ONE partition, the WindowExec
     scale-killer this module bans. Latencies are exact integer
     microseconds; the mean is one sum/count IEEE division.

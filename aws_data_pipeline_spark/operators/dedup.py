@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from aws_data_pipeline_spark.functions.portable import md5_prefix_long
-from aws_data_pipeline_spark.operators import widen_narrow_input
+from aws_data_pipeline_spark.operators import arrow_frame, widen_narrow_input
 from aws_data_pipeline_spark.operators.text import hashed_shingles, shingles, tokens
 from aws_data_pipeline_spark.sources.parquet import index_root, read_pinned
 
@@ -955,7 +955,7 @@ def _cc_union_find(edges: DataFrame) -> DataFrame:
     # plans/r13/neardup_clusters_before.txt); with it the join is a
     # shuffle-free BroadcastHashJoin. The distributed fixpoint path
     # (unbounded labels) is untouched and keeps its shuffle join.
-    return F.broadcast(edges.sparkSession.createDataFrame(rows, schema))
+    return F.broadcast(arrow_frame(edges.sparkSession, rows, schema))
 
 
 def cluster_assignments(

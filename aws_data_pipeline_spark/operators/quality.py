@@ -288,9 +288,12 @@ def ks_drift(
     Scale shape: one shuffle groups the union by value (map-side
     combine), then the ECDFs come from :func:`~aws_data_pipeline_spark.
     operators.windows.global_prefix_sum` — the distributed scan, never an
-    ``Exchange SinglePartition`` window — and the argmax is a bounded
-    TakeOrdered. The cohort totals ride along with the prefix-sum offset
-    pass, so the whole statistic costs two jobs over distinct values.
+    ``Exchange SinglePartition`` window: a range shuffle over distinct
+    values that AQE sizes (``num_partitions`` pins it), local running
+    sums, and per-partition offsets added as a literal lookup, no join —
+    and the argmax is a bounded TakeOrdered. The cohort totals ride along
+    with the prefix-sum offset pass, so the whole statistic costs two
+    jobs over distinct values.
     """
     from aws_data_pipeline_spark.operators.windows import global_prefix_sum
 

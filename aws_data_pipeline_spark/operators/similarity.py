@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aws_data_pipeline_spark.operators import arrow_frame
 from aws_data_pipeline_spark.sources.parquet import (
     artifact_memo,
     commit_index_version,
@@ -803,8 +804,10 @@ def ivf_topk(
     # keeps its nprobe nearest cells
     spark = corpus.sparkSession
     cent_df = F.broadcast(
-        spark.createDataFrame(
-            list(enumerate(centroids)), "cell int, centroid array<double>"
+        arrow_frame(
+            spark,
+            list(enumerate(centroids)),
+            T.StructType.fromDDL("cell int, centroid array<double>"),
         )
     )
     q = _id_vec(queries, id_col, vec_col)
@@ -1625,8 +1628,12 @@ def _pq_query_luts_local(
             )
             for i, qid in enumerate(ids)
         ]
-    return spark.createDataFrame(
-        out, schema=f"query_id {id_type}, qv array<double>, lut array<double>"
+    return arrow_frame(
+        spark,
+        out,
+        T.StructType.fromDDL(
+            f"query_id {id_type}, qv array<double>, lut array<double>"
+        ),
     )
 
 
@@ -1971,7 +1978,7 @@ def _sq8_scored(
     stage."""
     mins, scales = stats
     if q_rows is not None:
-        q = q.sparkSession.createDataFrame(q_rows, q.schema)
+        q = arrow_frame(q.sparkSession, q_rows, q.schema)
     rv = cand.withColumn(
         "rv", sq8_reconstruct(F.col("codes"), mins, scales)
     ).withColumn("rn", norm(F.col("rv")))
@@ -2552,24 +2559,14 @@ def _probe_cells(
         .select("query_id", "cell", "qv")
     )
     rows = sel.collect()
-    if carry_qv:
-        # (query_id, qv, cell) — the shape ivf_topk_indexed broadcasts
-        # into its full-vector in-cell scoring join
-        probed = spark.createDataFrame(
-            [(r["query_id"], r["qv"], r["cell"]) for r in rows],
-            T.StructType(
-                [
-                    sel.schema["query_id"],
-                    sel.schema["qv"],
-                    sel.schema["cell"],
-                ]
-            ),
-        )
-    else:
-        probed = spark.createDataFrame(
-            [(r["query_id"], r["cell"]) for r in rows],
-            T.StructType([sel.schema["query_id"], sel.schema["cell"]]),
-        )
+    # (query_id, qv, cell) with ``carry_qv`` — the shape ivf_topk_indexed
+    # broadcasts into its full-vector in-cell scoring join
+    cols = ("query_id", "qv", "cell") if carry_qv else ("query_id", "cell")
+    probed = arrow_frame(
+        spark,
+        [tuple(r[c] for c in cols) for r in rows],
+        T.StructType([sel.schema[c] for c in cols]),
+    )
     cells = sorted({r["cell"] for r in rows})
     seen: set = set()
     q_rows = []

@@ -4,6 +4,7 @@ aggregates, lag/lead deltas, sessionization)."""
 from __future__ import annotations
 
 from collections.abc import Sequence
+from itertools import accumulate
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -116,11 +117,12 @@ def global_row_number(
     1. ``repartitionByRange`` on the order keys — Spark's distributed sort
        machinery (sampled range boundaries; partition i's keys all precede
        partition i+1's) — plus ``sortWithinPartitions``: together a full
-       distributed sort. ``localCheckpoint`` pins boundaries AND row order
-       so the two downstream jobs (offset count + final projection) see
-       the SAME rows in the SAME positions — without it a re-sample
-       between jobs could shift rows across partitions and corrupt the
-       offsets.
+       distributed sort, AQE-sized unless ``num_partitions`` pins it
+       (coalescing merges only CONTIGUOUS ranges, in order).
+       ``localCheckpoint`` pins boundaries AND row order so the two
+       downstream jobs (offset totals + final projection) see the SAME
+       rows in the SAME positions — without it a re-sample between jobs
+       could shift rows across partitions and corrupt the offsets.
     2. LOCAL row number read off ``monotonically_increasing_id()`` over
        the pinned sorted scan ((partition << 33) + row offset — parallel,
        no global sort, and no WindowExec: a window partitioned by
@@ -128,8 +130,9 @@ def global_row_number(
        checkpoint scan's UnknownPartitioning can't prove the clustering
        it has by construction).
     3. One bounded collect of per-partition counts (one long per range
-       partition) -> cumulative offsets, broadcast-joined back; global
-       row number = local row number + partition offset.
+       partition) -> cumulative offsets, added back as a literal-array
+       lookup keyed by the partition id; global row number = local row
+       number + partition offset.
 
     ``order_by`` must be a TOTAL order (tie-break on a unique key): then the
     result is deterministic regardless of where the sampled boundaries land.
@@ -141,13 +144,17 @@ def global_row_number(
 _MID_OFFSET_BITS = 33  # low bits of monotonically_increasing_id: row offset
 
 
-def _partition_offsets(
-    counts: dict[int, int], n: int
-) -> tuple[list[tuple[int, int]], int]:
-    """``[(pid, rows before pid)]`` for range partitions ``0..n-1`` plus
-    the total row count. Raises when a partition reaches 2^33 rows: its
-    row offsets would overflow into the partition bits of
-    ``monotonically_increasing_id`` and alias the next partition's ids."""
+def _cumulative(totals: dict[int, int], n: int) -> tuple[list[int], int]:
+    """(``[sum of totals before pid]`` for pids ``0..n-1``, grand total)."""
+    acc = list(accumulate((totals.get(p, 0) for p in range(n)), initial=0))
+    return acc[:-1], acc[-1]
+
+
+def _partition_offsets(counts: dict[int, int], n: int) -> tuple[list[int], int]:
+    """:func:`_cumulative` over per-partition ROW counts. Raises when a
+    partition reaches 2^33 rows: its row offsets would overflow into the
+    partition bits of ``monotonically_increasing_id`` and alias the next
+    partition's ids."""
     over = {p: c for p, c in counts.items() if c >= 1 << _MID_OFFSET_BITS}
     if over:
         raise ValueError(
@@ -156,11 +163,47 @@ def _partition_offsets(
             "the monotonically_increasing_id row-offset width — pass a "
             "larger num_partitions"
         )
-    offsets, acc = [], 0
-    for pid in range(n):
-        offsets.append((pid, acc))
-        acc += counts.get(pid, 0)
-    return offsets, acc
+    return _cumulative(counts, n)
+
+
+def _pinned_range_totals(
+    df: DataFrame,
+    order_by: Sequence[Column],
+    num_partitions: int | None,
+    totals: dict[str, Column],
+    sort: bool = False,
+) -> tuple[DataFrame, dict[str, dict[int, int]], int]:
+    """The shared first half of the global-order family: the range scan
+    (AQE-sized unless ``num_partitions`` pins it), pinned by a LAZY
+    ``localCheckpoint``, and one bounded collect of its per-partition
+    ``totals`` -> ``(part, {name: {pid: total}}, n)``, ``n`` one past the
+    highest non-empty pid. The collect materializes the checkpoint inside
+    its own job (no separate eager job), so the caller's final projection
+    reads the same partitions in the same row order."""
+    by_range = (
+        df.repartitionByRange(num_partitions, *order_by)
+        if num_partitions
+        else df.repartitionByRange(*order_by)
+    )
+    if sort:
+        by_range = by_range.sortWithinPartitions(*order_by)
+    part = by_range.localCheckpoint(eager=False)
+    rows = (
+        part.groupBy(F.spark_partition_id().alias("__pid"))
+        .agg(*[c.alias(k) for k, c in totals.items()])
+        .collect()
+    )  # bounded: one row per range partition
+    per_pid = {k: {r["__pid"]: r[k] or 0 for r in rows} for k in totals}
+    return part, per_pid, max((r["__pid"] for r in rows), default=-1) + 1
+
+
+def _offset_lookup(offsets: list[int]) -> Column:
+    """``offsets[__pid]`` as one SQL expression (one Py4J call) that folds
+    to an array literal: no driver-built frame, no join, no broadcast."""
+    return F.expr(
+        f"element_at(CAST(array({', '.join(map(str, offsets))}) "
+        "AS ARRAY<BIGINT>), __pid + 1)"
+    )
 
 
 def _global_row_number_with_total(
@@ -169,8 +212,6 @@ def _global_row_number_with_total(
     out_col: str,
     num_partitions: int | None,
 ) -> tuple[DataFrame, int]:
-    spark = df.sparkSession
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     # The ONLY shuffle in the pass: range-repartition on the order keys,
     # then SORT WITHIN each range partition — the checkpoint pins the
     # sorted rows, so the local row number can be read off
@@ -184,54 +225,32 @@ def _global_row_number_with_total(
     # shuffle outright; rfm job attribution: the per-pass AQE
     # materialization of that exchange disappears with it). Sort work is
     # unchanged — sortWithinPartitions here replaces the window's
-    # [__pid, order] sort there.
-    #
-    # LAZY checkpoint: the offsets collect below is the first action on
-    # this frame and materializes the checkpoint inside its own job, so
-    # boundary pinning costs no separate eager-materialization job (r13).
-    # The pinning guarantee is unchanged — localCheckpoint persists every
-    # partition computed by that first job (and back-fills any missing at
-    # its end), so the final-projection job reads the SAME partitioning
-    # AND per-partition row order the offsets pass saw; the id expression
-    # is deterministic over a pinned scan (task partition index + row
-    # position), so both jobs see identical (__pid, __lrn) for every row.
+    # [__pid, order] sort there. The id expression is deterministic over
+    # the pinned scan, so the totals job and the final projection see the
+    # same (pid, local row number) for every row.
     # Bounds: ids are (pid << 33) | offset, so this holds to 2^33 rows
     # per range partition — STRICTLY WIDER than the window form it
     # replaces (row_number is a 32-bit int, 2^31 rows per partition).
     # ``_partition_offsets`` enforces it on the collected counts.
-    part = (
-        df.repartitionByRange(n, *order_by)
-        .sortWithinPartitions(*order_by)
-        .localCheckpoint(eager=False)
+    part, per_pid, n = _pinned_range_totals(
+        df, order_by, num_partitions, {"rows": F.count("*")}, sort=True
     )
-    local = (
+    offsets, total = _partition_offsets(per_pid["rows"], n)
+    out = (
         part.withColumn("__mid", F.monotonically_increasing_id())
         .withColumn(
             "__pid",
             F.shiftrightunsigned(F.col("__mid"), _MID_OFFSET_BITS).cast("int"),
         )
         .withColumn(
-            "__lrn",
+            out_col,
             F.col("__mid").bitwiseAND(F.lit((1 << _MID_OFFSET_BITS) - 1))
-            + F.lit(1),
+            + F.lit(1)
+            + _offset_lookup(offsets),
         )
-        .drop("__mid")
+        .drop("__mid", "__pid")
     )
-    counts = dict(
-        part.groupBy(F.spark_partition_id().alias("__pid"))
-        .agg(F.count("*").alias("c"))
-        .collect()
-    )  # bounded: one row per range partition
-    offsets, acc = _partition_offsets(counts, n)
-    off = F.broadcast(
-        spark.createDataFrame(offsets, schema="__pid int, __off long")
-    )
-    out = (
-        local.join(off, "__pid")
-        .withColumn(out_col, (F.col("__lrn") + F.col("__off")).cast("long"))
-        .drop("__pid", "__lrn", "__off")
-    )
-    return out, acc
+    return out, total
 
 
 def global_prefix_sum(
@@ -248,12 +267,14 @@ def global_prefix_sum(
     scan, expressed with the same three declarative steps as
     :func:`global_row_number`:
 
-    1. ``repartitionByRange`` on the order keys (boundary-pinning
-       ``localCheckpoint`` — see :func:`global_row_number` for why);
+    1. ``repartitionByRange`` on the order keys, AQE-sized unless
+       ``num_partitions`` pins it (boundary-pinning ``localCheckpoint`` —
+       see :func:`global_row_number` for why);
     2. LOCAL running sums within each range partition (WindowExec
        partitioned by ``spark_partition_id()`` — parallel);
     3. one bounded collect of per-partition column totals (one row per
-       range partition) -> cumulative offsets, broadcast-joined back.
+       range partition) -> cumulative offsets, added back as a
+       literal-array lookup keyed by the partition id.
 
     ``value_cols`` must be integral (or decimal) so the sums are exact and
     order-of-evaluation independent; ``order_by`` must be a total order.
@@ -272,48 +293,22 @@ def global_prefix_sum(
     exchange it removes. The monotonic-id trick that fixed the rank
     helper cannot express a running SUM, so the window stays.
     """
-    spark = df.sparkSession
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # lazy checkpoint, materialized by the totals collect below — same
-    # one-job-saved fusion (and same pinning guarantee) as
-    # :func:`_global_row_number_with_total`
-    part = df.repartitionByRange(n, *order_by).localCheckpoint(eager=False)
-    part = part.withColumn("__pid", F.spark_partition_id())
+    sums = {c: F.sum(c).cast("long") for c in value_cols}
+    part, per_pid, n = _pinned_range_totals(df, order_by, num_partitions, sums)
     w = (
         Window.partitionBy("__pid")
         .orderBy(*order_by)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    local = part
+    out = part.withColumn("__pid", F.spark_partition_id())
+    totals = {}
     for c in value_cols:
-        local = local.withColumn(
-            f"__l_{c}", F.sum(F.col(c)).over(w).cast("long")
-        )
-    counts = {
-        r["__pid"]: r
-        for r in part.groupBy("__pid")
-        .agg(*[F.sum(c).cast("long").alias(c) for c in value_cols])
-        .collect()
-    }  # bounded: one row per range partition
-    offsets: list[tuple] = []
-    acc = {c: 0 for c in value_cols}
-    for pid in range(n):
-        offsets.append((pid, *[acc[c] for c in value_cols]))
-        row = counts.get(pid)
-        if row is not None:
-            for c in value_cols:
-                acc[c] += row[c] or 0
-    schema = ", ".join(
-        ["__pid int"] + [f"__off_{c} long" for c in value_cols]
-    )
-    off = F.broadcast(spark.createDataFrame(offsets, schema=schema))
-    out = local.join(off, "__pid")
-    for c in value_cols:
+        offsets, totals[c] = _cumulative(per_pid[c], n)
         out = out.withColumn(
             f"{out_prefix}{c}",
-            (F.col(f"__l_{c}") + F.col(f"__off_{c}")).cast("long"),
-        ).drop(f"__l_{c}", f"__off_{c}")
-    return out.drop("__pid"), acc
+            F.sum(F.col(c)).over(w).cast("long") + _offset_lookup(offsets),
+        )
+    return out.drop("__pid"), totals
 
 
 def global_ntile(

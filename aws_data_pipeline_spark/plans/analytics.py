@@ -858,8 +858,8 @@ def price_percentiles_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame
 def customer_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ntile(4) over total spend — deterministic (total order via the
     custkey tie-break). Round 8: computed by the DISTRIBUTED global-rank
-    operator (range repartition + per-partition row_number + broadcast
-    offsets, operators/windows.py:global_ntile) instead of an unpartitioned
+    operator (range repartition + per-partition row number + literal
+    partition offsets, operators/windows.py:global_ntile) instead of an unpartitioned
     ``Window.orderBy`` — the latter plans ``Exchange SinglePartition``, one
     task holding every customer row, which at 100 TB (billions of
     customers) is the canonical WindowExec scale-killer. Exact ntile
@@ -868,7 +868,7 @@ def customer_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Demoted round 13 (paired with rfm_customer_segments' promotion): RFM
     runs this entry's EXACT distributed global-ntile chain three times
     over one aggregate (operators/windows.py::global_ntile — same range
-    repartition + broadcast offsets), so the promoted entry is a strict
+    repartition + literal partition offsets), so the promoted entry is a strict
     superset of this one's driver signal. Full oracle stays in the
     pytest replica."""
     o = T(spark, sf_dir, "orders")
@@ -1553,7 +1553,7 @@ def conversion_latency_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribution-window sanity check in one number. The candidate join
     is the stream-stream interval join's batch shape; the GLOBAL
     quantiles ride the distributed global-rank machinery (range
-    repartition + broadcast offsets) — never a single-partition sort of
+    repartition + literal partition offsets) — never a single-partition sort of
     the converting set. Born round 12 demoted-with-full-oracle;
     PROMOTED round 13 under the named-demotion rule, demoting
     click_purchase_attribution — whose 10-minute click->purchase

@@ -728,10 +728,10 @@ def test_global_ntile_matches_window_ntile_and_parallelizes(spark):
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
     # r14 shape: the local rank is read off monotonically_increasing_id over
-    # the pinned sorted scan — no WindowExec at all, and the only exchange is
-    # the bounded per-partition-offset broadcast (the old window form paid an
-    # Exchange hashpartitioning(__pid) because the checkpoint scan reports
-    # UnknownPartitioning)
+    # the pinned sorted scan — no WindowExec and no exchange at all: the
+    # per-partition offsets are a literal lookup (the old window form paid
+    # an Exchange hashpartitioning(__pid) because the checkpoint scan
+    # reports UnknownPartitioning)
     assert "Window" not in plan
     assert "hashpartitioning" not in plan
     assert "monotonically_increasing_id" in plan

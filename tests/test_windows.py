@@ -1,4 +1,6 @@
-"""Global row number preconditions that must fail loudly, not corrupt ids.
+"""Global-order operators: preconditions that must fail loudly, not
+corrupt ids, and the default (AQE-sized) range path against the
+single-partition window.
 
 The offset-width checks are pure Python: the per-partition counts are
 faked, since a real 2^33-row range partition is out of reach in a unit
@@ -8,17 +10,22 @@ test. The id bit-layout check runs on a small multi-partition frame.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from aws_data_pipeline_spark.operators.windows import (
     _MID_OFFSET_BITS,
     _partition_offsets,
+    _pinned_range_totals,
+    global_ntile,
+    global_prefix_sum,
+    global_row_number,
 )
 
 
 def test_partition_offsets_are_cumulative():
     offsets, total = _partition_offsets({0: 3, 2: 5}, 4)
-    assert offsets == [(0, 0), (1, 3), (2, 3), (3, 8)]
+    assert offsets == [0, 3, 3, 8]
     assert total == 8
 
 
@@ -49,3 +56,62 @@ def test_monotonic_id_bit_layout_is_partition_then_row_offset(spark):
         offsets.setdefault(r.pid, []).append(r.mid & mask)
     assert len(offsets) == 5
     assert all(sorted(o) == list(range(len(o))) for o in offsets.values())
+
+
+# Forces AQE to coalesce the 8-way range shuffle into several partitions
+# instead of one: the ~100 KiB frame is far below the default 1 MiB
+# coalescing floor.
+_SEVERAL = {
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16k",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1k",
+}
+
+
+@pytest.fixture(params=["one", "several"])
+def coalesced(spark, request):
+    """Yields the expected range-partition count class under AQE sizing:
+    ``"one"`` at the session defaults, ``"several"`` with small targets."""
+    conf = _SEVERAL if request.param == "several" else {}
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    yield request.param
+    for k, v in old.items():
+        spark.conf.set(k, v)
+
+
+def test_default_range_path_matches_single_partition_window(spark, coalesced):
+    """With no ``num_partitions`` AQE sizes the range shuffle; coalescing
+    merges contiguous ranges in order, so prefix sums, row numbers and
+    ntiles still equal the one-task ``Window.orderBy`` result, for
+    duplicate order keys tie-broken by a unique id. The offsets ride a
+    literal lookup: no driver-built frame, no broadcast."""
+    df = spark.range(0, 3000).select(
+        "id",
+        (F.col("id") * 7919 % 97).alias("v"),  # ~31 duplicates per key
+        (F.col("id") * 31 % 5 + 1).alias("w"),
+    )
+    order = [F.col("v").desc(), F.col("id")]
+    _, per_pid, n = _pinned_range_totals(df, order, None, {"r": F.count("*")})
+    assert sum(per_pid["r"].values()) == 3000
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n == 1 if coalesced == "one" else 1 < n < shuffle
+
+    w = Window.orderBy(*order)
+    running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    cum, totals = global_prefix_sum(df, order, ["w"])
+    assert totals == {"w": 9000}
+    rn = global_row_number(df, order)
+    nt = global_ntile(df, 7, order, out_col="q")
+    for got, want in (
+        (cum, df.withColumn("cum_w", F.sum("w").over(running))),
+        (rn, df.withColumn("rn", F.row_number().over(w))),
+        (nt, df.withColumn("q", F.ntile(7).over(w))),
+    ):
+        assert sorted(got.collect()) == sorted(want.collect())
+        plan = got._sc._jvm.PythonSQLUtils.explainString(
+            got._jdf.queryExecution(), "formatted"
+        )
+        assert "applySchemaToPythonRDD" not in plan
+        assert "BroadcastExchange" not in plan
+        assert "SinglePartition" not in plan
