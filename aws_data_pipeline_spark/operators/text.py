@@ -874,6 +874,13 @@ def tfidf_shingle_cosine_pairs(
     index form). Output: ``(doc_a, doc_b, n_shared, cosine)`` for pairs
     at or above ``threshold``, ids ascending within the pair.
 
+    PRECONDITION: ``id_col`` is unique per input row (one row per
+    document, the contract the DuckDB oracle assumes). Term frequencies
+    are counted inside each row, so two rows sharing an id are not
+    merged: each keeps its own tf vector, which distorts the norms and
+    cosines and can emit ``doc_a == doc_b`` pairs. Pre-aggregate
+    duplicate ids (e.g. concatenate their texts) before calling.
+
     Scale shape (the ``jaccard_pairs`` inverted-index idiom): the
     postings index is built ONCE — (doc, xxhash64(shingle), tf) with the
     8-byte hash replacing the ~4-word string in every shuffle — grouped

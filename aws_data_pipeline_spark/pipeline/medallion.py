@@ -8,8 +8,13 @@ Reference parity map:
   cross-run idempotency via anti-join against already-ingested transaction
   ids in the target partitions.
 - ``silver_to_gold`` = reference ``src/glue_jobs/silver_to_gold.py:14-149``
-  (daily/monthly/customer gold tables) with one shared cached scan instead
-  of three independent scans.
+  (daily/monthly/customer gold tables) built from one shuffle instead of
+  three independent scans and six exchanges: every gold key holds
+  ``customer_id``, so silver is clustered by customer once, cached, and
+  each table aggregates the cached partitions in place. Scale trade-off:
+  raw rows cross that one shuffle with no map-side partial aggregate, so
+  one very hot customer lands in one task — the same final-stage bound
+  the lifetime table (grain: customer) already had.
 - ``run_pipeline`` = the Step Functions DAG (``pipeline_definition.json``):
   sequential stages, retry-with-backoff, failure notify — in-process.
 """
@@ -61,6 +66,12 @@ def dedup_against_silver(batch: DataFrame, silver_path: str) -> DataFrame:
     corrections belong in a compaction/merge pass (or an ACID table
     format), not in the ingest dedup.
 
+    No ``distinct`` on the silver side: a left-anti join keeps a batch row
+    iff no silver row matches, however many do, so duplicate ids on the
+    right cannot change the result (and ids are unique per silver
+    partition anyway). The aggregate would only add a shuffle stage in
+    front of the join.
+
     The caller must have persisted/checkpointed ``batch`` if recomputing its
     lineage twice (once for the key collect, once downstream) is expensive.
     """
@@ -71,11 +82,9 @@ def dedup_against_silver(batch: DataFrame, silver_path: str) -> DataFrame:
     ]
     if not touched:
         return batch
-    existing = (
-        read_partition_slice(batch.sparkSession, silver_path, touched, PARTITION_KEYS)
-        .select("transaction_id")
-        .distinct()
-    )
+    existing = read_partition_slice(
+        batch.sparkSession, silver_path, touched, PARTITION_KEYS
+    ).select("transaction_id")
     return batch.join(existing, "transaction_id", "left_anti")
 
 
@@ -218,14 +227,52 @@ def bronze_to_silver(
     return {k: int(v) for k, v in obs.get.items()}
 
 
+GOLD_COLUMNS = (
+    "year",
+    "month",
+    "day",
+    "customer_id",
+    "amount",
+    "transaction_id",
+    "transaction_date",
+)
+
+
+def cluster_for_gold(silver: DataFrame) -> DataFrame:
+    """Silver projected to the columns gold reads, hash-partitioned by
+    ``customer_id`` and cached — the one shuffle every gold table shares.
+
+    Every gold grouping key contains ``customer_id`` (daily, monthly,
+    lifetime), so the clustering satisfies each aggregate's required
+    distribution, both phases of the ``countDistinct`` plan included, and
+    Spark plans no further exchange: each table is one job over the cached
+    partitions. The repartition takes no count, so AQE coalesces it to the
+    data's size; the coalesced hash partitioning still counts as clustered
+    because ``canChangeCachedPlanOutputPartitioning`` (session.DEFAULT_CONF)
+    lets the cached body report it. Sums are decimal-exact
+    (``functions.exact``), so results do not depend on the partitioning.
+    The caller unpersists."""
+    return silver.select(*GOLD_COLUMNS).repartition("customer_id").cache()
+
+
 def silver_to_gold(spark: SparkSession, cfg: PipelineConfig) -> dict[str, int]:
-    """Silver -> three gold tables from ONE cached scan (the reference
-    re-scans silver per table, ``silver_to_gold.py:126-128``)."""
-    silver = read_zone(spark, cfg.silver_path)
-    if silver.isEmpty():  # S10 — single primitive, not count()/rdd.isEmpty()
-        return {"gold_tables": 0}
-    silver = silver.cache()
+    """Silver -> three gold tables from ONE shuffle of one scan (the
+    reference re-scans silver per table, ``silver_to_gold.py:126-128``,
+    and each table's ``countDistinct`` would add two exchanges more).
+
+    Silver is clustered by customer once (:func:`cluster_for_gold`) and
+    every table aggregates the cached partitions with no exchange of its
+    own. Trade-off at scale: raw rows shuffle once by customer, with no
+    map-side partial aggregate before it, so one very hot customer lands
+    in one task — the same final-stage bound the lifetime table already
+    had. A silver zone with no rows writes nothing and leaves the existing
+    gold tables as they are."""
+    silver = cluster_for_gold(read_zone(spark, cfg.silver_path))
     try:
+        # S10 — single primitive, not count(); it runs on the cache the
+        # tables read next, so the probe costs no extra silver scan
+        if silver.isEmpty():
+            return {"gold_tables": 0}
         daily = agg_ops.aggregate_transactions(
             silver,
             ["year", "month", "day", "customer_id"],

@@ -19,6 +19,12 @@ Every config below is a 100 TB-posture decision:
   chose, so a consumer that needs it hash-partitioned at exactly
   ``shuffle.partitions`` (e.g. to line up with another shuffled join side)
   may pay a re-shuffle on read. Results are unaffected either way.
+  Medallion gold relies on the other side of this: a cached body whose
+  last exchange is ``HashPartitioning(customer_id)`` still reports that
+  partitioning after AQE coalesces it, and it satisfies every downstream
+  aggregate clustered on a key that holds ``customer_id``, so the three
+  gold tables plan no exchange of their own
+  (``pipeline.medallion.cluster_for_gold``).
 - ``spark.sql.session.timeZone=UTC``: deterministic date-part extraction
   regardless of host TZ (and parity with the DuckDB oracle's naive timestamps).
 - dynamic partition overwrite: gold re-runs replace only touched partitions

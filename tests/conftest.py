@@ -87,6 +87,29 @@ def spark():
     yield s
 
 
+# Makes AQE coalesce a test-sized shuffle into several partitions instead
+# of one: the frames the tests shuffle (tens of KiB) are far below the
+# default 1 MiB coalescing floor.
+_SEVERAL_PARTITIONS = {
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16k",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1k",
+}
+
+
+@pytest.fixture(params=["one", "several"])
+def coalesced(spark, request):
+    """Yields the expected AQE-coalesced partition count class of a
+    shuffle: ``"one"`` at the session defaults, ``"several"`` with small
+    targets. The session conf is restored afterwards."""
+    conf = _SEVERAL_PARTITIONS if request.param == "several" else {}
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    yield request.param
+    for k, v in old.items():
+        spark.conf.set(k, v)
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

@@ -11,9 +11,13 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from aws_data_pipeline_spark.pipeline import medallion
 from aws_data_pipeline_spark.pipeline.medallion import (
     PipelineConfig,
+    bronze_to_silver,
+    dedup_against_silver,
     run_pipeline,
+    silver_to_gold,
 )
 
 CLOCK = "2026-01-01 00:00:00"
@@ -423,3 +427,190 @@ def test_streaming_sink_writes_one_file_per_touched_partition(
     assert set(added) == {(2024, 3, 5), (2024, 3, 6)}
     assert all(n == 1 for n in added.values()), added
     assert spark.read.parquet(silver_path).count() == 203 + len(new)
+
+
+# ---------------------------------------------------------------------------
+# Gold from one customer-clustered cache
+# ---------------------------------------------------------------------------
+
+_MONEY = "CAST(SUM(CAST(amount AS DECIMAL(30,2))) AS DOUBLE)"
+
+_AGG = f"""count(*) AS transaction_count, {_MONEY} AS total_amount,
+           {_MONEY} / count(amount) AS avg_amount,
+           min(amount) AS min_amount, max(amount) AS max_amount,
+           count(DISTINCT transaction_id) AS unique_transactions"""
+
+_GOLD_SQL = {
+    "daily_aggregations": f"""
+        SELECT year, month, day, customer_id, {_AGG},
+               'daily' AS aggregation_level
+        FROM silver GROUP BY year, month, day, customer_id""",
+    "monthly_aggregations": f"""
+        SELECT year, month, customer_id, {_AGG},
+               'monthly' AS aggregation_level
+        FROM silver GROUP BY year, month, customer_id""",
+    "customer_insights": f"""
+        SELECT customer_id, count(*) AS lifetime_transactions,
+               {_MONEY} AS lifetime_value,
+               {_MONEY} / count(amount) AS avg_transaction_amount,
+               min(transaction_date) AS first_transaction_date,
+               max(transaction_date) AS last_transaction_date,
+               count(DISTINCT CAST(transaction_date AS DATE)) AS active_days,
+               date_diff('day', CAST(min(transaction_date) AS DATE),
+                         CAST(max(transaction_date) AS DATE))
+                 AS customer_tenure_days,
+               CASE WHEN {_MONEY} > 10000 THEN 'high_value'
+                    WHEN {_MONEY} > 5000 THEN 'medium_value'
+                    ELSE 'low_value' END AS customer_segment
+        FROM silver GROUP BY customer_id""",
+}
+
+
+def _ingest_with_amendment(spark, cfg, tmp_path):
+    """The fixture's pipeline run, then a second delivery that re-dates
+    ``txn_00000000`` (cust_000000, 2024-03-01) to 2024-03-15. The amended
+    row lands in a partition the anti-join does not hold that id in, so
+    silver keeps both rows: the customer's March then has one id on two
+    days, and monthly ``unique_transactions`` differs from
+    ``transaction_count``."""
+    clock = F.lit(CLOCK).cast("timestamp")
+    rows = make_fixture(pathlib.Path(cfg.bronze_path))
+    run_pipeline(spark, cfg, clock=clock)
+    amended = tmp_path / "amended"
+    amended.mkdir()
+    amended.joinpath("batch_1.json").write_text(
+        json.dumps(
+            {**rows[0], "amount": 123.45, "transaction_date": "2024-03-15 11:00:00"}
+        )
+    )
+    res = bronze_to_silver(
+        spark,
+        PipelineConfig(
+            bronze_path=str(amended),
+            silver_path=cfg.silver_path,
+            gold_path=cfg.gold_path,
+        ),
+        clock=clock,
+    )
+    assert res["rows_written"] == 1
+
+
+def _gold_frames(cfg):
+    """{table: (gold rows, DuckDB recomputation over silver)} as pandas."""
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW silver AS SELECT * FROM read_parquet("
+            f"'{cfg.silver_path}/**/*.parquet', hive_partitioning = true)"
+        )
+        out = {}
+        for table, sql in _GOLD_SQL.items():
+            got = con.execute(
+                "SELECT * FROM read_parquet("
+                f"'{cfg.gold_path}/{table}/**/*.parquet', hive_partitioning = true)"
+            ).df()
+            out[table] = (got, con.execute(sql).df())
+        return out
+    finally:
+        con.close()
+
+
+def test_gold_matches_duckdb_recompute(spark, cfg, tmp_path, coalesced, monkeypatch):
+    """All three gold tables equal a DuckDB recomputation over the written
+    silver on every column, whether AQE coalesces the customer-clustered
+    cache into one partition or several: the exact sums make the result
+    independent of how customers are spread over tasks."""
+    from tests.oracle import compare_frames
+
+    _ingest_with_amendment(spark, cfg, tmp_path)
+    partitions = []
+    cluster = medallion.cluster_for_gold
+
+    def spy(df):
+        out = cluster(df)
+        partitions.append(out.rdd.getNumPartitions())
+        return out
+
+    monkeypatch.setattr(medallion, "cluster_for_gold", spy)
+    assert silver_to_gold(spark, cfg) == {"gold_tables": 3}
+    if coalesced == "one":
+        assert partitions == [1]
+    else:
+        assert len(partitions) == 1 and partitions[0] >= 2
+
+    frames = _gold_frames(cfg)
+    for table, (got, want) in frames.items():
+        compare_frames(got, want, table)
+    monthly = frames["monthly_aggregations"][0].set_index("customer_id")
+    amended = monthly.loc["cust_000000"]
+    assert amended.unique_transactions == amended.transaction_count - 1
+
+
+def test_gold_reads_one_clustered_cache_without_exchanges(spark, cfg, monkeypatch):
+    """Receipt for the one-shuffle gold build: no gold frame plans an
+    exchange above the cached scan, one ``silver_to_gold`` call runs at
+    most 7 Spark jobs (12 when each table's ``countDistinct`` planned its
+    own two exchanges), and the ingest anti-join aggregates nothing on its
+    silver side."""
+    run_pipeline(spark, cfg, clock=F.lit(CLOCK).cast("timestamp"))
+
+    plans = {}
+    write = medallion.write_zone
+
+    def spy(df, path, **kw):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        plans[path.rsplit("/", 1)[1]] = plan.split("InMemoryTableScan", 1)[0]
+        write(df, path, **kw)
+
+    monkeypatch.setattr(medallion, "write_zone", spy)
+    silver_to_gold(spark, cfg)
+    assert set(plans) == set(_GOLD_SQL)
+    for table, above_cache in plans.items():
+        assert "Exchange" not in above_cache, (table, above_cache)
+    monkeypatch.undo()
+
+    sc = spark.sparkContext
+    sc.setJobGroup("gold-receipt", "one silver_to_gold call")
+    try:
+        silver_to_gold(spark, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("gold-receipt")
+    assert 0 < len(jobs) <= 7, sorted(jobs)
+
+    batch = spark.createDataFrame(
+        [("txn_00000000", 2024, 3, 1), ("txn_new", 2024, 3, 1)],
+        "transaction_id string, year int, month int, day int",
+    )
+    out = dedup_against_silver(batch, cfg.silver_path)
+    assert [r.transaction_id for r in out.collect()] == ["txn_new"]
+    assert "HashAggregate" not in out._jdf.queryExecution().executedPlan().toString()
+
+
+def test_empty_silver_zone_leaves_gold_untouched(spark, cfg, tmp_path):
+    """A silver zone that exists but holds no rows returns
+    ``{"gold_tables": 0}`` and skips every gold overwrite."""
+    run_pipeline(spark, cfg, clock=F.lit(CLOCK).cast("timestamp"))
+    gold = pathlib.Path(cfg.gold_path)
+
+    def snapshot():
+        return {
+            str(p.relative_to(gold)): (p.stat().st_mtime_ns, p.read_bytes())
+            for p in gold.rglob("*")
+            if p.is_file()
+        }
+
+    before = snapshot()
+    assert any(k.endswith(".parquet") for k in before)
+    empty = str(tmp_path / "empty_silver")
+    spark.read.parquet(cfg.silver_path).limit(0).write.parquet(empty)
+    assert spark.read.parquet(empty).isEmpty()
+
+    res = silver_to_gold(
+        spark,
+        PipelineConfig(
+            bronze_path=cfg.bronze_path, silver_path=empty, gold_path=cfg.gold_path
+        ),
+    )
+    assert res == {"gold_tables": 0}
+    assert snapshot() == before

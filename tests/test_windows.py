@@ -58,28 +58,6 @@ def test_monotonic_id_bit_layout_is_partition_then_row_offset(spark):
     assert all(sorted(o) == list(range(len(o))) for o in offsets.values())
 
 
-# Forces AQE to coalesce the 8-way range shuffle into several partitions
-# instead of one: the ~100 KiB frame is far below the default 1 MiB
-# coalescing floor.
-_SEVERAL = {
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16k",
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1k",
-}
-
-
-@pytest.fixture(params=["one", "several"])
-def coalesced(spark, request):
-    """Yields the expected range-partition count class under AQE sizing:
-    ``"one"`` at the session defaults, ``"several"`` with small targets."""
-    conf = _SEVERAL if request.param == "several" else {}
-    old = {k: spark.conf.get(k) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    yield request.param
-    for k, v in old.items():
-        spark.conf.set(k, v)
-
-
 def test_default_range_path_matches_single_partition_window(spark, coalesced):
     """With no ``num_partitions`` AQE sizes the range shuffle; coalescing
     merges contiguous ranges in order, so prefix sums, row numbers and
