@@ -17,6 +17,13 @@ Reference parity map:
   the lifetime table (grain: customer) already had.
 - ``run_pipeline`` = the Step Functions DAG (``pipeline_definition.json``):
   sequential stages, retry-with-backoff, failure notify — in-process.
+
+The silver zone's contract lives here once and the streaming medallion
+(``streaming.ingest``, ``streaming.gold``) calls it too:
+:func:`silver_schema` is the one read schema every silver read pins (no
+footer-inference job; a zone without data files reads as 0 rows),
+:func:`append_silver` the one guarded append, and
+:func:`write_gold_grains` the one daily/monthly gold aggregate-and-write.
 """
 
 from __future__ import annotations
@@ -27,6 +34,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from aws_data_pipeline_spark.catalog import TXN_SCHEMA
 from aws_data_pipeline_spark.operators import aggregate as agg_ops
@@ -82,8 +90,9 @@ def dedup_against_silver(batch: DataFrame, silver_path: str) -> DataFrame:
     ]
     if not touched:
         return batch
+    spark = batch.sparkSession
     existing = read_partition_slice(
-        batch.sparkSession, silver_path, touched, PARTITION_KEYS
+        spark, silver_path, touched, PARTITION_KEYS, silver_schema(spark)
     ).select("transaction_id")
     return batch.join(existing, "transaction_id", "left_anti")
 
@@ -93,7 +102,6 @@ class PipelineConfig:
     bronze_path: str
     silver_path: str
     gold_path: str
-    timestamp_format: str = "yyyy-MM-dd HH:mm:ss"
     max_attempts: int = 2  # reference retry: 1 retry per stage
     backoff_seconds: float = 1.0  # reference: 30s, scaled for tests
     backoff_rate: float = 2.0
@@ -120,6 +128,63 @@ def transform_bronze(df: DataFrame, clock: Column | None = None) -> DataFrame:
     out = derive.add_amount_category(out, "amount")
     out = derive.add_type_derived(out, "amount")
     return out
+
+
+_SILVER_SCHEMA: StructType | None = None
+
+
+def silver_schema(spark: SparkSession) -> StructType:
+    """The silver zone's read schema: ``transform_bronze``'s output over
+    ``TXN_SCHEMA``, derived by analysing the transform over an empty frame
+    (no Spark job) instead of being written out a second time. The
+    analysis costs ~0.1 s per call, and the result depends on code
+    only, so it is derived once per process.
+
+    Every silver read pins it (SURVEY §4.2-4): no read starts a
+    footer-inference job, and a zone holding only ``_SUCCESS`` reads as 0
+    rows instead of failing. Columns a producer added under
+    ``schema_policy="widen"`` are not in it, so pinned reads drop them;
+    gold and the anti-join read declared columns only, and the widen
+    type-conflict guard keeps its own ``merge_schema`` read."""
+    global _SILVER_SCHEMA
+    if _SILVER_SCHEMA is None:
+        empty = spark.createDataFrame([], TXN_SCHEMA)
+        _SILVER_SCHEMA = transform_bronze(empty).schema
+    return _SILVER_SCHEMA
+
+
+def append_silver(silver: DataFrame, silver_path: str, guard: bool) -> dict[str, int]:
+    """The one silver append, batch and streaming: when ``guard`` is set
+    the transformed batch is persisted and anti-joined against the silver
+    partitions it touches (:func:`dedup_against_silver`), then appended
+    partitioned by (year, month, day) in ONE write action that also
+    carries the QC counts (``observe``). Returns those counts.
+
+    The caller decides the guard: only a genuinely missing zone may skip
+    it (an explicit ``zone_exists`` probe, never a swallowed read error,
+    SURVEY §4.2-6). The persist keeps the batch from being recomputed for
+    the touched-key collect and the write; its cached body runs under AQE
+    (session.DEFAULT_CONF), so the dedup window's shuffle is coalesced to
+    the batch's real size and a small batch appends one file per touched
+    day, not one per shuffle partition."""
+    persisted = None
+    if guard:
+        persisted = silver.persist()
+        silver = dedup_against_silver(persisted, silver_path)
+    obs = Observation("qc")
+    observed = silver.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows_written"),
+        # observe() forbids DISTINCT aggregates; the HLL sketch is also the
+        # right cardinality tool at 100 TB
+        F.approx_count_distinct(F.col("customer_id")).alias("approx_customers"),
+    )
+    try:
+        write_zone(observed, silver_path, partition_by=PARTITION_KEYS, mode="append")
+    finally:
+        if persisted is not None:
+            persisted.unpersist()
+    return {k: int(v) for k, v in obs.get.items()}
 
 
 def bronze_to_silver(
@@ -151,8 +216,8 @@ def bronze_to_silver(
       the batch's new top-level fields), new columns ride the transform
       untouched and APPEND to silver. Older silver files lack them, so
       evolved zones read with ``read_zone(..., merge_schema=True)``
-      until a compaction settles the footers; gold builds select only
-      declared columns and survive either way
+      until a compaction settles the footers; gold and the anti-join
+      read the pinned :func:`silver_schema`, which leaves them out
       (tests/test_medallion.py::test_schema_evolution_widen).
     """
     if schema_policy == "widen":
@@ -189,42 +254,11 @@ def bronze_to_silver(
             f"unknown schema_policy {schema_policy!r} (pin | widen)"
         )
     bronze = read_jsonl(spark, cfg.bronze_path, schema)
-    silver = transform_bronze(bronze, clock=clock)
-
-    # explicit existence probe: only a genuinely missing zone (first run)
-    # skips the anti-join; any other silver read error propagates rather
-    # than silently disabling cross-run dedup (SURVEY §4.2-6)
-    persisted = None
-    if zone_exists(spark, cfg.silver_path):
-        # persist: the transformed batch is consumed twice (touched-key
-        # collect + the write) — without this the bronze scan re-runs.
-        # The cached body runs under AQE (session.DEFAULT_CONF), so the
-        # dedup window's shuffle is coalesced to the batch's real size:
-        # the collect, the anti-join and the append see a few partitions,
-        # not shuffle.partitions of them (a small batch appends one file
-        # per touched day)
-        persisted = silver.persist()
-        silver = dedup_against_silver(persisted, cfg.silver_path)
-
-    obs = Observation("qc")
-    observed = silver.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows_written"),
-        # observe() forbids DISTINCT aggregates; the HLL sketch is also the
-        # right cardinality tool at 100 TB
-        F.approx_count_distinct(F.col("customer_id")).alias("approx_customers"),
+    return append_silver(
+        transform_bronze(bronze, clock=clock),
+        cfg.silver_path,
+        guard=zone_exists(spark, cfg.silver_path),
     )
-    try:
-        write_zone(
-            observed,
-            cfg.silver_path,
-            partition_by=PARTITION_KEYS,
-            mode="append",
-        )
-    finally:
-        if persisted is not None:
-            persisted.unpersist()
-    return {k: int(v) for k, v in obs.get.items()}
 
 
 GOLD_COLUMNS = (
@@ -255,38 +289,59 @@ def cluster_for_gold(silver: DataFrame) -> DataFrame:
     return silver.select(*GOLD_COLUMNS).repartition("customer_id").cache()
 
 
+def write_gold_grains(
+    silver: DataFrame, gold_path: str, daily: DataFrame | None = None
+) -> None:
+    """The one daily/monthly gold aggregate-and-write, batch and streaming.
+
+    ``silver`` is a :func:`cluster_for_gold` frame; the monthly table is
+    aggregated from it and ``daily`` (default: the same frame) feeds the
+    daily table — incremental gold passes its touched-month filter of the
+    clustered slice. Both writes pin dynamic partition overwrite: only the
+    (year, month) and (year) partitions present in the input are
+    replaced, whatever the session default."""
+    for table, src, keys, partition_by in (
+        (
+            "daily",
+            silver if daily is None else daily,
+            ["year", "month", "day", "customer_id"],
+            ("year", "month"),
+        ),
+        ("monthly", silver, ["year", "month", "customer_id"], ("year",)),
+    ):
+        write_zone(
+            agg_ops.aggregate_transactions(
+                src, keys, "amount", "transaction_id", level=table
+            ),
+            f"{gold_path}/{table}_aggregations",
+            partition_by=partition_by,
+            mode="overwrite",
+            partition_overwrite="dynamic",
+        )
+
+
 def silver_to_gold(spark: SparkSession, cfg: PipelineConfig) -> dict[str, int]:
     """Silver -> three gold tables from ONE shuffle of one scan (the
     reference re-scans silver per table, ``silver_to_gold.py:126-128``,
     and each table's ``countDistinct`` would add two exchanges more).
 
-    Silver is clustered by customer once (:func:`cluster_for_gold`) and
-    every table aggregates the cached partitions with no exchange of its
-    own. Trade-off at scale: raw rows shuffle once by customer, with no
-    map-side partial aggregate before it, so one very hot customer lands
-    in one task — the same final-stage bound the lifetime table already
-    had. A silver zone with no rows writes nothing and leaves the existing
-    gold tables as they are."""
-    silver = cluster_for_gold(read_zone(spark, cfg.silver_path))
+    Silver is read with the pinned :func:`silver_schema`, clustered by
+    customer once (:func:`cluster_for_gold`), and every table aggregates
+    the cached partitions with no exchange of its own. Trade-off at scale:
+    raw rows shuffle once by customer, with no map-side partial aggregate
+    before it, so one very hot customer lands in one task — the same
+    final-stage bound the lifetime table already had. A silver zone with
+    no rows (a first run whose bronze held only invalid rows included)
+    writes nothing and leaves the existing gold tables as they are."""
+    silver = cluster_for_gold(
+        read_zone(spark, cfg.silver_path, schema=silver_schema(spark))
+    )
     try:
         # S10 — single primitive, not count(); it runs on the cache the
         # tables read next, so the probe costs no extra silver scan
         if silver.isEmpty():
             return {"gold_tables": 0}
-        daily = agg_ops.aggregate_transactions(
-            silver,
-            ["year", "month", "day", "customer_id"],
-            "amount",
-            "transaction_id",
-            level="daily",
-        )
-        monthly = agg_ops.aggregate_transactions(
-            silver,
-            ["year", "month", "customer_id"],
-            "amount",
-            "transaction_id",
-            level="monthly",
-        )
+        write_gold_grains(silver, cfg.gold_path)
         insights = agg_ops.customer_lifetime(
             silver, "customer_id", "amount", "transaction_date"
         )
@@ -295,18 +350,6 @@ def silver_to_gold(spark: SparkSession, cfg: PipelineConfig) -> dict[str, int]:
             "first_transaction_date",
             "last_transaction_date",
             "lifetime_value",
-        )
-        write_zone(
-            daily,
-            f"{cfg.gold_path}/daily_aggregations",
-            partition_by=("year", "month"),
-            mode="overwrite",
-        )
-        write_zone(
-            monthly,
-            f"{cfg.gold_path}/monthly_aggregations",
-            partition_by=("year",),
-            mode="overwrite",
         )
         write_zone(insights, f"{cfg.gold_path}/customer_insights", mode="overwrite")
     finally:

@@ -1091,20 +1091,25 @@ def embedding_ann_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.pq_topk_indexed(spark, queries, idx, k=5, rerank=40)
 
 
-def _ensure_ivfpq_cell_codes(
-    spark: SparkSession, sf_dir: str, ivf: str, pq: str
-) -> str:
-    """Materialize (or refresh) the FAISS inverted-list-with-codes layout
-    derived from the two ensured indexes. Currency is checked against the
-    sources' committed roots (similarity.ivfpq_cell_codes_current), so an
-    index rebuild triggered by corpus regeneration automatically triggers
-    this rebuild too — the derived-layout maintenance rule as code."""
-    # params in the name (the _warehouse_index_path rule): differently-
-    # parameterized source indexes must never thrash one derived layout
-    cc = _warehouse_index_path(sf_dir, "ivfpq_cell_codes_c8_m8_ks16")
-    if not similarity.ivfpq_cell_codes_current(spark, cc, ivf, pq):
-        similarity.build_ivfpq_cell_codes(spark, ivf, pq, cc)
-    return cc
+def _ensure_ivf_cell_codes(
+    spark: SparkSession, sf_dir: str, codes_spec: _IndexSpec, layout: str
+) -> tuple[str, str, str]:
+    """Ensure the 8-cell IVF index and the ``codes_spec`` index (PQ or
+    SQ8), then materialize (or refresh) the FAISS inverted-list-with-codes
+    layout derived from them at warehouse name ``layout``; returns the
+    three unresolved (ivf, codes, cell_codes) paths. Currency is checked
+    against the sources' committed roots
+    (similarity.ivfpq_cell_codes_current), so an index rebuild triggered
+    by corpus regeneration automatically triggers this rebuild too — the
+    derived-layout maintenance rule as code. ``layout`` carries the
+    params (the _warehouse_index_path rule): differently-parameterized
+    source indexes must never thrash one derived layout."""
+    ivf = _ensure_index(spark, sf_dir, _ivf_index_spec(n_cells=8))
+    codes = _ensure_index(spark, sf_dir, codes_spec)
+    cc = _warehouse_index_path(sf_dir, layout)
+    if not similarity.ivfpq_cell_codes_current(spark, cc, ivf, codes):
+        similarity.build_ivfpq_cell_codes(spark, ivf, codes, cc)
+    return ivf, codes, cc
 
 
 def _composed_roots(spark: SparkSession, sf_dir: str, tag: str, ensure, artifacts):
@@ -1168,16 +1173,13 @@ def embedding_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     straight to the search — the r8 bench's 2.8 s median was mostly this
     fixed ensure/currency overhead, honestly-cold every call."""
 
-    def _ensure():
-        ivf = _ensure_index(spark, sf_dir, _ivf_index_spec(n_cells=8))
-        pq = _ensure_index(spark, sf_dir, _pq_index_spec(m=8, ks=16))
-        return ivf, pq, _ensure_ivfpq_cell_codes(spark, sf_dir, ivf, pq)
-
     (ivf, pq, cc), books = _composed_roots(
         spark,
         sf_dir,
         "ivfpq_c8_m8_ks16",
-        _ensure,
+        lambda: _ensure_ivf_cell_codes(
+            spark, sf_dir, _pq_index_spec(m=8, ks=16), "ivfpq_cell_codes_c8_m8_ks16"
+        ),
         # _pq_codebooks_at, not read_pq_codebooks: roots[1] is already the
         # resolved version dir — artifacts and data must come from ONE
         # resolution (the one-resolution pairing rule)
@@ -3125,19 +3127,13 @@ def _ivfsq8_roots(spark: SparkSession, sf_dir: str):
     top-k search and the hard-negative miner) through the one
     state-keyed _composed_roots seat."""
 
-    def _ensure():
-        ivf = _ensure_index(spark, sf_dir, _ivf_index_spec(n_cells=8))
-        sq8 = _ensure_index(spark, sf_dir, _SQ8_INDEX)
-        cc = _warehouse_index_path(sf_dir, "ivfsq8_cell_codes_c8")
-        if not similarity.ivfpq_cell_codes_current(spark, cc, ivf, sq8):
-            similarity.build_ivfpq_cell_codes(spark, ivf, sq8, cc)
-        return ivf, sq8, cc
-
     return _composed_roots(
         spark,
         sf_dir,
         "ivfsq8_c8",
-        _ensure,
+        lambda: _ensure_ivf_cell_codes(
+            spark, sf_dir, _SQ8_INDEX, "ivfsq8_cell_codes_c8"
+        ),
         artifacts=lambda roots: similarity._sq8_stats_at(spark, roots[1]),
     )
 

@@ -17,6 +17,7 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from aws_data_pipeline_spark.operators.cleanse import require_non_null
 
@@ -50,10 +51,20 @@ def write_zone(
 
 
 def read_zone(
-    spark: SparkSession, path: str, merge_schema: bool = False
+    spark: SparkSession,
+    path: str,
+    merge_schema: bool = False,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """Partition-discovering parquet scan (S3, ``silver_to_gold.py:120``).
     Partition-key filters prune directories before any I/O.
+
+    ``schema`` pins the read schema: Spark skips the footer-inference job
+    it otherwise starts before any data is read, a zone holding no data
+    files reads as 0 rows instead of failing to infer, and columns absent
+    from ``schema`` are dropped. Partition columns listed in it take its
+    types and come last, as in an inferred read. The silver zone is read
+    this way everywhere (``pipeline.medallion.silver_schema``).
 
     ``merge_schema=True`` reconciles files written under EVOLVED schemas
     (a column added to the pipeline mid-history): the scan schema is the
@@ -64,6 +75,8 @@ def read_zone(
     once evolution stabilizes instead of paying the merge on every scan.
     """
     reader = spark.read
+    if schema is not None:
+        reader = reader.schema(schema)
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
     return reader.parquet(path)
@@ -74,9 +87,11 @@ def read_partition_slice(
     path: str,
     keys: Sequence[tuple],
     key_cols: Sequence[str] = ("year", "month", "day"),
+    schema: StructType | None = None,
 ) -> DataFrame:
     """Partition-pruned zone read restricted to the listed partition-key
-    tuples (e.g. ``[(2024, 1, 3), (2024, 1, 4)]`` for year/month/day).
+    tuples (e.g. ``[(2024, 1, 3), (2024, 1, 4)]`` for year/month/day);
+    ``schema`` pins the read as in :func:`read_zone`.
 
     The disjunction of equality predicates on partition columns resolves at
     planning time to PartitionFilters — only the matching directories are
@@ -91,7 +106,7 @@ def read_partition_slice(
         for col, val in zip(key_cols, tup):
             row_cond = row_cond & (F.col(col) == F.lit(val))
         cond = cond | row_cond
-    return read_zone(spark, path).filter(cond)
+    return read_zone(spark, path, schema=schema).filter(cond)
 
 
 _READ_SCHEMA_MEMO: dict[tuple[str, str], object] = {}

@@ -8,7 +8,12 @@ just those partitions from silver (partition pruning keeps the scan
 proportional to the batch, not to history), re-aggregate, and overwrite just
 those gold partitions via dynamic partitionOverwriteMode. The checkpoint
 makes each silver file count exactly once — this is the Glue-bookmark
-contract applied to the gold layer.
+contract applied to the gold layer. The rebuild is the batch medallion's
+own code: silver streams and slices are read with the pinned
+``pipeline.medallion.silver_schema`` (no footer-inference job), and the
+daily/monthly tables are aggregated and written by
+``pipeline.medallion.write_gold_grains``, the writer ``silver_to_gold``
+uses.
 
 The customer-insights table needs a different treatment
 (``incremental_customer_insights``): its grain is LIFETIME per customer, so
@@ -28,8 +33,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from aws_data_pipeline_spark.operators import aggregate as agg_ops
-from aws_data_pipeline_spark.pipeline.medallion import cluster_for_gold
+from aws_data_pipeline_spark.pipeline.medallion import (
+    cluster_for_gold,
+    silver_schema,
+    write_gold_grains,
+)
 from aws_data_pipeline_spark.sources.parquet import read_zone, write_zone, zone_exists
 
 
@@ -45,10 +53,10 @@ def incremental_silver_to_gold(
     table (grain: year, month, customer_id; partitioned by year — a
     touched month rebuilds its whole year partition, still pruned to the
     touched years, never full history)."""
-    silver_schema = read_zone(spark, silver_path).schema
     # NOTE: no recursiveFileLookup — it would disable hive-partition
     # discovery, nulling the year/month/day partition columns
-    stream = spark.readStream.schema(silver_schema).parquet(silver_path)
+    schema = silver_schema(spark)
+    stream = spark.readStream.schema(schema).parquet(silver_path)
 
     def rebuild(batch: DataFrame, batch_id: int) -> None:
         touched = [
@@ -68,44 +76,19 @@ def incremental_silver_to_gold(
         # customer_id, so neither aggregate shuffles again.
         years = sorted({y for y, _ in touched})
         silver_y = cluster_for_gold(
-            read_zone(src, silver_path).filter(F.col("year").isin(years))
+            read_zone(src, silver_path, schema=schema).filter(
+                F.col("year").isin(years)
+            )
         )
         try:
             cond = F.lit(False)
             for y, m in touched:
                 cond = cond | ((F.col("year") == y) & (F.col("month") == m))
-            daily = agg_ops.aggregate_transactions(
-                silver_y.filter(cond),
-                ["year", "month", "day", "customer_id"],
-                "amount",
-                "transaction_id",
-                level="daily",
-            )
-            # dynamic partitionOverwriteMode (session default): replaces
-            # only the partitions present in `daily` — the touched ones
-            write_zone(
-                daily,
-                f"{gold_path}/daily_aggregations",
-                partition_by=("year", "month"),
-                mode="overwrite",
-                partition_overwrite="dynamic",  # only the touched months
-            )
-            # months of a touched year outside this batch are recomputed
-            # from the same slice, so the year-dir swap is self-consistent
-            monthly = agg_ops.aggregate_transactions(
-                silver_y,
-                ["year", "month", "customer_id"],
-                "amount",
-                "transaction_id",
-                level="monthly",
-            )
-            write_zone(
-                monthly,
-                f"{gold_path}/monthly_aggregations",
-                partition_by=("year",),
-                mode="overwrite",
-                partition_overwrite="dynamic",  # only the touched years
-            )
+            # dynamic overwrite replaces only the touched months (daily)
+            # and the touched years (monthly); months of a touched year
+            # outside this batch are recomputed from the same slice, so
+            # the year-dir swap is self-consistent
+            write_gold_grains(silver_y, gold_path, daily=silver_y.filter(cond))
         finally:
             silver_y.unpersist()
 
@@ -280,8 +263,7 @@ def incremental_customer_insights(
     default; measured past promotion in tests/test_incremental_gold.py.)
     Replay-safe: see :func:`merge_insights_batch`.
     """
-    silver_schema = read_zone(spark, silver_path).schema
-    stream = spark.readStream.schema(silver_schema).parquet(silver_path)
+    stream = spark.readStream.schema(silver_schema(spark)).parquet(silver_path)
     table = f"{gold_path}/customer_insights_incremental"
 
     (

@@ -29,14 +29,12 @@ from pyspark.sql import functions as F
 
 from aws_data_pipeline_spark.catalog import TXN_SCHEMA
 from aws_data_pipeline_spark.pipeline.medallion import (
-    PARTITION_KEYS,
-    dedup_against_silver,
+    append_silver,
     transform_bronze,
 )
 from aws_data_pipeline_spark.sources.parquet import (
     _hadoop_fs,
     _numeric_markers,
-    write_zone,
     zone_exists,
 )
 
@@ -176,24 +174,11 @@ def ingest_sink(
     dedup modes and the intent-marker crash contract."""
     sess = batch.sparkSession
     replay_suspect = _mark_intent(sess, silver_path, batch_id)
-    silver = transform_bronze(batch, clock=clock)
-    # explicit existence probe: only a genuinely missing zone (first
-    # batch) skips the anti-join; other read errors propagate instead of
-    # silently disabling cross-run dedup
-    need_guard = dedup_mode == "anti_join" or replay_suspect
-    persisted = None
-    if need_guard and zone_exists(sess, silver_path):
-        # persist: the transformed micro-batch is consumed twice
-        # (touched-key collect + write) — avoid re-running the transform.
-        # The cached body runs under AQE (session.DEFAULT_CONF), so the
-        # micro-batch keeps its coalesced size downstream (a small batch
-        # appends one file per touched day, not one per shuffle partition)
-        persisted = silver.persist()
-        silver = dedup_against_silver(persisted, silver_path)
-    try:
-        write_zone(
-            silver, silver_path, partition_by=PARTITION_KEYS, mode="append"
-        )
-    finally:
-        if persisted is not None:
-            persisted.unpersist()
+    # only a genuinely missing zone (first batch) skips a guard the mode
+    # asks for
+    append_silver(
+        transform_bronze(batch, clock=clock),
+        silver_path,
+        guard=(dedup_mode == "anti_join" or replay_suspect)
+        and zone_exists(sess, silver_path),
+    )

@@ -2009,7 +2009,11 @@ def _refine_case_paths(spark, sf_dir):
     )
     return {
         "q": q, "n": e.count(), "truth": truth, "ivf": ivf, "pq": pq,
-        "sq8": sq8, "pq_cc": L._ensure_ivfpq_cell_codes(spark, sf_dir, ivf, pq),
+        "sq8": sq8,
+        "pq_cc": L._ensure_ivf_cell_codes(
+            spark, sf_dir, L._pq_index_spec(m=8, ks=16),
+            "ivfpq_cell_codes_c8_m8_ks16",
+        )[2],
         "sq8_cc": sq8_cc,
     }
 

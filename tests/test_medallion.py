@@ -430,6 +430,96 @@ def test_streaming_sink_writes_one_file_per_touched_partition(
 
 
 # ---------------------------------------------------------------------------
+# One silver contract: pinned read schema, no footer-inference job
+# ---------------------------------------------------------------------------
+
+
+def _job_names(spark, group, fn):
+    """Runs ``fn`` under job group ``group``; the name of each Spark job it
+    started (its result stage's call site; earlier stages can be skipped
+    and then carry no info), in job-id order."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    return [
+        tracker.getStageInfo(max(tracker.getJobInfo(j).stageIds)).name
+        for j in sorted(tracker.getJobIdsForGroup(group))
+    ]
+
+
+def test_silver_schema_matches_the_written_zone(spark, cfg):
+    """The derived read schema is exactly what an inferred read of a
+    written silver zone reports (columns, order, types, nullability)."""
+    run_pipeline(spark, cfg, clock=F.lit(CLOCK).cast("timestamp"))
+    pinned = medallion.read_zone(
+        spark, cfg.silver_path, schema=medallion.silver_schema(spark)
+    )
+    assert pinned.schema == spark.read.parquet(cfg.silver_path).schema
+    assert pinned.count() == 203
+
+
+def test_first_run_with_only_invalid_rows_writes_no_gold(spark, tmp_path):
+    """A first run whose bronze holds only invalid rows leaves a silver
+    directory with nothing but ``_SUCCESS``; the pinned silver read sees
+    0 rows, so gold is skipped and the pipeline succeeds (an inferred read
+    fails both attempts with UNABLE_TO_INFER_SCHEMA)."""
+    bronze = tmp_path / "bronze"
+    bronze.mkdir()
+    (bronze / "bad.json").write_text(
+        json.dumps(
+            {
+                "transaction_id": "txn_neg",
+                "customer_id": "cust_000001",
+                "amount": -1.0,
+                "transaction_date": "2024-03-01 10:00:00",
+            }
+        )
+    )
+    notes = []
+    cfg = PipelineConfig(
+        bronze_path=str(bronze),
+        silver_path=str(tmp_path / "silver"),
+        gold_path=str(tmp_path / "gold"),
+        backoff_seconds=0.01,
+        notifier=lambda status, msg: notes.append(status),
+    )
+    res = run_pipeline(spark, cfg, clock=F.lit(CLOCK).cast("timestamp"))
+    assert res["bronze_to_silver"]["rows_written"] == 0
+    assert res["silver_to_gold"] == {"gold_tables": 0}
+    assert notes == ["success"]
+    assert not (tmp_path / "gold").exists()
+
+
+@pytest.mark.parametrize("caller", ["bronze_to_silver", "ingest_sink"])
+def test_append_starts_no_footer_inference_job(spark, cfg, caller):
+    """One append over an existing zone, by ``bronze_to_silver`` or by one
+    streaming ``ingest_sink`` batch (both go through ``append_silver``),
+    runs at most 6 Spark jobs, none of them a footer-inference ``parquet``
+    job (7 with one while the anti-join's silver slice inferred its
+    schema)."""
+    from aws_data_pipeline_spark.catalog import TXN_SCHEMA
+    from aws_data_pipeline_spark.streaming.ingest import ingest_sink
+
+    clock = F.lit(CLOCK).cast("timestamp")
+    bronze_to_silver(spark, cfg, clock=clock)
+    batch = spark.read.schema(TXN_SCHEMA).json(cfg.bronze_path)
+    append = {
+        "bronze_to_silver": lambda: bronze_to_silver(spark, cfg, clock=clock),
+        "ingest_sink": lambda: ingest_sink(
+            batch, 0, cfg.silver_path, clock, "anti_join"
+        ),
+    }[caller]
+    jobs = _job_names(spark, f"{caller}-receipt", append)
+    assert 0 < len(jobs) <= 6, jobs
+    assert not any(n.startswith("parquet at") for n in jobs), jobs
+    assert spark.read.parquet(cfg.silver_path).count() == 203
+
+
+# ---------------------------------------------------------------------------
 # Gold from one customer-clustered cache
 # ---------------------------------------------------------------------------
 
@@ -549,9 +639,10 @@ def test_gold_matches_duckdb_recompute(spark, cfg, tmp_path, coalesced, monkeypa
 def test_gold_reads_one_clustered_cache_without_exchanges(spark, cfg, monkeypatch):
     """Receipt for the one-shuffle gold build: no gold frame plans an
     exchange above the cached scan, one ``silver_to_gold`` call runs at
-    most 7 Spark jobs (12 when each table's ``countDistinct`` planned its
-    own two exchanges), and the ingest anti-join aggregates nothing on its
-    silver side."""
+    most 6 Spark jobs (12 when each table's ``countDistinct`` planned its
+    own two exchanges, 7 while the silver read inferred its schema from
+    footers), and the ingest anti-join aggregates nothing on its silver
+    side."""
     run_pipeline(spark, cfg, clock=F.lit(CLOCK).cast("timestamp"))
 
     plans = {}
@@ -569,14 +660,9 @@ def test_gold_reads_one_clustered_cache_without_exchanges(spark, cfg, monkeypatc
         assert "Exchange" not in above_cache, (table, above_cache)
     monkeypatch.undo()
 
-    sc = spark.sparkContext
-    sc.setJobGroup("gold-receipt", "one silver_to_gold call")
-    try:
-        silver_to_gold(spark, cfg)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("gold-receipt")
-    assert 0 < len(jobs) <= 7, sorted(jobs)
+    jobs = _job_names(spark, "gold-receipt", lambda: silver_to_gold(spark, cfg))
+    assert 0 < len(jobs) <= 6, jobs
+    assert not any(n.startswith("parquet at") for n in jobs), jobs
 
     batch = spark.createDataFrame(
         [("txn_00000000", 2024, 3, 1), ("txn_new", 2024, 3, 1)],

@@ -1328,6 +1328,47 @@ def test_one_filesystem_acquisition_site():
     assert len(hits) == 1
 
 
+def test_medallion_reads_silver_without_schema_inference():
+    """The batch and streaming medallion modules never probe the
+    ``.schema`` of an inferred parquet read: silver's schema is
+    ``pipeline.medallion.silver_schema``, pinned on every read, so no
+    read starts a footer-inference job. A ``merge_schema=True`` read is
+    the one exemption: its footer union IS the evolved schema the widen
+    type-conflict guard checks against."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "aws_data_pipeline_spark"
+
+    def inferred_read(call) -> bool:
+        f = call.func
+        if isinstance(f, ast.Name) and f.id == "read_zone":
+            return not any(
+                k.arg == "merge_schema"
+                and isinstance(k.value, ast.Constant)
+                and k.value.value is True
+                for k in call.keywords
+            )
+        return (
+            isinstance(f, ast.Attribute)
+            and f.attr == "parquet"
+            and isinstance(f.value, ast.Attribute)
+            and f.value.attr == "read"
+        )
+
+    hits = []
+    for rel in ("pipeline/medallion.py", "streaming/ingest.py", "streaming/gold.py"):
+        hits += [
+            (rel, n.lineno)
+            for n in ast.walk(ast.parse((pkg / rel).read_text()))
+            if isinstance(n, ast.Attribute)
+            and n.attr == "schema"
+            and isinstance(n.value, ast.Call)
+            and inferred_read(n.value)
+        ]
+    assert hits == [], f"schema probe of an inferred silver read: {hits}"
+
+
 def test_gc_published_estate_safe_order(spark, tmp_path):
     """VERDICT r12 item 5: the composed retention verb. Construct the
     exact state where the unsafe order breaks — a publication pinning a
