@@ -2587,8 +2587,11 @@ def _cell_candidates(
     every IVF-composed search here (IVF-PQ, IVF-SQ8, the cell-pruned
     hard-negative miner): one definition so the paths cannot drift.
     With ``cc_root`` it reads the materialized cell-codes posting —
-    PartitionFilters + runtime DPP on the probed ``cell=`` partitions of
-    the compressed codes, no per-id hash join; without, the two-index
+    static PartitionFilters on the probed ``cell=`` partitions of the
+    compressed codes (``cells`` is exactly the probed set, so the scan
+    reads no cell that no query probes; the broadcast ``probed`` side is
+    a local frame, from which Spark plans no runtime DPP), no per-id
+    hash join; without, the two-index
     path — cell-pruned (neighbor_id, cell) from the coarse corpus, codes
     hash-joined on id.
 

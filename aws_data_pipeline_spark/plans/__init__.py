@@ -41,6 +41,14 @@ REGISTRY: dict[str, Query] = {}
 # every run, and bench.py can still time demoted hot paths — it just no
 # longer occupies a driver window slot. Each demotion names the registered
 # query that carries its capability's driver signal.
+# The named carrier may itself be demoted, but must be live.
+# RETENTION: a demoted query stays only while at least one holds —
+# bench.py's HEADLINE (or perfbench) times it; it is a reference-parity
+# entry (plans/reference.py); a test compares an approximate query against
+# it as the exact twin; or no other query reaches some package function
+# it reaches. A demoted query every function of whose call graph a kept
+# oracled query also reaches is deleted, not kept: its code keeps its
+# oracle through that query.
 DEMOTED: dict[str, Query] = {}
 
 

@@ -141,39 +141,7 @@ def regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- Outer / semi / anti joins --------------------------------------------
-
-
-@register(
-    "left_join_order_counts",
-    demoted=True,
-    sql="""
-    SELECT c.c_custkey, c.c_mktsegment,
-           COUNT(o.o_orderkey) AS order_count
-    FROM customer c
-    LEFT JOIN orders o
-      ON o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT'
-    GROUP BY c.c_custkey, c.c_mktsegment
-    """,
-)
-def left_join_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left outer join preserving zero-order customers (COUNT over the
-    nullable side counts matches only).
-
-    Demoted round 13 (paired with cdc_apply_batch_fold's promotion —
-    VERDICT r11 item 5's CDC-sink batch twin needed a seat): the
-    left-outer-join + grouped-count chain here runs VERBATIM as
-    q13_customer_distribution (registered TPC-H, the same
-    customer-left-join-orders count shape with a filtered join
-    condition), which carries the driver signal. Full oracle stays in
-    the pytest replica."""
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    o = T(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey", "c_mktsegment")
-        .agg(F.count("o_orderkey").alias("order_count"))
-    )
+# -- Semi joins ------------------------------------------------------------
 
 
 @register(
@@ -192,35 +160,6 @@ def semi_join_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = T(spark, sf_dir, "customer").select("c_custkey", "c_name")
     o = T(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     return joins.semi_join(c, o, c.c_custkey == o.o_custkey)
-
-
-@register(
-    "anti_join_dormant_customers",
-    demoted=True,
-    sql="""
-    SELECT c_custkey, c_name FROM customer c
-    WHERE NOT EXISTS (
-      SELECT 1 FROM orders o
-      WHERE o.o_custkey = c.c_custkey
-        AND o.o_orderdate >= TIMESTAMP '2001-01-01 00:00:00'
-    )
-    """,
-)
-def anti_join_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-anti join (NOT EXISTS): customers with no orders in 2001+ —
-    the QC orphan-check shape.
-
-    Demoted round 13 (paired with dq_referential_integrity's promotion —
-    the orphan CHECK this entry sketches, promoted as a first-class DQ
-    audit): the NOT-EXISTS anti-join shape runs VERBATIM inside
-    q22_idle_rich_customers (registered), and the orphan-detection
-    topology itself is dq_referential_integrity's left-join-null stage.
-    Full oracle stays in the pytest replica."""
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    o = T(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= F.lit("2001-01-01 00:00:00").cast("timestamp")
-    )
-    return joins.anti_join(c, o, c.c_custkey == o.o_custkey)
 
 
 # -- Window functions ------------------------------------------------------
@@ -248,7 +187,7 @@ def topk_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     to seat event_transition_matrix under the named-demotion rule: the
     rank-top-k-per-group WindowGroupLimit shape's driver signal is
     carried by provenance_fuzzy_link (promoted r12 — its rank<=3 per
-    snippet is this exact window) beside customer_spend_quartiles'
+    snippet is this exact window) beside rfm_customer_segments'
     ranking surface and q15/q18's top-k shapes."""
     o = T(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_totalprice")
     out = windows.topk_per_group(
@@ -370,31 +309,6 @@ def order_sequence_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- Sort / limit ----------------------------------------------------------
-
-
-# demoted r5 (sort/limit consolidation): global ordered-limit keeps driver
-# signal via q15_top_supplier and topk_orders_per_customer
-@register(
-    "top_orders_global",
-    demoted=True,
-    sql="""
-    SELECT o_orderkey, o_custkey, o_totalprice
-    FROM orders
-    ORDER BY o_totalprice DESC, o_orderkey ASC
-    LIMIT 10
-    """,
-)
-def top_orders_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global ordered limit — Spark plans TakeOrderedAndProject (per-partition
-    top-N + driver merge of N), never a full sort at scale.
-
-    Demoted (r5 consolidation): driver signal carried by topk_orders_per_customer (sort/limit/top-k family).
-    """
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    return o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc()).limit(10)
-
-
 # -- Set operations --------------------------------------------------------
 
 
@@ -422,44 +336,6 @@ def order_year_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return both.unionByName(only95).unionByName(only96).select("cohort", "o_custkey")
 
 
-# -- String functions ------------------------------------------------------
-
-
-@register(
-    "string_normalize_parts",
-    demoted=True,
-    sql="""
-    SELECT p_partkey,
-           upper(p_brand) AS brand_upper,
-           lower(p_type) AS type_lower,
-           substring(p_name, 1, 12) AS name_prefix,
-           replace(p_name, ' ', '_') AS name_slug,
-           CAST(length(p_name) AS INTEGER) AS name_len,
-           CAST(len(string_split(p_type, ' ')) AS INTEGER) AS type_tokens
-    FROM part
-    """,
-)
-def string_normalize_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String-function surface: case-normalize, slice, slug, token count —
-    all JVM-side whole-stage-codegen expressions.
-
-    Demoted r9 (markup_stripped_docs entered the oracled registry in its
-    slot, cap held at 100): the regexp/string-function driver signal is
-    carried by markup_stripped_docs (a strictly larger JVM regexp/replace
-    chain, full value oracle) and pii_redaction_stats; the full oracle
-    still replays every pytest run."""
-    p = T(spark, sf_dir, "part")
-    return p.select(
-        "p_partkey",
-        F.upper("p_brand").alias("brand_upper"),
-        F.lower("p_type").alias("type_lower"),
-        F.substring("p_name", 1, 12).alias("name_prefix"),
-        F.regexp_replace(F.col("p_name"), " ", "_").alias("name_slug"),
-        F.length("p_name").alias("name_len"),
-        F.size(F.split(F.col("p_type"), " ")).alias("type_tokens"),
-    )
-
-
 # -- JSON props ------------------------------------------------------------
 
 
@@ -484,46 +360,6 @@ def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = F.get_json_object(F.col("props"), "$.k").cast("long")
     return (
         e.withColumn("k", k)
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("event_count"),
-            F.sum("k").alias("k_sum"),
-            F.min("k").alias("k_min"),
-            F.max("k").alias("k_max"),
-            F.countDistinct("k").alias("k_distinct"),
-        )
-    )
-
-
-@register(
-    "json_props_stats_variant",
-    demoted=True,
-    sql="""
-    SELECT event_type,
-           COUNT(*) AS event_count,
-           CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum,
-           MIN(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS k_min,
-           MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS k_max,
-           COUNT(DISTINCT CAST(json_extract_string(props, '$.k') AS BIGINT)) AS k_distinct
-    FROM events
-    GROUP BY event_type
-    """,
-)
-def json_props_stats_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The VariantType twin of ``json_props_stats``: ``parse_json`` ONCE
-    into Spark 4's binary variant encoding, then typed ``variant_get``
-    path extraction — the multi-path scale shape (``get_json_object``
-    re-parses the JSON string per path; variant parses once and each
-    extra path is a cheap binary probe). Same values, same oracle SQL.
-
-    Demoted tier: driver signal carried by json_props_stats (identical
-    oracle); this twin pins that the variant path stays value-equal in
-    the local parity suite and gives bench a one-parse baseline to
-    compare when queries grow to many paths."""
-    e = T(spark, sf_dir, "events")
-    v = F.parse_json(F.col("props"))
-    return (
-        e.withColumn("k", F.variant_get(v, "$.k", "long"))
         .groupBy("event_type")
         .agg(
             F.count("*").alias("event_count"),
@@ -832,51 +668,15 @@ def price_percentiles_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame
     `approx_percentile` (t-digest sketch, mergeable map-side) — exact
     percentile needs the full group sorted.
 
-    Demoted (round 7, slot ceded to bm25_scores): driver signal carried by
-    length_quantiles_by_source (same exact per-group quantile_cont
-    capability, hash-green r5)."""
+    Demoted (round 7, slot ceded to bm25_scores): per-group exact
+    quantiles are carried by quality_winsorized_by_source. Kept as the
+    exact reference test_approx_percentile_error_bound holds
+    price_percentiles_approx to."""
     o = T(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.percentile("o_totalprice", F.lit(0.5)).alias("p50"),
         F.percentile("o_totalprice", F.lit(0.9)).alias("p90"),
         F.percentile("o_totalprice", F.lit(0.99)).alias("p99"),
-    )
-
-
-@register(
-    "customer_spend_quartiles",
-    demoted=True,
-    sql="""
-    SELECT c_custkey, spend, ntile(4) OVER (ORDER BY spend DESC, c_custkey) AS quartile
-    FROM (
-      SELECT o_custkey AS c_custkey,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(30,2))) AS DOUBLE) AS spend
-      FROM orders GROUP BY o_custkey
-    )
-    """,
-)
-def customer_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ntile(4) over total spend — deterministic (total order via the
-    custkey tie-break). Round 8: computed by the DISTRIBUTED global-rank
-    operator (range repartition + per-partition row number + literal
-    partition offsets, operators/windows.py:global_ntile) instead of an unpartitioned
-    ``Window.orderBy`` — the latter plans ``Exchange SinglePartition``, one
-    task holding every customer row, which at 100 TB (billions of
-    customers) is the canonical WindowExec scale-killer. Exact ntile
-    semantics pinned against F.ntile in tests/test_scale.py.
-
-    Demoted round 13 (paired with rfm_customer_segments' promotion): RFM
-    runs this entry's EXACT distributed global-ntile chain three times
-    over one aggregate (operators/windows.py::global_ntile — same range
-    repartition + literal partition offsets), so the promoted entry is a strict
-    superset of this one's driver signal. Full oracle stays in the
-    pytest replica."""
-    o = T(spark, sf_dir, "orders")
-    spend = o.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
-        dsum("o_totalprice").alias("spend")
-    )
-    return windows.global_ntile(
-        spend, 4, [F.col("spend").desc(), F.col("c_custkey")], out_col="quartile"
     )
 
 
@@ -1088,100 +888,6 @@ def unpivot_returnflag_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsum("l_extendedprice", "decimal(12,2)").alias("sum_price"),
     )
     return agg.unpivot(["l_returnflag"], ["sum_qty", "sum_price"], "measure", "value")
-
-
-@register(
-    "funnel_view_click_purchase",
-    demoted=True,
-    sql="""
-    WITH v AS (
-      SELECT user_id, MIN(ts) AS vt FROM events
-      WHERE event_type = 'view' GROUP BY user_id
-    ),
-    c AS (
-      SELECT e.user_id, MIN(e.ts) AS ct
-      FROM events e JOIN v ON e.user_id = v.user_id
-        AND e.ts > v.vt AND e.ts <= v.vt + INTERVAL 24 HOUR
-      WHERE e.event_type = 'click' GROUP BY e.user_id
-    ),
-    p AS (
-      SELECT e.user_id, MIN(e.ts) AS pt
-      FROM events e JOIN c ON e.user_id = c.user_id
-        AND e.ts > c.ct AND e.ts <= c.ct + INTERVAL 24 HOUR
-      WHERE e.event_type = 'purchase' GROUP BY e.user_id
-    )
-    SELECT (SELECT COUNT(*) FROM v) AS n_view,
-           (SELECT COUNT(*) FROM c) AS n_click,
-           (SELECT COUNT(*) FROM p) AS n_purchase,
-           CAST((SELECT COUNT(*) FROM c) AS DOUBLE)
-             / (SELECT COUNT(*) FROM v) AS view_to_click,
-           CAST((SELECT COUNT(*) FROM p) AS DOUBLE)
-             / (SELECT COUNT(*) FROM c) AS click_to_purchase
-    """,
-)
-def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered conversion funnel (view -> first click strictly after the
-    first view -> first purchase strictly after that click, each within a 24-hour conversion window). Spark-first
-    shape: ONE shuffle on user_id, then three stacked window-mins over the
-    same partitioning (Catalyst reuses the exchange — no re-shuffle per
-    stage), then a single global rollup; the oracle needs three
-    self-join+reaggregate passes to say the same thing.
-
-    Demoted round 13 (paired with event_path_trigrams' promotion —
-    funnel DISCOVERY supersedes the fixed named funnel on the driver
-    surface): the per-user ordered sequence-window chain runs VERBATIM
-    in event_path_trigrams (two leads over one shared per-user sort),
-    whose counted paths include this funnel's view>click>purchase
-    ordering; the strictly-after conversion-window measurement shape
-    stays driver-visible via asof_last_click_before_purchase and
-    conversion_latency_stats. Full oracle stays in the pytest
-    replica."""
-    # NULL user_id excluded: the window would treat NULL as a real funnel
-    # "user" while the oracle's equality joins never match NULL — and an
-    # anonymous event stream is not a conversion funnel participant anyway
-    e = (
-        T(spark, sf_dir, "events")
-        .select("user_id", "event_type", "ts")
-        .filter(F.col("user_id").isNotNull())
-    )
-    w = Window.partitionBy("user_id")
-    vt = F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w)
-    staged = e.withColumn("vt", vt)
-    hour = F.expr("INTERVAL 24 HOUR")
-    ct = F.min(
-        F.when(
-            (F.col("event_type") == "click")
-            & (F.col("ts") > F.col("vt"))
-            & (F.col("ts") <= F.col("vt") + hour),
-            F.col("ts"),
-        )
-    ).over(w)
-    staged = staged.withColumn("ct", ct)
-    pt = F.min(
-        F.when(
-            (F.col("event_type") == "purchase")
-            & (F.col("ts") > F.col("ct"))
-            & (F.col("ts") <= F.col("ct") + hour),
-            F.col("ts"),
-        )
-    ).over(w)
-    staged = staged.withColumn("pt", pt)
-    per_user = staged.groupBy("user_id").agg(
-        F.max("vt").alias("vt"), F.max("ct").alias("ct"), F.max("pt").alias("pt")
-    )
-    return per_user.agg(
-        F.count("vt").alias("n_view"),
-        F.count("ct").alias("n_click"),
-        F.count("pt").alias("n_purchase"),
-        # try_divide: a funnel stage with zero entrants yields null, not a
-        # DIVIDE_BY_ZERO crash under ANSI mode (DuckDB also nulls on /0)
-        F.try_divide(F.count("ct").cast("double"), F.count("vt")).alias(
-            "view_to_click"
-        ),
-        F.try_divide(F.count("pt").cast("double"), F.count("ct")).alias(
-            "click_to_purchase"
-        ),
-    )
 
 
 @register(
@@ -1403,8 +1109,9 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     window entries composes. All three ntiles run through the
     distributed global-rank machinery (never Exchange SinglePartition).
     Born round 12 demoted-with-full-oracle; PROMOTED round 13 under the
-    named-demotion rule, demoting customer_spend_quartiles — whose
-    single global-ntile chain this entry runs verbatim, three times."""
+    named-demotion rule, demoting a spend-quartile entry (since
+    deleted) whose single global-ntile chain this entry runs verbatim,
+    three times."""
     from aws_data_pipeline_spark.operators.aggregate import rfm_scores
 
     o = T(spark, sf_dir, "orders")
@@ -1441,14 +1148,14 @@ def event_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 three-step user journeys through the event stream
     (operators/aggregate.py::event_paths): funnel DISCOVERY — which
     paths actually happen, before anyone names one to measure
-    (funnel_view_click_purchase measures; this surfaces). Two leads over
+    (a named funnel measures; this surfaces). Two leads over
     ONE shared per-user sort (a single WindowExec), a domain-bounded
     trigram count, distributed TakeOrdered top-k, ranks over the 20-row
     result only. Born round 12 demoted-with-full-oracle; PROMOTED round
-    13 under the named-demotion rule, demoting
-    funnel_view_click_purchase — whose per-user sequence-window chain
-    this entry runs verbatim, and whose view>click>purchase ordering is
-    one of the paths this discovery counts."""
+    13 under the named-demotion rule, demoting a fixed view>click>
+    purchase funnel entry (since deleted) whose per-user sequence-window
+    chain this entry runs verbatim, and whose ordering is one of the
+    paths this discovery counts."""
     from aws_data_pipeline_spark.operators.aggregate import event_paths
 
     return event_paths(

@@ -193,31 +193,6 @@ def _dup_span_ctes(k: int) -> str:
     )"""
 
 
-# demoted r5: duplicate_span_stats subsumes this per-doc (same CTE chain,
-# VERDICT r4 consolidation list); the span-level oracle stays replayed by
-# the local parity suite
-@register(
-    "duplicate_spans",
-    demoted=True,
-    sql=f"""
-    WITH {_dup_span_ctes(8)}
-    SELECT doc_id, CAST(span_start AS INTEGER) AS span_start,
-           CAST(span_tokens AS INTEGER) AS span_tokens
-    FROM spans
-    """,
-)
-def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact duplicated-span detection (suffix-array dedup family, Lee et
-    al. 2021): maximal token spans whose every 8-gram window occurs more
-    than once in the corpus. One explode + one hash groupBy + one semi-join
-    — no suffix array, no pairwise expansion.
-
-    Demoted (r5 consolidation): driver signal carried by duplicate_span_stats (per-doc rollup of the same spans).
-    """
-    d = T(spark, sf_dir, "documents")
-    return dedup.duplicate_spans(d, "doc_id", k=8)
-
-
 @register(
     "span_scrubbed_docs",
     sql=f"""
@@ -288,41 +263,6 @@ def duplicate_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     mostly corpus-duplicated (Lee et al. §4)."""
     d = T(spark, sf_dir, "documents")
     return dedup.duplicate_span_stats(d, "doc_id", k=8)
-
-
-@register(
-    "length_quantiles_by_source",
-    demoted=True,
-    sql="""
-    WITH ranked AS (
-      SELECT source, n_chars,
-             row_number() OVER (PARTITION BY source ORDER BY n_chars) AS rn,
-             count(*) OVER (PARTITION BY source) AS n
-      FROM documents WHERE n_chars IS NOT NULL
-    )
-    SELECT source, count(*) AS n_rows,
-           max(CASE WHEN rn = ceil(0.25 * n) THEN n_chars END) AS p25,
-           max(CASE WHEN rn = ceil(0.5  * n) THEN n_chars END) AS p50,
-           max(CASE WHEN rn = ceil(0.75 * n) THEN n_chars END) AS p75,
-           max(CASE WHEN rn = ceil(0.95 * n) THEN n_chars END) AS p95
-    FROM ranked GROUP BY source
-    """,
-)
-def length_quantiles_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document-length distribution profile per source — exact nearest-rank
-    quantiles (the oracle-checkable twin of the percentile_approx sketch,
-    whose rank error tests/test_llm.py bounds against this on real data).
-
-    Demoted r12 (hash-green r9, full oracle stays in the pytest replica)
-    to seat entity_resolution_mutual_pairs under the named-demotion rule:
-    the per-source exact-quantile machinery's driver signal is carried by
-    quality_winsorized_by_source (oracled — the same grouped nearest-rank
-    quantiles feeding its winsorization clamps) beside
-    customer_spend_quartiles' ntile surface."""
-    from aws_data_pipeline_spark.operators.aggregate import grouped_quantiles
-
-    d = T(spark, sf_dir, "documents")
-    return grouped_quantiles(d, ["source"], "n_chars")
 
 
 _MINHASH_PARAMS_SQL = ", ".join(
@@ -1258,7 +1198,7 @@ def embedding_ann_sq8_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     Born round 10 demoted-with-full-oracle, promoted r11 (VERDICT r10
     item 3): entered the oracled registry by demoting quality_median_filter
     (whose broadcast-threshold gate signal quality_winsorized_by_source
-    and customer_spend_quartiles carry) — the slot goes to the filtered-
+    and rfm_customer_segments carry) — the slot goes to the filtered-
     search capability no registered entry exercised; together with
     ann_recall_sq8 this keeps the SQ8 value chain driver-oracled after
     embedding_ann_sq8's demotion; cap held at 100."""
@@ -1434,7 +1374,7 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "quality_winsorized_by_source",
     # p05/p95 are the engine's nearest-rank quantiles (row_number + ceil of
-    # the IEEE product — same contract as length_quantiles_by_source), so
+    # the IEEE product — aggregate.grouped_quantiles' contract), so
     # clip and scale reproduce bit-for-bit
     sql="""
     WITH t AS (
@@ -1515,7 +1455,7 @@ def quality_median_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     to seat embedding_ann_sq8_filtered under the cap: the exact-quantile
     broadcast-threshold machinery is carried by
     quality_winsorized_by_source (per-group percentile scale, oracled)
-    and customer_spend_quartiles (global quantiles, oracled), and the
+    and rfm_customer_segments (global quantiles, oracled), and the
     quality-score expression by text_quality_scores."""
     d = T(spark, sf_dir, "documents")
     return text.quality_median_filter(d)
@@ -1713,7 +1653,7 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the per-term score to 6-dp units so the value hashes cross-engine
     (operators/text.py::bm25_scores). Entered round 7 in
     price_percentiles_by_priority's slot (demoted, carrier
-    length_quantiles_by_source)."""
+    quality_winsorized_by_source)."""
     d = T(spark, sf_dir, "documents")
     return text.bm25_scores(d, ("dup", "spark", "sort"))
 
@@ -1794,26 +1734,6 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- Dataset splitting / sampling / vocabulary -----------------------------
 
 
-# demoted r5: dataset_split_assignments_portable carries the driver signal
-# (hash-green r4, row-level oracle strictly stronger than these counts)
-@register("dataset_split_counts", sql=None, demoted=True)
-def dataset_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic hash-based train/val/test split (98/1/1-style splits are
-    the LLM norm; 80/10/10 here) — per-(split, lang) doc counts. Rows-only:
-    the xxhash64 bucketing has no DuckDB twin; pytest asserts determinism,
-    disjoint coverage, and fraction tolerance.
-
-    Demoted (r5 consolidation): driver signal carried by dataset_split_assignments_portable (per-doc membership, md5 twin).
-    """
-    from aws_data_pipeline_spark.operators import sampling
-
-    d = T(spark, sf_dir, "documents")
-    split = sampling.hash_split(
-        d, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}
-    )
-    return split.groupBy("split", "lang").agg(F.count("*").alias("n_docs"))
-
-
 @register(
     "training_shard_assignments",
     demoted=True,
@@ -1876,7 +1796,7 @@ def training_shard_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dataset_split_assignments_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document split assignment with the PORTABLE (md5) bucket hash —
-    the engine-independent twin of dataset_split_counts' xxhash64 path.
+    the engine-independent twin of hash_split's default xxhash64 path.
     The oracle recomputes every row's bucket bit-for-bit, so the driver
     value-hashes actual split membership. Range order note: weight ranges
     are carved in sorted(name) order (test < train < val alphabetically —
@@ -1888,26 +1808,6 @@ def dataset_split_assignments_portable(spark: SparkSession, sf_dir: str) -> Data
         d, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}, hash_fn="md5"
     )
     return split.select("doc_id", "split")
-
-
-# demoted r5: stratified_sample_assignments_portable carries the driver
-# signal (row-level md5 oracle strictly stronger than these counts)
-@register("stratified_sample_counts", sql=None, demoted=True)
-def stratified_sample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shuffle-free deterministic stratified sample (50% en, 10% others) —
-    per-lang kept counts. Stable under repartitioning, unlike sampleBy; the
-    default fraction covers unlisted strata as a row-local expression, so no
-    driver-side lang enumeration happens in the query path.
-
-    Demoted (r5 consolidation): driver signal carried by stratified_sample_assignments_portable (per-doc membership, md5 twin).
-    """
-    from aws_data_pipeline_spark.operators import sampling
-
-    d = T(spark, sf_dir, "documents")
-    kept = sampling.stratified_sample(
-        d, "lang", {"en": 0.5}, "doc_id", default_fraction=0.1
-    )
-    return kept.groupBy("lang").agg(F.count("*").alias("n_kept"))
 
 
 @register(
@@ -1937,24 +1837,6 @@ def vocabulary_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aws_data_pipeline_spark.operators import sampling
 
     return sampling.vocabulary(T(spark, sf_dir, "documents"), top_k=50)
-
-
-# demoted r5: curated_corpus_portable carries the driver signal (the whole
-# chain replayed in SQL, vs rows-only counts here)
-@register("curated_corpus_stats", sql=None, demoted=True)
-def curated_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full curation pipeline (quality gate -> exact dedup -> MinHash-LSH
-    fuzzy dedup -> deterministic 98/1/1 split) reduced to per-(split, lang)
-    counts. Rows-only (LSH inside); end-to-end invariants in
-    tests/test_curation.py.
-
-    Demoted (r5 consolidation): driver signal carried by curated_corpus_portable (whole-chain md5 twin).
-    """
-    from aws_data_pipeline_spark.pipeline.curation import CurationConfig, curate
-
-    d = T(spark, sf_dir, "documents")
-    out = curate(d, CurationConfig(min_quality=0.5))
-    return out.groupBy("split", "lang").agg(F.count("*").alias("n_docs"))
 
 
 @register(
@@ -2027,9 +1909,9 @@ def curated_corpus_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end curation pipeline with the engine-portable (md5) hash
     family: per-document survivorship AND split membership are value-hashed
     against a DuckDB oracle that replays every stage — the composition
-    proof on top of the per-stage oracles. The xxhash64 sibling
-    (curated_corpus_stats) is the hot path; invariant tests in
-    tests/test_curation.py cover both."""
+    proof on top of the per-stage oracles. The default xxhash64 hash
+    family is the hot path; invariant tests in tests/test_curation.py
+    cover both."""
     from aws_data_pipeline_spark.pipeline.curation import CurationConfig, curate
 
     d = T(spark, sf_dir, "documents")
@@ -2892,101 +2774,6 @@ def bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.bigram_logprob(d)
 
 
-@register(
-    "split_leakage_audit",
-    demoted=True,
-    sql="WITH "
-    + _NEARDUP_CC_CTES
-    + """, doc_split AS (
-      SELECT d.doc_id,
-             CASE WHEN b < 1000 THEN 'test'
-                  WHEN b < 9000 THEN 'train'
-                  ELSE 'val' END AS split
-      FROM (
-        SELECT doc_id,
-               ('0x' || substr(md5(doc_id::VARCHAR || ':split-v1'), 1, 15))
-                 ::UBIGINT % 10000 AS b
-        FROM documents
-      ) d
-    ), cluster_split AS (
-      SELECT a.doc_id,
-             CASE WHEN b < 1000 THEN 'test'
-                  WHEN b < 9000 THEN 'train'
-                  ELSE 'val' END AS split
-      FROM (
-        SELECT d.doc_id,
-               ('0x' || substr(md5(COALESCE(cc.label, d.doc_id)::VARCHAR
-                                   || ':split-v1'), 1, 15))::UBIGINT % 10000
-                 AS b
-        FROM documents d LEFT JOIN cc ON d.doc_id = cc.node
-      ) a
-    )
-    SELECT 'per_document' AS policy,
-           CAST(count(*) AS BIGINT) AS n_related_pairs,
-           CAST(count(*) FILTER (WHERE s1.split <> s2.split) AS BIGINT)
-             AS n_leaking_pairs
-    FROM pairs p
-    JOIN doc_split s1 ON s1.doc_id = p.doc1
-    JOIN doc_split s2 ON s2.doc_id = p.doc2
-    UNION ALL
-    SELECT 'cluster_keyed',
-           CAST(count(*) AS BIGINT),
-           CAST(count(*) FILTER (WHERE s1.split <> s2.split) AS BIGINT)
-    FROM pairs p
-    JOIN cluster_split s1 ON s1.doc_id = p.doc1
-    JOIN cluster_split s2 ON s2.doc_id = p.doc2
-    """,
-)
-def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The contamination AUDIT for split assignments: over the near-dup
-    pair graph, count pairs whose endpoints land in different splits
-    under (a) plain per-document hashing and (b) cluster-keyed hashing.
-    Cluster-keyed is zero by construction (both endpoints share a
-    component, hence a hash key); per-document leaks whenever a pair's
-    ids straddle a bucket boundary — this query puts the number on the
-    risk leakage_safe_splits removes. Tiny output: two audit rows.
-
-    Demoted r12 (hash-green r9, full oracle stays in the pytest replica)
-    to seat temporal_split_embargo_events under the named-demotion rule:
-    the audit's pair-graph/collision chain is leakage_safe_splits' own
-    construction invariant (registered, oracled — cluster-keyed leakage
-    is zero by construction there), and the promoted embargo split adds
-    the temporal leakage guard this audit cannot see."""
-    d = T(spark, sf_dir, "documents")
-    pairs = dedup.jaccard_pairs(d, "doc_id", k=5, threshold=0.8)
-    pairs = pairs.localCheckpoint()  # feeds both policies' joins
-    weights = {"train": 0.8, "val": 0.1, "test": 0.1}
-    doc_split = sampling.hash_split(
-        d.select("doc_id"), "doc_id", weights, hash_fn="md5"
-    )
-    cluster_split = sampling.leakage_safe_split(d, pairs, weights).select(
-        "doc_id", "split"
-    )
-
-    def audit(policy: str, assign: DataFrame) -> DataFrame:
-        s1 = assign.select(
-            F.col("doc_id").alias("doc1"), F.col("split").alias("s1")
-        )
-        s2 = assign.select(
-            F.col("doc_id").alias("doc2"), F.col("split").alias("s2")
-        )
-        return (
-            pairs.join(s1, "doc1")
-            .join(s2, "doc2")
-            .agg(
-                F.lit(policy).alias("policy"),
-                F.count("*").alias("n_related_pairs"),
-                F.count_if(F.col("s1") != F.col("s2")).alias(
-                    "n_leaking_pairs"
-                ),
-            )
-        )
-
-    return audit("per_document", doc_split).unionAll(
-        audit("cluster_keyed", cluster_split)
-    )
-
-
 # The synthesized wrapper exercises every strip rule: a style block, a
 # script block whose CONTENT holds a '<' (block removal, not tag removal),
 # a comment carrying the doc_id, heading/paragraph tags, and the six
@@ -3042,9 +2829,9 @@ def markup_stripped_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs inside the scan stage's codegen.
 
     Promoted r9 (born r8 demoted-with-full-oracle, parity-green; VERDICT
-    r8 item 3): entered the oracled registry by demoting
-    string_normalize_parts, whose regexp/string-function signal this
-    query now carries (alongside pii_redaction_stats); cap held at 100.
+    r8 item 3): entered the oracled registry by demoting a string-
+    function entry (since deleted), whose regexp/string-function signal
+    this query carries (alongside pii_redaction_stats); cap held at 100.
     """
     d = T(spark, sf_dir, "documents")
     html = F.concat(
@@ -3676,9 +3463,9 @@ def entity_resolution_mutual_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     not a second linkage pass.
 
     Born round 11 demoted-with-full-oracle; PROMOTED r12 under the
-    named-demotion rule (paired with length_quantiles_by_source's
-    demotion — quality_winsorized_by_source carries that exact-quantile
-    chain). The symmetric pair frame this entry ranks is
+    named-demotion rule (paired with a per-source length-quantile
+    entry's demotion, since deleted — quality_winsorized_by_source and
+    event_interarrival_stats carry that exact-quantile chain). The symmetric pair frame this entry ranks is
     provenance_fuzzy_link's, registered beside it."""
     from aws_data_pipeline_spark.operators import linkage
     from aws_data_pipeline_spark.operators.text import tokens as _tok
@@ -3804,9 +3591,9 @@ def temporal_split_embargo_events(spark: SparkSession, sf_dir: str) -> DataFrame
     timestamp.
 
     Born round 11 demoted-with-full-oracle; PROMOTED r12 under the
-    named-demotion rule, demoting split_leakage_audit — whose
-    cross-split-collision chain is leakage_safe_splits' own construction
-    invariant; this entry adds the temporal leakage guard the content
+    named-demotion rule, demoting a split-leakage audit (since deleted)
+    — whose cross-split-collision chain is leakage_safe_splits' own
+    construction invariant; this entry adds the temporal leakage guard the content
     splits cannot express."""
     from aws_data_pipeline_spark.operators import sampling
 

@@ -478,10 +478,10 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     loaded before their orders, a purge that removed parents first).
     Two equi-joins Catalyst/AQE sizes + one combinable aggregate each;
     flags are data. Born round 12 demoted-with-full-oracle; PROMOTED
-    round 13 under the named-demotion rule, demoting
-    anti_join_dormant_customers — the orphan-check sketch this audit
-    promotes to a first-class DQ verb (its NOT-EXISTS shape also runs
-    verbatim in q22_idle_rich_customers, registered)."""
+    round 13 under the named-demotion rule, demoting an anti-join
+    orphan-check sketch (since deleted) that this audit promotes to a
+    first-class DQ verb (its NOT-EXISTS shape also runs verbatim in
+    q22_idle_rich_customers, registered)."""
     li = quality.referential_integrity(
         T(spark, sf_dir, "lineitem"),
         T(spark, sf_dir, "orders"),

@@ -197,9 +197,9 @@ def cdc_apply_batch_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     this entry gives the collapse + guard fold driver-visible VALUE
     evidence. Born round 12 demoted-with-full-oracle; PROMOTED round 13
     under the named-demotion rule (VERDICT r11 item 5's CDC batch twin),
-    demoting left_join_order_counts — whose left-outer-join +
-    grouped-count chain q13_customer_distribution (registered) runs
-    verbatim; the disk sink's full crash/replay/tombstone behavior
+    demoting a left-join order-count entry (since deleted) — whose
+    left-outer-join + grouped-count chain q13_customer_distribution
+    (registered) runs verbatim; the disk sink's full crash/replay/tombstone behavior
     stays pinned by the CDC pytest property suite."""
     from aws_data_pipeline_spark.streaming import cdc
 

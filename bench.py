@@ -139,7 +139,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     registry = dict(load_registry())
     registry.update(DEMOTED)  # demoted hot paths stay benchable
-    names = [n for n in HEADLINE if n in registry]
+    missing = [n for n in HEADLINE if n not in registry]
+    if missing:
+        raise SystemExit(f"bench: HEADLINE names not in the registry: {missing}")
+    names = list(HEADLINE)
     extra = os.environ.get("BENCH_QUERIES")
     if extra:
         names = [n.strip() for n in extra.split(",") if n.strip() in registry]

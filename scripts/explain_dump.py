@@ -36,7 +36,6 @@ scale rules in README.md: filters in `PushedFilters`, pruned `ReadSchema`,
 EXTRA = (
     "q17_small_quantity_revenue",
     "q18_large_volume_customers",
-    "length_quantiles_by_source",
     "training_shard_assignments",
     "incremental_neardup_pairs",
     "quality_winsorized_by_source",

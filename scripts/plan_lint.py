@@ -55,7 +55,6 @@ ALLOW = {
     "bpe_merges": "argmax over the vocab-frame pair counts (vocab-bounded)",
     "bpe_token_counts": "argmax over vocab-frame rows (vocab-bounded)",
     "bpe_fertility_by_lang": "argmax over vocab-frame rows (vocab-bounded)",
-    "length_quantiles_by_source": "window over per-source quantile rows",
     "price_percentiles_by_priority": "window over per-priority rows",
     "dq_psi_price_drift": "window over fixed histogram-bin rows",
     "dq_psi_price_drift_approx": "window over fixed histogram-bin rows",
@@ -71,10 +70,6 @@ ALLOW = {
     "source_overlap_matrix": "#sources-bounded size frame broadcast",
     "dedup_exact_text": "1-row corpus-count broadcast",
     "lang_id_stopwords": "per-language literal stopword arrays (no join)",
-    "dataset_split_counts": "1-row total-count broadcast",
-    "stratified_sample_counts": "1-row total-count broadcast",
-    "split_leakage_audit": "1-row total broadcast over split labels",
-    "curated_corpus_stats": "1-row corpus-stats broadcast",
     "unigram_logprob_scores": "1-row token-total broadcast",
     "bigram_logprob_scores": "1-row token-total broadcast",
     "text_repetition_stats": "1-row corpus aggregate broadcast",

@@ -1103,19 +1103,31 @@ def test_ivfpq_cell_codes_layout(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, via_cc.collect())) == sorted(map(tuple, base.collect()))
 
     # the codes scan reads the cell-partitioned layout (id+codes+cell —
-    # the plain PQ codes table has no cell column) with PartitionFilters
-    # on cell: the probed-cell IN list plus a dynamicpruningexpression
-    # (runtime DPP from the broadcast probe join — at scale it prunes to
-    # the actually-probed cells even when the static set is wide)
-    plan = via_cc._jdf.queryExecution().executedPlan().toString()
+    # the plain PQ codes table has no cell column) pruned by a static
+    # PartitionFilters IN list that is EXACTLY the probed cells: one
+    # query at nprobe=2 of 8 probes a strict subset, and the scan must
+    # list those cells and no other
+    import re
+
+    one = q.filter(F.col("vec_id") == 3)
+    _, probed_cells, _ = S._probe_cells(
+        spark, S._id_vec(one, "vec_id", "embedding"), S.index_root(spark, ivf), 2
+    )
+    assert len(probed_cells) == 2
+    narrow = S.ivfpq_topk_indexed(
+        spark, one, ivf, pq, k=5, nprobe=2, rerank=40, cell_codes_path=cc
+    )
+    plan = narrow._jdf.queryExecution().executedPlan().toString()
     cc_scans = [
         ln
         for ln in plan.splitlines()
         if "FileScan" in ln and "codes#" in ln and "cell#" in ln
     ]
     assert cc_scans, plan
-    assert all("PartitionFilters: [cell#" in ln for ln in cc_scans)
-    assert any("dynamicpruningexpression" in ln for ln in cc_scans)
+    for ln in cc_scans:
+        m = re.search(r"PartitionFilters: \[cell#\d+ IN \(([^)]*)\)", ln)
+        assert m, ln
+        assert sorted(int(c) for c in m.group(1).split(",")) == probed_cells, ln
 
     # APPEND to a source index: no version flip, but the stored source
     # counts catch it — currency drops, the probe fails loudly (the

@@ -5,6 +5,8 @@ sees (plans/__init__.py DEMOTED)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from aws_data_pipeline_spark.plans import DEMOTED, load_registry
@@ -53,3 +55,26 @@ def test_registry_capacity_contract():
     )
     assert not (set(reg) & set(DEMOTED))
     assert all(callable(q.spark_fn) for q in DEMOTED.values())
+
+
+def test_demoted_queries_name_a_live_carrier():
+    """A demoted query holds no registry slot; its docstring names the
+    live query that carries its capability. A deletion that strands a
+    demotion note on a query that no longer exists fails here."""
+    missing = [
+        name
+        for name, q in DEMOTED.items()
+        if not any(
+            other != name and re.search(rf"\b{other}\b", q.doc)
+            for other in REGISTRY
+        )
+    ]
+    assert not missing, f"demoted queries naming no live carrier: {missing}"
+
+
+def test_bench_headline_names_resolve():
+    """bench.py times HEADLINE by name: every name must be a live query."""
+    from bench import HEADLINE
+
+    unknown = [n for n in HEADLINE if n not in REGISTRY]
+    assert not unknown, f"bench HEADLINE names no query: {unknown}"
