@@ -184,10 +184,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_pinned(spark, f"{sf_dir}/{name}.parquet")
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for spark.sql() entry points."""
     for name in TABLES:

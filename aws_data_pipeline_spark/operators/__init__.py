@@ -9,10 +9,44 @@ UDFs in the explicitly-marked north-star operators.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import math
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+
+def _sql_literal(x, type_: str) -> str:
+    if type_ == "string":
+        return "'" + str(x).replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if type_ == "int":
+        return str(int(x))
+    if type_ == "bigint":
+        return f"{int(x)}L"
+    if type_ != "double":
+        raise ValueError(f"lit_array: unsupported element type {type_!r}")
+    x = float(x)
+    if math.isnan(x) or math.isinf(x):
+        return f"CAST('{x!r}' AS DOUBLE)"  # 'nan' / 'inf' / '-inf'
+    # the shortest repr parses back to the same bits; "-0.0D" parses as
+    # -(0.0D), which folds to -0.0
+    return f"{x!r}D"
+
+
+def lit_array(values: Iterable, type_: str) -> Column:
+    """A literal ``ARRAY<type_>`` of ``values`` as ONE ``F.expr`` that the
+    optimizer folds to an array literal. ``F.array(*[F.lit(x) ...])`` costs
+    a Py4J round trip per element (an SQ8 probe's 2 x dim per-dim ranges,
+    IVF centroids, LSH hyperplanes); this costs one. ``type_`` is
+    ``"double"``, ``"int"``, ``"bigint"`` or ``"string"``. Doubles
+    round-trip bit-exactly, NaN, +-inf and -0.0 included; the type is the
+    ``F.lit`` path's, except that a NaN or an infinity (a string cast)
+    makes the elements nullable."""
+    items = ", ".join(_sql_literal(x, type_) for x in values)
+    if not items:
+        return F.expr(f"CAST(array() AS ARRAY<{type_.upper()}>)")
+    return F.expr(f"array({items})")
 
 
 def arrow_frame(

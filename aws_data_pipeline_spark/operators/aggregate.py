@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from aws_data_pipeline_spark.functions.exact import davg, dsum
+from aws_data_pipeline_spark.operators import lit_array
 
 
 def aggregate_transactions(
@@ -270,7 +271,7 @@ def grouped_quantiles(
         raise ValueError(f"quantile ps {list(ps)} collide on names {names}")
     if approx:
         pa = F.percentile_approx(
-            F.col(value_col), F.array(*[F.lit(p) for p in ps]), F.lit(accuracy)
+            F.col(value_col), lit_array(ps, "double"), F.lit(accuracy)
         )
         return (
             df.filter(F.col(value_col).isNotNull())

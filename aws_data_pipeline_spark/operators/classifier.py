@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from aws_data_pipeline_spark.functions.portable import md5_prefix_long
-from aws_data_pipeline_spark.operators import widen_narrow_input
+from aws_data_pipeline_spark.operators import lit_array, widen_narrow_input
 from aws_data_pipeline_spark.operators.text import tokens
 
 
@@ -155,7 +155,7 @@ def score_quality(
     margin = F.aggregate(
         F.zip_with(
             vector_to_array(F.col("features")),
-            F.array(*[F.lit(c) for c in coef]),
+            lit_array(coef, "double"),
             lambda x, w: x * w,
         ),
         F.lit(intercept),

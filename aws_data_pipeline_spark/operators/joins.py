@@ -19,6 +19,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from aws_data_pipeline_spark.operators import lit_array
+
 
 def enrich(
     fact: DataFrame,
@@ -153,7 +155,7 @@ def salted_join(
         "__salt", (F.rand(seed=7) * salt_buckets).cast("int")
     )
     replicated_dim = dim.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
+        "__salt", F.explode(lit_array(range(salt_buckets), "int"))
     )
     out = salted_fact.join(replicated_dim, [key, "__salt"], how)
     return out.drop("__salt")

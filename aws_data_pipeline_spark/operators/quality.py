@@ -17,6 +17,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from aws_data_pipeline_spark.operators import lit_array
+
 
 def _check_names(names: Sequence[str], what: str) -> None:
     """Caller-supplied names are interpolated into selectExpr/stack strings
@@ -182,11 +184,11 @@ def psi_drift(
     tests/test_quality.py, the approx_distinct_customers pattern).
     Counting against the sketched edges stays exact either way.
     """
-    fr = [i / bins for i in range(1, bins)]
+    fr = lit_array([i / bins for i in range(1, bins)], "double")
     edge_fn = (
-        (lambda c: F.approx_percentile(c, F.array(*[F.lit(f) for f in fr]), F.lit(accuracy)))
+        (lambda c: F.approx_percentile(c, fr, F.lit(accuracy)))
         if approx
-        else (lambda c: F.percentile(c, F.array(*[F.lit(f) for f in fr])))
+        else (lambda c: F.percentile(c, fr))
     )
     edges = base.agg(edge_fn(F.col(col)).alias("es"))
 
@@ -250,7 +252,7 @@ def bin_against_edges(
     are a literal array, so at 100 TB this is a scan-stage projection +
     one combinable count. The streaming monitor's per-batch half."""
     x = F.col(col).cast("double")
-    es = F.array(*[F.lit(float(e)) for e in edges])
+    es = lit_array(edges, "double")
     b = F.size(F.filter(es, lambda e: x >= e))
     return (
         df.where(F.col(col).isNotNull())
@@ -452,9 +454,7 @@ def build_drift_baseline(
     if value_col is not None:
         fr = [i / bins for i in range(1, bins)]
         es = df.agg(
-            F.percentile(F.col(value_col), F.array(*[F.lit(f) for f in fr])).alias(
-                "es"
-            )
+            F.percentile(F.col(value_col), lit_array(fr, "double")).alias("es")
         ).collect()[0]["es"]
         spark.createDataFrame(
             [(i, float(e)) for i, e in enumerate(es)], "pos int, e double"

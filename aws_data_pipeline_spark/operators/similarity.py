@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from aws_data_pipeline_spark.operators import arrow_frame
+from aws_data_pipeline_spark.operators import arrow_frame, lit_array
 from aws_data_pipeline_spark.sources.parquet import (
     artifact_memo,
     commit_index_version,
@@ -667,7 +667,7 @@ def lsh_bucket(
     v = as_double(F.col(vec_col))
     bucket = F.lit(0).cast("long")
     for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(x) for x in p])
+        plane = lit_array(p, "double")
         bit = F.when(dot(v, plane) >= 0, F.lit(1)).otherwise(F.lit(0)).cast("long")
         bucket = bucket + bit * F.lit(1 << i)
     # NULL embedding -> NULL bucket (the row joins nothing downstream,
@@ -749,7 +749,7 @@ def nearest_cell(v: Column, centroids: list[list[float]]) -> Column:
             F.aggregate(
                 F.zip_with(
                     v,
-                    F.array(*[F.lit(float(x)) for x in ctr]),
+                    lit_array(ctr, "double"),
                     lambda x, y: (x - y) * (x - y),
                 ),
                 F.lit(0.0),
@@ -1869,10 +1869,7 @@ def sq8_train_stats(
 
 
 def _sq8_params(mins: list[float], scales: list[float]) -> tuple[Column, Column]:
-    return (
-        F.array(*[F.lit(float(m)) for m in mins]),
-        F.array(*[F.lit(float(s)) for s in scales]),
-    )
+    return lit_array(mins, "double"), lit_array(scales, "double")
 
 
 def sq8_encode(

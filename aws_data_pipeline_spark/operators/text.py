@@ -11,7 +11,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from aws_data_pipeline_spark.operators import widen_narrow_input
+from aws_data_pipeline_spark.operators import lit_array, widen_narrow_input
 
 # Small per-language stopword profiles for the language-ID heuristic.
 # (Real profiles would be larger; the mechanism — per-language token-match
@@ -60,7 +60,7 @@ def hashed_shingles(toks: Column, k: int = 5) -> Column:
 
 
 def stopword_count(toks: Column, words: tuple[str, ...] = STOPWORDS) -> Column:
-    lit_arr = F.array(*[F.lit(w) for w in words])
+    lit_arr = lit_array(words, "string")
     return F.size(F.filter(toks, lambda x: F.array_contains(lit_arr, x)))
 
 

@@ -9,6 +9,8 @@ from itertools import accumulate
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from aws_data_pipeline_spark.operators import lit_array
+
 
 def topk_per_group(
     df: DataFrame,
@@ -198,12 +200,9 @@ def _pinned_range_totals(
 
 
 def _offset_lookup(offsets: list[int]) -> Column:
-    """``offsets[__pid]`` as one SQL expression (one Py4J call) that folds
-    to an array literal: no driver-built frame, no join, no broadcast."""
-    return F.expr(
-        f"element_at(CAST(array({', '.join(map(str, offsets))}) "
-        "AS ARRAY<BIGINT>), __pid + 1)"
-    )
+    """``offsets[__pid]`` over a folded array literal: no driver-built
+    frame, no join, no broadcast."""
+    return F.element_at(lit_array(offsets, "bigint"), F.col("__pid") + 1)
 
 
 def _global_row_number_with_total(

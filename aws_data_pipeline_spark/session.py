@@ -31,6 +31,33 @@ Every config below is a 100 TB-posture decision:
   instead of the reference's full-table overwrite
   (``silver_to_gold.py:141-149``).
 - Arrow enabled: vectorized toPandas / pandas_udf transfer.
+- Codegen class cache sized to the repeated-query working set
+  (``spark.sql.codegen.cache.maxEntries``). Spark keeps the classes
+  Janino compiled for whole-stage codegen, projections and orderings in
+  an LRU cache of 100 entries by default. A long-lived driver runs the
+  same queries again and again, in the same order; an LRU cache smaller
+  than a cyclic working set never hits, so every repeat compiled nearly
+  every class again, and the JIT then compiled each new class again too.
+  Measured working sets (``scripts/query_profile.py``'s warm pass): the
+  9 queries perfbench's ``queries`` workload pins generate 158 distinct
+  classes; one pass over the 48 ``bench.HEADLINE`` queries at sf0.002,
+  index builds included, generates 854. The rule is the largest measured
+  working set times at least 2, rounded up: 2000. Memory cost: a
+  generated class file averages 2.2 KB of bytecode and a cache entry
+  holds ~2 of them (``CodegenMetrics``), so a full cache keeps ~9 MB of
+  bytecode, plus the JVM's metadata for those classes. Peak RSS on both
+  perfbench workloads still fell, because far fewer classes are compiled.
+  Static: only a session build can set it, which ``get_spark`` does.
+- No per-Column Python call-site capture
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). While it is on,
+  PySpark wraps every ``F.*`` call and Column operator: each one looks up
+  the JVM origin, reads a conf over Py4J and walks the Python stack (and,
+  where IPython is installed without ipykernel, retries the failing
+  ``import ipykernel``), so ``F.col("a")`` cost 13 Py4J calls and a warm build of the 9 perfbench
+  pins 7,533 (3,303 with it off). Trade-off: analysis errors lose their
+  Python "DataFrame" call-site context. PySpark caches the flag at the
+  first wrapped call, so a session build is the only place to set it.
+  ``extra_conf`` turns either back to Spark's default.
 """
 
 from __future__ import annotations
@@ -54,6 +81,11 @@ DEFAULT_CONF: dict[str, str] = {
     # of shuffling the fact side.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.shuffle.partitions": "32",
+    # whole-stage-codegen class cache sized past the repeated-query working
+    # set; static, so only a session build can set it (module docstring)
+    "spark.sql.codegen.cache.maxEntries": "2000",
+    # no per-Column Python call-site capture (module docstring)
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

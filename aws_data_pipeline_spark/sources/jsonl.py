@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aws_data_pipeline_spark.operators import lit_array
+
 _CORRUPT_COL = "_corrupt_record"
 
 
@@ -105,7 +107,7 @@ def unknown_key_split(
         spark.read.option("recursiveFileLookup", str(recursive).lower())
         .text(path)
     )
-    known = F.array(*[F.lit(f.name) for f in schema.fields])
+    known = lit_array((f.name for f in schema.fields), "string")
     keys = F.json_object_keys(F.col("value"))
     is_known = keys.isNotNull() & (F.size(F.array_except(keys, known)) == 0)
     good = (

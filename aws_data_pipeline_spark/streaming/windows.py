@@ -74,12 +74,3 @@ def session_counts(
             "n_events",
         )
     )
-
-
-def dedup_within_watermark(
-    stream: DataFrame, key: str, ts_col: str, delay: str = "1 hour"
-) -> DataFrame:
-    """Streaming dedup with bounded state: duplicates arriving within the
-    watermark horizon are dropped; state older than the horizon is evicted
-    (exactly the cross-run dedup gap in the reference, SURVEY.md §4.2-6)."""
-    return stream.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark([key])

@@ -1,16 +1,19 @@
-"""cluster_profile: the 100 TB sizing arithmetic, pinned.
+"""cluster_profile: the 100 TB sizing arithmetic, pinned; and the
+session defaults that make repeated queries cheap to build and run.
 
-Pure-Python (no SparkSession) — these tests pin the conf-derivation rules
-the module docstring promises, at the exact cluster shapes the engine is
-designed for (SURVEY.md's 1000-executor / 100 TB target) and at the
-degenerate shapes where the guards must bite.
+The cluster_profile tests are pure Python — they pin the conf-derivation
+rules the module docstring promises, at the exact cluster shapes the
+engine is designed for (SURVEY.md's 1000-executor / 100 TB target) and at
+the degenerate shapes where the guards must bite.
 """
 
 from __future__ import annotations
 
 import pytest
 
+from aws_data_pipeline_spark.plans import DEMOTED, load_registry
 from aws_data_pipeline_spark.session import cluster_profile
+from tests.conftest import ORACLE_SMOKE
 
 TiB = 2**40
 GiB = 2**30
@@ -131,3 +134,37 @@ def test_bench_stdout_contract_one_json_line():
     assert parsed["sf"] == 0.001
     # exactly one stdout line: anything else risks a tail-parse driver
     assert len(lines) == 1, f"extra stdout lines: {lines[:-1]}"
+
+
+# The oracle smoke set is the oracled queries perfbench's ``queries``
+# workload pins: together they generate more classes than Spark's default
+# 100-entry codegen cache holds, so a cyclic pass over them thrashes it.
+REPEATED = sorted(ORACLE_SMOKE)
+
+
+def test_repeated_pass_compiles_no_class(spark, sf_dir):
+    """After one warm pass, a second identical pass finds every generated
+    class in the codegen cache (session.DEFAULT_CONF)."""
+    from scripts.query_profile import compiled_classes
+
+    registry = {**load_registry(), **DEMOTED}
+
+    def one_pass() -> int:
+        before = compiled_classes(spark)
+        for name in REPEATED:
+            df = registry[name].spark_fn(spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+        return compiled_classes(spark) - before
+
+    one_pass()
+    assert one_pass() == 0
+
+
+def test_call_site_capture_is_off(spark):
+    """No per-Column Python call-site capture (session.DEFAULT_CONF)."""
+    from pyspark.errors.utils import is_debugging_enabled
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    F.col("x")  # a wrapped call caches the flag if nothing has yet
+    assert is_debugging_enabled() is False
