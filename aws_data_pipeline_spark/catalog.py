@@ -147,41 +147,42 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     µs timestamps need no conversion, so the truncation is gated on the
     read schema actually surfacing a long.
     """
-    if name == "events":
-        # scoped, not session-permanent: leaving the legacy conf on would
-        # make every LATER parquet read silently surface TIMESTAMP(NANOS)
-        # columns as longs instead of failing loudly — a confusing type
-        # error far from its cause. The relation captures its schema at
-        # read time, so restoring immediately is safe for this df.
-        prior = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        try:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        finally:
-            if prior is None:
-                spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-            else:
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior)
-        from pyspark.sql import functions as F
-
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
-            # generators that write naive µs timestamps surface TIMESTAMP_NTZ;
-            # streaming watermarks require TIMESTAMP, and with the session
-            # timezone pinned to UTC the cast preserves every value
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
     # app-lifetime inferred-schema pin (sources.parquet.read_pinned):
     # testdata tables are static for the life of an application, so every
     # construction after the first skips the footer-inference pass —
     # per-rep fixed cost across the whole bench (optimization guide §6).
-    # ``events`` stays on the raw read above: its inference is conf-gated
-    # (nanosAsLong) and re-reading nanos under a pinned long schema
-    # without the conf would not round-trip.
     from aws_data_pipeline_spark.sources.parquet import read_pinned
 
-    return read_pinned(spark, f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    if name != "events":
+        return read_pinned(spark, path)
+    # scoped, not session-permanent: leaving the legacy conf on would
+    # make every LATER parquet read silently surface TIMESTAMP(NANOS)
+    # columns as longs instead of failing loudly — a confusing type
+    # error far from its cause. The relation captures its schema at
+    # read time, so restoring immediately is safe for this df. The
+    # pinned re-read stays inside the scope too: the memoized schema
+    # was inferred under the conf, and a nanos column read as long must
+    # be read under it.
+    prior = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    try:
+        df = read_pinned(spark, path)
+    finally:
+        if prior is None:
+            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+        else:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior)
+    from pyspark.sql import functions as F
+
+    if isinstance(df.schema["ts"].dataType, T.LongType):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
+        # generators that write naive µs timestamps surface TIMESTAMP_NTZ;
+        # streaming watermarks require TIMESTAMP, and with the session
+        # timezone pinned to UTC the cast preserves every value
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -50,17 +50,29 @@ def lit_array(values: Iterable, type_: str) -> Column:
 
 
 def arrow_frame(
-    spark: SparkSession, rows: Sequence[tuple], schema: StructType
+    spark: SparkSession, rows: Sequence[tuple], schema: StructType | str
 ) -> DataFrame:
     """A small driver-built frame through the Arrow path: ``rows`` become
-    one Arrow table of ``schema`` that the driver ships straight to the
-    JVM, whatever the session's ``arrow.pyspark.enabled``.
-    ``createDataFrame`` over a Python list is instead unpickled by a
-    Python worker each time the plan scans it (``scripts/plan_lint.py``'s
-    Python-built local frame family)."""
+    one Arrow table of ``schema`` (a ``StructType`` or a DDL string such
+    as ``"pos int, e double"``) that the driver ships straight to the
+    JVM, whatever the session's ``arrow.pyspark.enabled``. This is the
+    package's only ``createDataFrame`` call.
+
+    ``createDataFrame`` over a Python list is instead a pickled Python
+    RDD: scanning or writing it makes Spark fork a ``pyspark.daemon`` and
+    one Python worker per scan task, and those processes then stay
+    resident, idle, until the session ends: about 61 MB each, 5 processes
+    (daemon + 4 workers, ~305 MB) under a ``local[4]`` driver, their
+    number growing with ``local[N]``, not with the rows. One 1-row
+    metadata write during an index build is enough to start them.
+    Through this path the engine starts Python workers only for its
+    declared Python operators (``mapInPandas``, ``pandas_udf``,
+    ``applyInPandas``)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
     arrow = to_arrow_schema(schema)
     cols = list(zip(*rows)) or [()] * len(arrow)
     return spark.createDataFrame(

@@ -40,7 +40,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from aws_data_pipeline_spark.operators import widen_narrow_input
+from aws_data_pipeline_spark.operators import arrow_frame, widen_narrow_input
 
 WORD_RE = "^[a-z]+$"
 END_MARK = "</w>"
@@ -126,8 +126,10 @@ class BpeModel:
             (i, left, right, int(c))
             for i, (left, right, c) in enumerate(self.merges)
         ]
-        return spark.createDataFrame(
-            rows, "merge_rank INT, pair_left STRING, pair_right STRING, pair_count BIGINT"
+        return arrow_frame(
+            spark,
+            rows,
+            "merge_rank INT, pair_left STRING, pair_right STRING, pair_count BIGINT"
         )
 
 

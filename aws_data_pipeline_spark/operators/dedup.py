@@ -634,8 +634,10 @@ def build_lsh_text_index(
     _banded_keys(
         _signatures_from_sets(sets, num_perm, hash_fn), bands, num_perm // bands
     ).write.mode("overwrite").parquet(f"{root}/bands")
-    spark.createDataFrame(
-        [(k, num_perm, bands, hash_fn)], "k int, num_perm int, bands int, hash_fn string"
+    arrow_frame(
+        spark,
+        [(k, num_perm, bands, hash_fn)],
+        "k int, num_perm int, bands int, hash_fn string",
     ).write.mode("overwrite").parquet(f"{root}/meta")
     _finish_index_build(spark, path, new_v, old_root, _TEXT_LSH_SUBS)
 
@@ -1362,9 +1364,9 @@ def build_kgram_index(
         .write.mode("overwrite")
         .parquet(f"{root}/hashes")
     )
-    spark.createDataFrame(
-        [(k, n_docs)], "k int, built_n_docs long"
-    ).write.mode("overwrite").parquet(f"{root}/meta")
+    arrow_frame(spark, [(k, n_docs)], "k int, built_n_docs long").write.mode(
+        "overwrite"
+    ).parquet(f"{root}/meta")
     _finish_index_build(spark, path, new_v, old_root, _KGRAM_SUBS)
 
 

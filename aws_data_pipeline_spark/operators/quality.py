@@ -17,7 +17,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from aws_data_pipeline_spark.operators import lit_array
+from aws_data_pipeline_spark.operators import arrow_frame, lit_array
 
 
 def _check_names(names: Sequence[str], what: str) -> None:
@@ -456,8 +456,8 @@ def build_drift_baseline(
         es = df.agg(
             F.percentile(F.col(value_col), lit_array(fr, "double")).alias("es")
         ).collect()[0]["es"]
-        spark.createDataFrame(
-            [(i, float(e)) for i, e in enumerate(es)], "pos int, e double"
+        arrow_frame(
+            spark, [(i, float(e)) for i, e in enumerate(es)], "pos int, e double"
         ).write.mode("overwrite").parquet(f"{path}/edges")
         # the bin counts are ≤ bins+1 rows — collect once so the stored
         # artifact and the fingerprint are computed from the same pass
@@ -466,7 +466,7 @@ def build_drift_baseline(
             for r in bin_against_edges(df, value_col, list(es), "n_base")
             .collect()
         )
-        spark.createDataFrame(vb, "bin int, n_base long").write.mode(
+        arrow_frame(spark, vb, "bin int, n_base long").write.mode(
             "overwrite"
         ).parquet(f"{path}/value_bins")
         fp.update(repr([float(e) for e in es]).encode())
@@ -490,11 +490,12 @@ def build_drift_baseline(
         cats = sorted(
             (r["category"], int(r["n_base"])) for r in counted.collect()
         )
-        spark.createDataFrame(
-            cats, "category string, n_base long"
+        arrow_frame(
+            spark, cats, "category string, n_base long"
         ).write.mode("overwrite").parquet(f"{path}/categories")
         fp.update(repr(cats).encode())
-    spark.createDataFrame(
+    arrow_frame(
+        spark,
         [(bins, value_col, cat_col, fp.hexdigest())],
         "bins int, value_col string, cat_col string, baseline_id string",
     ).write.mode("overwrite").parquet(f"{path}/meta")

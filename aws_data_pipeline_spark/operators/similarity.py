@@ -807,7 +807,7 @@ def ivf_topk(
         arrow_frame(
             spark,
             list(enumerate(centroids)),
-            T.StructType.fromDDL("cell int, centroid array<double>"),
+            "cell int, centroid array<double>",
         )
     )
     q = _id_vec(queries, id_col, vec_col)
@@ -883,10 +883,9 @@ def build_ivf_index(
     assigned.write.mode("overwrite").option(
         "partitionOverwriteMode", "static"
     ).partitionBy("cell").parquet(f"{root}/corpus")
-    cent = spark.createDataFrame(
-        list(enumerate(centroids)), "cell int, centroid array<double>"
-    )
-    cent.write.mode("overwrite").parquet(f"{root}/centroids")
+    arrow_frame(
+        spark, list(enumerate(centroids)), "cell int, centroid array<double>"
+    ).write.mode("overwrite").parquet(f"{root}/centroids")
     # build-time per-cell histogram — the baseline ivf_index_drift compares
     # the append-maintained corpus against to signal quantizer retrain.
     # Counted from the WRITTEN corpus (partition column only, no data
@@ -1631,9 +1630,7 @@ def _pq_query_luts_local(
     return arrow_frame(
         spark,
         out,
-        T.StructType.fromDDL(
-            f"query_id {id_type}, qv array<double>, lut array<double>"
-        ),
+        f"query_id {id_type}, qv array<double>, lut array<double>",
     )
 
 
@@ -2228,7 +2225,7 @@ def _build_index(
     if codec.artifact_subs:
         meta.append(read_pinned(spark, f"{root}/{codec.code_sub}").count())
         schema.append("n_built long")
-    spark.createDataFrame([tuple(meta)], ", ".join(schema)).write.mode(
+    arrow_frame(spark, [tuple(meta)], ", ".join(schema)).write.mode(
         "overwrite"
     ).parquet(f"{root}/meta")
     _finish_index_build(spark, path, new_v, old_root, codec.subs)
@@ -2373,7 +2370,8 @@ def _pq_encode_rows(v: DataFrame, books, payload: Sequence[str]) -> DataFrame:
 
 
 def _write_pq_codebooks(spark, root: str, books) -> None:
-    spark.createDataFrame(
+    arrow_frame(
+        spark,
         [(j, c, cent) for j, book in enumerate(books) for c, cent in enumerate(book)],
         "j int, c int, centroid array<double>",
     ).write.mode("overwrite").parquet(f"{root}/codebooks")
@@ -2381,8 +2379,10 @@ def _write_pq_codebooks(spark, root: str, books) -> None:
 
 def _write_sq8_stats(spark, root: str, stats) -> None:
     mins, scales = stats
-    spark.createDataFrame(
-        list(zip(range(len(mins)), mins, scales)), "pos int, mn double, sc double"
+    arrow_frame(
+        spark,
+        list(zip(range(len(mins)), mins, scales)),
+        "pos int, mn double, sc double",
     ).write.mode("overwrite").parquet(f"{root}/stats")
 
 
@@ -2811,7 +2811,8 @@ def build_ivfpq_cell_codes(
         "partitionOverwriteMode", "static"
     ).partitionBy("cell").parquet(f"{root}/codes")
     n = read_pinned(spark, f"{root}/codes").count()
-    spark.createDataFrame(
+    arrow_frame(
+        spark,
         [
             (
                 qualified_path(spark, ivf_root),

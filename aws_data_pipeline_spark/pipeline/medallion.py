@@ -38,7 +38,7 @@ from pyspark.sql.types import StructType
 
 from aws_data_pipeline_spark.catalog import TXN_SCHEMA
 from aws_data_pipeline_spark.operators import aggregate as agg_ops
-from aws_data_pipeline_spark.operators import cleanse, derive
+from aws_data_pipeline_spark.operators import arrow_frame, cleanse, derive
 from aws_data_pipeline_spark.sources.jsonl import read_jsonl
 from aws_data_pipeline_spark.sources.parquet import (
     read_partition_slice,
@@ -148,7 +148,7 @@ def silver_schema(spark: SparkSession) -> StructType:
     type-conflict guard keeps its own ``merge_schema`` read."""
     global _SILVER_SCHEMA
     if _SILVER_SCHEMA is None:
-        empty = spark.createDataFrame([], TXN_SCHEMA)
+        empty = arrow_frame(spark, [], TXN_SCHEMA)
         _SILVER_SCHEMA = transform_bronze(empty).schema
     return _SILVER_SCHEMA
 

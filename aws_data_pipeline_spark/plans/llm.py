@@ -16,7 +16,14 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aws_data_pipeline_spark.operators import dedup, multimodal, sampling, similarity, text
+from aws_data_pipeline_spark.operators import (
+    arrow_frame,
+    dedup,
+    multimodal,
+    sampling,
+    similarity,
+    text,
+)
 from aws_data_pipeline_spark.plans import register
 from aws_data_pipeline_spark.plans.common import T
 from aws_data_pipeline_spark.sources.parquet import read_pinned
@@ -501,8 +508,8 @@ def _src_marker_fresh(
 def _write_src_marker(
     spark: SparkSession, idx: str, state: tuple[int, int, int]
 ) -> None:
-    spark.createDataFrame(
-        [state], "src_total long, src_files long, src_bytes long"
+    arrow_frame(
+        spark, [state], "src_total long, src_files long, src_bytes long"
     ).write.mode("overwrite").parquet(f"{idx}/src_meta")
 
 

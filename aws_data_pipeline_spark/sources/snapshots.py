@@ -88,6 +88,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_data_pipeline_spark.operators import arrow_frame
 from aws_data_pipeline_spark.sources.parquet import (
     _PTR_DIR,
     _create_marker,
@@ -142,7 +143,7 @@ def _catalog_commit(
     marker, the dataless high-water marker :func:`_catalog_drop` keeps
     included, so ids stay monotonic across retention."""
     new_id = (_max_numeric_marker(spark, f"{catalog}/{_PTR_DIR}") or 0) + 1
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+    arrow_frame(spark, rows, schema).coalesce(1).write.mode(
         "overwrite"
     ).parquet(f"{catalog}/{prefix}{new_id}/manifest")
     _create_marker(spark, f"{catalog}/{_PTR_DIR}", new_id)
@@ -347,14 +348,14 @@ def _verify_and_split(
                 spark, f"{path}/{_RETIRED_DIR}"
             ).items()
         ]
-        live = spark.createDataFrame(
-            live_rows or [], "file string, live_len long, live_mt long"
+        live = arrow_frame(
+            spark, live_rows, "file string, live_len long, live_mt long"
         )
-        ret = spark.createDataFrame(ret_rows or [], "file string, ret_len long")
+        ret = arrow_frame(spark, ret_rows, "file string, ret_len long")
         m = mdf
         if subset is not None:
             m = m.join(
-                spark.createDataFrame([(s,) for s in subset], "file string"),
+                arrow_frame(spark, [(s,) for s in subset], "file string"),
                 "file",
             )
         j = (

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aws_data_pipeline_spark.operators import quality
+from aws_data_pipeline_spark.operators import arrow_frame, quality
 from aws_data_pipeline_spark.sources.parquet import zone_exists
 
 
@@ -110,14 +110,15 @@ def incremental_drift_monitor(
             # an empty batch carries no distribution: scoring it would
             # floor every current-side proportion to 1e-6 and "alert" on
             # nothing — record the empty batch with null metrics instead
-            sess.createDataFrame(
+            arrow_frame(
+                sess,
                 [(batch_id, 0, None, None, None, None, baseline_id)],
                 "batch_id long, n_rows long, psi double, psi_alert boolean, "
                 "chisq double, chisq_alert boolean, baseline_id string",
             ).write.mode("append").parquet(metrics_path)
             return
         if edges is not None:
-            bc = sess.createDataFrame(base_bins, "bin int, n_base long")
+            bc = arrow_frame(sess, base_bins, "bin int, n_base long")
             cc = quality.bin_against_edges(
                 batch, meta.value_col, edges, "n_curr"
             )
@@ -129,9 +130,7 @@ def incremental_drift_monitor(
             psi = float(psi) if psi is not None else None
             psi_alert = psi is not None and psi > psi_threshold
         if base_cats is not None:
-            bcat = sess.createDataFrame(
-                base_cats, "category string, n_base long"
-            )
+            bcat = arrow_frame(sess, base_cats, "category string, n_base long")
             ccat = (
                 batch.where(F.col(meta.cat_col).isNotNull())
                 .groupBy(F.col(meta.cat_col).alias("category"))
@@ -148,7 +147,8 @@ def incremental_drift_monitor(
                 and chisq is not None
                 and chisq > chisq_threshold
             )
-        sess.createDataFrame(
+        arrow_frame(
+            sess,
             [(batch_id, n_rows, psi, psi_alert, chisq, chisq_alert,
               baseline_id)],
             "batch_id long, n_rows long, psi double, psi_alert boolean, "

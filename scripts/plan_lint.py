@@ -21,11 +21,10 @@ families the scale audits hunt by hand:
    (scalar denominators, global stats); anything unexplained could be a
    fact-sized broadcast loop.
 4. Python-built local frame (``applySchemaToPythonRDD`` in the formatted
-   plan) — allowed only via ``PY_FRAME_ALLOW``. ``createDataFrame`` over
-   a Python list is unpickled by a Python worker every time the plan
-   scans it; an Arrow table (``operators.arrow_frame``) or a literal
-   expression costs no worker. A remaining entry names why its frame is
-   one-off or bounded.
+   plan) — always a failure. ``createDataFrame`` over a Python list is
+   unpickled by a Python worker every time the plan scans it; an Arrow
+   table (``operators.arrow_frame``) or a literal expression costs no
+   worker.
 
 Run: ``python scripts/plan_lint.py [sf_dir] [--json OUT]``; exit 1 on
 any unexplained hit. The whitelist is data, lives here, and every entry
@@ -103,16 +102,9 @@ ALLOW = {
 }
 
 
-# query -> why its Python-list-built frame is one-off or bounded
-PY_FRAME_ALLOW = {
-    "bpe_merges": "the trained model's n_merges-row merge table (16 rows), "
-    "built once per model and scanned once as the query's own result",
-}
-
-
 def lint_plan(name: str, plan: str, formatted: str) -> list[str]:
     hits: list[str] = []
-    if "applySchemaToPythonRDD" in formatted and name not in PY_FRAME_ALLOW:
+    if "applySchemaToPythonRDD" in formatted:
         hits.append("Python-built local frame (applySchemaToPythonRDD)")
     if "CartesianProduct" in plan:
         hits.append("CartesianProduct")
@@ -167,7 +159,7 @@ def main() -> int:
         hits = lint_plan(name, plan, formatted)
         if hits:
             failed[name] = hits
-        elif name in ALLOW or name in PY_FRAME_ALLOW:
+        elif name in ALLOW:
             allowed_used += 1
     for name, hits in failed.items():
         for h in hits:
@@ -183,7 +175,6 @@ def main() -> int:
                     "checked": len(reg),
                     "flagged": failed,
                     "allow": ALLOW,
-                    "py_frame_allow": PY_FRAME_ALLOW,
                 },
                 f,
                 indent=1,

@@ -22,6 +22,12 @@ running the same queries again and again in one session:
   pass this is 0 unless the cache is smaller than the pass's working set,
   or a query generates different code on every run.
 
+After the warm pass it also prints the Python processes running under the
+JVM (``pyspark.daemon`` and its forked workers). Once started they stay
+resident, idle, until the session ends, and their number follows
+``local[N]``, not the data: 0 means no query or index build of the pass
+needed a Python worker. Read from ``/proc`` (Linux only).
+
 Every query runs once untimed (warm pass, in order), then ``--passes``
 profiled passes run in the same order; the rows of the last pass are
 printed, with one totals line per pass.
@@ -73,6 +79,36 @@ class Py4jCalls:
             return fn(spark, sf_dir), self.n
         finally:
             self.counting = False
+
+
+def python_workers(spark) -> int:
+    """Python processes descending from this session's JVM."""
+    import os
+
+    parent: dict[int, int] = {}
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as f:
+                # the field after ``(comm)`` is the state, then the ppid
+                parent[int(entry)] = int(f.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, IndexError, ValueError):
+            continue  # exited while listing
+    jvm = spark._jvm.java.lang.ProcessHandle.current().pid()
+    n = 0
+    for pid in parent:
+        p = parent[pid]
+        while p and p != jvm:
+            p = parent.get(p, 0)
+        if p != jvm:
+            continue
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                n += b"python" in f.read()
+        except OSError:
+            continue
+    return n
 
 
 def compiled_classes(spark) -> int:
@@ -147,6 +183,7 @@ def main() -> None:
             "overwrite"
         ).save()
     warm_compiled = compiled_classes(spark)
+    warm_workers = python_workers(spark)
 
     passes: list[dict[str, dict]] = []
     for _ in range(args.passes):
@@ -170,7 +207,10 @@ def main() -> None:
             f"{prof['broadcast_MB']:>7.3f} {prof['py4j']:>6d} "
             f"{prof['compiled']:>8d}"
         )
-    print(f"warm pass: {warm_compiled} classes compiled since session start")
+    print(
+        f"warm pass: {warm_compiled} classes compiled since session start, "
+        f"{warm_workers} Python processes under the JVM"
+    )
     for i, out in enumerate(passes, 1):
         print(
             f"pass {i}: {sum(p['sec'] for p in out.values()):.2f} s, "

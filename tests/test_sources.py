@@ -1669,3 +1669,188 @@ def test_zone_listing_state_mtime_tracks_rewrites(spark, tmp_path):
             os.utime(zone / name)
     s2 = zone_listing_state(spark, str(zone))
     assert (s2[0], s2[1]) == (s1[0], s1[1]) and s2[2] > s1[2]
+
+
+def test_arrow_frame_is_the_only_create_dataframe_call():
+    """Every driver-built frame in the package goes through
+    ``operators.arrow_frame``: ``createDataFrame`` over a Python list is a
+    pickled Python RDD whose scan forks a ``pyspark.daemon`` and one
+    worker per task, resident for the rest of the session."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "aws_data_pipeline_spark"
+    allowed: list[tuple[str, int, int]] = []
+    hits: list[tuple[str, int]] = []
+    for f in sorted(pkg.rglob("*.py")):
+        rel = f.relative_to(pkg).as_posix()
+        tree = ast.parse(f.read_text())
+        if rel == "operators/__init__.py":
+            allowed += [
+                (rel, n.lineno, n.end_lineno)
+                for n in ast.walk(tree)
+                if isinstance(n, ast.FunctionDef) and n.name == "arrow_frame"
+            ]
+        hits += [
+            (rel, n.lineno)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "createDataFrame"
+        ]
+    assert len(allowed) == 1
+    outside = [
+        h for h in hits
+        if not any(h[0] == r and a <= h[1] <= b for r, a, b in allowed)
+    ]
+    assert outside == [], f"createDataFrame outside arrow_frame: {outside}"
+    assert len(hits) == 1
+
+
+_ARROW_FRAME_DDL = "id long, v array<double>, x double, ok boolean, s string"
+_ARROW_FRAME_ROWS = [
+    (1, [0.5, -0.0, 1e300], 1.25, True, "a"),
+    (2, [], None, None, None),
+    (3, None, float("nan"), False, "é'\\"),
+    (None, [None, 2.0], -3.5, True, ""),
+]
+
+
+@pytest.mark.parametrize("rows", [_ARROW_FRAME_ROWS, []], ids=["rows", "empty"])
+@pytest.mark.parametrize("as_ddl", [True, False], ids=["ddl", "struct"])
+def test_arrow_frame_matches_list_path(spark, rows, as_ddl):
+    """arrow_frame holds the same values, types and nullability as the
+    ``createDataFrame(<list>, schema)`` path it replaces, for a DDL
+    string and a StructType schema alike, empty ``rows`` included."""
+    import math
+
+    from pyspark.sql.types import StructField, StructType
+
+    from aws_data_pipeline_spark.operators import arrow_frame
+
+    struct = StructType.fromDDL(_ARROW_FRAME_DDL)
+    if not as_ddl:
+        # a non-nullable field must stay non-nullable
+        struct = StructType(
+            [StructField("id", struct["id"].dataType, False), *struct.fields[1:]]
+        )
+        rows = [r for r in rows if r[0] is not None]
+    schema = _ARROW_FRAME_DDL if as_ddl else struct
+    got = arrow_frame(spark, rows, schema)
+    ref = spark.createDataFrame(rows, schema)
+    assert got.schema == ref.schema == struct
+
+    def key(r):
+        # NaN != NaN: compare its repr instead
+        return tuple(
+            repr(x) if isinstance(x, float) and math.isnan(x) else x
+            for x in r
+        )
+
+    def rows_of(df):
+        return sorted((key(r) for r in df.collect()), key=repr)
+
+    assert rows_of(got) == rows_of(ref) == sorted(map(key, rows), key=repr)
+
+
+def test_index_and_metadata_writes_start_no_python_rdd(
+    spark, tmp_path, monkeypatch
+):
+    """Index builds, drift baselines, snapshot and publication commits
+    and a BPE merge table plan no Python RDD: with
+    ``SparkContext.parallelize`` made to raise, all of them still run."""
+    from pyspark import SparkContext
+
+    from aws_data_pipeline_spark.operators import arrow_frame, bpe, dedup
+    from aws_data_pipeline_spark.operators import quality as Q
+    from aws_data_pipeline_spark.operators import similarity as S
+    from aws_data_pipeline_spark.sources import publish as P
+    from aws_data_pipeline_spark.sources import snapshots as SN
+
+    def no_python_rdd(*_a, **_k):
+        raise AssertionError("SparkContext.parallelize called")
+
+    monkeypatch.setattr(SparkContext, "parallelize", no_python_rdd)
+    d = str(tmp_path)
+    vecs = spark.range(40).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.sin(F.col("id") * (j + 1) + j) for j in range(8)]).alias(
+            "embedding"
+        ),
+        (F.col("id") % 3).cast("string").alias("c"),
+    )
+    S.build_embedding_lsh_index(vecs, f"{d}/lsh", bands=4, rows_per_band=2, dim=8)
+    S.build_pq_index(vecs, f"{d}/pq", m=2, ks=4)
+    S.build_sq8_index(vecs, f"{d}/sq8")
+    S.build_ivf_index(vecs, f"{d}/ivf", n_cells=2)
+    S.build_ivfpq_cell_codes(spark, f"{d}/ivf", f"{d}/pq", f"{d}/cc")
+
+    docs = arrow_frame(
+        spark,
+        [(i, f"the quick brown fox {i % 3} jumps over the lazy dog")
+         for i in range(6)],
+        "doc_id long, text string",
+    )
+    dedup.build_lsh_text_index(docs, f"{d}/tlsh")
+    dedup.build_kgram_index(docs, f"{d}/kgram", k=3)
+    Q.build_drift_baseline(
+        vecs.select(F.col("vec_id").cast("double").alias("v"), "c"),
+        f"{d}/base", value_col="v", cat_col="c", bins=4,
+    )
+
+    zone = f"{d}/zone"
+    docs.write.parquet(zone)
+    snap = SN.snapshot_zone(spark, zone)
+    # spark_verify_threshold=0: the Spark-side verification frames
+    pinned = SN.read_zone_snapshot(spark, zone, snap, spark_verify_threshold=0)
+    assert pinned.count() == 6
+    assert P.publish_tables(spark, d, {"docs": zone}) == 1
+
+    merges = bpe.learn_bpe(docs, n_merges=3).merges_df()
+    assert merges.count() == 3
+    for sub in ("lsh/meta", "pq/codebooks", "sq8/stats", "ivf/centroids",
+                "cc/meta", "tlsh/meta", "kgram/meta", "base/meta"):
+        assert spark.read.parquet(f"{d}/{sub}").count() > 0
+
+
+def test_events_nanos_read_is_pinned_and_round_trips(spark, tmp_path):
+    """An ``events`` table whose ``ts`` is parquet TIMESTAMP(NANOS) loads
+    as µs timestamps, truncated as DuckDB does; the second load reuses the
+    schema inferred by the first (no footer-inference job) and reads the
+    same rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aws_data_pipeline_spark.sources.parquet import _READ_SCHEMA_MEMO
+
+    sf = str(tmp_path)
+    ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999, None]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(ns, pa.timestamp("ns")),
+            "user_id": pa.array([10, 11, 12], pa.int64()),
+            "event_type": pa.array(["view", "click", None]),
+            "value": pa.array([1.5, None, 2.0]),
+            "props": pa.array(["{}", None, '{"a":1}']),
+        }),
+        f"{sf}/events.parquet",
+        version="2.6",
+        coerce_timestamps=None,
+    )
+    assert pq.read_schema(f"{sf}/events.parquet").field("ts").type.unit == "ns"
+
+    first = load(spark, sf, "events")
+    key = (spark.sparkContext.applicationId, f"{sf}/events.parquet")
+    assert key in _READ_SCHEMA_MEMO
+    again = load(spark, sf, "events")
+    assert again.schema == first.schema
+    assert first.schema["ts"].dataType.typeName() == "timestamp"
+    assert sorted(first.collect()) == sorted(again.collect())
+    micros = first.orderBy("event_id").select(F.unix_micros("ts").alias("us"))
+    assert [r.us for r in micros.collect()] == [
+        None if n is None else n // 1000 for n in ns
+    ]
+    # the scoped legacy conf is restored after each load
+    conf = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
+    assert conf in (None, "false")
