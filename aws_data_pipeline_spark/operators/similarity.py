@@ -12,11 +12,12 @@
 from __future__ import annotations
 
 import math
+from collections import Counter
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Row, Window
+from pyspark.sql import Column, DataFrame, Observation, Row, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -237,27 +238,6 @@ def choose_lsh_params(
     return r, b
 
 
-def choose_ivf_train_fraction(
-    n_vectors: int,
-    n_cells: int,
-    target_per_cell: int = 256,
-    cap: int = 1_000_000,
-) -> float:
-    """Training-sample rule for the IVF coarse quantizer — the docstring
-    advice of :func:`train_ivf_centroids` ("at 100 TB you train on ~1M
-    sampled vectors, never the full corpus") as code. KMeans centroid
-    quality saturates around a few hundred training vectors per cell, so
-    the target set is ``n_cells * target_per_cell`` capped at ``cap``;
-    the returned fraction delivers that in expectation from an
-    ``n_vectors`` corpus. Small corpora get 1.0 (train on everything —
-    also sidesteps Bernoulli under-sampling, see train_ivf_centroids'
-    tiny-regime clamp)."""
-    if n_vectors <= 0:
-        raise ValueError("n_vectors must be positive")
-    want = min(max(n_cells * target_per_cell, 1), cap)
-    return 1.0 if n_vectors <= want else want / n_vectors
-
-
 def choose_ivfpq_params(
     n_vectors: int,
     dim: int,
@@ -270,7 +250,7 @@ def choose_ivfpq_params(
     dimensionality — :func:`choose_lsh_params`' no-hand-tuning rule for
     the cell-pruned ADC path, so a 100 TB caller states a recall target
     instead of guessing nprobe (the r8 verdict's ask). Returns a dict of
-    ``n_cells, nprobe, m, ks, rerank, train_fraction`` accepted verbatim
+    ``n_cells, nprobe, m, ks, rerank`` accepted verbatim
     by :func:`build_ivf_index` / :func:`build_pq_index` /
     :func:`ivfpq_topk_indexed`.
 
@@ -303,8 +283,6 @@ def choose_ivfpq_params(
     - ``rerank = max(8*k, 40)``: the exact re-rank width that recovered
       ADC's subspace error on the planted fixture (rerank=30 at k=5
       measured ≥0.9; 8k=40 adds margin and matches the benched default).
-    - ``train_fraction``: :func:`choose_ivf_train_fraction` at the chosen
-      ``n_cells``.
     """
     if n_vectors <= 0:
         raise ValueError("n_vectors must be positive")
@@ -332,8 +310,43 @@ def choose_ivfpq_params(
         "m": m,
         "ks": 16,
         "rerank": max(8 * k, 40),
-        "train_fraction": choose_ivf_train_fraction(n_vectors, n_cells),
     }
+
+
+def _vector_rows(col: str, dim: int, normalize: bool = True):
+    """A generator function over pandas batches that yields ``(batch,
+    mat)`` per non-empty batch: rows whose ``col`` vector is None or not
+    ``dim`` long are dropped (skip, don't crash), ``mat`` stacks the rest
+    as float64 and, with ``normalize``, drops zero-norm rows and scales
+    the others to unit norm. Shared by the Arrow-batch vector functions;
+    a nested function, so it ships to the Python workers with them."""
+
+    def rows(batches):
+        import numpy as np
+
+        for pdf in batches:
+            vals = pdf[col].to_numpy()
+            valid = np.fromiter(
+                (x is not None and len(x) == dim for x in vals),
+                dtype=bool,
+                count=len(vals),
+            )
+            if not valid.all():
+                pdf, vals = pdf[valid], vals[valid]
+            if len(pdf) == 0:
+                continue
+            mat = np.vstack(vals)
+            if normalize:
+                nrm = np.linalg.norm(mat, axis=1)
+                keep = nrm > 0.0
+                if not keep.all():
+                    pdf, mat, nrm = pdf[keep], mat[keep], nrm[keep]
+                if len(pdf) == 0:
+                    continue
+                mat = mat / nrm[:, None]
+            yield pdf, mat
+
+    return rows
 
 
 def _band_codes(
@@ -356,6 +369,7 @@ def _band_codes(
         _hyperplanes(bands * rows_per_band, dim, seed), dtype="float64"
     )
     id_type = v.schema["id"].dataType.simpleString()
+    rows = _vector_rows("v", dim, normalize=False)
 
     def compute_codes(batches):
         import numpy as np
@@ -364,20 +378,8 @@ def _band_codes(
         proj = planes.T  # (dim, bands*rows_per_band)
         weights = (1 << np.arange(rows_per_band)).astype("int64")
         band_ids = np.arange(bands, dtype="int32")
-        for pdf in batches:
-            vals = pdf["v"].to_numpy()
-            valid = np.fromiter(
-                (x is not None and len(x) == proj.shape[0] for x in vals),
-                dtype=bool,
-                count=len(vals),
-            )
-            if not valid.all():
-                pdf = pdf[valid]
-                vals = vals[valid]
+        for pdf, mat in rows(batches):
             n = len(pdf)
-            if n == 0:
-                continue
-            mat = np.vstack(vals)  # (n, dim)
             # bit i of band j comes from plane j*rows_per_band+i — the same
             # layout as the per-plane formulation, so codes are identical
             bits = (mat @ proj) >= 0.0
@@ -688,56 +690,131 @@ def lsh_bucket(
     return df.withColumn(out_col, guarded)
 
 
+# Driver budget of the k-means fit: the collected training sample and one
+# assignment chunk (rows × k × dim doubles) each stay under this many bytes.
+_TRAIN_BYTES = 64 << 20
+
+
+def _train_sample(
+    corpus: DataFrame, vec_col: str, max_train: int, seed: int, who: str
+):
+    """The k-means training sample of ``corpus[vec_col]`` as a float64
+    matrix, deterministic and independent of the input's partition layout.
+
+    - Thinning: when the corpus holds more than ``max_train`` vectors
+      (further capped at ``_TRAIN_BYTES`` of doubles), keep the rows whose
+      seeded xxhash64 of the vector content lands under ``max_train / n``
+      of the hash range. ``DataFrame.sample`` would depend on the layout.
+    - Order: rows are sorted by value. Collect order follows the partition
+      layout, and k-means++ picks positional indices; duplicate rows are
+      identical, so their relative order cannot matter.
+    - Ragged corpora (wrong-length rows, the hazard ``_band_codes``
+      guards) train on the modal length instead of crashing.
+
+    Two Spark jobs: the count and the collect."""
+    import numpy as np
+
+    vecs = corpus.select(as_double(F.col(vec_col)).alias("cv")).where(
+        F.col("cv").isNotNull()
+    )
+    # observed over a no-op write: one shuffle-free job, where a count()
+    # aggregate is two under AQE
+    obs = Observation()
+    vecs.observe(
+        obs, F.count(F.lit(1)).alias("n"), F.max(F.size("cv")).alias("dim")
+    ).write.format("noop").mode("overwrite").save()
+    n, dim = obs.get["n"], obs.get["dim"]
+    if n == 0:
+        raise ValueError(f"{who}: empty corpus")
+    max_train = min(max_train, max(1, _TRAIN_BYTES // (8 * max(dim, 1))))
+    if n > max_train:
+        thresh = int(max_train / n * (1 << 32))
+        vecs = vecs.where(
+            F.pmod(F.xxhash64(F.col("cv"), F.lit(seed)), F.lit(1 << 32))
+            < F.lit(thresh)
+        )
+    vals = vecs.toPandas()["cv"].tolist()
+    counts = Counter(len(x) for x in vals)
+    modal = max(counts, key=lambda d: (counts[d], d))
+    mat = np.array([x for x in vals if len(x) == modal], dtype="float64")
+    return mat[np.lexsort(mat.T[::-1])]
+
+
+def _sq_dists(x, c):
+    """Squared euclidean distances ``(len(x), len(c))``, elementwise: a
+    BLAS matmul's summation order follows its thread count, so the fit
+    would no longer be bit-identical across hosts."""
+    return ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
+
+
+def _kmeans(mat, k: int, seed, iters: int = 20):
+    """Seeded k-means++ / Lloyd fit of ``min(k, distinct rows)`` centroids
+    to the rows of ``mat`` (squared euclidean, first-min ties, as
+    :func:`nearest_cell`). Bit-deterministic given the rows and their
+    order. ``seed`` is an int or a numpy ``Generator`` (PQ draws all its
+    subspaces from one stream). Assignment runs in row chunks, so driver
+    memory stays O(chunk × k × dim) within ``_TRAIN_BYTES``."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    k = min(k, len(np.unique(mat, axis=0)))
+    # k-means++ seeding: the first center (and any drawn once every row is
+    # a center) uniformly, the rest proportional to squared distance
+    d2 = np.full(len(mat), np.inf)
+    picks: list[int] = []
+    for _ in range(k):
+        tot = d2.sum()
+        if 0.0 < tot < np.inf:
+            # clamp: float cumsum can end < 1.0, and searchsorted would
+            # then return len(mat) for an unlucky draw
+            pick = np.searchsorted(np.cumsum(d2 / tot), rng.random())
+            picks.append(min(pick, len(mat) - 1))
+        else:
+            picks.append(rng.integers(len(mat)))
+        d2 = np.minimum(d2, _sq_dists(mat, mat[picks[-1:]])[:, 0])
+    c = mat[picks]
+    step = max(1, _TRAIN_BYTES // (8 * k * mat.shape[1]))
+    for _ in range(iters):
+        assign = np.concatenate(
+            [
+                _sq_dists(mat[i : i + step], c).argmin(axis=1)
+                for i in range(0, len(mat), step)
+            ]
+        )
+        newc = np.vstack(
+            [
+                mat[assign == i].mean(axis=0) if (assign == i).any() else c[i]
+                for i in range(k)
+            ]
+        )
+        done, c = np.allclose(newc, c), newc
+        if done:
+            break
+    return c
+
+
 def train_ivf_centroids(
     corpus: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_cells: int = 16,
     seed: int = 42,
-    train_fraction: float | None = None,
 ) -> list[list[float]]:
-    """Train the IVF coarse quantizer: KMeans(n_cells) over the corpus (or a
-    ``train_fraction`` sample — at 100 TB you train on ~1M sampled vectors,
-    never the full corpus). Returns the centroid list — a driver-sized
-    artifact (n_cells × dim floats) that callers cache/persist so the
-    training pass is paid ONCE per corpus, not per query batch.
+    """Train the IVF coarse quantizer: :func:`_kmeans` of ``n_cells``
+    centroids over the raw double vectors — the fit PQ's codebooks use —
+    on :func:`_train_sample`'s sample of at most 256 vectors per cell (the
+    FAISS rule: centroid quality saturates there, so at 100 TB the fit
+    never sees the full corpus). A corpus with fewer distinct vectors than
+    ``n_cells`` gets one centroid per distinct vector; an empty one
+    raises. Returns the centroid list — a driver-sized artifact (n_cells ×
+    dim floats) that callers persist (``build_ivf_index``) so the training
+    pass is paid ONCE per corpus, not per query batch.
 
-    NOTE: Spark's KMeans is NOT bit-deterministic across fits even with a
-    fixed seed (parallel k-means|| init and float accumulation order vary
-    with scheduling), and DataFrame.sample depends on the input's partition
-    layout. When reproducibility matters, train once and persist the
-    centroids (``build_ivf_index``) — never retrain and expect equality."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    c = corpus.select(as_double(F.col(vec_col)).alias("cv")).withColumn(
-        "features", array_to_vector("cv")
-    )
-    train = c if train_fraction is None else c.sample(train_fraction, seed=seed)
-    # Spark 4's block KMeans hard-crashes (AIOOBE in the aggregator) when k
-    # exceeds the training row count OR the distinct-vector count — both
-    # reachable only in the tiny regime (a Bernoulli sample of a small
-    # corpus under-delivers; at real scale the sample is ~1M vectors and
-    # these branches are dead, so their extra counts cost nothing).
-    k = n_cells
-    n_train = train.count()
-    if train_fraction is not None and n_train < 4 * n_cells:
-        train = c
-        n_train = train.count()
-    if n_train == 0:
-        # an index trained on nothing is a caller error, not a k=1
-        # KMeans crash three frames deep — same loud contract as
-        # train_pq_codebooks
-        raise ValueError("train_ivf_centroids: empty corpus")
-    if n_train < 4 * n_cells:
-        n_distinct = train.select("cv").distinct().count()
-        if n_distinct == 1:
-            # one distinct vector IS the quantizer; Spark ML KMeans
-            # rejects k=1 outright
-            return [[float(x) for x in train.select("cv").first().cv]]
-        k = max(2, min(k, n_distinct))
-    model = KMeans(k=k, seed=seed, featuresCol="features").fit(train)
-    return [[float(x) for x in ctr] for ctr in model.clusterCenters()]
+    Deterministic and layout-independent: the same vectors, however
+    partitioned, give byte-identical centroids, so a persisted index can
+    be re-derived."""
+    mat = _train_sample(corpus, vec_col, 256 * n_cells, seed, "train_ivf_centroids")
+    return _kmeans(mat, n_cells, seed).tolist()
 
 
 def nearest_cell(v: Column, centroids: list[list[float]]) -> Column:
@@ -761,6 +838,22 @@ def nearest_cell(v: Column, centroids: list[list[float]]) -> Column:
     return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
+def _rank_cells(q: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
+    """(query_id, qv, cell) for each query's ``nprobe`` nearest cells: a
+    (query_id, qv) frame against the broadcast (cell, centroid) table,
+    ranked by centroid cosine with ties to the lower cell."""
+    wq = Window.partitionBy("query_id").orderBy(
+        F.col("cent_sim").desc(), F.col("cell").asc()
+    )
+    return (
+        q.crossJoin(F.broadcast(cent))
+        .withColumn("cent_sim", cosine(F.col("qv"), F.col("centroid")))
+        .withColumn("cell_rank", F.row_number().over(wq))
+        .filter(F.col("cell_rank") <= nprobe)
+        .select("query_id", "qv", "cell")
+    )
+
+
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -770,7 +863,6 @@ def ivf_topk(
     n_cells: int = 16,
     nprobe: int = 4,
     seed: int = 42,
-    train_fraction: float | None = None,
     centroids: list[list[float]] | None = None,
     assigned: DataFrame | None = None,
 ) -> DataFrame:
@@ -793,34 +885,17 @@ def ivf_topk(
     pytest measures recall vs brute_force_topk.
     """
     if centroids is None:
-        centroids = train_ivf_centroids(
-            corpus, id_col, vec_col, n_cells, seed, train_fraction
-        )
+        centroids = train_ivf_centroids(corpus, id_col, vec_col, n_cells, seed)
     if assigned is None:
         c = _id_vec(corpus, id_col, vec_col, "neighbor_id", "cv")
         assigned = c.withColumn("cell", nearest_cell(F.col("cv"), centroids))
 
-    # broadcast the centroid table; each query ranks centroids by cosine and
-    # keeps its nprobe nearest cells
-    spark = corpus.sparkSession
-    cent_df = F.broadcast(
-        arrow_frame(
-            spark,
-            list(enumerate(centroids)),
-            "cell int, centroid array<double>",
-        )
+    cent = arrow_frame(
+        corpus.sparkSession,
+        list(enumerate(centroids)),
+        "cell int, centroid array<double>",
     )
-    q = _id_vec(queries, id_col, vec_col)
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cent_sim").desc(), F.col("cell").asc()
-    )
-    probed = (
-        q.crossJoin(cent_df)
-        .withColumn("cent_sim", cosine(F.col("qv"), F.col("centroid")))
-        .withColumn("cell_rank", F.row_number().over(wq))
-        .filter(F.col("cell_rank") <= nprobe)
-        .select("query_id", "qv", "cell")
-    )
+    probed = _rank_cells(_id_vec(queries, id_col, vec_col), cent, nprobe)
     scored = (
         F.broadcast(probed)
         .join(assigned.select("neighbor_id", "cv", "cell"), "cell")
@@ -844,7 +919,6 @@ def build_ivf_index(
     vec_col: str = "embedding",
     n_cells: int = 16,
     seed: int = 42,
-    train_fraction: float | None = None,
     force_new_version: bool = False,
     payload_cols: Sequence[str] = (),
 ) -> None:
@@ -866,9 +940,7 @@ def build_ivf_index(
     """
     spark = corpus.sparkSession
     root, new_v, old_root = _resolve_build_root(spark, path, force_new_version)
-    centroids = train_ivf_centroids(
-        corpus, id_col, vec_col, n_cells, seed, train_fraction
-    )
+    centroids = train_ivf_centroids(corpus, id_col, vec_col, n_cells, seed)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         as_double(F.col(vec_col)).alias("cv"),
@@ -898,6 +970,14 @@ def build_ivf_index(
         .parquet(f"{root}/build_stats")
     )
     _finish_index_build(spark, path, new_v, old_root, _IVF_SUBS)
+
+
+def read_ivf_centroids(spark, root: str) -> list[list[float]]:
+    """The centroid list of a RESOLVED IVF root, in cell order — the
+    quantizer :func:`nearest_cell` assigns with."""
+    rows = read_pinned(spark, f"{root}/centroids").collect()
+    rows.sort(key=lambda r: r.cell)
+    return [[float(x) for x in r.centroid] for r in rows]
 
 
 def ivf_topk_indexed(
@@ -1122,13 +1202,7 @@ def append_to_ivf_index(
     owner can schedule a retrain (which IS a full rebuild, by design:
     moving centroids re-cells every vector)."""
     path = index_root(spark, path)
-    cents = [
-        [float(x) for x in r.centroid]
-        for r in sorted(
-            read_pinned(spark, f"{path}/centroids").collect(),
-            key=lambda r: r.cell,
-        )
-    ]
+    cents = read_ivf_centroids(spark, path)
     payload = [
         c
         for c in read_pinned(spark, f"{path}/corpus").columns
@@ -1277,7 +1351,6 @@ def retrain_ivf_index(
     path: str,
     n_cells: int | None = None,
     seed: int = 42,
-    train_fraction: float | None = None,
 ) -> dict[str, int]:
     """Retrain a persisted IVF index's quantizer and rebuild it in place —
     the endpoint of the append lifecycle: ``build_ivf_index`` →
@@ -1286,13 +1359,11 @@ def retrain_ivf_index(
     Trains on the index's OWN materialized vectors (``path/corpus`` holds
     them), so at 100 TB the retrain never rescans the source corpus — its
     cost is one corpus-vector materialization, one k-means over a
-    ``train_fraction`` sample, and one reassignment write. ``n_cells``
-    defaults to scaling the built cell count proportionally with realized
-    corpus growth (cells ∝ corpus size keeps per-cell probe cost constant
-    as the index grows); ``train_fraction`` defaults to
-    :func:`choose_ivf_train_fraction` over the index's own vector count
-    (~256·k training vectors, capped at 1M — never a full-corpus fit at
-    scale); pass either explicitly to override. The rebuild
+    sample of at most 256 vectors per cell (:func:`train_ivf_centroids`),
+    and one reassignment write. ``n_cells`` defaults to scaling the built
+    cell count proportionally with realized corpus growth (cells ∝ corpus
+    size keeps per-cell probe cost constant as the index grows); pass it
+    explicitly to override. The rebuild
     rewrites ``corpus``/``centroids``/``build_stats``, resetting the drift
     baseline, so ``ivf_retrain_due`` is False immediately after.
 
@@ -1317,10 +1388,6 @@ def retrain_ivf_index(
         built_cells = len(drift)
         grown = built_cells if built == 0 else -(-built_cells * current // built)
         n_cells = max(built_cells, int(grown))
-    if train_fraction is None:
-        # the drift rows already told us the corpus size — derive the
-        # scale-honest sample instead of defaulting to a full-corpus fit
-        train_fraction = choose_ivf_train_fraction(current, n_cells)
     # the rebuild writes a NEW version dir, so reading the active root
     # lazily would be safe — but the post-commit cleanup deletes these
     # files, so materialize anyway before the build consumes them twice
@@ -1339,7 +1406,6 @@ def retrain_ivf_index(
         path,
         n_cells=n_cells,
         seed=seed,
-        train_fraction=train_fraction,
         force_new_version=True,
         payload_cols=payload,
     )
@@ -1367,48 +1433,18 @@ def train_pq_codebooks(
     ``normalize`` must match :func:`pq_encode`'s (both default True):
     codebooks fitted in raw space quantize unit-normalized vectors badly.
 
-    Training is a bounded-sample driver-side Lloyd's with k-means++ init
-    under a seeded RNG: codebook fitting is inherently sample-based (FAISS
-    trains on ~100k vectors regardless of corpus size), the collect is
-    capped at ``max_train`` rows (16k × 64 floats ≈ 8 MB), and — unlike
-    Spark ML KMeans, whose k-means|| init and accumulation order vary with
-    scheduling — the fit is bit-deterministic given the sample, so a
-    persisted codebook can be re-derived for audit. The sample itself uses
-    a seeded ORDER-INSENSITIVE filter (hash of the vector bytes), not
-    DataFrame.sample, so it is partition-layout independent too.
+    Training is one :func:`_kmeans` per subspace, all drawing from one
+    seeded RNG, over :func:`_train_sample`'s sample — the fit and sample
+    :func:`train_ivf_centroids` uses. Codebook fitting is inherently
+    sample-based (FAISS trains on ~100k vectors regardless of corpus
+    size), the collect is capped at ``max_train`` rows (16k × 64 floats ≈
+    8 MB), and the codebooks are bit-deterministic and independent of the
+    input's partition layout, so a persisted codebook can be re-derived
+    for audit.
     """
     import numpy as np
 
-    vecs = corpus.select(as_double(F.col(vec_col)).alias("cv")).where(
-        F.col("cv").isNotNull()
-    )
-    n = vecs.count()
-    if n == 0:
-        raise ValueError("train_pq_codebooks: empty corpus")
-    if n > max_train:
-        # deterministic, layout-independent thinning: keep rows whose
-        # vector-content hash lands under the acceptance threshold
-        frac = max_train / n
-        thresh = int(frac * (1 << 32))
-        vecs = vecs.where(
-            F.pmod(F.xxhash64(F.col("cv"), F.lit(seed)), F.lit(1 << 32))
-            < F.lit(thresh)
-        )
-    vals = vecs.toPandas()["cv"].tolist()
-    # ragged corpora (wrong-length rows — same hazard _band_codes guards)
-    # would collect as an object array and crash the matmuls; train on the
-    # modal length, mirroring pq_encode's skip-don't-crash contract
-    lengths: dict[int, int] = {}
-    for x in vals:
-        lengths[len(x)] = lengths.get(len(x), 0) + 1
-    modal = max(lengths, key=lambda d: lengths[d])
-    mat = np.array([x for x in vals if len(x) == modal], dtype="float64")
-    # sort the sample BY VALUE before the fit: toPandas() order follows
-    # partition layout, and k-means++ picks positional indices — without
-    # this, repartitioning/compacting the source changes the codebooks
-    # and the docstring's re-derivability claim breaks (duplicate rows
-    # are identical, so their relative order cannot matter)
-    mat = mat[np.lexsort(mat.T[::-1])]
+    mat = _train_sample(corpus, vec_col, max_train, seed, "train_pq_codebooks")
     if normalize:
         nrm = np.linalg.norm(mat, axis=1)
         mat = mat[nrm > 0.0] / nrm[nrm > 0.0, None]
@@ -1421,39 +1457,10 @@ def train_pq_codebooks(
     rng = np.random.default_rng(seed)
     books: list[list[list[float]]] = []
     for j in range(m):
-        x = mat[:, j * sub : (j + 1) * sub]
-        k = min(ks, len(np.unique(x, axis=0)))
-        # k-means++ seeding
-        centers = [x[rng.integers(len(x))]]
-        for _ in range(1, k):
-            d2 = np.min(
-                [((x - c) ** 2).sum(axis=1) for c in centers], axis=0
-            )
-            tot = d2.sum()
-            if tot == 0.0:
-                centers.append(x[rng.integers(len(x))])
-                continue
-            # clamp: float cumsum can end < 1.0, and searchsorted would
-            # then return len(x) for an unlucky draw
-            pick = min(np.searchsorted(np.cumsum(d2 / tot), rng.random()), len(x) - 1)
-            centers.append(x[pick])
-        c = np.vstack(centers)
-        for _ in range(iters):
-            d = ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-            assign = d.argmin(axis=1)
-            newc = np.vstack(
-                [
-                    x[assign == i].mean(axis=0) if (assign == i).any() else c[i]
-                    for i in range(len(c))
-                ]
-            )
-            if np.allclose(newc, c):
-                c = newc
-                break
-            c = newc
+        c = _kmeans(mat[:, j * sub : (j + 1) * sub], ks, rng, iters)
         if len(c) < ks:  # degenerate tiny corpora: pad by repeating
             c = np.vstack([c] + [c[-1:]] * (ks - len(c)))
-        books.append([[float(v) for v in row] for row in c])
+        books.append(c.tolist())
     return books
 
 
@@ -1481,34 +1488,13 @@ def pq_encode(
     dim = m * sub
     id_type = corpus.schema[id_col].dataType.simpleString()
     v = corpus.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
+    rows = _vector_rows("v", dim, normalize)
 
     def encode(batches):
         import numpy as np
         import pandas as pd
 
-        for pdf in batches:
-            vals = pdf["v"].to_numpy()
-            valid = np.fromiter(
-                (x is not None and len(x) == dim for x in vals),
-                dtype=bool,
-                count=len(vals),
-            )
-            if not valid.all():
-                pdf = pdf[valid]
-                vals = vals[valid]
-            if len(pdf) == 0:
-                continue
-            mat = np.vstack(vals)
-            if normalize:
-                nrm = np.linalg.norm(mat, axis=1)
-                keep = nrm > 0.0
-                if not keep.all():
-                    pdf = pdf[keep]
-                    mat = mat[keep]
-                    nrm = nrm[keep]
-                if len(pdf) == 0:
-                    continue
-                mat = mat / nrm[:, None]
+        for pdf, mat in rows(batches):
             codes = np.empty((len(mat), m), dtype="int32")
             for j in range(m):
                 x = mat[:, j * sub : (j + 1) * sub]
@@ -1524,49 +1510,24 @@ def pq_encode(
     )
 
 
-def _pq_query_luts(
-    q: DataFrame, codebooks: list[list[list[float]]], id_type: str
-) -> DataFrame:
-    """(query_id, qv, lut) for a (query_id, qv) frame: the normalized
-    query vector and its m×ks LUT of subspace inner products, built as
-    ONE numpy matmul per Arrow batch (a literal-expression LUT costs
-    seconds of Catalyst analysis — measured in round 7 and rejected).
-    Zero-norm / ragged queries are dropped. The frame-side query LUT of
-    :func:`_pq_scored`."""
+def _lut_builder(codebooks: list[list[list[float]]]):
+    """The mapInPandas function over (query_id, qv) batches that yields
+    (query_id, qv, lut): the normalized query vector and its m×ks LUT of
+    subspace inner products, built as ONE numpy matmul per batch (a
+    literal-expression LUT costs seconds of Catalyst analysis — measured
+    in round 7 and rejected). Zero-norm / ragged queries are dropped."""
     import numpy as np
 
     m = len(codebooks)
-    ks = len(codebooks[0])
     sub = len(codebooks[0][0])
-    dim = m * sub
     books = [np.asarray(b, dtype="float64") for b in codebooks]
+    rows = _vector_rows("qv", m * sub)
 
     def build_lut(batches):
         import numpy as np
         import pandas as pd
 
-        for pdf in batches:
-            vals = pdf["qv"].to_numpy()
-            valid = np.fromiter(
-                (x is not None and len(x) == dim for x in vals),
-                dtype=bool,
-                count=len(vals),
-            )
-            if not valid.all():
-                pdf = pdf[valid]
-                vals = vals[valid]
-            if len(pdf) == 0:
-                continue
-            mat = np.vstack(vals)
-            nrm = np.linalg.norm(mat, axis=1)
-            keep = nrm > 0.0
-            if not keep.all():
-                pdf = pdf[keep]
-                mat = mat[keep]
-                nrm = nrm[keep]
-            if len(pdf) == 0:
-                continue
-            mat = mat / nrm[:, None]
+        for pdf, mat in rows(batches):
             # LUT[j*ks + c] = <q_j, codebook_j[c]> — one matmul per subspace
             lut = np.concatenate(
                 [mat[:, j * sub : (j + 1) * sub] @ books[j].T for j in range(m)],
@@ -1580,8 +1541,17 @@ def _pq_query_luts(
                 }
             )
 
+    return build_lut
+
+
+def _pq_query_luts(
+    q: DataFrame, codebooks: list[list[list[float]]], id_type: str
+) -> DataFrame:
+    """(query_id, qv, lut) for a (query_id, qv) frame, one
+    :func:`_lut_builder` Arrow batch per partition — the frame-side query
+    LUT of :func:`_pq_scored`."""
     return q.mapInPandas(
-        build_lut,
+        _lut_builder(codebooks),
         schema=f"query_id {id_type}, qv array<double>, lut array<double>",
     )
 
@@ -1591,42 +1561,22 @@ def _pq_query_luts_local(
 ):
     """:func:`_pq_query_luts` for an ALREADY-COLLECTED bounded query
     batch (the (query_id, qv) pairs :func:`_probe_cells` returns): the
-    SAME numpy operations on the same float64 values — vstack, row norm,
-    normalize, per-subspace matmul — run on the driver, and the result
-    re-created as a local frame. The broadcast consumer then ships driver
-    rows instead of re-running the query scan plus a single-task Arrow
-    worker round-trip per probe (guide §4: the composed probes had
-    already paid the collect, so the Python boundary bought nothing).
-    Same drop rules: None/ragged vectors and zero norms yield no row."""
-    import numpy as np
+    same :func:`_lut_builder` function runs on the driver over one pandas
+    batch, and the result is re-created as a local frame. The broadcast
+    consumer then ships driver rows instead of re-running the query scan
+    plus a single-task Arrow worker round-trip per probe (guide §4: the
+    composed probes had already paid the collect, so the Python boundary
+    bought nothing)."""
+    import pandas as pd
 
-    m = len(codebooks)
-    ks = len(codebooks[0])
-    sub = len(codebooks[0][0])
-    dim = m * sub
-    books = [np.asarray(b, dtype="float64") for b in codebooks]
-    kept = [
-        (qid, v) for qid, v in q_rows if v is not None and len(v) == dim
+    batch = pd.DataFrame(
+        {"query_id": [r[0] for r in q_rows], "qv": [r[1] for r in q_rows]}
+    )
+    out = [
+        (qid, v.tolist(), lut.tolist())
+        for part in _lut_builder(codebooks)([batch])
+        for qid, v, lut in zip(part["query_id"].tolist(), part["qv"], part["lut"])
     ]
-    out: list[tuple] = []
-    if kept:
-        mat = np.vstack([np.asarray(v, dtype="float64") for _, v in kept])
-        nrm = np.linalg.norm(mat, axis=1)
-        keep = nrm > 0.0
-        ids = [qid for (qid, _), k in zip(kept, keep) if k]
-        mat = mat[keep] / nrm[keep][:, None]
-        lut = np.concatenate(
-            [mat[:, j * sub : (j + 1) * sub] @ books[j].T for j in range(m)],
-            axis=1,
-        )
-        out = [
-            (
-                qid,
-                [float(x) for x in mat[i]],
-                [float(x) for x in lut[i]],
-            )
-            for i, qid in enumerate(ids)
-        ]
     return arrow_frame(
         spark,
         out,
@@ -2543,17 +2493,8 @@ def _probe_cells(
     all-in-memory matmul every IVF serving stack runs on one node.
     Per-row expressions and the (cent_sim desc, cell asc) total order are
     unchanged, so the probed set is bit-identical to the exchanged plan's."""
-    cent = F.broadcast(read_pinned(spark, f"{ivf_root}/centroids"))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cent_sim").desc(), F.col("cell").asc()
-    )
-    sel = (
-        q.coalesce(1)
-        .crossJoin(cent)
-        .withColumn("cent_sim", cosine(F.col("qv"), F.col("centroid")))
-        .withColumn("cell_rank", F.row_number().over(wq))
-        .filter(F.col("cell_rank") <= nprobe)
-        .select("query_id", "cell", "qv")
+    sel = _rank_cells(
+        q.coalesce(1), read_pinned(spark, f"{ivf_root}/centroids"), nprobe
     )
     rows = sel.collect()
     # (query_id, qv, cell) with ``carry_qv`` — the shape ivf_topk_indexed

@@ -93,23 +93,63 @@ def read_partition_slice(
     tuples (e.g. ``[(2024, 1, 3), (2024, 1, 4)]`` for year/month/day);
     ``schema`` pins the read as in :func:`read_zone`.
 
-    The disjunction of equality predicates on partition columns resolves at
-    planning time to PartitionFilters — only the matching directories are
-    listed and scanned. This is what keeps per-run idempotency anti-joins
+    One ``struct(*key_cols) IN (struct literals)`` predicate over the
+    partition columns resolves at planning time to PartitionFilters — only
+    the matching directories are listed and scanned — and costs a few
+    Column calls per tuple where an OR of per-tuple AND chains cost one
+    per key column. This is what keeps per-run idempotency anti-joins
     O(batch), not O(history): a micro-batch touching 2 days reads 2 days of
     silver, never the full zone (SURVEY.md §4.2-5/6; the same pruning
     ``streaming/gold.py`` uses for targeted gold rebuilds).
     """
-    cond = F.lit(False)
-    for tup in keys:
-        row_cond = F.lit(True)
-        for col, val in zip(key_cols, tup):
-            row_cond = row_cond & (F.col(col) == F.lit(val))
-        cond = cond | row_cond
+    cond = F.struct(*key_cols).isin(
+        [F.struct(*[F.lit(v).alias(c) for c, v in zip(key_cols, t)]) for t in keys]
+    )
     return read_zone(spark, path, schema=schema).filter(cond)
 
 
-_READ_SCHEMA_MEMO: dict[tuple[str, str], object] = {}
+_APP_MEMO: dict = {}
+_MISS = object()
+
+
+def app_memo(
+    spark: SparkSession, scope: tuple, state, build, alive=None, release=None
+):
+    """The ONE application-lifetime cache: inferred read schemas
+    (:func:`read_pinned`), index artifacts (:func:`artifact_memo`), and
+    the registry's source-table counts, ensured index paths, resolved
+    composed roots, resident IVF/PQ frames and BPE models all live here
+    under one key and one eviction rule. The key is (application id,
+    ``scope``, ``state``): ``scope`` names the cache and its parameters
+    (differently parameterized entries coexist), ``state`` what the value
+    was built from (a source table's state, so a regenerated corpus
+    misses instead of serving the old corpus's artifact).
+
+    - A warm hit is one dict lookup, served only if ``alive(value)``
+      passes (a one-leaf zone_exists probe on a memoized index path: an
+      out-of-band deletion flips no source state); otherwise it is
+      rebuilt.
+    - A miss first evicts every entry of the same scope in this
+      application (superseded states, and a hit that failed ``alive``),
+      calling ``release(value)`` on each (unpersist: a superseded resident
+      frame would pin executor storage for the rest of the application),
+      and drops every other application's entries WITHOUT ``release``:
+      their storage died with their application, and a long-lived
+      multi-session driver process must not grow the memo without
+      bound.
+    - :func:`delete_zone` evicts the path-scoped entries (``("schema",
+      path)``, ``("artifact", path)``) under a deleted path."""
+    app = spark.sparkContext.applicationId
+    key = (app, scope, state)
+    value = _APP_MEMO.get(key, _MISS)
+    if value is not _MISS and (alive is None or alive(value)):
+        return value
+    for old in [k for k in _APP_MEMO if k[0] != app or k[1] == scope]:
+        value = _APP_MEMO.pop(old)
+        if old[0] == app and release is not None:
+            release(value)
+    _APP_MEMO[key] = value = build()
+    return value
 
 
 def read_pinned(spark: SparkSession, path: str) -> DataFrame:
@@ -130,21 +170,12 @@ def read_pinned(spark: SparkSession, path: str) -> DataFrame:
     directories are immutable, appends write the same columns, deletes
     copy sub-tables verbatim, and rebuilds land in a NEW version dir
     (fresh memo key). Zones with live schema evolution (silver
-    ``mergeSchema`` reads) must keep :func:`read_zone`. The memo key
-    includes the application id; inserts evict dead applications'
-    entries, mirroring the registry's index-root memos."""
-    key = (spark.sparkContext.applicationId, path)
-    schema = _READ_SCHEMA_MEMO.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        for old in [k for k in _READ_SCHEMA_MEMO if k[0] != key[0]]:
-            _READ_SCHEMA_MEMO.pop(old)
-        _READ_SCHEMA_MEMO[key] = df.schema
-        return df
+    ``mergeSchema`` reads) must keep :func:`read_zone`. Memoized in
+    :func:`app_memo` under ``("schema", path)``."""
+    schema = app_memo(
+        spark, ("schema", path), None, lambda: spark.read.parquet(path).schema
+    )
     return spark.read.schema(schema).parquet(path)
-
-
-_ARTIFACT_MEMO: dict[tuple[str, str], object] = {}
 
 
 def artifact_memo(spark: SparkSession, path: str, build):
@@ -156,17 +187,9 @@ def artifact_memo(spark: SparkSession, path: str, build):
     tables that cannot change under the key: artifacts live in a resolved
     VERSION root — retrains/rebuilds land in a NEW root (fresh key),
     appends write data tables but never the artifact tables (codebooks /
-    stats are "fixed on append" by contract). Same lifetime and eviction
-    rules as the schema memo: keyed on application id (dead apps evicted
-    on insert), entries under an explicitly deleted path evicted by
-    :func:`delete_zone`."""
-    key = (spark.sparkContext.applicationId, path)
-    if key not in _ARTIFACT_MEMO:
-        val = build()
-        for old in [k for k in _ARTIFACT_MEMO if k[0] != key[0]]:
-            _ARTIFACT_MEMO.pop(old)
-        _ARTIFACT_MEMO[key] = val
-    return _ARTIFACT_MEMO[key]
+    stats are "fixed on append" by contract). Memoized in
+    :func:`app_memo` under ``("artifact", path)``."""
+    return app_memo(spark, ("artifact", path), None, build)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -405,20 +428,21 @@ def delete_zone(spark: SparkSession, path: str) -> None:
     of a superseded index version. A crash between commit and cleanup
     leaves orphaned-but-inert files (never resolved by index_root).
 
-    Also evicts :func:`read_pinned` memo entries under ``path``: a later
-    same-path rebuild (legal after an explicit delete) may carry different
-    columns, and a pinned pre-delete schema would silently misread it."""
+    Also evicts the :func:`read_pinned` and :func:`artifact_memo` entries
+    under ``path``: a later same-path rebuild (legal after an explicit
+    delete) may carry different columns, and a pinned pre-delete schema
+    would silently misread it."""
     _, jpath, fs = _hadoop_fs(spark, path)
     if fs.exists(jpath):
         fs.delete(jpath, True)
     prefix = path.rstrip("/")
-    for memo in (_READ_SCHEMA_MEMO, _ARTIFACT_MEMO):
-        for key in [
-            k
-            for k in memo
-            if k[1] == prefix or k[1].startswith(prefix + "/")
-        ]:
-            memo.pop(key)
+    for key in [
+        k
+        for k in _APP_MEMO
+        if k[1][0] in ("schema", "artifact")
+        and (k[1][1] == prefix or k[1][1].startswith(prefix + "/"))
+    ]:
+        _APP_MEMO.pop(key)
 
 
 _COMPACT_TMP_DIR = "_compacting"

@@ -105,7 +105,7 @@ class _Index(NamedTuple):
     """A secondary index the loop keeps current from the batch ∩ corpus
     set. It counts as built once ``present`` exists at its active root;
     then ``append(accepted, path)``, else
-    ``bootstrap(full corpus, corpus rows, path)``."""
+    ``bootstrap(full corpus, path)`` when the corpus holds rows."""
 
     path: str | None
     present: str
@@ -195,9 +195,9 @@ def _ingest(
                 continue
             if full is None:
                 full = sess.read.parquet(corpus_path)
-                n_full = full.count()
-            if n_full:
-                ix.bootstrap(full, n_full, ix.path)
+                has_rows = not full.isEmpty()
+            if has_rows:
+                ix.bootstrap(full, ix.path)
 
     if gc_superseded_versions:
         _gc(spark, estate)
@@ -439,7 +439,7 @@ def incremental_corpus_ingest(
         secondaries=[
             _Index(
                 kgram_index_path, "meta", dedup.append_to_kgram_index,
-                lambda full, n, path: dedup.build_kgram_index(full, path, k=kgram_k),
+                lambda full, path: dedup.build_kgram_index(full, path, k=kgram_k),
             )
         ],
         estate=_text_estate(index_path, kgram_index_path),

@@ -158,22 +158,19 @@ def incremental_embedding_ingest(
                 lambda df, path: similarity.append_to_ivf_index(
                     df.sparkSession, df, path
                 ),
-                lambda full, n, path: similarity.build_ivf_index(
-                    full, path, n_cells=ivf_cells,
-                    train_fraction=similarity.choose_ivf_train_fraction(
-                        n, ivf_cells
-                    ),
+                lambda full, path: similarity.build_ivf_index(
+                    full, path, n_cells=ivf_cells
                 ),
             ),
             _Index(
                 sq8_index_path, "meta", similarity.append_to_sq8_index,
-                lambda full, n, path: similarity.build_sq8_index(full, path),
+                similarity.build_sq8_index,
             ),
             _Index(
                 pq_index_path, "meta", similarity.append_to_pq_index,
                 # the CALLER's PQ shape: a dim not divisible by the
                 # default m=8 would otherwise raise mid-foreachBatch
-                lambda full, n, path: similarity.build_pq_index(
+                lambda full, path: similarity.build_pq_index(
                     full, path, m=pq_m, ks=pq_ks, seed=pq_seed, max_train=pq_max_train
                 ),
             ),

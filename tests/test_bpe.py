@@ -356,11 +356,12 @@ def test_bpe_model_trains_once_across_registry_queries(spark, sf_dir, monkeypatc
     16-round sequential fold per query would triple the dominant cost, so
     pin it: learn_bpe may be invoked at most once across all three."""
     from aws_data_pipeline_spark.operators import bpe
-    from aws_data_pipeline_spark.plans import llm, load_registry
+    from aws_data_pipeline_spark.plans import load_registry
+    from aws_data_pipeline_spark.sources.parquet import _APP_MEMO
 
     reg = load_registry()
-    for key in [k for k in llm._APP_MEMO if k[1][0] == "bpe"]:
-        del llm._APP_MEMO[key]
+    for key in [k for k in _APP_MEMO if k[1][0] == "bpe"]:
+        del _APP_MEMO[key]
     calls = {"n": 0}
     real = bpe.learn_bpe
 

@@ -84,7 +84,7 @@ def test_ivf_append_assignment_identity_idempotency_and_drift(
     corpus0 = e.filter(F.col("vec_id") % 10 != 7)
     batch = e.filter(F.col("vec_id") % 10 == 7)
     idx = str(tmp_path / "ivf")
-    build_ivf_index(corpus0, idx, n_cells=4, seed=42, train_fraction=0.5)
+    build_ivf_index(corpus0, idx, n_cells=4, seed=42)
 
     before = {
         (r.neighbor_id, r.cell)
@@ -149,7 +149,7 @@ def test_compact_embedding_indexes_preserves_probe_results(
     build_embedding_lsh_index(corpus0, lsh)
     append_to_embedding_lsh_index(batch, lsh)
     ivf = str(tmp_path / "ivf")
-    build_ivf_index(corpus0, ivf, n_cells=4, seed=42, train_fraction=0.5)
+    build_ivf_index(corpus0, ivf, n_cells=4, seed=42)
     append_to_ivf_index(spark, batch, ivf)
 
     lsh_before = _probe_pairs(spark, new, lsh)
@@ -298,53 +298,53 @@ def test_incremental_embedding_ingest_maintains_ivf(spark, tmp_path):
     assert sum(r.appended_n for r in rows) == 1  # only vec 20 post-build
 
 
-def test_ivf_train_tiny_regime_never_crashes(spark):
-    """Spark 4's block KMeans hard-crashes (AIOOBE) when k exceeds the
-    training row count or the distinct-vector count — exactly what a
-    Bernoulli sample of a small corpus can deliver to the IVF bootstrap
-    (the ingest loop trains at train_fraction=0.5 on whatever the corpus
-    holds). train_ivf_centroids must clamp instead: fall back to the full
-    corpus when the sample under-delivers, cap k at the distinct count."""
+def test_ivf_train_tiny_regime_contract(spark):
+    """The tiny regime is deterministic: a corpus with fewer distinct
+    vectors than ``n_cells`` gets one centroid per distinct vector, a
+    healthy one gets ``n_cells``, and an empty one raises."""
+    import pytest
+
     from aws_data_pipeline_spark.operators.similarity import (
         train_ivf_centroids,
     )
 
     schema = "vec_id long, embedding array<float>"
-    # 3 distinct vectors, k=4: a 50% sample can land at 0-3 rows
     tiny = spark.createDataFrame([(i, _vec(i)) for i in range(3)], schema)
-    cents = train_ivf_centroids(tiny, n_cells=4, train_fraction=0.5)
-    assert 1 <= len(cents) <= 3
-    # 6 rows but only 2 distinct vectors, k=4 on the full input
-    dup = spark.createDataFrame(
-        [(i, _vec(i % 2)) for i in range(6)], schema
+    assert sorted(train_ivf_centroids(tiny, n_cells=4)) == sorted(
+        _vec(i) for i in range(3)
     )
-    cents = train_ivf_centroids(dup, n_cells=4)
-    assert 1 <= len(cents) <= 2
-    # healthy regime unaffected: enough distinct vectors keeps k as asked
+    dup = spark.createDataFrame([(i, _vec(i % 2)) for i in range(6)], schema)
+    assert sorted(train_ivf_centroids(dup, n_cells=4)) == [_vec(1), _vec(0)]
     ok = spark.createDataFrame([(i, _vec(i)) for i in range(20)], schema)
     assert len(train_ivf_centroids(ok, n_cells=4)) == 4
+    with pytest.raises(ValueError, match="empty corpus"):
+        train_ivf_centroids(ok.limit(0), n_cells=4)
 
 
-def test_choose_ivf_train_fraction_scale_rule():
-    """~256 training vectors per cell, capped at 1M, full corpus when
-    small — the quantizer-training twin of choose_lsh_params: the scale
-    rule as code. At 100 TB (billions of vectors) the fraction must land
-    the sample at the cap, never a full-corpus KMeans fit."""
-    from aws_data_pipeline_spark.operators.similarity import (
-        choose_ivf_train_fraction,
-    )
+def test_ivf_train_sample_cap(spark, sf_dir, monkeypatch):
+    """The IVF training sample is capped at 256 vectors per cell (the
+    FAISS rule) and by the driver byte budget; the content-hash thinning
+    keeps the same vectors for any partition layout."""
+    from aws_data_pipeline_spark.operators import similarity as S
 
-    assert choose_ivf_train_fraction(100, 16) == 1.0  # tiny: everything
-    # 10M vectors, 1024 cells: want 256*1024 = 262144 of 10M
-    f = choose_ivf_train_fraction(10_000_000, 1024)
-    assert abs(f * 10_000_000 - 262_144) < 1
-    # 2B vectors, 65536 cells: the 1M cap binds
-    f = choose_ivf_train_fraction(2_000_000_000, 65_536)
-    assert abs(f * 2_000_000_000 - 1_000_000) < 1
-    import pytest
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")  # 500 × 64
+    samples = []
+    real = S._train_sample
 
-    with pytest.raises(ValueError):
-        choose_ivf_train_fraction(0, 16)
+    def spy(*args):
+        samples.append(real(*args))
+        return samples[-1]
+
+    monkeypatch.setattr(S, "_train_sample", spy)
+    S.train_ivf_centroids(e, n_cells=2)  # cap 512: every vector
+    assert samples[-1].shape == (500, 64)
+    S.train_ivf_centroids(e, n_cells=1)  # cap 256: thinned to ~256
+    assert 180 < len(samples[-1]) < 330
+    S.train_ivf_centroids(e.repartition(7), n_cells=1)
+    assert samples[-1].tobytes() == samples[-2].tobytes()
+    monkeypatch.setattr(S, "_TRAIN_BYTES", 100 * 8 * 64)  # 100 vectors
+    S.train_ivf_centroids(e, n_cells=2)
+    assert 50 < len(samples[-1]) < 150
 
 
 def test_ivf_retrain_resets_drift_and_keeps_exactness(spark, sf_dir, tmp_path):
@@ -362,7 +362,7 @@ def test_ivf_retrain_resets_drift_and_keeps_exactness(spark, sf_dir, tmp_path):
     corpus0 = e.filter(F.col("vec_id") % 3 != 0)
     batch = e.filter(F.col("vec_id") % 3 == 0)  # ~50% growth
     idx = str(tmp_path / "ivf")
-    build_ivf_index(corpus0, idx, n_cells=4, seed=42, train_fraction=0.5)
+    build_ivf_index(corpus0, idx, n_cells=4, seed=42)
     append_to_ivf_index(spark, batch, idx)
     assert ivf_retrain_due(spark, idx, max_total_growth=1.2)
 
@@ -370,7 +370,7 @@ def test_ivf_retrain_resets_drift_and_keeps_exactness(spark, sf_dir, tmp_path):
         r.neighbor_id
         for r in spark.read.parquet(f"{idx}/corpus").select("neighbor_id").collect()
     }
-    stats = retrain_ivf_index(spark, idx, train_fraction=0.5)
+    stats = retrain_ivf_index(spark, idx)
     assert stats["n_vectors"] == len(ids_before)
     # default n_cells scales with realized growth: ceil(4 * current/built)
     assert stats["n_cells"] == -(-4 * len(ids_before) // corpus0.count())
@@ -584,7 +584,7 @@ def test_pq_composes_with_ivf_cell_probe(spark, sf_dir, tmp_path):
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = e.filter(F.col("vec_id") < 5)
-    cents = S.train_ivf_centroids(e, n_cells=8, train_fraction=None)
+    cents = S.train_ivf_centroids(e, n_cells=8)
     assigned = e.selectExpr(
         "vec_id as neighbor_id", "cast(embedding as array<double>) as cv"
     ).withColumn("cell", S.nearest_cell(F.col("cv"), cents))
@@ -997,7 +997,7 @@ def test_ivfpq_indexed_composition(spark, sf_dir, tmp_path):
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     ivf = str(tmp_path / "ivf")
     pq = str(tmp_path / "pq")
-    S.build_ivf_index(e, ivf, n_cells=8, seed=42, train_fraction=0.5)
+    S.build_ivf_index(e, ivf, n_cells=8, seed=42)
     S.build_pq_index(e, pq, m=8, ks=16, seed=42)
     q = e.filter(F.col("vec_id") < 10)
 
@@ -1089,7 +1089,7 @@ def test_ivfpq_cell_codes_layout(spark, sf_dir, tmp_path):
     ivf = str(tmp_path / "ivf")
     pq = str(tmp_path / "pq")
     cc = str(tmp_path / "ivfpq_codes")
-    S.build_ivf_index(e, ivf, n_cells=8, seed=42, train_fraction=0.5)
+    S.build_ivf_index(e, ivf, n_cells=8, seed=42)
     S.build_pq_index(e, pq, m=8, ks=16, seed=42)
     assert not S.ivfpq_cell_codes_current(spark, cc, ivf, pq)
     S.build_ivfpq_cell_codes(spark, ivf, pq, cc)
@@ -1191,7 +1191,7 @@ def test_ivfpq_cell_codes_half_built_fails_loudly(spark, sf_dir, tmp_path):
     ivf = str(tmp_path / "ivf")
     pq = str(tmp_path / "pq")
     cc = str(tmp_path / "cc")
-    S.build_ivf_index(e, ivf, n_cells=8, seed=42, train_fraction=0.5)
+    S.build_ivf_index(e, ivf, n_cells=8, seed=42)
     S.build_pq_index(e, pq, m=8, ks=16, seed=42)
     S.build_ivfpq_cell_codes(spark, ivf, pq, cc)
 
@@ -1305,7 +1305,7 @@ def test_ivfsq8_indexed_composition(spark, sf_dir, tmp_path):
     ivf = str(tmp_path / "ivf")
     sq8 = str(tmp_path / "sq8")
     cc = str(tmp_path / "ivfsq8_codes")
-    S.build_ivf_index(e, ivf, n_cells=8, seed=42, train_fraction=0.5)
+    S.build_ivf_index(e, ivf, n_cells=8, seed=42)
     S.build_sq8_index(e, sq8)
     q = e.filter(F.col("vec_id") < 10)
 

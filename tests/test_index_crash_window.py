@@ -1,10 +1,12 @@
-"""The append crash window of the codec-family vector indexes.
+"""The append crash window of the persisted vector indexes.
 
 ``append_to_{embedding_lsh,pq,sq8}_index`` write ``vectors`` first and the
 per-id code table second. A crash between the two writes leaves vectors
 rows without codes; the re-run must encode exactly those rows from the
 materialized vectors, duplicate nothing, and a further re-run must write
-nothing at all.
+nothing at all. ``append_to_ivf_index`` writes one cell-partitioned
+``corpus`` table, vector store and code table in one; its crash leaves
+part of the batch landed, and the re-run must write exactly the rest.
 """
 
 from __future__ import annotations
@@ -17,12 +19,42 @@ from pyspark.sql import functions as F
 
 from aws_data_pipeline_spark.operators import similarity as S
 
-# (build, append, code table, payload columns)
+
+def _land_vectors(batch, idx, payload):
+    """The codec crash: only the batch's vectors rows landed."""
+    batch.select(
+        F.col("vec_id").alias("id"), S.as_double(F.col("embedding")).alias("v"), *payload
+    ).write.mode("append").parquet(f"{idx}/vectors")
+
+
+def _land_ivf_half(batch, idx, payload):
+    """The IVF crash: the first half of the batch landed in its cells."""
+    cents = S.read_ivf_centroids(batch.sparkSession, idx)
+    batch.filter(F.col("vec_id") < 50).select(
+        F.col("vec_id").alias("neighbor_id"),
+        S.as_double(F.col("embedding")).alias("cv"),
+        *payload,
+    ).withColumn("cell", S.nearest_cell(F.col("cv"), cents)).write.mode(
+        "append"
+    ).partitionBy("cell").parquet(f"{idx}/corpus")
+
+
+def _ivf_append(df, path):
+    S.append_to_ivf_index(df.sparkSession, df, path)
+
+
+# (build, append, code table, payload columns, crash, (vector table, id))
 FAMILIES = {
-    "lsh": (S.build_embedding_lsh_index, S.append_to_embedding_lsh_index, "bands", ()),
-    "pq": (S.build_pq_index, S.append_to_pq_index, "codes", ()),
-    "sq8": (S.build_sq8_index, S.append_to_sq8_index, "codes", ()),
-    "sq8_payload": (S.build_sq8_index, S.append_to_sq8_index, "codes", ("label",)),
+    "lsh": (S.build_embedding_lsh_index, S.append_to_embedding_lsh_index, "bands",
+            (), _land_vectors, ("vectors", "id")),
+    "pq": (S.build_pq_index, S.append_to_pq_index, "codes", (), _land_vectors,
+           ("vectors", "id")),
+    "sq8": (S.build_sq8_index, S.append_to_sq8_index, "codes", (), _land_vectors,
+            ("vectors", "id")),
+    "sq8_payload": (S.build_sq8_index, S.append_to_sq8_index, "codes", ("label",),
+                    _land_vectors, ("vectors", "id")),
+    "ivf": (S.build_ivf_index, _ivf_append, "corpus", (), _land_ivf_half,
+            ("corpus", "neighbor_id")),
 }
 
 
@@ -35,14 +67,19 @@ def _rows(spark, path):
 
 
 def _files(path):
-    return sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    return sorted(
+        os.path.relpath(os.path.join(d, f), path)
+        for d, _, names in os.walk(path)
+        for f in names
+        if f.endswith(".parquet")
+    )
 
 
 @pytest.mark.parametrize("family", FAMILIES)
 def test_append_backfills_crash_between_vectors_and_codes(
     spark, sf_dir, tmp_path, family
 ):
-    build, append, code_sub, payload = FAMILIES[family]
+    build, append, code_sub, payload, crash, (vec_sub, vec_id) = FAMILIES[family]
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = e.filter(F.col("vec_id") >= 100)
     batch = e.filter(F.col("vec_id") < 100)
@@ -57,16 +94,13 @@ def test_append_backfills_crash_between_vectors_and_codes(
     shutil.copytree(idx, twin)
     append(batch, twin)
 
-    # the crash: only the batch's vectors rows landed
-    batch.select(
-        F.col("vec_id").alias("id"), S.as_double(F.col("embedding")).alias("v"), *payload
-    ).write.mode("append").parquet(f"{idx}/vectors")
+    crash(batch, idx, payload)
     append(batch, idx)
 
     assert _rows(spark, f"{idx}/{code_sub}") == _rows(spark, f"{twin}/{code_sub}")
-    vecs = spark.read.parquet(f"{idx}/vectors")
-    assert vecs.count() == vecs.select("id").distinct().count() == e.count()
+    vecs = spark.read.parquet(f"{idx}/{vec_sub}")
+    assert vecs.count() == vecs.select(vec_id).distinct().count() == e.count()
 
-    written = {sub: _files(f"{idx}/{sub}") for sub in ("vectors", code_sub)}
+    written = {sub: _files(f"{idx}/{sub}") for sub in {vec_sub, code_sub}}
     append(batch, idx)
     assert {sub: _files(f"{idx}/{sub}") for sub in written} == written

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from aws_data_pipeline_spark.catalog import load
 from aws_data_pipeline_spark.operators import dedup, multimodal, similarity
+from aws_data_pipeline_spark.sources import parquet
 
 
 def test_minhash_lsh_matches_exact_jaccard(spark, sf_dir):
@@ -115,6 +116,42 @@ def test_ivf_persisted_index(spark, sf_dir, tmp_path):
     q2 = e.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 15))
     out2 = similarity.ivf_topk_indexed(spark, q2, idx, k=3, nprobe=2)
     assert out2.groupBy("query_id").count().filter(F.col("count") != 3).isEmpty()
+
+
+def test_ivf_build_is_deterministic_and_layout_independent(spark, sf_dir, tmp_path):
+    """IVF trains like PQ: two builds, and a build over a repartitioned
+    copy of the corpus, write byte-identical centroids and the same
+    cell-assigned corpus rows, so a persisted index can be re-derived."""
+    e = load(spark, sf_dir, "embeddings")
+
+    def build(df, name):
+        idx = str(tmp_path / name)
+        similarity.build_ivf_index(df, idx, n_cells=8)
+        cents = similarity.read_ivf_centroids(spark, idx)
+        corpus = sorted(
+            (r.neighbor_id, tuple(r.cv), r.cell)
+            for r in spark.read.parquet(f"{idx}/corpus").collect()
+        )
+        return cents, corpus
+
+    first = build(e, "a")
+    assert len(first[0]) == 8 and len(first[1]) == e.count()
+    assert build(e, "b") == first
+    assert build(e.repartition(7), "c") == first
+
+
+def test_similarity_imports_nothing_from_spark_ml():
+    """The IVF quantizer trains on the driver with the PQ k-means; no
+    Spark ML model (non-deterministic k-means||) may come back."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(similarity))
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom):
+            assert not (node.module or "").startswith("pyspark.ml"), node.module
+        elif isinstance(node, ast.Import):
+            assert not any(a.name.startswith("pyspark.ml") for a in node.names)
 
 
 def test_pii_scrub_patterns(spark):
@@ -1838,14 +1875,14 @@ def test_strip_accents_semantics(spark):
     assert got[4] is None
 
 
-def _composed_memo(L) -> dict:
+def _composed_memo() -> dict:
     """The _composed_roots entries of the registry's application memo."""
-    return {k: v for k, v in L._APP_MEMO.items() if k[1][0] == "composed"}
+    return {k: v for k, v in parquet._APP_MEMO.items() if k[1][0] == "composed"}
 
 
-def _drop_memo_scope(L, kind: str) -> None:
-    for k in [k for k in L._APP_MEMO if k[1][0] == kind]:
-        del L._APP_MEMO[k]
+def _drop_memo_scope(kind: str) -> None:
+    for k in [k for k in parquet._APP_MEMO if k[1][0] == kind]:
+        del parquet._APP_MEMO[k]
 
 
 def test_composed_roots_warm_path_identity(spark, sf_dir):
@@ -1853,18 +1890,18 @@ def test_composed_roots_warm_path_identity(spark, sf_dir):
     against an unchanged corpus hits the resolved-roots entry — no
     re-ensure, no currency re-check — and returns rows identical to the
     cold probe. The entry stores RESOLVED version dirs and keys on source
-    state, so a state flip would evict (the _app_memo rule)."""
+    state, so a state flip would evict (the app_memo rule)."""
     from aws_data_pipeline_spark.plans import llm as L
     from aws_data_pipeline_spark.plans import load_registry
 
     reg = load_registry()
-    _drop_memo_scope(L, "composed")
+    _drop_memo_scope("composed")
     cold = {
         tuple(r)
         for r in reg["embedding_ann_ivfpq"].spark_fn(spark, sf_dir).collect()
     }
-    assert len(_composed_memo(L)) == 1
-    (key, (roots, books)) = next(iter(_composed_memo(L).items()))
+    assert len(_composed_memo()) == 1
+    (key, (roots, books)) = next(iter(_composed_memo().items()))
     assert key[1] == ("composed", sf_dir, "ivfpq_c8_m8_ks16")
     # roots are stored resolved: index_root is identity on each; the
     # cached artifact is the PQ codebooks (m lists of ks centroids)
@@ -1874,27 +1911,27 @@ def test_composed_roots_warm_path_identity(spark, sf_dir):
     assert len(books) == 8 and all(len(b) == 16 for b in books)
 
     # poison the ensure path: a warm probe must not call it
-    sentinel = _composed_memo(L)
+    sentinel = _composed_memo()
     warm = {
         tuple(r)
         for r in reg["embedding_ann_ivfpq"].spark_fn(spark, sf_dir).collect()
     }
     assert warm == cold and len(cold) > 0
-    assert _composed_memo(L) == sentinel  # same entry, no rebuild/eviction
+    assert _composed_memo() == sentinel  # same entry, no rebuild/eviction
 
     # simulate a corpus state flip: the live key is gone (state changed),
     # a superseded entry for the same corpus+tag remains — the next probe
     # misses, evicts the superseded entry, and re-ensures under the new
-    # state (the _app_memo eviction rule; eviction runs on miss)
+    # state (the app_memo eviction rule; eviction runs on miss)
     stale_key = (key[0], key[1], ("superseded",))
-    _drop_memo_scope(L, "composed")
-    L._APP_MEMO[stale_key] = (roots, books)
+    _drop_memo_scope("composed")
+    parquet._APP_MEMO[stale_key] = (roots, books)
     refreshed = {
         tuple(r)
         for r in reg["embedding_ann_ivfpq"].spark_fn(spark, sf_dir).collect()
     }
-    assert stale_key not in L._APP_MEMO
-    assert L._APP_MEMO[key][0] == roots  # re-ensure found the same builds
+    assert stale_key not in parquet._APP_MEMO
+    assert parquet._APP_MEMO[key][0] == roots  # re-ensure found the same builds
     assert refreshed == cold
 
 
@@ -1912,24 +1949,24 @@ def test_composed_roots_out_of_band_deletion_reensures(spark, sf_dir):
     from aws_data_pipeline_spark.plans import load_registry
 
     reg = {**load_registry(), **DEMOTED}  # tier-agnostic (rotations move it)
-    _drop_memo_scope(L, "composed")
+    _drop_memo_scope("composed")
     cold = {
         tuple(r)
         for r in reg["embedding_ann_ivfsq8"].spark_fn(spark, sf_dir).collect()
     }
-    (key, (roots, stats)) = next(iter(_composed_memo(L).items()))
+    (key, (roots, stats)) = next(iter(_composed_memo().items()))
     # out-of-band deletion of the cell-codes index (markers included)
     shutil.rmtree(re.sub(r"/v\d+$", "", roots[2]))
     # and a fake dead-application entry that must not survive the insert
     dead = ("application_dead_0000", key[1], key[2])
-    L._APP_MEMO[dead] = (("gone",), None)
+    parquet._APP_MEMO[dead] = (("gone",), None)
     warm = {
         tuple(r)
         for r in reg["embedding_ann_ivfsq8"].spark_fn(spark, sf_dir).collect()
     }
     assert warm == cold  # re-ensured and rebuilt, not a path error
-    assert dead not in L._APP_MEMO
-    assert key in L._APP_MEMO
+    assert dead not in parquet._APP_MEMO
+    assert key in parquet._APP_MEMO
 
 
 def test_ensure_memo_out_of_band_deletion_reensures(spark, sf_dir):
@@ -1942,7 +1979,7 @@ def test_ensure_memo_out_of_band_deletion_reensures(spark, sf_dir):
 
     idx = L._ensure_index(spark, sf_dir, L._KGRAM_INDEX)
     scope = ("ensure", sf_dir, L._KGRAM_INDEX.name)
-    assert any(k[1] == scope and v == idx for k, v in L._APP_MEMO.items())
+    assert any(k[1] == scope and v == idx for k, v in parquet._APP_MEMO.items())
     shutil.rmtree(idx)
     again = L._ensure_index(spark, sf_dir, L._KGRAM_INDEX)
     assert again == idx
@@ -1952,45 +1989,45 @@ def test_ensure_memo_out_of_band_deletion_reensures(spark, sf_dir):
 
 
 def test_app_memo_eviction_rule():
-    """_app_memo's one rule over every registry cache: a dead
+    """app_memo's one rule over every application cache: a dead
     application's entry is dropped WITHOUT release (its storage died with
     it), a superseded same-scope entry of the live application is
     released exactly once, other scopes coexist, and a warm hit whose
     ``alive`` check fails is rebuilt."""
     from types import SimpleNamespace
 
-    from aws_data_pipeline_spark.plans import llm as L
+    memo, app_memo = parquet._APP_MEMO, parquet.app_memo
 
     def app(app_id):
         return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
 
-    saved = dict(L._APP_MEMO)
-    L._APP_MEMO.clear()
+    saved = dict(memo)
+    memo.clear()
     released = []
     try:
         live, dead = app("app-live"), app("app-dead")
-        L._app_memo(dead, ("t", 1), "s0", lambda: "dead-v", release=released.append)
-        assert L._app_memo(live, ("t", 1), "s1", lambda: "v1") == "v1"
-        assert L._app_memo(live, ("u",), "s1", lambda: "other") == "other"
-        got = L._app_memo(
-            live, ("t", 1), "s2", lambda: "v2", release=released.append
-        )
+        app_memo(dead, ("t", 1), "s0", lambda: "dead-v", release=released.append)
+        # a dead application's read-schema entry goes by the same rule
+        app_memo(dead, ("schema", "/z"), None, lambda: "dead-schema")
+        assert app_memo(live, ("t", 1), "s1", lambda: "v1") == "v1"
+        assert app_memo(live, ("u",), "s1", lambda: "other") == "other"
+        got = app_memo(live, ("t", 1), "s2", lambda: "v2", release=released.append)
         assert got == "v2"
         assert released == ["v1"]  # superseded: released once; dead: never
-        assert set(L._APP_MEMO) == {
+        assert set(memo) == {
             ("app-live", ("t", 1), "s2"), ("app-live", ("u",), "s1")
         }
         # warm hit served while alive, rebuilt (and released) once not
-        assert L._app_memo(live, ("t", 1), "s2", lambda: "x", alive=bool) == "v2"
-        got = L._app_memo(
+        assert app_memo(live, ("t", 1), "s2", lambda: "x", alive=bool) == "v2"
+        got = app_memo(
             live, ("t", 1), "s2", lambda: "v3", alive=lambda v: False,
             release=released.append,
         )
         assert got == "v3" and released == ["v1", "v2"]
-        assert L._APP_MEMO[("app-live", ("t", 1), "s2")] == "v3"
+        assert memo[("app-live", ("t", 1), "s2")] == "v3"
     finally:
-        L._APP_MEMO.clear()
-        L._APP_MEMO.update(saved)
+        memo.clear()
+        memo.update(saved)
 
 
 @pytest.fixture(scope="module")
@@ -2075,20 +2112,16 @@ def test_choose_ivfpq_params_rules():
     training clamp, subvector-of-8 m, linear-spread nprobe when the caller
     says the data is near-random, 100 TB-scale sanity."""
     p = similarity.choose_ivfpq_params(240, 64)
-    assert p == {
-        "n_cells": 6, "nprobe": 2, "m": 8, "ks": 16, "rerank": 40,
-        "train_fraction": 1.0,
-    }
+    assert p == {"n_cells": 6, "nprobe": 2, "m": 8, "ks": 16, "rerank": 40}
     # near-random data: high recall honestly requires sweeping most cells
     hard = similarity.choose_ivfpq_params(240, 64, clustered=False,
                                           target_recall=0.9)
     assert hard["nprobe"] == 6  # ceil(0.9 * 6)
-    # a 1e9-vector, 768-d corpus: sqrt sizing, bounded training fraction,
-    # m divides dim with ~8-dim subvectors
+    # a 1e9-vector, 768-d corpus: sqrt sizing, m divides dim with ~8-dim
+    # subvectors
     big = similarity.choose_ivfpq_params(1_000_000_000, 768, k=10)
     assert big["n_cells"] == 31623 and big["m"] == 96
     assert big["nprobe"] == 7906  # 25% of cells
-    assert 0 < big["train_fraction"] < 0.01
     assert big["rerank"] == 80
     # m always divides dim, even awkward dims
     for dim in (17, 50, 96, 100):
@@ -2125,10 +2158,7 @@ def test_choose_ivfpq_params_meets_recall_floor(spark, tmp_path):
     ivf = str(tmp_path / "ivf")
     pq = str(tmp_path / "pq")
     cc = str(tmp_path / "cc")
-    similarity.build_ivf_index(
-        df, ivf, n_cells=p["n_cells"], seed=42,
-        train_fraction=p["train_fraction"],
-    )
+    similarity.build_ivf_index(df, ivf, n_cells=p["n_cells"], seed=42)
     similarity.build_pq_index(df, pq, m=p["m"], ks=p["ks"], seed=42)
     similarity.build_ivfpq_cell_codes(spark, ivf, pq, cc)
     got = {
@@ -2216,7 +2246,7 @@ def test_hard_negative_derived_slack_wide_range_corpus(spark, tmp_path):
     assert (0, 1) not in fixed  # the hand-tuned constant loses it
     # the IVF-composed miner shares the same derived-slack column
     ivf = str(tmp_path / "ivf_wide")
-    S.build_ivf_index(df, ivf, n_cells=2, seed=42, train_fraction=1.0)
+    S.build_ivf_index(df, ivf, n_cells=2, seed=42)
     composed = {
         (r.query_id, r.neighbor_id)
         for r in S.hard_negative_topk_ivfsq8(
@@ -2259,7 +2289,7 @@ def test_hard_negative_ivfsq8_full_coverage_equals_exact(spark, sf_dir, tmp_path
     q = e.filter(F.col("vec_id") < 10)
     ivf = str(tmp_path / "ivf")
     sq8 = str(tmp_path / "sq8")
-    S.build_ivf_index(e, ivf, n_cells=8, seed=42, train_fraction=0.5)
+    S.build_ivf_index(e, ivf, n_cells=8, seed=42)
     S.build_sq8_index(e, sq8)
     exact = {
         (r.query_id, r.neighbor_id, r.rank)
@@ -3059,7 +3089,8 @@ def test_src_state_memo_recounts_on_content_change(spark, tmp_path):
     without a Spark action; any append/rewrite flips the key and
     re-counts — so the memo can never outlive what the staleness marker
     records."""
-    from aws_data_pipeline_spark.plans.llm import _APP_MEMO, _src_state
+    from aws_data_pipeline_spark.plans.llm import _src_state
+    from aws_data_pipeline_spark.sources.parquet import _APP_MEMO
 
     sf = str(tmp_path)
     spark.range(5).select(F.col("id").alias("doc_id")).write.parquet(

@@ -192,6 +192,24 @@ def test_cross_run_dedup_is_partition_pruned(spark, tmp_path):
     seg = plan.split("PartitionFilters", 1)[1][:400]
     assert "year" in seg and "month" in seg and "day" in seg
 
+    # a 30-day batch: one struct IN over the key columns, still resolved
+    # to PartitionFilters, reading exactly the listed days' rows
+    days = [(2024, m, d) for m in (3, 4) for d in range(1, 16)]
+    month = spark.createDataFrame(
+        [(f"txn_{m}_{d}", 2024, m, d) for m in (3, 4, 5) for d in range(1, 29)],
+        "transaction_id string, year int, month int, day int",
+    )
+    month.write.mode("append").partitionBy("year", "month", "day").parquet(
+        silver_path
+    )
+    wide = read_partition_slice(spark, silver_path, days)
+    plan = wide._jdf.queryExecution().executedPlan().toString()
+    seg = plan.split("PartitionFilters", 1)[1][:400]
+    assert "struct(year" in seg and ("IN" in seg or "INSET" in seg)
+    got = {(r.year, r.month, r.day) for r in wide.collect()}
+    assert got == set(days)
+    assert wide.count() == 30 + 2  # one row per day, plus txn_a and txn_b
+
 
 def test_schema_evolution_widen(spark, tmp_path):
     """VERDICT r12 item 4: batch N+1 carries a producer-added column.

@@ -762,7 +762,7 @@ def test_choose_ivfpq_params_invariants(n, dim, k, target, clustered):
     param is directly consumable by the builders/probe — m divides dim,
     nprobe never exceeds n_cells, the k-means training clamp holds
     (enough training points per centroid whenever the corpus allows it),
-    train_fraction is a valid Bernoulli fraction, rerank covers k, and
+    rerank covers k, and
     raising the recall target never probes FEWER cells."""
     from aws_data_pipeline_spark.operators.similarity import (
         choose_ivfpq_params,
@@ -775,7 +775,6 @@ def test_choose_ivfpq_params_invariants(n, dim, k, target, clustered):
     assert 1 <= p["nprobe"] <= p["n_cells"]
     if n >= 39:  # the clamp is only satisfiable when the corpus allows it
         assert n // p["n_cells"] >= 39
-    assert 0.0 < p["train_fraction"] <= 1.0
     assert p["rerank"] >= k
     assert p["ks"] == 16
     if target < 1.0:  # monotone in target_recall on BOTH branches

@@ -1587,17 +1587,14 @@ def test_read_pinned_memoizes_schema_and_rereads_values(spark, tmp_path):
     reads of the same path serve the SAME schema but fresh VALUES (the
     memo pins planning metadata, never data) — the r13 footer-inference
     optimization's core contract."""
-    from aws_data_pipeline_spark.sources.parquet import (
-        _READ_SCHEMA_MEMO,
-        read_pinned,
-    )
+    from aws_data_pipeline_spark.sources.parquet import _APP_MEMO, read_pinned
 
     zone = str(tmp_path / "pinz")
     spark.range(5).select(F.col("id").alias("a")).write.parquet(zone)
     df1 = read_pinned(spark, zone)
-    key = (spark.sparkContext.applicationId, zone)
-    assert key in _READ_SCHEMA_MEMO
-    assert df1.schema == _READ_SCHEMA_MEMO[key]
+    key = (spark.sparkContext.applicationId, ("schema", zone), None)
+    assert key in _APP_MEMO
+    assert df1.schema == _APP_MEMO[key]
     # an append lands new values under the same schema; the pinned read
     # must see them (listing happens per read — only inference is pinned)
     spark.range(5, 8).select(F.col("id").alias("a")).write.mode(
@@ -1628,10 +1625,12 @@ def test_read_pinned_partitioned_zone_roundtrip(spark, tmp_path):
 
 
 def test_delete_zone_evicts_pinned_schema(spark, tmp_path):
-    """delete_zone must evict read_pinned memo entries under the deleted
-    path: a legal same-path rebuild after an explicit delete may carry
-    different columns, and a stale pinned schema would misread it."""
+    """delete_zone must evict read_pinned and artifact_memo entries under
+    the deleted path: a legal same-path rebuild after an explicit delete
+    may carry different columns, and a stale pinned schema would misread
+    it."""
     from aws_data_pipeline_spark.sources.parquet import (
+        artifact_memo,
         delete_zone,
         read_pinned,
     )
@@ -1639,11 +1638,14 @@ def test_delete_zone_evicts_pinned_schema(spark, tmp_path):
     zone = str(tmp_path / "rebz")
     spark.range(3).select(F.col("id").alias("a")).write.parquet(zone)
     assert read_pinned(spark, zone).columns == ["a"]
+    assert artifact_memo(spark, f"{zone}/sub", lambda: "old") == "old"
+    assert artifact_memo(spark, f"{zone}/sub", lambda: "new") == "old"
     delete_zone(spark, zone)
     spark.range(3).select(
         F.col("id").alias("a"), (F.col("id") * 2).alias("b")
     ).write.parquet(zone)
     assert set(read_pinned(spark, zone).columns) == {"a", "b"}
+    assert artifact_memo(spark, f"{zone}/sub", lambda: "new") == "new"
 
 
 def test_zone_listing_state_mtime_tracks_rewrites(spark, tmp_path):
@@ -1821,7 +1823,7 @@ def test_events_nanos_read_is_pinned_and_round_trips(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from aws_data_pipeline_spark.sources.parquet import _READ_SCHEMA_MEMO
+    from aws_data_pipeline_spark.sources.parquet import _APP_MEMO
 
     sf = str(tmp_path)
     ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999, None]
@@ -1841,8 +1843,8 @@ def test_events_nanos_read_is_pinned_and_round_trips(spark, tmp_path):
     assert pq.read_schema(f"{sf}/events.parquet").field("ts").type.unit == "ns"
 
     first = load(spark, sf, "events")
-    key = (spark.sparkContext.applicationId, f"{sf}/events.parquet")
-    assert key in _READ_SCHEMA_MEMO
+    key = (spark.sparkContext.applicationId, ("schema", f"{sf}/events.parquet"), None)
+    assert key in _APP_MEMO
     again = load(spark, sf, "events")
     assert again.schema == first.schema
     assert first.schema["ts"].dataType.typeName() == "timestamp"

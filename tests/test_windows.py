@@ -4,7 +4,7 @@ single-partition window.
 
 The offset-width checks are pure Python: the per-partition counts are
 faked, since a real 2^33-row range partition is out of reach in a unit
-test. The id bit-layout check runs on a small multi-partition frame.
+test. The id bit-layout checks run on small multi-partition frames.
 """
 
 from __future__ import annotations
@@ -56,6 +56,26 @@ def test_monotonic_id_bit_layout_is_partition_then_row_offset(spark):
         offsets.setdefault(r.pid, []).append(r.mid & mask)
     assert len(offsets) == 5
     assert all(sorted(o) == list(range(len(o))) for o in offsets.values())
+
+
+def test_monotonic_id_partition_bits_match_pid_on_range_checkpoint(spark):
+    """The scan ``_global_row_number_with_total`` decodes: over a
+    ``repartitionByRange(...).localCheckpoint()`` frame,
+    ``shiftrightunsigned(monotonically_increasing_id(), 33)`` equals
+    ``spark_partition_id()`` on every row, so a change to Spark's id
+    layout fails here instead of corrupting ``global_row_number``."""
+    df = spark.range(0, 3000).select(
+        "id", (F.col("id") * 7919 % 97).alias("v")
+    )
+    part = df.repartitionByRange(5, "v", "id").localCheckpoint()
+    ids = part.select(
+        F.shiftrightunsigned(
+            F.monotonically_increasing_id(), _MID_OFFSET_BITS
+        ).alias("hi"),
+        F.spark_partition_id().alias("pid"),
+    )
+    assert ids.filter(F.col("hi") != F.col("pid")).isEmpty()
+    assert ids.select("pid").distinct().count() == 5
 
 
 def test_default_range_path_matches_single_partition_window(spark, coalesced):
