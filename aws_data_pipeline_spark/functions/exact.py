@@ -24,9 +24,8 @@ corruption. Groups that can breach those bounds — NEAR-GLOBAL grouping
 keys over degree>=2 expressions (q1's four groups, q6's single group, any
 corpus-wide total) reach them within the 100 TB design target — must sum
 through ``usum_big`` (decimal-summed exact units, same value wherever
-both paths are defined) or the decimal fallbacks (``dsum_dec``); the long
-fast path is for high-cardinality keys whose per-group magnitude stays
-bounded.
+both paths are defined); the long fast path is for high-cardinality keys
+whose per-group magnitude stays bounded.
 
 (The reference keeps money as raw double and re-sums it,
 ``silver_to_gold.py:22-27`` — drift it can't detect.)
@@ -102,13 +101,6 @@ def dsum_expr(col: Column) -> Column:
     fixed-point expressions should sum integer units via units()/usum().
     """
     return F.sum(col.cast(EXPR)).cast("double")
-
-
-def dsum_dec(col: str | Column, scale: str = MONEY) -> Column:
-    """Decimal-path SUM (the pre-fixed-point formulation): for groups whose
-    magnitude could exceed the long-units overflow bounds above."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(scale)).cast("double")
 
 
 def davg(col: str | Column, scale: str = MONEY) -> Column:

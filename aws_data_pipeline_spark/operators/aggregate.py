@@ -357,54 +357,36 @@ def winsorized_scale(
     ).drop(qlo, qhi)
 
 
-def cohort_retention(
-    df: DataFrame,
-    user_col: str,
-    ts_col: str,
-    grain: str = "day",
-) -> DataFrame:
+def cohort_retention(df: DataFrame, user_col: str, ts_col: str) -> DataFrame:
     """Cohort retention triangle: users grouped by their FIRST-activity
-    period, then, per (cohort, period-offset), how many came back — the
+    day, then, per (cohort, day-offset), how many came back — the
     standard product-analytics retention curve ("of the Jan-3 cohort,
     what fraction was active 7 days later?"), a shape none of the
     single-grain aggregates express. Output: (cohort, period_offset,
     n_active, n_cohort, retention) with retention one exact int/int
     division; offset 0 always has n_active == n_cohort (every user is
-    active in their own first period — a free self-check the oracle
-    hashes too).
+    active on their own first day — a free self-check the oracle
+    hashes too). Null users/timestamps are excluded (no identity or no
+    time → no cohort).
 
-    ``grain``: ``day`` or ``week`` (weeks truncate to Mondays, Spark's
-    and DuckDB's shared convention). Null users/timestamps are excluded
-    (no identity or no time → no cohort).
-
-    Scale shape: one distinct-activity projection (user, period) — the
+    Scale shape: one distinct-activity projection (user, day) — the
     only data-sized shuffle — an all-MIN aggregate for cohorts, a
     cohort-sized join back (AQE decides; user-cardinality sized), and a
     final grouped count. No window over raw events at all.
     """
-    if grain not in ("day", "week"):
-        raise ValueError(f"grain must be 'day' or 'week', got {grain!r}")
-    period = (
-        F.to_date(F.date_trunc("week", F.col(ts_col)))
-        if grain == "week"
-        else F.to_date(F.col(ts_col))
-    )
     base = df.where(
         F.col(user_col).isNotNull() & F.col(ts_col).isNotNull()
-    ).select(F.col(user_col).alias("__u"), period.alias("__p"))
+    ).select(F.col(user_col).alias("__u"), F.to_date(F.col(ts_col)).alias("__p"))
     active = base.distinct()
     first = active.groupBy("__u").agg(F.min("__p").alias("cohort"))
     sizes = first.groupBy("cohort").agg(
         F.count("*").alias("n_cohort")
     )
-    step = 7 if grain == "week" else 1
     ret = (
         active.join(first, "__u")
         .groupBy(
             "cohort",
-            (F.datediff(F.col("__p"), F.col("cohort")) / F.lit(step))
-            .cast("int")
-            .alias("period_offset"),
+            F.datediff(F.col("__p"), F.col("cohort")).alias("period_offset"),
         )
         .agg(F.count("*").alias("n_active"))
     )

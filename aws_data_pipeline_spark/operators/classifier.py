@@ -30,12 +30,14 @@ from aws_data_pipeline_spark.functions.portable import md5_prefix_long
 from aws_data_pipeline_spark.operators import lit_array, widen_narrow_input
 from aws_data_pipeline_spark.operators.text import tokens
 
+# feature width; the fit and the scoring must featurize alike
+N_BUCKETS = 256
+
 
 def bucket_count_features(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_buckets: int = 256,
 ) -> DataFrame:
     """(id, features: ml Vector) — per-doc hashed token-count vectors.
 
@@ -55,7 +57,7 @@ def bucket_count_features(
     """
     from pyspark.ml.functions import array_to_vector
 
-    bucket = F.pmod(md5_prefix_long(F.col("tok")), F.lit(n_buckets))
+    bucket = F.pmod(md5_prefix_long(F.col("tok")), F.lit(N_BUCKETS))
     counts = (
         widen_narrow_input(df)
         .select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok"))
@@ -73,7 +75,7 @@ def bucket_count_features(
     # element_at on a MAP is key lookup (1-based indexing applies to
     # arrays only) — the keys are the bucket ids themselves
     arr = F.transform(
-        F.sequence(F.lit(0), F.lit(n_buckets - 1)),
+        F.sequence(F.lit(0), F.lit(N_BUCKETS - 1)),
         lambda i: F.coalesce(
             F.element_at(F.col("m"), i.cast("long")), F.lit(0)
         ).cast("double"),
@@ -86,7 +88,6 @@ def train_quality_classifier(
     is_positive: Column,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_buckets: int = 256,
     reg_param: float = 0.01,
     max_iter: int = 50,
     train_frac: float = 1.0,
@@ -114,7 +115,7 @@ def train_quality_classifier(
         raise ValueError(
             "train_quality_classifier: no scorable training documents"
         )
-    feats = bucket_count_features(labeled, id_col, text_col, n_buckets)
+    feats = bucket_count_features(labeled, id_col, text_col)
     train = feats.join(labeled.select(id_col, "label"), id_col)
     lr = LogisticRegression(
         featuresCol="features",
@@ -131,7 +132,6 @@ def score_quality(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_buckets: int = 256,
 ) -> DataFrame:
     """(id, p_target) per scorable document (NULL-text rows are absent —
     see bucket_count_features) — stateless map-side scoring. The fitted
@@ -151,7 +151,7 @@ def score_quality(
 
     coef = [float(c) for c in model.coefficients]
     intercept = float(model.intercept)
-    feats = bucket_count_features(df, id_col, text_col, n_buckets)
+    feats = bucket_count_features(df, id_col, text_col)
     margin = F.aggregate(
         F.zip_with(
             vector_to_array(F.col("features")),

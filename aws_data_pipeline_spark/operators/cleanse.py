@@ -52,16 +52,6 @@ def require_positive(df: DataFrame, col: str) -> DataFrame:
     return df.filter(F.col(col) > 0)
 
 
-def dedup_arbitrary(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """A1, reference-faithful: ``dropDuplicates(keys)`` — arbitrary survivor.
-
-    Reference ``bronze_to_silver.py:33``. Non-deterministic across runs;
-    use :func:`dedup_deterministic` wherever results must be reproducible
-    (the oracle-checked plans do).
-    """
-    return df.dropDuplicates(list(keys))
-
-
 def dedup_deterministic(
     df: DataFrame, keys: Sequence[str], order_by: Sequence[Column | str]
 ) -> DataFrame:

@@ -56,17 +56,6 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame
     ).withColumn("is_duplicate", F.col(id_col) != F.col("canonical_doc_id"))
 
 
-def _shingle_index(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    """(id, shingle) inverted index — one row per distinct shingle per doc."""
-    # materialize the token array in its own projection first: referencing
-    # split() from inside the shingle HOF lambda re-evaluates it per element
-    # (O(L^2) per doc; measured 4x on sf0.1)
-    return widen_narrow_input(df).withColumn("__t", tokens(F.col(text_col))).select(
-        F.col(id_col).alias("doc"),
-        F.explode(shingles(F.col("__t"), k)).alias("shingle"),
-    )
-
-
 def shingle_sets(
     df: DataFrame, id_col: str, text_col: str = "text", k: int = 5, persist: bool = True
 ) -> DataFrame:
@@ -313,13 +302,6 @@ def _signatures_from_sets(
         ]
     )
     return hashed.select("doc", sig.alias("sig"))
-
-
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str = "text", k: int = 5, num_perm: int = 16
-) -> DataFrame:
-    """MinHash signatures: sig_i = min over shingles of h_i(shingle)."""
-    return _signatures_from_sets(shingle_sets(df, id_col, text_col, k), num_perm)
 
 
 def choose_minhash_params(

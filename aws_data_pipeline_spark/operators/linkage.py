@@ -35,7 +35,7 @@ def _side_index(
     df: DataFrame, id_col: str, text_col: str, k: int, out_id: str
 ) -> DataFrame:
     """(out_id, shingle-hash) inverted index, one row per distinct shingle
-    per row — the dedup._shingle_index shape with a caller-named id."""
+    per row, under a caller-named id."""
     return (
         widen_narrow_input(df)
         .withColumn("__t", tokens(F.col(text_col)))

@@ -86,22 +86,6 @@ def rule_violations(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
     )
 
 
-def schema_drift(df: DataFrame, expected: dict[str, str]) -> list[tuple[str, str, str]]:
-    """Compare actual (name -> type) against expected; returns
-    (column, expected_type, actual_type) rows where they differ ('<missing>'
-    marks absence). Driver-side metadata only — no Spark job."""
-    actual = dict(df.dtypes)
-    out: list[tuple[str, str, str]] = []
-    for name, etype in expected.items():
-        atype = actual.get(name, "<missing>")
-        if atype != etype:
-            out.append((name, etype, atype))
-    for name, atype in actual.items():
-        if name not in expected:
-            out.append((name, "<missing>", atype))
-    return out
-
-
 def duplicate_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Key-uniqueness audit: keys appearing more than once, with counts."""
     return (

@@ -152,7 +152,6 @@ def vocabulary(
     df: DataFrame,
     text_col: str = "text",
     top_k: int | None = None,
-    min_count: int = 1,
 ) -> DataFrame:
     """Corpus vocabulary with counts: explode lowercased whitespace tokens,
     one partial-aggregated shuffle on token. ``top_k`` ranks by (count desc,
@@ -161,8 +160,6 @@ def vocabulary(
         F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("token")
     ).filter(F.col("token") != "")
     counts = toks.groupBy("token").agg(F.count("*").alias("token_count"))
-    if min_count > 1:
-        counts = counts.filter(F.col("token_count") >= min_count)
     if top_k is not None:
         counts = counts.orderBy(
             F.col("token_count").desc(), F.col("token").asc()

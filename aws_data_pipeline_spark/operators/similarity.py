@@ -1050,13 +1050,11 @@ def ann_topk_lsh(
     k: int = 5,
     n_planes: int = 4,
     dim: int = 64,
-    multiprobe: bool = True,
 ) -> DataFrame:
-    """Approximate top-k: exact cosine ranking within the query's LSH bucket.
-
-    ``multiprobe`` additionally probes every Hamming-1 bucket (flip each sign
-    bit) — the standard recall boost: the query fans out to n_planes+1
-    buckets while the corpus stays bucketed once. The join stays equi on
+    """Approximate top-k: exact cosine ranking within the query's LSH bucket
+    and every Hamming-1 bucket (flip each sign bit) — the standard
+    multi-probe recall boost: the query fans out to n_planes+1 buckets
+    while the corpus stays bucketed once. The join stays equi on
     bucket — no cross product. pytest measures recall vs brute_force_topk.
     """
     qb = lsh_bucket(
@@ -1065,15 +1063,14 @@ def ann_topk_lsh(
         n_planes,
         dim,
     )
-    if multiprobe:
-        probes = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << i)).cast("long")
-                for i in range(n_planes)
-            ],
-        )
-        qb = qb.withColumn("bucket", F.explode(probes))
+    probes = F.array(
+        F.col("bucket"),
+        *[
+            F.col("bucket").bitwiseXOR(F.lit(1 << i)).cast("long")
+            for i in range(n_planes)
+        ],
+    )
+    qb = qb.withColumn("bucket", F.explode(probes))
     cb = lsh_bucket(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
         "cv",
@@ -1423,15 +1420,15 @@ def train_pq_codebooks(
     seed: int = 42,
     max_train: int = 16384,
     iters: int = 20,
-    normalize: bool = True,
 ) -> list[list[list[float]]]:
     """Train PQ codebooks: split the vector into ``m`` contiguous subspaces
     and fit ``ks`` centroids per subspace (Jegou et al. 2011) — the
     compression stage of IVF-PQ, the standard 100 TB embedding-search
     layout. Returns ``m × ks × (dim/m)`` floats — a driver-sized artifact
     (8·16·8 doubles here) callers persist alongside the corpus codes.
-    ``normalize`` must match :func:`pq_encode`'s (both default True):
-    codebooks fitted in raw space quantize unit-normalized vectors badly.
+    The sample is unit-normalized first, as :func:`pq_encode` normalizes
+    what it encodes: codebooks fitted in raw space quantize unit-normalized
+    vectors badly.
 
     Training is one :func:`_kmeans` per subspace, all drawing from one
     seeded RNG, over :func:`_train_sample`'s sample — the fit and sample
@@ -1445,11 +1442,10 @@ def train_pq_codebooks(
     import numpy as np
 
     mat = _train_sample(corpus, vec_col, max_train, seed, "train_pq_codebooks")
-    if normalize:
-        nrm = np.linalg.norm(mat, axis=1)
-        mat = mat[nrm > 0.0] / nrm[nrm > 0.0, None]
-        if len(mat) == 0:
-            raise ValueError("train_pq_codebooks: all vectors zero-norm")
+    nrm = np.linalg.norm(mat, axis=1)
+    mat = mat[nrm > 0.0] / nrm[nrm > 0.0, None]
+    if len(mat) == 0:
+        raise ValueError("train_pq_codebooks: all vectors zero-norm")
     dim = mat.shape[1]
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -1469,17 +1465,15 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    normalize: bool = True,
 ) -> DataFrame:
     """Encode every corpus vector as ``m`` subspace code ids →
     ``(id, codes array<int>)`` — the 32× payload compression that lets an
     ANN scan read 8 bytes per vector instead of 256. One numpy distance +
     argmin per Arrow batch (the 100 TB hot path — same mapInPandas shape
     as ``_band_codes``); degenerate vectors (NULL / wrong length) are
-    skipped, mirroring the LSH path's tolerance. ``normalize=True`` scales
-    each vector to unit norm first so ADC inner products approximate
-    cosine; zero vectors are dropped under it (their cosine is NULL in the
-    exact paths anyway)."""
+    skipped, mirroring the LSH path's tolerance. Each vector is scaled to
+    unit norm first so ADC inner products approximate cosine; zero vectors
+    are dropped (their cosine is NULL in the exact paths anyway)."""
     import numpy as np
 
     m = len(codebooks)
@@ -1488,7 +1482,7 @@ def pq_encode(
     dim = m * sub
     id_type = corpus.schema[id_col].dataType.simpleString()
     v = corpus.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
-    rows = _vector_rows("v", dim, normalize)
+    rows = _vector_rows("v", dim)
 
     def encode(batches):
         import numpy as np
@@ -1769,14 +1763,19 @@ def pq_topk_indexed(
     vec_col: str = "embedding",
     k: int = 5,
     rerank: int | None = 40,
+    where: Column | str | None = None,
 ) -> DataFrame:
     """Top-k via the PERSISTED PQ index — the on-disk 100 TB shape: the
     ADC scan reads ONLY ``path/codes`` (8 bytes/vector); ``path/vectors``
     is touched just for the re-rank candidates. Identical rows to the
     resident :func:`pq_topk` under the same codebooks by construction.
     The active root resolves ONCE, so every sub-table read belongs to one
-    committed build even while a retrain/compaction runs."""
-    return _topk_indexed(_PQ, spark, queries, path, id_col, vec_col, k, rerank)
+    committed build even while a retrain/compaction runs. ``where`` is
+    :func:`sq8_topk_indexed`'s payload pre-filter, over the 32×-compressed
+    codes."""
+    return _topk_indexed(
+        _PQ, spark, queries, path, id_col, vec_col, k, rerank, where
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1987,9 +1986,9 @@ def build_sq8_index(
 
     ``payload_cols`` stores filter attributes alongside BOTH sub-tables
     (the vector-DB payload pattern — FAISS IDSelector / filtered-HNSW
-    territory): :func:`sq8_topk_filtered` then prunes the compressed
-    codes scan with an ordinary parquet-pushed predicate instead of
-    joining back to the source table. Appends and retrains carry the
+    territory): ``sq8_topk_indexed(..., where=)`` then prunes the
+    compressed codes scan with an ordinary parquet-pushed predicate
+    instead of joining back to the source table. Appends and retrains carry the
     payload through (schema discovered from the stored vectors), and the
     unfiltered probes are unaffected — they select (id, codes) / (id, v)
     explicitly, so parquet column pruning never reads the payload.
@@ -2299,9 +2298,10 @@ def _topk_indexed(
         pred = F.expr(where) if isinstance(where, str) else where
         if not [c for c in codes.columns if c not in ("id", "codes")]:
             raise ValueError(
-                f"{codec.name}_topk_filtered: the index at {path!r} stores no "
-                f"payload columns — build it with build_{codec.name}_index(..., "
-                "payload_cols=[...]) so the filter can prune the codes scan"
+                f"filtered {codec.name}_topk_indexed: the index at {path!r} "
+                f"stores no payload columns — build it with build_{codec.name}"
+                "_index(..., payload_cols=[...]) so the filter can prune the "
+                "codes scan"
             )
         codes = codes.filter(pred).select("id", "codes")
     corpus = read_pinned(spark, f"{root}/vectors").select(
@@ -2399,70 +2399,28 @@ def sq8_topk_indexed(
     vec_col: str = "embedding",
     k: int = 5,
     rerank: int | None = 40,
+    where: Column | str | None = None,
 ) -> DataFrame:
     """Top-k via the PERSISTED SQ8 index — the scan touches ONLY
     ``path/codes`` (the measured 3.7× payload cut); ``path/vectors`` is
     read just for the re-rank candidates. Identical rows to the resident
     :func:`sq8_topk` under the same stats by construction. The active
     root resolves ONCE, so every sub-table read belongs to one committed
-    build even while a retrain/compaction runs."""
-    return _topk_indexed(_SQ8, spark, queries, path, id_col, vec_col, k, rerank)
+    build even while a retrain/compaction runs.
 
-
-def sq8_topk_filtered(
-    spark,
-    queries: DataFrame,
-    path: str,
-    where: Column | str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    rerank: int | None = None,
-) -> DataFrame:
-    """Attribute-FILTERED top-k via the persisted SQ8 index — the
-    vector-DB "filtered search" capability (FAISS IDSelector, the payload
-    filter every serving stack needs): per query, the top-k among ONLY
-    the corpus vectors satisfying ``where``, a predicate over the payload
+    ``where`` is the vector-DB "filtered search" (FAISS IDSelector, the
+    payload filter every serving stack needs): per query, the top-k among
+    ONLY the corpus vectors satisfying the predicate over the payload
     columns the index was built with (``build_sq8_index(...,
-    payload_cols=...)``).
-
-    This is PRE-filtering: the predicate prunes the compressed codes scan
-    BEFORE ranking, so the result is exactly the top-k of the matching
-    subset — post-filtering a top-k of the full corpus (the naive
-    composition) returns FEWER than k, or misses matches entirely when
-    the filter is selective. And because the payload lives in the codes
-    rows, the filter is an ordinary parquet-pushed predicate on the
-    3.7×-compressed scan (PushedFilters in the plan — asserted in
-    tests), never a join back to the source table: at 100 TB the scan
-    reads only the row groups whose payload statistics can match.
-
-    Ranking semantics are :func:`sq8_topk`'s (exact query vs dequantized
-    corpus under the STORED stats, ties by neighbor id; optional exact
-    re-rank of the top ``rerank`` from the vectors table — the re-rank
-    join touches full vectors for the candidate sliver only)."""
+    payload_cols=...)``). It PRE-filters: the predicate prunes the codes
+    scan BEFORE ranking, so the result is exactly the top-k of the
+    matching subset, where post-filtering a top-k of the full corpus
+    returns fewer than k, or nothing when the filter is selective. The
+    payload lives in the codes rows, so the filter is an ordinary
+    parquet-pushed predicate on the compressed scan (PushedFilters,
+    asserted in tests), never a join back to the source table."""
     return _topk_indexed(
         _SQ8, spark, queries, path, id_col, vec_col, k, rerank, where
-    )
-
-
-def pq_topk_filtered(
-    spark,
-    queries: DataFrame,
-    path: str,
-    where: Column | str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    rerank: int | None = 40,
-) -> DataFrame:
-    """Attribute-FILTERED top-k via the persisted PQ index —
-    :func:`sq8_topk_filtered`'s shape over the 32×-compressed codes:
-    the payload predicate prunes the 8-byte-code scan (parquet-pushed)
-    BEFORE ADC ranking, so the result is the exact top-k of the matching
-    subset; the optional exact re-rank reads full vectors for the
-    candidate sliver only. Requires a ``payload_cols`` build."""
-    return _topk_indexed(
-        _PQ, spark, queries, path, id_col, vec_col, k, rerank, where
     )
 
 
@@ -2597,7 +2555,6 @@ def _composed_candidates(
     nprobe: int,
     cell_codes_path: str | None,
     cell_codes_verified: bool = False,
-    artifact=None,
     where: Column | str | None = None,
 ):
     """The coarse stage every IVF-composed search shares (IVF-PQ, IVF-SQ8
@@ -2613,9 +2570,8 @@ def _composed_candidates(
       verified the layout against these same resolved roots in this
       application and keys that verification on corpus state (the
       registry's _composed_roots cache);
-    - the codec artifact (PQ codebooks / SQ8 stats) is ``artifact`` when
-      the caller passes it pre-read from the same resolved root, else
-      loaded;
+    - the codec artifact (PQ codebooks / SQ8 stats) loads from the same
+      resolved codes root (memoized per root, :func:`artifact_memo`);
     - :func:`_probe_cells` ranks the cells and :func:`_cell_candidates`
       restricts candidates PER QUERY to them, ``where`` pre-filtering on
       the codes' payload columns.
@@ -2634,8 +2590,7 @@ def _composed_candidates(
                     f"ivf{codec.name} cell-codes layout is STALE ({reason}) — "
                     f"rebuild with build_ivfpq_cell_codes(ivf, {codec.name}, path)"
                 )
-    if artifact is None:
-        artifact = codec.load(spark, root)
+    artifact = codec.load(spark, root)
     q = _id_vec(queries, id_col, vec_col)
     probed, cells, q_rows = _probe_cells(spark, q, ivf_root, nprobe)
     cand = _cell_candidates(spark, probed, cells, ivf_root, root, cc_root, where)
@@ -2654,7 +2609,6 @@ def ivfpq_topk_indexed(
     rerank: int | None = 40,
     cell_codes_path: str | None = None,
     cell_codes_verified: bool = False,
-    codebooks: list[list[list[float]]] | None = None,
     where: Column | str | None = None,
 ) -> DataFrame:
     """FAISS IVF-PQ composed over the two persisted indexes as a
@@ -2690,16 +2644,14 @@ def ivfpq_topk_indexed(
     indexes (an append/retrain superseded it) — rebuild and retry;
     results are row-identical to the two-index path either way.
 
-    Warm-path escape hatches (both default OFF — the cold probe stays
-    the honest, self-contained serving call): ``cell_codes_verified``
-    (see :func:`_composed_candidates`) and ``codebooks``, pre-read PQ
-    codebooks (:func:`read_pq_codebooks` of ``pq_index_path``'s resolved
-    root) so repeated probes skip the codebook collect. ``where``
-    pre-filters candidates on the codes' payload columns BEFORE ADC
-    ranking (:func:`_cell_candidates`)."""
+    Warm-path escape hatch (default OFF — the cold probe stays the
+    honest, self-contained serving call): ``cell_codes_verified`` (see
+    :func:`_composed_candidates`). ``where`` pre-filters candidates on
+    the codes' payload columns BEFORE ADC ranking
+    (:func:`_cell_candidates`)."""
     root, books, q, q_rows, cand = _composed_candidates(
         _PQ, spark, queries, ivf_index_path, pq_index_path, id_col, vec_col,
-        nprobe, cell_codes_path, cell_codes_verified, codebooks, where,
+        nprobe, cell_codes_path, cell_codes_verified, where,
     )
     return _refine(_pq_scored(q, cand, books, q_rows), root, k, rerank)
 
@@ -2840,7 +2792,6 @@ def ivfsq8_topk_indexed(
     rerank: int | None = 40,
     cell_codes_path: str | None = None,
     cell_codes_verified: bool = False,
-    stats: tuple[list[float], list[float]] | None = None,
     where: Column | str | None = None,
 ) -> DataFrame:
     """FAISS IVF+SQ8 composed over the two persisted indexes — the
@@ -2850,14 +2801,13 @@ def ivfsq8_topk_indexed(
     recall tracks the IVF probe itself with a ~4× smaller byte sweep than
     raw vectors — where IVF-PQ trades more recall for a deeper (25×)
     payload cut. The coarse stage, the staleness gate, the warm-path
-    escape hatches and ``where`` are :func:`_composed_candidates`' (the
+    escape hatch and ``where`` are :func:`_composed_candidates`' (the
     :func:`build_ivfpq_cell_codes` layout is codes-generic: both PQ and
-    SQ8 store ``codes`` as (id, codes)); ``stats`` = (mins, scales) is the
-    pre-read :func:`_sq8_stats_at` of the resolved root; the re-rank reads
-    the SQ8 vectors table."""
+    SQ8 store ``codes`` as (id, codes)); the re-rank reads the SQ8
+    vectors table."""
     root, stats, q, q_rows, cand = _composed_candidates(
         _SQ8, spark, queries, ivf_index_path, sq8_index_path, id_col, vec_col,
-        nprobe, cell_codes_path, cell_codes_verified, stats, where,
+        nprobe, cell_codes_path, cell_codes_verified, where,
     )
     return _refine(_sq8_scored(q, cand, stats, q_rows), root, k, rerank)
 
@@ -3143,8 +3093,8 @@ def mmr_rerank(
     ``candidates`` is any ANN family's output — (query_id, neighbor_id[,
     rank]) with ranks deeper than the final ``k`` (the usual recipe: ANN
     at ``scan_k`` ≈ 3-10×k, MMR down to k) — so this composes behind
-    :func:`brute_force_topk`, every ``*_topk_indexed``, or
-    :func:`sq8_topk_filtered` unchanged. Output: (query_id, neighbor_id,
+    :func:`brute_force_topk` or every ``*_topk_indexed``, filtered or
+    not, unchanged. Output: (query_id, neighbor_id,
     mmr_rank) with mmr_rank 1..k in pick order.
 
     Scale shape: vectors join in by id (broadcast queries, candidate-

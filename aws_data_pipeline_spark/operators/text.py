@@ -412,7 +412,6 @@ def unigram_logprob(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    persist: bool = True,
 ) -> DataFrame:
     """Perplexity-style fluency scoring (the CCNet filter family): score
     every document by its average negative log-probability under a unigram
@@ -439,15 +438,12 @@ def unigram_logprob(
     broadcasts while it fits, shuffle-joins beyond), the tfidf df-table
     rule. Shuffles carry (token, count) and (doc, unit-sum) rows only.
     """
+    # feeds the count table AND the per-doc fold; MEMORY_AND_DISK with LRU
+    # eviction, same per-call trade as shingle_sets (one materialized token
+    # column vs two tokenization passes)
     toks = widen_narrow_input(df).select(
         F.col(id_col).alias("doc"), F.explode(tokens(F.col(text_col))).alias("tok")
-    )
-    if persist:
-        # feeds the count table AND the per-doc fold; MEMORY_AND_DISK with
-        # LRU eviction, same per-call trade as shingle_sets (one
-        # materialized token column vs two tokenization passes) — pass
-        # persist=False to keep a long-lived session's storage pool clean
-        toks = toks.persist()
+    ).persist()
     cnt = toks.groupBy("tok").agg(F.count("*").alias("c"))
     tot = cnt.agg(
         F.sum("c").alias("n_corpus"), F.count("*").alias("v_vocab")
@@ -478,7 +474,6 @@ def bigram_logprob(
     id_col: str = "doc_id",
     text_col: str = "text",
     lam: float = 0.75,
-    persist: bool = True,
 ) -> DataFrame:
     """Interpolated bigram LM fluency scoring — the n-gram step up from
     :func:`unigram_logprob` (the CCNet family uses a 5-gram KenLM; the
@@ -520,18 +515,17 @@ def bigram_logprob(
         ),
     ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
     wide = widen_narrow_input(df)
+    # feeds the two count tables AND the per-doc fold (same trade as
+    # unigram_logprob's token frame)
     bg = (
         wide.select(
             F.col(id_col).alias("doc"), tokens(F.col(text_col)).alias("__t")
         )
         .select("doc", F.explode(pair).alias("b"))
         .select("doc", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
+        .persist()
     )
     uni = wide.select(F.explode(tokens(F.col(text_col))).alias("tok"))
-    if persist:
-        # feeds the two count tables AND the per-doc fold (same trade as
-        # unigram_logprob's token frame)
-        bg = bg.persist()
     ucnt = uni.groupBy("tok").agg(F.count("*").alias("cu"))
     utot = ucnt.agg(F.sum("cu").alias("n_corpus"), F.count("*").alias("v_vocab"))
     bcnt = bg.groupBy("w1", "w2").agg(F.count("*").alias("c"))

@@ -1012,7 +1012,7 @@ def _ensure_ivf_cell_codes(
     return ivf, codes, cc
 
 
-def _composed_roots(spark: SparkSession, sf_dir: str, tag: str, ensure, artifacts):
+def _composed_roots(spark: SparkSession, sf_dir: str, tag: str, ensure):
     """Resolved (coarse_root, codes_root, cell_codes_root) triple per
     (sf_dir, params-tag, source state) in the application memo
     (:func:`app_memo`), applied to the composed probes' fixed per-call
@@ -1034,21 +1034,15 @@ def _composed_roots(spark: SparkSession, sf_dir: str, tag: str, ensure, artifact
     deletion or rebuild doesn't flip ``_src_state``, and without the
     probe a warm probe would sail past the loud staleness gate
     (``cell_codes_verified=True``) into raw parquet path errors — a probe
-    miss re-``ensure``s instead.
-
-    ``artifacts``: callback over the resolved roots returning small
-    driver-side index artifacts (PQ codebooks, SQ8 stats — a few KB) to
-    memoize alongside, so warm probes also skip those collects. Returns
-    (roots, artifacts_value)."""
+    miss re-``ensure``s instead. The codes root's artifact (PQ codebooks,
+    SQ8 stats) is memoized per resolved root by the search itself
+    (:func:`artifact_memo`), so warm probes skip that collect too."""
     from aws_data_pipeline_spark.sources.parquet import index_root, zone_exists
-
-    def build():
-        roots = tuple(index_root(spark, p) for p in ensure())
-        return roots, artifacts(roots)
 
     return app_memo(
         spark, ("composed", sf_dir, tag), _src_state(spark, sf_dir, "embeddings"),
-        build, alive=lambda hit: all(zone_exists(spark, r) for r in hit[0]),
+        lambda: tuple(index_root(spark, p) for p in ensure()),
+        alive=lambda roots: all(zone_exists(spark, r) for r in roots),
     )
 
 
@@ -1073,17 +1067,13 @@ def embedding_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     straight to the search — the r8 bench's 2.8 s median was mostly this
     fixed ensure/currency overhead, honestly-cold every call."""
 
-    (ivf, pq, cc), books = _composed_roots(
+    ivf, pq, cc = _composed_roots(
         spark,
         sf_dir,
         "ivfpq_c8_m8_ks16",
         lambda: _ensure_ivf_cell_codes(
             spark, sf_dir, _pq_index_spec(m=8, ks=16), "ivfpq_cell_codes_c8_m8_ks16"
         ),
-        # _pq_codebooks_at, not read_pq_codebooks: roots[1] is already the
-        # resolved version dir — artifacts and data must come from ONE
-        # resolution (the one-resolution pairing rule)
-        artifacts=lambda roots: similarity._pq_codebooks_at(spark, roots[1]),
     )
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
@@ -1100,7 +1090,6 @@ def embedding_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         # serves the exact resolved roots it verified — the documented
         # warm-path contract of cell_codes_verified
         cell_codes_verified=True,
-        codebooks=books,
     )
 
 
@@ -1165,8 +1154,8 @@ def embedding_ann_sq8_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _ensure_index(spark, sf_dir, _SQ8F_INDEX)
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
-    return similarity.sq8_topk_filtered(
-        spark, queries, idx, where="label = 2", k=5, rerank=None
+    return similarity.sq8_topk_indexed(
+        spark, queries, idx, k=5, rerank=None, where="label = 2"
     )
 
 
@@ -2869,10 +2858,10 @@ def unicode_nfc_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivfsq8_roots(spark: SparkSession, sf_dir: str):
-    """The ensured + verified (ivf, sq8, cell_codes) resolved-root triple
-    plus SQ8 stats, shared by every IVF-SQ8-composed registry entry (the
-    top-k search and the hard-negative miner) through the one
-    state-keyed _composed_roots seat."""
+    """The ensured + verified (ivf, sq8, cell_codes) resolved-root triple,
+    shared by every IVF-SQ8-composed registry entry (the top-k search and
+    the hard-negative miner) through the one state-keyed _composed_roots
+    seat."""
 
     return _composed_roots(
         spark,
@@ -2881,7 +2870,6 @@ def _ivfsq8_roots(spark: SparkSession, sf_dir: str):
         lambda: _ensure_ivf_cell_codes(
             spark, sf_dir, _SQ8_INDEX, "ivfsq8_cell_codes_c8"
         ),
-        artifacts=lambda roots: similarity._sq8_stats_at(spark, roots[1]),
     )
 
 
@@ -2909,7 +2897,7 @@ def embedding_ann_ivfsq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     search end-to-end. Value semantics remain pinned locally by
     embedding_ann_sq8's full value oracle (the SQ8 scoring chain) and
     test_embedding_maintenance::test_ivfsq8_indexed_composition."""
-    (ivf, sq8, cc), stats = _ivfsq8_roots(spark, sf_dir)
+    ivf, sq8, cc = _ivfsq8_roots(spark, sf_dir)
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
     return similarity.ivfsq8_topk_indexed(
@@ -2922,7 +2910,6 @@ def embedding_ann_ivfsq8(spark: SparkSession, sf_dir: str) -> DataFrame:
         rerank=40,
         cell_codes_path=cc,
         cell_codes_verified=True,
-        stats=stats,
     )
 
 
@@ -3130,7 +3117,7 @@ def hard_negative_topk_ivfsq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal stays pinned by hard_negative_topk (exact twin, full oracle,
     promoted r9); full-coverage identity (nprobe = n_cells ⇒ rows == the
     exact miner's) pinned in tests/test_llm.py."""
-    (ivf, sq8, cc), _stats = _ivfsq8_roots(spark, sf_dir)
+    ivf, sq8, cc = _ivfsq8_roots(spark, sf_dir)
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
     return similarity.hard_negative_topk_ivfsq8(

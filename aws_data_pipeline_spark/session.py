@@ -179,7 +179,6 @@ def cluster_profile(
 def get_spark(
     app_name: str = "aws-data-pipeline-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
@@ -191,8 +190,6 @@ def get_spark(
     master = master or f"local[{cpu_count()}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(DEFAULT_CONF)
-    if shuffle_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -27,12 +27,12 @@ def write_zone(
     path: str,
     partition_by: Sequence[str] = (),
     mode: str = "append",
-    compression: str = "snappy",
     partition_overwrite: str | None = None,
 ) -> None:
     """Partitioned parquet sink (S4-S7): silver appends partitioned by
     year/month/day (``bronze_to_silver.py:138-143``); gold overwrites at
-    its grain (``silver_to_gold.py:141-149``).
+    its grain (``silver_to_gold.py:141-149``). The codec is the session's
+    (``session.DEFAULT_CONF`` pins snappy).
 
     ``partition_overwrite``: pin ``"dynamic"`` or ``"static"`` on THIS
     writer when the call's correctness depends on it, instead of trusting
@@ -42,7 +42,7 @@ def write_zone(
     default."""
     if partition_by:
         df = require_non_null(df, partition_by)
-    writer = df.write.mode(mode).option("compression", compression)
+    writer = df.write.mode(mode)
     if partition_overwrite is not None:
         writer = writer.option("partitionOverwriteMode", partition_overwrite)
     if partition_by:

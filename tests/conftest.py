@@ -103,7 +103,11 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("adps-tests", master="local[4]", shuffle_partitions=8)
+    s = get_spark(
+        "adps-tests",
+        master="local[4]",
+        extra_conf={"spark.sql.shuffle.partitions": "8"},
+    )
     yield s
 
 

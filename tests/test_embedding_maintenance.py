@@ -1421,7 +1421,9 @@ def test_sq8_filtered_search_prefilters_and_survives_lifecycle(
     S.append_to_sq8_index(batch, idx)
 
     queries = e.filter(F.col("vec_id") < 5)
-    got = S.sq8_topk_filtered(spark, queries, idx, where="label = 2", k=5)
+    got = S.sq8_topk_indexed(
+        spark, queries, idx, k=5, rerank=None, where="label = 2"
+    )
     got_rows = {(r.query_id, r.neighbor_id, r.rank) for r in got.collect()}
 
     # pre-filter reference: the SAME sq8 ranking over only label=2 rows
@@ -1452,8 +1454,8 @@ def test_sq8_filtered_search_prefilters_and_survives_lifecycle(
     S.retrain_sq8_index(spark, idx)
     again = {
         (r.query_id, r.neighbor_id, r.rank)
-        for r in S.sq8_topk_filtered(
-            spark, queries, idx, where="label = 2", k=5
+        for r in S.sq8_topk_indexed(
+            spark, queries, idx, k=5, rerank=None, where="label = 2"
         ).collect()
     }
     mins2, scales2 = S.read_sq8_stats(spark, idx)
@@ -1464,7 +1466,9 @@ def test_sq8_filtered_search_prefilters_and_survives_lifecycle(
     bare = str(tmp_path / "sq8_bare")
     S.build_sq8_index(base, bare)
     with pytest.raises(ValueError, match="payload_cols"):
-        S.sq8_topk_filtered(spark, queries, bare, where="label = 2", k=5)
+        S.sq8_topk_indexed(
+            spark, queries, bare, k=5, rerank=None, where="label = 2"
+        )
 
 
 def test_forget_vectors_erases_every_surface(spark, sf_dir, tmp_path):
@@ -1629,8 +1633,8 @@ def test_composed_filtered_search_prunes_cells_and_payload(
     }
     want = {
         (r.query_id, r.neighbor_id, r.rank)
-        for r in S.sq8_topk_filtered(
-            spark, q, sq8, where="label = 2", k=5, rerank=None
+        for r in S.sq8_topk_indexed(
+            spark, q, sq8, k=5, rerank=None, where="label = 2"
         ).collect()
     }
     assert got == want and len(got) == 25
@@ -1670,7 +1674,7 @@ def test_composed_filtered_search_prunes_cells_and_payload(
 def test_pq_payload_filtered_search_and_lifecycle(spark, sf_dir, tmp_path):
     """PQ payload symmetry with SQ8: a payload_cols build stores the
     filter attribute beside vectors AND codes (joined back around the
-    Arrow encoder), pq_topk_filtered pre-filters the compressed scan and
+    Arrow encoder), pq_topk_indexed(where=) pre-filters the compressed scan and
     equals the resident pq_topk over only the matching subset under the
     same stored codebooks; appends discover and carry the payload
     (missing-payload append raises); retrain preserves it; the composed
@@ -1693,8 +1697,8 @@ def test_pq_payload_filtered_search_and_lifecycle(spark, sf_dir, tmp_path):
     queries = e.filter(F.col("vec_id") < 5)
     got = {
         (r.query_id, r.neighbor_id, r.rank)
-        for r in S.pq_topk_filtered(
-            spark, queries, idx, where="label = 2", k=5, rerank=None
+        for r in S.pq_topk_indexed(
+            spark, queries, idx, k=5, rerank=None, where="label = 2"
         ).collect()
     }
     books = S.read_pq_codebooks(spark, idx)

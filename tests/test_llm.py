@@ -1901,13 +1901,18 @@ def test_composed_roots_warm_path_identity(spark, sf_dir):
         for r in reg["embedding_ann_ivfpq"].spark_fn(spark, sf_dir).collect()
     }
     assert len(_composed_memo()) == 1
-    (key, (roots, books)) = next(iter(_composed_memo().items()))
+    (key, roots) = next(iter(_composed_memo().items()))
     assert key[1] == ("composed", sf_dir, "ivfpq_c8_m8_ks16")
-    # roots are stored resolved: index_root is identity on each; the
-    # cached artifact is the PQ codebooks (m lists of ks centroids)
+    # roots are stored resolved: index_root is identity on each; the PQ
+    # codebooks (m lists of ks centroids) are memoized under the resolved
+    # codes root, so the warm probe skips their collect too
     from aws_data_pipeline_spark.sources.parquet import index_root
 
     assert all(index_root(spark, r) == r for r in roots)
+    books = next(
+        v for k, v in parquet._APP_MEMO.items()
+        if k[1] == ("artifact", f"{roots[1]}/codebooks")
+    )
     assert len(books) == 8 and all(len(b) == 16 for b in books)
 
     # poison the ensure path: a warm probe must not call it
@@ -1925,13 +1930,13 @@ def test_composed_roots_warm_path_identity(spark, sf_dir):
     # state (the app_memo eviction rule; eviction runs on miss)
     stale_key = (key[0], key[1], ("superseded",))
     _drop_memo_scope("composed")
-    parquet._APP_MEMO[stale_key] = (roots, books)
+    parquet._APP_MEMO[stale_key] = roots
     refreshed = {
         tuple(r)
         for r in reg["embedding_ann_ivfpq"].spark_fn(spark, sf_dir).collect()
     }
     assert stale_key not in parquet._APP_MEMO
-    assert parquet._APP_MEMO[key][0] == roots  # re-ensure found the same builds
+    assert parquet._APP_MEMO[key] == roots  # re-ensure found the same builds
     assert refreshed == cold
 
 
@@ -1954,12 +1959,12 @@ def test_composed_roots_out_of_band_deletion_reensures(spark, sf_dir):
         tuple(r)
         for r in reg["embedding_ann_ivfsq8"].spark_fn(spark, sf_dir).collect()
     }
-    (key, (roots, stats)) = next(iter(_composed_memo().items()))
+    (key, roots) = next(iter(_composed_memo().items()))
     # out-of-band deletion of the cell-codes index (markers included)
     shutil.rmtree(re.sub(r"/v\d+$", "", roots[2]))
     # and a fake dead-application entry that must not survive the insert
     dead = ("application_dead_0000", key[1], key[2])
-    parquet._APP_MEMO[dead] = (("gone",), None)
+    parquet._APP_MEMO[dead] = ("gone",)
     warm = {
         tuple(r)
         for r in reg["embedding_ann_ivfsq8"].spark_fn(spark, sf_dir).collect()
@@ -2038,7 +2043,7 @@ def _refine_case_paths(spark, sf_dir):
 
     ivf = L._ensure_index(spark, sf_dir, L._ivf_index_spec(n_cells=8))
     pq = L._ensure_index(spark, sf_dir, L._pq_index_spec(m=8, ks=16))
-    (_, sq8, sq8_cc), _ = L._ivfsq8_roots(spark, sf_dir)
+    _, sq8, sq8_cc = L._ivfsq8_roots(spark, sf_dir)
     e = load(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10)
     truth = sorted(

@@ -394,7 +394,8 @@ def _append_batch_rows(fixture_rows):
 def test_batch_append_writes_one_file_per_touched_partition(spark, cfg):
     """A small follow-up batch appends at most one parquet file to each
     (year, month, day) it touches: the persisted batch is sized by AQE,
-    not fanned out over spark.sql.shuffle.partitions append tasks."""
+    not fanned out over spark.sql.shuffle.partitions append tasks. Every
+    silver file carries the S4 codec, snappy (session.DEFAULT_CONF)."""
     bronze = pathlib.Path(cfg.bronze_path)
     rows = make_fixture(bronze)  # rewrites the fixture's files unchanged
     clock = F.lit(CLOCK).cast("timestamp")
@@ -408,9 +409,12 @@ def test_batch_append_writes_one_file_per_touched_partition(spark, cfg):
     res = run_pipeline(spark, cfg, clock=clock)
     assert res["bronze_to_silver"]["rows_written"] == len(new)
 
-    added = _new_files_per_day(before, _silver_files(cfg.silver_path))
+    after = _silver_files(cfg.silver_path)
+    added = _new_files_per_day(before, after)
     assert set(added) == {(2024, 3, 5), (2024, 3, 6)}
     assert all(n == 1 for n in added.values()), added
+    names = [n for day in after.values() for n in day]
+    assert names and all(n.endswith(".snappy.parquet") for n in names), names
 
 
 @pytest.mark.parametrize("zone_dir", ["silver", "silver zone"])
@@ -419,7 +423,7 @@ def test_streaming_sink_writes_one_file_per_touched_partition(
 ):
     """The foreachBatch body (``ingest_sink``) appends with the same layout
     as the batch path: one file per touched day over an existing zone.
-    The spaced zone name covers the sink's intent-marker filesystem
+    The spaced zone name covers the guard's ``zone_exists`` filesystem
     handle, which must parse paths the way Spark's own writer does (a
     raw ``URI.create`` rejects the space and fails the batch)."""
     from aws_data_pipeline_spark.catalog import TXN_SCHEMA
@@ -431,7 +435,7 @@ def test_streaming_sink_writes_one_file_per_touched_partition(
     silver_path = str(tmp_path / zone_dir)
     clock = F.lit(CLOCK).cast("timestamp")
     first = spark.read.schema(TXN_SCHEMA).json(str(bronze))
-    ingest_sink(first, 0, silver_path, clock, "anti_join")
+    ingest_sink(first, 0, silver_path, clock)
     before = _silver_files(silver_path)
 
     redelivered, new = _append_batch_rows(rows)
@@ -439,12 +443,34 @@ def test_streaming_sink_writes_one_file_per_touched_partition(
         [tuple(r[f.name] for f in TXN_SCHEMA.fields) for r in redelivered + new],
         TXN_SCHEMA,
     )
-    ingest_sink(batch, 1, silver_path, clock, "anti_join")
+    ingest_sink(batch, 1, silver_path, clock)
 
     added = _new_files_per_day(before, _silver_files(silver_path))
     assert set(added) == {(2024, 3, 5), (2024, 3, 6)}
     assert all(n == 1 for n in added.values()), added
     assert spark.read.parquet(silver_path).count() == 203 + len(new)
+
+
+def test_streaming_sink_replay_appends_nothing(spark, tmp_path):
+    """A crash after the parquet append but before the checkpoint commit
+    makes Spark re-drive the same batch under the same ``batch_id``. The
+    sink's partition-pruned anti-join finds the batch's rows already in
+    silver, so the replay appends nothing and writes no file."""
+    from aws_data_pipeline_spark.catalog import TXN_SCHEMA
+    from aws_data_pipeline_spark.streaming.ingest import ingest_sink
+
+    bronze = tmp_path / "bronze"
+    bronze.mkdir()
+    make_fixture(bronze)
+    silver_path = str(tmp_path / "silver")
+    clock = F.lit(CLOCK).cast("timestamp")
+    batch = spark.read.schema(TXN_SCHEMA).json(str(bronze))
+    ingest_sink(batch, 7, silver_path, clock)  # the attempt that crashed
+    landed = spark.read.parquet(silver_path).count()
+    before = _silver_files(silver_path)
+    ingest_sink(batch, 7, silver_path, clock)  # the replay
+    assert spark.read.parquet(silver_path).count() == landed == 203
+    assert _silver_files(silver_path) == before
 
 
 # ---------------------------------------------------------------------------
@@ -527,9 +553,7 @@ def test_append_starts_no_footer_inference_job(spark, cfg, caller):
     batch = spark.read.schema(TXN_SCHEMA).json(cfg.bronze_path)
     append = {
         "bronze_to_silver": lambda: bronze_to_silver(spark, cfg, clock=clock),
-        "ingest_sink": lambda: ingest_sink(
-            batch, 0, cfg.silver_path, clock, "anti_join"
-        ),
+        "ingest_sink": lambda: ingest_sink(batch, 0, cfg.silver_path, clock),
     }[caller]
     jobs = _job_names(spark, f"{caller}-receipt", append)
     assert 0 < len(jobs) <= 6, jobs

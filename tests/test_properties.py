@@ -1125,24 +1125,14 @@ def test_fuzzy_link_matches_python_set_model(spark, corpus, queries):
     assert got == expect
 
 
-def test_dedup_arbitrary_keeps_one_row_per_key(spark):
-    """The reference-faithful A1 form (dropDuplicates, arbitrary survivor):
-    exactly one row per key, and every surviving row is one of the input
-    rows — the weaker contract dedup_deterministic strengthens."""
-    from aws_data_pipeline_spark.operators.cleanse import dedup_arbitrary
-
-    rows = [(1, "a"), (1, "b"), (2, "c"), (3, "d"), (3, "e"), (3, "f")]
-    df = spark.createDataFrame(rows, "k long, v string")
-    out = dedup_arbitrary(df, ["k"]).collect()
-    assert sorted(r.k for r in out) == [1, 2, 3]
-    assert all((r.k, r.v) in rows for r in out)
-
-
 def test_minhash_signatures_shape_and_determinism(spark):
-    """The public signature surface: one row per doc, num_perm-long
-    signatures, and byte-identical across two independent calls (the
-    permutation parameters are fixed constants, not per-session salt)."""
-    from aws_data_pipeline_spark.operators.dedup import minhash_signatures
+    """The signature surface: one row per doc, num_perm-long signatures,
+    and byte-identical across two independent calls (the permutation
+    parameters are fixed constants, not per-session salt)."""
+    from aws_data_pipeline_spark.operators.dedup import (
+        _signatures_from_sets,
+        shingle_sets,
+    )
 
     df = spark.createDataFrame(
         [
@@ -1152,8 +1142,12 @@ def test_minhash_signatures_shape_and_determinism(spark):
         ],
         "doc_id long, text string",
     )
-    a = {r.doc: r.sig for r in minhash_signatures(df, "doc_id", k=3, num_perm=8).collect()}
-    b = {r.doc: r.sig for r in minhash_signatures(df, "doc_id", k=3, num_perm=8).collect()}
+
+    def sigs():
+        sets = shingle_sets(df, "doc_id", k=3)
+        return {r.doc: r.sig for r in _signatures_from_sets(sets, 8).collect()}
+
+    a, b = sigs(), sigs()
     assert set(a) == {1, 2, 3}
     assert all(len(s) == 8 for s in a.values())
     assert a == b
@@ -1161,19 +1155,3 @@ def test_minhash_signatures_shape_and_determinism(spark):
     same = sum(x == y for x, y in zip(a[1], a[2]))
     diff = sum(x == y for x, y in zip(a[1], a[3]))
     assert same > diff
-
-
-def test_schema_drift_reports_type_missing_and_extra(spark):
-    """schema_drift: typed mismatch, missing expected column, and
-    unexpected extra column each surface exactly once; a conforming frame
-    reports nothing."""
-    from aws_data_pipeline_spark.operators.quality import schema_drift
-
-    df = spark.createDataFrame([(1, "x", 2.0)], "a int, b string, extra double")
-    got = schema_drift(df, {"a": "bigint", "b": "string", "gone": "date"})
-    assert sorted(got) == [
-        ("a", "bigint", "int"),
-        ("extra", "<missing>", "double"),
-        ("gone", "date", "<missing>"),
-    ]
-    assert schema_drift(df, dict(df.dtypes)) == []

@@ -802,7 +802,9 @@ def test_sq8_filtered_probe_pushes_payload_predicate(spark, sf_dir, tmp_path):
     idx = str(tmp_path / "sq8_pushdown")
     S.build_sq8_index(e, idx, payload_cols=["label"])
     queries = e.filter(F.col("vec_id") < 3)
-    df = S.sq8_topk_filtered(spark, queries, idx, where="label = 2", k=5)
+    df = S.sq8_topk_indexed(
+        spark, queries, idx, k=5, rerank=None, where="label = 2"
+    )
     # formatted explain: per-scan PushedFilters sections, no line
     # truncation (executedPlan().toString() clips scan metadata at
     # spark.sql.maxMetadataStringLength)

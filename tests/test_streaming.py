@@ -45,6 +45,8 @@ def test_availablenow_checkpoint_is_a_bookmark(spark, tmp_path):
     _write_batch(bronze, 0, 50)
     incremental_bronze_to_silver(spark, str(bronze), silver, ckpt, clock=clock)
     assert spark.read.parquet(silver).count() == 50
+    # the sink writes silver and nothing beside it
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["bronze", "ckpt", "silver"]
 
     # run 2: no new files -> bookmark means nothing reprocessed
     incremental_bronze_to_silver(spark, str(bronze), silver, ckpt, clock=clock)
@@ -222,85 +224,6 @@ def test_stream_static_enrichment_rereads_dim(spark, sf_dir, tmp_path):
         (1, "2024-05-02 10:00:00", "gold"),     # updated dim visible in batch 2
         (2, "2024-05-02 10:01:00", "silver"),
     }
-
-
-def test_watermark_dedup_mode_survives_runs(spark, tmp_path):
-    """dedup_mode='watermark': dropDuplicatesWithinWatermark state rides the
-    checkpoint, so re-delivered ids in a LATER availableNow run are dropped
-    without any read of silver (the bounded-re-delivery alternative to the
-    anti-join guard)."""
-    bronze = tmp_path / "bronze"
-    bronze.mkdir()
-    silver = str(tmp_path / "silver")
-    ckpt = str(tmp_path / "ckpt")
-    clock = F.lit("2026-01-01 00:00:00").cast("timestamp")
-
-    def run():
-        incremental_bronze_to_silver(
-            spark,
-            str(bronze),
-            silver,
-            ckpt,
-            clock=clock,
-            dedup_mode="watermark",
-            watermark_delay="365 days",  # cover the test's event-time span
-        )
-
-    # run 1: 50 rows, including an in-batch duplicate file
-    _write_batch(bronze, 0, 50)
-    _write_batch(bronze, 30, 10)  # ids 30-39 delivered twice within the run
-    run()
-    assert spark.read.parquet(silver).count() == 50
-
-    # run 2: 30 new rows + 10 re-delivered ids from run 1 — state from the
-    # checkpoint must drop them even though this run never saw them before
-    _write_batch(bronze, 50, 30)
-    _write_batch(bronze, 40, 10)
-    run()
-    got = spark.read.parquet(silver)
-    assert got.count() == 80
-    dups = got.groupBy("transaction_id").count().filter(F.col("count") > 1)
-    assert dups.isEmpty()
-
-
-def test_watermark_mode_replay_does_not_duplicate(spark, tmp_path):
-    """The crash window dropDuplicatesWithinWatermark cannot cover: the
-    parquet append lands, the process dies BEFORE the checkpoint commit,
-    and the batch replays with pre-batch state. The intent-marker protocol
-    must detect the replay (marker already present) and run the
-    partition-pruned anti-join for that batch only, so the re-driven sink
-    appends nothing. Simulated by calling the sink body twice with the
-    same batch_id, exactly what a foreachBatch replay does."""
-    from aws_data_pipeline_spark.catalog import TXN_SCHEMA
-    from aws_data_pipeline_spark.streaming.ingest import (
-        _intents_dir,
-        ingest_sink,
-    )
-
-    silver = str(tmp_path / "silver")
-    clock = F.lit("2026-01-01 00:00:00").cast("timestamp")
-    bronze_dir = tmp_path / "b"
-    bronze_dir.mkdir()
-    _write_batch(bronze_dir, 0, 25)
-    batch = spark.read.schema(TXN_SCHEMA).json(str(bronze_dir))
-
-    ingest_sink(batch, 7, silver, clock, "watermark")  # the crashed attempt
-    assert spark.read.parquet(silver).count() == 25
-    import os
-
-    assert os.path.exists(f"{_intents_dir(silver)}/7")  # intent persisted
-    ingest_sink(batch, 7, silver, clock, "watermark")  # the replay
-    assert spark.read.parquet(silver).count() == 25  # no duplicates
-
-    # next committed batch sweeps the old marker and appends normally
-    bronze2 = tmp_path / "b2"
-    bronze2.mkdir()
-    _write_batch(bronze2, 100, 10)
-    batch2 = spark.read.schema(TXN_SCHEMA).json(str(bronze2))
-    ingest_sink(batch2, 8, silver, clock, "watermark")
-    assert spark.read.parquet(silver).count() == 35
-    assert not os.path.exists(f"{_intents_dir(silver)}/7")
-    assert os.path.exists(f"{_intents_dir(silver)}/8")
 
 
 def test_stream_stream_left_outer_emits_unmatched_after_watermark(
