@@ -567,14 +567,11 @@ def neardup_against_corpus(
     return _verify_pairs(cand, new_sets, corpus_sets, "new_id", "corpus_id", threshold)
 
 
-# the two persisted text indexes: their compaction clustering (``sets`` on
-# doc, ``bands`` on the candidate equi-join key, ``hashes`` on the hash)
-# and their sub-table layouts, as operators/similarity.py's ``_Codec``
-# declares its families'
+# the two persisted text indexes' compaction clustering (``sets`` on doc,
+# ``bands`` on the candidate equi-join key, ``hashes`` on the hash), as
+# operators/similarity.py's ``_Codec`` declares its families'
 _TEXT_LSH_CLUSTER = {"sets": ("doc",), "bands": ("band", "key")}
-_TEXT_LSH_SUBS = (*_TEXT_LSH_CLUSTER, "meta")
 _KGRAM_CLUSTER = {"hashes": ("h",)}
-_KGRAM_SUBS = (*_KGRAM_CLUSTER, "meta")
 
 
 def build_lsh_text_index(
@@ -586,7 +583,6 @@ def build_lsh_text_index(
     num_perm: int = 16,
     bands: int = 4,
     hash_fn: str = "xxhash64",
-    force_new_version: bool = False,
 ) -> None:
     """Persist a corpus's MinHash-LSH index: ``path/sets`` (doc, shingle
     set — the exact-verification side), ``path/bands`` (doc, band, key —
@@ -596,17 +592,17 @@ def build_lsh_text_index(
     probes it via :func:`neardup_against_index` without touching corpus
     text. Signatures are computed from the MATERIALIZED sets read back
     from disk — tokenization runs once, and the write doubles as the
-    cache `_signatures_from_sets` requires. Rebuilds over an active index
-    (or with ``force_new_version=True``) write a fresh version directory
-    and flip the pointer last — the same atomic-swap contract as the
-    embedding indexes (sources.parquet.resolve_build_root)."""
+    cache `_signatures_from_sets` requires. Every build writes a fresh
+    version directory and flips the pointer last — the same atomic-swap
+    contract as the embedding indexes (sources.parquet's versioned index
+    store)."""
     from aws_data_pipeline_spark.sources.parquet import (
-        finish_index_build as _finish_index_build,
-        resolve_build_root as _resolve_build_root,
+        finish_index_build,
+        index_next_root,
     )
 
     spark = df.sparkSession
-    root, new_v, old_root = _resolve_build_root(spark, path, force_new_version)
+    root, new_v = index_next_root(spark, path)
     # persist=False: the only consumer is this write — the read-back
     # below is the materialization signatures use
     shingle_sets(df, id_col, text_col, k, persist=False).write.mode(
@@ -621,7 +617,7 @@ def build_lsh_text_index(
         [(k, num_perm, bands, hash_fn)],
         "k int, num_perm int, bands int, hash_fn string",
     ).write.mode("overwrite").parquet(f"{root}/meta")
-    _finish_index_build(spark, path, new_v, old_root, _TEXT_LSH_SUBS)
+    finish_index_build(spark, path, new_v)
 
 
 def neardup_against_index(
@@ -1307,7 +1303,6 @@ def build_kgram_index(
     path: str,
     text_col: str = "text",
     k: int = 8,
-    force_new_version: bool = False,
 ) -> None:
     """Persist the corpus's DISTINCT positional k-gram hash set — the
     substring-level sibling of :func:`build_lsh_text_index`, extending
@@ -1324,16 +1319,16 @@ def build_kgram_index(
     the BUILD-TIME corpus doc count — build-once callers use it as a
     staleness probe (a regenerated corpus under the same path must not be
     served hashes of the old one); append-maintained indexes grow past it
-    by design and never consult it. Rebuilds over an active index write a
-    fresh version directory and flip the pointer last (the embedding
-    indexes' atomic-swap contract)."""
+    by design and never consult it. Every build writes a fresh version
+    directory and flips the pointer last (the embedding indexes'
+    atomic-swap contract)."""
     from aws_data_pipeline_spark.sources.parquet import (
-        finish_index_build as _finish_index_build,
-        resolve_build_root as _resolve_build_root,
+        finish_index_build,
+        index_next_root,
     )
 
     spark = df.sparkSession
-    root, new_v, old_root = _resolve_build_root(spark, path, force_new_version)
+    root, new_v = index_next_root(spark, path)
     n_docs = df.count()
     (
         widen_narrow_input(df)
@@ -1349,7 +1344,7 @@ def build_kgram_index(
     arrow_frame(spark, [(k, n_docs)], "k int, built_n_docs long").write.mode(
         "overwrite"
     ).parquet(f"{root}/meta")
-    _finish_index_build(spark, path, new_v, old_root, _KGRAM_SUBS)
+    finish_index_build(spark, path, new_v)
 
 
 def append_to_kgram_index(

@@ -24,22 +24,12 @@ from pyspark.sql import types as T
 from aws_data_pipeline_spark.operators import arrow_frame, lit_array
 from aws_data_pipeline_spark.sources.parquet import (
     artifact_memo,
-    commit_index_version,
+    finish_index_build,
     read_pinned,
-    delete_zone,
-    index_active_version,
+    index_has,
+    index_next_root,
     index_root,
     qualified_path,
-    zone_exists,
-)
-
-
-# The versioned-build write protocol moved to sources.parquet (it is pure
-# storage mechanics shared by the text indexes too); these aliases keep the
-# historical private names importable.
-from aws_data_pipeline_spark.sources.parquet import (  # noqa: E402
-    finish_index_build as _finish_index_build,
-    resolve_build_root as _resolve_build_root,
 )
 
 
@@ -905,13 +895,6 @@ def ivf_topk(
     return _topk_by_sim(scored, k)
 
 
-# sub-table layouts of the two families outside the shared codec lifecycle
-# (see _Codec): the cell-partitioned IVF index and the derived IVF-PQ/SQ8
-# cell-codes layout
-_IVF_SUBS = ("corpus", "centroids", "build_stats")
-_CELL_CODES_SUBS = ("codes", "meta")
-
-
 def build_ivf_index(
     corpus: DataFrame,
     path: str,
@@ -919,7 +902,6 @@ def build_ivf_index(
     vec_col: str = "embedding",
     n_cells: int = 16,
     seed: int = 42,
-    force_new_version: bool = False,
     payload_cols: Sequence[str] = (),
 ) -> None:
     """Persist an IVF index: corpus assigned to k-means cells, written
@@ -933,13 +915,13 @@ def build_ivf_index(
     directories (partition pruning on ``cell=``) — at 100 TB a 1024-cell
     index turns each query batch into a scan of nprobe/1024 of the corpus.
 
-    Rebuild atomicity: a build over an already-active index (or one with
-    ``force_new_version=True`` — the retrain path) writes a fresh version
-    directory and flips the pointer last, so concurrent probes serve the
-    old index until the single-file commit (see _resolve_build_root).
+    Rebuild atomicity: every build writes a fresh version directory and
+    flips the pointer last, so concurrent probes serve the old index (or
+    none) until the single-file commit (see sources.parquet's versioned
+    index store).
     """
     spark = corpus.sparkSession
-    root, new_v, old_root = _resolve_build_root(spark, path, force_new_version)
+    root, new_v = index_next_root(spark, path)
     centroids = train_ivf_centroids(corpus, id_col, vec_col, n_cells, seed)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -969,7 +951,7 @@ def build_ivf_index(
         .write.mode("overwrite")
         .parquet(f"{root}/build_stats")
     )
-    _finish_index_build(spark, path, new_v, old_root, _IVF_SUBS)
+    finish_index_build(spark, path, new_v)
 
 
 def read_ivf_centroids(spark, root: str) -> list[list[float]]:
@@ -1095,7 +1077,6 @@ def build_embedding_lsh_index(
     rows_per_band: int = 4,
     dim: int = 64,
     seed: int = 42,
-    force_new_version: bool = False,
 ) -> None:
     """Persist a corpus's hyperplane-LSH index — the embedding twin of
     ``dedup.build_lsh_text_index``: ``path/vectors`` (id, v — the exact
@@ -1106,11 +1087,10 @@ def build_embedding_lsh_index(
     bit-identical codes from the meta alone — nothing model-like is
     stored. Build once per corpus version; per-batch semantic dedup then
     never touches corpus embeddings except the matched candidates.
-    Rebuilds over an active index write a fresh version and flip the
-    pointer last (see _resolve_build_root) — probes never see a
-    half-written state."""
+    Every build writes a fresh version and flips the pointer last (see
+    _build_index) — probes never see a half-written state."""
     _build_index(
-        _LSH, df, path, id_col, vec_col, force_new_version, (),
+        _LSH, df, path, id_col, vec_col, (),
         bands=bands, rows_per_band=rows_per_band, dim=dim, seed=seed,
     )
 
@@ -1370,11 +1350,11 @@ def retrain_ivf_index(
     (nprobe = n_cells) equals brute force before and after.
 
     Concurrency-safe: the rebuild writes a fresh version directory and
-    commits it with one marker-file create (``force_new_version`` through
-    ``build_ivf_index``), so probes during the retrain serve the OLD
-    index until the flip and the new one after — no truncation window. A
-    crash mid-retrain leaves the old version intact and still active;
-    re-running the retrain writes a new candidate.
+    commits it with one marker-file create (``build_ivf_index``), so
+    probes during the retrain serve the OLD index until the flip and the
+    new one after — no truncation window. A crash mid-retrain leaves the
+    old version intact and still active; re-running the retrain writes a
+    new candidate.
     """
     drift = ivf_index_drift(spark, path).collect()
     built = sum(r.built_n for r in drift)
@@ -1403,7 +1383,6 @@ def retrain_ivf_index(
         path,
         n_cells=n_cells,
         seed=seed,
-        force_new_version=True,
         payload_cols=payload,
     )
     return {"n_vectors": current, "n_cells": n_cells}
@@ -1656,7 +1635,6 @@ def build_pq_index(
     ks: int = 16,
     seed: int = 42,
     max_train: int = 16384,
-    force_new_version: bool = False,
     payload_cols: Sequence[str] = (),
 ) -> None:
     """Persist a PQ index: ``path/vectors`` (id, v — the exact re-rank
@@ -1666,9 +1644,9 @@ def build_pq_index(
     hyperplanes (seeded, re-derivable from meta alone), PQ codebooks are
     DATA-FITTED — they must be stored, and append-time encoding must use
     the stored books or codes would be incomparable across batches.
-    Crash and rebuild contract: :func:`_build_index` (meta LAST;
-    rebuilds flip a fresh version, so no new-codes-under-old-codebooks
-    state is ever visible).
+    Crash and rebuild contract: :func:`_build_index` (every build flips a
+    fresh version, so no new-codes-under-old-codebooks state is ever
+    visible).
 
     ``payload_cols`` stores filter attributes beside both sub-tables
     (build_sq8_index's payload pattern), so the composed filtered
@@ -1676,7 +1654,7 @@ def build_pq_index(
     appends and retrains carry the payload through, unfiltered probes
     never read it."""
     _build_index(
-        _PQ, corpus, path, id_col, vec_col, force_new_version, payload_cols,
+        _PQ, corpus, path, id_col, vec_col, payload_cols,
         m=m, ks=ks, seed=seed, max_train=max_train,
     )
 
@@ -1974,7 +1952,6 @@ def build_sq8_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    force_new_version: bool = False,
     payload_cols: Sequence[str] = (),
 ) -> None:
     """Persist an SQ8 index: ``path/vectors`` (id, v — the exact re-rank
@@ -1993,9 +1970,7 @@ def build_sq8_index(
     unfiltered probes are unaffected — they select (id, codes) / (id, v)
     explicitly, so parquet column pruning never reads the payload.
     Crash and rebuild contract: :func:`_build_index`."""
-    _build_index(
-        _SQ8, corpus, path, id_col, vec_col, force_new_version, payload_cols
-    )
+    _build_index(_SQ8, corpus, path, id_col, vec_col, payload_cols)
 
 
 def read_sq8_stats(spark, path: str) -> tuple[list[float], list[float]]:
@@ -2096,9 +2071,8 @@ def retrain_sq8_index(spark, path: str) -> dict[str, int]:
     """Refit the per-dimension ranges on the index's OWN vectors and
     re-encode — the append lifecycle's endpoint, never rescanning the
     source corpus. Payload columns (a ``payload_cols`` build) ride the
-    vectors table through the rebuild. Versioned atomic swap via
-    ``force_new_version`` (probes mid-retrain serve the old pair; crash
-    leaves it active)."""
+    vectors table through the rebuild. Versioned atomic swap (probes
+    mid-retrain serve the old pair; crash leaves it active)."""
     return {"n_vectors": _retrain_index(_SQ8, spark, path)[0]}
 
 
@@ -2131,11 +2105,6 @@ class _Codec:
     # (queries, corpus, artifact, code rows, k, rerank) -> resident top-k
     search: Callable[..., DataFrame] | None = None
 
-    @property
-    def subs(self) -> tuple[str, ...]:
-        """Every sub-table, in build-write order (meta last)."""
-        return ("vectors", self.code_sub, *self.artifact_subs, "meta")
-
 
 def _build_index(
     codec: _Codec,
@@ -2143,23 +2112,20 @@ def _build_index(
     path: str,
     id_col: str,
     vec_col: str,
-    force_new_version: bool,
     payload_cols: Sequence[str],
     **params,
 ) -> None:
-    """Write ``vectors``, then the code table, then the artifacts, and
-    ``meta`` LAST, so a crash mid-FRESH-build reads as missing-meta and
-    the re-run rebuilds. A build over an already-active index (or
-    ``force_new_version``, the retrain path) writes a fresh version
-    directory and flips the pointer last (see _resolve_build_root):
-    probes and appends keep reading one internally-consistent (codes,
-    artifacts) pair, and a crash mid-rebuild leaves the old version
-    active. Data-fitted codecs record ``n_built``, the growth baseline of
+    """Write ``vectors``, the code table, the artifacts and ``meta`` into
+    a fresh version directory and flip the pointer last (see
+    sources.parquet's versioned index store): probes and appends keep
+    reading one internally-consistent (codes, artifacts) pair, and a
+    crash mid-build leaves the previous version (or no index) active.
+    Data-fitted codecs record ``n_built``, the growth baseline of
     :func:`_grown`: the CODES population, because the vectors count
     includes the zero-norm/ragged rows an encoder drops and would make
     the growth trigger fire late."""
     spark = df.sparkSession
-    root, new_v, old_root = _resolve_build_root(spark, path, force_new_version)
+    root, new_v = index_next_root(spark, path)
     df.select(
         F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"), *payload_cols
     ).write.mode("overwrite").parquet(f"{root}/vectors")
@@ -2177,7 +2143,7 @@ def _build_index(
     arrow_frame(spark, [tuple(meta)], ", ".join(schema)).write.mode(
         "overwrite"
     ).parquet(f"{root}/meta")
-    _finish_index_build(spark, path, new_v, old_root, codec.subs)
+    finish_index_build(spark, path, new_v)
 
 
 def _append_to_index(
@@ -2236,8 +2202,8 @@ def _retrain_index(codec: _Codec, spark, path: str, **fit_params):
     """Refit a data-fitted codec on the index's OWN vectors and re-encode,
     never rescanning the source corpus; payload columns ride the vectors
     table through, and the build parameters come from the stored meta.
-    The rebuild is a ``force_new_version`` build, so probes mid-retrain
-    serve the OLD (codes, artifacts) pair and a crash leaves it active.
+    The rebuild is a versioned build, so probes mid-retrain serve the
+    OLD (codes, artifacts) pair and a crash leaves it active.
     Returns (vectors re-encoded, the pre-retrain meta row or None)."""
     root = index_root(spark, path)
     meta = (
@@ -2253,7 +2219,7 @@ def _retrain_index(codec: _Codec, spark, path: str, **fit_params):
     )
     params = {c: meta[c] for c in codec.meta_cols}
     _build_index(
-        codec, vecs, path, "vec_id", "embedding", True, payload, **params, **fit_params
+        codec, vecs, path, "vec_id", "embedding", payload, **params, **fit_params
     )
     return vecs.count(), meta
 
@@ -2679,12 +2645,11 @@ def build_ivfpq_cell_codes(
     codes) rather than a third append lifecycle that could drift out of
     sync with its sources. Rebuilds land through the shared
     versioned-swap protocol (candidate dir + single marker-file commit),
-    so probes mid-rebuild serve the previous generation; meta is written
-    LAST inside each generation (the crash contract: half-written reads
-    as missing-meta)."""
+    so probes mid-rebuild serve the previous generation and an
+    uncommitted build is invisible."""
     ivf_root = index_root(spark, ivf_index_path)
     pq_root = index_root(spark, pq_index_path)
-    root, new_v, old_root = _resolve_build_root(spark, path, force_new_version=False)
+    root, new_v = index_next_root(spark, path)
     codes = read_pinned(spark, f"{pq_root}/codes")
     cells = read_pinned(spark, f"{ivf_root}/corpus").select(
         F.col("neighbor_id").alias("id"), "cell"
@@ -2716,7 +2681,7 @@ def build_ivfpq_cell_codes(
         ],
         "ivf_root string, pq_root string, n_ivf long, n_pq long",
     ).write.mode("overwrite").parquet(f"{root}/meta")
-    _finish_index_build(spark, path, new_v, old_root, _CELL_CODES_SUBS)
+    finish_index_build(spark, path, new_v)
     return {"n_codes": n}
 
 
@@ -2730,15 +2695,6 @@ def _cell_codes_stale(spark, cc_root: str, ivf_root: str, pq_root: str) -> str |
     row counts vs the counts stored at build time (catches APPENDS, which
     write into the same root without a flip). The counts are
     parquet-footer metadata reads — no data scan."""
-    # guarded, not a bare read: a crash between the codes and meta writes
-    # leaves a layout with no committed meta, and an unguarded read would
-    # surface as a raw parquet path-not-found instead of the documented
-    # loud staleness failure (the probe raises, the owner rebuilds)
-    if not zone_exists(spark, f"{cc_root}/meta"):
-        return (
-            "meta zone missing — a crash left a half-built layout (codes "
-            "written, meta not) or the path is not a cell-codes layout"
-        )
     meta = read_pinned(spark, f"{cc_root}/meta").collect()[0]
     q_ivf = qualified_path(spark, ivf_root)
     q_pq = qualified_path(spark, pq_root)
@@ -2766,13 +2722,13 @@ def ivfpq_cell_codes_current(
     the CURRENT state of both source indexes — the owner's rebuild
     trigger (the ``*_retrain_due`` analogue for derived layouts). Shares
     :func:`_cell_codes_stale` with the probe: qualified root equality
-    catches retrains, stored-vs-live source row counts catch appends.
-    Metadata-only (meta row + pointer listings + parquet footer counts)."""
-    cc_root = index_root(spark, path)
-    return (
+    catches retrains, stored-vs-live source row counts catch appends. A
+    path with no committed layout is not current. Metadata-only (meta
+    row + pointer listings + parquet footer counts)."""
+    return index_has(spark, path, "meta") and (
         _cell_codes_stale(
             spark,
-            cc_root,
+            index_root(spark, path),
             index_root(spark, ivf_index_path),
             index_root(spark, pq_index_path),
         )
@@ -2969,8 +2925,8 @@ def _delete_ids_versioned(
     column; ``copy_subs`` are carried verbatim; ``primary`` (a data_subs
     key) is where the deleted-row count is measured. No-op (no version
     churn) when none of the ids are present."""
-    root, new_v, old_root = _resolve_build_root(spark, path, True)
-    src = old_root if old_root is not None else path
+    src = index_root(spark, path)
+    root, new_v = index_next_root(spark, path)
     # no broadcast hint: a routine GDPR batch is tiny (AQE broadcasts it
     # on its own), but a cohort-scale erasure can be tens of millions of
     # ids — forcing the hint would pin that on the driver
@@ -2997,9 +2953,7 @@ def _delete_ids_versioned(
         read_pinned(spark, f"{src}/{sub}").write.mode("overwrite").parquet(
             f"{root}/{sub}"
         )
-    _finish_index_build(
-        spark, path, new_v, old_root, tuple(data_subs) + copy_subs
-    )
+    finish_index_build(spark, path, new_v)
     return n_deleted
 
 

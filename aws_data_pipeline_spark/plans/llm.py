@@ -10,6 +10,7 @@ tests/ (recall vs exact baselines).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from typing import NamedTuple
 
@@ -26,7 +27,12 @@ from aws_data_pipeline_spark.operators import (
 )
 from aws_data_pipeline_spark.plans import register
 from aws_data_pipeline_spark.plans.common import T
-from aws_data_pipeline_spark.sources.parquet import app_memo, read_pinned
+from aws_data_pipeline_spark.sources.parquet import (
+    app_memo,
+    index_root,
+    read_pinned,
+    zone_exists,
+)
 
 # -- Exact dedup -----------------------------------------------------------
 
@@ -442,37 +448,57 @@ def _src_state(
     return (total, n_files, n_bytes)
 
 
+@functools.cache
+def _code_digest() -> str:
+    """sha256 of the source of the modules that build the registry's
+    indexes (``operators/similarity.py``, ``operators/dedup.py``), read
+    once per process — the code half of a build-once index's marker."""
+    import hashlib
+    import pathlib
+
+    h = hashlib.sha256()
+    for mod in (similarity, dedup):
+        h.update(pathlib.Path(mod.__file__).read_bytes())
+    return h.hexdigest()
+
+
 def _src_marker_fresh(
     spark: SparkSession, idx: str, state: tuple[int, int, int]
 ) -> bool:
     """Freshness probe for a build-once index over a slice of a source
     table: compare the FULL table's (row count, file count, byte size)
-    against the state recorded at build time. The slice predicate is
-    deterministic, so an unchanged table implies an unchanged slice;
-    scanning the filtered slice directly would read the doc_id column of
-    the whole table on EVERY probe. A pre-fingerprint marker (older
-    schema) reads as stale and triggers one rebuild."""
-    from aws_data_pipeline_spark.sources.parquet import zone_exists
-
-    if not zone_exists(spark, f"{idx}/src_meta"):
+    and the index-building code (:func:`_code_digest`) against the
+    marker the index's ACTIVE version recorded at build time. The slice
+    predicate is deterministic, so an unchanged table implies an
+    unchanged slice; scanning the filtered slice directly would read the
+    doc_id column of the whole table on EVERY probe. An index with no
+    committed version has no marker; a marker without every column
+    (older schema) reads as stale and triggers one rebuild."""
+    marker = f"{index_root(spark, idx)}/src_meta"
+    if not zone_exists(spark, marker):
         return False
     # RAW read, never read_pinned: this probe detects an OLD-SCHEMA
-    # marker by column presence, and the marker is overwritten in
-    # place on rebuild — a pinned pre-fingerprint schema would hide
-    # the new columns and wedge every later probe stale
-    meta = spark.read.parquet(f"{idx}/src_meta")
-    if not {"src_total", "src_files", "src_bytes"} <= set(meta.columns):
+    # marker by column presence, which a pinned schema would hide
+    meta = spark.read.parquet(marker)
+    if not {"src_total", "src_files", "src_bytes", "code_digest"} <= set(
+        meta.columns
+    ):
         return False
     r = meta.collect()[0]
-    return (r.src_total, r.src_files, r.src_bytes) == state
+    return (r.src_total, r.src_files, r.src_bytes, r.code_digest) == (
+        *state,
+        _code_digest(),
+    )
 
 
 def _write_src_marker(
     spark: SparkSession, idx: str, state: tuple[int, int, int]
 ) -> None:
     arrow_frame(
-        spark, [state], "src_total long, src_files long, src_bytes long"
-    ).write.mode("overwrite").parquet(f"{idx}/src_meta")
+        spark,
+        [(*state, _code_digest())],
+        "src_total long, src_files long, src_bytes long, code_digest string",
+    ).write.mode("overwrite").parquet(f"{index_root(spark, idx)}/src_meta")
 
 
 class _IndexSpec(NamedTuple):
@@ -483,7 +509,6 @@ class _IndexSpec(NamedTuple):
     id_col: str  # ids % 10 == 7 are the simulated new batch
     build: Callable[[DataFrame, str], object]  # (existing corpus, path)
     append: Callable[[DataFrame, str], object] | None = None  # (new batch, path)
-    subs: tuple[str, ...] = ()  # sub-tables a finished build holds
 
 
 _KGRAM_INDEX = _IndexSpec(
@@ -508,7 +533,6 @@ def _ivf_index_spec(n_cells: int, seed: int = 42) -> _IndexSpec:
         lambda batch, idx: similarity.append_to_ivf_index(
             batch.sparkSession, batch, idx
         ),
-        ("corpus", "centroids"),
     )
 
 
@@ -519,13 +543,12 @@ def _pq_index_spec(m: int, ks: int) -> _IndexSpec:
             corpus, idx, m=m, ks=ks, seed=42
         ),
         similarity.append_to_pq_index,
-        ("codes", "meta"),
     )
 
 
 _SQ8_INDEX = _IndexSpec(
     "sq8_index", "embeddings", "vec_id",
-    similarity.build_sq8_index, similarity.append_to_sq8_index, ("codes", "meta"),
+    similarity.build_sq8_index, similarity.append_to_sq8_index,
 )
 # payload-carrying SQ8 (label stored beside vectors AND codes) for the
 # filtered-search entry; the append discovers the payload from the index
@@ -535,7 +558,6 @@ _SQ8F_INDEX = _IndexSpec(
         corpus, idx, payload_cols=["label"]
     ),
     similarity.append_to_sq8_index,
-    ("codes", "meta"),
 )
 
 
@@ -546,25 +568,20 @@ def _ensure_index(spark: SparkSession, sf_dir: str, spec: _IndexSpec) -> str:
     new batch (id % 10 = 7) when the family has an append, so every
     probe exercises the append-maintained shape, not a fresh full build.
 
-    Staleness: the shared source-state marker (:func:`_src_marker_fresh`
-    — row count from footer metadata PLUS file-count/byte fingerprint
-    from one FS listing) and the presence of the finished build's
-    sub-tables; a regenerated corpus under the same path — even at
-    identical row count — triggers a rebuild instead of silently serving
-    the old data. Params are part of the index path, so
-    differently-parameterized indexes coexist. Build and append complete
-    before the marker write, so a crash mid-way reads as stale and the
-    re-run redoes both (builds overwrite, appends are idempotent)."""
-    from aws_data_pipeline_spark.sources.parquet import index_has, zone_exists
-
+    Staleness: the source-state marker in the index's committed version
+    (:func:`_src_marker_fresh` — row count from footer metadata PLUS
+    file-count/byte fingerprint from one FS listing, and the digest of
+    the code that built it); a regenerated corpus under the same path —
+    even at identical row count — or changed index code triggers a
+    rebuild into a new version instead of silently serving the old data.
+    Params are part of the index path, so differently-parameterized
+    indexes coexist. Build and append complete before the marker write,
+    so a crash mid-way reads as stale and the re-run redoes both."""
     idx = _warehouse_index_path(sf_dir, spec.name)
     state = _src_state(spark, sf_dir, spec.table)
 
     def _do() -> str:
-        fresh = all(
-            index_has(spark, idx, sub) for sub in spec.subs
-        ) and _src_marker_fresh(spark, idx, state)
-        if not fresh:
+        if not _src_marker_fresh(spark, idx, state):
             src = T(spark, sf_dir, spec.table)
             spec.build(src.filter(F.col(spec.id_col) % 10 != 7), idx)
             if spec.append is not None:
@@ -828,8 +845,6 @@ def _ivf_index(spark: SparkSession, sf_dir: str, n_cells: int, seed: int = 42):
     # sf_dir must invalidate the resident copy too (and unpersist the
     # superseded one), or the resident and persisted paths would diverge
     # within one application after _ensure_index rebuilds the disk index
-    from aws_data_pipeline_spark.sources.parquet import index_root
-
     def build():
         idx = index_root(
             spark, _ensure_index(spark, sf_dir, _ivf_index_spec(n_cells, seed))
@@ -930,8 +945,6 @@ def _pq_corpus(spark: SparkSession, sf_dir: str, m: int = 8, ks: int = 16):
     and persists its code rows, so the resident and indexed search paths
     return identical rows by construction. A superseded entry's codes are
     unpersisted on eviction."""
-    from aws_data_pipeline_spark.sources.parquet import index_root
-
     def build():
         idx = index_root(spark, _ensure_index(spark, sf_dir, _pq_index_spec(m, ks)))
         books = similarity.read_pq_codebooks(spark, idx)
@@ -1037,8 +1050,6 @@ def _composed_roots(spark: SparkSession, sf_dir: str, tag: str, ensure):
     miss re-``ensure``s instead. The codes root's artifact (PQ codebooks,
     SQ8 stats) is memoized per resolved root by the search itself
     (:func:`artifact_memo`), so warm probes skip that collect too."""
-    from aws_data_pipeline_spark.sources.parquet import index_root, zone_exists
-
     return app_memo(
         spark, ("composed", sf_dir, tag), _src_state(spark, sf_dir, "embeddings"),
         lambda: tuple(index_root(spark, p) for p in ensure()),

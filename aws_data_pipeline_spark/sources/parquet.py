@@ -297,21 +297,24 @@ def zone_listing_state(spark: SparkSession, path: str) -> tuple[int, int, int]:
 
 
 # -- Versioned index store -------------------------------------------------
-# Rebuild-in-place (truncate-then-overwrite) is fine for derived data in a
-# maintenance window, but an index serving probes during a retrain or
-# compaction needs an ATOMIC swap: the rebuild writes a fresh version
-# directory (``path/v<N>``) and then commits it by creating ONE empty
-# marker file ``path/_ptr/<N>`` — a single file create (atomic on
-# HDFS/local, one PUT on object stores), never a truncate. Readers resolve
-# the active root through :func:`index_root`: highest committed marker
-# wins; no marker at all means the unversioned layout (fresh builds write
-# sub-tables directly under ``path``). A crash mid-rebuild leaves the old
-# version fully intact and still being served; re-running the rebuild
-# writes a new candidate directory. Only the ``_ptr`` marker directory is
-# hidden from a :func:`zone_exists` probe of ``path``; the ``v<N>``
-# version directories are plain names whose data files such a probe
-# counts. Probe a sub-table through :func:`index_has`, which resolves the
-# active root, never through a raw sub-path.
+# Every maintained index (and the CDC tombstone store) has ONE on-disk
+# layout: each build — fresh build, rebuild, retrain, delete, compaction —
+# writes a candidate directory ``path/v<N>`` and then commits it by
+# creating ONE empty marker file ``path/_ptr/<N>``: a single file create
+# (atomic on HDFS/local, one PUT on object stores), never a truncate.
+# Readers resolve the active root through :func:`index_root`: the highest
+# committed marker wins. One crash contract follows: an uncommitted
+# candidate is invisible. A crash mid-build leaves the previous version
+# (or, for a first build, no index at all) being served, and the re-run
+# writes the candidate again. A path with no committed marker reads as
+# "no index" — including a directory whose sub-tables sit straight under
+# ``path`` (the layout of builds before this store was versioned), whose
+# files are inert until a build commits ``v1`` beside them. Only the
+# ``_ptr`` marker directory is hidden from a :func:`zone_exists` probe of
+# ``path``; the ``v<N>`` version directories are plain names whose data
+# files such a probe counts. Probe a sub-table through :func:`index_has`,
+# which resolves the active root, never through a raw sub-path. This
+# module is the only one that spells the layout.
 
 _PTR_DIR = "_ptr"
 _BUCKETS_DIR = "_buckets"
@@ -346,25 +349,45 @@ def _create_marker(spark: SparkSession, marker_dir: str, value: int) -> None:
 
 def index_active_version(spark: SparkSession, path: str) -> int | None:
     """Highest committed version of the index at ``path`` (max numeric
-    marker name under ``path/_ptr``), or None for the unversioned layout."""
+    marker name under ``path/_ptr``), or None when no build committed."""
     return _max_numeric_marker(spark, f"{path}/{_PTR_DIR}")
 
 
+def _version_root(path: str, version: int) -> str:
+    return f"{path}/v{version}"
+
+
+def _split_version_root(root: str) -> tuple[str, int | None]:
+    """(parent, N) of a path spelled ``parent/v<N>``; N is None for any
+    other spelling."""
+    parent, _, name = root.rstrip("/").rpartition("/")
+    n = int(name[1:]) if name[:1] == "v" and name[1:].isdigit() else None
+    return parent, n
+
+
 def index_root(spark: SparkSession, path: str) -> str:
-    """Active data root of an index: ``path`` itself (unversioned fresh
-    build) or ``path/v<N>`` for the highest committed version. Every
-    probe/append/maintenance read of a maintained index resolves through
-    this — never hardcode a sub-table path."""
+    """Active data root of an index: ``path/v<N>`` for the highest
+    committed version. A committed version root resolves to itself, so a
+    caller may hand an already-resolved root to any probe. With no
+    committed version it names ``path/v0``, which no build writes, so
+    every read through it finds no index. Every probe/append/maintenance
+    read of a maintained index resolves through this — never hardcode a
+    sub-table path."""
     v = index_active_version(spark, path)
-    return path if v is None else f"{path}/v{v}"
+    if v is not None:
+        return _version_root(path, v)
+    parent, n = _split_version_root(path)
+    if n is not None and n in _numeric_markers(spark, f"{parent}/{_PTR_DIR}"):
+        return path
+    return _version_root(path, 0)
 
 
 def index_next_root(spark: SparkSession, path: str) -> tuple[str, int]:
-    """(candidate directory, version number) for the next rebuild of the
+    """(candidate directory, version number) for the next build of the
     index at ``path``. Writing into it is invisible to readers until
     :func:`commit_index_version` creates the marker."""
     v = (index_active_version(spark, path) or 0) + 1
-    return f"{path}/v{v}", v
+    return _version_root(path, v), v
 
 
 def commit_index_version(spark: SparkSession, path: str, version: int) -> None:
@@ -372,6 +395,14 @@ def commit_index_version(spark: SparkSession, path: str, version: int) -> None:
     marker file ``path/_ptr/<version>``. Old version serves until this
     returns; the new one after."""
     _create_marker(spark, f"{path}/{_PTR_DIR}", version)
+
+
+def index_is_version_root(spark: SparkSession, path: str, root: str) -> bool:
+    """True when the qualified ``root`` names a version directory of the
+    index at ``path`` — committed or superseded, so a root recorded by a
+    derived layout still maps back to its index after the index flips."""
+    parent, n = _split_version_root(root)
+    return n is not None and parent == qualified_path(spark, path)
 
 
 def zone_bucket_count(spark: SparkSession, path: str) -> int | None:
@@ -858,18 +889,12 @@ def index_compaction_due(
     )
 
 
-def gc_index_versions(
-    spark: SparkSession, path: str, subs: tuple[str, ...] = ()
-) -> list[int]:
+def gc_index_versions(spark: SparkSession, path: str) -> list[int]:
     """Delete superseded generations of a versioned index: every
-    ``path/v<N>`` except the active one, plus — when ``subs`` names the
-    family's sub-tables and a versioned generation IS active — the
-    legacy unversioned sub-tables still sitting at the root (the kept
-    generation of the FIRST flip, which no later flip revisits). Targets
-    arise from the keep-one-generation commit contract
-    (``finish_index_build``) and from crashes (an abandoned uncommitted
-    candidate, or inert leftovers between commit and cleanup). Returns
-    the version numbers removed (legacy root cleanup reports as 0).
+    ``path/v<N>`` except the active one. Targets arise from the
+    keep-one-generation commit contract (``finish_index_build``) and
+    from crashes (an abandoned uncommitted candidate, or inert leftovers
+    between commit and cleanup). Returns the version numbers removed.
     OWNER-scheduled, like retrain/compaction policy: run it only when no
     rebuild is in flight and no in-flight probe still holds pre-flip
     scans, since an uncommitted candidate directory is indistinguishable
@@ -880,78 +905,28 @@ def gc_index_versions(
     active = index_active_version(spark, path)
     removed: list[int] = []
     for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if (
-            st.isDirectory()
-            and name.startswith("v")
-            and name[1:].isdigit()
-            and int(name[1:]) != active
-        ):
+        _, n = _split_version_root(st.getPath().getName())
+        if st.isDirectory() and n is not None and n != active:
             fs.delete(st.getPath(), True)
-            removed.append(int(name[1:]))
-    if active is not None and subs:
-        legacy = [s for s in subs if zone_exists(spark, f"{path}/{s}")]
-        for s in legacy:
-            delete_zone(spark, f"{path}/{s}")
-        if legacy:
-            removed.append(0)
+            removed.append(n)
     return sorted(removed)
 
 
-# -- Versioned-build write protocol ---------------------------------------
-# The WRITE side of the versioned index store above (resolve a candidate
-# root, commit + generation-keeping cleanup) — one protocol shared by every
-# maintained index family (text LSH/k-gram, embedding LSH/IVF/PQ/SQ8), kept
-# next to the marker primitives it is built from.
-
-
-def resolve_build_root(
-    spark, path: str, force_new_version: bool
-) -> tuple[str, int | None, str | None]:
-    """(write root, version to commit, superseded root) for an index
-    (re)build at ``path``. Only a build over a genuinely EMPTY path
-    writes straight under it (meta-last stays its crash contract); any
-    build over an already-active index — versioned via the pointer
-    marker, or the legacy unversioned layout detected by a committed
-    data file under ``path`` — writes a new ``v<N>`` candidate that
-    readers cannot see until the caller commits it (see
-    sources.parquet's versioned-index store). Without the
-    data-existence probe, a rebuild of a never-yet-versioned index (a
-    stale-corpus rebuild, not just retrains) would truncate it in place
-    under live probes."""
-    v = index_active_version(spark, path)
-    if v is None and not force_new_version and not zone_exists(spark, path):
-        return path, None, None
-    new_root, new_v = index_next_root(spark, path)
-    old_root = path if v is None else f"{path}/v{v}"
-    return new_root, new_v, old_root
-
-
-def finish_index_build(
-    spark, path: str, new_v: int | None, old_root: str | None, subs: tuple[str, ...]
-) -> None:
-    """Commit a versioned rebuild (single marker-file create — the atomic
-    flip; probes resolve the old root until it lands), KEEP the
-    immediately-superseded root for in-flight readers (a probe that
-    resolved the old root before the flip still holds lazy scans over
-    its files — deleting it at commit time would abort them mid-read, or
-    silently truncate them under ignoreMissingFiles), and delete
-    anything two or more flips behind: no reader that started after the
-    PREVIOUS commit can reference those. Steady-state storage is
-    therefore ≤ 2× one index; :func:`sources.parquet.gc_index_versions`
-    collects the kept generation (and crash orphans) in owner-scheduled
-    quiet periods."""
-    if new_v is None:
-        return
+def finish_index_build(spark, path: str, new_v: int) -> None:
+    """Commit a build written into :func:`index_next_root`'s candidate
+    (single marker-file create — the atomic flip; probes resolve the old
+    root until it lands), KEEP the immediately-superseded version for
+    in-flight readers (a probe that resolved the old root before the
+    flip still holds lazy scans over its files — deleting it at commit
+    time would abort them mid-read, or silently truncate them under
+    ignoreMissingFiles), and delete anything two or more flips behind:
+    no reader that started after the PREVIOUS commit can reference
+    those. Steady-state storage is therefore ≤ 2× one index;
+    :func:`gc_index_versions` collects the kept generation (and crash
+    orphans) in owner-scheduled quiet periods."""
     commit_index_version(spark, path, new_v)
-    if old_root is None or old_root == path:
-        return  # first flip over a legacy/empty root: nothing older exists
-    old_v = int(old_root.rsplit("/v", 1)[1])
-    # two-generations-behind cleanup: legacy root sub-tables, then v<N>
-    for s in subs:
-        delete_zone(spark, f"{path}/{s}")
-    for n in range(1, old_v):
-        delete_zone(spark, f"{path}/v{n}")
+    for n in range(1, new_v - 1):
+        delete_zone(spark, _version_root(path, n))
 
 
 def copy_zone(spark, src: str, dst: str) -> None:
@@ -980,7 +955,7 @@ def compact_index(
     }
     for sub in copy:
         copy_zone(spark, f"{old_root}/{sub}", f"{new_root}/{sub}")
-    finish_index_build(spark, path, new_v, old_root, (*rewrite, *copy))
+    finish_index_build(spark, path, new_v)
     return written
 
 

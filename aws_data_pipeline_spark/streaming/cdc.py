@@ -47,11 +47,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_data_pipeline_spark.sources.parquet import (
-    _hadoop_fs,
-    _top_level_data_entries,
     commit_index_version,
     delete_from_zone,
     gc_index_versions,
+    index_active_version,
     index_next_root,
     index_root,
     merge_into_zone,
@@ -65,13 +64,12 @@ _OPS = ("upsert", "delete")
 
 
 def _tomb_root(spark: SparkSession, zone_path: str) -> str:
-    """Active root of the zone's tombstone store. Fresh zones append
-    tombstones straight under ``zone/_cdc_tombstones`` (the unversioned
-    layout); the first :func:`expire_cdc_tombstones` flips the store to
-    the versioned pointer-marker layout (``_cdc_tombstones/v<N>`` +
-    ``_ptr``), after which every append/read resolves through the
-    committed marker — the same single-file-create commit idiom as the
-    maintained indexes, so expiry can never truncate the live set."""
+    """Active root of the zone's tombstone store — the maintained
+    indexes' versioned layout (sources.parquet's versioned index store):
+    the first delete commits an empty first version before it appends,
+    every append/read resolves through the committed marker, and
+    :func:`expire_cdc_tombstones` writes the kept set as the next
+    version, so expiry can never truncate the live set."""
     return index_root(spark, f"{zone_path}/{_TOMB}")
 
 
@@ -199,6 +197,12 @@ def apply_cdc_batch(
                 spark, zone_path, deletes.select(*on), key_cols,
                 partition_cols,
             )
+        store = f"{zone_path}/{_TOMB}"
+        if index_active_version(spark, store) is None:
+            # the store's first version is committed empty, so appends,
+            # reads and expiry all go through one versioned layout
+            tomb, first = index_next_root(spark, store)
+            commit_index_version(spark, store, first)
         deletes.select(*on, seq_col).write.mode("append").partitionBy(
             *partition_cols
         ).parquet(tomb)
@@ -263,15 +267,14 @@ def expire_cdc_tombstones(
 
     Tombstones are a correctness guard, not derived data, so expiry is a
     VERSIONED SWAP, never a truncate-then-overwrite: the kept set lands
-    in a fresh ``_cdc_tombstones/v<N>`` candidate directory and is
+    in the store's next version directory (``index_next_root``) and is
     committed by the atomic single-marker-file create
     (``commit_index_version``). A crash anywhere before the commit
     leaves the full previous set being served — the failure mode where
     an in-place overwrite would silently lose EVERY tombstone (not just
     expired ones) and re-open the delete-resurrection window. Superseded
-    generations (and, after the first flip, the legacy unversioned
-    partition directories) are cleaned AFTER the commit; a crash between
-    commit and cleanup leaves inert extra files only."""
+    generations are cleaned AFTER the commit; a crash between commit and
+    cleanup leaves inert extra files only."""
     store = f"{zone_path}/{_TOMB}"
     active = _tomb_root(spark, zone_path)
     if not zone_exists(spark, active):
@@ -284,12 +287,5 @@ def expire_cdc_tombstones(
     # read stays partition-pruned; invisible to readers until the commit
     kept.write.mode("overwrite").partitionBy(*partition_cols).parquet(candidate)
     commit_index_version(spark, store, version)
-    # post-commit cleanup: superseded v<K> dirs, plus the unversioned
-    # legacy partition dirs left at the store root by the first flip
-    gc_index_versions(spark, store)
-    if active == store:
-        jvm, _, fs = _hadoop_fs(spark, store)
-        for name in _top_level_data_entries(spark, store):
-            if not (name.startswith("v") and name[1:].isdigit()):
-                fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store}/{name}"), True)
+    gc_index_versions(spark, store)  # post-commit: superseded versions
     return n

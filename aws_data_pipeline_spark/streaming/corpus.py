@@ -113,19 +113,19 @@ class _Index(NamedTuple):
     bootstrap: Callable
 
 
-def _gc(spark: SparkSession, estate: dict) -> None:
+def _gc(spark: SparkSession, estate: list) -> None:
     """Collect the superseded generations of every configured index of an
-    estate, given as ``{path or None: sub-tables}``."""
-    for path, subs in estate.items():
+    estate, given as its index paths (None for an unconfigured one)."""
+    for path in estate:
         if path is not None:
-            gc_index_versions(spark, path, subs)
+            gc_index_versions(spark, path)
 
 
 def _ingest(
     spark: SparkSession, source: tuple, checkpoint_path: str, *,
     corpus_path: str, corpus_buckets: int, id_col: str, prep, in_batch_pairs,
     probe, threshold: float, index_path: str, append_index, build_index,
-    secondaries: list[_Index], estate: dict, gc_superseded_versions: bool,
+    secondaries: list[_Index], estate: list, gc_superseded_versions: bool,
 ) -> None:
     """One availableNow run of the maintenance loop over ``source``
     (format, path, schema); the steps are the module docstring's.
@@ -244,7 +244,7 @@ def _erase_corpus(
 
 def _forget(
     spark: SparkSession, ids: DataFrame, id_col: str, key: str,
-    corpus_path: str | None, estate: dict, gc_superseded: bool, erase_indexes,
+    corpus_path: str | None, estate: list, gc_superseded: bool, erase_indexes,
 ) -> dict[str, int]:
     """The erasure shared by both estates, in the module docstring's order:
     ``erase_indexes(doomed)`` (per-surface counts), the superseded
@@ -256,10 +256,6 @@ def _forget(
     if corpus_path is not None and zone_exists(spark, corpus_path):
         out["corpus"] = _erase_corpus(spark, corpus_path, doomed, key)
     return out
-
-
-def _text_estate(index_path: str | None, kgram_index_path: str | None) -> dict:
-    return {index_path: dedup._TEXT_LSH_SUBS, kgram_index_path: dedup._KGRAM_SUBS}
 
 
 def append_to_lsh_text_index(
@@ -442,7 +438,7 @@ def incremental_corpus_ingest(
                 lambda full, path: dedup.build_kgram_index(full, path, k=kgram_k),
             )
         ],
-        estate=_text_estate(index_path, kgram_index_path),
+        estate=[index_path, kgram_index_path],
         gc_superseded_versions=gc_superseded_versions,
     )
 
@@ -499,14 +495,11 @@ def forget_documents(
                 .join(doomed, "doc_id", "left_anti")
                 .localCheckpoint(eager=True)  # rebuild target feeds on the zone
             )
-            dedup.build_kgram_index(
-                survivors, kgram_index_path, k=k, force_new_version=True
-            )
+            dedup.build_kgram_index(survivors, kgram_index_path, k=k)
             out["kgram_rebuilt"] = survivors.count()
         return out
 
-    estate = _text_estate(index_path, kgram_index_path)
     return _forget(
-        spark, ids, id_col, "doc_id", corpus_path, estate, gc_superseded,
-        erase_indexes,
+        spark, ids, id_col, "doc_id", corpus_path, [index_path, kgram_index_path],
+        gc_superseded, erase_indexes,
     )

@@ -22,9 +22,8 @@ from pyspark.sql import types as T
 from aws_data_pipeline_spark.operators import similarity
 from aws_data_pipeline_spark.sources.parquet import (
     index_has,
+    index_is_version_root,
     index_root,
-    qualified_path,
-    zone_exists,
 )
 from aws_data_pipeline_spark.streaming.corpus import _forget, _Index, _ingest
 
@@ -34,18 +33,6 @@ VEC_SCHEMA = T.StructType(
         T.StructField("embedding", T.ArrayType(T.FloatType())),
     ]
 )
-
-
-def _estate(
-    index_path, ivf_index_path, pq_index_path, sq8_index_path, cell_codes_path
-) -> dict:
-    return {
-        index_path: similarity._LSH.subs,
-        ivf_index_path: similarity._IVF_SUBS,
-        pq_index_path: similarity._PQ.subs,
-        sq8_index_path: similarity._SQ8.subs,
-        cell_codes_path: similarity._CELL_CODES_SUBS,
-    }
 
 
 def _refresh_cell_codes(spark, path: str, ivf_path: str, codes_path: str) -> None:
@@ -140,10 +127,10 @@ def incremental_embedding_ingest(
         )
         return uniq, pairs
 
-    estate = _estate(
+    estate = [
         index_path, ivf_index_path, pq_index_path, sq8_index_path,
         ivfpq_cell_codes_path,
-    )
+    ]
     _ingest(
         spark, ("parquet", vecs_path, VEC_SCHEMA), checkpoint_path,
         corpus_path=corpus_path, corpus_buckets=corpus_buckets, id_col="vec_id",
@@ -241,28 +228,27 @@ def forget_vectors(
         }
         # derived layout: the erased codes LIVE in it until it is rebuilt
         # from the now-clean sources, so the rebuild is part of the erasure
-        if ivfpq_cell_codes_path is not None and ivf_index_path is not None:
+        if (
+            ivfpq_cell_codes_path is not None
+            and ivf_index_path is not None
+            and index_has(spark, ivfpq_cell_codes_path, "meta")
+        ):
             # the layout is codes-GENERIC (PQ or SQ8 composes) — its OWN
             # meta records which codes index it was built from; discover
             # the source there instead of guessing, or a two-family estate
             # would rebuild the layout against the wrong index and every
             # later probe would reject it
             cc_meta = f"{index_root(spark, ivfpq_cell_codes_path)}/meta"
-            codes_src = None
-            if zone_exists(spark, cc_meta):
-                stored = spark.read.parquet(cc_meta).collect()[0].pq_root
-                for cand in (pq_index_path, sq8_index_path):
-                    if cand is None:
-                        continue
-                    q = qualified_path(spark, cand)
-                    if stored == q or stored.startswith(f"{q}/v"):
-                        codes_src = cand
-                        break
-            else:
-                # half-built layout (no committed meta): unambiguous only
-                # with a single candidate
-                cands = [p for p in (pq_index_path, sq8_index_path) if p]
-                codes_src = cands[0] if len(cands) == 1 else None
+            stored = spark.read.parquet(cc_meta).collect()[0].pq_root
+            codes_src = next(
+                (
+                    cand
+                    for cand in (pq_index_path, sq8_index_path)
+                    if cand is not None
+                    and index_is_version_root(spark, cand, stored)
+                ),
+                None,
+            )
             if codes_src is None:
                 raise ValueError(
                     "forget_vectors: cannot determine which codes index the "
@@ -275,10 +261,10 @@ def forget_vectors(
             )
         return out
 
-    estate = _estate(
+    estate = [
         index_path, ivf_index_path, pq_index_path, sq8_index_path,
         ivfpq_cell_codes_path,
-    )
+    ]
     return _forget(
         spark, ids, id_col, "vec_id", corpus_path, estate, gc_superseded,
         erase_indexes,

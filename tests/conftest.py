@@ -137,3 +137,12 @@ def coalesced(spark, request):
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def _sub(spark, path, sub):
+    """Active-root sub-table path of the index at ``path``: every build
+    writes its sub-tables into a committed version directory, so direct
+    sub-table reads and writes must resolve the same root the probes do."""
+    from aws_data_pipeline_spark.sources.parquet import index_root
+
+    return f"{index_root(spark, path)}/{sub}"

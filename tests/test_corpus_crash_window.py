@@ -21,6 +21,7 @@ from aws_data_pipeline_spark.streaming.corpus import incremental_corpus_ingest
 from aws_data_pipeline_spark.streaming.embeddings import (
     incremental_embedding_ingest,
 )
+from tests.conftest import _sub
 
 BUCKETS = 8
 TOKENS = 24
@@ -136,14 +137,14 @@ def test_redelivery_backfills_crash_between_corpus_and_indexes(
     assert spark.read.parquet(corpus).count() == len(expected)
     assert _ids(spark, corpus, id_col) == expected
     for sub, col in primary.items():
-        assert _ids(spark, f"{index}/{sub}", col) == expected, sub
+        assert _ids(spark, _sub(spark, index, sub), col) == expected, sub
     if estate == "text":  # docs share no token: 8-gram hashes per doc
-        hashes = spark.read.parquet(f"{second}/hashes")
+        hashes = spark.read.parquet(_sub(spark, second, "hashes"))
         assert hashes.count() == len(expected) * (TOKENS - 8 + 1)
     else:
-        ivf = spark.read.parquet(f"{second}/corpus")
+        ivf = spark.read.parquet(_sub(spark, second, "corpus"))
         assert ivf.count() == len(expected)
-        assert _ids(spark, f"{second}/corpus", "neighbor_id") == expected
+        assert _ids(spark, _sub(spark, second, "corpus"), "neighbor_id") == expected
 
     # a further re-run finds everything in place and writes no file
     written = _files(corpus, index, second)

@@ -26,15 +26,7 @@ from aws_data_pipeline_spark.operators.similarity import (
     ivf_topk_indexed,
     nearest_cell,
 )
-
-
-def _sub(spark, path, sub):
-    """Active-root sub-table path: maintenance (retrain/compaction) moves
-    an index's data into committed version directories, so direct
-    sub-table reads must resolve the same root the probes do."""
-    from aws_data_pipeline_spark.sources.parquet import index_root
-
-    return f"{index_root(spark, path)}/{sub}"
+from tests.conftest import _sub
 
 
 def _probe_pairs(spark, new, idx, threshold=0.45):
@@ -66,11 +58,11 @@ def test_embedding_lsh_append_equals_fresh_build(spark, sf_dir, tmp_path):
     assert _probe_pairs(spark, new, appended) == _probe_pairs(spark, new, fresh)
 
     # idempotency: a replayed append adds no rows to either sub-table
-    nvec = spark.read.parquet(f"{appended}/vectors").count()
-    nband = spark.read.parquet(f"{appended}/bands").count()
+    nvec = spark.read.parquet(_sub(spark, appended, "vectors")).count()
+    nband = spark.read.parquet(_sub(spark, appended, "bands")).count()
     append_to_embedding_lsh_index(batch, appended)
-    assert spark.read.parquet(f"{appended}/vectors").count() == nvec
-    assert spark.read.parquet(f"{appended}/bands").count() == nband
+    assert spark.read.parquet(_sub(spark, appended, "vectors")).count() == nvec
+    assert spark.read.parquet(_sub(spark, appended, "bands")).count() == nband
 
 
 def test_ivf_append_assignment_identity_idempotency_and_drift(
@@ -88,14 +80,14 @@ def test_ivf_append_assignment_identity_idempotency_and_drift(
 
     before = {
         (r.neighbor_id, r.cell)
-        for r in spark.read.parquet(f"{idx}/corpus")
+        for r in spark.read.parquet(_sub(spark, idx, "corpus"))
         .select("neighbor_id", "cell")
         .collect()
     }
     n = append_to_ivf_index(spark, batch, idx)
     assert n == batch.count()
 
-    after = spark.read.parquet(f"{idx}/corpus").select("neighbor_id", "cell")
+    after = spark.read.parquet(_sub(spark, idx, "corpus")).select("neighbor_id", "cell")
     got = {(r.neighbor_id, r.cell) for r in after.collect()}
     # every pre-append assignment survives untouched
     assert before <= got
@@ -103,7 +95,7 @@ def test_ivf_append_assignment_identity_idempotency_and_drift(
     cents = [
         [float(x) for x in r.centroid]
         for r in sorted(
-            spark.read.parquet(f"{idx}/centroids").collect(),
+            spark.read.parquet(_sub(spark, idx, "centroids")).collect(),
             key=lambda r: r.cell,
         )
     ]
@@ -121,7 +113,7 @@ def test_ivf_append_assignment_identity_idempotency_and_drift(
 
     # replayed append is a no-op
     assert append_to_ivf_index(spark, batch, idx) == 0
-    assert spark.read.parquet(f"{idx}/corpus").count() == len(got)
+    assert spark.read.parquet(_sub(spark, idx, "corpus")).count() == len(got)
 
     # drift accounting: built_n == |corpus0|, appended_n == |batch|
     rows = ivf_index_drift(spark, idx).collect()
@@ -231,7 +223,7 @@ def test_incremental_embedding_ingest_rejects_cross_batch_neardups(
     assert {r.vec_id for r in spark.read.parquet(corpus).collect()} == {1, 2, 4}
     # index holds exactly the accepted vectors
     assert {
-        r.id for r in spark.read.parquet(f"{index}/vectors").collect()
+        r.id for r in spark.read.parquet(_sub(spark, index, "vectors")).collect()
     } == {1, 2, 4}
 
     # lost checkpoint: everything re-delivers; survivors self-match the
@@ -240,7 +232,7 @@ def test_incremental_embedding_ingest_rejects_cross_batch_neardups(
         spark, str(inbox), corpus, index, str(tmp_path / "c2")
     )
     assert spark.read.parquet(corpus).count() == 3
-    assert spark.read.parquet(f"{index}/vectors").count() == 3
+    assert spark.read.parquet(_sub(spark, index, "vectors")).count() == 3
 
 
 def test_incremental_embedding_ingest_maintains_ivf(spark, tmp_path):
@@ -275,7 +267,7 @@ def test_incremental_embedding_ingest_maintains_ivf(spark, tmp_path):
         ivf_index_path=ivf, ivf_cells=4,
     )
     got = {
-        r.neighbor_id for r in spark.read.parquet(f"{ivf}/corpus").collect()
+        r.neighbor_id for r in spark.read.parquet(_sub(spark, ivf, "corpus")).collect()
     }
     assert got == set(range(8)) | {10, 11}
 
@@ -288,7 +280,7 @@ def test_incremental_embedding_ingest_maintains_ivf(spark, tmp_path):
         ivf_index_path=ivf, ivf_cells=4,
     )
     got = {
-        r.neighbor_id for r in spark.read.parquet(f"{ivf}/corpus").collect()
+        r.neighbor_id for r in spark.read.parquet(_sub(spark, ivf, "corpus")).collect()
     }
     assert got == set(range(8)) | {10, 11, 20}
     from aws_data_pipeline_spark.operators.similarity import ivf_index_drift
@@ -368,7 +360,9 @@ def test_ivf_retrain_resets_drift_and_keeps_exactness(spark, sf_dir, tmp_path):
 
     ids_before = {
         r.neighbor_id
-        for r in spark.read.parquet(f"{idx}/corpus").select("neighbor_id").collect()
+        for r in spark.read.parquet(_sub(spark, idx, "corpus"))
+        .select("neighbor_id")
+        .collect()
     }
     stats = retrain_ivf_index(spark, idx)
     assert stats["n_vectors"] == len(ids_before)
@@ -488,11 +482,12 @@ def test_pq_index_build_probe_append_retrain(spark, sf_dir, tmp_path):
 
     # append: idempotent, and appended vectors become findable
     S.append_to_pq_index(extra, idx)
-    n_codes = spark.read.parquet(f"{idx}/codes").count()
+    n_codes = spark.read.parquet(_sub(spark, idx, "codes")).count()
     S.append_to_pq_index(extra, idx)  # re-delivery is a no-op
-    assert spark.read.parquet(f"{idx}/codes").count() == n_codes
+    assert spark.read.parquet(_sub(spark, idx, "codes")).count() == n_codes
     assert n_codes == e.count()
-    ids = {r.id for r in spark.read.parquet(f"{idx}/vectors").select("id").collect()}
+    vectors = spark.read.parquet(_sub(spark, idx, "vectors"))
+    ids = {r.id for r in vectors.select("id").collect()}
     assert {r.vec_id for r in extra.select("vec_id").collect()} <= ids
 
     # post-append probe can return appended vectors (and stays well-formed)
@@ -556,7 +551,7 @@ def test_incremental_embedding_ingest_maintains_pq(spark, tmp_path):
         pq_index_path=pq,
     )
     books = S.read_pq_codebooks(spark, pq)
-    got = {r.id for r in spark.read.parquet(f"{pq}/codes").collect()}
+    got = {r.id for r in spark.read.parquet(_sub(spark, pq, "codes")).collect()}
     assert got == set(range(8)) | {10, 11}
 
     # a further batch appends codes under the SAME stored codebooks
@@ -568,7 +563,7 @@ def test_incremental_embedding_ingest_maintains_pq(spark, tmp_path):
         pq_index_path=pq, pq_retrain=True,
     )
     assert S.read_pq_codebooks(spark, pq) == books  # growth < 2x: no retrain
-    got = {r.id for r in spark.read.parquet(f"{pq}/codes").collect()}
+    got = {r.id for r in spark.read.parquet(_sub(spark, pq, "codes")).collect()}
     assert got == set(range(8)) | {10, 11, 20}
     # probe over the stream-maintained index stays well-formed
     q = spark.createDataFrame([(10, _vec(10))], schema)
@@ -632,7 +627,7 @@ def test_compact_pq_index_preserves_probe_results(spark, sf_dir, tmp_path):
         (r.query_id, r.neighbor_id, r.rank)
         for r in S.pq_topk_indexed(spark, q, idx, k=5, rerank=30).collect()
     }
-    files_before = len(glob.glob(f"{idx}/codes/*.parquet"))
+    files_before = len(glob.glob(f"{_sub(spark, idx, 'codes')}/*.parquet"))
     written = S.compact_embedding_indexes(spark, pq_index_path=idx)
     assert set(written) == {"pq_codes", "pq_vectors"}
     after = {
@@ -643,14 +638,19 @@ def test_compact_pq_index_preserves_probe_results(spark, sf_dir, tmp_path):
     assert len(glob.glob(f"{_sub(spark, idx, 'codes')}/*.parquet")) <= files_before
 
 
-def test_index_version_swap_serves_old_until_commit(spark, sf_dir, tmp_path):
+def test_index_version_swap_serves_old_until_commit(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """The atomic-swap contract itself: an UNCOMMITTED candidate version
     (exactly the state a crash mid-retrain leaves behind) is invisible —
     probes keep returning the old index's rows — and the single
     marker-file commit flips every read path to the new version at once.
     No truncation window exists in which a probe could see half-written
     state or new codes under old codebooks."""
+    import pytest
+
     from aws_data_pipeline_spark.operators import similarity as S
+    from aws_data_pipeline_spark.sources import parquet
     from aws_data_pipeline_spark.sources.parquet import (
         commit_index_version,
         index_active_version,
@@ -674,15 +674,22 @@ def test_index_version_swap_serves_old_until_commit(spark, sf_dir, tmp_path):
     assert before and all(n % 2 == 0 for _, n, _ in before)
 
     # mid-rebuild state: a full candidate version exists but no commit
-    # marker (a crashed retrain) — every probe still serves the old build
-    S.build_pq_index(odd, f"{idx}/v1", m=8, ks=16)
-    assert index_active_version(spark, idx) is None
+    # marker (a rebuild that died at the commit) — every probe still
+    # serves the old build
+    def crash(*_a):
+        raise RuntimeError("crash at commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(parquet, "commit_index_version", crash)
+        with pytest.raises(RuntimeError, match="crash at commit"):
+            S.build_pq_index(odd, idx, m=8, ks=16)
+    assert index_active_version(spark, idx) == 1
     assert probe() == before
 
     # the flip is ONE marker-file create; afterwards every read path —
     # probe, codebooks, retrain-due accounting — resolves the new version
-    commit_index_version(spark, idx, 1)
-    assert index_root(spark, idx) == f"{idx}/v1"
+    commit_index_version(spark, idx, 2)
+    assert index_root(spark, idx) == f"{idx}/v2"
     after = probe()
     assert after and all(n % 2 == 1 for _, n, _ in after)
 
@@ -708,28 +715,28 @@ def test_retrain_versions_index_and_cleans_superseded(spark, sf_dir, tmp_path):
     S.append_to_pq_index(e.filter(F.col("vec_id") % 3 == 0), idx)
     n_all = e.count()
 
+    assert index_active_version(spark, idx) == 1
     out = S.retrain_pq_index(spark, idx)
     assert out["n_vectors"] == n_all
-    assert index_active_version(spark, idx) == 1
-    # the legacy unversioned sub-tables are the KEPT previous generation
+    assert index_active_version(spark, idx) == 2
+    # the build's v1 is the KEPT previous generation
     for sub in ("vectors", "codes", "codebooks", "meta"):
-        assert zone_exists(spark, f"{idx}/{sub}")
+        assert zone_exists(spark, f"{idx}/v1/{sub}")
 
     S.retrain_pq_index(spark, idx)
-    assert index_active_version(spark, idx) == 2
-    # now the legacy root is two flips behind -> cleaned at commit;
-    # v1 is the kept previous generation
-    for sub in ("vectors", "codes", "codebooks", "meta"):
-        assert not zone_exists(spark, f"{idx}/{sub}")
-    assert zone_exists(spark, f"{idx}/v1")
+    assert index_active_version(spark, idx) == 3
+    # now v1 is two flips behind -> cleaned at commit; v2 is the kept
+    # previous generation
+    assert not zone_exists(spark, f"{idx}/v1")
+    assert zone_exists(spark, f"{idx}/v2")
     q = e.filter(F.col("vec_id") < 5)
     rows = S.pq_topk_indexed(spark, q, idx, k=3, rerank=10).collect()
     assert rows and all(1 <= r.rank <= 3 for r in rows)
-    # every vector still present under v2
+    # every vector still present under v3
     assert spark.read.parquet(_sub(spark, idx, "codes")).count() == n_all
     # owner-scheduled GC removes the kept generation, probe unchanged
-    assert gc_index_versions(spark, idx) == [1]
-    assert not zone_exists(spark, f"{idx}/v1")
+    assert gc_index_versions(spark, idx) == [2]
+    assert not zone_exists(spark, f"{idx}/v2")
     rows2 = S.pq_topk_indexed(spark, q, idx, k=3, rerank=10).collect()
     assert {(r.query_id, r.neighbor_id, r.rank) for r in rows2} == {
         (r.query_id, r.neighbor_id, r.rank) for r in rows
@@ -769,9 +776,9 @@ def test_sq8_index_build_probe_append_retrain_growth_and_drift(
 
     # append: idempotent, and appended vectors become findable
     S.append_to_sq8_index(extra, idx)
-    n_codes = spark.read.parquet(f"{idx}/codes").count()
+    n_codes = spark.read.parquet(_sub(spark, idx, "codes")).count()
     S.append_to_sq8_index(extra, idx)  # re-delivery is a no-op
-    assert spark.read.parquet(f"{idx}/codes").count() == n_codes
+    assert spark.read.parquet(_sub(spark, idx, "codes")).count() == n_codes
     assert n_codes == e.count()
     assert S.read_sq8_stats(spark, idx) == (mins, scales)  # stats fixed
 
@@ -792,7 +799,9 @@ def test_sq8_index_build_probe_append_retrain_growth_and_drift(
     S.append_to_sq8_index(wild, idx)
     codes999 = {
         tuple(r.codes)
-        for r in spark.read.parquet(f"{idx}/codes").filter("id = 999999").collect()
+        for r in spark.read.parquet(_sub(spark, idx, "codes"))
+        .filter("id = 999999")
+        .collect()
     }
     assert codes999 == {tuple([0] * dim)}  # fully saturated low
     drift = S.sq8_range_drift(spark, idx).agg(F.max("drift")).collect()[0][0]
@@ -841,7 +850,7 @@ def test_incremental_embedding_ingest_maintains_sq8(spark, tmp_path):
         sq8_index_path=sq8,
     )
     stats = S.read_sq8_stats(spark, sq8)
-    got = {r.id for r in spark.read.parquet(f"{sq8}/codes").collect()}
+    got = {r.id for r in spark.read.parquet(_sub(spark, sq8, "codes")).collect()}
     assert got == set(range(8)) | {10, 11}
 
     # a further batch appends codes under the SAME stored stats
@@ -853,7 +862,7 @@ def test_incremental_embedding_ingest_maintains_sq8(spark, tmp_path):
         sq8_index_path=sq8, sq8_retrain=False,
     )
     assert S.read_sq8_stats(spark, sq8) == stats
-    got = {r.id for r in spark.read.parquet(f"{sq8}/codes").collect()}
+    got = {r.id for r in spark.read.parquet(_sub(spark, sq8, "codes")).collect()}
     assert got == set(range(8)) | {10, 11, 20}
     q = spark.createDataFrame([(10, _vec(10))], schema)
     out = S.sq8_topk_indexed(spark, q, sq8, k=3, rerank=10).collect()
@@ -882,7 +891,7 @@ def test_compact_sq8_index_preserves_probe_results(spark, sf_dir, tmp_path):
         (r.query_id, r.neighbor_id, r.rank)
         for r in S.sq8_topk_indexed(spark, q, idx, k=5, rerank=30).collect()
     }
-    files_before = len(glob.glob(f"{idx}/codes/*.parquet"))
+    files_before = len(glob.glob(f"{_sub(spark, idx, 'codes')}/*.parquet"))
     written = S.compact_embedding_indexes(spark, sq8_index_path=idx)
     assert set(written) == {"sq8_codes", "sq8_vectors"}
     after = {
@@ -922,7 +931,7 @@ def test_compaction_due_and_version_gc(spark, sf_dir, tmp_path):
     # a tiny budget fires — the signal the owner schedules compaction on
     assert index_compaction_due(spark, idx, subs, max_files=2)
 
-    # retrain twice: two versioned swaps; _finish_index_build cleans the
+    # retrain twice: two versioned swaps; finish_index_build cleans the
     # superseded data, so fabricate a crash orphan (an uncommitted
     # candidate directory) plus verify gc keeps only the active version
     S.retrain_sq8_index(spark, idx)
@@ -1047,36 +1056,6 @@ def test_ivfpq_indexed_composition(spark, sf_dir, tmp_path):
     assert len(got & brute) >= len(adc_only & brute)  # re-rank refines
 
 
-def test_gc_collects_legacy_root_generation(spark, sf_dir, tmp_path):
-    """After the FIRST versioned flip the legacy unversioned sub-tables
-    are the kept generation; gc_index_versions(subs=...) collects them
-    in a quiet period without touching the active version's data."""
-    from aws_data_pipeline_spark.operators import similarity as S
-    from aws_data_pipeline_spark.sources.parquet import (
-        gc_index_versions,
-        zone_exists,
-    )
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    idx = str(tmp_path / "sq8legacy")
-    S.build_sq8_index(e, idx)
-    S.retrain_sq8_index(spark, idx)  # flip 1: legacy subs kept for readers
-    subs = ("vectors", "codes", "stats", "meta")
-    assert all(zone_exists(spark, f"{idx}/{s}") for s in subs)
-    q = e.filter(F.col("vec_id") < 5)
-    before = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in S.sq8_topk_indexed(spark, q, idx, k=3, rerank=10).collect()
-    }
-    assert gc_index_versions(spark, idx, subs=subs) == [0]
-    assert not any(zone_exists(spark, f"{idx}/{s}") for s in subs)
-    after = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in S.sq8_topk_indexed(spark, q, idx, k=3, rerank=10).collect()
-    }
-    assert after == before
-
-
 def test_ivfpq_cell_codes_layout(spark, sf_dir, tmp_path):
     """The materialized inverted-list-with-codes layout: probe through it
     is ROW-IDENTICAL to the two-index path, its codes scan carries
@@ -1176,16 +1155,18 @@ def test_ivfpq_cell_codes_layout(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, after)) == sorted(map(tuple, base_after))
 
 
-def test_ivfpq_cell_codes_half_built_fails_loudly(spark, sf_dir, tmp_path):
-    """A crash between the codes and meta writes leaves a layout with no
-    committed meta: the probe must raise the documented loud staleness
-    ValueError (not a raw parquet path-not-found), the currency check
-    must report not-current, and a rebuild must restore service."""
-    import shutil
-
+def test_ivfpq_cell_codes_uncommitted_layout_reads_absent(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A layout build that dies at its commit leaves no layout: the
+    currency check reports not-current (the owner's rebuild trigger),
+    the probe finds no layout instead of a half-built one, and a rebuild
+    restores service."""
     import pytest
+    from pyspark.errors import AnalysisException
 
     from aws_data_pipeline_spark.operators import similarity as S
+    from aws_data_pipeline_spark.sources import parquet
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     ivf = str(tmp_path / "ivf")
@@ -1193,15 +1174,18 @@ def test_ivfpq_cell_codes_half_built_fails_loudly(spark, sf_dir, tmp_path):
     cc = str(tmp_path / "cc")
     S.build_ivf_index(e, ivf, n_cells=8, seed=42)
     S.build_pq_index(e, pq, m=8, ks=16, seed=42)
-    S.build_ivfpq_cell_codes(spark, ivf, pq, cc)
 
-    # simulate the crash: codes committed, meta gone
-    cc_root = S.index_root(spark, cc)
-    shutil.rmtree(cc_root.removeprefix("file:") + "/meta")
+    def crash(*_a):
+        raise RuntimeError("crash at commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(parquet, "commit_index_version", crash)
+        with pytest.raises(RuntimeError, match="crash at commit"):
+            S.build_ivfpq_cell_codes(spark, ivf, pq, cc)
 
     q = e.filter(F.col("vec_id") < 10)
     assert not S.ivfpq_cell_codes_current(spark, cc, ivf, pq)
-    with pytest.raises(ValueError, match="meta zone missing"):
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
         S.ivfpq_topk_indexed(
             spark, q, ivf, pq, k=5, nprobe=4, rerank=40, cell_codes_path=cc
         )
@@ -1223,6 +1207,7 @@ def test_incremental_embedding_ingest_maintains_cell_codes(spark, tmp_path):
     probes through it stay row-identical to the two-index path. A no-op
     run leaves a current layout untouched."""
     from aws_data_pipeline_spark.operators import similarity as S
+    from aws_data_pipeline_spark.sources.parquet import index_active_version
     from aws_data_pipeline_spark.streaming.embeddings import (
         incremental_embedding_ingest,
     )
@@ -1282,14 +1267,14 @@ def test_incremental_embedding_ingest_maintains_cell_codes(spark, tmp_path):
     assert {30, 31} <= ids_in_layout
 
     # no-op run (nothing new): layout version unchanged (no rebuild)
-    v_before = S.index_active_version(spark, cc)
+    v_before = index_active_version(spark, cc)
     incremental_embedding_ingest(
         spark, str(inbox), corpus, index, str(tmp_path / "c"),
         ivf_index_path=ivf,
         pq_index_path=pq, pq_m=4, pq_ks=8,
         ivfpq_cell_codes_path=cc,
     )
-    assert S.index_active_version(spark, cc) == v_before
+    assert index_active_version(spark, cc) == v_before
 
 
 def test_ivfsq8_indexed_composition(spark, sf_dir, tmp_path):
@@ -1372,10 +1357,9 @@ def test_ingest_start_gc_collects_superseded_versions(spark, tmp_path):
         spark, str(inbox), corpus, index, str(tmp_path / "c"),
         ivf_index_path=ivf, ivf_cells=4,
     )
-    # a retrain supersedes the legacy root build; the root sub-tables are
-    # the kept generation
+    # a retrain supersedes the build's v1, the kept generation
     S.retrain_ivf_index(spark, ivf)
-    assert zone_exists(spark, f"{ivf}/corpus")  # kept for in-flight readers
+    assert zone_exists(spark, f"{ivf}/v1/corpus")  # kept for in-flight readers
     q = spark.createDataFrame([(0, _vec(0))], schema)
     before = sorted(
         map(tuple, S.ivf_topk_indexed(spark, q, ivf, k=3, nprobe=2).collect())
@@ -1388,7 +1372,7 @@ def test_ingest_start_gc_collects_superseded_versions(spark, tmp_path):
         ivf_index_path=ivf,
         gc_superseded_versions=True,
     )
-    assert not zone_exists(spark, f"{ivf}/corpus")
+    assert not zone_exists(spark, f"{ivf}/v1/corpus")
     after = sorted(
         map(tuple, S.ivf_topk_indexed(spark, q, ivf, k=3, nprobe=2).collect())
     )
@@ -1479,8 +1463,8 @@ def test_forget_vectors_erases_every_surface(spark, sf_dir, tmp_path):
     fully reachable (an exhaustive probe returns exactly them); stored
     quantizers are untouched so survivor rankings never change; a second
     forget of the same ids is a complete no-op. The IVF index is
-    compacted first, so its superseded generation (the legacy root
-    tables) holds the doomed ids too and must be collected."""
+    compacted first, so its superseded generation (the build's ``v1``)
+    holds the doomed ids too and must be collected."""
     import glob
     import os
 
@@ -1580,10 +1564,7 @@ def test_forget_vectors_erases_every_surface(spark, sf_dir, tmp_path):
         vdirs = [d for d in glob.glob(f"{idx}/v*") if os.path.isdir(d)]
         assert len(vdirs) <= 1, f"{idx}: superseded generation kept {vdirs}"
     # no IVF generation on disk, active or kept, holds a doomed vector
-    ivf_gens = [
-        d for d in (f"{ivf}/corpus", *glob.glob(f"{ivf}/v*/corpus"))
-        if os.path.isdir(d)
-    ]
+    ivf_gens = [d for d in glob.glob(f"{ivf}/v*/corpus") if os.path.isdir(d)]
     assert ivf_gens
     for d in ivf_gens:
         assert not ids_at(d, "neighbor_id") & set(doomed_ids), d
@@ -1787,16 +1768,9 @@ def test_ivf_payload_filtered_search_and_lifecycle(spark, sf_dir, tmp_path):
         S.ivf_topk_indexed(spark, queries, bare, k=5, where="label = 2")
 
 
-def test_forget_vectors_legacy_zone_and_ambiguous_layout(spark, sf_dir, tmp_path):
-    """Branch coverage for the erasure composition: (a) a LEGACY
-    unbucketed corpus zone falls back to the one-partition COW rewrite
-    (correct counts, survivors intact); (b) with BOTH a PQ and an SQ8
-    candidate and a cell-codes layout whose meta is missing (half-built),
-    forget_vectors refuses with the explicit-rebuild error instead of
-    guessing a codes source."""
-    import pytest
-
-    from aws_data_pipeline_spark.operators import similarity as S
+def test_forget_vectors_legacy_unbucketed_zone(spark, sf_dir, tmp_path):
+    """A LEGACY unbucketed corpus zone falls back to the one-partition
+    COW rewrite (correct counts, survivors intact)."""
     from aws_data_pipeline_spark.streaming.embeddings import forget_vectors
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -1811,20 +1785,3 @@ def test_forget_vectors_legacy_zone_and_ambiguous_layout(spark, sf_dir, tmp_path
     assert got == {r.vec_id for r in e.collect()} - {1, 2}
     # repeat: structural no-op (no write when nothing matches)
     assert forget_vectors(spark, doomed, corpus_path=corpus) == {"corpus": 0}
-
-    ivf, pq, sq8 = (str(tmp_path / x) for x in ("ivf", "pq", "sq8"))
-    S.build_ivf_index(e, ivf, n_cells=4)
-    S.build_pq_index(e, pq)
-    S.build_sq8_index(e, sq8)
-    cc = str(tmp_path / "cc_halfbuilt")
-    # half-built layout: codes dir exists, no meta
-    spark.range(1).write.mode("overwrite").parquet(f"{cc}/codes")
-    with pytest.raises(ValueError, match="rebuild it explicitly"):
-        forget_vectors(
-            spark,
-            doomed,
-            ivf_index_path=ivf,
-            pq_index_path=pq,
-            sq8_index_path=sq8,
-            ivfpq_cell_codes_path=cc,
-        )

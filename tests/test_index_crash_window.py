@@ -1,12 +1,16 @@
-"""The append crash window of the persisted vector indexes.
+"""The crash windows of the persisted indexes.
 
-``append_to_{embedding_lsh,pq,sq8}_index`` write ``vectors`` first and the
-per-id code table second. A crash between the two writes leaves vectors
-rows without codes; the re-run must encode exactly those rows from the
-materialized vectors, duplicate nothing, and a further re-run must write
-nothing at all. ``append_to_ivf_index`` writes one cell-partitioned
+Append: ``append_to_{embedding_lsh,pq,sq8}_index`` write ``vectors`` first
+and the per-id code table second. A crash between the two writes leaves
+vectors rows without codes; the re-run must encode exactly those rows from
+the materialized vectors, duplicate nothing, and a further re-run must
+write nothing at all. ``append_to_ivf_index`` writes one cell-partitioned
 ``corpus`` table, vector store and code table in one; its crash leaves
 part of the batch landed, and the re-run must write exactly the rest.
+
+First build: every build writes a candidate version and commits it last,
+so a build that dies at the commit leaves no index at all — not a
+half-built one — and the re-run commits the first version.
 """
 
 from __future__ import annotations
@@ -17,26 +21,32 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from aws_data_pipeline_spark.operators import dedup
 from aws_data_pipeline_spark.operators import similarity as S
+from aws_data_pipeline_spark.plans import llm as L
+from aws_data_pipeline_spark.sources import parquet
+from aws_data_pipeline_spark.sources.parquet import index_active_version, index_has
+from tests.conftest import _sub
 
 
 def _land_vectors(batch, idx, payload):
     """The codec crash: only the batch's vectors rows landed."""
     batch.select(
         F.col("vec_id").alias("id"), S.as_double(F.col("embedding")).alias("v"), *payload
-    ).write.mode("append").parquet(f"{idx}/vectors")
+    ).write.mode("append").parquet(_sub(batch.sparkSession, idx, "vectors"))
 
 
 def _land_ivf_half(batch, idx, payload):
     """The IVF crash: the first half of the batch landed in its cells."""
-    cents = S.read_ivf_centroids(batch.sparkSession, idx)
+    spark = batch.sparkSession
+    cents = S.read_ivf_centroids(spark, S.index_root(spark, idx))
     batch.filter(F.col("vec_id") < 50).select(
         F.col("vec_id").alias("neighbor_id"),
         S.as_double(F.col("embedding")).alias("cv"),
         *payload,
     ).withColumn("cell", S.nearest_cell(F.col("cv"), cents)).write.mode(
         "append"
-    ).partitionBy("cell").parquet(f"{idx}/corpus")
+    ).partitionBy("cell").parquet(_sub(spark, idx, "corpus"))
 
 
 def _ivf_append(df, path):
@@ -97,10 +107,64 @@ def test_append_backfills_crash_between_vectors_and_codes(
     crash(batch, idx, payload)
     append(batch, idx)
 
-    assert _rows(spark, f"{idx}/{code_sub}") == _rows(spark, f"{twin}/{code_sub}")
-    vecs = spark.read.parquet(f"{idx}/{vec_sub}")
+    assert _rows(spark, _sub(spark, idx, code_sub)) == _rows(
+        spark, _sub(spark, twin, code_sub)
+    )
+    vecs = spark.read.parquet(_sub(spark, idx, vec_sub))
     assert vecs.count() == vecs.select(vec_id).distinct().count() == e.count()
 
-    written = {sub: _files(f"{idx}/{sub}") for sub in {vec_sub, code_sub}}
+    written = {sub: _files(_sub(spark, idx, sub)) for sub in {vec_sub, code_sub}}
     append(batch, idx)
-    assert {sub: _files(f"{idx}/{sub}") for sub in written} == written
+    assert {sub: _files(_sub(spark, idx, sub)) for sub in written} == written
+
+
+# (source table, id column, build(corpus, path), a sub-table of a built index)
+FIRST_BUILDS = {
+    "lsh": ("embeddings", "vec_id", S.build_embedding_lsh_index, "meta"),
+    "pq": ("embeddings", "vec_id", S.build_pq_index, "meta"),
+    "sq8": ("embeddings", "vec_id", S.build_sq8_index, "meta"),
+    "ivf": ("embeddings", "vec_id",
+            lambda corpus, idx: S.build_ivf_index(corpus, idx, n_cells=4), "centroids"),
+    "cell_codes": ("embeddings", "vec_id", None, "meta"),
+    "text_lsh": ("documents", "doc_id", dedup.build_lsh_text_index, "meta"),
+    "kgram": ("documents", "doc_id", dedup.build_kgram_index, "meta"),
+}
+
+
+@pytest.mark.parametrize("family", FIRST_BUILDS)
+def test_first_build_crash_at_commit_leaves_no_index(
+    spark, sf_dir, tmp_path, monkeypatch, family
+):
+    table, id_col, build, sub = FIRST_BUILDS[family]
+    if build is None:  # the derived layout over two committed sources
+        e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        ivf, pq = str(tmp_path / "ivf"), str(tmp_path / "pq")
+        S.build_ivf_index(e, ivf, n_cells=4)
+        S.build_pq_index(e, pq)
+
+        def build(corpus, idx):
+            S.build_ivfpq_cell_codes(spark, ivf, pq, idx)
+
+    spec = L._IndexSpec(f"first_build_crash_{family}", table, id_col, build)
+    idx = L._warehouse_index_path(sf_dir, spec.name)
+    shutil.rmtree(idx, ignore_errors=True)
+    try:
+        def crash(*_a):
+            raise RuntimeError("crash at commit")
+
+        with monkeypatch.context() as m:
+            m.setattr(parquet, "commit_index_version", crash)
+            with pytest.raises(RuntimeError, match="crash at commit"):
+                L._ensure_index(spark, sf_dir, spec)
+        assert _files(idx)  # the candidate's files landed, uncommitted
+        assert index_active_version(spark, idx) is None
+        assert not index_has(spark, idx, sub)
+        state = L._src_state(spark, sf_dir, table)
+        assert not L._src_marker_fresh(spark, idx, state)
+
+        assert L._ensure_index(spark, sf_dir, spec) == idx
+        assert index_active_version(spark, idx) == 1
+        assert index_has(spark, idx, sub)
+        assert L._src_marker_fresh(spark, idx, state)
+    finally:
+        shutil.rmtree(idx, ignore_errors=True)

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from aws_data_pipeline_spark.catalog import load
 from aws_data_pipeline_spark.operators import dedup, multimodal, similarity
 from aws_data_pipeline_spark.sources import parquet
+from tests.conftest import _sub
 
 
 def test_minhash_lsh_matches_exact_jaccard(spark, sf_dir):
@@ -127,10 +128,10 @@ def test_ivf_build_is_deterministic_and_layout_independent(spark, sf_dir, tmp_pa
     def build(df, name):
         idx = str(tmp_path / name)
         similarity.build_ivf_index(df, idx, n_cells=8)
-        cents = similarity.read_ivf_centroids(spark, idx)
+        cents = similarity.read_ivf_centroids(spark, similarity.index_root(spark, idx))
         corpus = sorted(
             (r.neighbor_id, tuple(r.cv), r.cell)
-            for r in spark.read.parquet(f"{idx}/corpus").collect()
+            for r in spark.read.parquet(_sub(spark, idx, "corpus")).collect()
         )
         return cents, corpus
 
@@ -862,7 +863,7 @@ def test_duplicate_spans_against_index_equals_full_recompute(spark, tmp_path):
     # maintenance: append batch 1, then a near-copy in batch 2 is caught
     append_to_kgram_index(batch, idx)
     append_to_kgram_index(batch, idx)  # replayed append: no duplicates
-    hashes = spark.read.parquet(f"{idx}/hashes")
+    hashes = spark.read.parquet(_sub(spark, idx, "hashes"))
     assert hashes.count() == hashes.distinct().count()
     echo = spark.createDataFrame(
         [(20, f"later arrival repeating {rep} from batch one")],
@@ -1990,7 +1991,61 @@ def test_ensure_memo_out_of_band_deletion_reensures(spark, sf_dir):
     assert again == idx
     from aws_data_pipeline_spark.sources.parquet import zone_exists
 
-    assert zone_exists(spark, f"{idx}/src_meta")  # rebuilt, marker restored
+    assert zone_exists(spark, _sub(spark, idx, "src_meta"))  # rebuilt, marker restored
+
+
+def test_ensure_index_rebuilds_an_index_built_by_other_code(spark, sf_dir):
+    """A build-once index's marker records a digest of the code that
+    built it: an index whose marker names other code is rebuilt into a
+    new version on the next ensure instead of being served, and a marker
+    without the digest column reads as stale."""
+    import shutil
+
+    from aws_data_pipeline_spark.operators import arrow_frame
+    from aws_data_pipeline_spark.plans import llm as L
+    from aws_data_pipeline_spark.sources.parquet import index_active_version
+
+    spec = L._IndexSpec(
+        "code_digest_kgram_k8", "documents", "doc_id",
+        lambda corpus, idx: dedup.build_kgram_index(corpus, idx, k=8),
+    )
+    idx = L._warehouse_index_path(sf_dir, spec.name)
+    shutil.rmtree(idx, ignore_errors=True)
+    try:
+        assert L._ensure_index(spark, sf_dir, spec) == idx
+        assert index_active_version(spark, idx) == 1
+        hashes = spark.read.parquet(_sub(spark, idx, "hashes"))
+        built = {r.h for r in hashes.collect()}
+        state = L._src_state(spark, sf_dir, "documents")
+        assert L._src_marker_fresh(spark, idx, state)
+
+        # a marker of the old schema (no digest column) reads as stale
+        old_schema = "src_total long, src_files long, src_bytes long"
+        arrow_frame(spark, [state], old_schema).write.mode("overwrite").parquet(
+            _sub(spark, idx, "src_meta")
+        )
+        assert not L._src_marker_fresh(spark, idx, state)
+        # the index as other code left it: its own digest, and a row the
+        # current code does not build
+        arrow_frame(
+            spark, [(*state, "0" * 64)], old_schema + ", code_digest string"
+        ).write.mode("overwrite").parquet(_sub(spark, idx, "src_meta"))
+        planted = min(built) - 1
+        hashes.limit(1).withColumn("h", F.lit(planted).cast("long")).write.mode(
+            "append"
+        ).parquet(_sub(spark, idx, "hashes"))
+        for key in [k for k in parquet._APP_MEMO if k[1][0] == "ensure"]:
+            parquet._APP_MEMO.pop(key)  # as a new process would start
+
+        assert L._ensure_index(spark, sf_dir, spec) == idx
+        assert index_active_version(spark, idx) == 2
+        served = {
+            r.h for r in spark.read.parquet(_sub(spark, idx, "hashes")).collect()
+        }
+        assert served == built and planted not in served
+        assert L._src_marker_fresh(spark, idx, state)
+    finally:
+        shutil.rmtree(idx, ignore_errors=True)
 
 
 def test_app_memo_eviction_rule():

@@ -14,6 +14,7 @@ from aws_data_pipeline_spark.catalog import load
 from aws_data_pipeline_spark.operators.joins import salted_join
 from aws_data_pipeline_spark.sources.bucketed import read_table, write_bucketed
 from aws_data_pipeline_spark.streaming.stateful import sessionize_stream
+from tests.conftest import _sub
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):
@@ -674,7 +675,7 @@ def test_text_lsh_bootstrap_indexes_preexisting_corpus(spark, tmp_path):
     incremental_corpus_ingest(
         spark, str(inbox), corpus, idx2, str(tmp_path / "c2")
     )
-    indexed = {r.doc for r in spark.read.parquet(f"{idx2}/sets").collect()}
+    indexed = {r.doc for r in spark.read.parquet(_sub(spark, idx2, "sets")).collect()}
     assert indexed == {1, 2}  # history indexed, not just the batch
     (inbox / "b3.jsonl").write_text(
         json.dumps(
@@ -812,7 +813,7 @@ def test_sq8_filtered_probe_pushes_payload_predicate(spark, sf_dir, tmp_path):
         df._jdf.queryExecution(), "formatted"
     )
     scans = plan.split("Scan parquet")
-    codes_scans = [s for s in scans if f"{idx}/codes" in s]
+    codes_scans = [s for s in scans if _sub(spark, idx, "codes") in s]
     assert codes_scans, "no codes-table scan in the filtered probe plan"
     assert all("EqualTo(label,2)" in s for s in codes_scans)
     # the corpus side of the ranking is the index, never a join back to

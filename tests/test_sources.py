@@ -16,6 +16,7 @@ from aws_data_pipeline_spark.sources.delimited import (
     write_csv,
     write_orc,
 )
+from tests.conftest import _sub
 
 
 def test_csv_roundtrip(spark, sf_dir, tmp_path):
@@ -1328,6 +1329,56 @@ def test_one_filesystem_acquisition_site():
     assert len(hits) == 1
 
 
+def test_one_module_spells_the_index_layout():
+    """The versioned index store's on-disk spelling — the ``_ptr`` marker
+    directory and the ``v<N>`` version directories — appears in package
+    code only inside ``sources/parquet.py``; every other module reaches
+    the layout through its functions (``index_root``, ``index_next_root``,
+    ``finish_index_build``...), so the layout cannot fork again. Scans
+    code strings (docstrings are prose) and ``startswith``-style probes
+    for a ``v`` prefix."""
+    import ast
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "aws_data_pipeline_spark"
+    version_dir = re.compile(r"/v(\d+)?(/|$)")
+    hits = []
+    for f in sorted(pkg.rglob("*.py")):
+        rel = f.relative_to(pkg).as_posix()
+        if rel == "sources/parquet.py":
+            continue
+        tree = ast.parse(f.read_text())
+        docs = {
+            id(n.body[0].value)
+            for n in ast.walk(tree)
+            if isinstance(
+                n, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+            )
+            and n.body
+            and isinstance(n.body[0], ast.Expr)
+            and isinstance(n.body[0].value, ast.Constant)
+        }
+        for n in ast.walk(tree):
+            if (
+                isinstance(n, ast.Constant)
+                and isinstance(n.value, str)
+                and id(n) not in docs
+                and ("_ptr" in n.value or version_dir.search(n.value))
+            ):
+                hits.append((rel, n.lineno, n.value))
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("startswith", "removeprefix")
+                and n.args
+                and isinstance(n.args[0], ast.Constant)
+                and str(n.args[0].value).lstrip("/").startswith("v")
+            ):
+                hits.append((rel, n.lineno, n.func.attr))
+    assert hits == [], f"index layout spelled outside sources/parquet.py: {hits}"
+
+
 def test_medallion_reads_silver_without_schema_inference():
     """The batch and streaming medallion modules never probe the
     ``.schema`` of an inferred parquet read: silver's schema is
@@ -1810,9 +1861,11 @@ def test_index_and_metadata_writes_start_no_python_rdd(
 
     merges = bpe.learn_bpe(docs, n_merges=3).merges_df()
     assert merges.count() == 3
-    for sub in ("lsh/meta", "pq/codebooks", "sq8/stats", "ivf/centroids",
-                "cc/meta", "tlsh/meta", "kgram/meta", "base/meta"):
-        assert spark.read.parquet(f"{d}/{sub}").count() > 0
+    for idx, sub in (("lsh", "meta"), ("pq", "codebooks"), ("sq8", "stats"),
+                     ("ivf", "centroids"), ("cc", "meta"), ("tlsh", "meta"),
+                     ("kgram", "meta")):
+        assert spark.read.parquet(_sub(spark, f"{d}/{idx}", sub)).count() > 0
+    assert spark.read.parquet(f"{d}/base/meta").count() > 0
 
 
 def test_events_nanos_read_is_pinned_and_round_trips(spark, tmp_path):

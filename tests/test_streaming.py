@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from aws_data_pipeline_spark.catalog import load
 from aws_data_pipeline_spark.streaming.ingest import incremental_bronze_to_silver
 from aws_data_pipeline_spark.streaming.windows import tumbling_counts
+from tests.conftest import _sub
 
 CLOCK = F.lit
 
@@ -332,7 +333,7 @@ def test_incremental_corpus_ingest_rejects_cross_batch_neardups(spark, tmp_path)
     incremental_corpus_ingest(spark, str(inbox), corpus, index, ckpt)
     ids = {r.doc_id for r in spark.read.parquet(corpus).collect()}
     assert ids == {1, 4}
-    indexed = {r.doc for r in spark.read.parquet(f"{index}/sets").collect()}
+    indexed = {r.doc for r in spark.read.parquet(_sub(spark, index, "sets")).collect()}
     assert indexed == {1, 4}
 
     fresh = " ".join(f"new{i}" for i in range(60))
@@ -345,7 +346,7 @@ def test_incremental_corpus_ingest_rejects_cross_batch_neardups(spark, tmp_path)
     incremental_corpus_ingest(spark, str(inbox), corpus, index, ckpt)
     ids = {r.doc_id for r in spark.read.parquet(corpus).collect()}
     assert ids == {1, 4, 12}
-    indexed = {r.doc for r in spark.read.parquet(f"{index}/sets").collect()}
+    indexed = {r.doc for r in spark.read.parquet(_sub(spark, index, "sets")).collect()}
     assert indexed == {1, 4, 12}
 
     # same checkpoint: nothing new to process
@@ -356,7 +357,7 @@ def test_incremental_corpus_ingest_rejects_cross_batch_neardups(spark, tmp_path)
         spark, str(inbox), corpus, index, str(tmp_path / "ckpt2")
     )
     assert spark.read.parquet(corpus).count() == 3
-    assert spark.read.parquet(f"{index}/sets").count() == 3
+    assert spark.read.parquet(_sub(spark, index, "sets")).count() == 3
 
 
 def test_corpus_ingest_maintains_kgram_span_index(spark, tmp_path):
@@ -387,7 +388,7 @@ def test_corpus_ingest_maintains_kgram_span_index(spark, tmp_path):
         spark, str(inbox), corpus, index, str(tmp_path / "c1"),
         kgram_index_path=kgram,
     )
-    n1 = spark.read.parquet(f"{kgram}/hashes").count()
+    n1 = spark.read.parquet(_sub(spark, kgram, "hashes")).count()
     assert n1 == 30 - 8 + 1  # one hash per positional 8-gram of doc 1
 
     # batch 2: one near-dup of doc 1 (rejected — its novel tail must NOT
@@ -407,7 +408,7 @@ def test_corpus_ingest_maintains_kgram_span_index(spark, tmp_path):
         kgram_index_path=kgram,
     )
     assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == {1, 3}
-    n2 = spark.read.parquet(f"{kgram}/hashes").count()
+    n2 = spark.read.parquet(_sub(spark, kgram, "hashes")).count()
     assert n2 == n1 + (30 - 8 + 1)  # doc 3 only; rejected doc 2 added nothing
 
     # a later batch quoting doc 3 shows up in the span probe
@@ -429,14 +430,14 @@ def test_corpus_ingest_maintains_kgram_span_index(spark, tmp_path):
         spark, str(inbox), corpus, index, str(tmp_path / "c1")
     )  # no kgram arg == the crash left kgram behind
     assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == {1, 3, 4}
-    assert spark.read.parquet(f"{kgram}/hashes").count() == n2  # the gap
+    assert spark.read.parquet(_sub(spark, kgram, "hashes")).count() == n2  # the gap
     incremental_corpus_ingest(
         spark, str(inbox), corpus, index, str(tmp_path / "c2"),
         kgram_index_path=kgram,
     )  # lost checkpoint: everything re-delivers; survivors == empty
     assert spark.read.parquet(corpus).count() == 3  # corpus stays flat
     assert (
-        spark.read.parquet(f"{kgram}/hashes").count() == n2 + (30 - 8 + 1)
+        spark.read.parquet(_sub(spark, kgram, "hashes")).count() == n2 + (30 - 8 + 1)
     )  # doc 4's hashes backfilled
 
 
@@ -486,7 +487,7 @@ def test_compact_corpus_indexes_preserves_probes(spark, tmp_path):
         tuple(r)
         for r in duplicate_spans_against_index(spark, probe, kgram).collect()
     }
-    files_before = len(glob.glob(f"{index}/bands/*.parquet"))
+    files_before = len(glob.glob(f"{_sub(spark, index, 'bands')}/*.parquet"))
     assert files_before >= 4  # one append file per batch — the fragmentation
     written = compact_corpus_indexes(spark, index, kgram)
     assert set(written) == {"sets", "bands", "hashes"}
@@ -537,7 +538,8 @@ def test_corpus_crash_recovery_backfills_index(spark, tmp_path):
     spark.createDataFrame(
         [(2, fresh, "en", "a")], "doc_id long, text string, lang string, source string"
     ).write.mode("append").parquet(corpus)
-    assert {r.doc for r in spark.read.parquet(f"{index}/sets").collect()} == {1}
+    sets = spark.read.parquet(_sub(spark, index, "sets"))
+    assert {r.doc for r in sets.collect()} == {1}
 
     # recovery: the checkpoint re-delivers batch 2 (fresh checkpoint here ≡
     # uncommitted batch). Corpus must stay flat; the index must backfill.
@@ -546,8 +548,10 @@ def test_corpus_crash_recovery_backfills_index(spark, tmp_path):
     )
     incremental_corpus_ingest(spark, str(inbox), corpus, index, str(tmp_path / "c2"))
     assert spark.read.parquet(corpus).count() == 2
-    assert {r.doc for r in spark.read.parquet(f"{index}/sets").collect()} == {1, 2}
-    assert {r.doc for r in spark.read.parquet(f"{index}/bands").collect()} == {1, 2}
+    sets = spark.read.parquet(_sub(spark, index, "sets"))
+    bands = spark.read.parquet(_sub(spark, index, "bands"))
+    assert {r.doc for r in sets.collect()} == {1, 2}
+    assert {r.doc for r in bands.collect()} == {1, 2}
 
     # and the healed index actually rejects a near-dup of the healed doc
     (inbox / "b3.jsonl").write_text(
@@ -564,12 +568,12 @@ def test_corpus_crash_recovery_backfills_index(spark, tmp_path):
     )
     dedup.shingle_sets(nine, "doc_id", "text", 5, persist=False).write.mode(
         "append"
-    ).parquet(f"{index}/sets")
+    ).parquet(_sub(spark, index, "sets"))
     append_to_lsh_text_index(nine, index)
-    sets_rows = spark.read.parquet(f"{index}/sets").filter(F.col("doc") == 9).count()
-    bands_rows = (
-        spark.read.parquet(f"{index}/bands").filter(F.col("doc") == 9).count()
-    )
+    sets = spark.read.parquet(_sub(spark, index, "sets"))
+    sets_rows = sets.filter(F.col("doc") == 9).count()
+    bands = spark.read.parquet(_sub(spark, index, "bands"))
+    bands_rows = bands.filter(F.col("doc") == 9).count()
     assert sets_rows == 1
     assert bands_rows == 4  # one row per band
     shutil.rmtree(str(tmp_path / "inbox"))
@@ -614,7 +618,7 @@ def test_kgram_index_bootstrap_covers_preexisting_corpus(spark, tmp_path):
         kgram_index_path=kgram,
     )
     per_doc = 30 - 8 + 1
-    assert spark.read.parquet(f"{kgram}/hashes").count() == 3 * per_doc
+    assert spark.read.parquet(_sub(spark, kgram, "hashes")).count() == 3 * per_doc
 
     # a probe quoting the PRE-OPTION doc sees its spans
     probe = spark.createDataFrame(
@@ -653,14 +657,14 @@ def test_incremental_corpus_ingest_row_local_gates(spark, tmp_path):
     rows = spark.read.parquet(corpus).collect()
     assert {r.doc_id for r in rows} == {1}
     assert rows[0].text == good  # stored text is the STRIPPED content
-    indexed = {r.doc for r in spark.read.parquet(f"{index}/sets").collect()}
+    indexed = {r.doc for r in spark.read.parquet(_sub(spark, index, "sets")).collect()}
     assert indexed == {1}
 
 
 def test_text_ingest_start_gc_collects_superseded_versions(spark, tmp_path):
     """The text loop's run-start version GC (the embedding loop's cadence
-    rule): a compaction supersedes the legacy root generation, the next
-    ingest run with the flag collects it, probes identical throughout."""
+    rule): a compaction supersedes the build's v1, the next ingest run
+    with the flag collects it, probes identical throughout."""
     from aws_data_pipeline_spark.operators import dedup
     from aws_data_pipeline_spark.sources.parquet import zone_exists
     from aws_data_pipeline_spark.streaming.corpus import (
@@ -681,8 +685,8 @@ def test_text_ingest_start_gc_collects_superseded_versions(spark, tmp_path):
     ]
     (inbox / "b1.jsonl").write_text("\n".join(json.dumps(d) for d in docs))
     incremental_corpus_ingest(spark, str(inbox), corpus, index, ckpt)
-    compact_corpus_indexes(spark, index)  # supersedes the legacy root build
-    assert zone_exists(spark, f"{index}/sets")  # kept generation
+    compact_corpus_indexes(spark, index)  # supersedes the build's v1
+    assert zone_exists(spark, f"{index}/v1/sets")  # kept generation
 
     new = spark.createDataFrame(
         [(99, docs[0]["text"] + " tail", "en", "a")],
@@ -695,7 +699,7 @@ def test_text_ingest_start_gc_collects_superseded_versions(spark, tmp_path):
     incremental_corpus_ingest(
         spark, str(inbox), corpus, index, ckpt, gc_superseded_versions=True
     )
-    assert not zone_exists(spark, f"{index}/sets")  # collected at run start
+    assert not zone_exists(spark, f"{index}/v1/sets")  # collected at run start
     after = {
         (r.new_id, r.corpus_id)
         for r in dedup.neardup_against_index(spark, new, index, threshold=0.8).collect()
@@ -1106,9 +1110,14 @@ def test_cdc_tombstone_expiry_is_crash_safe_versioned_swap(spark, tmp_path):
     uncommitted candidate directory) leaves every live tombstone being
     served — the in-place overwrite it replaces would have truncated the
     store first and lost ALL tombstones at that point, silently
-    re-opening the delete-resurrection window. After a real expiry,
-    appends land in the committed version so later expiries see them."""
-    from aws_data_pipeline_spark.sources.parquet import index_root
+    re-opening the delete-resurrection window. The store's first
+    version is committed before its first tombstone lands. After a real
+    expiry, appends land in the committed version so later expiries see
+    them."""
+    from aws_data_pipeline_spark.sources.parquet import (
+        index_active_version,
+        index_root,
+    )
     from aws_data_pipeline_spark.streaming.cdc import (
         _TOMB,
         apply_cdc_batch,
@@ -1132,13 +1141,14 @@ def test_cdc_tombstone_expiry_is_crash_safe_versioned_swap(spark, tmp_path):
         zone, ["id"], ["year"],
     )
     store = f"{zone}/{_TOMB}"
+    assert index_active_version(spark, store) == 1
 
-    # planted crash: candidate v1 fully written (empty kept set — the
+    # planted crash: candidate v2 fully written (empty kept set — the
     # worst case) but NO marker ever created
-    spark.read.parquet(store).limit(0).write.partitionBy("year").parquet(
-        f"{store}/v1"
-    )
-    assert index_root(spark, store) == store  # uncommitted => old layout
+    spark.read.parquet(index_root(spark, store)).limit(0).write.partitionBy(
+        "year"
+    ).parquet(f"{store}/v2")
+    assert index_root(spark, store) == f"{store}/v1"  # uncommitted => v1
     # an old-sequence upsert replay still hits both tombstones
     got = apply_cdc_batch(
         spark.createDataFrame(
@@ -1149,11 +1159,11 @@ def test_cdc_tombstone_expiry_is_crash_safe_versioned_swap(spark, tmp_path):
     )
     assert got == {"upserts": 0, "deletes": 0, "stale_dropped": 2}
 
-    # real expiry: horizon 4 keeps only key 2's tombstone; commit flips
-    # the store to a fresh version (the abandoned v1 is superseded)
+    # real expiry: horizon 4 keeps only key 2's tombstone; the kept set
+    # overwrites the abandoned candidate and its commit flips the store
     assert expire_cdc_tombstones(spark, zone, 4, ["year"]) == 1
     root = index_root(spark, store)
-    assert root != store
+    assert root == f"{store}/v2"
     assert [tuple(r) for r in spark.read.parquet(root).select("id").collect()] == [(2,)]
 
     # appends after the flip land in the committed version: a new delete
