@@ -561,31 +561,40 @@ def complete_pending_compaction(spark: SparkSession, path: str) -> bool:
     return True
 
 
-def _swap_overwrite(
-    out: DataFrame, path: str, partition_by: Sequence[str] = ()
+def _write_compacted(
+    out: DataFrame,
+    path: str,
+    dest: str | None,
+    partition_by: Sequence[str] = (),
 ) -> None:
-    """In-place rewrite that never truncates the zone directory: write
-    the compacted files (hive layout when ``partition_by`` is set) to
-    ``path/_compacting`` (invisible to readers — ``_`` prefix), record
-    the old top-level data entries in a ``_SWAP_READY`` marker, then
-    delete-olds + move-news. The zone's ``_``-prefixed metadata trees
-    (``_snapshots``, ``_retired``, ``_expired``) survive untouched,
-    which is what keeps committed snapshots readable across ANY in-place
-    compaction. Crash posture: before the marker exists the live zone is
-    untouched; after it exists the new data is fully on disk and
-    recovery completes the swap (``complete_pending_compaction``) —
+    """Write a rewrite of zone ``path`` (hive layout when
+    ``partition_by`` is set): to ``dest`` when given — the
+    versioned-index swap, the source is never touched — else in place.
+
+    The in-place rewrite never truncates the zone directory: write the
+    compacted files to ``path/_compacting`` (invisible to readers — ``_``
+    prefix), record the old top-level data entries in a ``_SWAP_READY``
+    marker, then delete-olds + move-news. The zone's ``_``-prefixed
+    metadata trees (``_snapshots``, ``_retired``, ``_expired``) survive
+    untouched, which is what keeps committed snapshots readable across
+    ANY in-place compaction. Crash posture: before the marker exists the
+    live zone is untouched; after it exists the new data is fully on
+    disk and recovery completes the swap (``complete_pending_compaction``) —
     strictly better than the old truncate-then-write, whose crash window
     lost the zone outright, and memory-free where the old partitioned
     branch localCheckpoint-ed the whole zone (impossible at 100 TB).
     Compaction remains maintenance-window work: a writer appending
     between the zone read and the swap loses its files either way (the
     dynamic-overwrite branch replaced whole partition dirs too)."""
-    spark = out.sparkSession
-    olds = _top_level_data_entries(spark, path)
-    tmp = f"{path}/{_COMPACT_TMP_DIR}"
     writer = out.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
+    if dest is not None:
+        writer.parquet(dest)
+        return
+    spark = out.sparkSession
+    olds = _top_level_data_entries(spark, path)
+    tmp = f"{path}/{_COMPACT_TMP_DIR}"
     writer.parquet(tmp)
     _write_text_file(
         spark, f"{tmp}/{_SWAP_READY_MARKER}", "\n".join(olds)
@@ -600,7 +609,6 @@ def compact_zone(
     target_file_bytes: int = 128 * 1024 * 1024,
     sort_by: Sequence[str] = (),
     dest: str | None = None,
-    respect_snapshots: bool = True,
 ) -> int:
     """Rewrite a zone into ~target-size files; returns the rewrite's task
     count (= file count for unpartitioned/sorted zones; a hive-partitioned
@@ -634,26 +642,22 @@ def compact_zone(
     commit_index_version): the source stays readable throughout and no
     truncation ever happens.
 
-    ``respect_snapshots`` (default True): before an IN-PLACE rewrite,
-    consult ``snapshots.snapshot_pinned_files`` and COPY every pinned
-    live file into ``path/_retired/<rel>`` (idempotent, crash-safe —
-    copy-then-rewrite, never move), so every committed snapshot stays
-    readable after compaction — on EVERY in-place branch, since the
-    ``_compacting`` swap protocol above never deletes ``_`` trees.
-    Iceberg-style safe time travel. The retired copies
-    are reclaimed by ``snapshots.gc_retired_files`` once
-    ``snapshots.expire_snapshots`` retires the pinning manifests. Pass
-    False for zones that never take snapshots (skips two metadata
-    walks) — a later snapshot read over files this compaction rewrote
-    then breaks LOUDLY with rewritten-or-corrupt attribution, the
-    documented pre-r12 contract.
+    Snapshots: before every IN-PLACE rewrite, the live files
+    ``snapshots.snapshot_pinned_files`` names are COPIED into
+    ``path/_retired/<rel>`` (idempotent, crash-safe — copy-then-rewrite,
+    never move), so every committed snapshot stays readable after
+    compaction — on EVERY in-place branch, since the ``_compacting`` swap
+    protocol above never deletes ``_`` trees. Iceberg-style safe time
+    travel. The retired copies are reclaimed by
+    ``snapshots.gc_retired_files`` once ``snapshots.expire_snapshots``
+    retires the pinning manifests. A zone that never took a snapshot
+    pays one ``exists`` probe for its absent ``_snapshots/_ptr``.
     """
     if dest is None:
         # heal any interrupted prior swap BEFORE reading the zone — the
         # marker means the previous compaction's files are complete on
         # disk and only the delete/move half was cut short
         complete_pending_compaction(spark, path)
-    if respect_snapshots and dest is None:
         from aws_data_pipeline_spark.sources import snapshots as _snaps
 
         pinned = _snaps.snapshot_pinned_files(spark, path)
@@ -663,7 +667,6 @@ def compact_zone(
                 spark, path, sorted(pinned & set(live))
             )
     df = read_zone(spark, path)
-    out_path = dest if dest is not None else path
     if sort_by:
         return clustered_rewrite(df, path, sort_by, target_file_bytes, dest=dest)
     # size estimate from Spark's own scan statistics (no separate FS listing)
@@ -683,18 +686,9 @@ def compact_zone(
             .repartition(n_files, *partition_by, F.col("__salt"))
             .drop("__salt")
         )
-        if out_path == path:
-            _swap_overwrite(out, path, partition_by=partition_by)
-        else:
-            out.write.mode("overwrite").partitionBy(*partition_by).parquet(
-                out_path
-            )
+        _write_compacted(out, path, dest, partition_by)
         return n_files
-    out = df.repartition(n_files)
-    if out_path == path:
-        _swap_overwrite(out, path)
-    else:
-        out.write.mode("overwrite").parquet(out_path)
+    _write_compacted(df.repartition(n_files), path, dest)
     return n_files
 
 
@@ -712,12 +706,11 @@ def clustered_rewrite(
     row group's min/max is tight, rewrite ``path``.
     ``drop_cols`` lets a caller sort on a computed key (e.g. a Z-order
     key) without persisting it. In-place rewrites go through the
-    ``_compacting`` swap protocol (see ``_swap_overwrite``): the zone
+    ``_compacting`` swap protocol (see ``_write_compacted``): the zone
     directory is never truncated, ``_``-prefixed metadata trees
     (``_snapshots``/``_retired``) survive, and a crash is healed by
     re-running (``complete_pending_compaction``). With ``dest`` set
     (the versioned-index swap), the source is never touched."""
-    out_path = dest if dest is not None else path
     est_bytes = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     n_files = max(
         1, int((int(est_bytes) + target_file_bytes - 1) // target_file_bytes)
@@ -727,10 +720,7 @@ def clustered_rewrite(
     )
     for c in drop_cols:
         out = out.drop(c)
-    if out_path == path:
-        _swap_overwrite(out, path)
-    else:
-        out.write.mode("overwrite").parquet(out_path)
+    _write_compacted(out, path, dest)
     return n_files
 
 

@@ -49,9 +49,10 @@ the gold refresh itself already requires; consistency is build-level,
 not instant-level.
 
 Scale posture: a publication manifest is K rows (one per table) plus K
-zone-snapshot manifests the zones already pay for; reads add one tiny
-parquet lookup over the per-zone snapshot read. Nothing here touches a
-data file.
+zone-snapshot manifests the zones already pay for. A read adds one
+Spark job to the per-zone snapshot read: the publication manifest is
+collected by the id-catalog's one reader, scanned with the schema its
+writer declared. Nothing here touches a data file.
 """
 
 from __future__ import annotations
@@ -66,9 +67,11 @@ from aws_data_pipeline_spark.sources.parquet import (
     _write_text_file,
 )
 from aws_data_pipeline_spark.sources.snapshots import (
+    _Catalog,
     _catalog_commit,
     _catalog_drop,
     _catalog_ids,
+    _catalog_manifest,
     _catalog_resolve,
     expire_snapshots,
     gc_retired_files,
@@ -76,7 +79,9 @@ from aws_data_pipeline_spark.sources.snapshots import (
     snapshot_zone,
 )
 
-_PUB_DIR = "_publications"
+_PUBLICATIONS = _Catalog(
+    "_publications", "p", "table string, zone string, snapshot_id int"
+)
 
 
 def publish_tables(
@@ -100,25 +105,22 @@ def publish_tables(
         (table, path, snapshot_zone(spark, path))
         for table, path in zones.items()
     )
-    return _catalog_commit(
-        spark, f"{root}/{_PUB_DIR}", "p", rows,
-        "table string, zone string, snapshot_id int",
-    )
+    return _catalog_commit(spark, root, _PUBLICATIONS, rows)
 
 
 def publication_ids(spark: SparkSession, root: str) -> list[int]:
     """Committed publication ids, oldest first (markers whose manifest
     still exists — :func:`expire_publications` removes the manifest)."""
-    return _catalog_ids(spark, f"{root}/{_PUB_DIR}", "p")
+    return _catalog_ids(spark, root, _PUBLICATIONS)
 
 
 def _pub_manifest(
     spark: SparkSession, root: str, pub_id: int
 ) -> dict[str, tuple[str, int]]:
-    rows = spark.read.parquet(
-        f"{root}/{_PUB_DIR}/p{pub_id}/manifest"
-    ).collect()
-    return {r.table: (r.zone, int(r.snapshot_id)) for r in rows}
+    return {
+        r.table: (r.zone, r.snapshot_id)
+        for r in _catalog_manifest(spark, root, _PUBLICATIONS, pub_id)
+    }
 
 
 def read_published(
@@ -176,7 +178,7 @@ def expire_publications(
         raise ValueError("keep_last must be >= 0")
     ids = publication_ids(spark, root)
     doomed = ids[: max(0, len(ids) - keep_last)]
-    _catalog_drop(spark, f"{root}/{_PUB_DIR}", "p", ids, doomed)
+    _catalog_drop(spark, root, _PUBLICATIONS, ids, doomed)
     return doomed
 
 
@@ -213,7 +215,7 @@ def gc_published_estate(
     referencing publications were dropped by the interrupted run (their
     snapshots would otherwise leak unpinned until some later publication
     touched the same zone)."""
-    pending = f"{root}/{_PUB_DIR}/_gc_pending"
+    pending = f"{root}/{_PUBLICATIONS.dir}/_gc_pending"
     _, jpending, fs = _hadoop_fs(spark, pending)
     zones_ever: set[str] = set()
     if fs.exists(jpending):

@@ -20,8 +20,10 @@ dependencies:
   single-file-create marker idiom (``path/_snapshots/_ptr/<N>`` —
   atomic on HDFS/local, one PUT on object stores). Snapshot ids and
   ``publish``'s publication ids are one id-catalog (``_catalog_*``
-  below): next id, manifest write, marker commit, listing, retention
-  drop and id resolution are written once for both. Verification is
+  below): next id, manifest write and read, marker commit, listing,
+  retention drop and id resolution are written once for both, and each
+  catalog declares its manifest schema once — the writer writes it and
+  every reader scans with it (no schema inference). Verification is
   (name, length, mtime): length catches truncation and most rewrites,
   the recorded modification time catches the same-length in-place
   rewrite that length alone would serve silently. (Not a content
@@ -56,20 +58,20 @@ dependencies:
 
 Scale posture: snapshot creation is one recursive listing (O(files)
 metadata calls, the zone_fingerprint class — no data file is read) and
-a driver-side manifest write of one row per file; reads verify the
-manifest against ONE fresh recursive listing (again O(files)), not a
-per-file RPC storm. Above ``spark_verify_threshold`` pinned files the
-verification COMPARE runs as a Spark join of the manifest frame
-against the listing frame — only the (bounded) broken set is ever
-collected — instead of the driver dict compare; the explicit file
-list the scan itself needs remains O(files) driver strings either
-way, the same class as Spark's own in-memory file index for any scan.
+a driver-side manifest write of one row per file. A read collects each
+manifest it needs once — one pinned-schema scan, one Spark job — and
+verifies it against ONE fresh recursive listing (again O(files)), not a
+per-file RPC storm, as one driver dict compare. The pinned set, the
+listing and the explicit file list the scan itself needs are all
+O(files) driver strings, the same class as Spark's own in-memory file
+index for any scan. A manifest written before ``mtime`` was recorded
+reads it as null, and its files verify by name and length.
 
 Interplay with the maintenance verbs, stated plainly: appends never
-break snapshots (old files are untouched); ``compact_zone`` with
-``respect_snapshots=True`` (the default) copies pinned originals into
-``_retired`` before rewriting, so committed snapshots stay readable
-across compaction — Iceberg-style safe time travel; ``merge_into_zone``
+break snapshots (old files are untouched); in-place ``compact_zone``
+copies pinned originals into ``_retired`` before rewriting, so
+committed snapshots stay readable across compaction — Iceberg-style
+safe time travel; ``merge_into_zone``
 / ``delete_from_zone`` / index-estate erasure REWRITE files without
 retiring them and so break any snapshot pinning them (by design —
 erasure MUST break snapshots that pin the forgotten rows, or the
@@ -84,9 +86,9 @@ its timestamped tombstones.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, Row, SparkSession
 
 from aws_data_pipeline_spark.operators import arrow_frame
 from aws_data_pipeline_spark.sources.parquet import (
@@ -99,13 +101,7 @@ from aws_data_pipeline_spark.sources.parquet import (
     qualified_path,
 )
 
-_SNAP_DIR = "_snapshots"
 _RETIRED_DIR = "_retired"
-
-# Above this many pinned files the verification compare runs as a Spark
-# join instead of the driver dict walk (the measurement-gated fast-path
-# pattern: measure first — one metadata-only parquet count — then pick).
-SPARK_VERIFY_THRESHOLD = 100_000
 
 
 class SnapshotBrokenError(RuntimeError):
@@ -135,31 +131,59 @@ class SnapshotBrokenError(RuntimeError):
 # commits it, so a crash leaves an invisible orphan, never a torn entry.
 
 
+class _Catalog(NamedTuple):
+    """One id-catalog: its directory under the owning path, the prefix of
+    its manifest directories, and the manifest schema (DDL) that
+    :func:`_catalog_commit` writes and :func:`_catalog_manifest` reads."""
+
+    dir: str
+    prefix: str
+    schema: str
+
+
+_SNAPSHOTS = _Catalog("_snapshots", "s", "file string, length long, mtime long")
+
+
 def _catalog_commit(
-    spark: SparkSession, catalog: str, prefix: str, rows: list, schema: str
+    spark: SparkSession, owner: str, cat: _Catalog, rows: list
 ) -> int:
     """Write ``rows`` as the next id's manifest, then commit it with the
     single marker create; returns the id. The next id is one past EVERY
     marker, the dataless high-water marker :func:`_catalog_drop` keeps
     included, so ids stay monotonic across retention."""
+    catalog = f"{owner}/{cat.dir}"
     new_id = (_max_numeric_marker(spark, f"{catalog}/{_PTR_DIR}") or 0) + 1
-    arrow_frame(spark, rows, schema).coalesce(1).write.mode(
+    arrow_frame(spark, rows, cat.schema).coalesce(1).write.mode(
         "overwrite"
-    ).parquet(f"{catalog}/{prefix}{new_id}/manifest")
+    ).parquet(f"{catalog}/{cat.prefix}{new_id}/manifest")
     _create_marker(spark, f"{catalog}/{_PTR_DIR}", new_id)
     return new_id
 
 
-def _catalog_ids(spark: SparkSession, catalog: str, prefix: str) -> list[int]:
+def _catalog_manifest(
+    spark: SparkSession, owner: str, cat: _Catalog, n: int
+) -> list[Row]:
+    """The rows of id ``n``'s manifest: one scan with the catalog's
+    declared schema and one collect — a single Spark job, no footer
+    inference. A column an older writer did not record reads as null."""
+    return (
+        spark.read.schema(cat.schema)
+        .parquet(f"{owner}/{cat.dir}/{cat.prefix}{n}/manifest")
+        .collect()
+    )
+
+
+def _catalog_ids(spark: SparkSession, owner: str, cat: _Catalog) -> list[int]:
     """Committed ids, oldest first: markers whose manifest still exists
     (a dataless marker — expiry's high-water mark, or a crash mid-drop —
     is not an id)."""
+    catalog = f"{owner}/{cat.dir}"
     jvm, _, fs = _hadoop_fs(spark, catalog)
     return sorted(
         n
         for n in _numeric_markers(spark, f"{catalog}/{_PTR_DIR}")
         if fs.exists(
-            jvm.org.apache.hadoop.fs.Path(f"{catalog}/{prefix}{n}/manifest")
+            jvm.org.apache.hadoop.fs.Path(f"{catalog}/{cat.prefix}{n}/manifest")
         )
     )
 
@@ -180,8 +204,8 @@ def _catalog_resolve(
 
 def _catalog_drop(
     spark: SparkSession,
-    catalog: str,
-    prefix: str,
+    owner: str,
+    cat: _Catalog,
     ids: Sequence[int],
     doomed: Sequence[int],
 ) -> None:
@@ -192,10 +216,11 @@ def _catalog_drop(
     (consumers key replay guards on ids; reuse would alias two different
     manifests). Dataless markers below it (an earlier high-water mark,
     crash leftovers) are then never needed again and go too."""
+    catalog = f"{owner}/{cat.dir}"
     jvm, _, fs = _hadoop_fs(spark, catalog)
     high_water = ids[-1] if ids and ids[-1] in doomed else None
     for n in doomed:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{catalog}/{prefix}{n}"), True)
+        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{catalog}/{cat.prefix}{n}"), True)
         if n != high_water:
             fs.delete(
                 jvm.org.apache.hadoop.fs.Path(f"{catalog}/{_PTR_DIR}/{n}"), False
@@ -229,17 +254,14 @@ def snapshot_zone(spark: SparkSession, path: str) -> int:
     rows = sorted(
         (f, ln, mt) for f, (ln, mt) in _committed_files(spark, path).items()
     )
-    return _catalog_commit(
-        spark, f"{path}/{_SNAP_DIR}", "s", rows,
-        "file string, length long, mtime long",
-    )
+    return _catalog_commit(spark, path, _SNAPSHOTS, rows)
 
 
 def snapshot_ids(spark: SparkSession, path: str) -> list[int]:
     """Committed snapshot ids, oldest first (ptr markers whose manifest
     directory still exists — :func:`expire_snapshots` removes the
     manifest)."""
-    return _catalog_ids(spark, f"{path}/{_SNAP_DIR}", "s")
+    return _catalog_ids(spark, path, _SNAPSHOTS)
 
 
 def _snapshot_commit_ms(spark: SparkSession, path: str, snap_id: int) -> int:
@@ -247,26 +269,31 @@ def _snapshot_commit_ms(spark: SparkSession, path: str, snap_id: int) -> int:
     FS metadata, recorded atomically with the commit itself, available
     for every snapshot ever committed (no manifest-schema dependency)."""
     _, marker, fs = _hadoop_fs(
-        spark, f"{path}/{_SNAP_DIR}/{_PTR_DIR}/{snap_id}"
+        spark, f"{path}/{_SNAPSHOTS.dir}/{_PTR_DIR}/{snap_id}"
     )
     return int(fs.getFileStatus(marker).getModificationTime())
-
-
-def _manifest_df(spark: SparkSession, path: str, snap_id: int) -> DataFrame:
-    df = spark.read.parquet(f"{path}/{_SNAP_DIR}/s{snap_id}/manifest")
-    if "mtime" not in df.columns:  # pre-mtime manifest generation
-        df = df.withColumn("mtime", F.lit(None).cast("long"))
-    return df
 
 
 def _manifest(
     spark: SparkSession, path: str, snap_id: int
 ) -> dict[str, tuple[int, int | None]]:
-    rows = _manifest_df(spark, path, snap_id).collect()
+    """{file: (length, mtime)} pinned by snapshot ``snap_id``; mtime is
+    None in a manifest written before it was recorded."""
     return {
-        r["file"]: (int(r["length"]), None if r["mtime"] is None else int(r["mtime"]))
-        for r in rows
+        r.file: (r.length, r.mtime)
+        for r in _catalog_manifest(spark, path, _SNAPSHOTS, snap_id)
     }
+
+
+def _manifests(
+    spark: SparkSession, path: str, from_id: int, to_id: int
+) -> tuple[dict, dict]:
+    """The manifests of two committed snapshots, each collected once."""
+    ids = snapshot_ids(spark, path)
+    from_id, to_id = (
+        _catalog_resolve(ids, sid, path, "snapshot") for sid in (from_id, to_id)
+    )
+    return _manifest(spark, path, from_id), _manifest(spark, path, to_id)
 
 
 def _tombstoned_relpaths(spark: SparkSession, path: str) -> dict[str, int]:
@@ -314,12 +341,12 @@ def _verify_and_split(
     spark: SparkSession,
     path: str,
     snap_id: int,
-    subset: Sequence[str] | None = None,
-    spark_verify_threshold: int = SPARK_VERIFY_THRESHOLD,
+    pinned: dict[str, tuple[int, int | None]],
 ) -> tuple[list[str], list[str]]:
-    """Verify pinned files (all of snapshot ``snap_id``, or only
-    ``subset``) against one fresh live listing plus the retired area,
-    and split them into (live, retired) relative paths for the scan.
+    """Verify ``pinned`` files of snapshot ``snap_id`` (all of its
+    manifest, or a diff's delta) against one fresh live listing plus the
+    retired area, and split them into (live, retired) relative paths for
+    the scan.
 
     A pinned file verifies when the LIVE zone serves it at the pinned
     length and — for mtime-recording manifests — the pinned mtime (the
@@ -327,75 +354,7 @@ def _verify_and_split(
     ``_retired/<rel>`` serves it at the pinned length (the copy's mtime
     is the copy's own, so the retired check is name+length; the retired
     area is engine-written, content-preserving by construction).
-    Everything else is broken and raises with attribution.
-
-    Above ``spark_verify_threshold`` pinned files the compare runs as a
-    Spark join (manifest frame vs listing frames; only broken rows and
-    the live/retired split are collected) — the measurement-gated scale
-    path; below it, the driver dict walk is the simpler honest shape."""
-    mdf = _manifest_df(spark, path, snap_id)
-    n_pinned = mdf.count()  # parquet-footer metadata count, no data read
-    if subset is not None and not subset:
-        return [], []
-
-    if n_pinned > spark_verify_threshold:
-        live_rows = [
-            (f, ln, mt) for f, (ln, mt) in _committed_files(spark, path).items()
-        ]
-        ret_rows = [
-            (f, ln)
-            for f, (ln, _) in _committed_files(
-                spark, f"{path}/{_RETIRED_DIR}"
-            ).items()
-        ]
-        live = arrow_frame(
-            spark, live_rows, "file string, live_len long, live_mt long"
-        )
-        ret = arrow_frame(spark, ret_rows, "file string, ret_len long")
-        m = mdf
-        if subset is not None:
-            m = m.join(
-                arrow_frame(spark, [(s,) for s in subset], "file string"),
-                "file",
-            )
-        j = (
-            m.join(live, "file", "left")
-            .join(ret, "file", "left")
-            .withColumn(
-                "ok_live",
-                (F.col("live_len") == F.col("length"))
-                & (F.col("mtime").isNull() | (F.col("live_mt") == F.col("mtime"))),
-            )
-            .withColumn("ok_ret", F.col("ret_len") == F.col("length"))
-        )
-        j = j.select("file", "ok_live", "ok_ret").localCheckpoint(eager=True)
-        broken = [
-            r["file"]
-            for r in j.filter(
-                ~F.coalesce("ok_live", F.lit(False))
-                & ~F.coalesce("ok_ret", F.lit(False))
-            ).collect()
-        ]
-        if broken:
-            raise SnapshotBrokenError(
-                path, snap_id, _attribute(spark, path, snap_id, broken)
-            )
-        live_rels = [
-            r["file"]
-            for r in j.filter(F.coalesce("ok_live", F.lit(False))).collect()
-        ]
-        ret_rels = [
-            r["file"]
-            for r in j.filter(
-                ~F.coalesce("ok_live", F.lit(False))
-                & F.coalesce("ok_ret", F.lit(False))
-            ).collect()
-        ]
-        return sorted(live_rels), sorted(ret_rels)
-
-    pinned = _manifest(spark, path, snap_id)
-    if subset is not None:
-        pinned = {rel: pinned[rel] for rel in subset}
+    Everything else is broken and raises with attribution."""
     current = _committed_files(spark, path)
     retired: dict[str, tuple[int, int]] | None = None  # lazy: rarely needed
     live_rels, ret_rels, broken_rels = [], [], []
@@ -449,10 +408,7 @@ def _scan(
 
 
 def read_zone_snapshot(
-    spark: SparkSession,
-    path: str,
-    snapshot_id: int | None = None,
-    spark_verify_threshold: int = SPARK_VERIFY_THRESHOLD,
+    spark: SparkSession, path: str, snapshot_id: int | None = None
 ) -> DataFrame:
     """The zone exactly as it was at ``snapshot_id`` (default: the latest
     snapshot). Verifies every pinned file against one fresh listing
@@ -467,7 +423,7 @@ def read_zone_snapshot(
         snapshot_ids(spark, path), snapshot_id, path, "snapshot"
     )
     live, retired = _verify_and_split(
-        spark, path, snapshot_id, spark_verify_threshold=spark_verify_threshold
+        spark, path, snapshot_id, _manifest(spark, path, snapshot_id)
     )
     if not live and not retired:
         raise ValueError(
@@ -480,8 +436,8 @@ def read_zone_snapshot(
 def snapshot_pinned_files(spark: SparkSession, path: str) -> set[str]:
     """Union of zone-relative file paths pinned by ANY committed snapshot
     — the do-not-delete set a compaction/GC job consults to keep
-    time-travel intact. ``compact_zone(respect_snapshots=True)`` copies
-    exactly these into ``_retired`` before rewriting; a maintenance job
+    time-travel intact. In-place ``compact_zone`` copies exactly these
+    into ``_retired`` before rewriting; a maintenance job
     that deletes a pinned file without retiring it breaks the pinning
     snapshot loudly on its next read."""
     out: set[str] = set()
@@ -567,7 +523,7 @@ def expire_snapshots(
         sid for sid in ids[: max(0, len(ids) - keep_last)]
         if sid not in floor
     ]
-    _catalog_drop(spark, f"{path}/{_SNAP_DIR}", "s", ids, doomed)
+    _catalog_drop(spark, path, _SNAPSHOTS, ids, doomed)
     return doomed
 
 
@@ -593,7 +549,7 @@ def retire_pinning_snapshots(
     doomed = [
         sid for sid in ids if any(hit(rel) for rel in _manifest(spark, path, sid))
     ]
-    _catalog_drop(spark, f"{path}/{_SNAP_DIR}", "s", ids, doomed)
+    _catalog_drop(spark, path, _SNAPSHOTS, ids, doomed)
     jvm, _, fs = _hadoop_fs(spark, path)
     for rel in sorted(_committed_files(spark, f"{path}/{_RETIRED_DIR}")):
         if hit(rel):
@@ -615,7 +571,8 @@ def snapshot_diff_files(
     immutable only until someone overwrites the path), so the diff must
     surface it rather than skip it. Mtimes compare only when both
     manifests record them (pre-mtime manifests fall back to length)."""
-    return _unmatched_pins(spark, path, from_id, to_id, lost=False)
+    before, after = _manifests(spark, path, from_id, to_id)
+    return _unmatched(after, before)
 
 
 def snapshot_lost_files(
@@ -627,23 +584,15 @@ def snapshot_lost_files(
     a (from, to] diff may re-serve rewritten rows. The strict diff mode
     refuses on this; probe it directly to decide between the strict and
     at-least-once consumption modes."""
-    return _unmatched_pins(spark, path, from_id, to_id, lost=True)
+    before, after = _manifests(spark, path, from_id, to_id)
+    return _unmatched(before, after)
 
 
-def _unmatched_pins(
-    spark: SparkSession, path: str, from_id: int, to_id: int, lost: bool
-) -> list[str]:
-    """The mirrored manifest comparison behind both diff probes: files one
-    side pins that the other does not pin at the same length (and mtime,
-    when both manifests record it) — ``to_id``'s side for the delta,
-    ``from_id``'s side when ``lost``."""
-    ids = snapshot_ids(spark, path)
-    from_id, to_id = (
-        _catalog_resolve(ids, sid, path, "snapshot") for sid in (from_id, to_id)
-    )
-    before = _manifest(spark, path, from_id)
-    after = _manifest(spark, path, to_id)
-    side, other = (before, after) if lost else (after, before)
+def _unmatched(side: dict, other: dict) -> list[str]:
+    """The mirrored manifest comparison behind both diff probes: files
+    ``side`` pins that ``other`` does not pin at the same length (and
+    mtime, when both manifests record it) — the to-manifest's side for
+    the delta, the from-manifest's side for lost files."""
 
     def unmatched(rel: str, length: int, mtime: int | None) -> bool:
         o = other.get(rel)
@@ -662,7 +611,6 @@ def read_zone_snapshot_diff(
     path: str,
     from_id: int,
     to_id: int,
-    spark_verify_threshold: int = SPARK_VERIFY_THRESHOLD,
     strict: bool = False,
 ) -> DataFrame:
     """Only the rows ADDED between two snapshots of an append-only zone —
@@ -685,9 +633,13 @@ def read_zone_snapshot_diff(
     files) whenever the from-manifest lost files by ``to_id`` — the
     fingerprint of a rewrite between the snapshots — rather than
     re-serving rewritten rows for the caller's idempotency key to
-    deduplicate. Use it for consumers with no such key."""
+    deduplicate. Use it for consumers with no such key.
+
+    The two manifests are collected once; the lost-file check, the delta
+    and its verification all compare those same two dicts."""
+    before, after = _manifests(spark, path, from_id, to_id)
     if strict:
-        gone = snapshot_lost_files(spark, path, from_id, to_id)
+        gone = _unmatched(before, after)
         if gone:
             some = ", ".join(gone[:5]) + ("…" if len(gone) > 5 else "")
             raise ValueError(
@@ -697,14 +649,13 @@ def read_zone_snapshot_diff(
                 "rows in the delta may be re-served copies; consume with "
                 "an idempotency key (strict=False) or re-baseline"
             )
-    delta = snapshot_diff_files(spark, path, from_id, to_id)
+    delta = _unmatched(after, before)
     if not delta:
         raise ValueError(
             f"snapshots s{from_id}..s{to_id} of {path} differ by no files — "
             "an empty delta has no schema; probe snapshot_diff_files first"
         )
     live, retired = _verify_and_split(
-        spark, path, to_id, subset=delta,
-        spark_verify_threshold=spark_verify_threshold,
+        spark, path, to_id, {rel: after[rel] for rel in delta}
     )
     return _scan(spark, path, live, retired)

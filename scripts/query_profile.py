@@ -1,6 +1,14 @@
 """Per-query execution profile: wall seconds, Spark JOB count, stage/task
 counts, and executed-plan shuffle metrics for each bench headline query.
 
+The shuffle columns (``shufMB``, ``exch``, ``bcastMB``) come from
+:func:`audit`, which walks the executed adaptive plan: bytes written to
+shuffle, number of shuffle exchanges, and broadcast build size. This
+turns the README's "minimize shuffles / broadcast the dims" rules into
+numbers — e.g. a 6-table star join whose shuffle traffic is a few hundred
+KB while the scanned fact is tens of MB is doing its reduction map-side,
+which is the shape that survives 100 TB.
+
 Motivation (optimization round 13, guide §1): the bench's multi-second
 queries at sf0.1 are all multi-ACTION queries (iterative components,
 chained global ntiles, persisted-index probes). At this scale their cost
@@ -50,9 +58,46 @@ sys.path.insert(0, ".")
 from aws_data_pipeline_spark.plans import DEMOTED, load_registry  # noqa: E402
 from aws_data_pipeline_spark.session import get_spark  # noqa: E402
 from bench import HEADLINE  # noqa: E402
-from scripts.shuffle_audit import audit  # noqa: E402
 
 _DEREF = "m\nd"  # py4j MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+
+
+def audit(df) -> dict:
+    """Walk the executed adaptive plan, summing shuffle/broadcast metrics.
+    Reused exchanges are counted once (visited by plan-node id)."""
+    totals = {"shuffle_bytes": 0, "exchanges": 0, "broadcast_bytes": 0}
+    visited: set[int] = set()
+
+    def walk(node) -> None:
+        nid = node.id()
+        if nid in visited:
+            return
+        visited.add(nid)
+        name = node.nodeName()
+        vals = {}
+        it = node.metrics().iterator()
+        while it.hasNext():
+            kv = it.next()
+            vals[kv._1()] = kv._2().value()
+        if name == "Exchange":
+            totals["shuffle_bytes"] += vals.get("shuffleBytesWritten", 0)
+            totals["exchanges"] += 1
+        elif name == "BroadcastExchange":
+            totals["broadcast_bytes"] += vals.get("dataSize", 0)
+        if name == "AdaptiveSparkPlan":
+            walk(node.executedPlan())
+            return
+        # query-stage wrappers hold their subplan in .plan()
+        try:
+            walk(node.plan())
+        except Exception:
+            pass
+        it = node.children().iterator()
+        while it.hasNext():
+            walk(it.next())
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return totals
 
 
 class Py4jCalls:

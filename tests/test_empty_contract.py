@@ -14,11 +14,15 @@ KMeans does not pass.
 
 from __future__ import annotations
 
+import glob
+import shutil
+
 import pyarrow.parquet as pq
 import pytest
 
 from aws_data_pipeline_spark.catalog import TABLES
 from aws_data_pipeline_spark.plans import DEMOTED, load_registry
+from aws_data_pipeline_spark.plans.llm import _warehouse_index_path
 from tests.conftest import SF_DIR
 from tests.oracle import run_compare
 
@@ -44,12 +48,17 @@ EXPECTED_RAISE = {
 
 
 @pytest.fixture(scope="session")
-def empty_sf_dir(tmp_path_factory) -> str:
+def empty_sf_dir(tmp_path_factory):
+    """Empty copies of every source table. The registry indexes built
+    over them live under ``spark-warehouse/``, keyed by this directory's
+    path, so they are removed at teardown."""
     d = tmp_path_factory.mktemp("sf_empty")
     for t in TABLES:
         schema = pq.read_schema(f"{SF_DIR}/{t}.parquet")
         pq.write_table(schema.empty_table(), str(d / f"{t}.parquet"))
-    return str(d)
+    yield str(d)
+    for idx in glob.glob(_warehouse_index_path(str(d), "*")):
+        shutil.rmtree(idx)
 
 
 @pytest.mark.parametrize("name", SQL_QUERIES)

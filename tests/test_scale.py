@@ -317,14 +317,14 @@ def test_hot_hash_cap_near_linear_on_boilerplate_corpus(spark):
     corpus of identical size — shuffle bytes and wall-time near-linear,
     because the flagged-hot rows bypass the count-over-window's sort
     instead of piling 30k occurrences into one window partition. Measured
-    with the shuffle_audit plumbing over the executed adaptive plan; the
+    with the query_profile shuffle audit over the executed adaptive plan; the
     planted-toy equivalence test (test_llm.py) pins correctness, this
     pins the SCALE claim with numbers."""
     import sys
     import time
 
     sys.path.insert(0, ".")
-    from scripts.shuffle_audit import audit
+    from scripts.query_profile import audit
 
     from aws_data_pipeline_spark.operators.dedup import duplicate_spans
 
@@ -394,7 +394,7 @@ def test_jaccard_hot_shingle_cap_near_linear_on_boilerplate_corpus(spark):
     import time
 
     sys.path.insert(0, ".")
-    from scripts.shuffle_audit import audit
+    from scripts.query_profile import audit
 
     from aws_data_pipeline_spark.operators.dedup import jaccard_pairs
 

@@ -594,8 +594,8 @@ def test_broken_snapshots_attribute_expiry_vs_rewrite(spark, tmp_path):
 
     from aws_data_pipeline_spark.sources import snapshots as S
     from aws_data_pipeline_spark.sources.parquet import (
-        compact_zone,
         expire_zone_partitions,
+        merge_into_zone,
     )
 
     zone = str(tmp_path / "zone")
@@ -620,10 +620,12 @@ def test_broken_snapshots_attribute_expiry_vs_rewrite(spark, tmp_path):
     # a fresh snapshot of the post-expiry state reads fine...
     s2 = S.snapshot_zone(spark, zone)
     assert S.read_zone_snapshot(spark, zone, s2).count() == 4
-    # ...until an in-place compaction that OPTS OUT of snapshot respect
-    # rewrites its files (the pre-r12 loud-break contract, still the
-    # right mode for never-snapshotted zones)
-    compact_zone(spark, zone, partition_by=["year"], respect_snapshots=False)
+    # ...until a rewrite that does not retire files (a merge of an
+    # unchanged row rewrites its whole partition) replaces its files
+    merge_into_zone(
+        spark, zone, spark.createDataFrame([(2024, 0)], "year int, v long"),
+        ["v"], ["year"],
+    )
     with pytest.raises(S.SnapshotBrokenError) as ei2:
         S.read_zone_snapshot(spark, zone, s2)
     assert all(
@@ -984,11 +986,10 @@ def test_erasure_retires_pinning_snapshots(spark, tmp_path):
     assert S.read_zone_snapshot(spark, zone, s2).count() == 1
 
 
-def test_spark_side_snapshot_verification_path(spark, tmp_path):
-    """VERDICT r11 item 7: above the pinned-file bound the verification
-    compare runs as a Spark join (threshold forced to 0 here) — same
-    green reads, same retired resolution, same broken attribution as
-    the driver dict walk."""
+def test_snapshot_verification_resolves_retired_copies(spark, tmp_path):
+    """The one verification path: a green read, retired resolution after
+    compaction, a damaged retired copy reported as rewritten-or-corrupt,
+    and the live snapshot unaffected."""
     import glob as g
     import os
 
@@ -1004,28 +1005,83 @@ def test_spark_side_snapshot_verification_path(spark, tmp_path):
     ).write.partitionBy("year").parquet(zone)
     s1 = S.snapshot_zone(spark, zone)
 
-    got = S.read_zone_snapshot(spark, zone, s1, spark_verify_threshold=0)
+    got = S.read_zone_snapshot(spark, zone, s1)
     assert sorted((r.year, r.v) for r in got.collect()) == [
         (2023, 0), (2023, 1), (2023, 2), (2024, 0), (2024, 1), (2024, 2)
     ]
 
-    # retired resolution through the join path
+    # retired resolution
     compact_zone(spark, zone, partition_by=["year"])
-    again = S.read_zone_snapshot(spark, zone, s1, spark_verify_threshold=0)
+    again = S.read_zone_snapshot(spark, zone, s1)
     assert again.count() == 6
 
-    # broken detection + attribution through the join path: damage a
-    # retired copy (the only generation serving s1's 2023 files)
+    # broken detection + attribution: damage a retired copy (the only
+    # generation serving s1's 2023 files)
     s2 = S.snapshot_zone(spark, zone)
     victim = g.glob(f"{zone}/_retired/year=2023/*.parquet")[0]
     os.remove(victim)
     with pytest.raises(S.SnapshotBrokenError) as ei:
-        S.read_zone_snapshot(spark, zone, s1, spark_verify_threshold=0)
+        S.read_zone_snapshot(spark, zone, s1)
     assert all(
         why == "rewritten-or-corrupt" for why in ei.value.broken.values()
     )
-    # the live snapshot is unaffected either way
-    assert S.read_zone_snapshot(spark, zone, s2, spark_verify_threshold=0).count() == 6
+    # the live snapshot is unaffected
+    assert S.read_zone_snapshot(spark, zone, s2).count() == 6
+
+
+def test_snapshot_reads_one_job_per_manifest(spark, tmp_path):
+    """Every manifest a read needs is collected once, with the schema its
+    writer declared (one Spark job, no footer inference): a snapshot
+    read is its manifest plus the scan's own schema job, a diff reads
+    its two manifests once whether strict or not, a publication read
+    adds only the publication manifest, and the pinned-set probes cost
+    one job per manifest."""
+    from aws_data_pipeline_spark.sources import publish as P
+    from aws_data_pipeline_spark.sources import snapshots as S
+
+    zone = str(tmp_path / "zone")
+    root = str(tmp_path / "estate")
+    for y in (2023, 2024):
+        spark.createDataFrame(
+            [(y, i) for i in range(3)], "year int, v long"
+        ).write.mode("append").partitionBy("year").parquet(zone)
+        S.snapshot_zone(spark, zone)
+    P.publish_tables(spark, root, {"t": zone})  # the zone's s3
+
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    got = {
+        "read": jobs("snap-read", lambda: S.read_zone_snapshot(spark, zone, 1)),
+        "diff": jobs(
+            "snap-diff", lambda: S.read_zone_snapshot_diff(spark, zone, 1, 2)
+        ),
+        "strict": jobs(
+            "snap-strict",
+            lambda: S.read_zone_snapshot_diff(spark, zone, 1, 2, strict=True),
+        ),
+        "published": jobs(
+            "pub-read", lambda: P.read_published(spark, root, "t")
+        ),
+        "pinned": jobs(
+            "snap-pinned", lambda: S.snapshot_pinned_files(spark, zone)
+        ),
+        "pub_pinned": jobs(
+            "pub-pinned", lambda: P.publication_pinned_snapshots(spark, root)
+        ),
+    }
+    bound = {
+        "read": 2, "diff": 3, "strict": 3, "published": 3,
+        "pinned": 3, "pub_pinned": 1,
+    }
+    assert all(got[k] <= bound[k] for k in bound), got
 
 
 def test_strict_diff_refuses_rewritten_zones(spark, tmp_path):
@@ -1854,8 +1910,7 @@ def test_index_and_metadata_writes_start_no_python_rdd(
     zone = f"{d}/zone"
     docs.write.parquet(zone)
     snap = SN.snapshot_zone(spark, zone)
-    # spark_verify_threshold=0: the Spark-side verification frames
-    pinned = SN.read_zone_snapshot(spark, zone, snap, spark_verify_threshold=0)
+    pinned = SN.read_zone_snapshot(spark, zone, snap)
     assert pinned.count() == 6
     assert P.publish_tables(spark, d, {"docs": zone}) == 1
 
