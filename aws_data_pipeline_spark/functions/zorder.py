@@ -23,9 +23,11 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+_BITS = 16  # quantization bits per dimension of the 63-bit Morton key
 
-def quantize(col: Column, lo: float, hi: float, bits: int = 16) -> Column:
-    """Linear map of a numeric column onto ``[0, 2^bits)`` — the rank
+
+def quantize(col: Column, lo: float, hi: float) -> Column:
+    """Linear map of a numeric column onto ``[0, 2^16)`` — the rank
     proxy the interleave needs. NULLs and out-of-range values clamp to the
     edges (a NULL must land SOMEWHERE deterministic; the edge keeps it
     out of every selective interior range)."""
@@ -34,10 +36,11 @@ def quantize(col: Column, lo: float, hi: float, bits: int = 16) -> Column:
         return F.lit(0).cast("long")
     span = float(hi) - float(lo)
     scaled = (col.cast("double") - F.lit(float(lo))) / F.lit(span) * F.lit(
-        float((1 << bits) - 1)
+        float((1 << _BITS) - 1)
     )
     q = F.round(scaled).cast("long")
-    return F.greatest(F.lit(0), F.least(F.lit((1 << bits) - 1), F.coalesce(q, F.lit(0))))
+    top = F.lit((1 << _BITS) - 1)
+    return F.greatest(F.lit(0), F.least(top, F.coalesce(q, F.lit(0))))
 
 
 def zorder_proxy(col: Column, dtype) -> Column:
@@ -84,19 +87,19 @@ def zorder_proxy(col: Column, dtype) -> Column:
     )
 
 
-def zorder_key(quantized: Sequence[Column], bits: int = 16) -> Column:
-    """Morton interleave of pre-quantized ``[0, 2^bits)`` longs: bit ``i``
+def zorder_key(quantized: Sequence[Column]) -> Column:
+    """Morton interleave of pre-quantized ``[0, 2^16)`` longs: bit ``i``
     of dimension ``d`` lands at position ``i * D + d``. Pure shift/mask
-    expression — ``bits × D`` terms, all inside codegen. ``bits * D``
+    expression — ``16 × D`` terms, all inside codegen. ``16 * D``
     must fit a signed long (≤ 63)."""
     d_n = len(quantized)
     if d_n == 0:
         raise ValueError("zorder_key needs at least one column")
-    if bits * d_n > 63:
-        raise ValueError(f"bits*dims = {bits * d_n} exceeds a signed long")
+    if _BITS * d_n > 63:
+        raise ValueError(f"bits*dims = {_BITS * d_n} exceeds a signed long")
     key = F.lit(0).cast("long")
     for d, q in enumerate(quantized):
-        for i in range(bits):
+        for i in range(_BITS):
             bit = F.shiftright(q, i).bitwiseAND(F.lit(1))
             key = key + F.shiftleft(bit, i * d_n + d)
     return key
@@ -106,16 +109,16 @@ def zorder_cluster_zone(
     spark: SparkSession,
     path: str,
     cols: Sequence[str],
-    bits: int = 16,
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> int:
-    """Rewrite a zone clustered on the Z-order key of ``cols`` (domains
-    taken from one min/max scan of the data). Same rewrite contract as
-    ``compact_zone``: range-partition across ~target-size files, sort
-    within, then the in-place ``_compacting`` swap (the zone directory
-    is never truncated; ``_``-prefixed metadata trees survive — see
-    compact_zone's docstring). The key column is computational only and
-    is dropped before the write; returns the output task/file count.
+    """Rewrite a zone clustered on the Z-order key of ``cols`` (16 bits
+    per dimension, domains taken from one min/max scan of the data). Same
+    rewrite contract as ``compact_zone``: range-partition across
+    ~target-size files, sort within, then the in-place ``_compacting`` swap
+    (the zone directory is never truncated; ``_``-prefixed metadata trees
+    survive — see compact_zone's docstring). The key column is computational
+    only and is dropped before the write; returns the output task/file
+    count.
 
     Non-numeric dimensions (date, timestamp, string) are routed through
     :func:`zorder_proxy` — an order-preserving numeric stand-in — so the
@@ -141,11 +144,11 @@ def zorder_cluster_zone(
         # truncate-rewrite here would only risk the data for a no-op
         return 0
     qs = [
-        quantize(p, stats[f"lo_{i}"], stats[f"hi_{i}"], bits)
+        quantize(p, stats[f"lo_{i}"], stats[f"hi_{i}"])
         for i, p in enumerate(proxies)
     ]
     return clustered_rewrite(
-        df.withColumn("__zkey", zorder_key(qs, bits)),
+        df.withColumn("__zkey", zorder_key(qs)),
         path,
         ["__zkey"],
         target_file_bytes,

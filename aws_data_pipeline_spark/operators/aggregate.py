@@ -307,11 +307,9 @@ def winsorized_scale(
     df: DataFrame,
     group_cols: Sequence[str],
     value_col: str,
-    lo: float = 0.05,
-    hi: float = 0.95,
 ) -> DataFrame:
     """Per-group robust scaling for heuristic scores: clip ``value_col`` to
-    the group's [lo, hi] nearest-rank quantiles (winsorization — outliers
+    the group's [0.05, 0.95] nearest-rank quantiles (winsorization — outliers
     saturate instead of stretching the range), then min-max scale the
     clipped value to [0, 1] within the group. This is how per-source
     quality scores become COMPARABLE across sources with different score
@@ -334,8 +332,9 @@ def winsorized_scale(
     (least/greatest skip NULLs) and ``_scaled`` is NULL. A normalization
     operator must never make rows disappear.
     """
-    qlo, qhi = (_quantile_name(p) for p in (lo, hi))
-    q = grouped_quantiles(df, group_cols, value_col, ps=(lo, hi))
+    ps = (0.05, 0.95)
+    qlo, qhi = (_quantile_name(p) for p in ps)
+    q = grouped_quantiles(df, group_cols, value_col, ps=ps)
     qd = q.select(
         *[F.col(c).alias(f"__g_{c}") for c in group_cols], qlo, qhi
     )
@@ -455,15 +454,14 @@ def rfm_scores(
     date_col: str,
     amount_col: str,
     anchor: str,
-    buckets: int = 5,
 ) -> DataFrame:
     """RFM customer segmentation — the classic marketing triad computed
     exactly: per key, Recency (days from last activity to ``anchor``),
     Frequency (activity count), Monetary (decimal-exact amount sum), each
-    scored into ``buckets`` quantile bands (1 = worst, ``buckets`` =
-    best) and combined into the standard named segments. ``anchor`` is a
-    caller-supplied literal date, never now(): the same history must
-    score identically forever (the injectable-clock rule).
+    scored into 5 quantile bands (1 = worst, 5 = best) and combined into the
+    standard named segments. ``anchor`` is a caller-supplied literal date,
+    never now(): the same history must score identically forever (the
+    injectable-clock rule).
 
     Scores are EXACT SQL ntile semantics over total orders (metric,
     key tie-break), computed by the distributed global-rank machinery
@@ -503,7 +501,7 @@ def rfm_scores(
     # full-partition materializing action (the CC/global-rank fusion
     # rule), so the separate eager-materialization job disappears.
     base = base.localCheckpoint(eager=False)
-    hi = buckets  # best band
+    hi = 5  # best band
     # Kept CHAINED deliberately (r13 measurement): restructuring the three
     # passes to rank projected (key, metric) pairs in parallel driver
     # threads and rejoin on the key was tried and measured WORSE at sf0.1
@@ -524,7 +522,7 @@ def rfm_scores(
             if direction == "desc"
             else [F.col(metric).asc(), F.col(key_col).asc()]
         )
-        scored = global_ntile(scored, buckets, order, out_col=score)
+        scored = global_ntile(scored, hi, order, out_col=score)
     r, f, m = F.col("r_score"), F.col("f_score"), F.col("m_score")
     segment = (
         F.when((r >= hi - 1) & (f >= hi - 1) & (m >= hi - 1), "champion")
@@ -551,9 +549,8 @@ def event_paths(
     ts_col: str,
     type_col: str,
     tiebreak_col: str,
-    top: int = 20,
 ) -> DataFrame:
-    """Top event-type TRIGRAM paths: the most common three-step journeys
+    """Top-20 event-type TRIGRAM paths: the most common three-step journeys
     (``view > click > purchase``) across all users — funnel DISCOVERY,
     where the funnel queries measure a path someone already named, this
     surfaces which paths are worth naming. Consecutive same-user steps
@@ -563,7 +560,7 @@ def event_paths(
     Scale shape: one per-user window (two leads over ONE shared sort —
     Spark plans a single WindowExec), one domain-bounded grouped count
     (≤ C³ rows), a distributed TakeOrdered global top-k, and ranks
-    assigned over the ``top``-row result only (the collocation_pmi
+    assigned over the 20-row result only (the collocation_pmi
     discipline — never a data-sized unpartitioned window).
     """
     w = Window.partitionBy(user_col).orderBy(
@@ -591,7 +588,7 @@ def event_paths(
             "n",
         )
     )
-    head = paths.orderBy(F.col("n").desc(), F.col("path").asc()).limit(top)
+    head = paths.orderBy(F.col("n").desc(), F.col("path").asc()).limit(20)
     rw = Window.orderBy(F.col("n").desc(), F.col("path").asc())
     return head.withColumn("rank", F.row_number().over(rw).cast("int"))
 
@@ -655,12 +652,11 @@ def conversion_latency(
     from_type: str,
     to_type: str,
     window_seconds: int,
-    ps: Sequence[float] = (0.5, 0.9),
 ) -> DataFrame:
     """Conversion-latency distribution: for every ``from_type`` event
     that converts (a same-user ``to_type`` event within
     ``window_seconds``), the time to its FIRST conversion — summarized
-    as one row of count / mean / exact nearest-rank quantiles in
+    as one row of count / mean / exact nearest-rank p50 and p90 in
     microseconds. The latency twin of the funnel: the funnel counts who
     converts, this measures how fast ("p90 click-to-purchase is 7
     minutes" is an SLA, a UX metric, and an attribution-window sanity
@@ -714,6 +710,7 @@ def conversion_latency(
     )
     import math
 
+    ps = (0.5, 0.9)
     if n == 0:
         # Empty-input contract (VERDICT r12 item 3): zero conversions is
         # an ANSWER, not an empty frame — emit the one summary row with

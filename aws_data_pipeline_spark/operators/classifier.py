@@ -88,10 +88,8 @@ def train_quality_classifier(
     is_positive: Column,
     id_col: str = "doc_id",
     text_col: str = "text",
-    reg_param: float = 0.01,
     max_iter: int = 50,
     train_frac: float = 1.0,
-    seed: int = 42,
 ):
     """Fit the LR quality model; returns the fitted Spark ML model.
 
@@ -106,7 +104,7 @@ def train_quality_classifier(
         F.col(id_col), F.col(text_col), is_positive.cast("double").alias("label")
     )
     if train_frac < 1.0:
-        labeled = labeled.sample(fraction=train_frac, seed=seed)
+        labeled = labeled.sample(fraction=train_frac, seed=42)
     # loud empty-input contract (same as the index trainers): a model fit
     # on nothing is a caller error, not a Summarizer crash inside L-BFGS.
     # Probed on the PRE-feature frame (scorable = non-null text) so the
@@ -120,7 +118,7 @@ def train_quality_classifier(
     lr = LogisticRegression(
         featuresCol="features",
         labelCol="label",
-        regParam=reg_param,
+        regParam=0.01,
         maxIter=max_iter,
         standardization=True,
     )

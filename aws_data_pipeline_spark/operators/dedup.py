@@ -35,6 +35,8 @@ _HASH_PARAMS: list[tuple[int, int]] = [
     ((2654435761 * (i + 1) + 40503) % 2147483629 + 1, (40503 * (i + 1) + 2654435761) % _MERSENNE)
     for i in range(16)
 ]
+_CC_MAX_ITER = 50  # connected_components' min-label propagation rounds
+_NEW_ID_OFFSET = 1 << 40  # lifts new-batch node ids above every corpus id
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
@@ -304,23 +306,21 @@ def _signatures_from_sets(
     return hashed.select("doc", sig.alias("sig"))
 
 
-def choose_minhash_params(
-    threshold: float, num_perm: int = 16
-) -> tuple[int, int]:
+def choose_minhash_params(threshold: float) -> tuple[int, int]:
     """Pick ``(num_perm_used, bands)`` for :func:`minhash_lsh_pairs` given a
     Jaccard threshold — the banding S-curve rule as code. For ``b`` bands of
     ``r`` rows the curve's midpoint (50%-recall similarity) sits at
-    ``(1/b)^(1/r)``; choose the (r, b) with ``r*b <= num_perm`` whose
+    ``(1/b)^(1/r)``; choose the (r, b) with ``r*b <= 16`` whose
     midpoint lands closest below the threshold, so pairs AT the threshold
     are already on the high-recall side. Candidate precision is exact
     regardless (every candidate is verified with true Jaccard) — the choice
-    trades candidate volume against recall only. ``num_perm`` is capped by
-    the signature budget (16 precomputed permutations here; signatures
-    shuffle as one long per permutation, so raising it scales linearly).
+    trades candidate volume against recall only. 16 is the signature
+    budget (16 precomputed permutations; signatures shuffle as one long
+    per permutation, so raising it scales linearly).
     """
     if not 0.0 < threshold < 1.0:
         raise ValueError("threshold must be in (0, 1)")
-    num_perm = min(num_perm, len(_HASH_PARAMS))
+    num_perm = len(_HASH_PARAMS)
     best: tuple[float, int, int] | None = None
     for r in range(1, num_perm + 1):
         b = num_perm // r
@@ -501,22 +501,17 @@ def corpus_sets_and_bands(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = 5,
-    num_perm: int = 16,
-    bands: int = 4,
     hash_fn: str = "xxhash64",
-    persist: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """The RESIDENT twin of :func:`build_lsh_text_index`: derive the
     (shingle sets, banded keys) pair an incremental probe
     (:func:`neardup_against_corpus`) joins against, in memory instead of
     on disk. One public entry point so callers never hand-assemble the
     signature/banding internals (two call sites had already drifted on
-    parameters before this existed)."""
-    sets = shingle_sets(df, id_col, text_col, k, persist=persist)
-    banded = _banded_keys(
-        _signatures_from_sets(sets, num_perm, hash_fn), bands, num_perm // bands
-    )
+    parameters before this existed). Shingles k=5, 16 permutations in 4
+    bands — :func:`neardup_against_corpus`'s defaults."""
+    sets = shingle_sets(df, id_col, text_col)
+    banded = _banded_keys(_signatures_from_sets(sets, 16, hash_fn), 4, 4)
     return sets, banded
 
 
@@ -768,9 +763,8 @@ def simhash_pairs(
 
 def connected_components(
     pairs: DataFrame,
-    src: str = "doc1",
-    dst: str = "doc2",
-    max_iter: int = 50,
+    src_col: str = "doc1",
+    dst_col: str = "doc2",
     small_graph_max: int = 100_000,
 ) -> DataFrame:
     """Connected components over near-dup candidate pairs: (node, label)
@@ -782,8 +776,9 @@ def connected_components(
     its own and its neighbors' labels; converges in O(graph diameter) rounds
     — near-dup clusters are shallow (diameter rarely > a few hops), so this
     beats the constant-factor-heavier large-star/small-star for dedup
-    workloads. Each round is one shuffle (join on node) + one aggregate;
-    ``localCheckpoint`` cuts the lineage so plans stay O(1) per round.
+    workloads (at most 50 rounds, then a loud failure). Each round is one
+    shuffle (join on node) + one aggregate; ``localCheckpoint`` cuts the
+    lineage so plans stay O(1) per round.
 
     Two round-count levers, because per-round JOB overhead (not data) is
     the dominant cost for the shallow graphs dedup produces:
@@ -813,7 +808,7 @@ def connected_components(
     pair graph with billions of edges never collects); pass
     ``small_graph_max=0`` to force the distributed path.
     """
-    e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    e = pairs.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
     # no .distinct() on the symmetrized union (r13, guide §2.4 "a distinct
     # on data that is already unique"): every caller feeds DISTINCT
     # single-orientation pairs (pair generators end in groupBy/distinct),
@@ -844,7 +839,7 @@ def connected_components(
         # sequential job before the loop
         .localCheckpoint(eager=False)
     )
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ITER):
         neigh = (
             edges.join(labels, edges.v == labels.node)
             .groupBy("u")
@@ -889,7 +884,7 @@ def connected_components(
         # the alternating large-star/small-star algorithm (or a raised
         # max_iter), not a wrong answer.
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
+            f"connected_components did not converge in {_CC_MAX_ITER} rounds "
             "— graph diameter exceeds the budget; raise max_iter or use "
             "an alternating-algorithm variant for deep chains"
         )
@@ -963,7 +958,6 @@ def incremental_cluster_assignments(
     new_pairs: DataFrame,
     corpus_assignments: DataFrame,
     id_col: str = "doc_id",
-    id_offset: int = 1 << 40,
 ) -> DataFrame:
     """Assign a NEW batch to duplicate clusters without re-clustering the
     corpus — the companion of :func:`neardup_against_corpus` that closes
@@ -988,10 +982,9 @@ def incremental_cluster_assignments(
 
     Mechanically, corpus-preference is encoded in the node ids fed to
     :func:`connected_components`: corpus canonicals keep their id, new
-    docs get ``id + id_offset`` — min-label propagation then proves rule
-    1/2 as a plain min. ``id_offset`` must exceed every corpus id (the
-    default 2^40 covers any practical id space; ids at or above it must
-    pass a larger offset).
+    docs get ``id + 2^40`` — min-label propagation then proves rule
+    1/2 as a plain min. The offset must exceed every corpus id (2^40
+    covers any practical id space).
 
     Returns (doc_id, canonical_doc_id, is_duplicate) for NEW docs only.
     """
@@ -1004,19 +997,19 @@ def incremental_cluster_assignments(
             "corpus_id",
         )
         .select(
-            (F.col("new_id") + id_offset).alias("doc1"),
+            (F.col("new_id") + _NEW_ID_OFFSET).alias("doc1"),
             F.col("canon").alias("doc2"),
         )
         .distinct()
     )
     enc_new = new_pairs.select(
-        (F.col("doc1") + id_offset).alias("doc1"),
-        (F.col("doc2") + id_offset).alias("doc2"),
+        (F.col("doc1") + _NEW_ID_OFFSET).alias("doc1"),
+        (F.col("doc2") + _NEW_ID_OFFSET).alias("doc2"),
     )
     labels = connected_components(enc_cross.unionByName(enc_new))
-    decoded = labels.filter(F.col("node") >= id_offset).select(
-        (F.col("node") - id_offset).alias(id_col),
-        F.when(F.col("label") >= id_offset, F.col("label") - id_offset)
+    decoded = labels.filter(F.col("node") >= _NEW_ID_OFFSET).select(
+        (F.col("node") - _NEW_ID_OFFSET).alias(id_col),
+        F.when(F.col("label") >= _NEW_ID_OFFSET, F.col("label") - _NEW_ID_OFFSET)
         .otherwise(F.col("label"))
         .alias("canonical_doc_id"),
     )
@@ -1038,7 +1031,6 @@ def cluster_bridges(
     new_pairs: DataFrame,
     corpus_assignments: DataFrame,
     id_col: str = "doc_id",
-    id_offset: int = 1 << 40,
 ) -> DataFrame:
     """The compaction trigger for :func:`incremental_cluster_assignments`:
     pairs of DISTINCT corpus canonicals that a new batch connects into one
@@ -1060,17 +1052,17 @@ def cluster_bridges(
             "corpus_id",
         )
         .select(
-            (F.col("new_id") + id_offset).alias("doc1"),
+            (F.col("new_id") + _NEW_ID_OFFSET).alias("doc1"),
             F.col("canon").alias("doc2"),
         )
         .distinct()
     )
     enc_new = new_pairs.select(
-        (F.col("doc1") + id_offset).alias("doc1"),
-        (F.col("doc2") + id_offset).alias("doc2"),
+        (F.col("doc1") + _NEW_ID_OFFSET).alias("doc1"),
+        (F.col("doc2") + _NEW_ID_OFFSET).alias("doc2"),
     )
     labels = connected_components(enc_cross.unionByName(enc_new))
-    canons = labels.filter(F.col("node") < id_offset).select(
+    canons = labels.filter(F.col("node") < _NEW_ID_OFFSET).select(
         F.col("node").alias("canonical"), F.col("label").alias("component")
     )
     a, b = canons.alias("a"), canons.alias("b")
@@ -1088,7 +1080,6 @@ def line_dedup(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    sep: str = "\n",
 ) -> DataFrame:
     """C4-style line-level exact dedup: every distinct line keeps only its
     FIRST corpus-wide occurrence (min (doc, position) — deterministic);
@@ -1103,16 +1094,11 @@ def line_dedup(
     window first-occurrence filter, then a per-doc reassembly aggregate —
     no pairwise comparison anywhere, so cost is O(total lines), and a
     hot boilerplate line is one window group (skew-bounded by its count).
-
-    ``sep`` is a LITERAL separator on both the split and the reassembly
-    side (``F.split`` takes a regex, so the split pattern is
-    ``\\Q...\\E``-quoted): sentence-level dedup with ``sep='.'`` splits on
-    the dot, not on every character.
     """
     lines = widen_narrow_input(df).select(
         F.col(id_col).alias("doc"),
         F.posexplode(
-            F.split(F.col(text_col), "\\Q" + sep + "\\E")
+            F.split(F.col(text_col), "\\Q\n\\E")
         ).alias("pos", "line"),
     )
     w = Window.partitionBy("line").orderBy("doc", "pos")
@@ -1120,7 +1106,7 @@ def line_dedup(
     rebuilt = kept.groupBy("doc").agg(
         F.count("*").alias("n_lines_kept"),
         F.concat_ws(
-            sep,
+            "\n",
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "line"))),
                 lambda s: s.line,
@@ -1447,8 +1433,6 @@ def remove_duplicate_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 8,
-    hot_mod: int | None = 256,
-    hot_min: int = 4,
 ) -> DataFrame:
     """Surgical span-level dedup (Lee et al. 2021 §4's REMOVE action):
     excise every maximal duplicated span from each document instead of
@@ -1467,9 +1451,9 @@ def remove_duplicate_spans(
     keeps tokens outside every island. No extra shuffle beyond the
     per-doc span collect.
     """
-    spans = duplicate_spans(
-        df, id_col, text_col, k=k, hot_mod=hot_mod, hot_min=hot_min
-    ).withColumnRenamed("doc_id", id_col)  # duplicate_spans emits 'doc_id'
+    spans = duplicate_spans(df, id_col, text_col, k=k).withColumnRenamed(
+        "doc_id", id_col  # duplicate_spans emits 'doc_id'
+    )
     isl = spans.groupBy(id_col).agg(
         F.collect_list(
             F.struct(

@@ -53,12 +53,8 @@ def add_type_derived(
     return df.withColumn(out_col, whole_number_flag(F.col(amount_col)))
 
 
-def add_audit_columns(
-    df: DataFrame,
-    quality_score: float = 1.0,
-    clock: Column | None = None,
-) -> DataFrame:
-    """P4/P5: constant quality score + processing timestamp.
+def add_audit_columns(df: DataFrame, clock: Column | None = None) -> DataFrame:
+    """P4/P5: constant quality score (1.0) + processing timestamp.
 
     ``clock`` is injectable (pass ``F.lit(...).cast('timestamp')``) so tests
     and oracle-checked plans stay deterministic; the pipeline passes ``None``
@@ -66,7 +62,7 @@ def add_audit_columns(
     """
     return df.withColumns(
         {
-            "data_quality_score": F.lit(quality_score),
+            "data_quality_score": F.lit(1.0),
             "processed_timestamp": clock if clock is not None else F.current_timestamp(),
         }
     )

@@ -22,16 +22,11 @@ from pyspark.sql import functions as F
 from aws_data_pipeline_spark.operators import lit_array
 
 
-def enrich(
-    fact: DataFrame,
-    dims: Sequence[tuple],
-    how: str = "inner",
-    broadcast_dims: bool = True,
-) -> DataFrame:
-    """Chain fact ⋈ dim joins, broadcasting each dim side.
+def enrich(fact: DataFrame, dims: Sequence[tuple]) -> DataFrame:
+    """Chain fact ⋈ dim inner joins, broadcasting each dim side.
 
     Each entry is ``(dim, on)`` or ``(dim, on, broadcast)``; the 3-tuple
-    form overrides ``broadcast_dims`` per side. Hint ONLY true dims
+    form overrides the broadcast per side. Hint ONLY true dims
     (region/nation/customer/supplier/part — bounded small relative to the
     facts). A fact-derived side (orders, any filtered/aggregated fact
     slice) must pass ``broadcast=False``: its size is data-dependent, and
@@ -42,9 +37,8 @@ def enrich(
     out = fact
     for entry in dims:
         dim, on = entry[0], entry[1]
-        bcast = entry[2] if len(entry) > 2 else broadcast_dims
-        d = F.broadcast(dim) if bcast else dim
-        out = out.join(d, on, how)
+        d = F.broadcast(dim) if len(entry) < 3 or entry[2] else dim
+        out = out.join(d, on, "inner")
     return out
 
 
@@ -64,7 +58,7 @@ def asof_join(
     key: str,
     ts: str,
     right_cols: Sequence[str],
-    prefix: str = "matched_",
+    out_prefix: str = "matched_",
     right_tiebreak: str | None = None,
 ) -> DataFrame:
     """As-of join: for each left row, the latest right row with
@@ -120,7 +114,7 @@ def asof_join(
     filled = unioned.withColumn("__last_r", F.last("__r", ignorenulls=True).over(w))
     out = filled.filter(F.col("__side") == 1)
     for c in right_cols:
-        out = out.withColumn(f"{prefix}{c}", F.col("__last_r").getField(c))
+        out = out.withColumn(f"{out_prefix}{c}", F.col("__last_r").getField(c))
     return out.drop("__side", "__r", "__last_r")
 
 

@@ -55,14 +55,13 @@ def fuzzy_link(
     text_col: str = "text",
     k: int = 3,
     top: int = 1,
-    threshold: float = 0.0,
     max_bucket: int | None = 1000,
 ) -> DataFrame:
     """Best-matching corpus rows per query row by exact k-token-shingle
     Jaccard, candidates from the shared-shingle inverted index.
 
     Returns (query_id, corpus_id, rank, jaccard): for each query row, the
-    ``top`` corpus rows with ``jaccard >= threshold``, ranked by Jaccard
+    ``top`` corpus rows sharing a kept shingle, ranked by Jaccard
     descending with the corpus id as tie-break. The Jaccard is exact over
     the KEPT shingle universe: a shingle held by more than ``max_bucket``
     corpus rows is boilerplate (it carries no linkage signal, exactly the
@@ -80,7 +79,7 @@ def fuzzy_link(
     attribution is this operator applied to (snippets, corpus).
     """
     jac = _scored_pairs(queries, corpus, query_id, corpus_id, text_col,
-                        k, threshold, max_bucket)
+                        k, max_bucket)
     w = Window.partitionBy("__qid").orderBy(
         F.col("jaccard").desc(), F.col("__cid").asc()
     )
@@ -103,7 +102,6 @@ def _scored_pairs(
     corpus_id: str,
     text_col: str,
     k: int,
-    threshold: float,
     max_bucket: int | None,
 ) -> DataFrame:
     """(__qid, __cid, jaccard) for every candidate pair sharing a kept
@@ -146,17 +144,14 @@ def _scored_pairs(
         .groupBy("__qid", "__cid")
         .agg(F.count("*").alias("__i"))
     )
-    jac = (
-        inter.join(nq, "__qid")
-        .join(nc, "__cid")
-        .withColumn(
-            "jaccard",
+    return inter.join(nq, "__qid").join(nc, "__cid").select(
+        "__qid",
+        "__cid",
+        (
             F.col("__i")
-            / (F.col("__nq") + F.col("__nc") - F.col("__i")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+            / (F.col("__nq") + F.col("__nc") - F.col("__i")).cast("double")
+        ).alias("jaccard"),
     )
-    return jac.select("__qid", "__cid", "jaccard")
 
 
 def mutual_best_match(
@@ -166,7 +161,6 @@ def mutual_best_match(
     corpus_id: str,
     text_col: str = "text",
     k: int = 3,
-    threshold: float = 0.0,
     max_bucket: int | None = 1000,
 ) -> DataFrame:
     """ONE-TO-ONE entity resolution: the pairs where each side is the
@@ -186,8 +180,7 @@ def mutual_best_match(
     the fuzzy_link stance. Output: (query_id, corpus_id, jaccard).
     """
     jac = _scored_pairs(
-        queries, corpus, query_id, corpus_id, text_col, k, threshold,
-        max_bucket,
+        queries, corpus, query_id, corpus_id, text_col, k, max_bucket
     )
     wq = Window.partitionBy("__qid").orderBy(
         F.col("jaccard").desc(), F.col("__cid").asc()

@@ -95,10 +95,8 @@ def duplicate_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     )
 
 
-def zscore_outlier_counts(
-    df: DataFrame, group_col: str, value_col: str, sigmas: int = 3
-) -> DataFrame:
-    """Per-group k-sigma outlier counts with the boundary decided in EXACT
+def zscore_outlier_counts(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
+    """Per-group 3-sigma outlier counts with the boundary decided in EXACT
     integer arithmetic: for integer cents c_i with n, s = sum(c),
     ss = sum(c^2), the test ``|x - mean| > k*std`` is algebraically
     ``(n*x - s)^2 > k^2 * (n*ss - s^2)`` — every term an exact
@@ -118,7 +116,7 @@ def zscore_outlier_counts(
         F.sum(F.col("__cents") * F.col("__cents")).alias("__ss"),
     )
     dev = F.col("__n") * F.col("__cents") - F.col("__s")
-    spread = F.lit(sigmas * sigmas).cast("decimal(38,0)") * (
+    spread = F.lit(9).cast("decimal(38,0)") * (  # k^2 for k = 3
         F.col("__n") * F.col("__ss") - F.col("__s") * F.col("__s")
     )
     return (
@@ -136,9 +134,7 @@ def psi_drift(
     curr: DataFrame,
     col: str,
     bins: int = 10,
-    floor: float = 1e-6,
     approx: bool = False,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Population Stability Index between a baseline and a current slice of
     one numeric column — the standard distribution-drift monitor a
@@ -146,7 +142,7 @@ def psi_drift(
     investigate). Bins are the BASELINE's ``bins``-quantile deciles
     (canonical PSI), bin membership is ``#edges <= x``, and each bin's
     contribution is ``(p - q) * ln(p / q)`` with both proportions floored
-    at ``floor`` so an empty current bin stays finite.
+    at 1e-6 so an empty current bin stays finite.
 
     Output: one row per observed bin — (bin, n_base, n_curr,
     psi_contribution); the scalar PSI is their sum.
@@ -161,8 +157,8 @@ def psi_drift(
     assignment + count per side, a bins-sized join — nothing data-sized
     shuffles but the two bin-count aggregations. ``approx=True`` swaps
     the exact (full-sort) edge computation for ``approx_percentile``'s
-    mergeable KLL-family sketch at ``accuracy`` — the 100 TB path: edge
-    RANKS are off by at most ``1/accuracy`` of the population, so at most
+    mergeable KLL-family sketch at accuracy 10,000 — the 100 TB path: edge
+    RANKS are off by at most 1/10,000 of the population, so at most
     that fraction of either side's mass can change bins, bounding the PSI
     divergence from the exact twin (error-bound pinned in
     tests/test_quality.py, the approx_distinct_customers pattern).
@@ -170,7 +166,7 @@ def psi_drift(
     """
     fr = lit_array([i / bins for i in range(1, bins)], "double")
     edge_fn = (
-        (lambda c: F.approx_percentile(c, fr, F.lit(accuracy)))
+        (lambda c: F.approx_percentile(c, fr, F.lit(10_000)))
         if approx
         else (lambda c: F.percentile(c, fr))
     )
@@ -189,12 +185,10 @@ def psi_drift(
 
     bc = binned(base, "n_base")
     cc = binned(curr, "n_curr")
-    return psi_from_binned(bc, cc, floor=floor)
+    return psi_from_binned(bc, cc)
 
 
-def psi_from_binned(
-    bc: DataFrame, cc: DataFrame, floor: float = 1e-6
-) -> DataFrame:
+def psi_from_binned(bc: DataFrame, cc: DataFrame) -> DataFrame:
     """PSI contributions from two ALREADY-BINNED count frames — (bin,
     n_base) and (bin, n_curr). The tail of :func:`psi_drift`, exposed so
     a caller holding PRE-COMPUTED baseline bin counts (the streaming
@@ -210,11 +204,11 @@ def psi_from_binned(
     )
     p = F.greatest(
         F.col("n_base").cast("double") / F.col("tb").cast("double"),
-        F.lit(floor),
+        F.lit(1e-6),
     )
     q = F.greatest(
         F.col("n_curr").cast("double") / F.col("tc").cast("double"),
-        F.lit(floor),
+        F.lit(1e-6),
     )
     u = F.round(F.log(p / q) * F.lit(1e9)).cast("long")
     contrib = (
@@ -489,8 +483,6 @@ def volume_anomalies(
     df: DataFrame,
     bucket: Column,
     out_bucket: str = "bucket",
-    k_num: int = 5,
-    k_den: int = 1,
 ) -> DataFrame:
     """Ingest-volume anomaly detection: per-bucket row counts flagged
     against the robust median/MAD envelope — "did Tuesday's feed arrive
@@ -501,11 +493,10 @@ def volume_anomalies(
     the mean toward itself and inflates sigma until nothing flags
     (breakdown point 0 vs the median pair's 50%).
 
-    A bucket flags when ``deviation * k_den > k_num * mad`` with
-    ``deviation = |n_rows - median|`` — the threshold is the exact
-    rational ``k_num/k_den`` in MAD units (default 5 MADs ~ 3.4 sigma
-    under normality; no 1.4826 consistency constant ever enters the
-    comparison). Every quantity is exact: counts are longs, the two
+    A bucket flags when ``deviation > 5 * mad`` with
+    ``deviation = |n_rows - median|`` — 5 MADs ~ 3.4 sigma under
+    normality; no 1.4826 consistency constant ever enters the
+    comparison. Every quantity is exact: counts are longs, the two
     medians interpolate at most one midpoint (halves/quarters — exactly
     representable doubles for any count below 2^51), and the comparison
     multiplies by small integers — so flags are bit-identical across
@@ -532,10 +523,7 @@ def volume_anomalies(
         "med",
         "deviation",
         "mad",
-        (
-            F.col("deviation") * F.lit(int(k_den))
-            > F.lit(int(k_num)) * F.col("mad")
-        ).alias("is_anomaly"),
+        (F.col("deviation") > F.lit(5) * F.col("mad")).alias("is_anomaly"),
     )
 
 

@@ -81,7 +81,6 @@ def stratified_sample(
     strata_col: str,
     fractions: dict[str, float],
     id_col: str,
-    seed: str = "sample-v1",
     default_fraction: float | None = None,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
@@ -97,7 +96,7 @@ def stratified_sample(
     fractions" (``eqNullSafe`` membership, so the three-valued NULL of a
     plain ``==`` can't silently drop them from the default branch).
     """
-    bucket = _hash_bucket(id_col, seed, hash_fn)
+    bucket = _hash_bucket(id_col, "sample-v1", hash_fn)
     cond = F.lit(False)
     listed = F.lit(False)
     for stratum, frac in sorted(fractions.items()):
@@ -167,23 +166,19 @@ def vocabulary(
     return counts
 
 
-def heavy_hitters(
-    df: DataFrame,
-    text_col: str = "text",
-    k: int = 20,
-    max_items_tracked: int = 10000,
-) -> DataFrame:
+def heavy_hitters(df: DataFrame, text_col: str = "text", k: int = 20) -> DataFrame:
     """Approximate top-k tokens via the ``approx_top_k`` sketch — the scale
     variant of :func:`vocabulary`: the sketch is fixed-size and mergeable, so
     the combine is map-side and the final reduce moves ONE sketch per
     partition instead of shuffling the full token-count table (which at
-    100 TB has billions of distinct entries). Error is bounded by
-    ``max_items_tracked``; tests bound it against the exact counts."""
+    100 TB has billions of distinct entries). Error is bounded by the
+    sketch's 10,000 tracked items; tests bound it against the exact
+    counts."""
     toks = widen_narrow_input(df).select(
         F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("token")
     ).filter(F.col("token") != "")
     sk = toks.agg(
-        F.expr(f"approx_top_k(token, {k}, {max_items_tracked})").alias("tk")
+        F.expr(f"approx_top_k(token, {k}, 10000)").alias("tk")
     )
     return sk.select(F.explode("tk").alias("e")).select(
         F.col("e.item").alias("token"),
@@ -196,7 +191,7 @@ def pack_sequences(
     max_tokens: int = 4096,
     text_col: str = "text",
     id_col: str = "doc_id",
-    by: str = "source",
+    source_col: str = "source",
 ) -> DataFrame:
     """Assign each doc to a fixed-token-budget training pack: concatenate the
     shard's docs in deterministic (id) order and chunk every ``max_tokens``
@@ -209,10 +204,12 @@ def pack_sequences(
     Deterministic: same corpus -> same packs, any cluster size.
     """
     n_tok = F.size(F.split(F.col(text_col), " "))
-    w = Window.partitionBy(by).orderBy(id_col)
+    w = Window.partitionBy(source_col).orderBy(id_col)
     cum = F.sum("n_tokens").over(w)
     return (
-        df.select(F.col(by), F.col(id_col), n_tok.cast("long").alias("n_tokens"))
+        df.select(
+            F.col(source_col), F.col(id_col), n_tok.cast("long").alias("n_tokens")
+        )
         .withColumn(
             "pack_id",
             F.floor((cum - F.col("n_tokens")) / F.lit(max_tokens)).cast("long"),
@@ -396,7 +393,6 @@ def dsir_log_weights(
     is_target: Column,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_buckets: int = 256,
 ) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, arXiv:2302.03169,
     public): score every document by how much more likely its hashed
@@ -404,7 +400,7 @@ def dsir_log_weights(
     ``is_target`` holds — e.g. a trusted high-quality slice) than under
     the full-corpus proposal. ``log_importance = Σ_b c_b · ln(p_t(b) /
     p_p(b))`` over the doc's bucket counts, with add-1 smoothing over the
-    ``n_buckets`` feature buckets. Selecting top-weight documents (or
+    256 feature buckets. Selecting top-weight documents (or
     Gumbel-resampling on the weights) tilts the corpus toward the target
     domain — the importance-resampling alternative to hard rule gates.
 
@@ -417,13 +413,14 @@ def dsir_log_weights(
     1e-9 decimal boundary (the tfidf caveat; vanishingly rare).
 
     Scale shape: one explode + two bucket aggregations (the distributions
-    collapse to ``n_buckets`` rows, broadcast back), one (doc, bucket)
+    collapse to 256 rows, broadcast back), one (doc, bucket)
     aggregation, one per-doc sum — no collects, no UDFs; cost is
     O(corpus tokens) with shuffles keyed on doc prefixes only.
     """
     from aws_data_pipeline_spark.functions.exact import units
     from aws_data_pipeline_spark.operators.text import tokens
 
+    n_buckets = 256
     bucket = F.pmod(md5_prefix_long(F.col("tok")), F.lit(n_buckets))
     bk = widen_narrow_input(df).select(
         F.col(id_col).alias("doc"),
@@ -548,14 +545,7 @@ def training_shards(
     return base.withColumn("pos", F.row_number().over(w)).drop("__ord")
 
 
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    n_shards: int,
-    seed: str = "shard-v1",
-    hash_fn: str = "xxhash64",
-) -> None:
+def write_training_shards(df: DataFrame, path: str, id_col: str, n_shards: int) -> None:
     """Materialize :func:`training_shards` as the on-disk layout a data
     loader streams: ``path/shard=N/`` directories, rows inside each file
     in final training order (``pos`` ascending). One hash-shuffle routes
@@ -575,7 +565,7 @@ def write_training_shards(
     ``(shard, pos)`` satisfies the writer's required ordering (no extra
     sort inserted) and makes the in-file order explicit.
     """
-    out = training_shards(df, id_col, n_shards, seed, hash_fn, keep_cols=True)
+    out = training_shards(df, id_col, n_shards, keep_cols=True)
     (
         out.repartition(n_shards, "shard")
         .sortWithinPartitions("shard", "pos")
@@ -597,7 +587,6 @@ def weighted_sample_topk(
     weight_col: str,
     group_col: str,
     k: int,
-    seed: str = "wsample-v1",
 ) -> DataFrame:
     """Deterministic weighted sampling without replacement, k per group
     (Efraimidis–Spirtes A-ES): each row draws u ~ Uniform(0,1) from its id
@@ -628,7 +617,7 @@ def weighted_sample_topk(
     from aws_data_pipeline_spark.functions.portable import md5_prefix_long
 
     h = md5_prefix_long(
-        F.concat_ws(":", F.col(id_col).cast("string"), F.lit(seed))
+        F.concat_ws(":", F.col(id_col).cast("string"), F.lit("wsample-v1"))
     )
     u = (F.pmod(h, F.lit(1_000_000)) + F.lit(1)) / F.lit(1_000_001.0)
     w = F.col(weight_col).cast("double")

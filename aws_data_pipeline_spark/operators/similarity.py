@@ -199,15 +199,14 @@ def choose_lsh_params(
     n_rows: int,
     threshold: float,
     target_recall: float = 0.999,
-    max_bucket: int = 10_000,
 ) -> tuple[int, int]:
     """Pick ``(rows_per_band, bands)`` for :func:`neardup_pairs_lsh` at a
     given corpus size — the scale rule from its docstring as code, not
     advice. Two constraints, solved in order:
 
-    - pruning: expected bucket size ``n / 2^r`` must not exceed
-      ``max_bucket`` (per-bucket verification is O(bucket²) in the worst
-      case), so ``r = ceil(log2(n / max_bucket))``;
+    - pruning: expected bucket size ``n / 2^r`` must not exceed 10,000
+      (per-bucket verification is O(bucket²) in the worst case), so
+      ``r = ceil(log2(n / 10_000))``;
     - recall: per-pair recall at the threshold is ``1-(1-p^r)^b`` with
       ``p = 1 - acos(threshold)/pi`` (probability one hyperplane bit
       agrees), so ``b = ceil(ln(1-target) / ln(1-p^r))``.
@@ -220,7 +219,7 @@ def choose_lsh_params(
     if not 0.0 < threshold < 1.0:
         raise ValueError("threshold must be in (0, 1)")
     p = 1.0 - math.acos(threshold) / math.pi
-    r = max(1, math.ceil(math.log2(max(1.0, n_rows / max_bucket))))
+    r = max(1, math.ceil(math.log2(max(1.0, n_rows / 10_000))))
     pr = p**r
     if pr >= 1.0 - 1e-12:
         return r, 1
@@ -234,7 +233,6 @@ def choose_ivfpq_params(
     k: int = 5,
     target_recall: float = 0.9,
     clustered: bool = True,
-    min_train_per_cell: int = 39,
 ) -> dict:
     """Derive the composed IVF-PQ search's parameters from corpus size and
     dimensionality — :func:`choose_lsh_params`' no-hand-tuning rule for
@@ -246,7 +244,7 @@ def choose_ivfpq_params(
 
     The rules, each anchored to a measured or classical bound:
 
-    - ``n_cells = min(round(sqrt(n)), n // min_train_per_cell)`` — the
+    - ``n_cells = min(round(sqrt(n)), n // 39)`` — the
       FAISS sizing rule (inverted lists of ~sqrt(n)), clamped so k-means
       keeps its classical ≥39 training points per centroid; floor 1.
     - ``nprobe``: cell recall is what the composed path loses first
@@ -281,7 +279,7 @@ def choose_ivfpq_params(
     if not 0.0 < target_recall <= 1.0:
         raise ValueError("target_recall must be in (0, 1]")
     n_cells = max(
-        1, min(round(math.sqrt(n_vectors)), n_vectors // min_train_per_cell)
+        1, min(round(math.sqrt(n_vectors)), n_vectors // 39)
     )
     if clustered:
         frac = 0.25 if target_recall <= 0.9 else (
@@ -394,16 +392,12 @@ def neardup_pairs_lsh(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.45,
-    bands: int = 64,
-    rows_per_band: int = 4,
-    dim: int = 64,
-    seed: int = 42,
     verify: str = "bucket",
 ) -> DataFrame:
     """Cosine-threshold pairs via banded random-hyperplane LSH + exact verify.
 
-    Candidate generation: ``bands`` independent sign-bit codes of
-    ``rows_per_band`` hyperplanes each; two vectors become a candidate iff
+    Candidate generation: 64 independent sign-bit codes (bands) of 4
+    hyperplanes each over 64-dim vectors; two vectors become a candidate iff
     they agree on ALL bits of at least one band — an EQUI-join on
     (band, code), never a cross product. Each candidate is then verified
     with exact cosine, so emitted pairs are exact-precision; recall per pair
@@ -416,7 +410,7 @@ def neardup_pairs_lsh(
     hyperplanes are seeded and deterministic, so re-runs emit identical
     pairs.
 
-    Scale shape: all ``bands*rows_per_band`` sign bits come from ONE
+    Scale shape: all 64*4 sign bits come from ONE
     vectorized numpy matmul per Arrow batch — ``(n, dim) @ (dim, b*r)`` —
     inside ``mapInPandas`` (a per-plane Catalyst HOF projection blows up
     codegen: 128 F.aggregate calls over 64-literal arrays cost 21 s at
@@ -431,7 +425,7 @@ def neardup_pairs_lsh(
 
     The bucket pass is ``repartition(band, code)`` + ONE ``mapInPandas``
     that groups in-process — not ``groupBy().applyInPandas`` — because
-    with 2^rows_per_band codes per band the groups are many and tiny, and
+    with 2^4 codes per band the groups are many and tiny, and
     per-group Python dispatch dominates (measured 3x the whole query).
     Hash-repartitioning guarantees every (band, code) group lands whole in
     one partition; the in-function ``pd.concat`` holds one partition,
@@ -443,11 +437,12 @@ def neardup_pairs_lsh(
     tests/test_llm.py asserts exact equality with the all-pairs baseline
     on the test corpora.
 
-    Per-band bucket sizes are ~n/2^rows_per_band; at 100 TB derive
-    ``(rows_per_band, bands)`` from the corpus count with
-    :func:`choose_lsh_params` (bounds per-bucket pairwise cost, then buys
-    the recall back with more bands), and tighten ``threshold`` toward
-    real near-dup similarity so the bands actually prune.
+    Per-band bucket sizes are ~n/2^4; at 100 TB persist the index with
+    ``(rows_per_band, bands)`` derived from the corpus count by
+    :func:`choose_lsh_params` (:func:`build_embedding_lsh_index` — bounds
+    per-bucket pairwise cost, then buys the recall back with more bands),
+    and tighten ``threshold`` toward real near-dup similarity so the
+    bands actually prune.
 
     ``verify`` picks where candidates die, and the choice is
     threshold-dependent (measured here: the bucket path shuffles ~6 MB at
@@ -468,7 +463,7 @@ def neardup_pairs_lsh(
     """
     v = df.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
     id_type = v.schema["id"].dataType.simpleString()
-    banded = _band_codes(v, bands, rows_per_band, dim, seed)
+    banded = _band_codes(v, 64, 4, 64, 42)
 
     # numpy sims differ from the sequential JVM fold only by summation-order
     # rounding (~1e-15 relative); the slack guarantees the prefilter is a
@@ -540,7 +535,6 @@ def semantic_dedup_flags(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.45,
-    **lsh_kwargs,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication marks (Abbas et al. 2023,
     arXiv:2303.09540, public): a row is a semantic duplicate iff some
@@ -561,9 +555,7 @@ def semantic_dedup_flags(
     corpus. Cost is the pair generator's; the mark pass adds a single
     |pairs|-row shuffle.
     """
-    pairs = neardup_pairs_lsh(
-        df, id_col=id_col, vec_col=vec_col, threshold=threshold, **lsh_kwargs
-    )
+    pairs = neardup_pairs_lsh(df, id_col=id_col, vec_col=vec_col, threshold=threshold)
     lowest = pairs.groupBy(F.col("id2").alias(id_col)).agg(
         F.min("id1").alias("__lowest_neighbor")
     )
@@ -638,8 +630,6 @@ def lsh_bucket(
     df: DataFrame,
     vec_col: str = "embedding",
     n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
     out_col: str = "bucket",
 ) -> DataFrame:
     """Random-hyperplane LSH: bucket = sign-bit string of plane dot products.
@@ -648,14 +638,16 @@ def lsh_bucket(
     (1 - theta/pi)^n_planes. Bucketing is a map-side projection — the corpus
     is bucketed in one scan and can be written partitioned by bucket.
 
-    ``dim`` must match the actual embedding length and is RUNTIME-ASSERTED
-    per row: zip_with pads a mismatched plane with NULLs, every dot product
-    goes NULL, every sign bit reads 0, and the whole corpus silently
-    collapses into bucket 0 — turning the equi-join pre-filter into the
-    full cross product this function exists to avoid. Failing loudly is
-    the only acceptable behavior for that misconfiguration.
+    The hyperplanes span 64 dimensions; the embedding length is
+    RUNTIME-ASSERTED per row: zip_with pads a mismatched plane with NULLs,
+    every dot product goes NULL, every sign bit reads 0, and the whole
+    corpus silently collapses into bucket 0 — turning the equi-join
+    pre-filter into the full cross product this function exists to avoid.
+    Failing loudly is the only acceptable behavior for that
+    misconfiguration.
     """
-    planes = _hyperplanes(n_planes, dim, seed)
+    dim = 64
+    planes = _hyperplanes(n_planes, dim, 42)
     v = as_double(F.col(vec_col))
     bucket = F.lit(0).cast("long")
     for i, p in enumerate(planes):
@@ -737,7 +729,7 @@ def _sq_dists(x, c):
     return ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
 
 
-def _kmeans(mat, k: int, seed, iters: int = 20):
+def _kmeans(mat, k: int, seed):
     """Seeded k-means++ / Lloyd fit of ``min(k, distinct rows)`` centroids
     to the rows of ``mat`` (squared euclidean, first-min ties, as
     :func:`nearest_cell`). Bit-deterministic given the rows and their
@@ -764,7 +756,7 @@ def _kmeans(mat, k: int, seed, iters: int = 20):
         d2 = np.minimum(d2, _sq_dists(mat, mat[picks[-1:]])[:, 0])
     c = mat[picks]
     step = max(1, _TRAIN_BYTES // (8 * k * mat.shape[1]))
-    for _ in range(iters):
+    for _ in range(20):
         assign = np.concatenate(
             [
                 _sq_dists(mat[i : i + step], c).argmin(axis=1)
@@ -852,7 +844,6 @@ def ivf_topk(
     k: int = 5,
     n_cells: int = 16,
     nprobe: int = 4,
-    seed: int = 42,
     centroids: list[list[float]] | None = None,
     assigned: DataFrame | None = None,
 ) -> DataFrame:
@@ -875,7 +866,7 @@ def ivf_topk(
     pytest measures recall vs brute_force_topk.
     """
     if centroids is None:
-        centroids = train_ivf_centroids(corpus, id_col, vec_col, n_cells, seed)
+        centroids = train_ivf_centroids(corpus, id_col, vec_col, n_cells)
     if assigned is None:
         c = _id_vec(corpus, id_col, vec_col, "neighbor_id", "cv")
         assigned = c.withColumn("cell", nearest_cell(F.col("cv"), centroids))
@@ -1031,7 +1022,6 @@ def ann_topk_lsh(
     vec_col: str = "embedding",
     k: int = 5,
     n_planes: int = 4,
-    dim: int = 64,
 ) -> DataFrame:
     """Approximate top-k: exact cosine ranking within the query's LSH bucket
     and every Hamming-1 bucket (flip each sign bit) — the standard
@@ -1043,7 +1033,6 @@ def ann_topk_lsh(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
         "qv",
         n_planes,
-        dim,
     )
     probes = F.array(
         F.col("bucket"),
@@ -1057,7 +1046,6 @@ def ann_topk_lsh(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
         "cv",
         n_planes,
-        dim,
     )
     scored = (
         F.broadcast(qb)
@@ -1076,7 +1064,6 @@ def build_embedding_lsh_index(
     bands: int = 64,
     rows_per_band: int = 4,
     dim: int = 64,
-    seed: int = 42,
 ) -> None:
     """Persist a corpus's hyperplane-LSH index — the embedding twin of
     ``dedup.build_lsh_text_index``: ``path/vectors`` (id, v — the exact
@@ -1091,7 +1078,7 @@ def build_embedding_lsh_index(
     _build_index) — probes never see a half-written state."""
     _build_index(
         _LSH, df, path, id_col, vec_col, (),
-        bands=bands, rows_per_band=rows_per_band, dim=dim, seed=seed,
+        bands=bands, rows_per_band=rows_per_band, dim=dim, seed=42,
     )
 
 
@@ -1246,15 +1233,10 @@ def ivf_index_drift(spark, path: str) -> DataFrame:
     )
 
 
-def ivf_retrain_due(
-    spark,
-    path: str,
-    max_total_growth: float = 1.5,
-    max_cell_growth: float = 3.0,
-) -> bool:
+def ivf_retrain_due(spark, path: str, max_total_growth: float = 1.5) -> bool:
     """True when the appended volume warrants retraining the quantizer:
     the whole index grew past ``max_total_growth``× its built size, or
-    any single cell past ``max_cell_growth``× (a ballooning cell means
+    any single cell past 3× (a ballooning cell means
     the centroid no longer summarizes its region — probes of that cell
     degrade toward a linear scan). Driver-side cost: n_cells rows."""
     rows = ivf_index_drift(spark, path).collect()
@@ -1265,7 +1247,7 @@ def ivf_retrain_due(
     if cur / built > max_total_growth:
         return True
     return any(
-        r.growth is not None and r.growth > max_cell_growth for r in rows
+        r.growth is not None and r.growth > 3.0 for r in rows
     )
 
 
@@ -1273,7 +1255,6 @@ def compact_embedding_indexes(
     spark,
     lsh_index_path: str | None = None,
     ivf_index_path: str | None = None,
-    target_file_bytes: int = 128 * 1024 * 1024,
     pq_index_path: str | None = None,
     sq8_index_path: str | None = None,
 ) -> dict[str, int]:
@@ -1304,9 +1285,7 @@ def compact_embedding_indexes(
 
     def _swap_codec(codec: _Codec, path: str) -> None:
         rewrite = {sub: {"sort_by": key} for sub, key in codec.cluster.items()}
-        c = compact_index(
-            spark, path, rewrite, (*codec.artifact_subs, "meta"), target_file_bytes
-        )
+        c = compact_index(spark, path, rewrite, (*codec.artifact_subs, "meta"))
         written.update({f"{codec.report}{sub}": n for sub, n in c.items()})
 
     if lsh_index_path is not None:
@@ -1314,7 +1293,7 @@ def compact_embedding_indexes(
     if ivf_index_path is not None:
         written["ivf_corpus"] = compact_index(
             spark, ivf_index_path, {"corpus": {"partition_by": ("cell",)}},
-            ("centroids", "build_stats"), target_file_bytes,
+            ("centroids", "build_stats"),
         )["corpus"]
     if pq_index_path is not None:
         _swap_codec(_PQ, pq_index_path)
@@ -1323,26 +1302,20 @@ def compact_embedding_indexes(
     return written
 
 
-def retrain_ivf_index(
-    spark,
-    path: str,
-    n_cells: int | None = None,
-    seed: int = 42,
-) -> dict[str, int]:
+def retrain_ivf_index(spark, path: str) -> dict[str, int]:
     """Retrain a persisted IVF index's quantizer and rebuild it in place —
     the endpoint of the append lifecycle: ``build_ivf_index`` →
     ``append_to_ivf_index``×N → ``ivf_retrain_due`` fires → retrain.
 
     Trains on the index's OWN materialized vectors (``path/corpus`` holds
     them), so at 100 TB the retrain never rescans the source corpus — its
-    cost is one corpus-vector materialization, one k-means over a
-    sample of at most 256 vectors per cell (:func:`train_ivf_centroids`),
-    and one reassignment write. ``n_cells`` defaults to scaling the built
-    cell count proportionally with realized corpus growth (cells ∝ corpus
-    size keeps per-cell probe cost constant as the index grows); pass it
-    explicitly to override. The rebuild
-    rewrites ``corpus``/``centroids``/``build_stats``, resetting the drift
-    baseline, so ``ivf_retrain_due`` is False immediately after.
+    cost is one corpus-vector materialization, one k-means over a sample of
+    at most 256 vectors per cell (:func:`train_ivf_centroids`), and one
+    reassignment write. The cell count scales the built cell count
+    proportionally with realized corpus growth (cells ∝ corpus size keeps
+    per-cell probe cost constant as the index grows). The rebuild rewrites
+    ``corpus``/``centroids``/``build_stats``, resetting the drift baseline,
+    so ``ivf_retrain_due`` is False immediately after.
 
     Contract honesty: retrain deliberately does NOT preserve probe
     identity — moving centroids re-cells vectors (that is the point; see
@@ -1361,10 +1334,9 @@ def retrain_ivf_index(
     current = sum(r.current_n for r in drift)
     if current == 0:
         raise ValueError(f"retrain_ivf_index: no vectors in index at {path}")
-    if n_cells is None:
-        built_cells = len(drift)
-        grown = built_cells if built == 0 else -(-built_cells * current // built)
-        n_cells = max(built_cells, int(grown))
+    built_cells = len(drift)
+    grown = built_cells if built == 0 else -(-built_cells * current // built)
+    n_cells = max(built_cells, int(grown))
     # the rebuild writes a NEW version dir, so reading the active root
     # lazily would be safe — but the post-commit cleanup deletes these
     # files, so materialize anyway before the build consumes them twice
@@ -1378,13 +1350,7 @@ def retrain_ivf_index(
         )
         .localCheckpoint(eager=True)
     )
-    build_ivf_index(
-        vecs,
-        path,
-        n_cells=n_cells,
-        seed=seed,
-        payload_cols=payload,
-    )
+    build_ivf_index(vecs, path, n_cells=n_cells, payload_cols=payload)
     return {"n_vectors": current, "n_cells": n_cells}
 
 
@@ -1398,7 +1364,6 @@ def train_pq_codebooks(
     ks: int = 16,
     seed: int = 42,
     max_train: int = 16384,
-    iters: int = 20,
 ) -> list[list[list[float]]]:
     """Train PQ codebooks: split the vector into ``m`` contiguous subspaces
     and fit ``ks`` centroids per subspace (Jegou et al. 2011) — the
@@ -1432,7 +1397,7 @@ def train_pq_codebooks(
     rng = np.random.default_rng(seed)
     books: list[list[list[float]]] = []
     for j in range(m):
-        c = _kmeans(mat[:, j * sub : (j + 1) * sub], ks, rng, iters)
+        c = _kmeans(mat[:, j * sub : (j + 1) * sub], ks, rng)
         if len(c) < ks:  # degenerate tiny corpora: pad by repeating
             c = np.vstack([c] + [c[-1:]] * (ks - len(c)))
         books.append(c.tolist())
@@ -1634,7 +1599,6 @@ def build_pq_index(
     m: int = 8,
     ks: int = 16,
     seed: int = 42,
-    max_train: int = 16384,
     payload_cols: Sequence[str] = (),
 ) -> None:
     """Persist a PQ index: ``path/vectors`` (id, v — the exact re-rank
@@ -1655,7 +1619,7 @@ def build_pq_index(
     never read it."""
     _build_index(
         _PQ, corpus, path, id_col, vec_col, payload_cols,
-        m=m, ks=ks, seed=seed, max_train=max_train,
+        m=m, ks=ks, seed=seed, max_train=16384,
     )
 
 
@@ -1719,7 +1683,7 @@ def pq_retrain_due(spark, path: str, growth_factor: float = 2.0) -> bool:
     return _grown(_PQ, spark, index_root(spark, path), growth_factor)
 
 
-def retrain_pq_index(spark, path: str, max_train: int = 16384) -> dict[str, int]:
+def retrain_pq_index(spark, path: str) -> dict[str, int]:
     """Retrain the codebooks on the index's OWN vectors and re-encode —
     the append lifecycle's endpoint (build → append×N →
     pq_retrain_due fires → retrain), never rescanning the source corpus.
@@ -1729,7 +1693,7 @@ def retrain_pq_index(spark, path: str, max_train: int = 16384) -> dict[str, int]
 
     Concurrency-safe: see :func:`_retrain_index` — a crash mid-retrain
     can never leave new codes visible under old stored codebooks."""
-    n, meta = _retrain_index(_PQ, spark, path, max_train=max_train)
+    n, meta = _retrain_index(_PQ, spark, path, max_train=16384)
     return {"n_vectors": n, "m": meta.m, "ks": meta.ks}
 
 
@@ -2816,7 +2780,6 @@ def hard_negative_topk_indexed(
     lo: float = 0.25,
     hi: float = 0.45,
     band_slack: float | None = None,
-    scan_k: int = 200,
 ) -> DataFrame:
     """Hard-negative mining through the persisted SQ8 index — the 100 TB
     path :func:`hard_negative_topk`'s docstring names. Two stages:
@@ -2833,14 +2796,14 @@ def hard_negative_topk_indexed(
       (one wide-range dimension inflates the scales past any constant;
       tests/test_llm.py plants such a corpus where 0.05 loses true band
       members). Pass a float to pin a fixed slack instead. Candidates are
-      then capped at the top ``scan_k`` per query so the exact side stays
+      then capped at the top 200 per query so the exact side stays
       bounded no matter how wide the (slacked) band is in the corpus;
-    - exact: full vectors are read for those ≤``scan_k`` rows per query
+    - exact: full vectors are read for those ≤200 rows per query
       only, the band re-applied on round(cosine, 9)
       (:func:`hard_negative_topk`'s engine-stability rule), ranked with
       the shared deterministic tie-break.
 
-    Equals the brute-force miner whenever ``scan_k`` covers the slacked
+    Equals the brute-force miner whenever 200 rows cover the slacked
     band (pinned on the planted fixture in tests/test_llm.py); at 100 TB
     compose the approximate stage with IVF cell pruning exactly as
     :func:`ivfsq8_topk_indexed` does for top-k search."""
@@ -2851,7 +2814,7 @@ def hard_negative_topk_indexed(
     )
     band = (lo, hi, band_slack)
     scored = _sq8_scored(_id_vec(queries, id_col, vec_col), cand, stats, band=band)
-    return _refine(scored, root, k, scan_k, band)
+    return _refine(scored, root, k, 200, band)
 
 
 def hard_negative_topk_ivfsq8(
@@ -2864,31 +2827,29 @@ def hard_negative_topk_ivfsq8(
     k: int = 5,
     lo: float = 0.25,
     hi: float = 0.45,
-    band_slack: float | None = None,
     nprobe: int = 4,
     scan_k: int = 200,
     cell_codes_path: str | None = None,
 ) -> DataFrame:
     """Hard-negative mining fully composed with the IVF inverted lists —
-    the sweep a 100 TB contrastive-data job actually runs: candidates
-    come from :func:`_cell_candidates` (the SAME cell-pruned stage every
+    the sweep a 100 TB contrastive-data job actually runs: candidates come
+    from :func:`_cell_candidates` (the SAME cell-pruned stage every
     IVF-composed search here uses — PartitionFilters + DPP on the probed
     ``cell=`` partitions of the compressed SQ8 codes when a cell-codes
-    layout is given), ADC sims band-filter with slack-widened edges
-    (``band_slack=None`` derives the rigorous per-row bound from the
-    stored scales — :func:`sq8_error_norm`; a float pins a fixed slack)
-    and cap at ``scan_k`` per query, full vectors verify the band
-    exactly (round(sim, 9)). Mining recall is bounded by cell recall like
-    any IVF search — band members in unprobed cells are unreachable by
-    design (raise ``nprobe`` to trade scan for coverage; the exact miner
-    :func:`hard_negative_topk` and the full-scan
+    layout is given), ADC sims band-filter with slack-widened edges (the
+    rigorous per-row bound derived from the stored scales —
+    :func:`sq8_error_norm`) and cap at ``scan_k`` per query, full vectors
+    verify the band exactly (round(sim, 9)). Mining recall is bounded by
+    cell recall like any IVF search — band members in unprobed cells are
+    unreachable by design (raise ``nprobe`` to trade scan for coverage; the
+    exact miner :func:`hard_negative_topk` and the full-scan
     :func:`hard_negative_topk_indexed` are the recall ceilings, pinned
     relative to this in tests/test_llm.py)."""
     root, stats, q, q_rows, cand = _composed_candidates(
         _SQ8, spark, queries, ivf_index_path, sq8_index_path, id_col, vec_col,
         nprobe, cell_codes_path,
     )
-    band = (lo, hi, band_slack)
+    band = (lo, hi, None)
     return _refine(_sq8_scored(q, cand, stats, q_rows, band), root, k, scan_k, band)
 
 

@@ -120,34 +120,24 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
 GOPHER_STOPWORD_TYPES = ("the", "a", "and", "of", "to")
 
 
-def gopher_quality_flags(
-    df: DataFrame,
-    text_col: str = "text",
-    min_words: int = 30,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    min_stopword_types: int = 2,
-    min_unique_word_ratio: float = 0.3,
-    max_symbol_ratio: float = 0.1,
-) -> DataFrame:
+def gopher_quality_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Gopher-style rule-based document quality gates (Rae et al. 2021,
     "Scaling Language Models" §A1.1, public), adapted to single-line text:
     per-document boolean flags plus the AND-composite ``passes_gopher``.
     Complements :func:`quality_score` (a continuous composite) with the
     hard-rule filter family production corpus curation actually ships.
 
-    Rules (each an independent column, so downstream can re-weigh):
-    - ``flag_word_count``: whitespace word count within [min, max];
-    - ``flag_mean_word_len``: mean word length within [min, max] — kills
+    Rules (each an independent column, so downstream can re-weigh), at
+    the published thresholds:
+    - ``flag_word_count``: whitespace word count within [30, 100,000];
+    - ``flag_mean_word_len``: mean word length within [3, 10] — kills
       both symbol soup (short) and unsegmented junk (long);
-    - ``flag_stopwords``: at least ``min_stopword_types`` DISTINCT common
-      stopwords present (Gopher's "2 of 5 common words" natural-language
-      evidence rule);
-    - ``flag_repetition``: distinct-word fraction at or above the floor
-      (the single-line stand-in for Gopher's duplicate-line fractions);
-    - ``flag_symbol_ratio``: non-[a-z0-9 space] character fraction at or
-      below the cap (ellipsis/hash-ratio family).
+    - ``flag_stopwords``: at least 2 DISTINCT common stopwords present
+      (Gopher's "2 of 5 common words" natural-language evidence rule);
+    - ``flag_repetition``: distinct-word fraction at least 0.3 (the
+      single-line stand-in for Gopher's duplicate-line fractions);
+    - ``flag_symbol_ratio``: non-[a-z0-9 space] character fraction at
+      most 0.1 (ellipsis/hash-ratio family).
 
     Scale shape: pure JVM Column expressions over one scan — no shuffle,
     no UDF; ratios are exact-int divisions (bit-identical IEEE doubles in
@@ -168,12 +158,11 @@ def gopher_quality_flags(
     unique_ratio = F.try_divide(F.size(F.array_distinct(t)), n_words)
     symbol_ratio = F.try_divide(symbol_chars, n_chars)
     flags = {
-        "flag_word_count": (n_words >= min_words) & (n_words <= max_words),
-        "flag_mean_word_len": (mean_word_len >= min_mean_word_len)
-        & (mean_word_len <= max_mean_word_len),
-        "flag_stopwords": n_stop_types >= min_stopword_types,
-        "flag_repetition": unique_ratio >= min_unique_word_ratio,
-        "flag_symbol_ratio": symbol_ratio <= max_symbol_ratio,
+        "flag_word_count": (n_words >= 30) & (n_words <= 100_000),
+        "flag_mean_word_len": (mean_word_len >= 3.0) & (mean_word_len <= 10.0),
+        "flag_stopwords": n_stop_types >= 2,
+        "flag_repetition": unique_ratio >= 0.3,
+        "flag_symbol_ratio": symbol_ratio <= 0.1,
     }
     out = df.withColumns(
         {
@@ -473,14 +462,13 @@ def bigram_logprob(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    lam: float = 0.75,
 ) -> DataFrame:
     """Interpolated bigram LM fluency scoring — the n-gram step up from
     :func:`unigram_logprob` (the CCNet family uses a 5-gram KenLM; the
     estimator mechanics are identical at any order):
 
-        p(w2 | w1) = lam * c(w1,w2)/c_left(w1)
-                     + (1-lam) * (c(w2)+1)/(N+V)
+        p(w2 | w1) = 0.75 * c(w1,w2)/c_left(w1)
+                     + 0.25 * (c(w2)+1)/(N+V)
 
     ML bigram probability interpolated with the add-1 unigram — the
     unigram floor keeps p > 0, and because the fit is corpus-self every
@@ -530,7 +518,7 @@ def bigram_logprob(
     utot = ucnt.agg(F.sum("cu").alias("n_corpus"), F.count("*").alias("v_vocab"))
     bcnt = bg.groupBy("w1", "w2").agg(F.count("*").alias("c"))
     lcnt = bg.groupBy("w1").agg(F.count("*").alias("cl"))
-    p = F.lit(lam) * (F.col("c") / F.col("cl")) + F.lit(1.0 - lam) * (
+    p = F.lit(0.75) * (F.col("c") / F.col("cl")) + F.lit(0.25) * (
         (F.col("cu") + F.lit(1)) / (F.col("n_corpus") + F.col("v_vocab"))
     )
     lp = (
@@ -560,14 +548,13 @@ def bm25_scores(
     query_terms: tuple[str, ...],
     id_col: str = "doc_id",
     text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
-    """BM25 relevance of every document to a fixed term query (Robertson/
-    Sparck Jones; the retrieval scorer behind quality-by-retrieval curation
-    and contamination triage — the reference pipeline has no text ops at
-    all). Returns one row per document containing at least one query term:
-    ``(id, n_matched_terms, bm25_score)``.
+    """BM25 relevance (k1 = 1.2, b = 0.75) of every document to a fixed
+    term query (Robertson/Sparck Jones; the retrieval scorer behind
+    quality-by-retrieval curation and contamination triage — the reference
+    pipeline has no text ops at all). Returns one row per document
+    containing at least one query term: ``(id, n_matched_terms,
+    bm25_score)``.
 
     Scale shape — the whole scorer is MAP-SIDE over the corpus scan: the
     query is a handful of literal terms, so per-term ``tf`` is
@@ -628,11 +615,11 @@ def bm25_scores(
         ).cast("long")
         idf = idf_u.cast("double") / F.lit(1e9)
         score = (
-            (idf * (tf * F.lit(k1 + 1.0)))
+            (idf * (tf * F.lit(2.2)))
             / (
                 tf
-                + F.lit(k1)
-                * (F.lit(1.0) - F.lit(b) + F.lit(b) * (dl / avgdl))
+                + F.lit(1.2)
+                * (F.lit(1.0) - F.lit(0.75) + F.lit(0.75) * (dl / avgdl))
             )
         ) * F.lit(1e6)
         units.append(
@@ -772,7 +759,6 @@ def collocation_pmi(
     df: DataFrame,
     text_col: str = "text",
     min_count: int = 5,
-    top: int = 50,
 ) -> DataFrame:
     """Corpus collocations by pointwise mutual information: the token
     pairs that co-occur far more than their marginals predict ("new
@@ -784,8 +770,8 @@ def collocation_pmi(
 
     with c_* exact corpus counts, N total tokens, B total bigrams.
     ``min_count`` drops the low-frequency pairs PMI notoriously inflates
-    (a hapax pair has near-maximal PMI by construction); ``top`` bounds
-    the output to the strongest collocations.
+    (a hapax pair has near-maximal PMI by construction); the output is
+    the 50 strongest collocations.
 
     Determinism (oracle contract): every count is an exact long; the
     probability ratio is four correctly-rounded double divisions in a
@@ -796,8 +782,8 @@ def collocation_pmi(
     Scale shape: one bigram explode + two grouped counts (the unigram
     frame joins back on each side — vocabulary-sized equi-joins, AQE
     decides the strategy); the two totals broadcast as a 1-row frame;
-    the global top-``top`` is a distributed TakeOrdered, and ranks are
-    assigned over the ≤``top``-row result (the sanctioned tiny-frame
+    the global top-50 is a distributed TakeOrdered, and ranks are
+    assigned over the ≤50-row result (the sanctioned tiny-frame
     window class) — never a data-sized single-partition window.
     """
     t = F.col("__t")
@@ -845,7 +831,7 @@ def collocation_pmi(
 
     head = scored.orderBy(
         F.col("pmi").desc(), F.col("w1").asc(), F.col("w2").asc()
-    ).limit(top)
+    ).limit(50)
     w = Window.orderBy(F.col("pmi").desc(), F.col("w1").asc(), F.col("w2").asc())
     return head.withColumn("rank", F.row_number().over(w).cast("int"))
 

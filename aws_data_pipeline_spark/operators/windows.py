@@ -37,17 +37,16 @@ def running_sum(
     order_by: Sequence[Column],
     value_col: str,
     out_col: str = "running_total",
-    scale: str = "decimal(30,2)",
 ) -> DataFrame:
-    """Cumulative sum over an unbounded-preceding frame, decimal-exact so the
-    prefix sums are order-of-evaluation independent."""
+    """Cumulative sum over an unbounded-preceding frame, decimal(30,2)-exact
+    so the prefix sums are order-of-evaluation independent."""
     w = (
         Window.partitionBy(*partition_by)
         .orderBy(*order_by)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return df.withColumn(
-        out_col, F.sum(F.col(value_col).cast(scale)).over(w).cast("double")
+        out_col, F.sum(F.col(value_col).cast("decimal(30,2)")).over(w).cast("double")
     )
 
 

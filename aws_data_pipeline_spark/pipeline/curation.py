@@ -22,12 +22,19 @@ incremental variant unchanged.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from aws_data_pipeline_spark.operators import dedup, sampling, similarity, text
+
+# fuzzy dedup: MinHash over 5-shingles, near-duplicate at Jaccard >= 0.8
+# (banding derived from the threshold by dedup.choose_minhash_params)
+_JACCARD_K = 5
+_JACCARD_THRESHOLD = 0.8
+_SPLIT_WEIGHTS = {"train": 0.98, "val": 0.01, "test": 0.01}
+_SPLIT_SEED = "curation-v1"
 
 
 @dataclass
@@ -39,17 +46,9 @@ class CurationConfig:
     # n_chars). False = stage disabled (the test corpora are already plain).
     strip_markup: bool = False
     min_quality: float = 0.5
-    keep_langs: tuple[str, ...] = ()  # empty = keep all
     # opt-in hard-rule gate (text.gopher_quality_flags) layered on the
     # continuous score gate — off by default so existing chains are unchanged
     use_gopher_rules: bool = False
-    jaccard_k: int = 5
-    jaccard_threshold: float = 0.8
-    # None = derive from the threshold via the banding S-curve rule
-    # (dedup.choose_minhash_params) — the parameter-scaling guidance as the
-    # live default rather than a hand-tuned constant
-    num_perm: int | None = None
-    bands: int | None = None
     # shingle/split hash family: "xxhash64" (JVM-side, the hot path) or
     # "md5" (engine-portable — lets an external oracle replay the WHOLE
     # pipeline including fuzzy-dedup candidates and split membership)
@@ -59,10 +58,6 @@ class CurationConfig:
     semantic_threshold: float | None = None
     embedding_id_col: str = "vec_id"
     embedding_col: str = "embedding"
-    split_weights: dict[str, float] = field(
-        default_factory=lambda: {"train": 0.98, "val": 0.01, "test": 0.01}
-    )
-    split_seed: str = "curation-v1"
     # opt-in mixture resampling stage between dedup and split: execute the
     # T=2 temperature mix by deterministic hash acceptance (downweights the
     # dominant (source, lang) slice); None = stage disabled
@@ -84,7 +79,7 @@ class CurationConfig:
     scrub_dup_spans: bool = False
     # opt-in leakage-guard split: key the train/val/test hash on RELATED-
     # document clusters at this Jaccard threshold instead of per-document.
-    # Set BELOW jaccard_threshold: duplicates above it are already collapsed
+    # Set BELOW the 0.8 dedup threshold: duplicates above it are already collapsed
     # to one survivor by dedup, so the residual leakage risk is the
     # related-but-not-duplicate band (e.g. 0.5-0.8) — paraphrases and
     # overlapping revisions that would contaminate eval if they straddled
@@ -102,10 +97,10 @@ def curate(
 
     Dedup policy: survivors are the min doc_id of each duplicate class —
     exact classes come from the content digest; fuzzy classes are the
-    CONNECTED COMPONENTS of the MinHash-LSH verified pair graph at
-    ``jaccard_threshold`` (transitive closure; each cluster keeps its min
-    doc_id). Deterministic end-to-end: same input -> same survivors -> same
-    split assignment, regardless of partitioning.
+    CONNECTED COMPONENTS of the MinHash-LSH verified pair graph at Jaccard
+    0.8 (transitive closure; each cluster keeps its min doc_id). The split
+    is 0.98/0.01/0.01 train/val/test. Deterministic end-to-end: same input
+    -> same survivors -> same split assignment, regardless of partitioning.
     """
     cfg = cfg or CurationConfig()
 
@@ -123,8 +118,6 @@ def curate(
     # 1-2. row-local gates (no shuffle; predicates push into the scan)
     scored = text.quality_score(docs)
     kept = scored.filter(F.col("quality_score") >= cfg.min_quality)
-    if cfg.keep_langs:
-        kept = kept.filter(F.col("lang").isin(*cfg.keep_langs))
     if cfg.use_gopher_rules:
         # hard-rule gate rides the same scan (still row-local, no shuffle);
         # the diagnostic columns are dropped — downstream stages only need
@@ -142,24 +135,14 @@ def curate(
     # keep only each cluster's canonical (component-min doc_id). Transitive:
     # pairs (1,5),(2,5) collapse 1~2~5 into ONE survivor — the
     # drop-every-doc2 policy would wrongly keep both 1 and 2.
-    if (cfg.num_perm is None) != (cfg.bands is None):
-        # a half-specified banding would silently discard the half the
-        # caller DID set (the derivation ignores it) — fail loudly
-        raise ValueError(
-            "num_perm and bands must be set together (or both left None "
-            "to derive them from jaccard_threshold)"
-        )
-    if cfg.num_perm is None:
-        num_perm, bands = dedup.choose_minhash_params(cfg.jaccard_threshold)
-    else:
-        num_perm, bands = cfg.num_perm, cfg.bands
+    num_perm, bands = dedup.choose_minhash_params(_JACCARD_THRESHOLD)
     pairs = dedup.minhash_lsh_pairs(
         kept,
         "doc_id",
-        k=cfg.jaccard_k,
+        k=_JACCARD_K,
         num_perm=num_perm,
         bands=bands,
-        threshold=cfg.jaccard_threshold,
+        threshold=_JACCARD_THRESHOLD,
         hash_fn=cfg.hash_fn,
     )
     labels = dedup.connected_components(pairs)
@@ -236,15 +219,14 @@ def curate(
     # 5. deterministic split assignment — per-document hash, or cluster-
     # keyed over the related-document graph when the leakage guard is on
     if cfg.leakage_threshold is not None:
-        # banding ALWAYS re-derived for the LOWER threshold — explicit
-        # num_perm/bands configure the dedup stage only: reusing a 0.8-
+        # banding re-derived for the LOWER threshold: reusing the 0.8-
         # threshold curve at 0.5 would catch the related band this stage
         # exists for with ~20% recall, silently
         rel_perm, rel_bands = dedup.choose_minhash_params(cfg.leakage_threshold)
         rel_pairs = dedup.minhash_lsh_pairs(
             kept,
             "doc_id",
-            k=cfg.jaccard_k,
+            k=_JACCARD_K,
             num_perm=rel_perm,
             bands=rel_bands,
             threshold=cfg.leakage_threshold,
@@ -253,15 +235,15 @@ def curate(
         assigned = sampling.leakage_safe_split(
             kept,
             rel_pairs,
-            cfg.split_weights,
-            seed=cfg.split_seed,
+            _SPLIT_WEIGHTS,
+            seed=_SPLIT_SEED,
             hash_fn=cfg.hash_fn,
         )
         return kept.join(
             assigned.select("doc_id", "split"), "doc_id"
         )
     return sampling.hash_split(
-        kept, "doc_id", cfg.split_weights, seed=cfg.split_seed, hash_fn=cfg.hash_fn
+        kept, "doc_id", _SPLIT_WEIGHTS, seed=_SPLIT_SEED, hash_fn=cfg.hash_fn
     )
 
 

@@ -97,14 +97,18 @@ def dedup_against_silver(batch: DataFrame, silver_path: str) -> DataFrame:
     return batch.join(existing, "transaction_id", "left_anti")
 
 
+# the reference's per-stage Step Functions retry
+# (pipeline_definition.json:15-22): MaxAttempts 1 retry, BackoffRate 2.0
+_MAX_ATTEMPTS = 2
+_BACKOFF_RATE = 2.0
+
+
 @dataclass
 class PipelineConfig:
     bronze_path: str
     silver_path: str
     gold_path: str
-    max_attempts: int = 2  # reference retry: 1 retry per stage
     backoff_seconds: float = 1.0  # reference: 30s, scaled for tests
-    backoff_rate: float = 2.0
     notifier: Callable[[str, str], None] = field(
         default=lambda status, msg: print(f"[pipeline:{status}] {msg}")
     )
@@ -365,16 +369,16 @@ def _retry(fn: Callable[[], dict], cfg: PipelineConfig, stage: str) -> dict:
     exception was (the Step Functions Catch carries the state name for
     the same reason)."""
     delay = cfg.backoff_seconds
-    for attempt in range(1, cfg.max_attempts + 1):
+    for attempt in range(1, _MAX_ATTEMPTS + 1):
         try:
             return fn()
         except Exception as exc:
-            if attempt == cfg.max_attempts:
+            if attempt == _MAX_ATTEMPTS:
                 raise RuntimeError(
                     f"stage {stage!r} failed after {attempt} attempts: {exc}"
                 ) from exc
             time.sleep(delay)
-            delay *= cfg.backoff_rate
+            delay *= _BACKOFF_RATE
     raise AssertionError("unreachable")
 
 

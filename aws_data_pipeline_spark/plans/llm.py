@@ -462,6 +462,15 @@ def _code_digest() -> str:
     return h.hexdigest()
 
 
+# The marker every build-once index's active version records: written by
+# _write_src_marker and read back by _src_marker_fresh with this schema, so
+# the probe infers nothing from footers and a column an older writer did
+# not record reads as null (and the marker as stale).
+_SRC_MARKER_SCHEMA = (
+    "src_total long, src_files long, src_bytes long, code_digest string"
+)
+
+
 def _src_marker_fresh(
     spark: SparkSession, idx: str, state: tuple[int, int, int]
 ) -> bool:
@@ -473,18 +482,12 @@ def _src_marker_fresh(
     unchanged slice; scanning the filtered slice directly would read the
     doc_id column of the whole table on EVERY probe. An index with no
     committed version has no marker; a marker without every column
-    (older schema) reads as stale and triggers one rebuild."""
+    (older schema) reads the missing ones as null, so it is stale and
+    triggers one rebuild."""
     marker = f"{index_root(spark, idx)}/src_meta"
     if not zone_exists(spark, marker):
         return False
-    # RAW read, never read_pinned: this probe detects an OLD-SCHEMA
-    # marker by column presence, which a pinned schema would hide
-    meta = spark.read.parquet(marker)
-    if not {"src_total", "src_files", "src_bytes", "code_digest"} <= set(
-        meta.columns
-    ):
-        return False
-    r = meta.collect()[0]
+    r = spark.read.schema(_SRC_MARKER_SCHEMA).parquet(marker).collect()[0]
     return (r.src_total, r.src_files, r.src_bytes, r.code_digest) == (
         *state,
         _code_digest(),
@@ -494,11 +497,9 @@ def _src_marker_fresh(
 def _write_src_marker(
     spark: SparkSession, idx: str, state: tuple[int, int, int]
 ) -> None:
-    arrow_frame(
-        spark,
-        [(*state, _code_digest())],
-        "src_total long, src_files long, src_bytes long, code_digest string",
-    ).write.mode("overwrite").parquet(f"{index_root(spark, idx)}/src_meta")
+    arrow_frame(spark, [(*state, _code_digest())], _SRC_MARKER_SCHEMA).write.mode(
+        "overwrite"
+    ).parquet(f"{index_root(spark, idx)}/src_meta")
 
 
 class _IndexSpec(NamedTuple):
@@ -524,11 +525,11 @@ _TEXT_LSH_INDEX = _IndexSpec(
 )
 
 
-def _ivf_index_spec(n_cells: int, seed: int = 42) -> _IndexSpec:
+def _ivf_index_spec(n_cells: int) -> _IndexSpec:
     return _IndexSpec(
-        f"ivf_index_c{n_cells}_s{seed}", "embeddings", "vec_id",
+        f"ivf_index_c{n_cells}_s42", "embeddings", "vec_id",
         lambda corpus, idx: similarity.build_ivf_index(
-            corpus, idx, n_cells=n_cells, seed=seed
+            corpus, idx, n_cells=n_cells, seed=42
         ),
         lambda batch, idx: similarity.append_to_ivf_index(
             batch.sparkSession, batch, idx
@@ -839,7 +840,7 @@ def embedding_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # centroids, so the resident path loads both from disk rather than
 # retraining — that is what makes the resident and persisted search paths
 # row-for-row comparable.
-def _ivf_index(spark: SparkSession, sf_dir: str, n_cells: int, seed: int = 42):
+def _ivf_index(spark: SparkSession, sf_dir: str, n_cells: int):
     # the source STATE (row count + file fingerprint, same probe the disk
     # marker uses) keys the memo: a regenerated corpus under the same
     # sf_dir must invalidate the resident copy too (and unpersist the
@@ -847,7 +848,7 @@ def _ivf_index(spark: SparkSession, sf_dir: str, n_cells: int, seed: int = 42):
     # within one application after _ensure_index rebuilds the disk index
     def build():
         idx = index_root(
-            spark, _ensure_index(spark, sf_dir, _ivf_index_spec(n_cells, seed))
+            spark, _ensure_index(spark, sf_dir, _ivf_index_spec(n_cells))
         )
         cents = similarity.read_ivf_centroids(spark, idx)
         # the inverted file is READ from the persisted index, not
@@ -860,7 +861,7 @@ def _ivf_index(spark: SparkSession, sf_dir: str, n_cells: int, seed: int = 42):
         return cents, assigned
 
     return app_memo(
-        spark, ("ivf_resident", sf_dir, n_cells, seed),
+        spark, ("ivf_resident", sf_dir, n_cells),
         _src_state(spark, sf_dir, "embeddings"), build,
         release=lambda hit: hit[1].unpersist(),
     )
@@ -937,8 +938,8 @@ def embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ann_topk_lsh(queries, e, k=5, n_planes=4)
 
 
-def _pq_corpus(spark: SparkSession, sf_dir: str, m: int = 8, ks: int = 16):
-    """Resident PQ artifacts per (sf_dir, params, source state), READ from
+def _pq_corpus(spark: SparkSession, sf_dir: str):
+    """Resident 8×16 PQ artifacts per (sf_dir, source state), READ from
     the persisted index (single source of truth for codebooks AND codes —
     the _ivf_index rule): the disk index is built/appended once per
     corpus by _ensure_index, the resident copy just loads its codebooks
@@ -946,14 +947,14 @@ def _pq_corpus(spark: SparkSession, sf_dir: str, m: int = 8, ks: int = 16):
     return identical rows by construction. A superseded entry's codes are
     unpersisted on eviction."""
     def build():
-        idx = index_root(spark, _ensure_index(spark, sf_dir, _pq_index_spec(m, ks)))
+        idx = index_root(spark, _ensure_index(spark, sf_dir, _pq_index_spec(8, 16)))
         books = similarity.read_pq_codebooks(spark, idx)
         codes = read_pinned(spark, f"{idx}/codes").persist()
         codes.count()  # materialize eagerly
         return books, codes
 
     return app_memo(
-        spark, ("pq_resident", sf_dir, m, ks),
+        spark, ("pq_resident", sf_dir),
         _src_state(spark, sf_dir, "embeddings"), build,
         release=lambda hit: hit[1].unpersist(),
     )

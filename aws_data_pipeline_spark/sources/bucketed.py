@@ -23,14 +23,14 @@ def write_bucketed(
     bucket_by: Sequence[str],
     num_buckets: int,
     sort_by: Sequence[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Persist ``df`` as a bucketed (and optionally sorted) managed table.
+    """Persist ``df`` as a bucketed (and optionally sorted) managed table,
+    replacing any existing one.
 
     ``sort_by`` within buckets lets SortMergeJoin skip its sort too —
     scan -> zip join, no exchange, no sort.
     """
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_by)
+    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_by)
     if sort_by:
         writer = writer.sortBy(*sort_by)
     writer.format("parquet").saveAsTable(table)

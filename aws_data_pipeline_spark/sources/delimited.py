@@ -9,15 +9,13 @@ prune columns at parse time)."""
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
 def quarantine_split(
-    raw: DataFrame, schema: T.StructType, corrupt_col: str, sep: str = ","
+    raw: DataFrame, schema: T.StructType, corrupt_col: str
 ) -> tuple[DataFrame, DataFrame]:
     """Shared good/bad split for PERMISSIVE+corrupt-column scans (CSV and
     JSONL quarantines): ``good`` = rows whose corrupt marker is NULL, with
@@ -34,7 +32,7 @@ def quarantine_split(
         raw.filter(raw[corrupt_col].isNotNull())
         .select(
             F.coalesce(
-                F.col(corrupt_col), F.concat_ws(sep, *all_fields)
+                F.col(corrupt_col), F.concat_ws(",", *all_fields)
             ).alias(corrupt_col)
         )
         .localCheckpoint(eager=True)
@@ -42,22 +40,16 @@ def quarantine_split(
     return good, bad
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    header: bool = True,
-    delimiter: str = ",",
-    recursive: bool = True,
-) -> DataFrame:
-    """CSV scan with explicit schema. ``mode=FAILFAST`` — silent null-ing of
+def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """Comma-separated scan with a header row and explicit schema.
+    ``mode=FAILFAST`` — silent null-ing of
     malformed rows (the default PERMISSIVE) hides data-quality problems the
     cleanse operators are supposed to count."""
     return (
         spark.read.schema(schema)
-        .option("header", str(header).lower())
-        .option("delimiter", delimiter)
-        .option("recursiveFileLookup", str(recursive).lower())
+        .option("header", "true")
+        .option("delimiter", ",")
+        .option("recursiveFileLookup", "true")
         .option("mode", "FAILFAST")
         .csv(path)
     )
@@ -70,9 +62,6 @@ def read_csv_quarantine(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    header: bool = True,
-    delimiter: str = ",",
-    recursive: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """CSV scan that QUARANTINES malformed rows instead of failing the job:
     returns ``(good, bad)`` where ``good`` has exactly the declared schema
@@ -103,35 +92,25 @@ def read_csv_quarantine(
     )
     raw = (
         spark.read.schema(full)
-        .option("header", str(header).lower())
-        .option("delimiter", delimiter)
-        .option("recursiveFileLookup", str(recursive).lower())
+        .option("header", "true")
+        .option("delimiter", ",")
+        .option("recursiveFileLookup", "true")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .csv(path)
     )
-    return quarantine_split(raw, schema, CORRUPT_COL, sep=delimiter)
+    return quarantine_split(raw, schema, CORRUPT_COL)
 
 
-def write_csv(
-    df: DataFrame, path: str, header: bool = True, delimiter: str = ","
-) -> None:
-    (
-        df.write.mode("overwrite")
-        .option("header", str(header).lower())
-        .option("delimiter", delimiter)
-        .csv(path)
-    )
+def write_csv(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").option("header", "true").option(
+        "delimiter", ","
+    ).csv(path)
 
 
 def read_orc(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     return spark.read.schema(schema).orc(path)
 
 
-def write_orc(
-    df: DataFrame, path: str, partition_by: Sequence[str] = (), mode: str = "overwrite"
-) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
+def write_orc(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").orc(path)

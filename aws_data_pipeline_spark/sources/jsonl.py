@@ -19,16 +19,11 @@ from aws_data_pipeline_spark.operators import lit_array
 _CORRUPT_COL = "_corrupt_record"
 
 
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    recursive: bool = True,
-) -> DataFrame:
+def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     return (
         spark.read.schema(schema)
         .option("multiLine", "false")
-        .option("recursiveFileLookup", str(recursive).lower())
+        .option("recursiveFileLookup", "true")
         .json(path)
     )
 
@@ -37,7 +32,6 @@ def read_jsonl_quarantine(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    recursive: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """JSONL scan that QUARANTINES malformed lines instead of silently
     nulling them: returns ``(good, bad)`` — ``good`` with exactly the
@@ -64,7 +58,7 @@ def read_jsonl_quarantine(
     raw = (
         spark.read.schema(full)
         .option("multiLine", "false")
-        .option("recursiveFileLookup", str(recursive).lower())
+        .option("recursiveFileLookup", "true")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", _CORRUPT_COL)
         .json(path)
@@ -84,7 +78,6 @@ def unknown_key_split(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    recursive: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Schema-EVOLUTION quarantine (the strict edge policy): split the
     batch into ``(good, unknown)`` where ``good`` carries only lines
@@ -104,7 +97,7 @@ def unknown_key_split(
     All JVM-side: one text scan, ``json_object_keys`` + ``array_except``
     per line — no inference pass, no Python."""
     raw = (
-        spark.read.option("recursiveFileLookup", str(recursive).lower())
+        spark.read.option("recursiveFileLookup", "true")
         .text(path)
     )
     known = lit_array((f.name for f in schema.fields), "string")
@@ -125,7 +118,6 @@ def evolved_schema(
     spark: SparkSession,
     path: str,
     base_schema: T.StructType,
-    recursive: bool = True,
 ) -> T.StructType:
     """The opt-in widen-with-nulls policy: ``base_schema`` plus every NEW
     top-level field the batch carries (types from one inference pass over
@@ -142,7 +134,7 @@ def evolved_schema(
     merge_schema=True)`` (older files surface the new columns as null)
     until a compaction or backfill settles the zone on one footer."""
     inferred = (
-        spark.read.option("recursiveFileLookup", str(recursive).lower())
+        spark.read.option("recursiveFileLookup", "true")
         .option("multiLine", "false")
         .json(path)
         .schema

@@ -408,7 +408,7 @@ def index_is_version_root(spark: SparkSession, path: str, root: str) -> bool:
 def zone_bucket_count(spark: SparkSession, path: str) -> int | None:
     """Recorded hash-bucket fan-out of a ``bucket=``-partitioned zone
     (``path/_buckets/<N>`` marker, written BEFORE the first data file), or
-    None for an unbucketed legacy zone. The marker — not the caller's
+    None when no marker is recorded. The marker — not the caller's
     parameter — is the source of truth on every later append/read: a
     pruned anti-join computed under a DIFFERENT modulus than the data was
     written with would silently miss rows and re-admit duplicates."""
@@ -423,7 +423,7 @@ def record_zone_bucket_count(spark: SparkSession, path: str, n: int) -> None:
 
 
 def pruned_zone_ids(
-    spark, path: str, batch: DataFrame, n_buckets: int | None, id_col: str
+    spark, path: str, batch: DataFrame, n_buckets: int, id_col: str
 ) -> DataFrame:
     """A ``bucket=``-partitioned zone's id column restricted — by
     PARTITION PRUNING — to the hash buckets this batch's ids land in.
@@ -431,12 +431,8 @@ def pruned_zone_ids(
     O(zone): the literal ``bucket IN (...)`` disjunction resolves to
     PartitionFilters, so a batch touching 4 of 1024 buckets lists and
     scans 4/1024 of the zone's id column — the partition-pruned silver
-    pattern (:func:`read_partition_slice`) applied to an id-keyed zone.
-    Legacy unbucketed zones (``n_buckets`` None) fall back to the full
-    column-pruned id scan."""
+    pattern (:func:`read_partition_slice`) applied to an id-keyed zone."""
     ids = spark.read.parquet(path)
-    if n_buckets is None:
-        return ids.select(id_col)
     bkts = sorted(
         int(r.b)
         for r in batch.select(
@@ -923,9 +919,7 @@ def copy_zone(spark, src: str, dst: str) -> None:
     spark.read.parquet(src).write.mode("overwrite").parquet(dst)
 
 
-def compact_index(
-    spark, path: str, rewrite: dict, copy: tuple, target_file_bytes: int
-) -> dict[str, int]:
+def compact_index(spark, path: str, rewrite: dict, copy: tuple) -> dict[str, int]:
     """Compact a maintained index into its next version: each ``rewrite``
     sub-table through :func:`compact_zone` (its dict holds the clustering
     keyword, ``sort_by`` or ``partition_by``), each ``copy`` sub-table
@@ -937,10 +931,7 @@ def compact_index(
     old_root = index_root(spark, path)
     new_root, new_v = index_next_root(spark, path)
     written = {
-        sub: compact_zone(
-            spark, f"{old_root}/{sub}", target_file_bytes=target_file_bytes,
-            dest=f"{new_root}/{sub}", **kw,
-        )
+        sub: compact_zone(spark, f"{old_root}/{sub}", dest=f"{new_root}/{sub}", **kw)
         for sub, kw in rewrite.items()
     }
     for sub in copy:

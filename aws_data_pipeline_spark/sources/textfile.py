@@ -18,9 +18,8 @@ def read_text_corpus(
     spark: SparkSession,
     path: str,
     whole_file: bool = True,
-    recursive: bool = True,
 ) -> DataFrame:
-    """Read a directory of text files as a document frame.
+    """Read a directory tree of text files as a document frame.
 
     ``whole_file=True``: one row per file — document identity is the file
     (crawl shard, book, source file); ``doc_id`` is a deterministic 64-bit
@@ -34,7 +33,7 @@ def read_text_corpus(
     """
     reader = (
         spark.read.option("wholetext", "true" if whole_file else "false")
-        .option("recursiveFileLookup", "true" if recursive else "false")
+        .option("recursiveFileLookup", "true")
     )
     df = reader.text(path).select(
         F.col("value").alias("text"),

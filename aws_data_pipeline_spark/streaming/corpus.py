@@ -14,7 +14,7 @@ Per micro-batch, in this order:
    brand-new zone — the caller's ``corpus_buckets``, recorded BEFORE the
    first data file (the marker, not the parameter, governs an existing
    zone: a modulus mismatch would silently break the pruned anti-join;
-   legacy unbucketed zones stay unbucketed and use full id scans);
+   an existing zone without the marker is refused);
 3. in-batch dedup: candidate pairs, then the deterministic min-id
    survivor of each ``cluster_assignments`` cluster — re-runs pick the
    same survivors;
@@ -55,14 +55,13 @@ generation for readers that resolved their root before the flip, and
 anything superseded before this run opened has had a full run-cycle to
 drain. Steady-state storage per index stays ≤ 2×.
 
-Erasure order. Indexes first, then (by default) their superseded
-generations, which still hold the doomed rows, and the corpus zone LAST:
+Erasure order. Indexes first, then their superseded generations, which
+still hold the doomed rows, and the corpus zone LAST:
 it is the loop's idempotency authority, so erasing it first and crashing
 would let a re-delivered row re-enter while stale index rows still
 advertise the old one. Every step is idempotent, so a crash anywhere
-re-runs to completion. A bucketed zone's doomed ids name their partitions
-arithmetically, so the count and the rewrite touch O(buckets hit); a
-legacy unbucketed zone is rewritten whole.
+re-runs to completion. The zone's doomed ids name their partitions
+arithmetically, so the count and the rewrite touch O(buckets hit).
 
 Compaction (:func:`compact_corpus_indexes`, and
 ``similarity.compact_embedding_indexes``) is probe-safe but not
@@ -121,6 +120,17 @@ def _gc(spark: SparkSession, estate: list) -> None:
             gc_index_versions(spark, path)
 
 
+def _bucketed(nb: int | None, corpus_path: str) -> int:
+    """``nb``, a corpus zone's recorded bucket fan-out; a zone holding
+    data but no ``_buckets`` marker predates the bucketed layout."""
+    if nb is None:
+        raise ValueError(
+            f"corpus zone {corpus_path} has no _buckets marker: it predates "
+            "the bucket=-partitioned corpus layout; rewrite it bucketed"
+        )
+    return nb
+
+
 def _ingest(
     spark: SparkSession, source: tuple, checkpoint_path: str, *,
     corpus_path: str, corpus_buckets: int, id_col: str, prep, in_batch_pairs,
@@ -147,6 +157,7 @@ def _ingest(
         if nb is None and not zone_exists(sess, corpus_path):
             record_zone_bucket_count(sess, corpus_path, corpus_buckets)
             nb = corpus_buckets
+        nb = _bucketed(nb, corpus_path)
         uniq, pairs = in_batch_pairs(batch)
         assign = dedup.cluster_assignments(uniq, pairs, id_col)
         survivors = uniq.join(
@@ -170,10 +181,9 @@ def _ingest(
                 )
                 novel = survivors.join(existing, id_col, "left_anti")
             if not novel.isEmpty():
-                if nb is not None:
-                    novel = novel.withColumn("bucket", F.pmod(F.col(id_col), F.lit(nb)))
-                parts = [] if nb is None else ["bucket"]
-                novel.write.mode("append").partitionBy(*parts).parquet(corpus_path)
+                novel.withColumn("bucket", F.pmod(F.col(id_col), F.lit(nb))).write.mode(
+                    "append"
+                ).partitionBy("bucket").parquet(corpus_path)
             if index_has(sess, index_path, "meta"):
                 append_index(survivors, index_path)
             else:
@@ -220,16 +230,9 @@ def _erase_corpus(
     spark: SparkSession, corpus_path: str, doomed: DataFrame, key: str
 ) -> int:
     """Remove the ``doomed`` ids from a corpus zone; returns rows removed.
-    On a bucketed zone the count and the rewrite read only the buckets
-    the doomed ids land in; a legacy unbucketed zone is rewritten whole."""
-    nb = zone_bucket_count(spark, corpus_path)
-    if nb is None:
-        cur = spark.read.parquet(corpus_path)
-        surv = cur.join(doomed, key, "left_anti").localCheckpoint(eager=True)
-        n = cur.count() - surv.count()
-        if n > 0:
-            surv.write.mode("overwrite").parquet(corpus_path)
-        return n
+    The count and the rewrite read only the buckets the doomed ids land
+    in."""
+    nb = _bucketed(zone_bucket_count(spark, corpus_path), corpus_path)
     n = (
         pruned_zone_ids(spark, corpus_path, doomed, nb, key)
         .join(doomed, key, "left_semi")
@@ -244,15 +247,14 @@ def _erase_corpus(
 
 def _forget(
     spark: SparkSession, ids: DataFrame, id_col: str, key: str,
-    corpus_path: str | None, estate: list, gc_superseded: bool, erase_indexes,
+    corpus_path: str | None, estate: list, erase_indexes,
 ) -> dict[str, int]:
     """The erasure shared by both estates, in the module docstring's order:
     ``erase_indexes(doomed)`` (per-surface counts), the superseded
     generations, then the corpus zone."""
     doomed = ids.select(F.col(id_col).alias(key)).distinct()
     out = erase_indexes(doomed)
-    if gc_superseded:
-        _gc(spark, estate)
+    _gc(spark, estate)
     if corpus_path is not None and zone_exists(spark, corpus_path):
         out["corpus"] = _erase_corpus(spark, corpus_path, doomed, key)
     return out
@@ -307,7 +309,6 @@ def compact_corpus_indexes(
     spark: SparkSession,
     index_path: str,
     kgram_index_path: str | None = None,
-    target_file_bytes: int = 128 * 1024 * 1024,
 ) -> dict[str, int]:
     """Periodic maintenance for the append-maintained corpus indexes:
     every availableNow batch appends one small parquet file per index
@@ -332,7 +333,7 @@ def compact_corpus_indexes(
 
     def swap(path: str, cluster: dict) -> dict[str, int]:
         rewrite = {sub: {"sort_by": key} for sub, key in cluster.items()}
-        return compact_index(spark, path, rewrite, ("meta",), target_file_bytes)
+        return compact_index(spark, path, rewrite, ("meta",))
 
     written = swap(index_path, dedup._TEXT_LSH_CLUSTER)
     if kgram_index_path is not None and index_has(
@@ -348,12 +349,7 @@ def incremental_corpus_ingest(
     corpus_path: str,
     index_path: str,
     checkpoint_path: str,
-    threshold: float = 0.8,
-    k: int = 5,
-    num_perm: int = 16,
-    bands: int = 4,
     kgram_index_path: str | None = None,
-    kgram_k: int = 8,
     corpus_buckets: int = 64,
     strip_markup: bool = False,
     min_quality: float | None = None,
@@ -364,13 +360,13 @@ def incremental_corpus_ingest(
     append of novel docs to the corpus zone and the indexes.
 
     In-batch dedup is an exact digest first (cheap), then MinHash-LSH
-    pairs at ``threshold``; the primary index is the MinHash-LSH index
-    at ``index_path`` (``neardup_against_index`` probes it), built with
-    ``k``/``num_perm``/``bands`` and appended under its own stored
-    parameters (:func:`append_to_lsh_text_index`).
+    pairs at Jaccard 0.8; the primary index is the MinHash-LSH index at
+    ``index_path`` (``neardup_against_index`` probes it at 0.8), built
+    with 5-shingles and 16 permutations in 4 bands and appended under
+    its own stored parameters (:func:`append_to_lsh_text_index`).
 
     ``kgram_index_path`` (optional) additionally maintains the corpus's
-    duplicate-SPAN fingerprint index (``dedup.build_kgram_index``):
+    duplicate-SPAN fingerprint index (``dedup.build_kgram_index``, 8-grams):
     accepted docs' distinct positional k-gram hashes append after the
     corpus write, anti-joined against the hash set so replays are
     idempotent by construction — downstream span audits
@@ -418,24 +414,21 @@ def incremental_corpus_ingest(
             .filter(~F.col("is_duplicate"))
             .drop("text_hash", "canonical_doc_id", "is_duplicate")
         )
-        pairs = dedup.minhash_lsh_pairs(
-            uniq, "doc_id", k=k, num_perm=num_perm, bands=bands, threshold=threshold
-        )
-        return uniq, pairs
+        return uniq, dedup.minhash_lsh_pairs(uniq, "doc_id")
 
     _ingest(
         spark, ("json", docs_path, DOC_SCHEMA), checkpoint_path,
         corpus_path=corpus_path, corpus_buckets=corpus_buckets, id_col="doc_id",
         prep=prep, in_batch_pairs=in_batch_pairs,
-        probe=dedup.neardup_against_index, threshold=threshold,
+        probe=dedup.neardup_against_index, threshold=0.8,
         index_path=index_path, append_index=append_to_lsh_text_index,
         build_index=lambda full, path: dedup.build_lsh_text_index(
-            full.select("doc_id", "text"), path, k=k, num_perm=num_perm, bands=bands
+            full.select("doc_id", "text"), path
         ),
         secondaries=[
             _Index(
                 kgram_index_path, "meta", dedup.append_to_kgram_index,
-                lambda full, path: dedup.build_kgram_index(full, path, k=kgram_k),
+                dedup.build_kgram_index,
             )
         ],
         estate=[index_path, kgram_index_path],
@@ -450,7 +443,6 @@ def forget_documents(
     index_path: str | None = None,
     kgram_index_path: str | None = None,
     id_col: str = "doc_id",
-    gc_superseded: bool = True,
 ) -> dict[str, int]:
     """GDPR-style erasure across the text estate the ingest loop
     maintains, in the module docstring's order: remove ``ids`` from the
@@ -501,5 +493,5 @@ def forget_documents(
 
     return _forget(
         spark, ids, id_col, "doc_id", corpus_path, [index_path, kgram_index_path],
-        gc_superseded, erase_indexes,
+        erase_indexes,
     )

@@ -54,7 +54,6 @@ def incremental_embedding_ingest(
     corpus_path: str,
     index_path: str,
     checkpoint_path: str,
-    threshold: float = 0.9,
     ivf_index_path: str | None = None,
     ivf_cells: int = 16,
     ivf_retrain: bool = False,
@@ -62,8 +61,6 @@ def incremental_embedding_ingest(
     pq_retrain: bool = False,
     pq_m: int = 8,
     pq_ks: int = 16,
-    pq_seed: int = 42,
-    pq_max_train: int = 16384,
     corpus_buckets: int = 64,
     sq8_index_path: str | None = None,
     sq8_retrain: bool = False,
@@ -76,7 +73,7 @@ def incremental_embedding_ingest(
     corpus zone, the LSH index and every configured ANN index.
 
     In-batch dedup drops repeated vec_ids, then pairs vectors at cosine
-    ≥ ``threshold`` (``neardup_pairs_lsh``); survivors probe the
+    ≥ 0.9 (``neardup_pairs_lsh``), the probe's threshold too; survivors probe the
     embedding-LSH index at ``index_path``
     (``embedding_neardup_against_index``).
 
@@ -93,9 +90,8 @@ def incremental_embedding_ingest(
     saturate) and the PQ index (appends encode under the stored
     codebooks). Each appends from the batch ∩ corpus set and bootstraps
     from the full corpus zone. The PQ bootstrap takes its shape from
-    ``pq_m``/``pq_ks``/``pq_seed``/``pq_max_train`` (corpora whose dim is
-    not divisible by 8 need a non-default ``pq_m``); appends and
-    retrains read the stored meta.
+    ``pq_m``/``pq_ks`` (corpora whose dim is not divisible by 8 need a
+    non-default ``pq_m``); appends and retrains read the stored meta.
 
     ``ivf_retrain`` / ``pq_retrain`` / ``sq8_retrain``: post-run
     maintenance. After the availableNow run drains, ``ivf_retrain_due``
@@ -122,7 +118,7 @@ def incremental_embedding_ingest(
 
     def in_batch_pairs(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
         uniq = batch.dropDuplicates(["vec_id"])
-        pairs = similarity.neardup_pairs_lsh(uniq, threshold=threshold).select(
+        pairs = similarity.neardup_pairs_lsh(uniq, threshold=0.9).select(
             F.col("id1").alias("doc1"), F.col("id2").alias("doc2")
         )
         return uniq, pairs
@@ -135,7 +131,7 @@ def incremental_embedding_ingest(
         spark, ("parquet", vecs_path, VEC_SCHEMA), checkpoint_path,
         corpus_path=corpus_path, corpus_buckets=corpus_buckets, id_col="vec_id",
         prep=None, in_batch_pairs=in_batch_pairs,
-        probe=similarity.embedding_neardup_against_index, threshold=threshold,
+        probe=similarity.embedding_neardup_against_index, threshold=0.9,
         index_path=index_path,
         append_index=similarity.append_to_embedding_lsh_index,
         build_index=similarity.build_embedding_lsh_index,
@@ -158,7 +154,7 @@ def incremental_embedding_ingest(
                 # the CALLER's PQ shape: a dim not divisible by the
                 # default m=8 would otherwise raise mid-foreachBatch
                 lambda full, path: similarity.build_pq_index(
-                    full, path, m=pq_m, ks=pq_ks, seed=pq_seed, max_train=pq_max_train
+                    full, path, m=pq_m, ks=pq_ks
                 ),
             ),
         ],
@@ -197,19 +193,15 @@ def forget_vectors(
     sq8_index_path: str | None = None,
     ivfpq_cell_codes_path: str | None = None,
     id_col: str = "vec_id",
-    gc_superseded: bool = True,
 ) -> dict[str, int]:
     """GDPR-style erasure across the WHOLE embedding estate the ingest
     loop maintains, in the loop's erasure order (:mod:`streaming.corpus`):
     remove ``ids`` from every persisted index family, refresh the derived
     cell-codes layout (which still CONTAINS the erased codes until
     rebuilt — for erasure the rebuild is mandatory, not a freshness
-    nicety), collect — by default — the superseded generations of every
-    index (a kept generation still holds the doomed rows), and erase the
-    bucketed corpus zone last. Set ``gc_superseded=False`` only when
-    probes in other sessions may hold pre-flip scans AND a later
-    owner-scheduled ``gc_index_versions`` pass is guaranteed. Same
-    parameter names and owner cadence (between ingests) as
+    nicety), collect the superseded generations of every index (a kept
+    generation still holds the doomed rows), and erase the bucketed
+    corpus zone last. Same parameter names and owner cadence (between ingests) as
     :func:`incremental_embedding_ingest`.
 
     Returns per-surface deleted-row counts for the erasure audit log."""
@@ -266,6 +258,5 @@ def forget_vectors(
         ivfpq_cell_codes_path,
     ]
     return _forget(
-        spark, ids, id_col, "vec_id", corpus_path, estate, gc_superseded,
-        erase_indexes,
+        spark, ids, id_col, "vec_id", corpus_path, estate, erase_indexes
     )

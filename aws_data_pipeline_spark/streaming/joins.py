@@ -62,9 +62,7 @@ def interval_join(
     return lw.join(rw, cond, how)
 
 
-def click_purchase_pairs(
-    events: DataFrame, window_seconds: int = 600, watermark_delay: str = "30 minutes"
-) -> DataFrame:
+def click_purchase_pairs(events: DataFrame, window_seconds: int = 600) -> DataFrame:
     """Attribution pairs: each purchase matched to every click by the same
     user in the preceding ``window_seconds``. One events source, filtered
     into two streams — the canonical stream-stream shape (click stream ⋈
@@ -87,7 +85,6 @@ def click_purchase_pairs(
         left_ts="click_ts",
         right_ts="purchase_ts",
         window_seconds=window_seconds,
-        watermark_delay=watermark_delay,
     ).select("click_id", "purchase_id")
 
 
@@ -96,7 +93,6 @@ def enrich_stream_with_dim(
     spark,
     dim_path: str,
     on: str,
-    how: str = "left",
 ) -> DataFrame:
     """Stream-static join: enrich a streaming fact with a dimension table
     read from storage. Unlike the stream-stream case, the static side needs
@@ -114,10 +110,8 @@ def enrich_stream_with_dim(
 
     At 100 TB keep the dim pruned/columnar (broadcast-sized after pruning)
     or snapshot it to a compact gold table first — the fact stream never
-    buffers, only the dim is re-planned. ``how='left'`` keeps unmatched
-    facts (dim lag must not drop events); inner is the filtering variant.
-    (Right/full outer are unsupported by Spark for stream-static joins —
-    state would be unbounded on the static side's unmatched set.)
+    buffers, only the dim is re-planned. The join is a LEFT join: it keeps
+    unmatched facts (dim lag must not drop events).
     """
     dim = spark.read.parquet(dim_path)
-    return stream.join(dim, on, how)
+    return stream.join(dim, on, "left")

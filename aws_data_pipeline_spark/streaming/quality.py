@@ -28,7 +28,6 @@ def incremental_drift_monitor(
     baseline_path: str,
     metrics_path: str,
     checkpoint_path: str,
-    psi_threshold: float = 0.2,
     chisq_threshold: float | None = None,
 ) -> None:
     """One availableNow run: new source files → per-micro-batch drift
@@ -59,7 +58,7 @@ def incremental_drift_monitor(
     pre-stamp rows then read as null (visibly pre-fingerprint, never
     misattributed); a plain read of such a zone may sample an old
     footer and not see the column at all. Fresh zones need nothing.
-    ``psi_threshold`` defaults to the canonical 0.2 "investigate" level;
+    ``psi_alert`` fires above the canonical 0.2 "investigate" level;
     ``chisq_threshold`` is the caller's critical value for df = C-1 (no
     universal default — it depends on the category count), None = never
     alert. Alerts are DATA (a boolean column in the audit zone), not
@@ -128,7 +127,7 @@ def incremental_drift_monitor(
                 .collect()[0][0]
             )
             psi = float(psi) if psi is not None else None
-            psi_alert = psi is not None and psi > psi_threshold
+            psi_alert = psi is not None and psi > 0.2
         if base_cats is not None:
             bcat = arrow_frame(sess, base_cats, "category string, n_base long")
             ccat = (

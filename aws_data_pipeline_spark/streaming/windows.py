@@ -12,16 +12,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_WATERMARK = "30 minutes"  # late-data delay on ``ts`` for every window below
 
-def tumbling_counts(
-    events: DataFrame,
-    window_duration: str = "1 hour",
-    watermark_delay: str = "30 minutes",
-) -> DataFrame:
-    """Tumbling-window per-type counts/sums with late-data watermark."""
+
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """1-hour tumbling-window per-type counts/sums with late-data watermark."""
     return (
-        events.withWatermark("ts", watermark_delay)
-        .groupBy(F.window("ts", window_duration).alias("w"), F.col("event_type"))
+        events.withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(
             F.count("*").alias("event_count"),
             F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("value_sum"),
@@ -36,16 +34,11 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    window_duration: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark_delay: str = "30 minutes",
-) -> DataFrame:
-    """Sliding windows: each event lands in duration/slide windows."""
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """1-hour windows sliding every 15 minutes: each event lands in 4."""
     return (
-        events.withWatermark("ts", watermark_delay)
-        .groupBy(F.window("ts", window_duration, slide).alias("w"), F.col("event_type"))
+        events.withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), F.col("event_type"))
         .agg(F.count("*").alias("event_count"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -56,16 +49,12 @@ def sliding_counts(
     )
 
 
-def session_counts(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark_delay: str = "30 minutes",
-) -> DataFrame:
-    """Session windows (gap-merged) per user — the streaming-native twin of
-    operators/windows.py::sessionize."""
+def session_counts(events: DataFrame) -> DataFrame:
+    """Session windows (30-minute gap) per user — the streaming-native twin
+    of operators/windows.py::sessionize."""
     return (
-        events.withWatermark("ts", watermark_delay)
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
+        events.withWatermark("ts", _WATERMARK)
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), F.col("user_id"))
         .agg(F.count("*").alias("n_events"))
         .select(
             F.col("w.start").alias("session_start"),

@@ -11,6 +11,7 @@ without changing a single probe result.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from aws_data_pipeline_spark.operators.similarity import (
@@ -1768,20 +1769,19 @@ def test_ivf_payload_filtered_search_and_lifecycle(spark, sf_dir, tmp_path):
         S.ivf_topk_indexed(spark, queries, bare, k=5, where="label = 2")
 
 
-def test_forget_vectors_legacy_unbucketed_zone(spark, sf_dir, tmp_path):
-    """A LEGACY unbucketed corpus zone falls back to the one-partition
-    COW rewrite (correct counts, survivors intact)."""
+def test_forget_vectors_refuses_unbucketed_zone(spark, sf_dir, tmp_path):
+    """A corpus zone holding data but no ``_buckets`` marker predates the
+    bucketed layout: erasure refuses it with an error naming the path and
+    leaves the zone untouched."""
     from aws_data_pipeline_spark.streaming.embeddings import forget_vectors
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    corpus = str(tmp_path / "legacy_corpus")  # no _buckets marker
+    corpus = str(tmp_path / "unbucketed_corpus")  # no _buckets marker
     e.write.mode("overwrite").parquet(corpus)
-    doomed = spark.createDataFrame([(1,), (2,), (9999,)], "vec_id long")
-    out = forget_vectors(spark, doomed, corpus_path=corpus)
-    assert out == {"corpus": 2}  # 9999 absent
+    doomed = spark.createDataFrame([(1,), (2,)], "vec_id long")
+    with pytest.raises(ValueError, match=f"corpus zone {corpus} has no _buckets"):
+        forget_vectors(spark, doomed, corpus_path=corpus)
     got = {r.vec_id for r in spark.read.parquet(corpus).collect()}
-    assert got == {r.vec_id for r in e.collect()} - {1, 2}
-    # repeat: structural no-op (no write when nothing matches)
-    assert forget_vectors(spark, doomed, corpus_path=corpus) == {"corpus": 0}
+    assert got == {r.vec_id for r in e.collect()}

@@ -689,6 +689,53 @@ def test_quality_classifier_separates_planted_classes(spark):
     assert got == again
 
 
+def test_quality_classifier_trains_on_a_sample(spark):
+    """``train_frac < 1`` (the 100 TB lever) fits on a seeded sample of
+    the labeled frame, and the fitted model still scores every row."""
+    from aws_data_pipeline_spark.operators.classifier import (
+        score_quality,
+        train_quality_classifier,
+    )
+
+    rows = [
+        (i, "clean prose with the usual words flowing nicely along", True)
+        for i in range(100)
+    ] + [
+        (100 + i, "spam spam buy now click here zzz qqq xxx", False)
+        for i in range(100)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string, is_good boolean")
+    model = train_quality_classifier(df, F.col("is_good"), train_frac=0.5)
+    n_train = model.summary.predictions.count()
+    assert 0 < n_train < len(rows)
+    got = {r.doc_id: r.p_target for r in score_quality(model, df).collect()}
+    assert len(got) == len(rows)
+    assert min(got[i] for i in range(100)) > 0.5 > max(got[100 + i] for i in range(100))
+
+
+def test_quality_median_filter_approx_matches_exact(spark):
+    """``quality_median_filter(approx=True)`` swaps the exact median for
+    the ``approx_percentile`` sketch. Below its 10,000-row accuracy the
+    sketch returns the nearest-rank median: on an odd-sized corpus of
+    distinct scores it keeps exactly the exact set, and on an even-sized
+    one it keeps the exact set plus the lower-middle document (the exact
+    median interpolates between the two middle scores)."""
+    from aws_data_pipeline_spark.operators import text
+
+    def kept(n: int, approx: bool) -> set[int]:
+        # more words -> a strictly higher quality score
+        df = spark.createDataFrame(
+            [(i, " ".join(["word"] * i)) for i in range(1, n + 1)],
+            "doc_id long, text string",
+        )
+        out = text.quality_median_filter(df, approx=approx)
+        return {r.doc_id for r in out.collect()}
+
+    assert kept(5, approx=True) == kept(5, approx=False) == {3, 4, 5}
+    assert kept(6, approx=False) == {4, 5, 6}
+    assert kept(6, approx=True) == {3, 4, 5, 6}
+
+
 def test_unigram_logprob_ranks_rare_token_docs_higher(spark):
     """A document of corpus-rare tokens must carry a higher average
     negative log-prob than one of corpus-common tokens; scores are
@@ -2236,8 +2283,8 @@ def test_choose_ivfpq_params_meets_recall_floor(spark, tmp_path):
 
 
 def test_hard_negative_indexed_equals_exact_planted(spark, tmp_path):
-    """The ANN-backed miner equals the brute-force miner when scan_k
-    covers the slacked band: planted geometry — one near-dup (excluded
+    """The ANN-backed miner equals the brute-force miner when its 200-row
+    scan covers the slacked band: planted geometry — one near-dup (excluded
     >= hi), one hard negative (mined), one easy negative (excluded < lo)
     — through a real persisted SQ8 index."""
     from aws_data_pipeline_spark.operators import similarity as S

@@ -125,8 +125,9 @@ def test_approx_percentile_error_bound(spark, sf_dir):
 
 
 def test_heavy_hitters_matches_exact_vocabulary(spark, sf_dir):
-    """With max_items_tracked far above the distinct-token count the sketch
-    is exact: top-20 items and counts must equal the exact vocabulary."""
+    """With the sketch's 10,000 tracked items far above the distinct-token
+    count the sketch is exact: top-20 items and counts must equal the exact
+    vocabulary."""
     from aws_data_pipeline_spark.operators import sampling
     from aws_data_pipeline_spark.plans.common import T
 
