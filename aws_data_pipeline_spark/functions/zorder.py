@@ -11,9 +11,11 @@ UDF) feeding the same repartitionByRange + sortWithinPartitions mechanics.
 At 100 TB this is the difference between "queries filtering on ship date
 skip files but queries filtering on price scan the partition" and both
 skipping: one clustered rewrite serves every dimension in the key.
-Fidelity degrades gracefully with dimension count (b bits per column in a
-63-bit key: 2 cols × 16 bits is comfortable; beyond ~4 cols the per-column
-resolution stops paying — the same guidance Delta documents).
+Fidelity degrades gracefully with dimension count: each column is
+quantized to 16 bits and the key keeps the top ``min(16, 63 // D)`` bits of
+each of its D columns, so up to 3 columns keep all 16 bits, 4 keep 15 and 8
+keep 7; past a handful of columns the per-column resolution stops paying —
+the same guidance Delta documents.
 """
 
 from __future__ import annotations
@@ -88,19 +90,20 @@ def zorder_proxy(col: Column, dtype) -> Column:
 
 
 def zorder_key(quantized: Sequence[Column]) -> Column:
-    """Morton interleave of pre-quantized ``[0, 2^16)`` longs: bit ``i``
-    of dimension ``d`` lands at position ``i * D + d``. Pure shift/mask
-    expression — ``16 × D`` terms, all inside codegen. ``16 * D``
-    must fit a signed long (≤ 63)."""
+    """Morton interleave of pre-quantized ``[0, 2^16)`` longs, keeping the
+    top ``b = min(16, 63 // D)`` bits of each of the D dimensions
+    (``q >> (16 - b)``) so the key fits a signed long: bit ``i`` of
+    dimension ``d`` lands at position ``i * D + d``. Up to 3 dimensions
+    keep all 16 bits. Pure shift/mask expression — ``b × D`` terms, all
+    inside codegen."""
     d_n = len(quantized)
-    if d_n == 0:
-        raise ValueError("zorder_key needs at least one column")
-    if _BITS * d_n > 63:
-        raise ValueError(f"bits*dims = {_BITS * d_n} exceeds a signed long")
+    if not 0 < d_n <= 63:
+        raise ValueError(f"zorder_key needs 1 to 63 columns, got {d_n}")
+    bits = min(_BITS, 63 // d_n)
     key = F.lit(0).cast("long")
     for d, q in enumerate(quantized):
-        for i in range(_BITS):
-            bit = F.shiftright(q, i).bitwiseAND(F.lit(1))
+        for i in range(bits):
+            bit = F.shiftright(q, _BITS - bits + i).bitwiseAND(F.lit(1))
             key = key + F.shiftleft(bit, i * d_n + d)
     return key
 
@@ -111,8 +114,10 @@ def zorder_cluster_zone(
     cols: Sequence[str],
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> int:
-    """Rewrite a zone clustered on the Z-order key of ``cols`` (16 bits
-    per dimension, domains taken from one min/max scan of the data). Same
+    """Rewrite a zone clustered on the Z-order key of ``cols`` (each
+    dimension quantized to 16 bits over its domain, taken from one min/max
+    scan of the data; :func:`zorder_key` keeps ``min(16, 63 // len(cols))``
+    of them). Same
     rewrite contract as ``compact_zone``: range-partition across
     ~target-size files, sort within, then the in-place ``_compacting`` swap
     (the zone directory is never truncated; ``_``-prefixed metadata trees

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from aws_data_pipeline_spark.functions.portable import md5_prefix_long
-from aws_data_pipeline_spark.operators import arrow_frame, widen_narrow_input
+from aws_data_pipeline_spark.operators import arrow_frame, indexes, widen_narrow_input
 from aws_data_pipeline_spark.operators.text import hashed_shingles, shingles, tokens
 from aws_data_pipeline_spark.sources.parquet import index_root, read_pinned
 
@@ -562,11 +562,32 @@ def neardup_against_corpus(
     return _verify_pairs(cand, new_sets, corpus_sets, "new_id", "corpus_id", threshold)
 
 
-# the two persisted text indexes' compaction clustering (``sets`` on doc,
-# ``bands`` on the candidate equi-join key, ``hashes`` on the hash), as
-# operators/similarity.py's ``_Codec`` declares its families'
-_TEXT_LSH_CLUSTER = {"sets": ("doc",), "bands": ("band", "key")}
-_KGRAM_CLUSTER = {"hashes": ("h",)}
+# The MinHash-LSH text index is a codec of operators/indexes.py, like the
+# embedding indexes: ``sets`` (doc, sh) is the primary table, the exact
+# verification side; ``bands`` (doc, band, key) the code table, the
+# candidate equi-join side. The permutations are seeded constants, so it is
+# a parameter-only codec: the codes re-derive from ``meta`` alone, as the
+# hyperplane-LSH codes do.
+_TEXT_LSH = indexes.Codec(
+    name="lsh_text",
+    primary_sub="sets",
+    primary_cols=("doc", "sh"),
+    # persist=False: the only consumer is the write; the read-back is the
+    # materialization the signatures need
+    primary=lambda rows, id_col, text_col, payload, p: shingle_sets(
+        rows, id_col, text_col, p.k, persist=False
+    ),
+    code_sub="bands",
+    artifact_subs=(),
+    meta="k int, num_perm int, bands int, hash_fn string",
+    cluster={"sets": ("doc",), "bands": ("band", "key")},
+    report="",
+    encode=lambda sets, m, payload: _banded_keys(
+        _signatures_from_sets(sets, m.num_perm, m.hash_fn),
+        m.bands,
+        m.num_perm // m.bands,
+    ),
+)
 
 
 def build_lsh_text_index(
@@ -587,32 +608,38 @@ def build_lsh_text_index(
     probes it via :func:`neardup_against_index` without touching corpus
     text. Signatures are computed from the MATERIALIZED sets read back
     from disk — tokenization runs once, and the write doubles as the
-    cache `_signatures_from_sets` requires. Every build writes a fresh
-    version directory and flips the pointer last — the same atomic-swap
-    contract as the embedding indexes (sources.parquet's versioned index
-    store)."""
-    from aws_data_pipeline_spark.sources.parquet import (
-        finish_index_build,
-        index_next_root,
+    cache `_signatures_from_sets` requires. Crash and rebuild contract:
+    :func:`indexes.build`."""
+    indexes.build(
+        _TEXT_LSH, df, path, id_col, text_col, (),
+        k=k, num_perm=num_perm, bands=bands, hash_fn=hash_fn,
     )
 
-    spark = df.sparkSession
-    root, new_v = index_next_root(spark, path)
-    # persist=False: the only consumer is this write — the read-back
-    # below is the materialization signatures use
-    shingle_sets(df, id_col, text_col, k, persist=False).write.mode(
-        "overwrite"
-    ).parquet(f"{root}/sets")
-    sets = read_pinned(spark, f"{root}/sets")
-    _banded_keys(
-        _signatures_from_sets(sets, num_perm, hash_fn), bands, num_perm // bands
-    ).write.mode("overwrite").parquet(f"{root}/bands")
-    arrow_frame(
-        spark,
-        [(k, num_perm, bands, hash_fn)],
-        "k int, num_perm int, bands int, hash_fn string",
-    ).write.mode("overwrite").parquet(f"{root}/meta")
-    finish_index_build(spark, path, new_v)
+
+def append_to_lsh_text_index(
+    df: DataFrame,
+    path: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> None:
+    """Idempotently append documents to a persisted MinHash-LSH index
+    under the index's OWN recorded parameters, so a probe never sees
+    mixed-parameter signatures. Already-indexed documents are never
+    shingled again; after a crash between the ``sets`` and ``bands``
+    writes, the re-run bands exactly the documents whose sets landed,
+    from the materialized sets (:func:`indexes.append`)."""
+    indexes.append(_TEXT_LSH, df, path, id_col, text_col)
+
+
+def delete_from_lsh_text_index(
+    spark, path: str, ids: DataFrame, id_col: str = "doc_id"
+) -> int:
+    """Erase documents from a persisted MinHash-LSH text index (shingle
+    sets + all band rows; meta carried — the permutation parameters are
+    document-independent, so survivor signatures never change): the
+    anti-join rewrite into a fresh version of :func:`indexes.delete`.
+    Idempotent; returns documents removed."""
+    return indexes.delete(_TEXT_LSH, spark, path, ids, id_col)
 
 
 def neardup_against_index(
@@ -627,7 +654,7 @@ def neardup_against_index(
     batch; parameters come from the index's own metadata. See
     :func:`neardup_against_corpus` for semantics and the scale story."""
     path = index_root(spark, path)
-    meta = read_pinned(spark, f"{path}/meta").collect()[0]
+    meta = indexes.read_meta(_TEXT_LSH, spark, path)
     return neardup_against_corpus(
         new_df,
         read_pinned(spark, f"{path}/sets"),
@@ -1485,26 +1512,4 @@ def remove_duplicate_spans(
         F.size("__t").cast("int").alias("n_tokens"),
         (F.size("__t") - F.size(kept)).cast("int").alias("n_removed_tokens"),
         F.concat_ws(" ", kept).alias("cleaned_text"),
-    )
-
-
-def delete_from_lsh_text_index(
-    spark, path: str, ids: DataFrame, id_col: str = "doc_id"
-) -> int:
-    """Erase documents from a persisted MinHash-LSH text index (shingle
-    sets + all band rows; meta carried — the permutation parameters are
-    document-independent, so survivor signatures never change). The
-    embedding families' deletion shape reused verbatim
-    (operators/similarity.py::_delete_ids_versioned): anti-join rewrite
-    into a fresh VERSION, probes mid-delete serve the old generation, a
-    crash leaves it active; idempotent; returns documents removed."""
-    from aws_data_pipeline_spark.operators.similarity import (
-        _delete_ids_versioned,
-    )
-
-    return _delete_ids_versioned(
-        spark, path, ids, id_col,
-        data_subs={"sets": "doc", "bands": "doc"},
-        copy_subs=("meta",),
-        primary="sets",
     )

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_data_pipeline_spark.operators import arrow_frame, lit_array
@@ -384,6 +384,45 @@ def chisq_from_counts(bc: DataFrame, cc: DataFrame) -> DataFrame:
     )
 
 
+# The drift baseline's tables: written by build_drift_baseline and read by
+# read_drift_baseline with these schemas, so no read infers from footers and
+# a column an older writer did not record (``baseline_id``) reads as null.
+BASELINE_SCHEMAS = {
+    "edges": "pos int, e double",
+    "value_bins": "bin int, n_base long",
+    "categories": "category string, n_base long",
+    "meta": "bins int, value_col string, cat_col string, baseline_id string",
+}
+
+
+def _write_baseline_table(spark, path: str, table: str, rows: list) -> None:
+    arrow_frame(spark, rows, BASELINE_SCHEMAS[table]).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/{table}")
+
+
+def read_drift_baseline(spark: SparkSession, path: str) -> tuple:
+    """A stored baseline (:func:`build_drift_baseline`) as driver values:
+    ``(meta row, edges, value bins, categories)`` — the edges ascending,
+    the bins ``(bin, n_base)`` and the categories ``(category, n_base)``
+    pairs, None for the column kind the baseline was not built with.
+    Every table is tiny (bins-1 edges, ≤ bins+1 bin counts, C
+    categories), and each costs one pinned-schema scan and collect."""
+
+    def rows(table: str) -> list:
+        schema = BASELINE_SCHEMAS[table]
+        return spark.read.schema(schema).parquet(f"{path}/{table}").collect()
+
+    meta = rows("meta")[0]
+    edges = value_bins = categories = None
+    if meta.value_col is not None:
+        edges = [float(r.e) for r in sorted(rows("edges"), key=lambda r: r.pos)]
+        value_bins = [tuple(r) for r in rows("value_bins")]
+    if meta.cat_col is not None:
+        categories = [tuple(r) for r in rows("categories")]
+    return meta, edges, value_bins, categories
+
+
 def build_drift_baseline(
     df: DataFrame,
     path: str,
@@ -434,9 +473,9 @@ def build_drift_baseline(
         es = df.agg(
             F.percentile(F.col(value_col), lit_array(fr, "double")).alias("es")
         ).collect()[0]["es"]
-        arrow_frame(
-            spark, [(i, float(e)) for i, e in enumerate(es)], "pos int, e double"
-        ).write.mode("overwrite").parquet(f"{path}/edges")
+        _write_baseline_table(
+            spark, path, "edges", [(i, float(e)) for i, e in enumerate(es)]
+        )
         # the bin counts are ≤ bins+1 rows — collect once so the stored
         # artifact and the fingerprint are computed from the same pass
         vb = sorted(
@@ -444,9 +483,7 @@ def build_drift_baseline(
             for r in bin_against_edges(df, value_col, list(es), "n_base")
             .collect()
         )
-        arrow_frame(spark, vb, "bin int, n_base long").write.mode(
-            "overwrite"
-        ).parquet(f"{path}/value_bins")
+        _write_baseline_table(spark, path, "value_bins", vb)
         fp.update(repr([float(e) for e in es]).encode())
         fp.update(repr(vb).encode())
     if cat_col is not None:
@@ -468,15 +505,11 @@ def build_drift_baseline(
         cats = sorted(
             (r["category"], int(r["n_base"])) for r in counted.collect()
         )
-        arrow_frame(
-            spark, cats, "category string, n_base long"
-        ).write.mode("overwrite").parquet(f"{path}/categories")
+        _write_baseline_table(spark, path, "categories", cats)
         fp.update(repr(cats).encode())
-    arrow_frame(
-        spark,
-        [(bins, value_col, cat_col, fp.hexdigest())],
-        "bins int, value_col string, cat_col string, baseline_id string",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    _write_baseline_table(
+        spark, path, "meta", [(bins, value_col, cat_col, fp.hexdigest())]
+    )
 
 
 def volume_anomalies(

@@ -13,15 +13,13 @@ from __future__ import annotations
 
 import math
 from collections import Counter
-from collections.abc import Callable, Sequence
-from dataclasses import dataclass
-from typing import Any
+from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Observation, Row, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from aws_data_pipeline_spark.operators import arrow_frame, lit_array
+from aws_data_pipeline_spark.operators import arrow_frame, indexes, lit_array
 from aws_data_pipeline_spark.sources.parquet import (
     artifact_memo,
     finish_index_build,
@@ -1065,8 +1063,9 @@ def build_embedding_lsh_index(
     rows_per_band: int = 4,
     dim: int = 64,
 ) -> None:
-    """Persist a corpus's hyperplane-LSH index — the embedding twin of
-    ``dedup.build_lsh_text_index``: ``path/vectors`` (id, v — the exact
+    """Persist a corpus's hyperplane-LSH index — the embedding codec of
+    :mod:`operators.indexes`, as the text MinHash-LSH index is the text
+    one: ``path/vectors`` (id, v — the exact
     cosine verification side), ``path/bands`` (id, band, code — the
     candidate equi-join side), ``path/meta`` (parameters; a probe under
     different parameters must fail loudly, not silently miss). The
@@ -1074,9 +1073,9 @@ def build_embedding_lsh_index(
     bit-identical codes from the meta alone — nothing model-like is
     stored. Build once per corpus version; per-batch semantic dedup then
     never touches corpus embeddings except the matched candidates.
-    Every build writes a fresh version and flips the pointer last (see
-    _build_index) — probes never see a half-written state."""
-    _build_index(
+    Every build writes a fresh version and flips the pointer last
+    (:func:`indexes.build`) — probes never see a half-written state."""
+    indexes.build(
         _LSH, df, path, id_col, vec_col, (),
         bands=bands, rows_per_band=rows_per_band, dim=dim, seed=42,
     )
@@ -1101,7 +1100,7 @@ def embedding_neardup_against_index(
     the BATCH side, so code-collision density cannot approach n² the way
     a full self-join at a loose threshold does."""
     path = index_root(spark, path)
-    meta = read_pinned(spark, f"{path}/meta").collect()[0]
+    meta = indexes.read_meta(_LSH, spark, path)
     nv = new_df.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
     new_banded = _band_codes(nv, meta.bands, meta.rows_per_band, meta.dim, meta.seed)
     cand = (
@@ -1133,16 +1132,13 @@ def append_to_embedding_lsh_index(
 ) -> None:
     """Idempotently append vectors to a persisted embedding-LSH index
     (:func:`build_embedding_lsh_index`) under the index's OWN recorded
-    parameters — the embedding twin of the text side's
-    ``streaming.corpus.append_to_lsh_text_index``, closing the
-    maintenance asymmetry where a growing corpus forced periodic full
-    rebuilds of the embedding index while the text indexes appended.
+    parameters, so a growing corpus never forces a full rebuild.
 
-    Crash backfill and idempotency: :func:`_append_to_index` (the seeded
+    Crash backfill and idempotency: :func:`indexes.append` (the seeded
     hyperplanes make re-derived codes bit-identical by construction).
     Per-batch cost is O(batch × bands) plus the two id anti-joins;
     corpus vectors are never re-banded."""
-    _append_to_index(_LSH, df, path, id_col, vec_col)
+    indexes.append(_LSH, df, path, id_col, vec_col)
 
 
 def append_to_ivf_index(
@@ -1259,9 +1255,10 @@ def compact_embedding_indexes(
     sq8_index_path: str | None = None,
 ) -> dict[str, int]:
     """Periodic maintenance for the append-maintained embedding indexes —
-    the embedding twin of ``streaming.corpus.compact_corpus_indexes``:
-    every appended batch adds one small parquet file per sub-table, and
-    probe latency eventually drowns in file open/seek. Clusters each
+    the embedding side of ``streaming.corpus.compact_corpus_indexes``
+    (both run :func:`indexes.compact`): every appended batch adds one
+    small parquet file per sub-table, and probe latency eventually drowns
+    in file open/seek. Clusters each
     sub-table on its probe key (``bands`` on (band, code) — the candidate
     equi-join; ``vectors`` on id — the verification lookup; the IVF
     corpus keeps its ``cell=`` partitioning, salted-compacted within) so
@@ -1282,23 +1279,15 @@ def compact_embedding_indexes(
     from aws_data_pipeline_spark.sources.parquet import compact_index
 
     written: dict[str, int] = {}
-
-    def _swap_codec(codec: _Codec, path: str) -> None:
-        rewrite = {sub: {"sort_by": key} for sub, key in codec.cluster.items()}
-        c = compact_index(spark, path, rewrite, (*codec.artifact_subs, "meta"))
-        written.update({f"{codec.report}{sub}": n for sub, n in c.items()})
-
-    if lsh_index_path is not None:
-        _swap_codec(_LSH, lsh_index_path)
+    for codec, path in ((_LSH, lsh_index_path), (_PQ, pq_index_path),
+                        (_SQ8, sq8_index_path)):
+        if path is not None:
+            written.update(indexes.compact(codec, spark, path))
     if ivf_index_path is not None:
         written["ivf_corpus"] = compact_index(
             spark, ivf_index_path, {"corpus": {"partition_by": ("cell",)}},
             ("centroids", "build_stats"),
         )["corpus"]
-    if pq_index_path is not None:
-        _swap_codec(_PQ, pq_index_path)
-    if sq8_index_path is not None:
-        _swap_codec(_SQ8, sq8_index_path)
     return written
 
 
@@ -1608,7 +1597,7 @@ def build_pq_index(
     hyperplanes (seeded, re-derivable from meta alone), PQ codebooks are
     DATA-FITTED — they must be stored, and append-time encoding must use
     the stored books or codes would be incomparable across batches.
-    Crash and rebuild contract: :func:`_build_index` (every build flips a
+    Crash and rebuild contract: :func:`indexes.build` (every build flips a
     fresh version, so no new-codes-under-old-codebooks state is ever
     visible).
 
@@ -1617,7 +1606,7 @@ def build_pq_index(
     searches can prune PQ-coded scans the same way they prune SQ8 ones;
     appends and retrains carry the payload through, unfiltered probes
     never read it."""
-    _build_index(
+    indexes.build(
         _PQ, corpus, path, id_col, vec_col, payload_cols,
         m=m, ks=ks, seed=seed, max_train=16384,
     )
@@ -1665,13 +1654,13 @@ def append_to_pq_index(
     """Idempotently append vectors to a persisted PQ index under its
     STORED codebooks (fixed on append, like IVF centroids — drift is
     retrained away, not absorbed); crash backfill and idempotency:
-    :func:`_append_to_index`. Per-batch cost is one encode of the
+    :func:`indexes.append`. Per-batch cost is one encode of the
     missing rows + two id anti-joins. Zero-norm /
     degenerate vectors land in ``vectors`` (the exactness side tolerates
     them — NULL cosine) but are dropped by the encoder, so they read as
     "pending" on a re-delivery of the SAME batch and are re-dropped — a
     bounded no-op, not accumulation: the pending set is batch-scoped."""
-    _append_to_index(_PQ, df, path, id_col, vec_col)
+    indexes.append(_PQ, df, path, id_col, vec_col)
 
 
 def pq_retrain_due(spark, path: str, growth_factor: float = 2.0) -> bool:
@@ -1680,7 +1669,7 @@ def pq_retrain_due(spark, path: str, growth_factor: float = 2.0) -> bool:
     the grown corpus increasingly badly (the PQ analogue of IVF cell
     drift; PQ has no per-cell counts, so realized growth is the signal).
     Cost: one footer-metadata count + the meta row."""
-    return _grown(_PQ, spark, index_root(spark, path), growth_factor)
+    return indexes.grown(_PQ, spark, index_root(spark, path), growth_factor)
 
 
 def retrain_pq_index(spark, path: str) -> dict[str, int]:
@@ -1691,9 +1680,9 @@ def retrain_pq_index(spark, path: str) -> dict[str, int]:
     that is the point); exact re-rank results are unchanged since
     ``vectors`` carries the same rows forward.
 
-    Concurrency-safe: see :func:`_retrain_index` — a crash mid-retrain
+    Concurrency-safe: see :func:`indexes.retrain` — a crash mid-retrain
     can never leave new codes visible under old stored codebooks."""
-    n, meta = _retrain_index(_PQ, spark, path, max_train=16384)
+    n, meta = indexes.retrain(_PQ, spark, path, max_train=16384)
     return {"n_vectors": n, "m": meta.m, "ks": meta.ks}
 
 
@@ -1933,8 +1922,8 @@ def build_sq8_index(
     payload through (schema discovered from the stored vectors), and the
     unfiltered probes are unaffected — they select (id, codes) / (id, v)
     explicitly, so parquet column pruning never reads the payload.
-    Crash and rebuild contract: :func:`_build_index`."""
-    _build_index(_SQ8, corpus, path, id_col, vec_col, payload_cols)
+    Crash and rebuild contract: :func:`indexes.build`."""
+    indexes.build(_SQ8, corpus, path, id_col, vec_col, payload_cols)
 
 
 def read_sq8_stats(spark, path: str) -> tuple[list[float], list[float]]:
@@ -1970,8 +1959,8 @@ def append_to_sq8_index(
     (built with ``payload_cols``) requires the same columns on the
     appended frame — discovered from the stored vectors schema, so the
     caller never restates them. Crash backfill and idempotency:
-    :func:`_append_to_index`."""
-    _append_to_index(_SQ8, df, path, id_col, vec_col)
+    :func:`indexes.append`."""
+    indexes.append(_SQ8, df, path, id_col, vec_col)
 
 
 def sq8_range_drift(spark, path: str) -> DataFrame:
@@ -2025,7 +2014,7 @@ def sq8_retrain_due(
     max overshoot on the synthetic corpus — new extremes of an unshifted
     tail, not a shift; genuine range breaks (the lifecycle test's planted
     outlier sits at ~0.78) clear 0.25 with margin."""
-    if _grown(_SQ8, spark, index_root(spark, path), growth_factor):
+    if indexes.grown(_SQ8, spark, index_root(spark, path), growth_factor):
         return True
     worst = sq8_range_drift(spark, path).agg(F.max("drift")).collect()[0][0]
     return worst is not None and worst > max_range_drift
@@ -2037,173 +2026,18 @@ def retrain_sq8_index(spark, path: str) -> dict[str, int]:
     source corpus. Payload columns (a ``payload_cols`` build) ride the
     vectors table through the rebuild. Versioned atomic swap (probes
     mid-retrain serve the old pair; crash leaves it active)."""
-    return {"n_vectors": _retrain_index(_SQ8, spark, path)[0]}
+    return {"n_vectors": indexes.retrain(_SQ8, spark, path)[0]}
 
 
 # --------------------------------------------------------------------------
-# One lifecycle for the hyperplane-LSH, PQ and SQ8 indexes. The three
-# families store one on-disk shape — ``vectors`` (id, v, payload...), a
-# per-id code table, the codec's fixed artifact tables and ``meta`` — and
-# differ only in the codec that fits artifacts and encodes vectors into
-# codes (the FAISS index-factory idea: each quantizer is a codec plugged
-# into one index shape). Build, the crash-safe append, the growth
-# trigger, retrain, delete, compaction and the indexed top-k probe are
-# written once below; the public per-family functions bind a codec. IVF
-# keeps its own lifecycle: its corpus is cell-partitioned, its append is
-# partition-pruned and counts, and its delete rewrites cells in place.
+# The embedding families' codecs. The lifecycle they share with the text
+# MinHash-LSH index (build, crash-safe append, growth trigger, retrain,
+# delete, compaction) is operators/indexes.py; the indexed top-k probe
+# below is the embedding families' own.
 # --------------------------------------------------------------------------
-
-
-@dataclass(frozen=True)
-class _Codec:
-    name: str  # public-name stem: build_<name>_index, append_to_<name>_index
-    code_sub: str  # the per-id code table
-    artifact_subs: tuple[str, ...]  # data-fitted tables, fixed on append
-    meta_cols: tuple[str, ...]  # int build parameters recorded in meta
-    cluster: dict[str, tuple[str, ...]]  # compaction sort key per id table
-    report: str  # key prefix in compact_embedding_indexes' result
-    fit: Callable[..., Any]  # (stored vectors, **params) -> artifact
-    write_artifacts: Callable[[Any, str, Any], None]  # (spark, root, artifact)
-    load: Callable[[Any, str], Any]  # (spark, resolved root) -> artifact
-    encode: Callable[[DataFrame, Any, Sequence[str]], DataFrame]
-    # (queries, corpus, artifact, code rows, k, rerank) -> resident top-k
-    search: Callable[..., DataFrame] | None = None
-
-
-def _build_index(
-    codec: _Codec,
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    vec_col: str,
-    payload_cols: Sequence[str],
-    **params,
-) -> None:
-    """Write ``vectors``, the code table, the artifacts and ``meta`` into
-    a fresh version directory and flip the pointer last (see
-    sources.parquet's versioned index store): probes and appends keep
-    reading one internally-consistent (codes, artifacts) pair, and a
-    crash mid-build leaves the previous version (or no index) active.
-    Data-fitted codecs record ``n_built``, the growth baseline of
-    :func:`_grown`: the CODES population, because the vectors count
-    includes the zero-norm/ragged rows an encoder drops and would make
-    the growth trigger fire late."""
-    spark = df.sparkSession
-    root, new_v = index_next_root(spark, path)
-    df.select(
-        F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"), *payload_cols
-    ).write.mode("overwrite").parquet(f"{root}/vectors")
-    stored = read_pinned(spark, f"{root}/vectors")
-    art = codec.fit(stored, **params)
-    codec.encode(stored, art, payload_cols).write.mode("overwrite").parquet(
-        f"{root}/{codec.code_sub}"
-    )
-    codec.write_artifacts(spark, root, art)
-    meta = [params[c] for c in codec.meta_cols]
-    schema = [f"{c} int" for c in codec.meta_cols]
-    if codec.artifact_subs:
-        meta.append(read_pinned(spark, f"{root}/{codec.code_sub}").count())
-        schema.append("n_built long")
-    arrow_frame(spark, [tuple(meta)], ", ".join(schema)).write.mode(
-        "overwrite"
-    ).parquet(f"{root}/meta")
-    finish_index_build(spark, path, new_v)
-
-
-def _append_to_index(
-    codec: _Codec, df: DataFrame, path: str, id_col: str, vec_col: str
-) -> None:
-    """Idempotent, crash-safe append under the index's STORED artifacts.
-    Each sub-table derives its own append set by anti-joining the batch's
-    ids against what THAT table already holds (ids only — column-pruned
-    scans), so a crash between the ``vectors`` and code-table writes is
-    backfilled by the re-run: vectors whose row landed but whose codes
-    did not are encoded from the MATERIALIZED vectors, and re-appends are
-    no-ops. Artifacts and writes share ONE root resolution, so a retrain
-    committing mid-append can never pair old artifacts with the new
-    version's tables. A payload-carrying index requires the same columns
-    on the appended frame, discovered from the stored vectors schema."""
-    spark = df.sparkSession
-    path = index_root(spark, path)
-    art = codec.load(spark, path)
-    stored_vecs = read_pinned(spark, f"{path}/vectors")
-    payload = [c for c in stored_vecs.columns if c not in ("id", "v")]
-    missing_payload = [c for c in payload if c not in df.columns]
-    if missing_payload:
-        raise ValueError(
-            f"append_to_{codec.name}_index: the index stores payload columns "
-            f"{payload} but the appended frame lacks {missing_payload}"
-        )
-    nv = df.select(
-        F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"), *payload
-    )
-    missing_vecs = nv.join(
-        stored_vecs.select("id"), "id", "left_anti"
-    ).localCheckpoint(eager=True)  # write target is also an anti-join input
-    if not missing_vecs.isEmpty():
-        missing_vecs.write.mode("append").parquet(f"{path}/vectors")
-    codes_path = f"{path}/{codec.code_sub}"
-    pending = (
-        read_pinned(spark, f"{path}/vectors")
-        .join(nv.select("id"), "id", "left_semi")
-        .join(read_pinned(spark, codes_path).select("id"), "id", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    if not pending.isEmpty():
-        codec.encode(pending, art, payload).write.mode("append").parquet(codes_path)
-
-
-def _grown(codec: _Codec, spark, root: str, growth_factor: float) -> bool:
-    """The growth trigger of a data-fitted codec: the code table holds at
-    least ``growth_factor`` × its build-time population. Cost: one
-    footer-metadata count + the meta row."""
-    meta = read_pinned(spark, f"{root}/meta").collect()[0]
-    current = read_pinned(spark, f"{root}/{codec.code_sub}").count()
-    return meta.n_built > 0 and current >= growth_factor * meta.n_built
-
-
-def _retrain_index(codec: _Codec, spark, path: str, **fit_params):
-    """Refit a data-fitted codec on the index's OWN vectors and re-encode,
-    never rescanning the source corpus; payload columns ride the vectors
-    table through, and the build parameters come from the stored meta.
-    The rebuild is a versioned build, so probes mid-retrain serve the
-    OLD (codes, artifacts) pair and a crash leaves it active.
-    Returns (vectors re-encoded, the pre-retrain meta row or None)."""
-    root = index_root(spark, path)
-    meta = (
-        read_pinned(spark, f"{root}/meta").collect()[0] if codec.meta_cols else None
-    )
-    stored = read_pinned(spark, f"{root}/vectors")
-    payload = [c for c in stored.columns if c not in ("id", "v")]
-    vecs = (
-        stored.select(
-            F.col("id").alias("vec_id"), F.col("v").alias("embedding"), *payload
-        )
-        .localCheckpoint(eager=True)  # post-commit cleanup deletes these files
-    )
-    params = {c: meta[c] for c in codec.meta_cols}
-    _build_index(
-        codec, vecs, path, "vec_id", "embedding", payload, **params, **fit_params
-    )
-    return vecs.count(), meta
-
-
-def _delete_from_index(
-    codec: _Codec, spark, path: str, ids: DataFrame, id_col: str
-) -> int:
-    """Anti-join the ids out of ``vectors`` and the code table into a new
-    version; artifacts and meta are carried verbatim, so survivor codes
-    and every probe ranking are unchanged."""
-    return _delete_ids_versioned(
-        spark, path, ids, id_col,
-        data_subs={"vectors": "id", codec.code_sub: "id"},
-        copy_subs=(*codec.artifact_subs, "meta"),
-        primary="vectors",
-    )
-
 
 def _topk_indexed(
-    codec: _Codec,
+    codec: indexes.Codec,
     spark,
     queries: DataFrame,
     path: str,
@@ -2222,7 +2056,7 @@ def _topk_indexed(
     BEFORE ranking, so the result is the exact top-k of the matching
     subset; it needs a ``payload_cols`` build."""
     root = index_root(spark, path)
-    art = codec.load(spark, root)
+    art = codec.artifact(spark, root)
     codes = read_pinned(spark, f"{root}/{codec.code_sub}")
     if where is not None:
         pred = F.expr(where) if isinstance(where, str) else where
@@ -2266,29 +2100,42 @@ def _write_sq8_stats(spark, root: str, stats) -> None:
     ).write.mode("overwrite").parquet(f"{root}/stats")
 
 
+def _stored_vectors(
+    rows: DataFrame, id_col: str, vec_col: str, payload: Sequence[str], _params
+) -> DataFrame:
+    """The embedding families' primary projection: ``vectors`` (id, v,
+    payload...), the exact re-rank and verification side."""
+    return rows.select(
+        F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"), *payload
+    )
+
+
 # the probes' clustering: ``bands`` on (band, code), the candidate
 # equi-join; PQ/SQ8 codes on id — their scan is a full sweep, but re-rank
 # and append anti-joins probe by id; ``vectors`` on id, the re-rank lookup
-_LSH = _Codec(
+_LSH = indexes.Codec(
     name="embedding_lsh",
+    primary_sub="vectors",
+    primary_cols=("id", "v"),
+    primary=_stored_vectors,
     code_sub="bands",
     artifact_subs=(),
-    meta_cols=("bands", "rows_per_band", "dim", "seed"),
+    meta="bands int, rows_per_band int, dim int, seed int",
     cluster={"vectors": ("id",), "bands": ("band", "code")},
     report="",
     # seeded hyperplanes: the codes re-derive from the meta alone
-    fit=lambda stored, **params: Row(**params),
-    write_artifacts=lambda spark, root, art: None,
-    load=lambda spark, root: read_pinned(spark, f"{root}/meta").collect()[0],
     encode=lambda v, m, payload: _band_codes(
         v, m.bands, m.rows_per_band, m.dim, m.seed
     ),
 )
-_PQ = _Codec(
+_PQ = indexes.Codec(
     name="pq",
+    primary_sub="vectors",
+    primary_cols=("id", "v"),
+    primary=_stored_vectors,
     code_sub="codes",
     artifact_subs=("codebooks",),
-    meta_cols=("m", "ks", "seed"),
+    meta="m int, ks int, seed int, n_built long",
     cluster={"codes": ("id",), "vectors": ("id",)},
     report="pq_",
     fit=lambda stored, m, ks, seed, max_train: train_pq_codebooks(
@@ -2301,11 +2148,14 @@ _PQ = _Codec(
         q, corpus, books, k=k, corpus_codes=codes, rerank=rerank
     ),
 )
-_SQ8 = _Codec(
+_SQ8 = indexes.Codec(
     name="sq8",
+    primary_sub="vectors",
+    primary_cols=("id", "v"),
+    primary=_stored_vectors,
     code_sub="codes",
     artifact_subs=("stats",),
-    meta_cols=(),
+    meta="n_built long",
     cluster={"codes": ("id",), "vectors": ("id",)},
     report="sq8_",
     fit=lambda stored: sq8_train_stats(stored, vec_col="v"),
@@ -2475,7 +2325,7 @@ def _cell_candidates(
 
 
 def _composed_candidates(
-    codec: _Codec,
+    codec: indexes.Codec,
     spark,
     queries: DataFrame,
     ivf_index_path: str,
@@ -2520,7 +2370,7 @@ def _composed_candidates(
                     f"ivf{codec.name} cell-codes layout is STALE ({reason}) — "
                     f"rebuild with build_ivfpq_cell_codes(ivf, {codec.name}, path)"
                 )
-    artifact = codec.load(spark, root)
+    artifact = codec.artifact(spark, root)
     q = _id_vec(queries, id_col, vec_col)
     probed, cells, q_rows = _probe_cells(spark, q, ivf_root, nprobe)
     cand = _cell_candidates(spark, probed, cells, ivf_root, root, cc_root, where)
@@ -2859,8 +2709,8 @@ def hard_negative_topk_ivfsq8(
 # artifact that stores the vector or anything derived from it: the raw
 # vectors tables, compressed codes, LSH band rows, IVF cell postings, and
 # any derived cell-codes layout. Two shapes, matching the store designs:
-#   - anti-join rewrite into a fresh VERSION for the unpartitioned index
-#     families (SQ8/PQ/LSH) — the retrain swap protocol reused verbatim,
+#   - anti-join rewrite into a fresh VERSION for the codec families
+#     (SQ8/PQ/LSH, :func:`indexes.delete`) — the retrain swap protocol,
 #     so probes mid-delete serve the old generation and a crash leaves it
 #     active; quantizer stats/codebooks/meta are COPIED, not refit
 #     (survivor codes are unchanged — deletion must not re-rank anyone);
@@ -2872,52 +2722,6 @@ def hard_negative_topk_ivfsq8(
 # --------------------------------------------------------------------------
 
 
-def _delete_ids_versioned(
-    spark,
-    path: str,
-    ids: DataFrame,
-    id_col: str,
-    data_subs: dict[str, str],
-    copy_subs: tuple[str, ...],
-    primary: str,
-) -> int:
-    """Shared anti-join-into-new-version delete for unpartitioned index
-    families. ``data_subs`` maps each id-bearing sub-table to its id
-    column; ``copy_subs`` are carried verbatim; ``primary`` (a data_subs
-    key) is where the deleted-row count is measured. No-op (no version
-    churn) when none of the ids are present."""
-    src = index_root(spark, path)
-    root, new_v = index_next_root(spark, path)
-    # no broadcast hint: a routine GDPR batch is tiny (AQE broadcasts it
-    # on its own), but a cohort-scale erasure can be tens of millions of
-    # ids — forcing the hint would pin that on the driver
-    doomed = ids.select(F.col(id_col).alias("__del_id")).distinct()
-    n_deleted = (
-        read_pinned(spark, f"{src}/{primary}")
-        .join(
-            doomed,
-            F.col(data_subs[primary]) == F.col("__del_id"),
-            "left_semi",
-        )
-        .count()
-    )
-    if n_deleted == 0:
-        return 0
-    for sub, sub_id in data_subs.items():
-        (
-            read_pinned(spark, f"{src}/{sub}")
-            .join(doomed, F.col(sub_id) == F.col("__del_id"), "left_anti")
-            .write.mode("overwrite")
-            .parquet(f"{root}/{sub}")
-        )
-    for sub in copy_subs:
-        read_pinned(spark, f"{src}/{sub}").write.mode("overwrite").parquet(
-            f"{root}/{sub}"
-        )
-    finish_index_build(spark, path, new_v)
-    return n_deleted
-
-
 def delete_from_sq8_index(
     spark, path: str, ids: DataFrame, id_col: str = "vec_id"
 ) -> int:
@@ -2925,7 +2729,7 @@ def delete_from_sq8_index(
     stats/meta carried — the stored quantizer is FIXED on delete exactly
     as it is on append, so survivor codes and every probe ranking are
     unchanged). Versioned atomic swap; idempotent; returns rows removed."""
-    return _delete_from_index(_SQ8, spark, path, ids, id_col)
+    return indexes.delete(_SQ8, spark, path, ids, id_col)
 
 
 def delete_from_pq_index(
@@ -2934,7 +2738,7 @@ def delete_from_pq_index(
     """Erase vectors from a persisted PQ index (vectors + codes; stored
     codebooks/meta carried — survivor codes unchanged). Versioned swap;
     idempotent; returns rows removed."""
-    return _delete_from_index(_PQ, spark, path, ids, id_col)
+    return indexes.delete(_PQ, spark, path, ids, id_col)
 
 
 def delete_from_embedding_lsh_index(
@@ -2943,7 +2747,7 @@ def delete_from_embedding_lsh_index(
     """Erase vectors from a persisted hyperplane-LSH index (vectors + all
     band rows; meta carried — the seeded hyperplanes are id-independent).
     Versioned swap; idempotent; returns vector rows removed."""
-    return _delete_from_index(_LSH, spark, path, ids, id_col)
+    return indexes.delete(_LSH, spark, path, ids, id_col)
 
 
 def delete_from_ivf_index(

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from aws_data_pipeline_spark.operators import (
     arrow_frame,
     dedup,
+    indexes,
     multimodal,
     sampling,
     similarity,
@@ -451,13 +452,13 @@ def _src_state(
 @functools.cache
 def _code_digest() -> str:
     """sha256 of the source of the modules that build the registry's
-    indexes (``operators/similarity.py``, ``operators/dedup.py``), read
-    once per process — the code half of a build-once index's marker."""
+    indexes (``operators/indexes.py``, ``operators/similarity.py``,
+    ``operators/dedup.py``), read once per process — the code half of a build-once index's marker."""
     import hashlib
     import pathlib
 
     h = hashlib.sha256()
-    for mod in (similarity, dedup):
+    for mod in (indexes, similarity, dedup):
         h.update(pathlib.Path(mod.__file__).read_bytes())
     return h.hexdigest()
 

@@ -77,7 +77,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from aws_data_pipeline_spark.operators import dedup, text
+from aws_data_pipeline_spark.operators import dedup, indexes, text
 from aws_data_pipeline_spark.sources.parquet import (
     compact_index,
     delete_from_zone,
@@ -85,6 +85,7 @@ from aws_data_pipeline_spark.sources.parquet import (
     index_has,
     index_root,
     pruned_zone_ids,
+    read_pinned,
     record_zone_bucket_count,
     zone_bucket_count,
     zone_exists,
@@ -187,7 +188,7 @@ def _ingest(
             if index_has(sess, index_path, "meta"):
                 append_index(survivors, index_path)
             else:
-                build_index(sess.read.parquet(corpus_path), index_path)
+                build_index(read_pinned(sess, corpus_path), index_path)
         if not secondaries or not zone_exists(sess, corpus_path):
             return
         accepted = full = None  # each built at most once, on first use
@@ -204,7 +205,7 @@ def _ingest(
                 ix.append(accepted, ix.path)
                 continue
             if full is None:
-                full = sess.read.parquet(corpus_path)
+                full = read_pinned(sess, corpus_path)
                 has_rows = not full.isEmpty()
             if has_rows:
                 ix.bootstrap(full, ix.path)
@@ -260,51 +261,6 @@ def _forget(
     return out
 
 
-def append_to_lsh_text_index(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Idempotently append documents to a persisted LSH index
-    (``dedup.build_lsh_text_index``) under the index's OWN recorded
-    parameters — a probe never sees mixed-parameter signatures.
-
-    Each sub-table derives its own append set by anti-joining the batch's
-    ids against what that sub-table already holds (ids only — column-pruned
-    scans), so calling this again after a crash between the ``sets`` and
-    ``bands`` writes backfills exactly the missing rows: already-indexed
-    docs are skipped, docs whose sets landed but whose bands did not get
-    their bands computed from the materialized sets.
-    """
-    spark = df.sparkSession
-    path = index_root(spark, path)
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    ids = df.select(F.col(id_col).alias("doc"))
-    missing_sets = df.join(
-        spark.read.parquet(f"{path}/sets").select(F.col("doc").alias(id_col)),
-        id_col,
-        "left_anti",
-    )
-    if not missing_sets.isEmpty():
-        dedup.shingle_sets(
-            missing_sets, id_col, text_col, meta.k, persist=False
-        ).write.mode("append").parquet(f"{path}/sets")
-    # bands for any batch doc not yet banded, from the MATERIALIZED sets
-    # (tokenization runs once; covers a prior crash between the two writes)
-    pending = (
-        spark.read.parquet(f"{path}/sets")
-        .join(ids, "doc", "left_semi")
-        .join(spark.read.parquet(f"{path}/bands").select("doc"), "doc", "left_anti")
-    )
-    if not pending.isEmpty():
-        dedup._banded_keys(
-            dedup._signatures_from_sets(pending, meta.num_perm, meta.hash_fn),
-            meta.bands,
-            meta.num_perm // meta.bands,
-        ).write.mode("append").parquet(f"{path}/bands")
-
-
 def compact_corpus_indexes(
     spark: SparkSession,
     index_path: str,
@@ -314,9 +270,11 @@ def compact_corpus_indexes(
     every availableNow batch appends one small parquet file per index
     sub-table, and after thousands of batches probe latency is dominated
     by file open/seek, not data. Rewrites each sub-table into
-    ~target-size files via ``compact_zone``, clustering the probe-side
-    tables on their join keys (``bands`` on (band, key), ``hashes`` and
-    ``sets`` on their hash/doc columns) so parquet row-group min/max
+    ~target-size files via ``compact_zone`` (the MinHash-LSH index through
+    the codec compaction :func:`operators.indexes.compact` the embedding
+    indexes share), clustering the probe-side tables on their join keys
+    (``bands`` on (band, key), ``hashes`` and ``sets`` on their hash/doc
+    columns) so parquet row-group min/max
     ranges turn selective probes into row-group skips. Returns files
     written per sub-table.
 
@@ -331,15 +289,15 @@ def compact_corpus_indexes(
     ``sources.parquet.index_compaction_due``, or whenever the small-file
     count passes a few hundred."""
 
-    def swap(path: str, cluster: dict) -> dict[str, int]:
-        rewrite = {sub: {"sort_by": key} for sub, key in cluster.items()}
-        return compact_index(spark, path, rewrite, ("meta",))
-
-    written = swap(index_path, dedup._TEXT_LSH_CLUSTER)
+    written = indexes.compact(dedup._TEXT_LSH, spark, index_path)
     if kgram_index_path is not None and index_has(
         spark, kgram_index_path, "hashes"
     ):
-        written.update(swap(kgram_index_path, dedup._KGRAM_CLUSTER))
+        written.update(
+            compact_index(
+                spark, kgram_index_path, {"hashes": {"sort_by": ("h",)}}, ("meta",)
+            )
+        )
     return written
 
 
@@ -363,7 +321,7 @@ def incremental_corpus_ingest(
     pairs at Jaccard 0.8; the primary index is the MinHash-LSH index at
     ``index_path`` (``neardup_against_index`` probes it at 0.8), built
     with 5-shingles and 16 permutations in 4 bands and appended under
-    its own stored parameters (:func:`append_to_lsh_text_index`).
+    its own stored parameters (``dedup.append_to_lsh_text_index``).
 
     ``kgram_index_path`` (optional) additionally maintains the corpus's
     duplicate-SPAN fingerprint index (``dedup.build_kgram_index``, 8-grams):
@@ -421,7 +379,7 @@ def incremental_corpus_ingest(
         corpus_path=corpus_path, corpus_buckets=corpus_buckets, id_col="doc_id",
         prep=prep, in_batch_pairs=in_batch_pairs,
         probe=dedup.neardup_against_index, threshold=0.8,
-        index_path=index_path, append_index=append_to_lsh_text_index,
+        index_path=index_path, append_index=dedup.append_to_lsh_text_index,
         build_index=lambda full, path: dedup.build_lsh_text_index(
             full.select("doc_id", "text"), path
         ),
@@ -478,12 +436,12 @@ def forget_documents(
             and zone_exists(spark, corpus_path)
         ):
             k = (
-                spark.read.parquet(f"{index_root(spark, kgram_index_path)}/meta")
+                read_pinned(spark, f"{index_root(spark, kgram_index_path)}/meta")
                 .collect()[0]
                 .k
             )
             survivors = (
-                spark.read.parquet(corpus_path)
+                read_pinned(spark, corpus_path)
                 .join(doomed, "doc_id", "left_anti")
                 .localCheckpoint(eager=True)  # rebuild target feeds on the zone
             )

@@ -24,6 +24,7 @@ from aws_data_pipeline_spark.sources.parquet import (
     index_has,
     index_is_version_root,
     index_root,
+    read_pinned,
 )
 from aws_data_pipeline_spark.streaming.corpus import _forget, _Index, _ingest
 
@@ -231,7 +232,7 @@ def forget_vectors(
             # would rebuild the layout against the wrong index and every
             # later probe would reject it
             cc_meta = f"{index_root(spark, ivfpq_cell_codes_path)}/meta"
-            stored = spark.read.parquet(cc_meta).collect()[0].pq_root
+            stored = read_pinned(spark, cc_meta).collect()[0].pq_root
             codes_src = next(
                 (
                     cand

@@ -21,6 +21,12 @@ from pyspark.sql import functions as F
 from aws_data_pipeline_spark.operators import arrow_frame, quality
 from aws_data_pipeline_spark.sources.parquet import zone_exists
 
+# one metrics row per scored batch
+_METRICS_SCHEMA = (
+    "batch_id long, n_rows long, psi double, psi_alert boolean, "
+    "chisq double, chisq_alert boolean, baseline_id string"
+)
+
 
 def incremental_drift_monitor(
     spark: SparkSession,
@@ -50,14 +56,15 @@ def incremental_drift_monitor(
     (build_drift_baseline's md5 over params + edges + counts): a
     baseline rebuilt mid-history with different edges silently mixes
     scoring regimes otherwise, so every row records WHICH baseline
-    scored it and the zone's history is self-describing. Schema note
-    for zones that span the column's introduction: parquet schema
-    sampling reads ONE footer, so a consumer of a mixed-generation zone
-    must read with ``mergeSchema`` (``read_zone(..,
-    merge_schema=True)``) to surface ``baseline_id`` across all files —
-    pre-stamp rows then read as null (visibly pre-fingerprint, never
-    misattributed); a plain read of such a zone may sample an old
-    footer and not see the column at all. Fresh zones need nothing.
+    scored it and the zone's history is self-describing. A baseline
+    written before the fingerprint existed scores normally and stamps
+    null (visibly pre-fingerprint, never misattributed). Schema note for
+    zones that span the column's introduction: parquet schema sampling
+    reads ONE footer, so a consumer of a mixed-generation zone must read
+    with the metrics schema (or ``mergeSchema``) to surface
+    ``baseline_id`` across all files — pre-stamp rows then read as null;
+    a plain read of such a zone may sample an old footer and not see the
+    column at all.
     ``psi_alert`` fires above the canonical 0.2 "investigate" level;
     ``chisq_threshold`` is the caller's critical value for df = C-1 (no
     universal default — it depends on the category count), None = never
@@ -69,26 +76,10 @@ def incremental_drift_monitor(
     bins-1 edges, ≤bins+1 bin counts, C categories) — a baseline rebuild
     mid-run is picked up by the NEXT run, the snapshot discipline
     build_drift_baseline documents."""
-    meta = spark.read.parquet(f"{baseline_path}/meta").collect()[0]
-    # baselines written before the fingerprint existed have no column:
-    # score them normally, stamp null (visible as "pre-fingerprint")
-    baseline_id = getattr(meta, "baseline_id", None)
-    edges: list[float] | None = None
-    base_bins: list[tuple] | None = None
-    base_cats: list[tuple] | None = None
-    if meta.value_col is not None:
-        rows = spark.read.parquet(f"{baseline_path}/edges").collect()
-        rows.sort(key=lambda r: r.pos)
-        edges = [float(r.e) for r in rows]
-        base_bins = [
-            (r.bin, r.n_base)
-            for r in spark.read.parquet(f"{baseline_path}/value_bins").collect()
-        ]
-    if meta.cat_col is not None:
-        base_cats = [
-            (r.category, r.n_base)
-            for r in spark.read.parquet(f"{baseline_path}/categories").collect()
-        ]
+    meta, edges, base_bins, base_cats = quality.read_drift_baseline(
+        spark, baseline_path
+    )
+    baseline_id = meta.baseline_id
 
     src_schema = spark.read.parquet(src_path).schema
     stream = spark.readStream.schema(src_schema).parquet(src_path)
@@ -97,7 +88,7 @@ def incremental_drift_monitor(
         sess = batch.sparkSession
         if zone_exists(sess, metrics_path):
             seen = (
-                sess.read.parquet(metrics_path)
+                sess.read.schema(_METRICS_SCHEMA).parquet(metrics_path)
                 .filter(F.col("batch_id") == batch_id)
                 .limit(1)
             )
@@ -112,12 +103,11 @@ def incremental_drift_monitor(
             arrow_frame(
                 sess,
                 [(batch_id, 0, None, None, None, None, baseline_id)],
-                "batch_id long, n_rows long, psi double, psi_alert boolean, "
-                "chisq double, chisq_alert boolean, baseline_id string",
+                _METRICS_SCHEMA,
             ).write.mode("append").parquet(metrics_path)
             return
         if edges is not None:
-            bc = arrow_frame(sess, base_bins, "bin int, n_base long")
+            bc = arrow_frame(sess, base_bins, quality.BASELINE_SCHEMAS["value_bins"])
             cc = quality.bin_against_edges(
                 batch, meta.value_col, edges, "n_curr"
             )
@@ -129,7 +119,9 @@ def incremental_drift_monitor(
             psi = float(psi) if psi is not None else None
             psi_alert = psi is not None and psi > 0.2
         if base_cats is not None:
-            bcat = arrow_frame(sess, base_cats, "category string, n_base long")
+            bcat = arrow_frame(
+                sess, base_cats, quality.BASELINE_SCHEMAS["categories"]
+            )
             ccat = (
                 batch.where(F.col(meta.cat_col).isNotNull())
                 .groupBy(F.col(meta.cat_col).alias("category"))
@@ -150,8 +142,7 @@ def incremental_drift_monitor(
             sess,
             [(batch_id, n_rows, psi, psi_alert, chisq, chisq_alert,
               baseline_id)],
-            "batch_id long, n_rows long, psi double, psi_alert boolean, "
-            "chisq double, chisq_alert boolean, baseline_id string",
+            _METRICS_SCHEMA,
         ).write.mode("append").parquet(metrics_path)
 
     (

@@ -133,7 +133,7 @@ tl_probe = lambda: dedup.neardup_against_index(spark, d_new, tl, threshold=0.8)
 kg_probe = lambda: dedup.duplicate_spans_against_index(spark, d_new, kg)
 step("tlsh.build", lambda: dedup.build_lsh_text_index(d_base, tl, hash_fn="md5"))
 step("tlsh.probe0", tl_probe, True)
-step("tlsh.append", lambda: C.append_to_lsh_text_index(d_new, tl))
+step("tlsh.append", lambda: dedup.append_to_lsh_text_index(d_new, tl))
 step("tlsh.probe1", tl_probe, True)
 step("tlsh.delete", lambda: dedup.delete_from_lsh_text_index(spark, tl, d_doomed))
 step("tlsh.probe2", tl_probe, True)

@@ -16,7 +16,10 @@ is dominated by the number of sequential Spark jobs (each a full
 schedule/barrier round-trip), not by data volume — so the first question
 for every slow query is "how many jobs, and which are fusable/overlappable",
 which the bench JSON cannot answer. This script answers it from the
-driver's status tracker.
+driver's status tracker, and names the jobs: the ``--json`` record lists
+each query's jobs of the last pass (job id, call-site name, stage and task
+counts) from the live UI's REST ``/jobs`` endpoint, which attributes each
+job's scheduling round-trip to the driver action that started it.
 
 Two columns do not depend on host load, for the driver-side cost of
 running the same queries again and again in one session:
@@ -52,6 +55,7 @@ import argparse
 import json
 import sys
 import time
+import urllib.request
 
 sys.path.insert(0, ".")
 
@@ -162,6 +166,30 @@ def compiled_classes(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
+def rest_jobs(spark, ids: list[int]) -> dict[int, dict]:
+    """The UI REST ``/jobs`` record of each job in ``ids``: id, call-site
+    name, stages and tasks. The UI status store is fed asynchronously by
+    the listener bus, so it polls briefly until every id is listed."""
+    sc = spark.sparkContext
+    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/jobs"
+    for _ in range(50):
+        with urllib.request.urlopen(url) as r:
+            jobs = {j["jobId"]: j for j in json.loads(r.read())}
+        if set(ids) <= set(jobs):
+            break
+        time.sleep(0.1)
+    return {
+        j: {
+            "id": j,
+            "name": jobs[j]["name"],
+            "stages": len(jobs[j]["stageIds"]),
+            "tasks": jobs[j]["numTasks"],
+        }
+        for j in ids
+        if j in jobs
+    }
+
+
 def profile_one(spark, fn, sf_dir: str, calls: Py4jCalls) -> dict:
     """One PROFILED execution: noop-sink action (the bench's terminal
     action) bracketed by status-tracker job/stage ids and the codegen
@@ -198,6 +226,7 @@ def profile_one(spark, fn, sf_dir: str, calls: Py4jCalls) -> dict:
         "broadcast_MB": round(plan["broadcast_bytes"] / 1e6, 3),
         "py4j": py4j,
         "compiled": compiled,
+        "job_ids": new_jobs,
     }
 
 
@@ -238,6 +267,14 @@ def main() -> None:
             out[name] = profile_one(spark, registry[name].spark_fn, args.sf_dir, calls)
             spark.sparkContext.setJobDescription(None)
         passes.append(out)
+    listed = rest_jobs(
+        spark, [j for prof in passes[-1].values() for j in prof["job_ids"]]
+    )
+    for out in passes:
+        for prof in out.values():
+            ids = prof.pop("job_ids")
+            if out is passes[-1]:
+                prof["job_list"] = [listed[j] for j in ids if j in listed]
 
     print(
         f"{'query':38s} {'sec':>6s} {'jobs':>5s} {'stages':>6s} "

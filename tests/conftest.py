@@ -146,3 +146,21 @@ def _sub(spark, path, sub):
     from aws_data_pipeline_spark.sources.parquet import index_root
 
     return f"{index_root(spark, path)}/{sub}"
+
+
+def job_names(spark, group, fn) -> list[str]:
+    """Runs ``fn`` under job group ``group``; the name of each Spark job it
+    started (its result stage's call site; earlier stages can be skipped
+    and then carry no info), in job-id order. Its length is the job count
+    of ``fn``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    return [
+        tracker.getStageInfo(max(tracker.getJobInfo(j).stageIds)).name
+        for j in sorted(tracker.getJobIdsForGroup(group))
+    ]

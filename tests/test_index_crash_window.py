@@ -1,10 +1,11 @@
 """The crash windows of the persisted indexes.
 
-Append: ``append_to_{embedding_lsh,pq,sq8}_index`` write ``vectors`` first
-and the per-id code table second. A crash between the two writes leaves
-vectors rows without codes; the re-run must encode exactly those rows from
-the materialized vectors, duplicate nothing, and a further re-run must
-write nothing at all. ``append_to_ivf_index`` writes one cell-partitioned
+Append: ``append_to_{embedding_lsh,pq,sq8,lsh_text}_index`` write the
+per-id primary table (``vectors``, or the text index's ``sets``) first and
+the per-id code table second. A crash between the two writes leaves
+primary rows without codes; the re-run must encode exactly those rows from
+the materialized primary table, duplicate nothing, and a further re-run
+must write nothing at all. ``append_to_ivf_index`` writes one cell-partitioned
 ``corpus`` table, vector store and code table in one; its crash leaves
 part of the batch landed, and the re-run must write exactly the rest.
 
@@ -49,22 +50,35 @@ def _land_ivf_half(batch, idx, payload):
     ).partitionBy("cell").parquet(_sub(spark, idx, "corpus"))
 
 
+def _land_sets(batch, idx, payload):
+    """The text crash: only the batch's shingle-set rows landed."""
+    dedup.shingle_sets(batch, "doc_id", "text", persist=False).write.mode(
+        "append"
+    ).parquet(_sub(batch.sparkSession, idx, "sets"))
+
+
 def _ivf_append(df, path):
     S.append_to_ivf_index(df.sparkSession, df, path)
 
 
-# (build, append, code table, payload columns, crash, (vector table, id))
+# (source table, id column, build, append, code table, payload columns,
+#  crash, (primary table, its id))
 FAMILIES = {
-    "lsh": (S.build_embedding_lsh_index, S.append_to_embedding_lsh_index, "bands",
-            (), _land_vectors, ("vectors", "id")),
-    "pq": (S.build_pq_index, S.append_to_pq_index, "codes", (), _land_vectors,
-           ("vectors", "id")),
-    "sq8": (S.build_sq8_index, S.append_to_sq8_index, "codes", (), _land_vectors,
+    "lsh": ("embeddings", "vec_id", S.build_embedding_lsh_index,
+            S.append_to_embedding_lsh_index, "bands", (), _land_vectors,
             ("vectors", "id")),
-    "sq8_payload": (S.build_sq8_index, S.append_to_sq8_index, "codes", ("label",),
-                    _land_vectors, ("vectors", "id")),
-    "ivf": (S.build_ivf_index, _ivf_append, "corpus", (), _land_ivf_half,
-            ("corpus", "neighbor_id")),
+    "pq": ("embeddings", "vec_id", S.build_pq_index, S.append_to_pq_index,
+           "codes", (), _land_vectors, ("vectors", "id")),
+    "sq8": ("embeddings", "vec_id", S.build_sq8_index, S.append_to_sq8_index,
+            "codes", (), _land_vectors, ("vectors", "id")),
+    "sq8_payload": ("embeddings", "vec_id", S.build_sq8_index,
+                    S.append_to_sq8_index, "codes", ("label",), _land_vectors,
+                    ("vectors", "id")),
+    "ivf": ("embeddings", "vec_id", S.build_ivf_index, _ivf_append, "corpus",
+            (), _land_ivf_half, ("corpus", "neighbor_id")),
+    "text_lsh": ("documents", "doc_id", dedup.build_lsh_text_index,
+                 dedup.append_to_lsh_text_index, "bands", (), _land_sets,
+                 ("sets", "doc")),
 }
 
 
@@ -89,10 +103,12 @@ def _files(path):
 def test_append_backfills_crash_between_vectors_and_codes(
     spark, sf_dir, tmp_path, family
 ):
-    build, append, code_sub, payload, crash, (vec_sub, vec_id) = FAMILIES[family]
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    base = e.filter(F.col("vec_id") >= 100)
-    batch = e.filter(F.col("vec_id") < 100)
+    table, id_col, build, append, code_sub, payload, crash, (vec_sub, vec_id) = (
+        FAMILIES[family]
+    )
+    e = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    base = e.filter(F.col(id_col) >= 100)
+    batch = e.filter(F.col(id_col) < 100)
     idx = str(tmp_path / family)
     if payload:
         build(base, idx, payload_cols=list(payload))

@@ -19,6 +19,7 @@ from aws_data_pipeline_spark.pipeline.medallion import (
     run_pipeline,
     silver_to_gold,
 )
+from tests.conftest import job_names
 
 CLOCK = "2026-01-01 00:00:00"
 
@@ -478,23 +479,6 @@ def test_streaming_sink_replay_appends_nothing(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def _job_names(spark, group, fn):
-    """Runs ``fn`` under job group ``group``; the name of each Spark job it
-    started (its result stage's call site; earlier stages can be skipped
-    and then carry no info), in job-id order."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    return [
-        tracker.getStageInfo(max(tracker.getJobInfo(j).stageIds)).name
-        for j in sorted(tracker.getJobIdsForGroup(group))
-    ]
-
-
 def test_silver_schema_matches_the_written_zone(spark, cfg):
     """The derived read schema is exactly what an inferred read of a
     written silver zone reports (columns, order, types, nullability)."""
@@ -555,7 +539,7 @@ def test_append_starts_no_footer_inference_job(spark, cfg, caller):
         "bronze_to_silver": lambda: bronze_to_silver(spark, cfg, clock=clock),
         "ingest_sink": lambda: ingest_sink(batch, 0, cfg.silver_path, clock),
     }[caller]
-    jobs = _job_names(spark, f"{caller}-receipt", append)
+    jobs = job_names(spark, f"{caller}-receipt", append)
     assert 0 < len(jobs) <= 6, jobs
     assert not any(n.startswith("parquet at") for n in jobs), jobs
     assert spark.read.parquet(cfg.silver_path).count() == 203
@@ -702,7 +686,7 @@ def test_gold_reads_one_clustered_cache_without_exchanges(spark, cfg, monkeypatc
         assert "Exchange" not in above_cache, (table, above_cache)
     monkeypatch.undo()
 
-    jobs = _job_names(spark, "gold-receipt", lambda: silver_to_gold(spark, cfg))
+    jobs = job_names(spark, "gold-receipt", lambda: silver_to_gold(spark, cfg))
     assert 0 < len(jobs) <= 6, jobs
     assert not any(n.startswith("parquet at") for n in jobs), jobs
 

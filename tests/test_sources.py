@@ -16,7 +16,7 @@ from aws_data_pipeline_spark.sources.delimited import (
     write_csv,
     write_orc,
 )
-from tests.conftest import _sub
+from tests.conftest import _sub, job_names
 
 
 def test_csv_roundtrip(spark, sf_dir, tmp_path):
@@ -285,7 +285,8 @@ def test_zone_fingerprint_counts_committed_bytes(spark, tmp_path):
 
 def test_zorder_key_matches_python_model(spark):
     """The Morton interleave as a JVM expression equals the reference
-    bit-interleave for random quantized pairs."""
+    bit-interleave for random quantized inputs: two columns keep all 16
+    bits each, four columns keep the top 15 bits of each (63 // 4)."""
     import random
 
     from pyspark.sql import functions as F
@@ -293,21 +294,27 @@ def test_zorder_key_matches_python_model(spark):
     from aws_data_pipeline_spark.functions.zorder import zorder_key
 
     rng = random.Random(7)
-    rows = [(rng.randrange(1 << 16), rng.randrange(1 << 16)) for _ in range(200)]
 
-    def model(x, y, bits=16):
+    def model(qs, bits):
         k = 0
         for i in range(bits):
-            k |= ((x >> i) & 1) << (2 * i)
-            k |= ((y >> i) & 1) << (2 * i + 1)
+            for d, q in enumerate(qs):
+                k |= ((q >> (16 - bits + i)) & 1) << (i * len(qs) + d)
         return k
 
-    df = spark.createDataFrame(rows, "x long, y long")
-    got = df.select(
-        "x", "y", zorder_key([F.col("x"), F.col("y")]).alias("k")
-    ).collect()
-    for r in got:
-        assert r.k == model(r.x, r.y), (r.x, r.y)
+    for names, bits in (("xy", 16), ("abcd", 15)):
+        rows = [
+            tuple(rng.randrange(1 << 16) for _ in names) for _ in range(200)
+        ]
+        df = spark.createDataFrame(rows, ", ".join(f"{c} long" for c in names))
+        got = df.select(
+            *names, zorder_key([F.col(c) for c in names]).alias("k")
+        ).collect()
+        for r in got:
+            qs = [r[c] for c in names]
+            assert r.k == model(qs, bits), qs
+        if len(names) == 4:
+            assert max(r.k for r in got) < 1 << 60  # 4 x 15 bits
 
 
 def test_zorder_cluster_narrows_rowgroups_on_both_dims(spark, tmp_path):
@@ -1048,15 +1055,8 @@ def test_snapshot_reads_one_job_per_manifest(spark, tmp_path):
         S.snapshot_zone(spark, zone)
     P.publish_tables(spark, root, {"t": zone})  # the zone's s3
 
-    sc = spark.sparkContext
-
     def jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return len(job_names(spark, group, fn))
 
     got = {
         "read": jobs("snap-read", lambda: S.read_zone_snapshot(spark, zone, 1)),

@@ -516,10 +516,7 @@ def test_corpus_crash_recovery_backfills_index(spark, tmp_path):
     import shutil
 
     from aws_data_pipeline_spark.operators import dedup
-    from aws_data_pipeline_spark.streaming.corpus import (
-        append_to_lsh_text_index,
-        incremental_corpus_ingest,
-    )
+    from aws_data_pipeline_spark.streaming.corpus import incremental_corpus_ingest
 
     inbox = tmp_path / "inbox"
     inbox.mkdir()
@@ -569,7 +566,7 @@ def test_corpus_crash_recovery_backfills_index(spark, tmp_path):
     dedup.shingle_sets(nine, "doc_id", "text", 5, persist=False).write.mode(
         "append"
     ).parquet(_sub(spark, index, "sets"))
-    append_to_lsh_text_index(nine, index)
+    dedup.append_to_lsh_text_index(nine, index)
     sets = spark.read.parquet(_sub(spark, index, "sets"))
     sets_rows = sets.filter(F.col("doc") == 9).count()
     bands = spark.read.parquet(_sub(spark, index, "bands"))
@@ -959,6 +956,35 @@ def test_drift_metrics_rows_carry_baseline_identity(spark, tmp_path):
         spark.read.parquet(metrics).select("baseline_id").distinct().count()
         == 2
     )
+
+
+def test_drift_baseline_without_fingerprint_scores_with_null_id(spark, tmp_path):
+    """A baseline whose ``meta`` predates ``baseline_id`` reads through the
+    declared meta schema with a null id: the monitor scores its batches
+    normally and stamps null (visibly pre-fingerprint)."""
+    from aws_data_pipeline_spark.operators import arrow_frame
+    from aws_data_pipeline_spark.operators import quality as Q
+    from aws_data_pipeline_spark.streaming.quality import (
+        incremental_drift_monitor,
+    )
+
+    b = str(tmp_path / "baseline")
+    src = str(tmp_path / "incoming")
+    metrics = str(tmp_path / "metrics")
+    base = spark.createDataFrame([("a",)] * 60 + [("b",)] * 40, "cat string")
+    Q.build_drift_baseline(base, b, cat_col="cat")
+    arrow_frame(
+        spark, [(10, None, "cat")], "bins int, value_col string, cat_col string"
+    ).write.mode("overwrite").parquet(f"{b}/meta")
+    assert Q.read_drift_baseline(spark, b)[0].baseline_id is None
+
+    spark.createDataFrame([("a",)] * 10 + [("b",)] * 90, "cat string").write.mode(
+        "append"
+    ).parquet(src)
+    incremental_drift_monitor(spark, src, b, metrics, str(tmp_path / "ck"))
+    [row] = spark.read.parquet(metrics).collect()
+    assert row.n_rows == 100 and row.chisq > 0
+    assert row.baseline_id is None
 
 
 def test_drift_baseline_rejects_id_like_category_columns(spark, tmp_path):
