@@ -95,10 +95,17 @@ def widen_narrow_input(df: DataFrame) -> DataFrame:
     file). The repartition fires only when the input has fewer partitions
     than cores, so at real scale (file count >> cores) the plan is
     untouched; when it does fire, the shuffled bytes are the small input
-    itself. Purity holds: partition-count inspection is plan metadata,
-    not an action, and every operator using this emits per-row /
+    itself. Purity holds: every operator using this emits per-row /
     per-bucket deterministic values, so output VALUES are independent of
     the partitioning (pinned by scripts/partition_sweep.py).
+
+    Starts no Spark job. The partition count is read only from a frame
+    whose physical plan holds no shuffle (the single-file scan this
+    exists for). Under AQE a plan with a shuffle is an
+    ``AdaptiveSparkPlanExec``, and reading its partition count would
+    execute every upstream exchange eagerly at plan-build time, only for
+    the real execution to redo it; such a frame is returned unchanged,
+    and AQE sizes its partitions.
     """
     if df.isStreaming:
         # partition inspection (.rdd) is undefined on a streaming frame;
@@ -106,8 +113,10 @@ def widen_narrow_input(df: DataFrame) -> DataFrame:
         # Operators applied inside foreachBatch see plain batch frames
         # and widen normally.
         return df
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -17,13 +17,18 @@ Four strategies, each the scalable formulation:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from aws_data_pipeline_spark.functions.portable import md5_prefix_long
+from aws_data_pipeline_spark.functions.portable import hash_long
 from aws_data_pipeline_spark.operators import arrow_frame, indexes, widen_narrow_input
-from aws_data_pipeline_spark.operators.text import hashed_shingles, shingles, tokens
+from aws_data_pipeline_spark.operators.text import (
+    hashed_shingles,
+    shingles,
+    tokens,
+    window_hashes,
+)
 from aws_data_pipeline_spark.sources.parquet import index_root, read_pinned
 
 # Fixed universal-hash parameters: h_i(s) = (a_i * x + b_i) mod M, where
@@ -279,17 +284,9 @@ def _signatures_from_sets(
     signatures — and therefore LSH candidates — reproducible outside Spark.
     """
     assert num_perm <= len(_HASH_PARAMS)
-    if hash_fn == "xxhash64":
-        base = F.transform(
-            F.col("sh"), lambda s: F.pmod(F.xxhash64(s), F.lit(2147483647))
-        )
-    elif hash_fn == "md5":
-        base = F.transform(
-            F.col("sh"),
-            lambda s: F.pmod(md5_prefix_long(s), F.lit(2147483647)),
-        )
-    else:
-        raise ValueError(f"unknown hash_fn: {hash_fn!r}")
+    base = F.transform(
+        F.col("sh"), lambda s: F.pmod(hash_long(hash_fn, s), F.lit(2147483647))
+    )
     # a doc shorter than k tokens has NO shingles: array_min over the
     # empty array is NULL, every signature position would be NULL, and
     # [NULL,...] == [NULL,...] under Spark's array equality — ALL short
@@ -1149,19 +1146,6 @@ def line_dedup(
     )
 
 
-def _positional_window_hashes(toks: Column, k: int) -> Column:
-    """All length-k token-window hashes of a document IN POSITION ORDER
-    (unlike :func:`hashed_shingles`, no array_distinct — span detection
-    needs every occurrence and its position)."""
-    raw = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - k),
-        lambda i: F.xxhash64(F.slice(toks, i + 1, k)),
-    )
-    return F.when(F.size(toks) >= k, raw).otherwise(
-        F.array().cast("array<bigint>")
-    )
-
-
 def duplicate_spans(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1239,7 +1223,7 @@ def duplicate_spans(
     toks = tokens(F.col(text_col))
     wins = df.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(_positional_window_hashes(toks, k)).alias("idx", "h"),
+        F.posexplode(window_hashes(toks, k)).alias("idx", "h"),
     ).select("doc_id", (F.col("idx") + 1).alias("pos"), "h")
     if hot_mod is None:
         hits = wins.withColumn(
@@ -1258,7 +1242,7 @@ def duplicate_spans(
         hot = (
             sampled_docs.select(
                 F.explode(
-                    _positional_window_hashes(tokens(F.col(text_col)), k)
+                    window_hashes(tokens(F.col(text_col)), k)
                 ).alias("h")
             )
             .groupBy("h")
@@ -1347,7 +1331,7 @@ def build_kgram_index(
         widen_narrow_input(df)
         .select(
             F.explode(
-                _positional_window_hashes(tokens(F.col(text_col)), k)
+                window_hashes(tokens(F.col(text_col)), k)
             ).alias("h")
         )
         .distinct()
@@ -1375,7 +1359,7 @@ def append_to_kgram_index(
         widen_narrow_input(df)
         .select(
             F.explode(
-                _positional_window_hashes(tokens(F.col(text_col)), meta.k)
+                window_hashes(tokens(F.col(text_col)), meta.k)
             ).alias("h")
         )
         .distinct()
@@ -1415,7 +1399,7 @@ def duplicate_spans_against_index(
     wins = widen_narrow_input(new_df).select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(
-            _positional_window_hashes(tokens(F.col(text_col)), k)
+            window_hashes(tokens(F.col(text_col)), k)
         ).alias("idx", "h"),
     ).select("doc_id", (F.col("idx") + 1).alias("pos"), "h")
     idx = read_pinned(spark, f"{path}/hashes").withColumn("__in", F.lit(True))

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from aws_data_pipeline_spark.functions.portable import md5_prefix_long
+from aws_data_pipeline_spark.functions.portable import hash_long, md5_prefix_long
 from aws_data_pipeline_spark.operators import widen_narrow_input
 
 
@@ -30,14 +30,7 @@ def _hash_bucket(id_col: str, seed: str, hash_fn: str) -> Column:
     train/test splits that's often a compliance property, and the
     per-row md5 cost is noise next to tokenization.
     """
-    if hash_fn == "xxhash64":
-        h = F.xxhash64(F.col(id_col).cast("string"), F.lit(seed))
-    elif hash_fn == "md5":
-        h = md5_prefix_long(
-            F.concat_ws(":", F.col(id_col).cast("string"), F.lit(seed))
-        )
-    else:
-        raise ValueError(f"unknown hash_fn: {hash_fn!r}")
+    h = hash_long(hash_fn, F.col(id_col).cast("string"), F.lit(seed))
     return F.pmod(h, F.lit(10_000))
 
 
@@ -519,18 +512,8 @@ def training_shards(
             f"training_shards reserves column names {sorted(reserved)}; "
             f"rename input columns {sorted(clash)} first"
         )
-    if hash_fn == "xxhash64":
-        route = F.xxhash64(F.col(id_col).cast("string"), F.lit(seed))
-        order = F.xxhash64(F.col(id_col).cast("string"), F.lit(seed + "/pos"))
-    elif hash_fn == "md5":
-        route = md5_prefix_long(
-            F.concat_ws(":", F.col(id_col).cast("string"), F.lit(seed))
-        )
-        order = md5_prefix_long(
-            F.concat_ws(":", F.col(id_col).cast("string"), F.lit(seed + "/pos"))
-        )
-    else:
-        raise ValueError(f"unknown hash_fn: {hash_fn!r}")
+    route = hash_long(hash_fn, F.col(id_col).cast("string"), F.lit(seed))
+    order = hash_long(hash_fn, F.col(id_col).cast("string"), F.lit(seed + "/pos"))
     shard = F.pmod(route, F.lit(n_shards)).alias("shard")
     w = Window.partitionBy("shard").orderBy("__ord", id_col)
     # keep_cols=True carries the payload through instead of returning the
@@ -612,13 +595,7 @@ def weighted_sample_topk(
     Scale shape: one hash + key projection map-side, one top-k window per
     group — the same single-shuffle shape as every other top-k here.
     """
-    from pyspark.sql import Window
-
-    from aws_data_pipeline_spark.functions.portable import md5_prefix_long
-
-    h = md5_prefix_long(
-        F.concat_ws(":", F.col(id_col).cast("string"), F.lit("wsample-v1"))
-    )
+    h = hash_long("md5", F.col(id_col).cast("string"), F.lit("wsample-v1"))
     u = (F.pmod(h, F.lit(1_000_000)) + F.lit(1)) / F.lit(1_000_001.0)
     w = F.col(weight_col).cast("double")
     wmax = F.max(w).over(Window.partitionBy(group_col))

@@ -24,6 +24,7 @@ from aws_data_pipeline_spark.sources.parquet import (
     artifact_memo,
     finish_index_build,
     read_pinned,
+    index_active_version,
     index_has,
     index_next_root,
     index_root,
@@ -2549,6 +2550,26 @@ def ivfpq_cell_codes_current(
         is None
     )
 
+
+def refresh_ivf_cell_codes(
+    spark, path: str, ivf_index_path: str, codes_index_path: str
+) -> bool:
+    """Keep the cell-codes layout at ``path`` current: rebuild it from
+    the IVF index and the codes index (PQ or SQ8) unless
+    :func:`ivfpq_cell_codes_current` reports it current. True when it
+    rebuilt. A no-op while either source has no committed version (there
+    is nothing to derive from yet). The one maintenance decision for
+    this derived layout: the ingest loop's post-run slot, the erasure
+    and the registry's composed probes all call it, so a no-op refresh
+    costs only the metadata currency check everywhere."""
+    if index_active_version(spark, ivf_index_path) is None or (
+        index_active_version(spark, codes_index_path) is None
+    ):
+        return False
+    if ivfpq_cell_codes_current(spark, path, ivf_index_path, codes_index_path):
+        return False
+    build_ivfpq_cell_codes(spark, ivf_index_path, codes_index_path, path)
+    return True
 
 def ivfsq8_topk_indexed(
     spark,

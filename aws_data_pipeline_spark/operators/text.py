@@ -46,17 +46,23 @@ def shingles(toks: Column, k: int = 5) -> Column:
     )
 
 
-def hashed_shingles(toks: Column, k: int = 5) -> Column:
-    """Distinct xxhash64 fingerprints of the k-token shingles — the scale
-    variant of :func:`shingles`: no joined-string materialization, fixed
-    8-byte values for shuffles/joins/broadcasts."""
+def window_hashes(toks: Column, k: int) -> Column:
+    """xxhash64 of every length-k token window of ``toks``, IN POSITION
+    ORDER (repeats kept); empty when there are fewer than k tokens. Span
+    detection needs every occurrence and its position; set similarity
+    takes the distinct values (:func:`hashed_shingles`)."""
     raw = F.transform(
         F.sequence(F.lit(0), F.size(toks) - k),
         lambda i: F.xxhash64(F.slice(toks, i + 1, k)),
     )
-    return F.when(F.size(toks) >= k, F.array_distinct(raw)).otherwise(
-        F.array().cast("array<bigint>")
-    )
+    return F.when(F.size(toks) >= k, raw).otherwise(F.array().cast("array<bigint>"))
+
+
+def hashed_shingles(toks: Column, k: int = 5) -> Column:
+    """Distinct xxhash64 fingerprints of the k-token shingles — the scale
+    variant of :func:`shingles`: no joined-string materialization, fixed
+    8-byte values for shuffles/joins/broadcasts."""
+    return F.array_distinct(window_hashes(toks, k))
 
 
 def stopword_count(toks: Column, words: tuple[str, ...] = STOPWORDS) -> Column:

@@ -125,7 +125,8 @@ def global_row_number(
        rows in the SAME positions — without it a re-sample between jobs
        could shift rows across partitions and corrupt the offsets.
     2. LOCAL row number read off ``monotonically_increasing_id()`` over
-       the pinned sorted scan ((partition << 33) + row offset — parallel,
+       the pinned sorted scan (its low 33 bits are the row offset; the
+       partition id is ``spark_partition_id()`` — parallel,
        no global sort, and no WindowExec: a window partitioned by
        ``spark_partition_id()`` re-shuffles the frame, because the
        checkpoint scan's UnknownPartitioning can't prove the clustering
@@ -212,9 +213,11 @@ def _global_row_number_with_total(
 ) -> tuple[DataFrame, int]:
     # The ONLY shuffle in the pass: range-repartition on the order keys,
     # then SORT WITHIN each range partition — the checkpoint pins the
-    # sorted rows, so the local row number can be read off
-    # ``monotonically_increasing_id()`` ((partition << 33) + row offset
-    # in pinned partition order) instead of a ``row_number`` window.
+    # sorted rows, so the local row number can be read off the low 33
+    # bits of ``monotonically_increasing_id()`` (the row offset in pinned
+    # partition order) instead of a ``row_number`` window. The partition
+    # id is ``spark_partition_id()``, the key the totals collect and
+    # ``global_prefix_sum`` use, so the family has one partition-id rule.
     # The window form paid a SECOND full shuffle per pass: a checkpoint
     # scan reports UnknownPartitioning, so WindowExec's
     # ClusteredDistribution(__pid) re-planned an
@@ -236,10 +239,7 @@ def _global_row_number_with_total(
     offsets, total = _partition_offsets(per_pid["rows"], n)
     out = (
         part.withColumn("__mid", F.monotonically_increasing_id())
-        .withColumn(
-            "__pid",
-            F.shiftrightunsigned(F.col("__mid"), _MID_OFFSET_BITS).cast("int"),
-        )
+        .withColumn("__pid", F.spark_partition_id())
         .withColumn(
             out_col,
             F.col("__mid").bitwiseAND(F.lit((1 << _MID_OFFSET_BITS) - 1))

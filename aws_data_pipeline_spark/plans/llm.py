@@ -33,6 +33,7 @@ from aws_data_pipeline_spark.sources.parquet import (
     index_root,
     read_pinned,
     zone_exists,
+    zone_listing_state,
 )
 
 # -- Exact dedup -----------------------------------------------------------
@@ -409,44 +410,16 @@ def _warehouse_index_path(sf_dir: str, name: str) -> str:
     return str(root / f"{name}_{pathlib.Path(sf_dir).name}_{tag}")
 
 
-def _src_state(
-    spark: SparkSession, sf_dir: str, table: str
-) -> tuple[int, int, int]:
-    """(row count, file count, total bytes) of a source table — the state a
-    build-once index's staleness marker records. Row count is parquet
-    footer metadata; file count + bytes come from one FS listing.
-    The fingerprint is what catches a REGENERATED source at the same
-    scale factor: identical row count, different file bytes — a
-    count-only marker would silently serve the old source's index data.
-
-    The count is memoized per (application, table, FULL listing state —
-    files, bytes, max mtime): footer-cheap or not, it is still a 2-job
-    Spark action, and r13 job attribution measured it as the largest
-    remaining fixed overhead on every warm ANN probe (the state probe
-    runs on EACH registry call, and keys :func:`_ensure_index`). The
-    state returned (and the on-disk marker schema) are unchanged.
-
-    Granularity: the count memo's freshness rests on the listing alone —
-    file count, total bytes and the MILLISECOND max mtime (Hadoop
-    ``FileStatus`` precision). A rewrite that keeps the file count and
-    total bytes and lands within the same mtime tick as the newest file
-    it replaces goes unseen: the memoized count is served. The returned
-    state (what the index marker and :func:`_ensure_index`'s memo key on) omits
-    the mtime, so a regeneration that keeps row count, file count and
-    total bytes goes unseen by the index marker. Appends and resized
-    regenerations change the state."""
-    from aws_data_pipeline_spark.sources.parquet import zone_listing_state
-
-    n_files, n_bytes, max_mtime = zone_listing_state(
-        spark, f"{sf_dir}/{table}.parquet"
-    )
-    total = app_memo(
-        spark,
-        ("src_count", sf_dir, table),
-        (n_files, n_bytes, max_mtime),
-        lambda: T(spark, sf_dir, table).count(),  # footer metadata
-    )
-    return (total, n_files, n_bytes)
+def _src_state(spark: SparkSession, sf_dir: str, table: str) -> tuple[int, int, int]:
+    """(file count, byte size, max mtime) of a source table: its zone
+    listing (:func:`zone_listing_state`), one FS listing and no Spark
+    job. This is what a build-once index was derived from, so it is the
+    state every registry seat keys on: the index markers, the ensured
+    paths, the resident copies, the composed roots, the SQ8 stats and the
+    BPE model. A regeneration that keeps the row count, file count and
+    byte size still lands new mtimes, and rebuilds rather than serves the
+    old corpus's index."""
+    return zone_listing_state(spark, f"{sf_dir}/{table}.parquet")
 
 
 @functools.cache
@@ -468,7 +441,7 @@ def _code_digest() -> str:
 # the probe infers nothing from footers and a column an older writer did
 # not record reads as null (and the marker as stale).
 _SRC_MARKER_SCHEMA = (
-    "src_total long, src_files long, src_bytes long, code_digest string"
+    "src_files long, src_bytes long, src_mtime long, code_digest string"
 )
 
 
@@ -476,31 +449,25 @@ def _src_marker_fresh(
     spark: SparkSession, idx: str, state: tuple[int, int, int]
 ) -> bool:
     """Freshness probe for a build-once index over a slice of a source
-    table: compare the FULL table's (row count, file count, byte size)
+    table: compare the FULL table's listing state (:func:`_src_state`)
     and the index-building code (:func:`_code_digest`) against the
     marker the index's ACTIVE version recorded at build time. The slice
     predicate is deterministic, so an unchanged table implies an
-    unchanged slice; scanning the filtered slice directly would read the
-    doc_id column of the whole table on EVERY probe. An index with no
-    committed version has no marker; a marker without every column
-    (older schema) reads the missing ones as null, so it is stale and
-    triggers one rebuild."""
+    unchanged slice. An index with no committed version has no marker; a
+    marker without every column (an older schema) reads the missing ones
+    as null, so it is stale and triggers one rebuild."""
     marker = f"{index_root(spark, idx)}/src_meta"
     if not zone_exists(spark, marker):
         return False
-    r = spark.read.schema(_SRC_MARKER_SCHEMA).parquet(marker).collect()[0]
-    return (r.src_total, r.src_files, r.src_bytes, r.code_digest) == (
-        *state,
-        _code_digest(),
-    )
+    row = spark.read.schema(_SRC_MARKER_SCHEMA).parquet(marker).collect()[0]
+    return tuple(row) == (*state, _code_digest())
 
 
 def _write_src_marker(
     spark: SparkSession, idx: str, state: tuple[int, int, int]
 ) -> None:
-    arrow_frame(spark, [(*state, _code_digest())], _SRC_MARKER_SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(f"{index_root(spark, idx)}/src_meta")
+    marker = arrow_frame(spark, [(*state, _code_digest())], _SRC_MARKER_SCHEMA)
+    marker.write.mode("overwrite").parquet(f"{index_root(spark, idx)}/src_meta")
 
 
 class _IndexSpec(NamedTuple):
@@ -571,11 +538,11 @@ def _ensure_index(spark: SparkSession, sf_dir: str, spec: _IndexSpec) -> str:
     probe exercises the append-maintained shape, not a fresh full build.
 
     Staleness: the source-state marker in the index's committed version
-    (:func:`_src_marker_fresh` — row count from footer metadata PLUS
-    file-count/byte fingerprint from one FS listing, and the digest of
-    the code that built it); a regenerated corpus under the same path —
-    even at identical row count — or changed index code triggers a
-    rebuild into a new version instead of silently serving the old data.
+    (:func:`_src_marker_fresh`: the source zone's listing state and the
+    digest of the code that built it); a regenerated corpus under the
+    same path, even at identical row count, file count and byte size, or
+    changed index code triggers a rebuild into a new version instead of
+    silently serving the old data.
     Params are part of the index path, so differently-parameterized
     indexes coexist. Build and append complete before the marker write,
     so a crash mid-way reads as stale and the re-run redoes both."""
@@ -831,40 +798,31 @@ def embedding_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# build-once IVF index, persisted under the (gitignored) warehouse dir and
-# cached session-resident: the IVF contract is "build the index once,
-# search many times" — retraining k-means AND re-assigning the corpus inside
-# every search invocation was the dominant cost of the benched query
-# (VERDICT r3) and is not the 100 TB story. The PERSISTED index is the
-# single source of truth for the quantizer and the inverted file: the
-# index is built from the existing corpus and then appended to under fixed
-# centroids, so the resident path loads both from disk rather than
-# retraining — that is what makes the resident and persisted search paths
-# row-for-row comparable.
-def _ivf_index(spark: SparkSession, sf_dir: str, n_cells: int):
-    # the source STATE (row count + file fingerprint, same probe the disk
-    # marker uses) keys the memo: a regenerated corpus under the same
-    # sf_dir must invalidate the resident copy too (and unpersist the
-    # superseded one), or the resident and persisted paths would diverge
-    # within one application after _ensure_index rebuilds the disk index
+def _resident(
+    spark: SparkSession, sf_dir: str, spec: _IndexSpec, load, table: str
+):
+    """(artifact, resident table) of a build-once registry index, held
+    per (sf_dir, index, source state): ensure the index, resolve its
+    root, ``load`` the driver artifact there (IVF centroids, PQ
+    codebooks) and persist and count its ``table`` (the IVF inverted
+    file, the PQ code rows). The persisted index is the single source of
+    truth: retraining inside every search was the dominant cost of the
+    benched query (VERDICT r3), and reading both halves from disk is what
+    makes the resident and indexed search paths return identical rows by
+    construction. A regenerated corpus flips the state, so the resident
+    copy follows the rebuilt disk index, and the superseded table is
+    unpersisted on eviction."""
+
     def build():
-        idx = index_root(
-            spark, _ensure_index(spark, sf_dir, _ivf_index_spec(n_cells))
-        )
-        cents = similarity.read_ivf_centroids(spark, idx)
-        # the inverted file is READ from the persisted index, not
-        # recomputed: build_ivf_index already wrote exactly this
-        # (neighbor_id, cv, cell) frame, so a plain scan is strictly
-        # cheaper than a whole-corpus nearest_cell projection and makes
-        # the resident path identical to the indexed one by construction
-        assigned = read_pinned(spark, f"{idx}/corpus").persist()
-        assigned.count()  # materialize the resident copy eagerly
-        return cents, assigned
+        root = index_root(spark, _ensure_index(spark, sf_dir, spec))
+        artifact = load(spark, root)
+        rows = read_pinned(spark, f"{root}/{table}").persist()
+        rows.count()  # materialize the resident copy eagerly
+        return artifact, rows
 
     return app_memo(
-        spark, ("ivf_resident", sf_dir, n_cells),
-        _src_state(spark, sf_dir, "embeddings"), build,
-        release=lambda hit: hit[1].unpersist(),
+        spark, ("resident", sf_dir, spec.name), _src_state(spark, sf_dir, spec.table),
+        build, release=lambda hit: hit[1].unpersist(),
     )
 
 
@@ -884,12 +842,15 @@ def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     its slot): driver IVF signal carried by embedding_ann_ivfpq and
     embedding_ann_ivfsq8 (since r10; r8-r9 by embedding_ann_ivf_indexed,
     itself demoted r10) — every path reads the SAME persisted index
-    (single source of truth for the quantizer, see _ivf_index) and the
+    (single source of truth for the quantizer, see _resident) and the
     resident/persisted searches return identical rows by construction,
     pinned in tests/test_llm.py."""
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
-    cents, assigned = _ivf_index(spark, sf_dir, n_cells=8)
+    cents, assigned = _resident(
+        spark, sf_dir, _ivf_index_spec(n_cells=8), similarity.read_ivf_centroids,
+        "corpus",
+    )
     return similarity.ivf_topk(
         queries, e, k=5, nprobe=4, centroids=cents, assigned=assigned
     )
@@ -904,7 +865,7 @@ def embedding_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     index, see _ensure_index), and every search reads ONLY the probed
     cell directories via partition pruning. Shares the trained quantizer
     with embedding_ann_ivf (the disk index is the single source of truth
-    — see _ivf_index), so the resident and persisted paths return
+    — see _resident), so the resident and persisted paths return
     identical rows.
 
     Demoted r10 (embedding_ann_ivfsq8 entered the rows-only tail in its
@@ -939,28 +900,6 @@ def embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ann_topk_lsh(queries, e, k=5, n_planes=4)
 
 
-def _pq_corpus(spark: SparkSession, sf_dir: str):
-    """Resident 8×16 PQ artifacts per (sf_dir, source state), READ from
-    the persisted index (single source of truth for codebooks AND codes —
-    the _ivf_index rule): the disk index is built/appended once per
-    corpus by _ensure_index, the resident copy just loads its codebooks
-    and persists its code rows, so the resident and indexed search paths
-    return identical rows by construction. A superseded entry's codes are
-    unpersisted on eviction."""
-    def build():
-        idx = index_root(spark, _ensure_index(spark, sf_dir, _pq_index_spec(8, 16)))
-        books = similarity.read_pq_codebooks(spark, idx)
-        codes = read_pinned(spark, f"{idx}/codes").persist()
-        codes.count()  # materialize eagerly
-        return books, codes
-
-    return app_memo(
-        spark, ("pq_resident", sf_dir),
-        _src_state(spark, sf_dir, "embeddings"), build,
-        release=lambda hit: hit[1].unpersist(),
-    )
-
-
 @register("embedding_ann_pq", sql=None, demoted=True)
 def embedding_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-5 via product quantization + ADC with exact re-rank
@@ -975,7 +914,10 @@ def embedding_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding_ann_pq_indexed — the persisted-index probe under the same
     stored codebooks (identity pinned in tests/test_llm.py); this
     resident entry exists so bench.py can time the in-memory PQ path."""
-    books, codes = _pq_corpus(spark, sf_dir)
+    books, codes = _resident(
+        spark, sf_dir, _pq_index_spec(m=8, ks=16), similarity.read_pq_codebooks,
+        "codes",
+    )
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
     return similarity.pq_topk(queries, e, books, k=5, corpus_codes=codes, rerank=40)
@@ -1006,56 +948,40 @@ def embedding_ann_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.pq_topk_indexed(spark, queries, idx, k=5, rerank=40)
 
 
-def _ensure_ivf_cell_codes(
+def _composed_roots(
     spark: SparkSession, sf_dir: str, codes_spec: _IndexSpec, layout: str
 ) -> tuple[str, str, str]:
-    """Ensure the 8-cell IVF index and the ``codes_spec`` index (PQ or
-    SQ8), then materialize (or refresh) the FAISS inverted-list-with-codes
-    layout derived from them at warehouse name ``layout``; returns the
-    three unresolved (ivf, codes, cell_codes) paths. Currency is checked
-    against the sources' committed roots
-    (similarity.ivfpq_cell_codes_current), so an index rebuild triggered
-    by corpus regeneration automatically triggers this rebuild too — the
-    derived-layout maintenance rule as code. ``layout`` carries the
-    params (the _warehouse_index_path rule): differently-parameterized
-    source indexes must never thrash one derived layout."""
-    ivf = _ensure_index(spark, sf_dir, _ivf_index_spec(n_cells=8))
-    codes = _ensure_index(spark, sf_dir, codes_spec)
-    cc = _warehouse_index_path(sf_dir, layout)
-    if not similarity.ivfpq_cell_codes_current(spark, cc, ivf, codes):
-        similarity.build_ivfpq_cell_codes(spark, ivf, codes, cc)
-    return ivf, codes, cc
+    """The one seat of the IVF-composed probes: ensure the 8-cell IVF
+    index and the ``codes_spec`` index (PQ or SQ8), refresh the FAISS
+    inverted-list-with-codes layout derived from them at warehouse name
+    ``layout`` (:func:`similarity.refresh_ivf_cell_codes`, so an index
+    rebuild triggered by corpus regeneration rebuilds the layout too),
+    and memoize the RESOLVED (ivf, codes, cell_codes) roots per
+    (sf_dir, layout, source state) in :func:`app_memo`. ``layout``
+    carries the params (the _warehouse_index_path rule):
+    differently-parameterized source indexes must never thrash one
+    derived layout.
 
+    A warm probe against an unchanged corpus pays only the one listing
+    state probe that keys the memo, plus a one-leaf :func:`zone_exists`
+    probe on each cached root: an out-of-band deletion flips no source
+    state, and without it a warm probe would sail past the staleness
+    gate into raw parquet path errors, so a miss re-ensures instead.
+    The roots are the committed builds the refresh verified, which is
+    the contract under which the probes pass ``cell_codes_verified=True``;
+    the codes root's artifact (PQ codebooks, SQ8 stats) is memoized per
+    root by the search itself (:func:`artifact_memo`)."""
 
-def _composed_roots(spark: SparkSession, sf_dir: str, tag: str, ensure):
-    """Resolved (coarse_root, codes_root, cell_codes_root) triple per
-    (sf_dir, params-tag, source state) in the application memo
-    (:func:`app_memo`), applied to the composed probes' fixed per-call
-    overhead (r8 verdict item 4): a repeated probe against an unchanged
-    corpus skips both ensure chains (src_meta marker reads) and the
-    cell-codes currency check (meta read + two footer counts), paying
-    only the footer-count + FS-listing state probe that keys the memo.
-    Roots are stored RESOLVED (committed version dirs, index_root is
-    identity on them), so warm probes serve exactly the builds the
-    currency check verified; the probe's own staleness gate still runs —
-    it compares the layout meta against these same resolved roots, so it
-    stays green by construction and keeps the loud-failure contract for
-    callers outside this memo. A corpus change flips the state key and
-    re-runs ``ensure`` (which rebuilds whatever the markers say is
-    stale). ``ensure`` must return the three UNRESOLVED index paths.
+    def ensure():
+        ivf = _ensure_index(spark, sf_dir, _ivf_index_spec(n_cells=8))
+        codes = _ensure_index(spark, sf_dir, codes_spec)
+        cc = _warehouse_index_path(sf_dir, layout)
+        similarity.refresh_ivf_cell_codes(spark, cc, ivf, codes)
+        return tuple(index_root(spark, p) for p in (ivf, codes, cc))
 
-    Warm hits are served only after a one-leaf :func:`zone_exists` probe
-    on each cached resolved root (r9 advisory): an out-of-band index
-    deletion or rebuild doesn't flip ``_src_state``, and without the
-    probe a warm probe would sail past the loud staleness gate
-    (``cell_codes_verified=True``) into raw parquet path errors — a probe
-    miss re-``ensure``s instead. The codes root's artifact (PQ codebooks,
-    SQ8 stats) is memoized per resolved root by the search itself
-    (:func:`artifact_memo`), so warm probes skip that collect too."""
     return app_memo(
-        spark, ("composed", sf_dir, tag), _src_state(spark, sf_dir, "embeddings"),
-        lambda: tuple(index_root(spark, p) for p in ensure()),
-        alive=lambda roots: all(zone_exists(spark, r) for r in roots),
+        spark, ("composed", sf_dir, layout), _src_state(spark, sf_dir, "embeddings"),
+        ensure, alive=lambda roots: all(zone_exists(spark, r) for r in roots),
     )
 
 
@@ -1081,12 +1007,7 @@ def embedding_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed ensure/currency overhead, honestly-cold every call."""
 
     ivf, pq, cc = _composed_roots(
-        spark,
-        sf_dir,
-        "ivfpq_c8_m8_ks16",
-        lambda: _ensure_ivf_cell_codes(
-            spark, sf_dir, _pq_index_spec(m=8, ks=16), "ivfpq_cell_codes_c8_m8_ks16"
-        ),
+        spark, sf_dir, _pq_index_spec(m=8, ks=16), "ivfpq_cell_codes_c8_m8_ks16"
     )
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
@@ -1192,7 +1113,7 @@ def embedding_ann_sq8_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sq8_stats(spark: SparkSession, sf_dir: str, e: DataFrame):
-    """Train-once SQ8 stats of the full corpus ``e`` (the _pq_corpus
+    """Train-once SQ8 stats of the full corpus ``e`` (the _resident
     discipline): 2 doubles per dimension, keyed on source state so corpus
     regeneration invalidates; repeated probes skip the min/max pass."""
     return app_memo(
@@ -2870,22 +2791,6 @@ def unicode_nfc_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivfsq8_roots(spark: SparkSession, sf_dir: str):
-    """The ensured + verified (ivf, sq8, cell_codes) resolved-root triple,
-    shared by every IVF-SQ8-composed registry entry (the top-k search and
-    the hard-negative miner) through the one state-keyed _composed_roots
-    seat."""
-
-    return _composed_roots(
-        spark,
-        sf_dir,
-        "ivfsq8_c8",
-        lambda: _ensure_ivf_cell_codes(
-            spark, sf_dir, _SQ8_INDEX, "ivfsq8_cell_codes_c8"
-        ),
-    )
-
-
 @register("embedding_ann_ivfsq8", sql=None, demoted=True)
 def embedding_ann_ivfsq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 via the composed IVF+SQ8 search (FAISS's standard
@@ -2905,12 +2810,14 @@ def embedding_ann_ivfsq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     queue's head, VERDICT r11 item 6) under the named-demotion rule —
     the r10/r11 composed-search-carries-index precedent inverted: the
     promoted miner ensures the SAME (ivf, sq8, cell_codes) roots through
-    _ivfsq8_roots and runs this cell-pruned ADC search VERBATIM as its
+    _composed_roots and runs this cell-pruned ADC search VERBATIM as its
     candidate stage, so every driver run of the miner exercises this
     search end-to-end. Value semantics remain pinned locally by
     embedding_ann_sq8's full value oracle (the SQ8 scoring chain) and
     test_embedding_maintenance::test_ivfsq8_indexed_composition."""
-    ivf, sq8, cc = _ivfsq8_roots(spark, sf_dir)
+    ivf, sq8, cc = _composed_roots(
+        spark, sf_dir, _SQ8_INDEX, "ivfsq8_cell_codes_c8"
+    )
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
     return similarity.ivfsq8_topk_indexed(
@@ -3130,7 +3037,9 @@ def hard_negative_topk_ivfsq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal stays pinned by hard_negative_topk (exact twin, full oracle,
     promoted r9); full-coverage identity (nprobe = n_cells ⇒ rows == the
     exact miner's) pinned in tests/test_llm.py."""
-    ivf, sq8, cc = _ivfsq8_roots(spark, sf_dir)
+    ivf, sq8, cc = _composed_roots(
+        spark, sf_dir, _SQ8_INDEX, "ivfsq8_cell_codes_c8"
+    )
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
     return similarity.hard_negative_topk_ivfsq8(

@@ -117,13 +117,14 @@ def app_memo(
 ):
     """The ONE application-lifetime cache: inferred read schemas
     (:func:`read_pinned`), index artifacts (:func:`artifact_memo`), and
-    the registry's source-table counts, ensured index paths, resolved
-    composed roots, resident IVF/PQ frames and BPE models all live here
+    the registry's ensured index paths, resolved composed roots,
+    resident IVF/PQ frames, SQ8 stats and BPE models all live here
     under one key and one eviction rule. The key is (application id,
     ``scope``, ``state``): ``scope`` names the cache and its parameters
     (differently parameterized entries coexist), ``state`` what the value
-    was built from (a source table's state, so a regenerated corpus
-    misses instead of serving the old corpus's artifact).
+    was built from (a source table's :func:`zone_listing_state`, so a
+    regenerated corpus misses instead of serving the old corpus's
+    artifact).
 
     - A warm hit is one dict lookup, served only if ``alive(value)``
       passes (a one-leaf zone_exists probe on a memoized index path: an
@@ -265,29 +266,19 @@ def zone_exists(spark: SparkSession, path: str) -> bool:
     return next(_walk_files(spark, path), None) is not None
 
 
-def zone_fingerprint(spark: SparkSession, path: str) -> tuple[int, int]:
-    """(committed file count, total committed bytes) of a zone via one
-    recursive FS listing — footer-cheap content fingerprint for build-once
-    index staleness markers: a REGENERATED source at the same scale factor
-    has the same row count but (with overwhelming probability) different
-    file sizes, so count-only freshness checks would silently serve stale
-    index data. Hidden/uncommitted components (``_``/``.`` prefixed) are
-    excluded, same rule as :func:`zone_exists`. Returns (0, 0) for a
-    missing or data-free zone."""
-    n_files, n_bytes, _ = zone_listing_state(spark, path)
-    return (n_files, n_bytes)
-
-
 def zone_listing_state(spark: SparkSession, path: str) -> tuple[int, int, int]:
     """(committed file count, total committed bytes, max mtime millis) of
-    a zone from ONE recursive FS listing — :func:`zone_fingerprint` plus
-    the newest modification time. The mtime is what lets an app-lifetime
-    memo stand in for a re-COMPUTATION over the files (a row count, a
-    digest): any non-adversarial content change — append, overwrite,
-    regeneration, even a byte-identical rewrite — lands new mtimes, so a
-    memo keyed on this triple can never serve a value the underlying
-    files no longer have. Returns (0, 0, 0) for a missing/data-free
-    zone."""
+    a zone from ONE recursive FS listing; (0, 0, 0) for a missing or
+    data-free zone. Hidden/uncommitted components (``_``/``.`` prefixed)
+    are excluded, the :func:`zone_exists` rule. This triple is the state
+    a build-once registry index, and every memo that stands in for a
+    computation over the files, keys on: any non-adversarial content
+    change (append, overwrite, regeneration at the same row count, file
+    count and byte size, even a byte-identical rewrite) lands new
+    mtimes, so such a key never serves a value the files no longer
+    have. The granularity is Hadoop ``FileStatus``'s millisecond mtime:
+    only a rewrite that keeps the file count and bytes AND lands within
+    the same millisecond as the newest file it replaces goes unseen."""
     n_files = n_bytes = max_mtime = 0
     for _, st in _walk_files(spark, path):
         n_files += 1
@@ -871,7 +862,7 @@ def index_compaction_due(
     listing per sub-table (metadata only, no data reads)."""
     root = index_root(spark, path)
     return any(
-        zone_fingerprint(spark, f"{root}/{s}")[0] > max_files for s in subs
+        zone_listing_state(spark, f"{root}/{s}")[0] > max_files for s in subs
     )
 
 

@@ -57,7 +57,7 @@ dependencies:
   so "time travel to the forgotten rows" stops being offered at all.
 
 Scale posture: snapshot creation is one recursive listing (O(files)
-metadata calls, the zone_fingerprint class — no data file is read) and
+metadata calls, the zone_listing_state class — no data file is read) and
 a driver-side manifest write of one row per file. A read collects each
 manifest it needs once — one pinned-schema scan, one Spark job — and
 verifies it against ONE fresh recursive listing (again O(files)), not a

@@ -36,19 +36,6 @@ VEC_SCHEMA = T.StructType(
 )
 
 
-def _refresh_cell_codes(spark, path: str, ivf_path: str, codes_path: str) -> None:
-    """Rebuild the derived cell-codes layout at ``path`` when its stored
-    source roots/counts no longer match the IVF and codes indexes."""
-    if (
-        index_has(spark, ivf_path, "centroids")
-        and index_has(spark, codes_path, "meta")
-        and not similarity.ivfpq_cell_codes_current(
-            spark, path, ivf_path, codes_path
-        )
-    ):
-        similarity.build_ivfpq_cell_codes(spark, ivf_path, codes_path, path)
-
-
 def incremental_embedding_ingest(
     spark: SparkSession,
     vecs_path: str,
@@ -108,9 +95,9 @@ def incremental_embedding_ingest(
     and ``pq_index_path``): keeps the materialized FAISS
     inverted-list-with-codes layout current — appends and retrains leave
     derived data stale by definition, so after the run drains it is
-    rebuilt whenever :func:`similarity.ivfpq_cell_codes_current` reports
-    the stored source roots/counts no longer match; a no-op run costs
-    only the metadata currency check.
+    rebuilt by :func:`similarity.refresh_ivf_cell_codes` whenever the
+    stored source roots/counts no longer match; a no-op run costs only
+    the metadata currency check.
 
     ``gc_superseded_versions=True`` collects index generations superseded
     in PREVIOUS runs (and crash-stranded candidates) for every configured
@@ -174,12 +161,10 @@ def incremental_embedding_ingest(
             retrain(spark, path)
     # derived cell-codes layout: appends (and any retrain above) leave it
     # stale by definition — the stored source roots/counts no longer match
-    # — so the same post-run slot that retrains the sources refreshes it.
-    # Rebuild-on-supersede IS this layout's whole maintenance story
-    # (operators/similarity.py::build_ivfpq_cell_codes); checking currency
-    # first keeps a no-op run (nothing ingested, nothing retrained) free.
+    # — so the same post-run slot that retrains the sources refreshes it
+    # (rebuild-on-supersede is this layout's whole maintenance story)
     if None not in (ivfpq_cell_codes_path, ivf_index_path, pq_index_path):
-        _refresh_cell_codes(
+        similarity.refresh_ivf_cell_codes(
             spark, ivfpq_cell_codes_path, ivf_index_path, pq_index_path
         )
 
@@ -249,7 +234,7 @@ def forget_vectors(
                     "— rebuild it explicitly with build_ivfpq_cell_codes(ivf, "
                     "<codes index>, path) to complete the erasure"
                 )
-            _refresh_cell_codes(
+            similarity.refresh_ivf_cell_codes(
                 spark, ivfpq_cell_codes_path, ivf_index_path, codes_src
             )
         return out

@@ -1071,9 +1071,13 @@ def test_ivfpq_cell_codes_layout(spark, sf_dir, tmp_path):
     cc = str(tmp_path / "ivfpq_codes")
     S.build_ivf_index(e, ivf, n_cells=8, seed=42)
     S.build_pq_index(e, pq, m=8, ks=16, seed=42)
+    # the refresh verb: a no-op while a source is unbuilt, a build while
+    # the layout is absent or stale, a no-op once it is current
+    assert not S.refresh_ivf_cell_codes(spark, cc, str(tmp_path / "unbuilt"), pq)
     assert not S.ivfpq_cell_codes_current(spark, cc, ivf, pq)
-    S.build_ivfpq_cell_codes(spark, ivf, pq, cc)
+    assert S.refresh_ivf_cell_codes(spark, cc, ivf, pq)
     assert S.ivfpq_cell_codes_current(spark, cc, ivf, pq)
+    assert not S.refresh_ivf_cell_codes(spark, cc, ivf, pq)
 
     q = e.filter(F.col("vec_id") < 10)
     via_cc = S.ivfpq_topk_indexed(
@@ -1125,7 +1129,7 @@ def test_ivfpq_cell_codes_layout(spark, sf_dir, tmp_path):
         S.ivfpq_topk_indexed(
             spark, q, ivf, pq, k=5, nprobe=4, rerank=40, cell_codes_path=cc
         ).collect()
-    S.build_ivfpq_cell_codes(spark, ivf, pq, cc)
+    assert S.refresh_ivf_cell_codes(spark, cc, ivf, pq)
     assert S.ivfpq_cell_codes_current(spark, cc, ivf, pq)
     appended_view = S.ivfpq_topk_indexed(
         spark, q, ivf, pq, k=5, nprobe=4, rerank=40, cell_codes_path=cc

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from aws_data_pipeline_spark.catalog import load
 from aws_data_pipeline_spark.operators import dedup, multimodal, similarity
 from aws_data_pipeline_spark.sources import parquet
-from tests.conftest import _sub
+from tests.conftest import _sub, job_names
 
 
 def test_minhash_lsh_matches_exact_jaccard(spark, sf_dir):
@@ -435,8 +435,8 @@ def test_registry_ivf_resident_equals_persisted(spark, sf_dir):
 def test_registry_pq_resident_equals_persisted(spark, sf_dir):
     """The resident (embedding_ann_pq, demoted) and persisted
     (embedding_ann_pq_indexed) searches share ONE set of stored codebooks
-    and code rows (the on-disk index — _pq_corpus reads both from it, the
-    _ivf_index single-source-of-truth rule) and must return identical
+    and code rows (the on-disk index — _resident reads both from it, the
+    single-source-of-truth rule) and must return identical
     rows; the index itself is the append-maintained shape (build on the
     vec_id%10!=7 slice, append the rest under stored codebooks)."""
     from aws_data_pipeline_spark.plans import DEMOTED, load_registry
@@ -1950,7 +1950,7 @@ def test_composed_roots_warm_path_identity(spark, sf_dir):
     }
     assert len(_composed_memo()) == 1
     (key, roots) = next(iter(_composed_memo().items()))
-    assert key[1] == ("composed", sf_dir, "ivfpq_c8_m8_ks16")
+    assert key[1] == ("composed", sf_dir, "ivfpq_cell_codes_c8_m8_ks16")
     # roots are stored resolved: index_root is identity on each; the PQ
     # codebooks (m lists of ks centroids) are memoized under the resolved
     # codes root, so the warm probe skips their collect too
@@ -2066,8 +2066,8 @@ def test_ensure_index_rebuilds_an_index_built_by_other_code(spark, sf_dir):
         state = L._src_state(spark, sf_dir, "documents")
         assert L._src_marker_fresh(spark, idx, state)
 
-        # a marker of the old schema (no digest column) reads as stale
-        old_schema = "src_total long, src_files long, src_bytes long"
+        # a marker without the digest column reads as stale
+        old_schema = "src_files long, src_bytes long, src_mtime long"
         arrow_frame(spark, [state], old_schema).write.mode("overwrite").parquet(
             _sub(spark, idx, "src_meta")
         )
@@ -2093,6 +2093,93 @@ def test_ensure_index_rebuilds_an_index_built_by_other_code(spark, sf_dir):
         assert L._src_marker_fresh(spark, idx, state)
     finally:
         shutil.rmtree(idx, ignore_errors=True)
+
+
+def test_ensure_index_rebuilds_a_regenerated_table_of_equal_sizes(spark, tmp_path):
+    """A registry index keys on its source zone's listing (file count,
+    byte size, max mtime), not on a row count: a ``documents`` table
+    rewritten with the same row count, file count and byte size but other
+    text and a later mtime rebuilds the index instead of serving the old
+    one. Uncompressed parquet with no dictionary and no statistics over
+    equal-length strings makes the two tables the same size."""
+    import shutil
+
+    from aws_data_pipeline_spark.plans import llm as L
+    from aws_data_pipeline_spark.sources.parquet import (
+        index_active_version,
+        zone_listing_state,
+    )
+
+    sf = str(tmp_path / "sf")
+    table = f"{sf}/documents.parquet"
+
+    def write(word):
+        rows = [
+            (i, " ".join(f"{word}{(i * 7 + j) % 10}" for j in range(12)))
+            for i in range(40)
+        ]
+        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+            1
+        ).write.mode("overwrite").option("compression", "none").option(
+            "parquet.enable.dictionary", "false"
+        ).option("parquet.column.statistics.enabled", "false").parquet(table)
+
+    def hashes(idx):
+        return {r.h for r in spark.read.parquet(_sub(spark, idx, "hashes")).collect()}
+
+    idx = L._warehouse_index_path(sf, L._KGRAM_INDEX.name)
+    shutil.rmtree(idx, ignore_errors=True)
+    try:
+        write("alpha")
+        before = zone_listing_state(spark, table)
+        assert L._ensure_index(spark, sf, L._KGRAM_INDEX) == idx
+        old = hashes(idx)
+        write("bravo")
+        after = zone_listing_state(spark, table)
+        assert spark.read.parquet(table).count() == 40
+        assert after[:2] == before[:2] and after[2] > before[2]  # equal sizes
+
+        assert L._ensure_index(spark, sf, L._KGRAM_INDEX) == idx
+        assert index_active_version(spark, idx) == 2
+        fresh = str(tmp_path / "fresh")
+        corpus = spark.read.parquet(table).filter(F.col("doc_id") % 10 != 7)
+        dedup.build_kgram_index(corpus, fresh, k=8)
+        assert hashes(idx) == hashes(fresh) != old
+    finally:
+        shutil.rmtree(idx, ignore_errors=True)
+
+
+def test_curated_corpus_portable_widens_without_a_job(spark, sf_dir, monkeypatch):
+    """widen_narrow_input starts no Spark job while curated_corpus_portable
+    is built: the MinHash stage hands it exact_dedup's windowed frame,
+    which it returns as is instead of asking it for a partition count
+    (under AQE that ran the window's exchange at plan-build time, 2 jobs).
+    The build's own jobs (the connected-components rounds) are not the
+    helper's and are not counted."""
+    import sys
+
+    from aws_data_pipeline_spark import operators
+    from aws_data_pipeline_spark.plans import DEMOTED, load_registry
+
+    fn = {**load_registry(), **DEMOTED}["curated_corpus_portable"].spark_fn
+    real = operators.widen_narrow_input
+    calls, jobs = [], []
+
+    def counted(df):
+        calls.append(df)
+        out = []
+        jobs.extend(
+            job_names(spark, f"widen-{len(calls)}", lambda: out.append(real(df)))
+        )
+        return out[0]
+
+    for mod in list(sys.modules.values()):
+        if getattr(mod, "__name__", "").startswith("aws_data_pipeline_spark") and (
+            getattr(mod, "widen_narrow_input", None) is real
+        ):
+            monkeypatch.setattr(mod, "widen_narrow_input", counted)
+    fn(spark, sf_dir)
+    assert calls and jobs == []
 
 
 def test_app_memo_eviction_rule():
@@ -2143,9 +2230,12 @@ def _refine_case_paths(spark, sf_dir):
     cell-codes layouts, and the exact top-5 they must reproduce."""
     from aws_data_pipeline_spark.plans import llm as L
 
-    ivf = L._ensure_index(spark, sf_dir, L._ivf_index_spec(n_cells=8))
-    pq = L._ensure_index(spark, sf_dir, L._pq_index_spec(m=8, ks=16))
-    _, sq8, sq8_cc = L._ivfsq8_roots(spark, sf_dir)
+    ivf, pq, pq_cc = L._composed_roots(
+        spark, sf_dir, L._pq_index_spec(m=8, ks=16), "ivfpq_cell_codes_c8_m8_ks16"
+    )
+    _, sq8, sq8_cc = L._composed_roots(
+        spark, sf_dir, L._SQ8_INDEX, "ivfsq8_cell_codes_c8"
+    )
     e = load(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10)
     truth = sorted(
@@ -2153,12 +2243,7 @@ def _refine_case_paths(spark, sf_dir):
     )
     return {
         "q": q, "n": e.count(), "truth": truth, "ivf": ivf, "pq": pq,
-        "sq8": sq8,
-        "pq_cc": L._ensure_ivf_cell_codes(
-            spark, sf_dir, L._pq_index_spec(m=8, ks=16),
-            "ivfpq_cell_codes_c8_m8_ks16",
-        )[2],
-        "sq8_cc": sq8_cc,
+        "sq8": sq8, "pq_cc": pq_cc, "sq8_cc": sq8_cc,
     }
 
 
@@ -3188,29 +3273,3 @@ def test_conversion_latency_empty_input_returns_zero_row(spark):
         noconv, "u", "ts", "k", "eid", "click", "purchase", 600
     ).collect()
     assert len(r2) == 1 and r2[0].n_conversions == 0
-
-
-def test_src_state_memo_recounts_on_content_change(spark, tmp_path):
-    """_src_state's row-count memo is keyed on the zone's full listing
-    (files, bytes, max mtime): unchanged files serve the memoized count
-    without a Spark action; any append/rewrite flips the key and
-    re-counts — so the memo can never outlive what the staleness marker
-    records."""
-    from aws_data_pipeline_spark.plans.llm import _src_state
-    from aws_data_pipeline_spark.sources.parquet import _APP_MEMO
-
-    sf = str(tmp_path)
-    spark.range(5).select(F.col("id").alias("doc_id")).write.parquet(
-        f"{sf}/documents.parquet"
-    )
-    s1 = _src_state(spark, sf, "documents")
-    assert s1[0] == 5
-    hits = [k for k in _APP_MEMO if k[1] == ("src_count", sf, "documents")]
-    assert len(hits) == 1 and _APP_MEMO[hits[0]] == 5
-    assert _src_state(spark, sf, "documents") == s1  # memo hit, same value
-    spark.range(5).select(F.col("id").alias("doc_id")).write.mode(
-        "append"
-    ).parquet(f"{sf}/documents.parquet")
-    s2 = _src_state(spark, sf, "documents")
-    assert s2[0] == 10  # listing flipped -> recounted
-    assert s2[1] != s1[1] or s2[2] != s1[2]

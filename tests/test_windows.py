@@ -59,7 +59,8 @@ def test_monotonic_id_bit_layout_is_partition_then_row_offset(spark):
 
 
 def test_monotonic_id_partition_bits_match_pid_on_range_checkpoint(spark):
-    """The scan ``_global_row_number_with_total`` decodes: over a
+    """The id layout ``_global_row_number_with_total`` reads its row
+    offset from (the low 33 bits): over a
     ``repartitionByRange(...).localCheckpoint()`` frame,
     ``shiftrightunsigned(monotonically_increasing_id(), 33)`` equals
     ``spark_partition_id()`` on every row, so a change to Spark's id
