@@ -257,6 +257,32 @@ def test_zone_exists_relative_path_droppings(spark, tmp_path):
     assert zone_exists(spark, zone)  # committed data flips it true
 
 
+def test_zone_fingerprint_counts_committed_bytes(spark, tmp_path):
+    """(files, bytes) of zone_listing_state over committed data only:
+    hidden/_temporary components don't count, and rewriting the same rows
+    into different files changes them — the property index staleness
+    markers rely on to catch a regenerated source at identical row count."""
+    import os
+
+    from aws_data_pipeline_spark.sources.parquet import (
+        write_zone,
+        zone_listing_state,
+    )
+
+    zone = tmp_path / "z"
+    assert zone_listing_state(spark, str(zone))[:2] == (0, 0)
+    df = spark.range(100).select(F.col("id").alias("x"))
+    write_zone(df.coalesce(1), str(zone))
+    os.makedirs(zone / "_temporary")
+    (zone / "_temporary" / "junk").write_text("x" * 1000)
+    n_files, n_bytes, _ = zone_listing_state(spark, str(zone))
+    assert n_files == 1 and n_bytes > 0
+    # same rows, different layout => different (files, bytes)
+    df.repartition(4).write.mode("overwrite").parquet(str(zone))
+    nf2, nb2, _ = zone_listing_state(spark, str(zone))
+    assert nf2 > 1 and (nf2, nb2) != (n_files, n_bytes)
+
+
 def test_zorder_key_matches_python_model(spark):
     """The Morton interleave as a JVM expression equals the reference
     bit-interleave for random quantized inputs: two columns keep all 16
@@ -1730,22 +1756,18 @@ def test_delete_zone_evicts_pinned_schema(spark, tmp_path):
 
 
 def test_zone_listing_state_mtime_tracks_rewrites(spark, tmp_path):
-    """zone_listing_state: (files, bytes, max mtime) over committed data
-    only (hidden/_temporary components don't count). Rewriting the same
-    rows into different files changes (files, bytes), and a rewrite at
+    """zone_listing_state: (files, bytes, max mtime) — a rewrite at
     identical (files, bytes) still flips the triple via mtime, which is
     what lets a build-once registry index key on the listing alone."""
     import os
     import time
 
-    from aws_data_pipeline_spark.sources.parquet import write_zone, zone_listing_state
+    from aws_data_pipeline_spark.sources.parquet import zone_listing_state
 
     zone = tmp_path / "mz"
     assert zone_listing_state(spark, str(zone)) == (0, 0, 0)
     df = spark.range(10).select(F.col("id").alias("x"))
-    write_zone(df.coalesce(1), str(zone))
-    os.makedirs(zone / "_temporary")
-    (zone / "_temporary" / "junk").write_text("x" * 1000)
+    df.coalesce(1).write.parquet(str(zone))
     s1 = zone_listing_state(spark, str(zone))
     assert s1[0] == 1 and s1[1] > 0 and s1[2] > 0
     # bump every committed file's mtime without touching content —
@@ -1756,10 +1778,6 @@ def test_zone_listing_state_mtime_tracks_rewrites(spark, tmp_path):
             os.utime(zone / name)
     s2 = zone_listing_state(spark, str(zone))
     assert (s2[0], s2[1]) == (s1[0], s1[1]) and s2[2] > s1[2]
-    # same rows, different layout => different (files, bytes)
-    df.repartition(4).write.mode("overwrite").parquet(str(zone))
-    s3 = zone_listing_state(spark, str(zone))
-    assert s3[0] > 1 and s3[:2] != s1[:2]
 
 
 def test_arrow_frame_is_the_only_create_dataframe_call():
